@@ -33,7 +33,9 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    from matt3r_data_ingestion_serverless_spark.session import machine_driver_mem
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", machine_driver_mem())
 
     from matt3r_data_ingestion_serverless_spark import get_spark
     from matt3r_data_ingestion_serverless_spark.plans import all_queries

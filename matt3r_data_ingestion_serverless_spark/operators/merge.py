@@ -18,9 +18,11 @@ merge cost is proportional to the batch, not the table.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -29,13 +31,18 @@ def _write_merged(merged: DataFrame, target_dir: str, partition_cols: list[str])
     READ from ``target_dir``. Partitioned: dynamic overwrite — the
     commit protocol stages new files and deletes replaced partitions at
     commit time, after every task has finished reading, so the
-    self-read is safe. Unpartitioned: dynamic mode leaves old root
-    files in place (verified), so cut the lineage with an eager
-    localCheckpoint and do a static overwrite."""
-    spark = merged.sparkSession
+    self-read is safe. The mode is a per-write option, not session
+    conf, so the caller's later writes keep their own mode.
+    Unpartitioned: dynamic mode leaves old root files in place
+    (verified), so cut the lineage with an eager localCheckpoint and do
+    a static overwrite."""
     if partition_cols:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(target_dir)
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_cols)
+            .parquet(target_dir)
+        )
     else:
         merged = merged.localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(target_dir)
@@ -49,18 +56,22 @@ def upsert_parquet(
 ) -> None:
     """Merge ``batch_df`` into the parquet table at ``target_dir``,
     deduplicating on ``keys`` (first writer wins — union puts existing
-    rows first so re-delivered rows never replace committed ones)."""
+    rows first so re-delivered rows never replace committed ones).
+
+    Into an existing partitioned table the batch is evaluated twice (its
+    partition values, then the merge), so callers persist it first, as
+    :func:`foreach_batch_upsert` does."""
     spark = batch_df.sparkSession
     partition_cols = list(partition_cols or [])
 
     if _table_exists(spark, target_dir):
         old = spark.read.parquet(target_dir)
         if partition_cols:
-            # read back only the partitions the batch touches: a
-            # broadcast semi-join against the batch's distinct partition
-            # values → partition pruning on the parquet scan.
-            touched = batch_df.select(*partition_cols).distinct()
-            old = old.join(F.broadcast(touched), on=partition_cols, how="left_semi")
+            # read back only the partitions the batch touches: its
+            # distinct partition values, collected to the driver, become
+            # a literal predicate that prunes the parquet scan
+            touched = batch_df.select(*partition_cols).distinct().collect()
+            old = old.filter(_partition_predicate(partition_cols, touched))
         # first-writer-wins must be deterministic: dropDuplicates keeps an
         # arbitrary row, so rank committed rows (_src=0) ahead of the batch.
         merged = (
@@ -192,6 +203,24 @@ def merge_into(
     _write_merged(merged, target_dir, partition_cols)
 
 
+def _partition_predicate(cols: list[str], values: list) -> Column:
+    """True exactly on the partitions listed in ``values`` (rows over
+    ``cols``). Null-safe: a null partition value (the
+    ``__HIVE_DEFAULT_PARTITION__`` directory) matches itself. The OR is
+    built as a balanced tree so its depth stays logarithmic when a
+    backfill batch touches thousands of partitions."""
+    terms = [
+        functools.reduce(operator.and_, [F.col(c).eqNullSafe(F.lit(v[c])) for c in cols])
+        for v in values
+    ]
+    if not terms:
+        return F.lit(False)
+    while len(terms) > 1:
+        paired = [a | b for a, b in zip(terms[::2], terms[1::2])]
+        terms = paired + terms[len(paired) * 2 :]
+    return terms[0]
+
+
 def _table_exists(spark: SparkSession, path: str) -> bool:
     if not os.path.exists(path):
         return False
@@ -204,9 +233,15 @@ def _table_exists(spark: SparkSession, path: str) -> bool:
 
 def foreach_batch_upsert(target_dir: str, keys: list[str], partition_cols: list[str] | None = None):
     """Adapter for ``writeStream.foreachBatch`` — the streaming sink that
-    replaces the reference's per-file S3 merge round-trip."""
+    replaces the reference's per-file S3 merge round-trip. The batch is
+    persisted for the duration of the upsert, so its source is decoded,
+    and a stateful operator upstream runs, once per micro-batch."""
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_parquet(batch_df, target_dir, keys, partition_cols)
+        batch_df.persist()
+        try:
+            upsert_parquet(batch_df, target_dir, keys, partition_cols)
+        finally:
+            batch_df.unpersist(blocking=True)
 
     return _sink

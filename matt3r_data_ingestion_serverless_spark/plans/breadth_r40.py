@@ -28,8 +28,12 @@ def _kcore_sql() -> str:
     from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
 
     pairs = _minhash_lsh_sql().strip()
+    # every CTE is MATERIALIZED: each round names the previous alive set
+    # four times, and DuckDB would otherwise re-expand the whole LSH
+    # pipeline at every reference (exponential in the rounds; it ran out
+    # of memory at sf0.01)
     step = """
-alive{k} AS (
+alive{k} AS MATERIALIZED (
   SELECT node FROM (
     SELECT node, count(*) AS d FROM (
       SELECT s AS node FROM edges
@@ -42,9 +46,9 @@ alive{k} AS (
 )"""
     steps = ",".join(step.format(k=k, p=k - 1) for k in range(1, _PEEL_ROUNDS + 1))
     return f"""
-WITH pairs AS ({pairs}),
-edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs),
-alive0 AS (SELECT DISTINCT node FROM
+WITH pairs AS MATERIALIZED ({pairs}),
+edges AS MATERIALIZED (SELECT doc_a AS s, doc_b AS t FROM pairs),
+alive0 AS MATERIALIZED (SELECT DISTINCT node FROM
            (SELECT s AS node FROM edges UNION SELECT t FROM edges)),
 {steps}
 SELECT n.node AS doc_id,

@@ -190,21 +190,24 @@ _BPE_MAX_WORD = 12  # drop longer words (URLs, concatenations)
 
 
 def _bpe_sql() -> str:
+    # the pair counts, the winning pair and each round's strings are
+    # MATERIALIZED: each is named several times downstream, and inlining
+    # would re-tokenize the corpus once per reference, per round
     rounds = []
     prev = "s0"
     for r in (1, 2):
         rounds.append(
             f"""
 a{r} AS (SELECT string_split(trim(s, '|'), '||') AS a FROM {prev}),
-c{r} AS (
+c{r} AS MATERIALIZED (
   SELECT u.x AS x, u.y AS y, count(*) AS cnt FROM (
     SELECT unnest(list_transform(range(1, len(a)),
                                  i -> struct_pack(x := a[i], y := a[i+1]))) AS u
     FROM a{r}
   ) GROUP BY 1, 2
 ),
-p{r} AS (SELECT x, y, cnt FROM c{r} ORDER BY cnt DESC, x, y LIMIT 1),
-s{r} AS (
+p{r} AS MATERIALIZED (SELECT x, y, cnt FROM c{r} ORDER BY cnt DESC, x, y LIMIT 1),
+s{r} AS MATERIALIZED (
   SELECT replace(s, (SELECT '|' || x || '||' || y || '|' FROM p{r}),
                     (SELECT '|' || x || y || '|' FROM p{r})) AS s
   FROM {prev}
@@ -219,7 +222,7 @@ WITH words AS (
                            1, {_BPE_WORDS})) AS w
   FROM documents WHERE n_chars > 0
 ),
-s0 AS (
+s0 AS MATERIALIZED (
   SELECT '|' || rtrim(regexp_replace(w, '(.)', '\1||', 'g'), '|') || '|' AS s
   FROM words
 ),{body}

@@ -186,8 +186,10 @@ _POLISH_SWEEPS = 2
 
 
 def _polish_sql() -> str:
+    # g, r{s}a and r{s} are MATERIALIZED: each is named twice by the next
+    # step, so inlining would rescan events 4^sweeps times
     body = [
-        """g AS (
+        """g AS MATERIALIZED (
   SELECT CAST(isodow(ts) AS INT) AS dow, CAST(hour(ts) AS INT) AS hr,
          CAST(count(*) AS DOUBLE) AS r
   FROM events GROUP BY 1, 2
@@ -197,11 +199,11 @@ def _polish_sql() -> str:
     for s in range(1, _POLISH_SWEEPS + 1):
         body.append(
             f"""rm{s} AS (SELECT dow, quantile_cont(r, 0.5) AS med FROM {prev} GROUP BY dow),
-r{s}a AS (
+r{s}a AS MATERIALIZED (
   SELECT t.dow, t.hr, t.r - m.med AS r FROM {prev} t JOIN rm{s} m USING (dow)
 ),
 cm{s} AS (SELECT hr, quantile_cont(r, 0.5) AS med FROM r{s}a GROUP BY hr),
-r{s} AS (
+r{s} AS MATERIALIZED (
   SELECT t.dow, t.hr, t.r - m.med AS r FROM r{s}a t JOIN cm{s} m USING (hr)
 )"""
         )

@@ -53,6 +53,14 @@ def _reap_dead_ckpts(root: str) -> None:
         pass
 
 
+def machine_driver_mem() -> str:
+    """Driver heap for a whole-sweep run on this machine: half its
+    physical memory (a local-mode driver also hosts the executors),
+    capped at the 48 GB the sweep was tuned with on larger hosts."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(app_name: str = "matt3r-dpl-spark", extra_conf: dict | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (

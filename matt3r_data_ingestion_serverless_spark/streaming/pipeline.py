@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from matt3r_data_ingestion_serverless_spark.operators.merge import (
@@ -39,6 +40,10 @@ from matt3r_data_ingestion_serverless_spark.operators.merge import (
 from matt3r_data_ingestion_serverless_spark.sources.canserver import read_canserver_stream
 
 REORDER_WATERMARK = "1.2 seconds"  # MAX_SR, parse_canserver_filtered_log.py:117
+SILVER_SCHEMA = (
+    "device_id string, ts timestamp, channel string, values array<double>, state string, "
+    "date date, hour int"
+)
 
 
 def silver_signals_stream(spark: SparkSession, raw_dir: str) -> DataFrame:
@@ -75,16 +80,25 @@ def run_silver_pipeline(
     """
     stream = read_canserver_stream(spark, raw_dir)
     stream = stream.withColumn("date", F.to_date("ts")).withColumn("hour", F.hour("ts"))
-    (
-        stream.writeStream.foreachBatch(
-            foreach_batch_upsert(
-                silver_dir, keys=["device_id", "channel", "ts"], partition_cols=["date", "hour"]
-            )
-        )
+    _start_upsert(
+        stream, silver_dir, checkpoint_dir, ["device_id", "channel", "ts"], ["date", "hour"]
+    ).awaitTermination()
+
+
+def _start_upsert(
+    stream: DataFrame,
+    target_dir: str,
+    checkpoint_dir: str,
+    keys: list[str],
+    partition_cols: list[str],
+) -> StreamingQuery:
+    """Start ``stream`` as an AvailableNow query whose sink upserts each
+    micro-batch into ``target_dir``; the caller awaits it."""
+    return (
+        stream.writeStream.foreachBatch(foreach_batch_upsert(target_dir, keys, partition_cols))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-        .awaitTermination()
     )
 
 
@@ -230,22 +244,17 @@ def run_autopilot_pipeline(
     spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str
 ) -> None:
     """Stage-2b stream: silver parquet → autopilot transition events."""
-    signals = spark.readStream.schema(
-        "device_id string, ts timestamp, channel string, values array<double>, state string, "
-        "date date, hour int"
-    ).parquet(silver_dir)
+    _start_autopilot(spark, silver_dir, gold_dir, checkpoint_dir).awaitTermination()
+
+
+def _start_autopilot(
+    spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    signals = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     events = ap_transitions_stream(signals)
     events = events.withColumn("date", F.to_date(F.timestamp_micros(F.col("ts_us"))))
-    (
-        events.writeStream.foreachBatch(
-            foreach_batch_upsert(
-                gold_dir, keys=["device_id", "ts_us", "status"], partition_cols=["date"]
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    return _start_upsert(
+        events, gold_dir, checkpoint_dir, ["device_id", "ts_us", "status"], ["date"]
     )
 
 
@@ -347,23 +356,16 @@ def run_stationary_pipeline(
     infer-autopilot ∥ infer-stationary, serverless.yml:69-122). Both
     stage-2 pipelines read the same silver table independently with
     their own checkpoints, mirroring the per-queue SQS subscriptions."""
-    signals = spark.readStream.schema(
-        "device_id string, ts timestamp, channel string, values array<double>, state string, "
-        "date date, hour int"
-    ).parquet(silver_dir)
+    _start_stationary(spark, silver_dir, gold_dir, checkpoint_dir, gap=gap).awaitTermination()
+
+
+def _start_stationary(
+    spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str, *, gap: str
+) -> StreamingQuery:
+    signals = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     sessions = stationary_sessions_stream(signals, gap=gap)
     sessions = sessions.withColumn("date", F.to_date(F.timestamp_micros(F.col("start_us"))))
-    (
-        sessions.writeStream.foreachBatch(
-            foreach_batch_upsert(
-                gold_dir, keys=["device_id", "start_us"], partition_cols=["date"]
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return _start_upsert(sessions, gold_dir, checkpoint_dir, ["device_id", "start_us"], ["date"])
 
 
 def stationary_sessions_stream(signals: DataFrame, *, gap: str = "13 seconds") -> DataFrame:

@@ -16,11 +16,12 @@ progress exactly-once per stage, and every sink is the idempotent
 partition-scoped upsert (operators/merge.py), so re-running a sweep —
 or crashing mid-sweep and re-running — converges to the same tables
 (the reference's overlap branch SKIPS writes instead,
-parse_canserver_filtered_log.py:335-343). Stage order inside a sweep
-enforces the dataflow (silver before the two gold stages); ACROSS
-sweeps each stage catches up independently from its own checkpoint,
-so a stage-2 failure never blocks stage-1 ingest — the same isolation
-the three SQS queues buy the reference.
+parse_canserver_filtered_log.py:335-343). Inside a sweep silver runs
+first and commits; the two gold legs then run AT ONCE, as the two
+gold SQS queues fan one silver object out to two Lambdas at the same
+time. ACROSS sweeps each stage catches up independently from its own
+checkpoint, so a stage-2 failure never blocks stage-1 ingest — the
+same isolation the three SQS queues buy the reference.
 
 Scale: a sweep's cost is proportional to NEW data only (AvailableNow
 reads the file-source backlog); state (stationary runs in flight,
@@ -30,14 +31,20 @@ autopilot last-codes) persists in the state store across sweeps, so a
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
+from matt3r_data_ingestion_serverless_spark.operators.merge import _table_exists
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import (
-    run_autopilot_pipeline,
+    SILVER_SCHEMA,
+    _start_autopilot,
+    _start_stationary,
     run_silver_pipeline,
-    run_stationary_pipeline,
 )
 
 
@@ -64,24 +71,66 @@ def drain_topology(
     """Run ONE invocation sweep of the full topology: raw → silver,
     then silver → (autopilot ∥ stationary). Returns current row counts
     per zone so a scheduler can emit progress metrics. Idempotent: a
-    sweep with no new raw files changes nothing."""
+    sweep with no new raw files changes nothing.
+
+    The gold legs start only after silver has committed, then run
+    concurrently. If a leg fails, the sweep still waits for the other
+    leg to finish, so no stream outlives the call, and then re-raises
+    the failure (the autopilot leg's first when both fail); the failed
+    leg resumes from its checkpoint on the next sweep."""
     p = topology_paths(root)
     run_silver_pipeline(spark, raw_dir, p["silver"], p["ckpt_silver"])
-    # the two stage-2 legs are independent subscribers of the silver
-    # table (separate checkpoints); order between them is arbitrary
-    run_autopilot_pipeline(spark, p["silver"], p["gold_autopilot"], p["ckpt_autopilot"])
-    run_stationary_pipeline(
-        spark, p["silver"], p["gold_stationary"], p["ckpt_stationary"], gap=gap
-    )
+    legs: list[StreamingQuery] = []
+    try:
+        legs.append(_start_autopilot(spark, p["silver"], p["gold_autopilot"], p["ckpt_autopilot"]))
+        legs.append(
+            _start_stationary(
+                spark, p["silver"], p["gold_stationary"], p["ckpt_stationary"], gap=gap
+            )
+        )
+    finally:
+        _await_all(legs)
+    return _zone_counts(spark, p)
 
-    def _count(path: str) -> int:
+
+def _await_all(queries: list[StreamingQuery]) -> None:
+    """Wait for every query to terminate, then re-raise the first
+    failure in list order."""
+    errors = []
+    for q in queries:
         try:
-            return spark.read.parquet(path).count()
-        except Exception:
-            return 0  # zone not materialized yet (no qualifying events)
+            q.awaitTermination()
+        except StreamingQueryException as e:
+            errors.append(e)
+    if errors:
+        raise errors[0]
 
-    return {
-        "silver_rows": _count(p["silver"]),
-        "autopilot_events": _count(p["gold_autopilot"]),
-        "stationary_intervals": _count(p["gold_stationary"]),
-    }
+
+# what each zone's count reports, and the zone's parquet schema: reading
+# with a known schema skips the footer-inference job a plain read runs
+_ZONES = {
+    "silver_rows": ("silver", SILVER_SCHEMA),
+    "autopilot_events": (
+        "gold_autopilot",
+        "device_id string, ts_us bigint, status string, canbus_state double, date date",
+    ),
+    "stationary_intervals": (
+        "gold_stationary",
+        "device_id string, start_us bigint, end_us bigint, n_samples bigint, date date",
+    ),
+}
+
+
+def _zone_counts(spark: SparkSession, p: dict[str, str]) -> dict[str, int]:
+    """Row count per zone, all zones in one aggregation; a zone not
+    materialized yet (no qualifying events) counts 0."""
+    counts = dict.fromkeys(_ZONES, 0)
+    parts = [
+        spark.read.schema(schema).parquet(p[zone]).select(F.lit(name).alias("zone"))
+        for name, (zone, schema) in _ZONES.items()
+        if _table_exists(spark, p[zone])
+    ]
+    if parts:
+        rows = functools.reduce(DataFrame.unionByName, parts).groupBy("zone").count().collect()
+        counts.update({r["zone"]: r["count"] for r in rows})
+    return counts

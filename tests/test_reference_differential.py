@@ -45,7 +45,7 @@ from matt3r_data_ingestion_serverless_spark.sources import canserver as cs
 REF = "/root/reference/parse_canserver_filtered_log.py"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.exists(REF), reason="reference tree not available"
+    not os.path.exists(REF), reason=f"reference tree not available ({REF})"
 )
 
 # 2023-11-14 22:13:20 UTC — mid-hour, single-day
@@ -93,6 +93,8 @@ class _FakeS3Resource:
 
 @pytest.fixture(scope="module")
 def ref_mod():
+    if not os.path.exists(REF):  # the fuzz modules reuse this fixture unguarded
+        pytest.skip(f"reference tree not available ({REF})")
     os.environ.setdefault("RAW_BUCKET", "raw")
     os.environ.setdefault("LANDING_BUCKET", "landing")
     os.environ["RAW_BUCKET"] = "raw"

@@ -82,7 +82,8 @@ REF_STATIONARY = "/root/reference/infer_stationary_states.py"
 REF_AUTOPILOT = "/root/reference/infer_autopilot_states.py"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.exists(REF_STATIONARY), reason="reference tree not available"
+    not os.path.exists(REF_STATIONARY),
+    reason=f"reference tree not available ({REF_STATIONARY})",
 )
 
 BASE = 1_700_000_000  # 2023-11-14 22:13:20 UTC — mid-day, single bucket
@@ -133,6 +134,8 @@ class _FakeS3Resource:
 
 
 def _load_ref(path: str, name: str):
+    if not os.path.exists(path):  # the fuzz modules reuse the fixtures unguarded
+        pytest.skip(f"reference tree not available ({path})")
     os.environ["RAW_BUCKET"] = "raw"
     os.environ["LANDING_BUCKET"] = "landing"
     sys.modules.setdefault("awswrangler", types.ModuleType("awswrangler"))

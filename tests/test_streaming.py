@@ -5,13 +5,17 @@ watermark dedupe (W3), and cross-batch stateful transition detection.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.operators.merge import upsert_parquet
+from matt3r_data_ingestion_serverless_spark.operators.merge import _table_exists, upsert_parquet
 from matt3r_data_ingestion_serverless_spark.sources import canserver as cs
 from matt3r_data_ingestion_serverless_spark.streaming import pipeline as pl
 from tests.test_canserver import SYNC_US, build_stream
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 @pytest.fixture()
@@ -178,15 +182,30 @@ def test_exact_stationary_stream_matches_batch(spark, dirs, tmp_path):
 
 
 def test_upsert_parquet_partition_scoped_merge(spark, tmp_path):
-    target = str(tmp_path / "t")
-    df1 = spark.createDataFrame([(1, "a", 10), (2, "a", 20), (3, "b", 30)], "k int, p string, v int")
-    upsert_parquet(df1, target, keys=["k"], partition_cols=["p"])
-    # overlapping re-delivery + one new row in partition b
-    df2 = spark.createDataFrame([(3, "b", 99), (4, "b", 40)], "k int, p string, v int")
-    upsert_parquet(df2, target, keys=["k"], partition_cols=["p"])
+    # the session stays in static overwrite mode: the upsert scopes its
+    # own write to the touched partitions and leaves session conf alone
+    prev = spark.conf.get(_OVERWRITE_MODE)
+    spark.conf.set(_OVERWRITE_MODE, "STATIC")
+    try:
+        target = str(tmp_path / "t")
+        df1 = spark.createDataFrame(
+            [(1, "a", 10), (2, "a", 20), (3, "b", 30), (5, None, 50)], "k int, p string, v int"
+        )
+        upsert_parquet(df1, target, keys=["k"], partition_cols=["p"])
+        # overlapping re-delivery + one new row in partition b and one in
+        # the null partition (read back null-safely, so k=5 survives)
+        df2 = spark.createDataFrame(
+            [(3, "b", 99), (4, "b", 40), (6, None, 60)], "k int, p string, v int"
+        )
+        upsert_parquet(df2, target, keys=["k"], partition_cols=["p"])
+        assert spark.conf.get(_OVERWRITE_MODE) == "STATIC"
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, prev)
     out = {(r.k, r.p, r.v) for r in spark.read.parquet(target).collect()}
     # k=3 keeps the FIRST committed value (idempotent, first-writer-wins)
-    assert out == {(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40)}
+    assert out == {
+        (1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40), (5, None, 50), (6, None, 60)
+    }
 
 
 def test_stationary_sessions_stream_schema(spark, dirs):
@@ -499,6 +518,141 @@ def test_drain_topology_scheduler(spark, dirs, tmp_path):
     c3 = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
     assert c3["silver_rows"] == c1["silver_rows"] + 1
     assert c3["stationary_intervals"] >= 1
+
+
+def _rows(spark, path):
+    if not _table_exists(spark, path):
+        return []  # no qualifying events yet
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_drain_topology_matches_sequential_legs(spark, dirs, tmp_path):
+    """The gold legs of a sweep run at once; over a multi-sweep timeline
+    the gold tables equal those of sequential run_*_pipeline calls over
+    the same silver, and the session's overwrite mode is untouched."""
+    from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
+        drain_topology,
+        topology_paths,
+    )
+
+    zero, fast = bytes([0x00, 0x40, 0x1F]), bytes([0x00, 0xF0, 0xFF])
+    drops = [
+        {"dev0": [(i * 1000, 599, zero) for i in range(12)] + [(12_500, 921, b"\x02")],
+         "dev1": [(i * 1000, 599, fast) for i in range(5)] + [(6_000, 921, b"\x03")]},
+        {"dev0": [(13_000, 921, b"\x03"), (30_000, 599, fast), (40_000, 921, b"\x01")],
+         "dev1": [(i * 1000, 599, zero) for i in range(20, 30)]},
+        {"dev0": [(i * 1000, 599, zero) for i in range(45, 53)] + [(60_000, 599, fast)],
+         "dev1": [(35_000, 921, b"\x00"), (64_000, 599, fast)]},
+    ]
+    root = str(tmp_path / "topo")
+    p = topology_paths(root)
+    ref = {k: str(tmp_path / "ref" / k) for k in ("ap", "st", "ck_ap", "ck_st")}
+    prev = spark.conf.get(_OVERWRITE_MODE)
+    spark.conf.set(_OVERWRITE_MODE, "STATIC")
+    try:
+        for k, drop in enumerate(drops):
+            for device, frames in drop.items():
+                _write_raw(dirs, f"{device}_{k}.log", frames, device=device)
+            counts = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+            pl.run_autopilot_pipeline(spark, p["silver"], ref["ap"], ref["ck_ap"])
+            pl.run_stationary_pipeline(
+                spark, p["silver"], ref["st"], ref["ck_st"], gap="5 seconds"
+            )
+            assert _rows(spark, p["gold_autopilot"]) == _rows(spark, ref["ap"])
+            assert counts["autopilot_events"] == len(_rows(spark, ref["ap"]))
+        assert spark.conf.get(_OVERWRITE_MODE) == "STATIC"
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, prev)
+    assert {r[2] for r in _rows(spark, ref["ap"])} == {"engagement", "disengagement"}
+    sessions = _rows(spark, ref["st"])
+    assert sessions and _rows(spark, p["gold_stationary"]) == sessions
+    assert counts["stationary_intervals"] == len(sessions)
+    assert not spark.streams.active
+
+
+def test_drain_topology_failed_leg_stops_every_stream(spark, dirs, tmp_path, monkeypatch):
+    """A failing gold leg fails the sweep only after the other leg has
+    finished, so no stream is left running; the next sweep resumes the
+    failed leg from its checkpoint."""
+    from pyspark.errors import StreamingQueryException
+
+    from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
+        drain_topology,
+        topology_paths,
+    )
+
+    root = str(tmp_path / "topo")
+    p = topology_paths(root)
+    real_sink = pl.foreach_batch_upsert
+
+    def failing_sink(target_dir, keys, partition_cols=None):
+        if target_dir != p["gold_autopilot"]:
+            return real_sink(target_dir, keys, partition_cols)
+
+        def _sink(_batch_df, _batch_id):
+            raise RuntimeError("autopilot sink down")
+
+        return _sink
+
+    zero = bytes([0x00, 0x40, 0x1F])
+    frames = [(i * 1000, 599, zero) for i in range(20)] + [
+        (25_000, 921, bytes([0x02])),
+        (26_000, 921, bytes([0x03])),
+    ]
+    _write_raw(dirs, "a.log", frames)
+    monkeypatch.setattr(pl, "foreach_batch_upsert", failing_sink)
+    with pytest.raises(StreamingQueryException, match="autopilot sink down"):
+        drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+    assert not spark.streams.active
+    # the stationary leg ran to completion before the sweep raised
+    assert os.listdir(os.path.join(p["ckpt_stationary"], "commits"))
+
+    monkeypatch.undo()
+    counts = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+    assert counts["autopilot_events"] == 1
+
+
+def test_foreach_batch_upsert_evaluates_each_batch_once(spark, tmp_path):
+    """The sink persists the micro-batch: a Python UDF upstream runs once
+    per row even though the upsert reads the batch twice (partition
+    values, then the merge), and no cached block outlives the batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from matt3r_data_ingestion_serverless_spark.operators.merge import foreach_batch_upsert
+
+    src, target = tmp_path / "src", str(tmp_path / "t")
+    src.mkdir()
+    pq.write_table(pa.table({"k": [1, 2, 3], "v": [10, 20, 30]}), src / "b0.parquet")
+    pq.write_table(pa.table({"k": [3, 4, 5], "v": [99, 40, 50]}), src / "b1.parquet")
+    calls = spark.sparkContext.accumulator(0)
+
+    def part_of(k):
+        calls.add(1)
+        return "even" if k % 2 == 0 else "odd"
+
+    def cached_rdds():
+        storage = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {i.id() for i in storage if i.numCachedPartitions()}
+
+    before = cached_rdds()  # earlier tests' local checkpoints may remain
+    stream = (
+        spark.readStream.schema("k long, v long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+        .withColumn("p", F.udf(part_of, "string")("k"))
+    )
+    (
+        stream.writeStream.foreachBatch(foreach_batch_upsert(target, ["k"], ["p"]))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert calls.value == 6  # 2 micro-batches x 3 rows, each row once
+    assert cached_rdds() <= before
+    out = {(r.k, r.p, r.v) for r in spark.read.parquet(target).collect()}
+    assert out == {(1, "odd", 10), (2, "even", 20), (3, "odd", 30), (4, "even", 40), (5, "odd", 50)}
 
 
 def test_streamed_bollinger_matches_batch_across_batches(spark, tmp_path):

@@ -27,7 +27,9 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+from matt3r_data_ingestion_serverless_spark.session import machine_driver_mem  # noqa: E402
+
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", machine_driver_mem())
 
 from pyspark.sql import DataFrame, Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

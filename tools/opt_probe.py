@@ -77,8 +77,9 @@ def main() -> None:
 
     from matt3r_data_ingestion_serverless_spark import get_spark
     from matt3r_data_ingestion_serverless_spark.plans import all_queries
+    from matt3r_data_ingestion_serverless_spark.session import machine_driver_mem
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", machine_driver_mem())
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("opt-probe", extra_conf=extra or None)
     registry = all_queries()

@@ -65,13 +65,7 @@ def upsert_parquet(
     partition_cols = list(partition_cols or [])
 
     if _table_exists(spark, target_dir):
-        old = spark.read.parquet(target_dir)
-        if partition_cols:
-            # read back only the partitions the batch touches: its
-            # distinct partition values, collected to the driver, become
-            # a literal predicate that prunes the parquet scan
-            touched = batch_df.select(*partition_cols).distinct().collect()
-            old = old.filter(_partition_predicate(partition_cols, touched))
+        old = _read_touched(batch_df, target_dir, partition_cols)
         # first-writer-wins must be deterministic: dropDuplicates keeps an
         # arbitrary row, so rank committed rows (_src=0) ahead of the batch.
         merged = (
@@ -174,17 +168,15 @@ def merge_into(
     dependency. With ``partition_cols``, only partitions present in the
     source batch are read back and rewritten (dynamic overwrite), so a
     batch-sized merge never scans the full table; partition values must
-    therefore be stable under the merge (carried by the key)."""
+    therefore be stable under the merge (carried by the key). A null
+    partition value matches its own partition. Into an existing
+    partitioned table the source is evaluated twice, as in
+    :func:`upsert_parquet`."""
     spark = source_df.sparkSession
     partition_cols = list(partition_cols or [])
 
     if _table_exists(spark, target_dir):
-        target = spark.read.parquet(target_dir)
-        if partition_cols:
-            touched = source_df.select(*partition_cols).distinct()
-            target = target.join(
-                F.broadcast(touched), on=partition_cols, how="left_semi"
-            )
+        target = _read_touched(source_df, target_dir, partition_cols)
         merged = merge_plan(
             target,
             source_df,
@@ -201,6 +193,18 @@ def merge_into(
         merged = merged.select(*target_cols)
 
     _write_merged(merged, target_dir, partition_cols)
+
+
+def _read_touched(batch_df: DataFrame, target_dir: str, partition_cols: list[str]) -> DataFrame:
+    """The committed table at ``target_dir``, read back only in the
+    partitions ``batch_df`` touches: the batch's distinct partition
+    values, collected to the driver, become a literal predicate that
+    prunes the parquet scan. This evaluates the batch once more."""
+    target = batch_df.sparkSession.read.parquet(target_dir)
+    if not partition_cols:
+        return target
+    touched = batch_df.select(*partition_cols).distinct().collect()
+    return target.filter(_partition_predicate(partition_cols, touched))
 
 
 def _partition_predicate(cols: list[str], values: list) -> Column:

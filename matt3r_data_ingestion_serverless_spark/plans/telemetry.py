@@ -584,12 +584,8 @@ def w1_streamed_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (infer_autopilot_states.py:78-88), which loses the file boundary."""
     import uuid
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from matt3r_data_ingestion_serverless_spark.streaming.pipeline import (
-        _AP_OUTPUT_SCHEMA,
-        _AP_STATE_SCHEMA,
-        _ap_transition_fn,
+        ap_transitions_from_codes,
     )
 
     coded = _events_stream(spark, sf_dir).select(
@@ -597,13 +593,7 @@ def w1_streamed_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         _event_code_col().alias("code"),
     )
-    out = coded.groupBy("device_id").applyInPandasWithState(
-        _ap_transition_fn,
-        outputStructType=_AP_OUTPUT_SCHEMA,
-        stateStructType=_AP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    out = ap_transitions_from_codes(coded)
     sink = f"w1_streamed_{uuid.uuid4().hex[:8]}"
     with _stream_state_partitions(spark):
         (

@@ -347,45 +347,40 @@ def frames_to_signals(frames: pd.DataFrame) -> pd.DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _device_of(path: str, device_from: str) -> str:
-    """Device/session identity. 'parent' (default) = the containing
-    directory name — the reference carries the object-key prefix through
-    as the partition identity (parse_canserver_filtered_log.py:302-304),
-    so logs of one device share a prefix; 'stem' = file name."""
-    if device_from == "parent":
-        return os.path.basename(os.path.dirname(path.removeprefix("file:")))
-    return os.path.splitext(os.path.basename(path))[0]
+def _device_of(path: str) -> str:
+    """Device/session identity: the containing directory name. The
+    reference carries the object-key prefix through as the partition
+    identity (parse_canserver_filtered_log.py:302-304), so logs of one
+    device share a prefix."""
+    return os.path.basename(os.path.dirname(path.removeprefix("file:")))
 
 
-def _decode_partition_fn(device_from: str):
-    def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                device = _device_of(row["path"], device_from)
-                try:
-                    sig = decode_signals(bytes(row["content"]), device)
-                except ValueError as exc:
-                    # bad header (S2): the reference exit(1)s the whole
-                    # Lambda (:197-198); a stream must survive one bad
-                    # object — quarantine it as a queryable row instead.
-                    yield pd.DataFrame(
-                        {
-                            "device_id": [device],
-                            "ts": [pd.Timestamp(0, unit="us")],
-                            "channel": ["_quarantine"],
-                            "values": [None],
-                            "state": [f"{row['path']}: {exc}"],
-                        }
-                    )
-                    continue
-                if len(sig):
-                    sig["ts"] = pd.to_datetime(sig.pop("ts_us"), unit="us")
-                    yield sig[["device_id", "ts", "channel", "values", "state"]]
-
-    return _decode_partition
+def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        for _, row in pdf.iterrows():
+            device = _device_of(row["path"])
+            try:
+                sig = decode_signals(bytes(row["content"]), device)
+            except ValueError as exc:
+                # bad header (S2): the reference exit(1)s the whole
+                # Lambda (:197-198); a stream must survive one bad
+                # object — quarantine it as a queryable row instead.
+                yield pd.DataFrame(
+                    {
+                        "device_id": [device],
+                        "ts": [pd.Timestamp(0, unit="us")],
+                        "channel": ["_quarantine"],
+                        "values": [None],
+                        "state": [f"{row['path']}: {exc}"],
+                    }
+                )
+                continue
+            if len(sig):
+                sig["ts"] = pd.to_datetime(sig.pop("ts_us"), unit="us")
+                yield sig[["device_id", "ts", "channel", "values", "state"]]
 
 
-def read_canserver(spark: SparkSession, path: str, device_from: str = "parent") -> DataFrame:
+def read_canserver(spark: SparkSession, path: str) -> DataFrame:
     """Batch source: directory of CANServer logs → long-format signals.
 
     binaryFile scan parallelizes across files; each file decodes in one
@@ -398,13 +393,12 @@ def read_canserver(spark: SparkSession, path: str, device_from: str = "parent") 
         .load(path)
         .select("path", "content")
     )
-    return raw.mapInPandas(_decode_partition_fn(device_from), schema=SIGNAL_SCHEMA)
+    return raw.mapInPandas(_decode_partition, schema=SIGNAL_SCHEMA)
 
 
 def read_canserver_stream(
     spark: SparkSession,
     path: str,
-    device_from: str = "parent",
     options: dict | None = None,
 ) -> DataFrame:
     """Streaming source: the serverless S3→SNS→SQS fan-out (T1/T2)
@@ -421,4 +415,4 @@ def read_canserver_stream(
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     raw = reader.load(path).select("path", "content")
-    return raw.mapInPandas(_decode_partition_fn(device_from), schema=SIGNAL_SCHEMA)
+    return raw.mapInPandas(_decode_partition, schema=SIGNAL_SCHEMA)

@@ -1,146 +1,23 @@
-"""CANServer v2 as a first-class Spark data source (Python Data Source
-API, Spark 4): ``spark.read.format("canserver").load(dir)``.
+"""CANServer v2 as a Spark write format (Python Data Source API,
+Spark 4): ``df.write.format("canserver").save(dir)``.
 
-SURVEY §7.1 planned this as the evolution of the mapInPandas reader
-(sources/canserver.py) — same decode core, but the format participates
-in Spark's source machinery directly: one InputPartition per log file
-(files are the parallelism unit, matching the reference's
-one-Lambda-per-object model, serverless.yml:69-86), partition planning
-on the driver, decode on executors.
-
-Options:
-  device_from  'parent' (default) — device id from the containing
-               directory, mirroring the reference's object-key-prefix
-               identity (parse_canserver_filtered_log.py:302-304);
-               'stem' — from the file name.
+The format is write-only. Logs are read through
+``sources/canserver.py:read_canserver`` / ``read_canserver_stream``
+(``binaryFile`` + ``mapInPandas``); the stream reader gets replayable
+progress from Spark's file-source log.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
-
-from matt3r_data_ingestion_serverless_spark.sources.canserver import (
-    SIGNAL_SCHEMA,
-    _device_of,
-    decode_signals,
-)
-
-
-class CanServerFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class CanServerReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("canserver source requires a path: .load('<dir or file>')")
-        self.device_from = options.get("device_from", "parent")
-
-    def partitions(self):
-        # driver-side file planning: one partition per log file
-        if os.path.isfile(self.path):
-            return [CanServerFilePartition(self.path)]
-        found = [
-            os.path.join(root, f)
-            for root, _dirs, files in os.walk(self.path)
-            for f in sorted(files)
-        ]
-        if not found:
-            raise ValueError(f"no CANServer files under {self.path}")
-        return [CanServerFilePartition(p) for p in found]
-
-    def read(self, partition: CanServerFilePartition) -> Iterator[tuple]:
-        import pandas as pd
-
-        device = _device_of(partition.path, self.device_from)
-        with open(partition.path, "rb") as fh:
-            data = fh.read()
-        try:
-            sig = decode_signals(data, device)
-        except ValueError as exc:
-            # S2 bad header → quarantine row (same contract as the
-            # mapInPandas reader: one bad object must not kill the scan)
-            yield (device, pd.Timestamp(0, unit="us", tz="UTC"), "_quarantine", None,
-                   f"{partition.path}: {exc}")
-            return
-        for dev, ts_us, channel, values, state in zip(
-            sig["device_id"], sig["ts_us"], sig["channel"], sig["values"], sig["state"]
-        ):
-            yield (dev, pd.Timestamp(int(ts_us), unit="us", tz="UTC"), channel, values, state)
-
-
-class CanServerStreamReader(DataSourceStreamReader):
-    """Micro-batch stream reader for the same format:
-    ``spark.readStream.format("canserver").load(dir)``.
-
-    Offset model: the sorted file listing's length. Log producers name
-    files monotonically (the reference's hourly object keys,
-    parse_canserver_filtered_log.py:328), so new files always extend
-    the sorted order and ``{"idx": n}`` is a total progress marker —
-    the same append-only contract Spark's own file source keeps via its
-    listing log, without the driver-memory file map. Each batch's
-    partitions are the newly-appeared files — one per file, decoded
-    executor-side exactly like the batch reader."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("canserver source requires a path: .load('<dir>')")
-        self.device_from = options.get("device_from", "parent")
-
-    def _listing(self) -> list[str]:
-        if os.path.isfile(self.path):
-            return [self.path]
-        return sorted(
-            os.path.join(root, f)
-            for root, _dirs, files in os.walk(self.path)
-            for f in files
-        )
-
-    def initialOffset(self) -> dict:
-        return {"idx": 0}
-
-    def latestOffset(self) -> dict:
-        return {"idx": len(self._listing())}
-
-    def partitions(self, start: dict, end: dict):
-        files = self._listing()[start["idx"] : end["idx"]]
-        return [CanServerFilePartition(p) for p in files]
-
-    def read(self, partition: CanServerFilePartition) -> Iterator[tuple]:
-        return CanServerReader(
-            {"path": partition.path, "device_from": self.device_from}
-        ).read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # progress is the checkpointed offset; nothing to clean
+from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
 
 class CanServerDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return "canserver"
-
-    def schema(self):
-        return SIGNAL_SCHEMA
-
-    def reader(self, schema) -> CanServerReader:
-        return CanServerReader(self.options)
-
-    def streamReader(self, schema) -> CanServerStreamReader:
-        return CanServerStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> "CanServerWriter":
         if overwrite:
@@ -151,13 +28,9 @@ class CanServerDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Make ``format("canserver")`` available on this session."""
+    """Make ``df.write.format("canserver")`` available on this session."""
     spark.dataSource.register(CanServerDataSource)
 
-
-# ---------------------------------------------------------------------------
-# writer: df.write.format("canserver").save(dir) — the format round-trips
-# ---------------------------------------------------------------------------
 
 FRAME_WRITE_SCHEMA = (
     "device_id string, ts_us long, frame_id int, bus_id int, payload binary"
@@ -184,7 +57,7 @@ class CanServerWriter(DataSourceWriter):
 
     Scale: tasks write independently (no shuffle — callers partition
     by device/time beforehand if they want file-per-hour layout);
-    commit is metadata-only. This is the inverse of the reader, so
+    commit is metadata-only. This is the inverse of ``read_canserver``, so
     bronze can be re-materialized FROM silver — the audit/export path
     object stores need."""
 
@@ -194,8 +67,6 @@ class CanServerWriter(DataSourceWriter):
             raise ValueError("canserver sink requires a path: .save('<dir>')")
 
     def write(self, iterator) -> "CanServerCommit":
-        import struct as _struct
-
         from pyspark import TaskContext
 
         from matt3r_data_ingestion_serverless_spark.sources.canserver import (
@@ -231,7 +102,7 @@ class CanServerWriter(DataSourceWriter):
         return CanServerCommit(files)
 
     def commit(self, messages) -> None:
-        pass  # files are final on write; offsets/readers list the dir
+        pass  # files are final on write; readers list the dir
 
     def abort(self, messages) -> None:
         for m in messages:

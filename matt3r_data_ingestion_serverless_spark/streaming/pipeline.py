@@ -7,8 +7,9 @@ The reference's event-driven chain
 
 becomes two chained streams with checkpointed exactly-once progress:
 
-    readStream(binaryFile raw/) → decode → watermark(1.2s) dedupe
-        → foreachBatch upsert → silver parquet (device/date/hour)
+    readStream(binaryFile raw/) → decode
+        → foreachBatch upsert on (device_id, channel, ts)
+        → silver parquet (date/hour)
     readStream(parquet silver/) → W1/W2 inference
         → foreachBatch upsert → gold parquet (daily)
 
@@ -17,9 +18,11 @@ invocation drains whatever new files exist, then stops — identical
 semantics to the Lambda-per-object model, minus the 10 KB queue-message
 and 600 s timeout limits (serverless.yml:179-204,72).
 
-The 1.2 s watermark reproduces the reference's in-flight reorder buffer
-(W3, parse_canserver_filtered_log.py:268-289 with MAX_SR=1.2): rows
-later than watermark are dropped from dedupe state, keeping state
+The silver sink's keyed upsert absorbs duplicate samples at rest.
+``silver_signals_stream`` is the in-stream alternative: its 1.2 s
+watermark dedupe reproduces the reference's in-flight reorder buffer
+(W3, parse_canserver_filtered_log.py:268-289 with MAX_SR=1.2), and rows
+later than the watermark are dropped from dedupe state, keeping state
 bounded no matter how long the stream runs.
 """
 
@@ -149,9 +152,8 @@ def _ap_transition_fn(key, pdfs, state: GroupState):
 
 
 def ap_transitions_stream(signals: DataFrame) -> DataFrame:
-    """Streaming W1 over the silver signal stream: custom stateful
-    operator via applyInPandasWithState (SURVEY §2.9 mapping for the one
-    operator Structured Streaming lacks natively)."""
+    """Streaming W1 over the silver signal stream: codes the
+    ``ap_status`` rows, then runs :func:`ap_transitions_from_codes`."""
     from matt3r_data_ingestion_serverless_spark.operators.autopilot import ap_state_code
 
     coded = (
@@ -160,83 +162,20 @@ def ap_transitions_stream(signals: DataFrame) -> DataFrame:
         .withColumn("ts_us", F.unix_micros("ts"))
         .select("device_id", "ts_us", "code")
     )
+    return ap_transitions_from_codes(coded)
+
+
+def ap_transitions_from_codes(coded: DataFrame) -> DataFrame:
+    """W1's stateful lag scan over a coded ``(device_id, ts_us, code)``
+    stream: custom stateful operator via applyInPandasWithState (SURVEY
+    §2.9 mapping for the one operator Structured Streaming lacks
+    natively)."""
     return coded.groupBy("device_id").applyInPandasWithState(
         _ap_transition_fn,
         outputStructType=_AP_OUTPUT_SCHEMA,
         stateStructType=_AP_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class _APTransitionProcessor(StatefulProcessor):
-    """transformWithState processor: identical W1 semantics to
-    _ap_transition_fn, expressed in the state-v2 API — typed ValueState
-    instead of a tuple blob, engine-owned RocksDB state store with
-    changelog checkpointing (incremental state commits at scale, vs the
-    HDFS-backed store's full-snapshot-per-batch)."""
-
-    def init(self, handle) -> None:
-        self._last = handle.getValueState(
-            "last", "last_ts_us LONG, last_code INTEGER"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._last.get()
-        prev_ts, prev_code = (prev[0], prev[1]) if prev else (None, None)
-        batch = pd.concat(list(rows), ignore_index=True).sort_values("ts_us")
-        out = []
-        for ts_us, code in zip(batch["ts_us"], batch["code"]):
-            if code is None or pd.isna(code):
-                continue
-            if prev_ts is not None and int(ts_us) <= prev_ts:
-                continue  # monotonic re-delivery guard (T3)
-            code = int(code)
-            if prev_code is not None:
-                if code == 3 and prev_code <= 2:
-                    out.append((key[0], int(ts_us), "engagement", float(code)))
-                elif code <= 2 and prev_code == 3:
-                    out.append((key[0], int(ts_us), "disengagement", float(code)))
-            prev_ts, prev_code = int(ts_us), code
-        if prev_code is not None:
-            self._last.update((prev_ts, prev_code))
-        yield pd.DataFrame(out, columns=["device_id", "ts_us", "status", "canbus_state"])
-
-    def close(self) -> None:
-        pass
-
-
-def ap_transitions_stream_v2(signals: DataFrame) -> DataFrame:
-    """Streaming W1 on the transformWithStateInPandas (state v2) API.
-
-    Same output as ap_transitions_stream; requires the RocksDB state
-    store provider (caller sets
-    spark.sql.streaming.stateStore.providerClass — see
-    test_streaming.py) AND the protobuf wheel (the state-v2 Python
-    protocol speaks protobuf to the JVM state server; absent here, so
-    the v1 path remains the default). Prefer this path at scale:
-    RocksDB spills state off-heap and changelog checkpointing writes
-    per-batch deltas, so state size is bounded by disk, not executor
-    memory."""
-    from matt3r_data_ingestion_serverless_spark.operators.autopilot import ap_state_code
-
-    proc = _APTransitionProcessor()
-    coded = (
-        signals.filter(F.col("channel") == "ap_status")
-        .withColumn("code", ap_state_code(F.col("state")))
-        .withColumn("ts_us", F.unix_micros("ts"))
-        .select("device_id", "ts_us", "code")
-    )
-    return coded.groupBy("device_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=_AP_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
     )
 
 

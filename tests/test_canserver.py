@@ -115,37 +115,6 @@ def test_unknown_frame_id_kept_in_bronze_not_silver():
     assert set(sig["channel"]) == {"speed"}
 
 
-def test_python_datasource_format(spark, tmp_path):
-    # spark.read.format("canserver") — the Python Data Source API
-    # wrapper must produce byte-identical rows to the mapInPandas reader
-    from matt3r_data_ingestion_serverless_spark.sources import canserver_datasource as ds
-
-    for dev in ("veh_a", "veh_b"):
-        (tmp_path / dev).mkdir()
-        (tmp_path / dev / "c0.log").write_bytes(
-            build_stream(
-                [(i, 273, bytes([0x34, 0x12, 0x00, 0x80, 0xFF, 0x7F])) for i in range(5)]
-                + [(20, 599, bytes([0x00, 0xF0, 0xFF])), (30, 921, bytes([0x03]))]
-            )
-        )
-    # a bad file quarantines instead of failing the scan
-    (tmp_path / "veh_a" / "bad.log").write_bytes(b"NOT_A_CANSERVER_FILE__")
-
-    ds.register(spark)
-    df = spark.read.format("canserver").load(str(tmp_path))
-    rows = df.collect()
-    good = [r for r in rows if r.channel != "_quarantine"]
-    quarantined = [r for r in rows if r.channel == "_quarantine"]
-    assert len(good) == 14 and len(quarantined) == 1
-    assert "bad.log" in quarantined[0].state
-
-    # decoded rows are byte-identical; quarantine rows differ only in
-    # the path spelling (binaryFile yields file: URIs)
-    ref = cs.read_canserver(spark, str(tmp_path))
-    ref_good = [r for r in ref.collect() if r.channel != "_quarantine"]
-    assert sorted(map(str, good)) == sorted(map(str, ref_good))
-
-
 def test_spark_read_canserver_end_to_end(spark, tmp_path):
     for dev in ("veh_a", "veh_b"):
         stream = build_stream(
@@ -157,8 +126,15 @@ def test_spark_read_canserver_end_to_end(spark, tmp_path):
         )
         (tmp_path / dev).mkdir()
         (tmp_path / dev / "chunk0.log").write_bytes(stream)
+    # a bad file quarantines instead of failing the scan
+    (tmp_path / "veh_a" / "bad.log").write_bytes(b"NOT_A_CANSERVER_FILE__")
 
     sig = cs.read_canserver(spark, str(tmp_path))
+    quarantined = sig.filter("channel = '_quarantine'").collect()
+    assert len(quarantined) == 1
+    assert quarantined[0].device_id == "veh_a"
+    assert "bad.log" in quarantined[0].state
+    sig = sig.filter("channel != '_quarantine'")
     rows = sig.collect()
     assert len(rows) == 24  # (10 accel + 1 speed + 1 ap) × 2 files
     assert {r.device_id for r in rows} == {"veh_a", "veh_b"}
@@ -183,9 +159,10 @@ def test_spark_read_canserver_end_to_end(spark, tmp_path):
 
 
 def test_python_datasource_writer_roundtrip(spark, tmp_path):
-    """df.write.format('canserver') → read back: frames AND decoded
-    signal timestamps are bit-identical (the writer re-syncs whenever a
-    µs timestamp isn't an exact ms offset of the current sync)."""
+    """df.write.format('canserver') → read back with read_canserver:
+    frames AND decoded signal timestamps are bit-identical (the writer
+    re-syncs whenever a µs timestamp isn't an exact ms offset of the
+    current sync)."""
     from matt3r_data_ingestion_serverless_spark.sources import canserver_datasource as ds
 
     ds.register(spark)
@@ -211,7 +188,7 @@ def test_python_datasource_writer_roundtrip(spark, tmp_path):
 
     assert {p.name for p in pathlib.Path(out).iterdir()} == {"veh_w", "veh_x"}
 
-    back = spark.read.format("canserver").load(out)
+    back = cs.read_canserver(spark, out)
     got = {
         (r.device_id, int(r.ts.timestamp() * 1_000_000), r.channel)
         for r in back.collect()

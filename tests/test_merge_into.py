@@ -66,13 +66,20 @@ def test_merge_into_parquet_roundtrip_and_idempotent(spark, tmp_path):
 def test_merge_into_partition_scoped(spark, tmp_path):
     tgt = str(tmp_path / "p")
     target = spark.createDataFrame(
-        [(1, "2024-01-01", 1.0), (2, "2024-01-01", 2.0), (3, "2024-01-02", 3.0)],
+        [
+            (1, "2024-01-01", 1.0),
+            (2, "2024-01-01", 2.0),
+            (3, "2024-01-02", 3.0),
+            (5, None, 5.0),  # null partition (__HIVE_DEFAULT_PARTITION__)
+        ],
         "k int, day string, v double",
     )
     target.write.partitionBy("day").parquet(tgt)
-    # batch touches only day 2024-01-01: update k=1, insert k=9
+    # batch touches day 2024-01-01 (update k=1, insert k=9) and the
+    # null partition (insert k=6), which must keep its committed k=5
     batch = spark.createDataFrame(
-        [(1, "2024-01-01", 10.0), (9, "2024-01-01", 9.0)], "k int, day string, v double"
+        [(1, "2024-01-01", 10.0), (9, "2024-01-01", 9.0), (6, None, 6.0)],
+        "k int, day string, v double",
     )
     merge_into(batch, tgt, ["k"], partition_cols=["day"])
     got = _rows(
@@ -84,4 +91,6 @@ def test_merge_into_partition_scoped(spark, tmp_path):
         (2, "2024-01-01", 2.0),
         (9, "2024-01-01", 9.0),
         (3, "2024-01-02", 3.0),  # untouched partition intact
+        (5, None, 5.0),
+        (6, None, 6.0),
     }

@@ -296,56 +296,6 @@ def test_stream_stream_interval_join(spark, dirs):
     assert rows[0].ap_state == "ACTIVE_NOMINAL"
 
 
-def test_transform_with_state_v2_matches_v1(spark, dirs):
-    """The state-v2 (transformWithStateInPandas + RocksDB) transition
-    detector must emit exactly what the v1 applyInPandasWithState path
-    emits, including across batch boundaries.
-
-    The state-v2 Python protocol speaks protobuf to the JVM state
-    server; this container ships no google.protobuf, so the test (and
-    the operator) activates only where the wheel exists."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas requires protobuf (not in container)",
-    )
-    _write_raw(
-        dirs,
-        "f1.log",
-        [(0, 921, bytes([0x00])), (100, 921, bytes([0x02])), (200, 921, bytes([0x03])),
-         (300, 921, bytes([0x01])), (400, 921, bytes([0x03]))],
-    )
-    signals = cs.read_canserver_stream(spark, dirs["raw"])
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = pl.ap_transitions_stream_v2(signals)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("twsv2")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = {
-        (r.status, r.ts_us - SYNC_US, r.canbus_state)
-        for r in spark.sql("SELECT * FROM twsv2").collect()
-    }
-    assert rows == {
-        ("engagement", 200_000, 3.0),
-        ("disengagement", 300_000, 1.0),
-        ("engagement", 400_000, 3.0),
-    }
-
-
 def test_stateful_stream_under_rocksdb_provider(spark, dirs):
     """The applyInPandasWithState pipeline must run unchanged on the
     RocksDB state-store provider — the off-heap backend a production
@@ -450,42 +400,45 @@ def test_stream_static_dimension_join(spark, dirs):
     assert rows == {("dev0", "fleet-a"), ("dev1", None)}
 
 
-def test_python_datasource_stream_reader(spark, dirs, tmp_path):
-    """The custom format streams too: readStream.format('canserver')
-    discovers newly-arrived log files across micro-batches via the
-    sorted-listing offset (append-only naming contract)."""
-    from matt3r_data_ingestion_serverless_spark.sources import canserver_datasource as ds
+def test_stream_reads_each_file_once_across_device_dirs(spark, dirs, tmp_path):
+    """A file that lands in an earlier-sorted device directory after a
+    drain is read in the next drain, and no file is read twice: the
+    stream's progress is the set of files it has seen, not a position
+    in one sorted listing over all devices."""
+    from collections import Counter
 
-    ds.register(spark)
-    _write_raw(dirs, "a1.log", [(0, 599, bytes([0x00, 0x40, 0x1F]))])
-    stream = spark.readStream.format("canserver").load(dirs["raw"])
-    sink = str(tmp_path / "pyds_sink")
-    ckpt = str(tmp_path / "pyds_ckpt")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(sink).count() == 1
+    speed = bytes([0x00, 0x40, 0x1F])
+    drained = []
 
-    # a second file arrives; a fresh drain picks up ONLY the new file
-    _write_raw(dirs, "a2.log", [(5, 599, bytes([0x00, 0x40, 0x1F])), (9, 921, b"\x03")])
-    q = (
-        spark.readStream.format("canserver")
-        .load(dirs["raw"])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    def sink(batch_df, _batch_id):
+        rows = batch_df.select("device_id", F.unix_micros("ts").alias("ts_us")).collect()
+        drained.extend((r.device_id, r.ts_us) for r in rows)
+
+    def drain():
+        (
+            cs.read_canserver_stream(spark, dirs["raw"])
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", str(tmp_path / "multi_dev_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+    # each file holds two samples at its own offsets, so a row names its file
+    _write_raw(dirs, "f0.log", [(0, 599, speed), (1, 599, speed)], device="devA")
+    _write_raw(dirs, "f0.log", [(10, 599, speed), (11, 599, speed)], device="devB")
+    drain()
+    _write_raw(dirs, "f1.log", [(20, 599, speed), (21, 599, speed)], device="devA")
+    drain()
+
+    got = Counter((dev, ts - SYNC_US) for dev, ts in drained)
+    assert got == Counter(
+        {
+            ("devA", 0): 1, ("devA", 1_000): 1,  # devA/f0
+            ("devB", 10_000): 1, ("devB", 11_000): 1,  # devB/f0
+            ("devA", 20_000): 1, ("devA", 21_000): 1,  # devA/f1
+        }
     )
-    q.awaitTermination()
-    out = spark.read.parquet(sink)
-    assert out.count() == 3
-    assert set(out.select("channel").distinct().toPandas()["channel"]) == {"speed", "ap_status"}
 
 
 def test_drain_topology_scheduler(spark, dirs, tmp_path):

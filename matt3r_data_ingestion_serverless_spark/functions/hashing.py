@@ -96,11 +96,6 @@ def minhash_from_hashes_sql(h_expr: str) -> str:
     return "[" + ", ".join(parts) + "]"
 
 
-def minhash_signature_sql(tokens_expr: str) -> str:
-    hashed = f"list_transform({tokens_expr}, t -> ({md5_hash64_sql('t')}) % {P31})"
-    return minhash_from_hashes_sql(hashed)
-
-
 def token_hashes(tokens: Column) -> Column:
     """Hash each token ONCE; the simhash bit accumulators fold over this
     integer array (md5 is the expensive step — never re-hash per bit)."""

@@ -49,14 +49,6 @@ def word_ngrams(text: Column, n: int) -> Column:
     return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams_sql(expr: str, n: int) -> str:
-    toks = tokens_sql(expr)
-    return (
-        f"list_transform(range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' '))"
-    )
-
-
 def stopword_hits(toks: Column, lang: str) -> Column:
     words = LANG_STOPWORDS[lang]
     return F.size(F.filter(toks, lambda t: t.isin(*words)))

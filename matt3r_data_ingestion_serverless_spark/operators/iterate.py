@@ -1,0 +1,77 @@
+"""Fixed-point iteration for the graph queries — the one place that
+decides how a round is materialized and how convergence is tested.
+
+Every round cuts lineage with a LAZY ``localCheckpoint`` and runs
+exactly one ``count``, which materializes that checkpoint; the loop
+stops when the count is zero. An eager checkpoint would run a
+materialization job and then a second job for the test; lazily, the
+count is the round's only action and the plan of round r still does
+not re-derive earlier rounds. Sets that accumulate across rounds are
+checkpointed the same way: an uncheckpointed visited union re-plans
+every earlier frontier, and its anti-join gains a round's worth of
+tasks per round. The loop is driver-side, every data operation a
+distributed join or aggregate (the Pregel contract of SCALE.md §16).
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+
+def frontier_loop(
+    seed: DataFrame,
+    step: Callable[[DataFrame, int, DataFrame], DataFrame],
+    max_rounds: int,
+) -> DataFrame:
+    """The union of ``seed`` and every non-empty frontier after it.
+    ``step(frontier, round, seen)`` derives frontier ``round`` (from 1)
+    from the previous one; ``seen`` is the checkpointed union so far,
+    to anti-join against. Stops at the first empty frontier or after
+    ``max_rounds`` steps."""
+    seen = frontier = seed.localCheckpoint(eager=False)
+    for rnd in range(1, max_rounds + 1):
+        frontier = step(frontier, rnd, seen).localCheckpoint(eager=False)
+        if not frontier.count():
+            break
+        seen = seen.union(frontier).localCheckpoint(eager=False)
+    return seen
+
+
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(node) + symmetric, pinned (src, dst) → (node, cluster_id), the
+    minimum node id of each component; a node without edges keeps its
+    own id. Per round each node takes the min of its label, its
+    neighbours' labels and its label's own label. That last POINTER
+    JUMP (a label is always a live node id) halves the remaining
+    distance per round — O(log d) rounds instead of
+    eccentricity-from-min (5 → 3 on the sf0.1 ε-graph) — with the same
+    fixpoint. The changed flag rides through the checkpoint, so the
+    count needs no second join."""
+    labels = nodes.select("node", F.col("node").alias("cluster_id")).localCheckpoint(eager=True)
+    while True:
+        neigh = (
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("cluster_id").alias("neigh_min"))
+        )
+        parent = labels.select(
+            F.col("node").alias("cluster_id"), F.col("cluster_id").alias("parent_min")
+        )
+        nxt = F.least(
+            F.col("cluster_id"),
+            F.coalesce("neigh_min", F.col("cluster_id")),
+            F.coalesce("parent_min", F.col("cluster_id")),
+        )
+        new_labels = (
+            labels.join(neigh, "node", "left")
+            .join(parent, "cluster_id", "left")
+            .select("node", (nxt < F.col("cluster_id")).alias("chg"), nxt.alias("cluster_id"))
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.filter("chg").count()
+        labels = new_labels.drop("chg")
+        if not changed:
+            return labels

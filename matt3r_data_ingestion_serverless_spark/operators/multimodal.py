@@ -106,14 +106,6 @@ def decode_image(data: bytes):
     )
 
 
-def _fake_frame_feature(blob: bytes, frame_idx: int) -> list[float]:
-    """Deterministic stand-in for decode→resize→featurize: samples
-    FEATURE_DIM bytes at a frame-dependent stride. byte/256 is an exact
-    binary fraction, so the doubles are bit-stable everywhere."""
-    n = len(blob)
-    return [blob[(frame_idx * 7 + k * 3) % n] / 256.0 for k in range(FEATURE_DIM)]
-
-
 def frame_features(df: DataFrame, n_frames: int = N_FRAMES) -> DataFrame:
     """(doc_id, blob) → n_frames rows of (doc_id, frame_idx, n_bytes,
     feature). Arrow-batched; each input batch expands to n_frames× rows

@@ -14,7 +14,7 @@ this pattern, so it is a first-class operator here rather than a note.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT = 8
@@ -36,17 +36,3 @@ def salted_sum_count(
         F.sum("_pcnt").alias(f"cnt_{value}"),
     )
 
-
-def salted_distinct_count(
-    df: DataFrame, keys: list[str], value: Column | str, n_salt: int = DEFAULT_SALT
-) -> DataFrame:
-    """count(distinct value) per keys without funneling a hot key into
-    one reducer: phase 1 dedupes on (key, value) — the salt is implicit
-    in the value itself spreading the shuffle — phase 2 counts."""
-    col = F.col(value) if isinstance(value, str) else value
-    return (
-        df.select(*keys, col.alias("_v"))
-        .distinct()
-        .groupBy(*keys)
-        .agg(F.count("_v").alias("n_distinct"))
-    )

@@ -7,7 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import _key_range
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
 # ---------------------------------------------------------------------------
@@ -118,21 +120,6 @@ GROUP BY o_orderstatus
 _ZORDER_TABLES: dict[str, tuple] = {}
 
 
-def _key_range(sf_dir: str, col: str) -> tuple[int, int]:
-    """Exact int64 [min, max] from the orders parquet FOOTER — zero
-    Spark jobs (same stats discipline as breadth_r69._key_cut)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(os.path.join(sf_dir, "orders.parquet")).metadata
-    idx = next(
-        i for i in range(meta.num_columns) if meta.schema.column(i).name == col
-    )
-    stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
-    return int(min(s.min for s in stats)), int(max(s.max for s in stats))
-
-
 def _zorder_table(spark: SparkSession, sf_dir: str):
     """Process-shared z-clustered orders table: files are key-range
     buckets of z = morton(o_orderkey, o_custkey), so every file's
@@ -143,10 +130,6 @@ def _zorder_table(spark: SparkSession, sf_dir: str):
 
         if os.path.isdir(got[1]):
             return got
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2_scaled
@@ -170,7 +153,7 @@ def _zorder_table(spark: SparkSession, sf_dir: str):
     )
     zmax = 1 << (2 * _ZORDER_BITS)
     boundaries = [zmax * i // _ZORDER_FILES for i in range(1, _ZORDER_FILES)]
-    root = tempfile.mkdtemp(prefix="zorder_")
+    root = scratch_dir("zorder_")
     tbl = LakehouseTable.create_bucketed(
         df,
         root,
@@ -178,7 +161,6 @@ def _zorder_table(spark: SparkSession, sf_dir: str):
         boundaries=boundaries,
         stats_cols=["z", "o_orderkey", "o_custkey"],
     )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     box = (
         (lo1, lo1 + (hi1 - lo1) // 8),
         (lo2, lo2 + (hi2 - lo2) // 8),
@@ -334,10 +316,6 @@ def _zsignals_table(spark: SparkSession, sf_dir: str):
 
         if os.path.isdir(got[1]):
             return got
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2_scaled
@@ -370,7 +348,7 @@ def _zsignals_table(spark: SparkSession, sf_dir: str):
     )
     zmax = 1 << (2 * _ZSIG_BITS)
     boundaries = [zmax * i // _ZSIG_FILES for i in range(1, _ZSIG_FILES)]
-    root = tempfile.mkdtemp(prefix="zsignals_")
+    root = scratch_dir("zsignals_")
     tbl = LakehouseTable.create_bucketed(
         df,
         root,
@@ -378,7 +356,6 @@ def _zsignals_table(spark: SparkSession, sf_dir: str):
         boundaries=boundaries,
         stats_cols=["z", "device_hash", "ts_sec"],
     )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     # the cohort's hash points, from one bounded 3-row job (the hash is
     # a JVM expression; nothing data-sized is collected)
     hashes = {

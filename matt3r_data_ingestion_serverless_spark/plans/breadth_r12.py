@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.operators.iterate import connected_components
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -179,8 +180,9 @@ LEFT JOIN border b ON n.vec_id = b.node
 def ns_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DBSCAN over the embedding corpus (cosine ≥ 0.3 as the ε-ball,
     minPts 4): core points by neighbour degree, clusters = connected
-    components of the core-core graph (iterative min-label propagation,
-    the ns_dup_clusters machinery), borders adopt the min cluster of
+    components of the core-core graph
+    (operators/iterate.py:connected_components, as in ns_dup_clusters),
+    borders adopt the min cluster of
     their core neighbours, the rest is noise — density clustering,
     the OTHER clustering family beside centroid k-means and SemDeDup
     (finds non-convex groups, needs no k).
@@ -228,45 +230,7 @@ def ns_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("u").alias("src"), F.col("w").alias("dst"))
         .localCheckpoint(eager=True)
     )
-    labels = (
-        core.select(F.col("u").alias("node"))
-        .withColumn("cluster_id", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    while True:
-        # neighbor-min PLUS a pointer jump through the label's own
-        # current label (labels are live node ids, so the parent lookup
-        # always hits): O(log d) rounds instead of
-        # eccentricity-from-min rounds (measured 5 → 3 on the sf0.1
-        # ε-graph), same component-min fixpoint — see
-        # curation._dup_clusters_from_pairs for the rationale.
-        neigh = (
-            ce.join(labels, ce.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        parent = labels.select(
-            F.col("node").alias("cluster_id"), F.col("cluster_id").alias("pmin")
-        )
-        nxt = F.least(
-            F.col("cluster_id"),
-            F.coalesce("nmin", F.col("cluster_id")),
-            F.coalesce("pmin", F.col("cluster_id")),
-        )
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .join(parent, "cluster_id", "left")
-            .select(
-                "node", (nxt < F.col("cluster_id")).alias("chg"), nxt.alias("cluster_id")
-            )
-            # lazy: the count materializes the checkpoint — one job per
-            # round instead of two (see curation._dup_clusters_from_pairs)
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
+    labels = connected_components(core.select(F.col("u").alias("node")), ce)
     border = (
         nb.join(core, "u", "left_anti")
         .join(labels.select(F.col("node").alias("w"), "cluster_id"), "w")

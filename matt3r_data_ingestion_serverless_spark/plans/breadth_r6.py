@@ -23,6 +23,7 @@ from matt3r_data_ingestion_serverless_spark.functions.hashing import (
     md5_hash64_sql,
 )
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -224,20 +225,18 @@ def cdc_streamed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs ≈ 0.5 s) and the landing write — per-batch merge cost is
     O(touched files), the property that matters at 100× state.
     """
-    import shutil
-    import tempfile
-
     from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
         LakehouseTable,
     )
     from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
         _stream_state_partitions,
     )
+    from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 
     from pyspark.sql import Observation
 
     log = _cdc_log(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="cdc_stream_")
+    root = scratch_dir("cdc_stream_")
     land = f"{root}/land"
     # one file per generation, one landing job; discovery order is
     # arbitrary within the job — the seq-keyed merge does not rely on
@@ -304,9 +303,6 @@ def cdc_streamed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializing it here (localCheckpoint) just to rmtree the scratch
     # dir early cost a full extra pass over the final snapshot per run;
     # instead the scratch dir lives until process exit (few MB per run)
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     return final
 
 
@@ -752,14 +748,14 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     blast-radius and lineage queries (beside ns_dup_clusters' components
     and graph_pagerank's scores on the same edge list).
 
-    Spark-first iterative BFS: the frontier expands by one
-    join-per-level against the localCheckpointed edge list, anti-joined
-    against the visited set so each node is labeled with its FIRST
-    (minimal) level; ≤ 4 rounds of (join + distinct + anti-join), each
-    a bounded shuffle on the frontier — never the whole graph. The
-    oracle is a depth-bounded recursive CTE taking min(level) per node.
-    The seed stays a 1-row DataFrame (cross-join broadcast), so the plan
-    has no driver-side collect.
+    Spark-first iterative BFS (operators/iterate.py:frontier_loop): the
+    frontier expands by one join-per-level against the localCheckpointed
+    edge list, anti-joined against the visited set so each node is
+    labeled with its FIRST (minimal) level; ≤ 4 rounds of (join +
+    distinct + anti-join), each a bounded shuffle on the frontier —
+    never the whole graph. The oracle is a depth-bounded recursive CTE
+    taking min(level) per node. The seed stays a 1-row DataFrame
+    (cross-join broadcast), so the plan has no driver-side collect.
     """
     from matt3r_data_ingestion_serverless_spark.plans.northstar import (
         ns_dedup_minhash_lsh,
@@ -771,30 +767,22 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .toDF("src", "dst")
         .localCheckpoint(eager=True)
     )
-    frontier = (
+    seed = (
         edges.agg(F.min("src").alias("node"))
         .filter(F.col("node").isNotNull())  # empty graph → empty result
         .withColumn("hop", F.lit(0))
-        .localCheckpoint(eager=True)
     )
-    visited = frontier
-    for lvl in range(1, _BFS_MAX_HOPS + 1):
-        frontier = (
+
+    def step(frontier: DataFrame, hop: int, seen: DataFrame) -> DataFrame:
+        return (
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(visited, "node", "left_anti")
-            .withColumn("hop", F.lit(lvl))
-            # LAZY checkpoint + count: the emptiness probe materializes
-            # the checkpoint, so each round runs ONE job instead of an
-            # eager materialization job followed by an isEmpty job
-            # (lineage still cut — r09's label-propagation fusion)
-            .localCheckpoint(eager=False)
+            .join(seen, "node", "left_anti")
+            .withColumn("hop", F.lit(hop))
         )
-        if frontier.count() == 0:
-            break
-        visited = visited.union(frontier)
-    return visited.select(
+
+    return frontier_loop(seed, step, _BFS_MAX_HOPS).select(
         F.col("node").alias("doc_id"), F.col("hop").cast("int").alias("hop")
     )
 

@@ -15,8 +15,6 @@ S3 key listing, its "file stats" the hour encoded in the key name.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +22,7 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.operators.lakehouse import LakehouseTable
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -52,29 +51,27 @@ def _base_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _key_minmax(sf_dir: str) -> tuple[int, int]:
-    """Exact [min, max] of o_orderkey straight from the parquet FOOTER —
-    int64 column stats are exact, so this costs zero Spark jobs (the
-    same stats discipline the lakehouse manifests use)."""
-    import os
-
+def _key_range(sf_dir: str, col: str) -> tuple[int, int]:
+    """Exact int64 [min, max] of an orders column straight from the
+    parquet FOOTER — zero Spark jobs (the same stats discipline the
+    lakehouse manifests use)."""
     import pyarrow.parquet as pq
 
-    meta = pq.ParquetFile(os.path.join(sf_dir, "orders.parquet")).metadata
-    idx = next(
-        i for i in range(meta.num_columns) if meta.schema.column(i).name == "o_orderkey"
-    )
-    stats = [
-        meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)
-    ]
+    path = os.path.join(sf_dir, "orders.parquet")
+    if not os.path.isfile(path):
+        raise ValueError(
+            f"{path} is not a single parquet file: footer key extents (the "
+            "merges' source_intervals, which must COMPLETELY cover the batch "
+            "keys) are read from one file's footer"
+        )
+    meta = pq.ParquetFile(path).metadata
+    idx = next(i for i in range(meta.num_columns) if meta.schema.column(i).name == col)
+    stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
     return int(min(s.min for s in stats)), int(max(s.max for s in stats))
 
 
-def _key_cut(spark: SparkSession, sf_dir: str) -> int:
-    """floor(max(o_orderkey)/10) from the footer stats — equals the
-    oracle's data-derived cut without spending a Spark job on a 1-row
-    agg."""
-    return _key_minmax(sf_dir)[1] // 10
+def _key_minmax(sf_dir: str) -> tuple[int, int]:
+    return _key_range(sf_dir, "o_orderkey")
 
 
 def _batch_df(spark: SparkSession, sf_dir: str, cut: int) -> DataFrame:
@@ -99,7 +96,7 @@ def _build_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, str,
     + per-file stats harvest job). Same manifest contract: 16 files
     with disjoint k ranges and exact per-file stats; merge pruning
     behaves identically (the batch decile still touches ~2/16 files)."""
-    root = tempfile.mkdtemp(prefix="lakehouse_")
+    root = scratch_dir("lakehouse_")
     lo, hi = _key_minmax(sf_dir)
     boundaries = sorted({lo + (hi - lo) * i // 16 for i in range(1, 16)})
     boundaries = [b for b in boundaries if lo < b <= hi]
@@ -145,11 +142,8 @@ def _shared_merged_table(
     got = _SHARED_MERGED.get(sf_dir)
     if got is not None and os.path.isdir(got[1]):
         return got
-    import atexit
-
     tbl, root, cut = _build_table(spark, sf_dir)
     _standard_merge(tbl, spark, sf_dir, cut)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     _SHARED_MERGED[sf_dir] = (tbl, root, cut)
     return tbl, root, cut
 
@@ -203,15 +197,11 @@ def j6_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rewritten — every other file carries into the new snapshot by
     reference (manifest metadata only). That is the Iceberg/Delta
     merge-cost contract without the package dependency."""
-    tbl, root, cut = _build_table(spark, sf_dir)
+    tbl, _root, cut = _build_table(spark, sf_dir)
     _standard_merge(tbl, spark, sf_dir, cut)
     # lazy read over the committed snapshot; the scratch dir lives until
     # process exit (few MB) instead of paying a localCheckpoint
-    # materialization pass just to rmtree early — the same trade
-    # cdc_streamed_apply documents
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    # materialization pass just to rmtree early
     return _final_select(tbl.read())
 
 

@@ -10,9 +10,6 @@ the training-data surface the reference feeds (SURVEY.md §7.2 M5).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,6 +21,7 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
     _final_select,
 )
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
 # ---------------------------------------------------------------------------
@@ -62,7 +60,7 @@ def j9_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     full-outer join where target-only rows carry tag NULL."""
     from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import _key_minmax
 
-    tbl, root, cut = _build_table(spark, sf_dir)
+    tbl, _root, cut = _build_table(spark, sf_dir)
     batch = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") <= cut)
@@ -82,11 +80,6 @@ def j9_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         # cover known without a Spark job (see _standard_merge)
         source_intervals=[(_key_minmax(sf_dir)[0], cut)],
     )
-    # lazy read + atexit cleanup — no checkpoint materialization pass
-    # (same trade as cdc_streamed_apply / j6)
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     return tbl.read().select("k", "o_custkey", "o_orderstatus", "tag")
 
 
@@ -103,14 +96,10 @@ def j10_lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         _standard_merge,
     )
 
-    tbl, root, cut = _build_table(spark, sf_dir)
+    tbl, _root, cut = _build_table(spark, sf_dir)
     _standard_merge(tbl, spark, sf_dir, cut)
     tbl.compact(target_files=4)
     assert [m["operation"] for m in tbl.history()] == ["create", "merge", "compact"]
-    # lazy read + atexit cleanup — no checkpoint materialization pass
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
     return _final_select(tbl.read())
 
 
@@ -127,8 +116,8 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stream_state_partitions,
     )
 
-    tbl, root, cut = _build_table(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="lh_stream_")
+    tbl, _root, cut = _build_table(spark, sf_dir)
+    stage = scratch_dir("lh_stream_")
     batch = _batch_df(spark, sf_dir, cut)
     land = f"{stage}/land"
     for m in range(2):
@@ -157,11 +146,6 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
             .awaitTermination(120)
         )
-    # lazy read + atexit cleanup — no checkpoint materialization pass
-    import atexit
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
     return _final_select(tbl.read())
 
 

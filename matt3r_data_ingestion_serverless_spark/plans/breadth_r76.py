@@ -6,14 +6,12 @@ under micro-batch delivery).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r74 import _BK_K, _BK_SQL
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
 # ---------------------------------------------------------------------------
@@ -96,7 +94,7 @@ def streamed_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.md5(F.col("event_id").cast("string")).alias("priority"),
     )
-    root = tempfile.mkdtemp(prefix="bk_stream_")
+    root = scratch_dir("bk_stream_")
     land = f"{root}/land"
     ev.withColumn("part", F.pmod("event_id", F.lit(3))).repartition(
         3, "part"
@@ -128,5 +126,4 @@ def streamed_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
             .awaitTermination(120)
         )
-    shutil.rmtree(root, ignore_errors=True)
     return state[-1]

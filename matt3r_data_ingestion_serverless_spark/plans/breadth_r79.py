@@ -6,14 +6,12 @@ construction incremental at any scale.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r78 import _OHLC_SQL
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
 
@@ -76,7 +74,7 @@ def streamed_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         F.pmod("event_id", F.lit(3)).cast("int").alias("part"),
     )
-    root = tempfile.mkdtemp(prefix="ohlc_stream_")
+    root = scratch_dir("ohlc_stream_")
     land = f"{root}/land"
     ticks.repartition(3, "part").write.partitionBy("part").parquet(land)
     state: list[DataFrame] = []
@@ -112,7 +110,6 @@ def streamed_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
             .awaitTermination(120)
         )
-    shutil.rmtree(root, ignore_errors=True)
     return state[-1].select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "n_ticks",

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import text
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -336,28 +337,20 @@ def bom_explosion_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("parent", "child", ((F.col("child") % 3) + 1).alias("qty"))
         .localCheckpoint(eager=True)
     )
-    frontier = keys.filter(F.col("p_partkey") <= _BOM_ROOTS).select(
+    roots = keys.filter(F.col("p_partkey") <= _BOM_ROOTS).select(
         F.col("p_partkey").alias("root"),
         F.col("p_partkey").alias("node"),
         F.lit(1).cast("long").alias("units"),
     )
-    walk = frontier
-    for _ in range(_BOM_DEPTH):
-        frontier = (
-            frontier.join(edges, frontier.node == edges.parent)
-            .select(
-                "root",
-                F.col("child").alias("node"),
-                (F.col("units") * F.col("qty")).alias("units"),
-            )
-            # lazy checkpoint + count: the emptiness probe materializes
-            # it — one job per level instead of ckpt + isEmpty (r09's
-            # label-propagation fusion)
-            .localCheckpoint(eager=False)
+
+    def step(frontier: DataFrame, _depth: int, _seen: DataFrame) -> DataFrame:
+        return frontier.join(edges, frontier.node == edges.parent).select(
+            "root",
+            F.col("child").alias("node"),
+            (F.col("units") * F.col("qty")).alias("units"),
         )
-        if frontier.count() == 0:
-            break
-        walk = walk.union(frontier)
+
+    walk = frontier_loop(roots, step, _BOM_DEPTH)
     return (
         walk.join(price, walk.node == price.p_partkey)
         .groupBy("root")

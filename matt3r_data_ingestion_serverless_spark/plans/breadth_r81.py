@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.operators.ann import blocked_kth_nn_sim
+from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -124,9 +125,10 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest duplication chain reaching this doc?", the weighted twin of
     graph_bfs_levels' hop counts.
 
-    Spark-first frontier Bellman-Ford: each round relaxes only edges
-    out of nodes IMPROVED last round (frontier join edges → per-node
-    min → anti-compare against best), so round r's best equals the
+    Spark-first frontier Bellman-Ford (operators/iterate.py:
+    frontier_loop): each round relaxes only edges out of nodes IMPROVED
+    last round (frontier join edges → per-node min → anti-join against
+    every earlier frontier), so round r's best equals the
     exact min over ≤ r-edge paths while the shuffle stays
     frontier-sized, never graph-sized. Integer weights keep path sums
     exact; the oracle is a hop-bounded recursive CTE taking min(dist).
@@ -134,14 +136,13 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard Pregel layout (GraphX/GraphFrames run this exact
     loop)."""
     edges = _weighted_edges(spark, sf_dir, mirror=True)
-    best = (
+    seed = (
         edges.agg(F.min("src").alias("node"))
         .filter(F.col("node").isNotNull())
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    frontier = best
-    for _ in range(_MAX_HOPS):
+
+    def relax(frontier: DataFrame, _rnd: int, seen: DataFrame) -> DataFrame:
         cand = (
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
@@ -152,27 +153,15 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        frontier = (
-            cand.alias("c")
-            .join(best.alias("b"), "node", "left")
-            .filter(F.col("b.dist").isNull() | (F.col("c.dist") < F.col("b.dist")))
-            .select("node", F.col("c.dist").alias("dist"))
-            # lazy checkpoint + count: the emptiness probe materializes
-            # it — one job per round instead of ckpt + isEmpty (r09's
-            # label-propagation fusion)
-            .localCheckpoint(eager=False)
+        # improved nodes only: no earlier frontier reached them as cheaply
+        return cand.alias("c").join(
+            seen.alias("s"),
+            (F.col("c.node") == F.col("s.node")) & (F.col("s.dist") <= F.col("c.dist")),
+            "left_anti",
         )
-        if frontier.count() == 0:
-            break
-        best = (
-            best.union(frontier)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            # lazy: materialized by the NEXT round's frontier count (or
-            # the final action) — lineage still cut, one fewer job
-            .localCheckpoint(eager=False)
-        )
-    return best.select(F.col("node").alias("doc_id"), "dist")
+
+    best = frontier_loop(seed, relax, _MAX_HOPS)
+    return best.groupBy(F.col("node").alias("doc_id")).agg(F.min("dist").alias("dist"))
 
 
 def _topo_sql() -> str:
@@ -213,13 +202,11 @@ def graph_topo_longest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("node"))
         .union(edges.select("dst"))
         .distinct()
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
+        .select("node", F.lit(0).cast("long").alias("dist"), F.lit(0).alias("lvl"))
     )
-    acc = nodes.withColumn("lvl", F.lit(0))
-    frontier = nodes
-    for lvl in range(1, _MAX_HOPS + 1):
-        frontier = (
+
+    def extend(frontier: DataFrame, lvl: int, _seen: DataFrame) -> DataFrame:
+        return (
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
             .select(
@@ -228,12 +215,10 @@ def graph_topo_longest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("node")
             .agg(F.max("dist").alias("dist"))
-            # lazy checkpoint + count: one job per level (see sssp above)
-            .localCheckpoint(eager=False)
+            .withColumn("lvl", F.lit(lvl))
         )
-        if frontier.count() == 0:
-            break
-        acc = acc.union(frontier.withColumn("lvl", F.lit(lvl)))
+
+    acc = frontier_loop(nodes, extend, _MAX_HOPS)
     return acc.groupBy("node").agg(
         F.max("dist").alias("max_dist"),
         F.max("lvl").cast("int").alias("max_depth"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
@@ -107,44 +108,30 @@ def graph_local_dominant_matching(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_a", "doc_b", ordc)
         .localCheckpoint(eager=True)
     )
-    out = None
-    for rnd in range(1, _MATCH_ROUNDS + 1):
-        ends = edges.select(F.col("doc_a").alias("node"), "ord").union(
-            edges.select(F.col("doc_b").alias("node"), "ord")
+
+    def dominant(live: DataFrame, rnd: int) -> DataFrame:
+        ends = live.select(F.col("doc_a").alias("node"), "ord").union(
+            live.select(F.col("doc_b").alias("node"), "ord")
         )
         vmin = ends.groupBy("node").agg(F.min("ord").alias("mo"))
         va = vmin.select(F.col("node").alias("doc_a"), F.col("mo").alias("mo_a"))
         vb = vmin.select(F.col("node").alias("doc_b"), F.col("mo").alias("mo_b"))
-        sel = (
-            edges.join(va, "doc_a")
+        return (
+            live.join(va, "doc_a")
             .join(vb, "doc_b")
             .filter((F.col("ord") == F.col("mo_a")) & (F.col("ord") == F.col("mo_b")))
-            .select("doc_a", "doc_b")
-            # lazy checkpoint + count: the emptiness probe materializes
-            # it — one job instead of ckpt + isEmpty per round (r09's
-            # label-propagation fusion)
-            .localCheckpoint(eager=False)
+            .select(F.lit(rnd).alias("round"), "doc_a", "doc_b")
         )
-        picked = sel.select(F.lit(rnd).alias("round"), "doc_a", "doc_b")
-        out = picked if out is None else out.union(picked)
-        if sel.count() == 0:
-            break
-        matched = (
-            sel.select(F.col("doc_a").alias("node"))
-            .union(sel.select("doc_b"))
-            .distinct()
-        )
-        edges = (
-            edges.join(
-                matched.withColumnRenamed("node", "doc_a"), "doc_a", "left_anti"
-            )
-            .join(matched.withColumnRenamed("node", "doc_b"), "doc_b", "left_anti")
-            .select("doc_a", "doc_b", "ord")
-            .localCheckpoint(eager=False)
-        )
-        if edges.count() == 0:
-            break
-    return out
+
+    def step(_picked: DataFrame, rnd: int, seen: DataFrame) -> DataFrame:
+        # every endpoint matched so far leaves the graph
+        matched = seen.select(F.col("doc_a").alias("node")).union(seen.select("doc_b"))
+        live = edges.join(
+            matched.withColumnRenamed("node", "doc_a"), "doc_a", "left_anti"
+        ).join(matched.withColumnRenamed("node", "doc_b"), "doc_b", "left_anti")
+        return dominant(live, rnd + 1)
+
+    return frontier_loop(dominant(edges, 1), step, _MATCH_ROUNDS - 1)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
     _build_table,
     _final_select,
@@ -239,30 +240,22 @@ def graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .toDF("src", "dst")
         .localCheckpoint(eager=True)
     )
-    frontier = (
+    seed = (
         edges.agg(F.min("src").alias("node"))
         .filter(F.col("node").isNotNull())
         .withColumn("par", F.lit(0))
-        .localCheckpoint(eager=True)
     )
-    visited = frontier
-    for _ in range(_BIP_HOPS):
-        frontier = (
+
+    def step(frontier: DataFrame, _hop: int, seen: DataFrame) -> DataFrame:
+        return (
             frontier.alias("f")
             .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
             .select(F.col("e.dst").alias("node"), (1 - F.col("f.par")).alias("par"))
             .distinct()
-            .join(visited, ["node", "par"], "left_anti")
-            # lazy checkpoint + count: the emptiness probe materializes
-            # it — one job instead of ckpt + isEmpty per round (r09's
-            # label-propagation fusion)
-            .localCheckpoint(eager=False)
+            .join(seen, ["node", "par"], "left_anti")
         )
-        if frontier.count() == 0:
-            break
-        # lazy: materialized by the NEXT round's frontier count (or the
-        # final aggregate) — lineage still cut, one fewer job per round
-        visited = visited.union(frontier).localCheckpoint(eager=False)
+
+    visited = frontier_loop(seed, step, _BIP_HOPS)
     return visited.groupBy("node").agg(
         (F.max(F.when(F.col("par") == 0, 1).otherwise(0)) == 1).alias("even_reach"),
         (F.max(F.when(F.col("par") == 1, 1).otherwise(0)) == 1).alias("odd_reach"),

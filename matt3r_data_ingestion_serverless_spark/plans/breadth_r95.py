@@ -59,7 +59,7 @@ def exact_median_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"))
         # lazy: the bounds aggregate right below materializes it — one
-        # job instead of ckpt + agg (r09's label-propagation fusion)
+        # job instead of ckpt + agg (see operators/iterate.py)
         .localCheckpoint(eager=False)
     )
     bounds = v.agg(

@@ -134,7 +134,7 @@ def ml_boosting_two_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = pu.join(F.broadcast(base)).select(
         "uid", "x", (F.col("y") - F.col("f0")).alias("r")
     # lazy checkpoint: the rmse aggregate right below materializes it —
-    # one job instead of ckpt + collect (r09's label-propagation fusion)
+    # one job instead of ckpt + collect (see operators/iterate.py)
     ).localCheckpoint(eager=False)
 
     def fit_stump(df: DataFrame) -> DataFrame:

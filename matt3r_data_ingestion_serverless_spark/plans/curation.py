@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import text
+from matt3r_data_ingestion_serverless_spark.operators.iterate import connected_components
 from matt3r_data_ingestion_serverless_spark.plans.northstar import (
     JACCARD_DUP,
     _hashed_shingles_cte,
@@ -234,16 +235,10 @@ def ns_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster size — the unit a dedup pipeline keeps one representative
     from.
 
-    Scale: iterative min-label propagation — per round, each node takes
-    the min label among itself and its neighbors (one shuffle join on
-    the edge list + one hash agg per round); rounds = graph diameter,
-    and dup clusters are shallow (pairwise-similar groups → diameter
-    ≤ ~2), so 2–4 rounds suffice where the alternating large/small-star
-    algorithm would be needed for long-chain graphs. Each round
-    localCheckpoints the label table: the loop is driver-side but every
-    data operation is a distributed join — no collect. Convergence is
-    detected with a count of changed labels (one tiny action per
-    round)."""
+    Scale: iterative min-label propagation with pointer jumping
+    (operators/iterate.py:connected_components) — per round one shuffle
+    join on the edge list + one hash agg; dup clusters are shallow
+    (pairwise-similar groups → diameter ≤ ~2), so 2–4 rounds suffice."""
     from matt3r_data_ingestion_serverless_spark.plans.northstar import (
         ns_dedup_minhash_lsh,
     )
@@ -268,55 +263,9 @@ def _dup_clusters_from_pairs(pairs: DataFrame) -> DataFrame:
         .toDF("src", "dst")
         .localCheckpoint(eager=True)
     )
-    # nodes start labeled with themselves
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("cluster_id", F.col("node"))
-        .localCheckpoint(eager=True)
+    labels = connected_components(
+        edges.select(F.col("src").alias("node")).distinct(), edges
     )
-    while True:
-        # candidate label for each node: min over neighbors' labels,
-        # POINTER-JUMPED through the label's own current label (a label
-        # is always a live node id, so the parent lookup always hits).
-        # Plain neighbor-min converges in eccentricity-from-min rounds
-        # (measured 5 on the sf0.1 ε-graph); the extra label-of-label
-        # hop halves the remaining distance each round — O(log d)
-        # rounds, the pointer-jumping half of the large/small-star CC
-        # algorithm — with the SAME fixpoint (component min), so the
-        # recursive-CTE oracle is unchanged.
-        neigh = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("cluster_id").alias("neigh_min"))
-        )
-        parent = labels.select(
-            F.col("node").alias("cluster_id"), F.col("cluster_id").alias("parent_min")
-        )
-        nxt = F.least(
-            F.col("cluster_id"),
-            F.coalesce("neigh_min", F.col("cluster_id")),
-            F.coalesce("parent_min", F.col("cluster_id")),
-        )
-        # carry the convergence flag through the checkpoint: the changed
-        # count reads the materialized rows — no second join per round
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .join(parent, "cluster_id", "left")
-            .select(
-                "node",
-                (nxt < F.col("cluster_id")).alias("chg"),
-                nxt.alias("cluster_id"),
-            )
-            # LAZY checkpoint + count: the count action materializes the
-            # checkpoint, so each round runs ONE job instead of an eager
-            # materialization job followed by a count job (lineage is
-            # still cut — plan size stays O(1) per round)
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
     w = Window.partitionBy("cluster_id")
     return labels.select(
         F.col("node").alias("doc_id"),

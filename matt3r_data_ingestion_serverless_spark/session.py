@@ -15,7 +15,10 @@ code runs unchanged on a multi-executor cluster:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -40,8 +43,6 @@ def _fast_scratch() -> str | None:
 def _reap_dead_ckpts(root: str) -> None:
     """Remove ckpt-<pid> dirs owned by processes that no longer exist —
     tmpfs is RAM, so leaked WALs from crashed runs are a memory leak."""
-    import shutil
-
     try:
         for name in os.listdir(root):
             if not name.startswith("ckpt-"):
@@ -59,6 +60,15 @@ def machine_driver_mem() -> str:
     capped at the 48 GB the sweep was tuned with on larger hosts."""
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temp directory whose removal at process exit is
+    registered before the caller writes anything into it, so a query
+    that raises half-way leaves nothing behind either."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(app_name: str = "matt3r-dpl-spark", extra_conf: dict | None = None) -> SparkSession:

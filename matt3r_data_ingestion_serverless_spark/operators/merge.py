@@ -1,19 +1,25 @@
-"""Idempotent dedupe-upsert sink (SURVEY.md §2.6 J1–J3, §2.8 T3/T4).
+"""Insert-only idempotent upsert sink (SURVEY.md §2.6 J1–J3, §2.8 T3/T4).
 
 The reference merges each new batch into previously-written hourly/daily
 JSON files with ordered-concat logic that SKIPS the write on overlap
 (parse_canserver_filtered_log.py:327-344, infer_stationary_states.py:117-133)
 — and its existence check can never fire on its own output (the
 `.parquet`-name vs `.json`-sink quirk, :328 vs :348). We implement the
-*intended* semantics: target ∪ batch, deduplicated on the logical key —
-re-delivering any batch (SQS at-least-once, serverless.yml:179-204) is
-a no-op.
+*intended* semantics: a row whose logical key is already committed is
+dropped, so the first writer wins and re-delivering any batch (SQS
+at-least-once, serverless.yml:179-204) is a no-op.
 
-Scale stance: never rewrite the whole table. With
-``partitionOverwriteMode=dynamic`` only the partitions present in the
-incoming batch are read back, merged, and overwritten — at 100 TB a
-batch touches a handful of (device, date, hour) partitions, so the
-merge cost is proportional to the batch, not the table.
+Scale stance: committed files are never rewritten. Only the key
+columns of the partitions the incoming batch touches are read back, and
+the rows whose key is new are appended as new files, so the cost is
+proportional to the batch, not the table, and a file-source stream over
+the table reads each row exactly once. The trade-off: every upsert that
+adds rows adds one file per touched partition, and nothing compacts
+them. A compaction must never publish rewritten files into a directory
+that a file-source stream reads, or the stream reads their rows again.
+
+:func:`merge_plan` is the keyed MERGE INTO (update/delete/insert) plan
+that ``operators/lakehouse.LakehouseTable.merge`` commits.
 """
 
 from __future__ import annotations
@@ -22,30 +28,8 @@ import functools
 import operator
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def _write_merged(merged: DataFrame, target_dir: str, partition_cols: list[str]) -> None:
-    """Overwrite ``target_dir`` with ``merged``, which was (partly)
-    READ from ``target_dir``. Partitioned: dynamic overwrite — the
-    commit protocol stages new files and deletes replaced partitions at
-    commit time, after every task has finished reading, so the
-    self-read is safe. The mode is a per-write option, not session
-    conf, so the caller's later writes keep their own mode.
-    Unpartitioned: dynamic mode leaves old root files in place
-    (verified), so cut the lineage with an eager localCheckpoint and do
-    a static overwrite."""
-    if partition_cols:
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(target_dir)
-        )
-    else:
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(target_dir)
 
 
 def upsert_parquet(
@@ -54,36 +38,23 @@ def upsert_parquet(
     keys: list[str],
     partition_cols: list[str] | None = None,
 ) -> None:
-    """Merge ``batch_df`` into the parquet table at ``target_dir``,
-    deduplicating on ``keys`` (first writer wins — union puts existing
-    rows first so re-delivered rows never replace committed ones).
+    """Append to the parquet table at ``target_dir`` the rows of
+    ``batch_df`` whose ``keys`` it does not hold yet: the batch is
+    deduplicated on ``keys``, then left-anti-joined (null-safe) against
+    the committed keys of the partitions it touches. Committed files
+    are never touched again.
 
     Into an existing partitioned table the batch is evaluated twice (its
-    partition values, then the merge), so callers persist it first, as
+    partition values, then the write), so callers persist it first, as
     :func:`foreach_batch_upsert` does."""
     spark = batch_df.sparkSession
     partition_cols = list(partition_cols or [])
-
+    new = batch_df.dropDuplicates(keys)
     if _table_exists(spark, target_dir):
-        old = _read_touched(batch_df, target_dir, partition_cols)
-        # first-writer-wins must be deterministic: dropDuplicates keeps an
-        # arbitrary row, so rank committed rows (_src=0) ahead of the batch.
-        merged = (
-            old.withColumn("_src", F.lit(0))
-            .unionByName(batch_df.withColumn("_src", F.lit(1)))
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy(*keys).orderBy("_src")
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-            .drop("_src", "_rn")
-        )
-    else:
-        merged = batch_df.dropDuplicates(keys)
-
-    _write_merged(merged, target_dir, partition_cols)
+        old = _read_touched(batch_df, target_dir, partition_cols).select(*keys)
+        on = functools.reduce(operator.and_, [new[k].eqNullSafe(old[k]) for k in keys])
+        new = new.join(old, on, "left_anti")
+    new.write.mode("append").partitionBy(*partition_cols).parquet(target_dir)
 
 
 def merge_plan(
@@ -111,8 +82,6 @@ def merge_plan(
 
     Scale: the single full-outer join is the irreducible shuffle of any
     keyed merge; both sides exchange on the key and AQE splits skew.
-    Used through :func:`merge_into`, the target side is pruned to the
-    batch's partitions first, so cost tracks the batch, not the table.
     """
     data_cols = [c for c in target.columns if c not in keys]
     s_cols = [c for c in data_cols if c in source.columns]
@@ -151,48 +120,6 @@ def merge_plan(
             expr = F.col(f"_t_{c}")
         out.append(expr.alias(c))
     return j.filter(keep).select(*out)
-
-
-def merge_into(
-    source_df: DataFrame,
-    target_dir: str,
-    keys: list[str],
-    *,
-    update_cols: list[str] | None = None,
-    delete_condition=None,
-    insert: bool = True,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Apply :func:`merge_plan` against the parquet table at
-    ``target_dir`` in place — MERGE INTO without a table-format
-    dependency. With ``partition_cols``, only partitions present in the
-    source batch are read back and rewritten (dynamic overwrite), so a
-    batch-sized merge never scans the full table; partition values must
-    therefore be stable under the merge (carried by the key). A null
-    partition value matches its own partition. Into an existing
-    partitioned table the source is evaluated twice, as in
-    :func:`upsert_parquet`."""
-    spark = source_df.sparkSession
-    partition_cols = list(partition_cols or [])
-
-    if _table_exists(spark, target_dir):
-        target = _read_touched(source_df, target_dir, partition_cols)
-        merged = merge_plan(
-            target,
-            source_df,
-            keys,
-            update_cols=update_cols,
-            delete_condition=delete_condition,
-            insert=insert,
-        )
-    else:
-        merged = source_df
-        if delete_condition is not None:
-            merged = merged.filter(~delete_condition)
-        target_cols = [c for c in merged.columns if c != "_del"]
-        merged = merged.select(*target_cols)
-
-    _write_merged(merged, target_dir, partition_cols)
 
 
 def _read_touched(batch_df: DataFrame, target_dir: str, partition_cols: list[str]) -> DataFrame:

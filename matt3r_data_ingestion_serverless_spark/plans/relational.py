@@ -643,7 +643,7 @@ FROM customer t FULL OUTER JOIN source s ON t.c_custkey = s.c_custkey
 WHERE s.c_custkey IS NULL OR s.op <> 'D'
 """,
 )
-def j5_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
+def j5_merge_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lakehouse MERGE semantics as one full-outer join + conditional
     projection (operators/merge.py:merge_plan) — the keyed row-level
     form of the reference's per-file list merge

@@ -365,10 +365,13 @@ def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
                 # bad header (S2): the reference exit(1)s the whole
                 # Lambda (:197-198); a stream must survive one bad
                 # object — quarantine it as a queryable row instead.
+                # Its ts is the file's mtime, so two bad files of one
+                # device stay two rows under silver's (device, channel,
+                # ts) key.
                 yield pd.DataFrame(
                     {
                         "device_id": [device],
-                        "ts": [pd.Timestamp(0, unit="us")],
+                        "ts": [row["modificationTime"]],
                         "channel": ["_quarantine"],
                         "values": [None],
                         "state": [f"{row['path']}: {exc}"],
@@ -391,7 +394,7 @@ def read_canserver(spark: SparkSession, path: str) -> DataFrame:
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .load(path)
-        .select("path", "content")
+        .select("path", "modificationTime", "content")
     )
     return raw.mapInPandas(_decode_partition, schema=SIGNAL_SCHEMA)
 
@@ -414,5 +417,5 @@ def read_canserver_stream(
     )
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
-    raw = reader.load(path).select("path", "content")
+    raw = reader.load(path).select("path", "modificationTime", "content")
     return raw.mapInPandas(_decode_partition, schema=SIGNAL_SCHEMA)

@@ -37,12 +37,15 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from matt3r_data_ingestion_serverless_spark.operators.merge import (
     _table_exists,
-    _write_merged,
     foreach_batch_upsert,
 )
 from matt3r_data_ingestion_serverless_spark.sources.canserver import read_canserver_stream
 
 REORDER_WATERMARK = "1.2 seconds"  # MAX_SR, parse_canserver_filtered_log.py:117
+# zero-speed samples closer than this fuse into one stationary session;
+# 13 s is the reference's shortest stationary run
+# (infer_stationary_states.py:81-106)
+SESSION_GAP = "13 seconds"
 SILVER_SCHEMA = (
     "device_id string, ts timestamp, channel string, values array<double>, state string, "
     "date date, hour int"
@@ -57,8 +60,9 @@ def silver_signals_stream(spark: SparkSession, raw_dir: str) -> DataFrame:
     streaming form of the reference's epoch_dict bounded-disorder
     assembly (W3) + its cross-file overlap skip (J1): duplicates within
     the 1.2 s disorder horizon collapse, state is evicted past the
-    watermark. ``_quarantine`` rows (bad files) carry no event time —
-    they bypass the keyed dedupe state and are unioned back.
+    watermark. ``_quarantine`` rows (bad files) carry the file's
+    modification time, not an event time — they bypass the keyed dedupe
+    state and are unioned back.
     """
     signals = read_canserver_stream(spark, raw_dir)
     good = (
@@ -134,8 +138,8 @@ def _ap_transition_fn(key, pdfs, state: GroupState):
     for ts_us, code in zip(rows["ts_us"], rows["code"]):
         if code is None or pd.isna(code):
             continue
-        # monotonic guard: a re-delivered (at-least-once, T3) or
-        # partition-rewrite-re-exposed sample carries an old timestamp;
+        # monotonic guard: a sample of a file that lands after a later
+        # file of the same device was drained carries an old timestamp;
         # replaying it against newer state would fabricate transitions
         if prev_ts is not None and int(ts_us) <= prev_ts:
             continue
@@ -227,7 +231,7 @@ def _stationary_fn_factory(zero_threshold: float, min_duration_s: float, trim_s:
         for ts_us, speed in zip(rows["ts_us"], rows["speed"]):
             ts_us = int(ts_us)
             if last_ts is not None and ts_us <= last_ts:
-                continue  # re-delivered sample (T3) — no-op
+                continue  # sample of an out-of-order file — no-op
             last_ts = ts_us
             if speed <= zero_threshold:
                 if run_start is None:
@@ -283,49 +287,39 @@ def stationary_intervals_stream(
 
 
 def run_stationary_pipeline(
-    spark: SparkSession,
-    silver_dir: str,
-    gold_dir: str,
-    checkpoint_dir: str,
-    *,
-    gap: str = "13 seconds",
+    spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str
 ) -> None:
     """Stage-2a stream: silver parquet → stationary-interval events —
     the third leg of the reference's fan-out (T2: parse ∥
     infer-autopilot ∥ infer-stationary, serverless.yml:69-122). Both
     stage-2 pipelines read the same silver table independently with
     their own checkpoints, mirroring the per-queue SQS subscriptions."""
-    _start_stationary(spark, silver_dir, gold_dir, checkpoint_dir, gap=gap).awaitTermination()
+    _start_stationary(spark, silver_dir, gold_dir, checkpoint_dir).awaitTermination()
 
 
 def _start_stationary(
-    spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str, *, gap: str
+    spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str
 ) -> StreamingQuery:
     signals = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
-    sessions = stationary_sessions_stream(signals, gap=gap)
+    sessions = stationary_sessions_stream(signals)
     sessions = sessions.withColumn("date", F.to_date(F.timestamp_micros(F.col("start_us"))))
     return _start_upsert(sessions, gold_dir, checkpoint_dir, ["device_id", "start_us"], ["date"])
 
 
-def stationary_sessions_stream(signals: DataFrame, *, gap: str = "13 seconds") -> DataFrame:
+def stationary_sessions_stream(signals: DataFrame) -> DataFrame:
     """Streaming W2 variant: session_window over stationary samples.
 
     Batch W2 defines a run as zero-samples bounded by nonzero samples;
-    the streaming form uses a session gap (samples closer than ``gap``
-    fuse into one session) — the natural watermark-compatible
-    reformulation (SURVEY §7.3 risk item: batch-first, session_window
-    behind the same API).
+    the streaming form uses a session gap (samples closer than
+    ``SESSION_GAP`` fuse into one session) — the natural
+    watermark-compatible reformulation (SURVEY §7.3 risk item:
+    batch-first, session_window behind the same API). It keeps no dedupe
+    state: the insert-only silver sink adds each sample to silver once.
     """
     zero = signals.filter((F.col("channel") == "speed") & (F.col("values")[0] <= 0.0))
     zero = zero.withWatermark("ts", "30 seconds")
-    if zero.isStreaming:
-        # at-least-once hardening: the silver upsert sink rewrites whole
-        # partitions, so a downstream file source re-reads old samples as
-        # new files; keyed dedupe inside the watermark horizon makes the
-        # re-delivery a no-op BEFORE it can inflate session counts
-        zero = zero.dropDuplicatesWithinWatermark(["device_id", "ts"])
     return (
-        zero.groupBy("device_id", F.session_window("ts", gap).alias("w"))
+        zero.groupBy("device_id", F.session_window("ts", SESSION_GAP).alias("w"))
         .agg(F.count("*").alias("n_samples"))
         .select(
             "device_id",
@@ -425,7 +419,9 @@ def _sketch_merge_sink(sketch_dir: str, lg_k: int):
                 .groupBy("source")
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
-        _write_merged(new, sketch_dir, [])
+        # the union reads sketch_dir: cut the lineage before the
+        # overwrite deletes the files it reads
+        new.localCheckpoint(eager=True).write.mode("overwrite").parquet(sketch_dir)
 
     return _sink
 

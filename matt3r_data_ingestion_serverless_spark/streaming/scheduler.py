@@ -13,20 +13,22 @@ scheduled by the queue.
 
 Delivery semantics beat the reference's: checkpoints make source
 progress exactly-once per stage, and every sink is the idempotent
-partition-scoped upsert (operators/merge.py), so re-running a sweep —
-or crashing mid-sweep and re-running — converges to the same tables
-(the reference's overlap branch SKIPS writes instead,
-parse_canserver_filtered_log.py:335-343). Inside a sweep silver runs
-first and commits; the two gold legs then run AT ONCE, as the two
-gold SQS queues fan one silver object out to two Lambdas at the same
-time. ACROSS sweeps each stage catches up independently from its own
-checkpoint, so a stage-2 failure never blocks stage-1 ingest — the
+insert-only upsert (operators/merge.py): it appends only rows whose key
+is new, so re-running a sweep — or crashing mid-sweep and re-running —
+converges to the same rows (the reference's overlap branch SKIPS writes
+instead, parse_canserver_filtered_log.py:335-343). Inside a sweep
+silver runs first and commits; the two gold legs then run AT ONCE, as
+the two gold SQS queues fan one silver object out to two Lambdas at the
+same time. ACROSS sweeps each stage catches up independently from its
+own checkpoint, so a stage-2 failure never blocks stage-1 ingest — the
 same isolation the three SQS queues buy the reference.
 
-Scale: a sweep's cost is proportional to NEW data only (AvailableNow
-reads the file-source backlog); state (stationary runs in flight,
-autopilot last-codes) persists in the state store across sweeps, so a
-1-minute or 1-day sweep cadence produce identical gold tables.
+Scale: a sweep's cost is proportional to NEW data only. AvailableNow
+reads the files added since the checkpoint, and committed silver files
+are never rewritten, so each gold leg reads each silver row once. State
+(stationary runs in flight, autopilot last-codes) persists in the state
+store across sweeps, so a 1-minute or 1-day sweep cadence produce
+identical gold tables.
 """
 
 from __future__ import annotations
@@ -61,13 +63,7 @@ def topology_paths(root: str) -> dict[str, str]:
     }
 
 
-def drain_topology(
-    spark: SparkSession,
-    raw_dir: str,
-    root: str,
-    *,
-    gap: str = "13 seconds",
-) -> dict[str, int]:
+def drain_topology(spark: SparkSession, raw_dir: str, root: str) -> dict[str, int]:
     """Run ONE invocation sweep of the full topology: raw → silver,
     then silver → (autopilot ∥ stationary). Returns current row counts
     per zone so a scheduler can emit progress metrics. Idempotent: a
@@ -84,9 +80,7 @@ def drain_topology(
     try:
         legs.append(_start_autopilot(spark, p["silver"], p["gold_autopilot"], p["ckpt_autopilot"]))
         legs.append(
-            _start_stationary(
-                spark, p["silver"], p["gold_stationary"], p["ckpt_stationary"], gap=gap
-            )
+            _start_stationary(spark, p["silver"], p["gold_stationary"], p["ckpt_stationary"])
         )
     finally:
         _await_all(legs)

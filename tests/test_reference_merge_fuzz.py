@@ -5,7 +5,7 @@ generates multi-file delivery sequences — same hour/day, overlapping,
 disjoint, reordered, re-delivered — and drives them through the REAL
 reference merge paths (fake S3 with a PERSISTENT landing bucket
 carried across invocations) against transliterated merge models and
-against our idempotent union-dedupe sink (operators/merge.py
+against our idempotent insert-only sink (operators/merge.py
 upsert_parquet).
 
 The documented quirk envelope asserted per generated sequence:

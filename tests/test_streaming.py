@@ -6,6 +6,8 @@ watermark dedupe (W3), and cross-batch stateful transition detection.
 from __future__ import annotations
 
 import os
+import pathlib
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,8 +34,6 @@ def dirs(tmp_path):
 
 
 def _write_raw(dirs, name, frames, device="dev0"):
-    import pathlib
-
     d = pathlib.Path(dirs["raw"], device)
     d.mkdir(exist_ok=True)
     (d / name).write_bytes(build_stream(frames))
@@ -59,6 +59,23 @@ def test_silver_pipeline_and_idempotent_redelivery(spark, dirs, tmp_path):
     pl.run_silver_pipeline(spark, dirs["raw"], dirs["silver"], str(tmp_path / "ckpt1b"))
     n2 = spark.read.parquet(dirs["silver"]).count()
     assert n2 == n1  # dedupe-upsert absorbed the duplicate delivery
+
+
+def test_silver_keeps_a_quarantine_row_per_bad_file(spark, dirs):
+    # a quarantine row's ts is its file's mtime, so two bad files of one
+    # device are two silver rows; a re-delivered one adds none
+    dev = pathlib.Path(dirs["raw"], "dev0")
+    dev.mkdir()
+    for i, name in enumerate(["bad0.log", "bad1.log"]):
+        (dev / name).write_bytes(b"NOT_A_CANSERVER_FILE__")
+        os.utime(dev / name, (1_000_000 + i, 1_000_000 + i))
+    pl.run_silver_pipeline(spark, dirs["raw"], dirs["silver"], dirs["ckpt1"])
+    shutil.copy2(dev / "bad1.log", dev / "bad1_again.log")  # keeps the mtime
+    pl.run_silver_pipeline(spark, dirs["raw"], dirs["silver"], dirs["ckpt1"])
+    rows = spark.read.parquet(dirs["silver"]).filter("channel = '_quarantine'").collect()
+    assert sorted(os.path.basename(r.state.split(": ")[0]) for r in rows) == [
+        "bad0.log", "bad1.log"
+    ]
 
 
 def test_silver_stream_watermark_dedupe(spark, dirs):
@@ -116,7 +133,7 @@ def test_full_fanout_topology(spark, dirs, tmp_path):
     st_gold = str(tmp_path / "gold_st")
     st_ckpt = str(tmp_path / "ckpt3")
     pl.run_autopilot_pipeline(spark, dirs["silver"], ap_gold, dirs["ckpt2"])
-    pl.run_stationary_pipeline(spark, dirs["silver"], st_gold, st_ckpt, gap="5 seconds")
+    pl.run_stationary_pipeline(spark, dirs["silver"], st_gold, st_ckpt)
     # ap transitions emit in-batch (stateful scan, no watermark gate)
     ap = spark.read.parquet(ap_gold).collect()
     assert {(r.status,) for r in ap} == {("engagement",)}
@@ -124,9 +141,9 @@ def test_full_fanout_topology(spark, dirs, tmp_path):
     # the session is still OPEN against the 30 s watermark after one
     # drain — append mode correctly withholds it until event time passes
     # session end + watermark; a later sample closes and releases it
-    _write_raw(dirs, "later.log", [(60_000, 599, bytes([0x00, 0x40, 0x1F]))])
+    _write_raw(dirs, "later.log", [(65_000, 599, bytes([0x00, 0x40, 0x1F]))])
     pl.run_silver_pipeline(spark, dirs["raw"], dirs["silver"], dirs["ckpt1"])
-    pl.run_stationary_pipeline(spark, dirs["silver"], st_gold, st_ckpt, gap="5 seconds")
+    pl.run_stationary_pipeline(spark, dirs["silver"], st_gold, st_ckpt)
     st = spark.read.parquet(st_gold).collect()
     assert len(st) == 1
     assert st[0].n_samples == 20  # one fused zero-speed session
@@ -182,14 +199,24 @@ def test_exact_stationary_stream_matches_batch(spark, dirs, tmp_path):
 
 
 def test_upsert_parquet_partition_scoped_merge(spark, tmp_path):
-    # the session stays in static overwrite mode: the upsert scopes its
-    # own write to the touched partitions and leaves session conf alone
+    # the session stays in static overwrite mode: the upsert only
+    # appends, so it neither needs nor changes the session's mode
+    target = str(tmp_path / "t")
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(target)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
     prev = spark.conf.get(_OVERWRITE_MODE)
     spark.conf.set(_OVERWRITE_MODE, "STATIC")
     try:
-        target = str(tmp_path / "t")
         df1 = spark.createDataFrame(
-            [(1, "a", 10), (2, "a", 20), (3, "b", 30), (5, None, 50)], "k int, p string, v int"
+            [(1, "a", 10), (2, "a", 20), (3, "b", 30), (5, None, 50), (None, "a", 70)],
+            "k int, p string, v int",
         )
         upsert_parquet(df1, target, keys=["k"], partition_cols=["p"])
         # overlapping re-delivery + one new row in partition b and one in
@@ -198,13 +225,20 @@ def test_upsert_parquet_partition_scoped_merge(spark, tmp_path):
             [(3, "b", 99), (4, "b", 40), (6, None, 60)], "k int, p string, v int"
         )
         upsert_parquet(df2, target, keys=["k"], partition_cols=["p"])
+        # re-delivering both batches adds no file and touches none
+        committed = files()
+        for df in (df1, df2):
+            upsert_parquet(df, target, keys=["k"], partition_cols=["p"])
+        assert files() == committed
         assert spark.conf.get(_OVERWRITE_MODE) == "STATIC"
     finally:
         spark.conf.set(_OVERWRITE_MODE, prev)
-    out = {(r.k, r.p, r.v) for r in spark.read.parquet(target).collect()}
-    # k=3 keeps the FIRST committed value (idempotent, first-writer-wins)
-    assert out == {
-        (1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40), (5, None, 50), (6, None, 60)
+    rows = [(r.k, r.p, r.v) for r in spark.read.parquet(target).collect()]
+    # k=3 keeps the FIRST committed value (idempotent, first-writer-wins);
+    # the null key matches itself, so it stays one row
+    assert len(rows) == 7 and set(rows) == {
+        (1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40), (5, None, 50), (6, None, 60),
+        (None, "a", 70),
     }
 
 
@@ -447,6 +481,7 @@ def test_drain_topology_scheduler(spark, dirs, tmp_path):
     incrementally from the checkpoints."""
     from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
         drain_topology,
+        topology_paths,
     )
 
     zero = bytes([0x00, 0x40, 0x1F])
@@ -457,20 +492,45 @@ def test_drain_topology_scheduler(spark, dirs, tmp_path):
     _write_raw(dirs, "a.log", frames)
     root = str(tmp_path / "topo")
 
-    c1 = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+    c1 = drain_topology(spark, dirs["raw"], root)
     assert c1["silver_rows"] > 0
     assert c1["autopilot_events"] == 1  # 2→3 engagement
 
     # idempotent sweep: no new files → identical counts
-    c2 = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+    c2 = drain_topology(spark, dirs["raw"], root)
     assert c2 == c1
 
     # incremental: one more raw drop advances silver AND closes the
     # stationary session (watermark passes), without reprocessing a.log
-    _write_raw(dirs, "b.log", [(60_000, 599, zero)])
-    c3 = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+    _write_raw(dirs, "b.log", [(65_000, 599, zero)])
+    c3 = drain_topology(spark, dirs["raw"], root)
     assert c3["silver_rows"] == c1["silver_rows"] + 1
-    assert c3["stationary_intervals"] >= 1
+    gold = topology_paths(root)["gold_stationary"]
+    assert [r[3] for r in _rows(spark, gold)] == [20]  # n_samples
+
+    # T3: the same object re-landed under a new name adds no silver row
+    # and leaves the session's n_samples as it was
+    dev = os.path.join(dirs["raw"], "dev0")
+    shutil.copy(os.path.join(dev, "a.log"), os.path.join(dev, "a_again.log"))
+    assert drain_topology(spark, dirs["raw"], root) == c3
+    assert [r[3] for r in _rows(spark, gold)] == [20]
+
+
+_ZERO, _FAST = bytes([0x00, 0x40, 0x1F]), bytes([0x00, 0xF0, 0xFF])
+# a 3-sweep, 2-device timeline: per sweep, each device's new file
+_DROPS = [
+    {"dev0": [(i * 1000, 599, _ZERO) for i in range(12)] + [(12_500, 921, b"\x02")],
+     "dev1": [(i * 1000, 599, _FAST) for i in range(5)] + [(6_000, 921, b"\x03")]},
+    {"dev0": [(13_000, 921, b"\x03"), (30_000, 599, _FAST), (40_000, 921, b"\x01")],
+     "dev1": [(i * 1000, 599, _ZERO) for i in range(20, 30)]},
+    {"dev0": [(i * 1000, 599, _ZERO) for i in range(55, 63)] + [(65_000, 599, _FAST)],
+     "dev1": [(35_000, 921, b"\x00"), (64_000, 599, _FAST)]},
+]
+
+
+def _land_drop(dirs, k):
+    for device, frames in _DROPS[k].items():
+        _write_raw(dirs, f"{device}_{k}.log", frames, device=device)
 
 
 def _rows(spark, path):
@@ -488,29 +548,17 @@ def test_drain_topology_matches_sequential_legs(spark, dirs, tmp_path):
         topology_paths,
     )
 
-    zero, fast = bytes([0x00, 0x40, 0x1F]), bytes([0x00, 0xF0, 0xFF])
-    drops = [
-        {"dev0": [(i * 1000, 599, zero) for i in range(12)] + [(12_500, 921, b"\x02")],
-         "dev1": [(i * 1000, 599, fast) for i in range(5)] + [(6_000, 921, b"\x03")]},
-        {"dev0": [(13_000, 921, b"\x03"), (30_000, 599, fast), (40_000, 921, b"\x01")],
-         "dev1": [(i * 1000, 599, zero) for i in range(20, 30)]},
-        {"dev0": [(i * 1000, 599, zero) for i in range(45, 53)] + [(60_000, 599, fast)],
-         "dev1": [(35_000, 921, b"\x00"), (64_000, 599, fast)]},
-    ]
     root = str(tmp_path / "topo")
     p = topology_paths(root)
     ref = {k: str(tmp_path / "ref" / k) for k in ("ap", "st", "ck_ap", "ck_st")}
     prev = spark.conf.get(_OVERWRITE_MODE)
     spark.conf.set(_OVERWRITE_MODE, "STATIC")
     try:
-        for k, drop in enumerate(drops):
-            for device, frames in drop.items():
-                _write_raw(dirs, f"{device}_{k}.log", frames, device=device)
-            counts = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+        for k in range(len(_DROPS)):
+            _land_drop(dirs, k)
+            counts = drain_topology(spark, dirs["raw"], root)
             pl.run_autopilot_pipeline(spark, p["silver"], ref["ap"], ref["ck_ap"])
-            pl.run_stationary_pipeline(
-                spark, p["silver"], ref["st"], ref["ck_st"], gap="5 seconds"
-            )
+            pl.run_stationary_pipeline(spark, p["silver"], ref["st"], ref["ck_st"])
             assert _rows(spark, p["gold_autopilot"]) == _rows(spark, ref["ap"])
             assert counts["autopilot_events"] == len(_rows(spark, ref["ap"]))
         assert spark.conf.get(_OVERWRITE_MODE) == "STATIC"
@@ -521,6 +569,43 @@ def test_drain_topology_matches_sequential_legs(spark, dirs, tmp_path):
     assert sessions and _rows(spark, p["gold_stationary"]) == sessions
     assert counts["stationary_intervals"] == len(sessions)
     assert not spark.streams.active
+
+
+def test_gold_legs_read_each_silver_row_once(spark, dirs, tmp_path):
+    """Committed silver files are never rewritten, so the files each gold
+    leg's file-source log lists for a sweep hold exactly the silver rows
+    that sweep added."""
+    import json
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
+        drain_topology,
+        topology_paths,
+    )
+
+    root = str(tmp_path / "topo")
+    p = topology_paths(root)
+    logged = {"autopilot": set(), "stationary": set()}  # batch ids counted
+
+    def rows_read(leg):
+        log = os.path.join(p[f"ckpt_{leg}"], "sources", "0")
+        n = 0
+        for batch in {b for b in os.listdir(log) if b.isdigit()} - logged[leg]:
+            logged[leg].add(batch)
+            with open(os.path.join(log, batch), encoding="utf-8") as f:
+                entries = [json.loads(line) for line in f.read().splitlines()[1:]]
+            n += sum(pq.read_metadata(unquote(urlparse(e["path"]).path)).num_rows for e in entries)
+        return n
+
+    silver = 0
+    for k in range(len(_DROPS)):
+        _land_drop(dirs, k)
+        added = drain_topology(spark, dirs["raw"], root)["silver_rows"] - silver
+        silver += added
+        assert added > 0
+        assert rows_read("autopilot") == rows_read("stationary") == added
 
 
 def test_drain_topology_failed_leg_stops_every_stream(spark, dirs, tmp_path, monkeypatch):
@@ -555,13 +640,13 @@ def test_drain_topology_failed_leg_stops_every_stream(spark, dirs, tmp_path, mon
     _write_raw(dirs, "a.log", frames)
     monkeypatch.setattr(pl, "foreach_batch_upsert", failing_sink)
     with pytest.raises(StreamingQueryException, match="autopilot sink down"):
-        drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+        drain_topology(spark, dirs["raw"], root)
     assert not spark.streams.active
     # the stationary leg ran to completion before the sweep raised
     assert os.listdir(os.path.join(p["ckpt_stationary"], "commits"))
 
     monkeypatch.undo()
-    counts = drain_topology(spark, dirs["raw"], root, gap="5 seconds")
+    counts = drain_topology(spark, dirs["raw"], root)
     assert counts["autopilot_events"] == 1
 
 

@@ -54,6 +54,10 @@ def upsert_parquet(
         old = _read_touched(batch_df, target_dir, partition_cols).select(*keys)
         on = functools.reduce(operator.and_, [new[k].eqNullSafe(old[k]) for k in keys])
         new = new.join(old, on, "left_anti")
+        # an empty unpartitioned write still commits a schema-only file;
+        # a partitioned one writes nothing, so it needs no extra job
+        if not partition_cols and new.isEmpty():
+            return
     new.write.mode("append").partitionBy(*partition_cols).parquet(target_dir)
 
 

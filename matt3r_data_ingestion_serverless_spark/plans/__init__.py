@@ -7,124 +7,20 @@ The driver contract (__spark_entry__.py) reads this registry.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+
 from matt3r_data_ingestion_serverless_spark.plans.registry import QUERIES, all_queries, register
 
-# Import for side effect: each module registers its queries.
-from matt3r_data_ingestion_serverless_spark.plans import telemetry  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import decode_math  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import relational  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import northstar  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import temporal  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import subqueries  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import curation  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import decision_support  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import llmprep  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import sql_surface  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import lakehouse  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import search  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r2  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r3  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r4  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r5  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r6  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r7  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r8  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r9  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r10  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r11  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r12  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r13  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r14  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r15  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r16  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r17  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r18  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r19  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r20  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r21  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r22  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r23  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r24  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r25  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r26  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r27  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r28  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r29  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r30  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r31  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r32  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r33  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r34  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r35  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r36  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r37  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r38  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r39  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r40  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r41  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r42  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r43  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r44  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r45  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r46  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r47  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r48  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r49  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r50  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r51  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r52  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r53  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r54  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r55  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r56  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r57  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r58  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r59  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r60  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r61  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r62  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r63  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r64  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r65  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r66  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r67  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r68  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r69  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r70  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r71  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r72  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r73  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r74  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r75  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r76  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r77  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r78  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r79  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r80  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r81  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r82  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r83  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r84  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r85  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r86  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r87  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r88  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r89  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r90  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r91  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r92  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r93  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r94  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r95  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r96  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r97  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r98  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r99  # noqa: F401,E402
-from matt3r_data_ingestion_serverless_spark.plans import breadth_r100  # noqa: F401,E402
+# Import every module of this package for its side effect: each one
+# registers its queries.
+for _mod in pkgutil.iter_modules(__path__):
+    importlib.import_module(f"{__name__}.{_mod.name}")
 
-# ts_streamed_bollinger shares the batch operator's oracle; the batch
-# entry registers in breadth_r4, after telemetry — attach once both exist.
+# ts_streamed_bollinger shares the batch operator's oracle, which
+# registers in breadth_r4: attach it once every module has loaded.
+from matt3r_data_ingestion_serverless_spark.plans import telemetry  # noqa: E402
+
 telemetry._attach_streamed_bollinger_oracle()
 
 __all__ = ["QUERIES", "all_queries", "register"]

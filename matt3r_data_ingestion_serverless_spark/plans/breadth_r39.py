@@ -8,11 +8,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-    _events_stream,
-    _stream_state_partitions,
-)
+from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 _ENRICH_SQL = """
 SELECT n.n_name AS nation,
@@ -37,8 +35,6 @@ def streamed_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the gate, completing the topology matrix beside stream-stream
     interval join, stateful scans, windowed aggs, keyed dedupe, CDC
     apply, and the curation gate."""
-    import uuid
-
     nation = load_table(spark, sf_dir, "nation")
     stream = _events_stream(spark, sf_dir).select("user_id", "value")
     joined = stream.join(
@@ -54,17 +50,7 @@ def streamed_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"),
         )
     )
-    sink = f"enrich_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            per_user.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    t = spark.table(sink)
+    t = collect_stream(per_user, "complete")
     return t.groupBy("nation").agg(
         F.sum("n_events").cast("long").alias("n_events"),
         F.sum("cents").cast("long").alias("sum_cents"),

@@ -228,10 +228,8 @@ def cdc_streamed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
         LakehouseTable,
     )
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _stream_state_partitions,
-    )
     from matt3r_data_ingestion_serverless_spark.session import scratch_dir
+    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
 
     from pyspark.sql import Observation
 
@@ -279,14 +277,7 @@ def cdc_streamed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(land)
     )
-    with _stream_state_partitions(spark, "4"):
-        (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    run_once(src, apply_batch, state_partitions=4)
     final = (
         holder[0]
         .read()

@@ -112,9 +112,7 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once + idempotent-upsert contract (T3) carried onto the
     table format. Key-disjoint batches commute, so arrival order cannot
     perturb the graded rows."""
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _stream_state_partitions,
-    )
+    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
 
     tbl, _root, cut = _build_table(spark, sf_dir)
     stage = scratch_dir("lh_stream_")
@@ -138,14 +136,7 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(land)
     )
-    with _stream_state_partitions(spark):
-        (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{stage}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
-        )
+    run_once(src, apply_batch)
     return _final_select(tbl.read())
 
 

@@ -8,11 +8,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-    _events_stream,
-    _stream_state_partitions,
-)
+from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 # ---------------------------------------------------------------------------
 # stream-stream interval join (signup ⋈ click within 1 h), oracle-graded
@@ -54,8 +52,6 @@ def streamed_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same partitions: co-partitioned join, no broadcast, no history
     scan. Joined pairs land in the (append-mode) sink; the driver-side
     summary is a batch aggregate of the materialized pairs."""
-    import uuid
-
     s = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
@@ -78,17 +74,7 @@ def streamed_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_micros("c_ts") - F.unix_micros("s_ts")).alias("gap_us"),
     )
-    sink = f"ssj_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink).agg(
+    return collect_stream(joined).agg(
         F.count("*").cast("long").alias("n_pairs"),
         F.count_distinct("user_id").cast("long").alias("n_users"),
         F.sum("gap_us").cast("long").alias("sum_gap_us"),

@@ -84,9 +84,7 @@ def streamed_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per batch, the plan is TakeOrderedAndProject over the batch
     plus a k-row state union — state never grows past k rows, and
     nothing shuffles but per-partition top-k heaps."""
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _stream_state_partitions,
-    )
+    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -118,12 +116,5 @@ def streamed_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(land)
         .drop("part")
     )
-    with _stream_state_partitions(spark, "4"):
-        (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
-        )
+    run_once(src, apply_batch, state_partitions=4)
     return state[-1]

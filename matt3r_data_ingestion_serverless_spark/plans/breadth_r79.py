@@ -60,9 +60,7 @@ def streamed_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState / transformWithState keep per key — chosen
     here because the state is a plain relational table a dashboard
     can read between batches."""
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _stream_state_partitions,
-    )
+    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     ticks = ev.select(
@@ -102,14 +100,7 @@ def streamed_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(land)
         .drop("part")
     )
-    with _stream_state_partitions(spark, "4"):
-        (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(120)
-        )
+    run_once(src, apply_batch, state_partitions=4)
     return state[-1].select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "n_ticks",

@@ -26,6 +26,7 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import (
 )
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 # ---------------------------------------------------------------------------
 # day-over-day edit-distance drift
@@ -384,12 +385,7 @@ def streamed_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed sessions emit incrementally and state evicts; complete mode
     here lets the entire result be graded (update mode is rejected by
     the engine for session windows — checked empirically)."""
-    import uuid
-
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _events_stream,
-        _stream_state_partitions,
-    )
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
 
     out = (
         _events_stream(spark, sf_dir)
@@ -397,17 +393,7 @@ def streamed_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"sessw_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink).select(
+    return collect_stream(out, "complete").select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("session_start_us"),
         F.unix_micros(F.col("w.end")).alias("session_end_us"),

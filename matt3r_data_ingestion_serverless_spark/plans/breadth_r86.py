@@ -24,6 +24,7 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r84 import (
 )
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
@@ -44,12 +45,7 @@ def streamed_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry is the bounded histogram, never raw rows, and ANY
     CDF-functional (W₁, KS, PSI) reads off the same state. Graded
     against the identical batch oracle as drift_wasserstein_1d."""
-    import uuid
-
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _events_stream,
-        _stream_state_partitions,
-    )
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
 
     s = _events_stream(spark, sf_dir).filter(
         F.col("event_type").isin(_W1_A, _W1_B) & F.col("value").isNotNull()
@@ -63,17 +59,7 @@ def streamed_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c")
         .agg(F.sum("ia").alias("na_c"), F.sum("ib").alias("nb_c"))
     )
-    sink = f"w1s_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            g.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    hist = spark.table(sink)
+    hist = collect_stream(g, "complete")
     tot = hist.agg(
         F.sum("na_c").alias("na"),
         F.sum("nb_c").alias("nb"),

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 # ---------------------------------------------------------------------------
 # Apriori frequent triples
@@ -312,15 +313,10 @@ def streamed_scd2_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete-mode state is keyed (segment, user) so the rolled-up
     distinct-user count falls out of the materialized table, as in
     streamed_dim_enrichment."""
-    import uuid
-
     from matt3r_data_ingestion_serverless_spark.plans.llmprep import (
         scd2_customer_history,
     )
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        _events_stream,
-        _stream_state_partitions,
-    )
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
 
     hist = scd2_customer_history(spark, sf_dir).select(
         "c_custkey", "segment", "valid_from", "valid_to"
@@ -347,18 +343,8 @@ def streamed_scd2_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = joined.groupBy(
         "segment", F.col("user_id").alias("uid")
     ).agg(F.count("*").alias("n_events"), F.sum("cents").alias("cents"))
-    sink = f"pit_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            per_user.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
     return (
-        spark.table(sink)
+        collect_stream(per_user, "complete")
         .groupBy("segment")
         .agg(
             F.sum("n_events").cast("long").alias("n_events"),

@@ -10,13 +10,16 @@ sessionization + trim), W5/W6 (tumbling buckets), §2.4 A2/A3/A5,
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.operators.autopilot import ap_transitions
 from matt3r_data_ingestion_serverless_spark.operators.stationary import stationary_intervals
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+from matt3r_data_ingestion_serverless_spark.sources.tables import _has_nanos_timestamp, load_table
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 # event_type → state code, standing in for AP_STATE_DICT
 # (infer_autopilot_states.py:22-23). 'purchase' plays ACTIVE_NOMINAL=3.
@@ -32,28 +35,6 @@ STATIONARY_MIN_DUR_S = 900.0  # events are minutes apart; 13 s scaled up
 STATIONARY_TRIM_S = 3.0
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _stream_state_partitions(spark: SparkSession, n: str = "8"):
-    """Pin shuffle partitions (= state-store instance count) for the
-    duration of one streamed gate query. Every stateful micro-batch
-    commits one state store per shuffle partition; at this harness's
-    scale 32 stores cost more in per-batch commit overhead than they
-    buy in parallelism (measured: w2/w1/w5 streamed ~1.9 s → ~1.1 s at
-    8), and under the driver's plain session the default would be 200.
-    Each call starts a FRESH checkpoint (uuid sink), so the pinned
-    count never conflicts with prior state; production streams size
-    this to cluster cores instead."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table with `ts` standardized
     to TimestampType µs under a UTC-pinned session.
@@ -61,21 +42,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file source needs an explicit schema, and the right one depends
     on the parquet footer: TIMESTAMP(NANOS) columns are only readable as
     epoch-nanos long (legacy nanosAsLong conf), TIMESTAMP(MICROS) reads
-    natively. Sniff the footer (driver-side, one file stat — no data
-    read) and build the matching projection so both layouts stream
-    identically.
+    natively. The footer decides (driver-side, no data read), and the
+    matching projection makes both layouts stream identically.
     """
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    nanos = False
-    try:
-        import pyarrow.parquet as pq
-
-        lt = pq.ParquetFile(os.path.join(sf_dir, "events.parquet")).schema.column(1).logical_type
-        nanos = getattr(lt, "unit", None) == "nanoseconds"
-    except Exception:
-        pass
+    nanos = _has_nanos_timestamp(os.path.join(sf_dir, "events.parquet"))
     ts_ddl = "ts long" if nanos else "ts timestamp"
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -520,8 +491,6 @@ def w2_streamed_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract. Batch = streaming on every closed run is the engine's
     core equivalence claim (SURVEY §7.1), here checked by the driver,
     not just pytest."""
-    import uuid
-
     from matt3r_data_ingestion_serverless_spark.streaming.pipeline import (
         stationary_intervals_stream,
     )
@@ -538,16 +507,7 @@ def w2_streamed_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_duration_s=STATIONARY_MIN_DUR_S,
         trim_s=STATIONARY_TRIM_S,
     )
-    sink = f"w2_streamed_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink).select(
+    return collect_stream(out).select(
         F.col("device_id").cast("long").alias("user_id"),
         "start_us",
         "end_us",
@@ -582,8 +542,6 @@ def w1_streamed_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose two samples land in different micro-batches is still
     detected — strictly better than the reference's per-file scan
     (infer_autopilot_states.py:78-88), which loses the file boundary."""
-    import uuid
-
     from matt3r_data_ingestion_serverless_spark.streaming.pipeline import (
         ap_transitions_from_codes,
     )
@@ -594,16 +552,7 @@ def w1_streamed_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         _event_code_col().alias("code"),
     )
     out = ap_transitions_from_codes(coded)
-    sink = f"w1_streamed_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink).select(
+    return collect_stream(out).select(
         F.col("device_id").cast("long").alias("user_id"),
         "ts_us",
         "status",
@@ -631,8 +580,6 @@ def w5_streamed_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation half: at production the same query runs in append mode
     with `withWatermark` so closed windows emit incrementally and state
     is evicted; complete mode here lets the whole table be graded."""
-    import uuid
-
     out = (
         _events_stream(spark, sf_dir)
         .select("user_id", "ts", "value")
@@ -642,17 +589,7 @@ def w5_streamed_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("value"), 6).alias("avg_value"),
         )
     )
-    sink = f"w5_streamed_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink).select(
+    return collect_stream(out, "complete").select(
         "user_id",
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:00:00").alias("bucket"),
         "n_samples",
@@ -772,22 +709,11 @@ def j1_streamed_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the closed replay ends. The union is stream-native: both
     legs read the same files, no join, no shuffle beyond the dedupe
     key hash."""
-    import uuid
-
     s1 = _events_stream(spark, sf_dir).select("event_id", "event_type")
     s2 = _events_stream(spark, sf_dir).select("event_id", "event_type")
     dd = s1.unionByName(s2).dropDuplicates(["event_id"])
-    sink = f"j1_streamed_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            dd.writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
     return (
-        spark.table(sink)
+        collect_stream(dd)
         .groupBy("event_type")
         .agg(F.count("*").alias("n_distinct_events"))
     )
@@ -815,8 +741,6 @@ def ns_streamed_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one row per source. In production this runs in append/update
     mode with a watermark on ingest time; complete mode here lets the
     closed replay be graded whole."""
-    import uuid
-
     stream = (
         spark.readStream.schema(
             "doc_id long, text string, lang string, source string, n_chars long"
@@ -831,17 +755,7 @@ def ns_streamed_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.round(F.avg(F.length("text")), 6).alias("avg_chars"),
     )
-    sink = f"doc_quality_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink)
+    return collect_stream(out, "complete")
 
 
 @register(
@@ -1084,8 +998,6 @@ def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing frame never looks forward — no end-of-input asymmetry.
     Seventh streamed gate entry; same applyInPandasWithState machinery
     as the W1/W2 scans."""
-    import uuid
-
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -1120,16 +1032,7 @@ def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"boll_streamed_{uuid.uuid4().hex[:8]}"
-    with _stream_state_partitions(spark):
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.table(sink).select(
+    return collect_stream(out).select(
         F.col("device_id").cast("long").alias("user_id"),
         "ts_us",
         "cents",

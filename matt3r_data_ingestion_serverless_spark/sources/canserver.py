@@ -50,16 +50,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from matt3r_data_ingestion_serverless_spark.functions.decode import (
+    ACC_SCALE,
+    GNSS_FACTOR,
+    PITCH_ROLL_SCALE,
+    SPEED_OFFSET,
+    SPEED_SCALE,
+    YAW_SCALE,
+)
 from matt3r_data_ingestion_serverless_spark.operators.autopilot import AP_STATE_NAMES
 
 MAGIC = b"CANSERVER_v2_CANSERVER"
-
-ACC_SCALE = 0.00125
-YAW_SCALE = 0.0001
-PITCH_ROLL_SCALE = 0.00025
-SPEED_SCALE = 0.08
-SPEED_OFFSET = -40.0
-GNSS_FACTOR = 1e-6
 
 CHANNEL_BY_FRAME = {273: "accel", 257: "gyro", 79: "location", 599: "speed", 921: "ap_status"}
 MIN_PAYLOAD = {273: 6, 257: 6, 79: 7, 599: 3, 921: 1}

@@ -24,15 +24,26 @@ watermark dedupe reproduces the reference's in-flight reorder buffer
 (W3, parse_canserver_filtered_log.py:268-289 with MAX_SR=1.2), and rows
 later than the watermark are dropped from dedupe state, keeping state
 bounded no matter how long the stream runs.
+
+A one-shot query (the Structured Streaming paper's "run-once" trigger)
+goes through :func:`run_once`, or :func:`collect_stream` for a memory
+sink: it runs on a fresh checkpoint that is removed afterwards, waits
+without a timeout, and stops the query on every exit path. The topology
+legs above keep their own checkpoints, because those must persist.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from matt3r_data_ingestion_serverless_spark.operators.merge import (
@@ -46,6 +57,9 @@ REORDER_WATERMARK = "1.2 seconds"  # MAX_SR, parse_canserver_filtered_log.py:117
 # 13 s is the reference's shortest stationary run
 # (infer_stationary_states.py:81-106)
 SESSION_GAP = "13 seconds"
+# shuffle partitions (= state stores) of a one-shot query; see
+# _run_available_now
+ONE_SHOT_STATE_PARTITIONS = 8
 SILVER_SCHEMA = (
     "device_id string, ts timestamp, channel string, values array<double>, state string, "
     "date date, hour int"
@@ -109,6 +123,68 @@ def _start_upsert(
     )
 
 
+def run_once(
+    stream: DataFrame, on_batch, *, state_partitions: int = ONE_SHOT_STATE_PARTITIONS
+) -> None:
+    """Run the streaming ``stream`` over the input available now, handing
+    each micro-batch to ``on_batch(batch_df, batch_id)`` (foreachBatch),
+    and return once the last one has committed; a failure re-raises."""
+    _run_available_now(
+        stream.sparkSession, stream.writeStream.foreachBatch(on_batch), state_partitions
+    )
+
+
+def collect_stream(stream: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run the streaming ``stream`` once into a memory sink and return
+    the sink's rows as a batch DataFrame. The sink's temp view is
+    dropped before returning: the returned frame holds the rows, and
+    they are freed with it."""
+    spark = stream.sparkSession
+    name = f"collect_{uuid.uuid4().hex}"
+    writer = stream.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    try:
+        _run_available_now(spark, writer, ONE_SHOT_STATE_PARTITIONS)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int
+) -> None:
+    """Start ``writer`` with the ``availableNow`` trigger on a fresh
+    checkpoint and wait for it without a timeout.
+
+    The checkpoint goes under the session's
+    ``spark.sql.streaming.checkpointLocation`` when that is set (so its
+    WAL stays where the session keeps it), else in a temp dir.
+    ``spark.sql.shuffle.partitions`` is pinned to ``state_partitions``
+    while the query runs: each stateful micro-batch commits one state
+    store per shuffle partition, and on small inputs more stores (a
+    plain session would use 200) cost more commit overhead than they buy
+    in parallelism. On every exit the query is stopped, the conf
+    restored and the checkpoint removed."""
+    base = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    if base:
+        os.makedirs(base, exist_ok=True)
+    checkpoint = tempfile.mkdtemp(prefix="run_once_", dir=base)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    query = None
+    try:
+        query = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        if query is not None and query.isActive:
+            query.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+
+
 # ---------------------------------------------------------------------------
 # stage 2b streaming: autopilot transitions with cross-batch state
 # ---------------------------------------------------------------------------
@@ -136,21 +212,21 @@ def _ap_transition_fn(key, pdfs, state: GroupState):
     rows = pd.concat(list(pdfs), ignore_index=True).sort_values("ts_us")
     out = []
     for ts_us, code in zip(rows["ts_us"], rows["code"]):
-        if code is None or pd.isna(code):
-            continue
         # monotonic guard: a sample of a file that lands after a later
         # file of the same device was drained carries an old timestamp;
         # replaying it against newer state would fabricate transitions
         if prev_ts is not None and int(ts_us) <= prev_ts:
             continue
-        code = int(code)
-        if prev_code is not None:
+        # a NULL code (FAULT, SNA, unknown) is a sample too: it becomes
+        # the lag, so the next code makes no transition, as in batch W1
+        code = None if pd.isna(code) else int(code)
+        if prev_code is not None and code is not None:
             if code == 3 and prev_code <= 2:
                 out.append((key[0], int(ts_us), "engagement", float(code)))
             elif code <= 2 and prev_code == 3:
                 out.append((key[0], int(ts_us), "disengagement", float(code)))
         prev_ts, prev_code = int(ts_us), code
-    if prev_code is not None:
+    if prev_ts is not None:
         state.update((prev_ts, prev_code))
     yield pd.DataFrame(out, columns=["device_id", "ts_us", "status", "canbus_state"])
 

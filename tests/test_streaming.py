@@ -8,8 +8,11 @@ from __future__ import annotations
 import os
 import pathlib
 import shutil
+import tempfile
+import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.operators.merge import _table_exists, upsert_parquet
@@ -89,15 +92,7 @@ def test_silver_stream_watermark_dedupe(spark, dirs):
     ]
     _write_raw(dirs, "dup.log", frames)
     stream = pl.silver_signals_stream(spark, dirs["raw"])
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("w3_dedupe")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT device_id, channel, ts FROM w3_dedupe").collect()
+    rows = pl.collect_stream(stream).collect()
     assert len(rows) == 2  # duplicate speed sample collapsed
     assert {r.channel for r in rows} == {"speed", "ap_status"}
 
@@ -117,6 +112,30 @@ def test_cross_batch_ap_transition_state(spark, dirs):
     statuses = {(r.status, r.ts_us - SYNC_US) for r in gold}
     assert ("engagement", 200_000) in statuses
     assert ("disengagement", 300_000) in statuses
+
+
+def test_null_ap_code_suppresses_the_next_transition(spark, dirs):
+    # FAULT (14) and SNA (15) decode to a NULL code. Batch W1 lags over
+    # them, so the code after a NULL makes no transition; the gold leg
+    # must agree, also when the NULL is the last sample of a micro-batch
+    codes = [2, 3, 2, 14, 3, 2, 15, 3]  # one sample a second from 1 s
+    frames = [((i + 1) * 1000, 921, bytes([c])) for i, c in enumerate(codes)]
+    for name, part in (("f1.log", frames[:4]), ("f2.log", frames[4:])):
+        _write_raw(dirs, name, part)
+        pl.run_silver_pipeline(spark, dirs["raw"], dirs["silver"], dirs["ckpt1"])
+        pl.run_autopilot_pipeline(spark, dirs["silver"], dirs["gold"], dirs["ckpt2"])
+
+    from matt3r_data_ingestion_serverless_spark.operators.autopilot import (
+        ap_state_code,
+        ap_transitions,
+    )
+
+    silver = spark.read.parquet(dirs["silver"]).filter("channel = 'ap_status'")
+    batch = ap_transitions(silver.withColumn("code", ap_state_code(F.col("state"))))
+    want = {("engagement", 2_000_000), ("disengagement", 3_000_000), ("disengagement", 6_000_000)}
+    assert {(r.status, r.ts_us - SYNC_US) for r in batch.collect()} == want
+    gold = spark.read.parquet(dirs["gold"]).collect()
+    assert {(r.status, r.ts_us - SYNC_US) for r in gold} == want
 
 
 def test_full_fanout_topology(spark, dirs, tmp_path):
@@ -242,6 +261,16 @@ def test_upsert_parquet_partition_scoped_merge(spark, tmp_path):
     }
 
 
+def test_repeated_unpartitioned_upsert_adds_no_file(spark, tmp_path):
+    target = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    for _ in range(3):
+        upsert_parquet(df, target, keys=["k"])
+    files = [f for f in os.listdir(target) if f.endswith(".parquet")]
+    assert len(files) == 1
+    assert spark.read.parquet(target).count() == 2
+
+
 def test_stationary_sessions_stream_schema(spark, dirs):
     # schema/plan sanity for the session_window variant (batch-mode run)
     _write_raw(
@@ -314,16 +343,8 @@ def test_stream_stream_interval_join(spark, dirs):
     _write_raw(dirs, "join.log", frames)
     signals = cs.read_canserver_stream(spark, dirs["raw"])
     joined = pl.speed_ap_joined_stream(signals)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT device_id, unix_micros(s_ts) AS s_us, ap_state FROM ss_join"
+    rows = pl.collect_stream(joined).select(
+        F.unix_micros("s_ts").alias("s_us"), "ap_state"
     ).collect()
     assert len(rows) == 1
     assert rows[0].s_us - SYNC_US == 1_000_000
@@ -349,24 +370,14 @@ def test_stateful_stream_under_rocksdb_provider(spark, dirs):
     try:
         signals = cs.read_canserver_stream(spark, dirs["raw"])
         out = pl.ap_transitions_stream(signals)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("rocksdb_ap")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        rows = pl.collect_stream(out).collect()
     finally:
         if prev:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
         else:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = {
-        (r.status, r.ts_us - SYNC_US)
-        for r in spark.sql("SELECT * FROM rocksdb_ap").collect()
-    }
-    assert rows == {("engagement", 200_000), ("disengagement", 300_000)}
+    got = {(r.status, r.ts_us - SYNC_US) for r in rows}
+    assert got == {("engagement", 200_000), ("disengagement", 300_000)}
 
 
 def test_chained_stateful_operators_one_stream(spark, dirs):
@@ -392,17 +403,7 @@ def test_chained_stateful_operators_one_stream(spark, dirs):
         zeroes.groupBy("device_id", F.session_window("ts", "10 seconds"))
         .agg(F.count("*").alias("n_samples"))
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("chained_stateful")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT n_samples FROM chained_stateful ORDER BY n_samples"
-    ).collect()
+    rows = pl.collect_stream(sessions).orderBy("n_samples").collect()
     # 6 unique zero samples in session 1 (duplicate absorbed by the
     # dedupe stage, NOT counted twice), 1 in session 2
     assert [r.n_samples for r in rows] == [1, 6]
@@ -422,15 +423,7 @@ def test_stream_static_dimension_join(spark, dirs):
     enriched = signals.filter(signals.channel == "speed").join(
         registry, "device_id", "left"
     )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("ss_static")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {(r.device_id, r.fleet) for r in spark.sql("SELECT device_id, fleet FROM ss_static").collect()}
+    rows = {(r.device_id, r.fleet) for r in pl.collect_stream(enriched).collect()}
     assert rows == {("dev0", "fleet-a"), ("dev1", None)}
 
 
@@ -612,8 +605,6 @@ def test_drain_topology_failed_leg_stops_every_stream(spark, dirs, tmp_path, mon
     """A failing gold leg fails the sweep only after the other leg has
     finished, so no stream is left running; the next sweep resumes the
     failed leg from its checkpoint."""
-    from pyspark.errors import StreamingQueryException
-
     from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
         drain_topology,
         topology_paths,
@@ -680,13 +671,7 @@ def test_foreach_batch_upsert_evaluates_each_batch_once(spark, tmp_path):
         .parquet(str(src))
         .withColumn("p", F.udf(part_of, "string")("k"))
     )
-    (
-        stream.writeStream.foreachBatch(foreach_batch_upsert(target, ["k"], ["p"]))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    pl.run_once(stream, foreach_batch_upsert(target, ["k"], ["p"]))
     assert calls.value == 6  # 2 micro-batches x 3 rows, each row once
     assert cached_rdds() <= before
     out = {(r.k, r.p, r.v) for r in spark.read.parquet(target).collect()}
@@ -781,16 +766,8 @@ def test_stream_stream_left_outer_join(spark, dirs):
         spark, dirs["raw"], options={"maxFilesPerTrigger": "1"}
     )
     joined = pl.speed_ap_joined_stream(signals, how="leftOuter")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_left_join")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql(
-        "SELECT unix_micros(s_ts) AS s_us, ap_state FROM ss_left_join"
+    rows = pl.collect_stream(joined).select(
+        F.unix_micros("s_ts").alias("s_us"), "ap_state"
     ).collect()
     got = {(r.s_us - SYNC_US, r.ap_state) for r in rows}
     assert got == {
@@ -799,3 +776,73 @@ def test_stream_stream_left_outer_join(spark, dirs):
         (40_000_000, "ACTIVE_NOMINAL"),  # matched in batch 2
         (60_000_000, "ACTIVE_NOMINAL"),  # matched in batch 3
     }
+
+
+def _checkpoint_dirs(spark):
+    base = spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    base = base or tempfile.gettempdir()
+    return set(os.listdir(base)) if os.path.isdir(base) else set()
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _land_parquet(tmp_path, n_files):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(n_files):
+        pq.write_table(pa.table({"k": [i % 2, 7], "v": [i, 1]}), src / f"b{i}.parquet")
+    return str(src)
+
+
+def _file_stream(spark, src):
+    return spark.readStream.schema("k long, v long").option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def test_collect_stream_complete_mode_leaves_nothing_behind(spark, tmp_path):
+    src = _land_parquet(tmp_path, 3)
+    views, ckpts = _temp_views(spark), _checkpoint_dirs(spark)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")
+    try:
+        sums = _file_stream(spark, src).groupBy("k").agg(F.sum("v").alias("s"))
+        out = pl.collect_stream(sums, "complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert {(r.k, r.s) for r in out.collect()} == {(0, 2), (1, 1), (7, 3)}
+    assert _temp_views(spark) == views
+    assert not spark.streams.active
+    assert _checkpoint_dirs(spark) == ckpts
+
+
+def test_run_once_reraises_a_failed_batch_and_cleans_up(spark, tmp_path):
+    src = _land_parquet(tmp_path, 2)
+    ckpts = _checkpoint_dirs(spark)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def fail(_df, _batch_id):
+        raise RuntimeError("sink down")
+
+    with pytest.raises(StreamingQueryException, match="sink down"):
+        pl.run_once(_file_stream(spark, src), fail, state_partitions=3)
+    assert not spark.streams.active
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert _checkpoint_dirs(spark) == ckpts
+
+
+def test_run_once_returns_after_the_last_batch(spark, tmp_path):
+    src = _land_parquet(tmp_path, 4)
+    seen = []
+
+    def record(df, batch_id):
+        time.sleep(0.2)  # a slow sink: the wait must outlast every batch
+        seen.append((batch_id, df.count()))
+
+    pl.run_once(_file_stream(spark, src), record)
+    assert seen == [(0, 2), (1, 2), (2, 2), (3, 2)]
+    assert not spark.streams.active

@@ -1,6 +1,5 @@
-"""Round-7 batch 1: mixed-format image decode through the sniff →
-dispatch seam (VERDICT r06 next-step 3 — the decode_image
-NotImplementedError is gone for stdlib-decodable containers).
+"""Round-7 batch 1: z-order clustering, metadata-only aggregation and
+the z-ordered silver telemetry layout over the lakehouse table.
 """
 
 from __future__ import annotations
@@ -10,89 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import _key_range
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.session import scratch_dir
-from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# mixed-format corpus decode: even docs are P6 PPM, odd docs are PNG
-# ---------------------------------------------------------------------------
-
-_MIXED_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         CASE doc_id % 4 WHEN 0 THEN 'ppm' WHEN 1 THEN 'png'
-                         WHEN 2 THEN 'jpeg' ELSE 'gif' END AS fmt,
-         CASE doc_id % 4 WHEN 0 THEN 8 + doc_id % 5
-                         WHEN 1 THEN 9 + doc_id % 4
-                         WHEN 2 THEN 8 * (2 + doc_id % 3)
-                         ELSE 10 + doc_id % 6 END AS w,
-         CASE doc_id % 4 WHEN 0 THEN 6 + doc_id % 3
-                         WHEN 1 THEN 5 + doc_id % 4
-                         WHEN 2 THEN 8 * (1 + doc_id % 2)
-                         ELSE 7 + doc_id % 5 END AS h
-  FROM documents
-),
-s AS (SELECT doc_id, fmt, w, h, unnest(range(0, w * h * 3)) AS i FROM d),
-v AS (
-  SELECT doc_id, fmt, w, i, i % 3 AS c, (i // 3) % w AS x, i // (3 * w) AS y
-  FROM s
-),
-p AS (
-  SELECT doc_id, fmt, i,  c,
-         CASE fmt WHEN 'ppm'
-              THEN (doc_id * 7 + y * 13 + x * 5 + c * 29) % 256
-              WHEN 'png'
-              THEN (doc_id * 11 + y * 3 + x * 7 + c * 19) % 256
-              WHEN 'gif'
-              -- gif: palette index idx = (id*19 + y*5 + x*3) % 256;
-              -- channel value is arithmetic in idx (synth_gif palette)
-              THEN CASE c
-                   WHEN 0 THEN (((doc_id * 19 + y * 5 + x * 3) % 256) * 3) % 256
-                   WHEN 1 THEN (((doc_id * 19 + y * 5 + x * 3) % 256) * 5 + 1) % 256
-                   ELSE        (((doc_id * 19 + y * 5 + x * 3) % 256) * 7 + 2) % 256
-                   END
-              -- jpeg: grayscale, constant per 8x8 block, channel-free
-              ELSE (doc_id * 13 + (y // 8) * 31 + (x // 8) * 17) % 256
-         END AS pv
-  FROM v
-)
-SELECT doc_id,
-       any_value(fmt) AS fmt,
-       CAST(count(*) // 3 AS BIGINT) AS n_pixels,
-       CAST(sum(CASE WHEN c = 0 THEN pv ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN pv ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN pv ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(pv * (i + 1)) AS BIGINT) AS checksum
-FROM p GROUP BY doc_id
-"""
-
-
-@register("mm_mixed_format_decode", _MIXED_SQL)
-def mm_mixed_format_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heterogeneous-container ingest (operators/multimodal.py:
-    sniff_format/decode_image/mixed_image_features): every blob is
-    routed by MAGIC BYTES alone — doc_id % 4 arrives as P6 PPM, PNG
-    (zlib + CRC-32 + scanline filters), baseline JPEG (marker walk +
-    canonical Huffman + dequant + IDCT, operators/jpeg.py; the corpus
-    images are constant per 8x8 block with a unit quant table, the
-    regime where the lossy codec is bit-exact), or GIF (variable-width
-    LZW + palette, operators/gif.py — lossless, so no special regime),
-    and decode_image picks the decoder with no per-row format hint. The graded columns are
-    integer-exact aggregates of the DECODED pixels of all three formats
-    in one pass; the oracle regenerates each format's pixels
-    arithmetically, so a mis-sniff (wrong decoder per row) or any
-    decode bug in any branch breaks the hash.
-
-    Scale: pure map-side — sniff + decode + reduce run inside the
-    executor Arrow batch; only 7-column feature rows shuffle. This is
-    the shape a 100 TB multimodal crawl needs: one scan over a mixed
-    object corpus, no per-format shuffle split."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        mixed_image_features,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return mixed_image_features(docs)
-
+from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # Z-order clustering: multi-dimensional file skipping from 1-D stats
@@ -565,60 +482,3 @@ def j22_zorder_silver_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 register("j22_zorder_silver_stationary", _j22_sql())(j22_zorder_silver_stationary)
-
-
-# ---------------------------------------------------------------------------
-# MJPEG-AVI video decode with in-seam frame sampling (round 9)
-# ---------------------------------------------------------------------------
-
-_VIDEO_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         8 * (2 + doc_id % 3) AS w,
-         8 * (1 + doc_id % 2) AS h,
-         3 + doc_id % 3 AS nf
-  FROM documents
-),
-fr AS (SELECT doc_id, w, h, nf, unnest(range(0, nf, 2)) AS k FROM d),
-s AS (SELECT doc_id, w, h, nf, k, unnest(range(0, w * h * 3)) AS i FROM fr),
-p AS (
-  SELECT doc_id, nf, k, i,
-         (doc_id * 13 + k * 7
-          + ((i // (3 * w)) // 8) * 31
-          + (((i // 3) % w) // 8) * 17) % 256 AS pv
-  FROM s
-)
-SELECT doc_id,
-       CAST(k AS INT) AS frame_idx,
-       CAST(any_value(nf) AS INT) AS n_frames,
-       CAST(sum(pv) AS BIGINT) AS sum_rgb,
-       CAST(sum(pv * (i + 1)) AS BIGINT) AS checksum
-FROM p GROUP BY doc_id, k
-"""
-
-
-@register("mm_video_mjpeg_sample", _VIDEO_SQL)
-def mm_video_mjpeg_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MJPEG-in-AVI video decode with IN-SEAM frame sampling
-    (operators/video.py + operators/multimodal.py synth_avi /
-    video_frame_summaries): each document arrives as a real AVI (RIFF
-    chunk walk, avih/strh/strf headers, movi '00dc' frames) whose 3-5
-    frames are independent baseline JPEGs in the bit-exact
-    constant-block regime; every SECOND frame is decoded (sampled
-    frames never pay pixel decode — at 100 TB the sampling rate IS the
-    compute bill) and the graded columns are integer-exact aggregates
-    of the decoded pixels. The oracle regenerates each sampled frame's
-    pixels arithmetically, so a container mis-walk, a frame-order bug,
-    a sampling off-by-one, or any JPEG decode fault breaks the hash.
-    Inter-frame codecs (H.264) remain honestly out of scope at the
-    decode_video seam.
-
-    Scale: pure map-side like every codec sibling — container walk,
-    frame extraction, JPEG decode and reduction run inside the Arrow
-    batch; only 5-column per-frame summary rows shuffle."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        video_frame_summaries,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return video_frame_summaries(docs, sample_every=2)

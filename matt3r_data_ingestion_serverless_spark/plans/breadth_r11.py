@@ -293,138 +293,3 @@ def ns_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rk").cast("int").alias("rank_in_pool"),
         F.col("cs").alias("cos_sim"),
     )
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing: fps frame sampling + ViT patch grids
-# ---------------------------------------------------------------------------
-
-_FPS_TARGET_SAMPLES = 8
-_FPS_BYTES_PER_FRAME = 100
-
-_FPS_SQL = f"""
-WITH v AS (
-  SELECT doc_id, octet_length(encode(text)) AS n_bytes,
-         greatest(octet_length(encode(text)) // {_FPS_BYTES_PER_FRAME}, 1)
-           AS frame_count
-  FROM documents
-),
-s AS (
-  SELECT doc_id, n_bytes, frame_count,
-         greatest(frame_count // {_FPS_TARGET_SAMPLES}, 1) AS stride
-  FROM v
-)
-SELECT doc_id, CAST(i AS INT) AS sample_idx,
-       CAST(i * stride AS BIGINT) AS frame_idx,
-       CAST((i * stride * 1000) // 30 AS BIGINT) AS t_ms,
-       CAST((i * stride * {_FPS_BYTES_PER_FRAME}) % n_bytes AS BIGINT)
-         AS byte_offset
-FROM s, (SELECT unnest(range(0, {_FPS_TARGET_SAMPLES})) AS i)
-WHERE i * stride < frame_count
-"""
-
-
-@register("ns_multimodal_fps_sample", _FPS_SQL)
-def ns_multimodal_fps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plan: derive (frame_count, stride) from blob
-    metadata (the fixture has no codecs, so frame count is synthesized
-    from blob size at 100 B/frame, 30 fps) and emit ≤ 8 evenly-strided
-    sample points per blob — (frame index, timestamp, byte offset), the
-    exact work-list a decode UDF consumes. This is the SCHEDULING half
-    of video ingestion: the plan computes where to seek before any
-    decoder runs, so the expensive mapInPandas decode
-    (ns_multimodal_frame_features) touches only sampled offsets.
-
-    Pure integer arithmetic + a static 8-element explode in the scan
-    stage: no shuffle at all — the plan is embarrassingly parallel at
-    any scale."""
-    from matt3r_data_ingestion_serverless_spark.operators import multimodal
-
-    docs = multimodal.with_blob(spread(load_table(spark, sf_dir, "documents")))
-    v = docs.select(
-        "doc_id",
-        F.octet_length("blob").cast("long").alias("n_bytes"),
-    ).withColumn(
-        "frame_count",
-        F.greatest(F.expr(f"n_bytes div {_FPS_BYTES_PER_FRAME}"), F.lit(1)),
-    ).withColumn(
-        "stride",
-        F.greatest(F.expr(f"frame_count div {_FPS_TARGET_SAMPLES}"), F.lit(1)),
-    )
-    s = v.select(
-        "doc_id",
-        "n_bytes",
-        "frame_count",
-        "stride",
-        F.explode(F.sequence(F.lit(0), F.lit(_FPS_TARGET_SAMPLES - 1))).alias("i"),
-    ).filter(F.col("i") * F.col("stride") < F.col("frame_count"))
-    fr = F.col("i") * F.col("stride")
-    return s.select(
-        "doc_id",
-        F.col("i").cast("int").alias("sample_idx"),
-        fr.cast("long").alias("frame_idx"),
-        F.expr(f"(i * stride * 1000) div 30").cast("long").alias("t_ms"),
-        ((fr * _FPS_BYTES_PER_FRAME) % F.col("n_bytes")).cast("long").alias(
-            "byte_offset"
-        ),
-    )
-
-
-_PATCH = 32
-
-_PATCH_SQL = f"""
-WITH img AS (
-  SELECT doc_id,
-         64 + (doc_id % 8) * 32 AS w,
-         64 + (doc_id % 5) * 32 AS h
-  FROM documents
-)
-SELECT doc_id, CAST(w AS INT) AS w, CAST(h AS INT) AS h,
-       CAST(py * (w // {_PATCH}) + px AS INT) AS patch_index,
-       CAST(px * {_PATCH} AS INT) AS x0,
-       CAST(py * {_PATCH} AS INT) AS y0,
-       CAST(px * {_PATCH} + {_PATCH} AS INT) AS x1,
-       CAST(py * {_PATCH} + {_PATCH} AS INT) AS y1
-FROM img,
-     (SELECT unnest(range(0, 16)) AS px),
-     (SELECT unnest(range(0, 16)) AS py)
-WHERE px < w // {_PATCH} AND py < h // {_PATCH}
-"""
-
-
-@register("ns_image_patch_grid", _PATCH_SQL)
-def ns_image_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ViT patch-grid construction: each image (dimensions synthesized
-    deterministically from doc_id — the container has no image codecs)
-    expands to its row-major 32×32 patch boxes with coordinates and
-    patch index — the tokenization plan a vision encoder's preprocessor
-    consumes, computed relationally so patch extraction parallelizes as
-    ordinary rows (crop UDF downstream, one row per patch).
-
-    Like fps sampling, this is shuffle-free scan-stage arithmetic: the
-    cross join against two tiny static ranges stays a nested-loop
-    broadcast; row counts scale as pixels/patch², not files."""
-    docs = load_table(spark, sf_dir, "documents")
-    img = docs.select(
-        "doc_id",
-        (64 + (F.col("doc_id") % 8) * 32).cast("int").alias("w"),
-        (64 + (F.col("doc_id") % 5) * 32).cast("int").alias("h"),
-    )
-    px = spark.range(16).select(F.col("id").cast("int").alias("px"))
-    py = spark.range(16).select(F.col("id").cast("int").alias("py"))
-    g = img.crossJoin(F.broadcast(px)).crossJoin(F.broadcast(py)).filter(
-        (F.col("px") < F.expr(f"w div {_PATCH}"))
-        & (F.col("py") < F.expr(f"h div {_PATCH}"))
-    )
-    return g.select(
-        "doc_id",
-        "w",
-        "h",
-        (F.col("py") * F.expr(f"w div {_PATCH}") + F.col("px"))
-        .cast("int")
-        .alias("patch_index"),
-        (F.col("px") * _PATCH).cast("int").alias("x0"),
-        (F.col("py") * _PATCH).cast("int").alias("y0"),
-        (F.col("px") * _PATCH + _PATCH).cast("int").alias("x1"),
-        (F.col("py") * _PATCH + _PATCH).cast("int").alias("y1"),
-    )

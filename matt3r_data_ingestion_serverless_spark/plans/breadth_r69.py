@@ -253,50 +253,3 @@ def j8_lakehouse_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double")
         ).alias("total_r"),
     )
-
-
-# ---------------------------------------------------------------------------
-# real-codec multimodal seam (VERDICT r02 next-step 7)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "mm_wav_roundtrip_features",
-    sql="""
-WITH s AS (
-  SELECT doc_id, unnest(range(0, 256 + doc_id % 64)) AS i FROM documents
-), v AS (
-  SELECT doc_id, i, ((doc_id * 31 + i * 17) % 65536) - 32768 AS v FROM s
-)
-SELECT doc_id,
-       count(*) AS n_samples,
-       count(*) * 125 AS duration_us,
-       sum(v) AS sum_v,
-       min(v) AS min_v,
-       max(v) AS max_v,
-       sum(v * (i + 1)) AS checksum
-FROM v GROUP BY doc_id
-""",
-)
-def mm_wav_roundtrip_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal REAL-codec path (operators/multimodal.py:synth_wav/
-    decode_wav/wav_features): each document's deterministic PCM16
-    waveform is encoded as a genuine RIFF/WAVE file and decoded back
-    through the stdlib ``wave`` codec inside the Arrow batch loop; the
-    graded columns are integer-exact aggregates of the DECODED samples.
-    The oracle regenerates the waveform arithmetically — a header
-    offset, endianness, or sample-width bug anywhere in the codec path
-    breaks the hash. decode_image stays honestly NotImplemented (no
-    PIL/ffmpeg here); this query proves the seam itself works end to
-    end on real encoded bytes.
-
-    Scale: pure map-side — blobs are encoded, decoded, and reduced to
-    7 ints inside the executor batch; nothing but the feature rows ever
-    shuffles."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        wav_features,
-    )
-    from matt3r_data_ingestion_serverless_spark.sources.tables import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return wav_features(docs)

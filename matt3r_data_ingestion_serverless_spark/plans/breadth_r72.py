@@ -1,5 +1,5 @@
 """Round-3 batch 2: a stream-stream interval join graded inside the
-oracle gate, and the PPM image sibling of the WAV real-codec path.
+oracle gate.
 """
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
-from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 # ---------------------------------------------------------------------------
@@ -81,51 +80,3 @@ def streamed_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("gap_us").cast("long").alias("min_gap_us"),
         F.max("gap_us").cast("long").alias("max_gap_us"),
     )
-
-
-# ---------------------------------------------------------------------------
-# PPM real-codec image features
-# ---------------------------------------------------------------------------
-
-_PPM_SQL = """
-WITH d AS (SELECT doc_id, 8 + doc_id % 5 AS w, 6 + doc_id % 3 AS h FROM documents),
-s AS (SELECT doc_id, w, h, unnest(range(0, w * h * 3)) AS i FROM d),
-v AS (
-  SELECT doc_id, w, i, i % 3 AS c, (i // 3) % w AS x, i // (3 * w) AS y
-  FROM s
-),
-p AS (
-  SELECT doc_id, i, c,
-         (doc_id * 7 + y * 13 + x * 5 + c * 29) % 256 AS pv
-  FROM v
-)
-SELECT doc_id,
-       CAST(count(*) // 3 AS BIGINT) AS n_pixels,
-       CAST(sum(CASE WHEN c = 0 THEN pv ELSE 0 END) AS BIGINT) AS sum_r,
-       CAST(sum(CASE WHEN c = 1 THEN pv ELSE 0 END) AS BIGINT) AS sum_g,
-       CAST(sum(CASE WHEN c = 2 THEN pv ELSE 0 END) AS BIGINT) AS sum_b,
-       CAST(sum(pv * (i + 1)) AS BIGINT) AS checksum
-FROM p GROUP BY doc_id
-"""
-
-
-@register("mm_ppm_image_features", _PPM_SQL)
-def mm_ppm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal REAL-codec path, image sibling of
-    mm_wav_roundtrip_features (operators/multimodal.py:synth_ppm/
-    decode_ppm/ppm_features): each document's deterministic RGB24 image
-    is written as a genuine P6 PPM — ASCII header with a comment line,
-    maxval, raw payload — and decoded back through a real header
-    tokenizer inside the Arrow batch loop; the graded columns are
-    integer-exact aggregates of the DECODED pixels. The oracle
-    regenerates the image arithmetically, so a comment-skip, header
-    offset, or row-order bug anywhere in the parser breaks the hash.
-
-    Scale: pure map-side — blobs are encoded, decoded, and reduced to
-    6 ints inside the executor batch; only feature rows shuffle."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        ppm_features,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return ppm_features(docs)

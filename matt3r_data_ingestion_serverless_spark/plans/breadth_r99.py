@@ -1,12 +1,9 @@
-"""Round-4 batch 27: spectral entropy, Walsh tone correlations on real
-decoded audio, and dedup cost accounting.
+"""Round-4 batch 27: spectral entropy and dedup cost accounting.
 
-Three operator families: normalized spectral entropy of the daily
-periodogram (the flat-vs-peaked seasonality summary), square-wave
-(Walsh) tone correlations computed on REAL decoded WAV bytes with
-all-integer weights (frequency analysis through the codec seam with
-zero cross-engine trig risk), and the byte-savings ledger of keep-one
-deduplication (what the dedup pass actually buys, in characters).
+Two operator families: normalized spectral entropy of the daily
+periodogram (the flat-vs-peaked seasonality summary) and the
+byte-savings ledger of keep-one deduplication (what the dedup pass
+actually buys, in characters).
 """
 
 from __future__ import annotations
@@ -15,7 +12,6 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
@@ -124,91 +120,6 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("pw") == F.col("mx"), F.col("k")))
         .cast("long")
         .alias("dominant_k"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Walsh (square-wave) tone correlations through the WAV codec seam
-# ---------------------------------------------------------------------------
-
-_WALSH_KS = (1, 2, 4)
-
-_WALSH_SQL = f"""
-WITH d AS (SELECT doc_id, 256 + doc_id % 64 AS n FROM documents),
-smp AS (
-  SELECT doc_id, n,
-         unnest(range(0, n)) AS i
-  FROM d
-),
-v AS (
-  SELECT doc_id, n, i,
-         (doc_id * 31 + i * 17) % 65536 - 32768 AS x
-  FROM smp
-),
-t AS (
-  SELECT v.doc_id, v.n, k.k,
-         sum(v.x * (CASE WHEN ((2 * k.k * v.i) // v.n) % 2 = 0
-                         THEN 1 ELSE -1 END)) AS walsh_corr
-  FROM v CROSS JOIN (SELECT unnest([{", ".join(str(k) for k in _WALSH_KS)}]) AS k) k
-  GROUP BY 1, 2, 3
-)
-SELECT doc_id, CAST(n AS BIGINT) AS n_samples, CAST(k AS INT) AS k,
-       CAST(walsh_corr AS BIGINT) AS walsh_corr
-FROM t
-"""
-
-
-@register("mm_wav_walsh_tones", sql=_WALSH_SQL)
-def mm_wav_walsh_tones(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Square-wave (Walsh) tone correlations computed on REAL decoded
-    audio: each doc's waveform is encoded to a PCM16 WAV (stdlib RIFF
-    writer), decoded back executor-side, and correlated against ±1
-    square waves at k = 1, 2, 4 cycles — frequency analysis through
-    the codec seam with ALL-INTEGER weights, so the result is exact
-    int64 and immune to cross-engine libm trig drift (the reason this
-    uses Walsh functions rather than a sinusoidal Goertzel). Any
-    header/endianness/width bug in the codec path breaks the hash.
-
-    Scale: codec work is per-blob inside the Arrow batch loop (blobs
-    never shuffle); the correlation is O(n·K) integer ops per doc."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        decode_wav,
-        synth_wav,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("k", LongType()),
-            StructField("walsh_corr", LongType()),
-        ]
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id in pdf["doc_id"].astype("int64"):
-                _, v = decode_wav(synth_wav(int(doc_id)))
-                n = len(v)
-                i = np.arange(n, dtype=np.int64)
-                for k in _WALSH_KS:
-                    w = np.where(((2 * k * i) // n) % 2 == 0, 1, -1)
-                    rows.append((int(doc_id), n, k, int((v * w).sum())))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "k", "walsh_corr"]
-            )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    ).mapInPandas(gen, schema).select(
-        "doc_id", "n_samples", F.col("k").cast("int").alias("k"), "walsh_corr"
     )
 
 

@@ -1,12 +1,11 @@
 """North-star extension queries (SURVEY §7.2 M5): deduplication,
-similarity search, text analysis, and multimodal plumbing over the
-``documents`` / ``embeddings`` tables.
+similarity search and text analysis over the ``documents`` /
+``embeddings`` tables (the multimodal queries are in plans/multimodal.py).
 
 These have no counterpart in the reference (it is a telemetry ETL —
 parse_canserver_filtered_log.py decodes CAN frames, nothing touches
 text or vectors); they are the training-data-pipeline surface a 100 TB
-engine needs. Every query is pure DataFrame/Catalyst code — the only
-Python UDF in this module is the clearly-marked multimodal decode stub.
+engine needs. Every query is pure DataFrame/Catalyst code.
 
 Scale design, per query family:
 - exact dedup: one hash-groupBy shuffle on a 16-byte key; map-side
@@ -31,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import hashing, text, vectors
-from matt3r_data_ingestion_serverless_spark.operators import multimodal
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -893,121 +891,6 @@ def ns_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return deduped.groupBy("source").agg(F.count("*").alias("n_docs_kept"))
 
 
-# ---------------------------------------------------------------------------
-# multimodal plumbing
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "ns_multimodal_blob_meta",
-    sql="""
-SELECT doc_id,
-       'application/x-' || source AS mime,
-       octet_length(encode(text)) AS n_bytes,
-       md5(text) AS checksum
-FROM documents
-""",
-)
-def ns_multimodal_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opaque-binary multimodal column + typed metadata: the blob is the
-    UTF-8 payload (stand-in for image/audio bytes — the container has no
-    codec libs), metadata is (mime, n_bytes, checksum). The binary
-    column itself is never shipped to the driver; only metadata is."""
-    docs = multimodal.with_blob(spread(load_table(spark, sf_dir, "documents")))
-    return docs.select(
-        "doc_id",
-        "mime",
-        F.octet_length("text").cast("long").alias("n_bytes"),
-        F.md5("text").alias("checksum"),
-    )
-
-
-def _frame_features_sql() -> str:
-    n_frames, dim = multimodal.N_FRAMES, multimodal.FEATURE_DIM
-    at = "a[(f * 7 + {k} * 3) % len(a) + 1] / 256.0"
-    feats = [at.format(k=k) for k in range(dim)]
-    s = " + ".join(feats)
-    sq = " + ".join(f"({x}) * ({x})" for x in feats)
-    return f"""
-WITH t AS (
-  SELECT doc_id,
-         list_transform(string_split(text, ''), c -> unicode(c)) AS a
-  FROM documents
-)
-SELECT doc_id,
-       CAST(f AS INT) AS frame_idx,
-       CAST(len(a) AS BIGINT) AS n_bytes,
-       round({s}, 6) AS feat_sum,
-       round(sqrt({sq}), 6) AS feat_norm
-FROM t, unnest(range(0, {n_frames})) u(f)
-"""
-
-
-@register("ns_multimodal_frame_features", sql=_frame_features_sql())
-def ns_multimodal_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sample + feature-extract over the binary column via
-    mapInPandas (Arrow-batched). The decode step is a deterministic fake
-    (real codecs unavailable here — see multimodal.decode_image); the
-    Spark-side plumbing (binary schema, batch iteration, 1→N row
-    expansion, typed feature array output) is the real thing.
-
-    Full oracle (upgraded from rows-only): the blob is the ASCII
-    payload, so byte values equal code points and the stride-sampled
-    features are exact binary fractions (k/256) — a pure-SQL twin
-    replays the identical gather, hash-checked like any other query."""
-    docs = multimodal.with_blob(spread(load_table(spark, sf_dir, "documents")))
-    feats = multimodal.frame_features(docs.select("doc_id", "blob"))
-    # Project the feature vector to scalar summaries: the driver's result
-    # canonicalizer cannot sort/hash array cells, and shipping the raw
-    # vector to the driver is exactly what a real pipeline avoids anyway.
-    zero = F.lit(0.0)
-    return feats.select(
-        "doc_id",
-        "frame_idx",
-        "n_bytes",
-        F.round(F.aggregate("feature", zero, lambda a, x: a + x), 6).alias("feat_sum"),
-        F.round(F.sqrt(F.aggregate("feature", zero, lambda a, x: a + x * x)), 6).alias(
-            "feat_norm"
-        ),
-    )
-
-
-@register(
-    "ns_multimodal_audio_chunks",
-    sql=f"""
-WITH t AS (
-  SELECT doc_id,
-         list_transform(string_split(text, ''),
-                        c -> (unicode(c) - 128.0) / 128.0) AS a
-  FROM documents WHERE doc_id < 100
-)
-SELECT doc_id,
-       CAST(i AS INT) AS chunk_idx,
-       CAST(len(list_slice(a, i * {multimodal.AUDIO_CHUNK_BYTES} + 1,
-                           (i + 1) * {multimodal.AUDIO_CHUNK_BYTES})) AS BIGINT)
-         AS chunk_bytes,
-       round(list_aggregate(
-               list_transform(list_slice(a, i * {multimodal.AUDIO_CHUNK_BYTES} + 1,
-                                         (i + 1) * {multimodal.AUDIO_CHUNK_BYTES}),
-                              x -> x * x), 'avg'), 6) AS energy
-FROM t, unnest(range(0, greatest(CAST(ceil(len(a) / {multimodal.AUDIO_CHUNK_BYTES}.0)
-                                      AS BIGINT), 1))) u(i)
-""",
-)
-def ns_multimodal_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-style chunking of the binary column: fixed-size windows +
-    per-window mean-square energy via mapInPandas
-    (operators/multimodal.py:audio_chunks). The blob is the UTF-8
-    payload; because the corpus is ASCII, byte values equal code
-    points, which is what lets a pure-SQL oracle replay the identical
-    math (amplitudes are exact binary fractions k/128 — bit-stable on
-    both engines)."""
-    docs = multimodal.with_blob(
-        spread(load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100))
-    )
-    return multimodal.audio_chunks(docs.select("doc_id", "blob"))
-
-
 CONTAINMENT_T = 0.5  # flag when either-direction containment ≥ this
 
 
@@ -1074,40 +957,6 @@ def ns_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.greatest("cont_ab", "cont_ba") >= CONTAINMENT_T)
     )
-
-
-def _resize_sql() -> str:
-    k = multimodal.RESIZE_W * multimodal.RESIZE_H
-    pick = f"ch[(i * n) // {k} + 1]"
-    return f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, '') AS ch, length(text) AS n
-  FROM documents WHERE doc_id < 200
-)
-SELECT doc_id,
-       CAST(n AS BIGINT) AS n_bytes,
-       round(list_sum(list_transform(range(0, {k}),
-             i -> unicode({pick})))::DOUBLE / {k}, 6) AS thumb_mean,
-       md5(array_to_string(list_transform(range(0, {k}), i -> {pick}), ''))
-         AS thumb_hash
-FROM t
-"""
-
-
-@register("ns_multimodal_resize", sql=_resize_sql())
-def ns_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize/thumbnail over the binary column: uniform-stride gather to
-    a fixed {w}×{h} grid via mapInPandas
-    (operators/multimodal.py:resize_thumbnails) — completing the
-    multimodal op set (decode stub, frame-sample, feature-extract,
-    audio-chunk, resize). ASCII payloads again make the gather
-    SQL-replayable byte-for-byte: the oracle recomputes the same
-    strided pick, the same exact /{k} mean, and the md5 of the same
-    byte string."""
-    docs = multimodal.with_blob(
-        spread(load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
-    )
-    return multimodal.resize_thumbnails(docs.select("doc_id", "blob"))
 
 
 @register(

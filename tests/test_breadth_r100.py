@@ -1,101 +1,10 @@
-"""Tests for the decode_image sniff → dispatch seam and the
-mixed-format corpus query (plans/breadth_r100.py)."""
+"""Tests for the z-order, metadata-only aggregation and z-ordered
+silver queries (plans/breadth_r100.py)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
-
-from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-    _png_pixels,
-    decode_image,
-    decode_ppm,
-    decode_png,
-    sniff_format,
-    synth_png,
-    synth_ppm,
-    synth_wav,
-)
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r100 import (
-    mm_mixed_format_decode,
-)
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_sniff_format_magic_bytes():
-    assert sniff_format(synth_ppm(4)) == "ppm"
-    assert sniff_format(synth_png(5)) == "png"
-    assert sniff_format(synth_wav(6)) == "wav"
-    assert sniff_format(b"\xff\xd8\xff\xe0" + b"\x00" * 16) == "jpeg"
-    assert sniff_format(b"GIF89a" + b"\x00" * 16) == "gif"
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import synth_avi
-
-    assert sniff_format(synth_avi(3)) == "avi"
-    assert sniff_format(b"plain text") == "unknown"
-    assert sniff_format(b"") == "unknown"
-
-
-def test_decode_image_dispatches_by_content():
-    for doc_id in (0, 2, 10):  # even → both formats decodable directly
-        w, h, px = decode_image(synth_ppm(doc_id))
-        ww, hh, pp = decode_ppm(synth_ppm(doc_id))
-        assert (w, h) == (ww, hh) and (px == pp).all()
-    for doc_id in (1, 3, 11):
-        w, h, px = decode_image(synth_png(doc_id))
-        assert (px == _png_pixels(doc_id)).all()
-
-
-def test_decode_image_raises_only_for_external_codecs():
-    # gif now dispatches to a real decoder (operators/gif.py): garbage
-    # after the magic is a loud ValueError, never NotImplementedError
-    with pytest.raises(ValueError):
-        decode_image(b"GIF89a" + b"\x00" * 32)
-    with pytest.raises(NotImplementedError, match="unknown"):
-        decode_image(b"not an image")
-    # wav is sniffable but not an IMAGE decode — stays at the seam
-    with pytest.raises(NotImplementedError, match="wav"):
-        decode_image(synth_wav(1))
-    # jpeg now dispatches to a real decoder: garbage after the magic is
-    # a loud ValueError from the marker walk, never a silent result
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0" + b"\x00" * 32)
-
-
-def test_mixed_format_decode_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        synth_gif,
-        synth_jpeg,
-    )
-
-    rows = mm_mixed_format_decode(spark, SF_SMOKE).collect()
-    docs = {d.doc_id for d in load_table(spark, SF_SMOKE, "documents").collect()}
-    assert {r.doc_id for r in rows} == docs
-    fmts = {r.fmt for r in rows}
-    assert fmts == {"ppm", "png", "jpeg", "gif"}
-    for r in rows[:40]:
-        blob = (synth_ppm, synth_png, synth_jpeg, synth_gif)[r.doc_id % 4](r.doc_id)
-        assert r.fmt == ("ppm", "png", "jpeg", "gif")[r.doc_id % 4]
-        w, h, px = decode_image(blob)
-        v = px.astype(np.int64)
-        flat = v.reshape(-1)
-        assert r.n_pixels == w * h
-        assert (r.sum_r, r.sum_g, r.sum_b) == (
-            int(v[:, :, 0].sum()),
-            int(v[:, :, 1].sum()),
-            int(v[:, :, 2].sum()),
-        )
-        assert r.checksum == int((flat * np.arange(1, flat.size + 1)).sum())
-
-
-def test_mixed_format_decode_oracle_parity(spark):
-    from tests.oracle_harness import compare, duckdb_con
-
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r100 import _MIXED_SQL
-
-    con = duckdb_con(SF_SMOKE)
-    problems = compare(mm_mixed_format_decode(spark, SF_SMOKE), con, _MIXED_SQL)
-    assert problems == []
 
 
 # -- z-order clustering -------------------------------------------------------

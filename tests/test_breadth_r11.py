@@ -102,48 +102,3 @@ def test_hard_negative_is_first_label_mismatch(spark):
         assert (r.hard_negative_id, r.rank_in_pool) == (m, rk), qid
         assert r.negative_label == labels[m]
         assert abs(r.cos_sim - cs) < 1e-12
-
-
-def test_fps_sample_schedule_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r11 import (
-        ns_multimodal_fps_sample,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents").collect()
-    got = defaultdict(list)
-    for r in ns_multimodal_fps_sample(spark, SF_SMOKE).collect():
-        got[r.doc_id].append(r)
-    for d in docs:
-        n_bytes = len(d.text.encode("utf-8"))
-        frame_count = max(n_bytes // 100, 1)
-        stride = max(frame_count // 8, 1)
-        expected = [i for i in range(8) if i * stride < frame_count]
-        rows = sorted(got[d.doc_id], key=lambda r: r.sample_idx)
-        assert [r.sample_idx for r in rows] == expected, d.doc_id
-        for r in rows:
-            fr = r.sample_idx * stride
-            assert r.frame_idx == fr
-            assert r.t_ms == fr * 1000 // 30
-            assert r.byte_offset == (fr * 100) % n_bytes
-
-
-def test_patch_grid_covers_image(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r11 import (
-        ns_image_patch_grid,
-    )
-
-    rows = ns_image_patch_grid(spark, SF_SMOKE).collect()
-    by_doc = defaultdict(list)
-    for r in rows:
-        by_doc[r.doc_id].append(r)
-    docs = load_table(spark, SF_SMOKE, "documents").collect()
-    assert set(by_doc) == {d.doc_id for d in docs}
-    for doc_id, patches in by_doc.items():
-        w = 64 + (doc_id % 8) * 32
-        h = 64 + (doc_id % 5) * 32
-        assert len(patches) == (w // 32) * (h // 32), doc_id
-        idxs = sorted(p.patch_index for p in patches)
-        assert idxs == list(range(len(patches)))  # row-major, dense
-        for p in patches:
-            assert 0 <= p.x0 < p.x1 <= w and 0 <= p.y0 < p.y1 <= h
-            assert (p.x1 - p.x0, p.y1 - p.y0) == (32, 32)

@@ -1,19 +1,11 @@
-"""Brute-force property tests for plans/breadth_r72.py and the PPM codec."""
+"""Brute-force property tests for plans/breadth_r72.py."""
 
 from __future__ import annotations
 
 from collections import defaultdict
 
-import numpy as np
-
-from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-    _ppm_dims,
-    decode_ppm,
-    synth_ppm,
-)
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r72 import (
     _SSJ_HORIZON_US,
-    mm_ppm_image_features,
     streamed_interval_join,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
@@ -43,44 +35,3 @@ def test_streamed_interval_join_matches_batch(spark):
     assert row.min_gap_us == (min(gaps) if gaps else None)
     assert row.max_gap_us == (max(gaps) if gaps else None)
     assert len(gaps) > 0  # the smoke SF must actually exercise the join
-
-
-def test_ppm_codec_roundtrip_exact():
-    for doc_id in (0, 1, 7, 12, 123, 10_001):
-        w, h = _ppm_dims(doc_id)
-        data = synth_ppm(doc_id)
-        assert data.startswith(b"P6\n#")  # comment line is present
-        rw, rh, px = decode_ppm(data)
-        assert (rw, rh) == (w, h)
-        y, x, c = np.ogrid[0:h, 0:w, 0:3]
-        expect = ((doc_id * 7 + y * 13 + x * 5 + c * 29) % 256).astype(np.uint8)
-        assert (px == expect).all()
-
-
-def test_ppm_decoder_handles_arbitrary_header_whitespace():
-    # same payload, hostile header layout: decoder must tokenize, not
-    # assume fixed offsets
-    w, h = 3, 2
-    y, x, c = np.ogrid[0:h, 0:w, 0:3]
-    px = ((y * 13 + x * 5 + c * 29) % 256).astype(np.uint8)
-    data = b"P6 # inline\n  \n3\t2 # dims\n 255\n" + px.tobytes()
-    rw, rh, got = decode_ppm(data)
-    assert (rw, rh) == (w, h)
-    assert (got == px).all()
-
-
-def test_ppm_features_match_python(spark):
-    rows = mm_ppm_image_features(spark, SF_SMOKE).collect()
-    docs = {d.doc_id for d in load_table(spark, SF_SMOKE, "documents").collect()}
-    assert {r.doc_id for r in rows} == docs
-    for r in rows[:20]:
-        w, h, px = decode_ppm(synth_ppm(r.doc_id))
-        v = px.astype(np.int64)
-        flat = v.reshape(-1)
-        assert r.n_pixels == w * h
-        assert (r.sum_r, r.sum_g, r.sum_b) == (
-            int(v[:, :, 0].sum()),
-            int(v[:, :, 1].sum()),
-            int(v[:, :, 2].sum()),
-        )
-        assert r.checksum == int((flat * np.arange(1, flat.size + 1)).sum())

@@ -1,75 +1,15 @@
-"""Property tests for plans/breadth_r76.py and the stdlib PNG codec."""
+"""Property tests for plans/breadth_r76.py."""
 
 from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-import pytest
-
-from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-    _png_dims,
-    _png_pixels,
-    decode_png,
-    synth_png,
-)
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r74 import _BK_K
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r76 import (
     streamed_bottomk_sample,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_png_roundtrip_exact():
-    for doc_id in (0, 1, 3, 11, 123, 99_999):
-        w, h = _png_dims(doc_id)
-        data = synth_png(doc_id)
-        assert data[:8] == b"\x89PNG\r\n\x1a\n"
-        rw, rh, px = decode_png(data)
-        assert (rw, rh) == (w, h)
-        assert (px == _png_pixels(doc_id)).all()
-
-
-def test_png_exercises_all_three_filters():
-    # height ≥ 5 for every doc → rows with filter types 0, 1 AND 2 exist
-    import zlib
-
-    data = synth_png(2)
-    # IDAT payload starts after signature + IHDR chunk (8 + 12+13 bytes)
-    idat_off = 8 + 12 + 13
-    (ln,) = __import__("struct").unpack(">I", data[idat_off : idat_off + 4])
-    raw = zlib.decompress(data[idat_off + 8 : idat_off + 8 + ln])
-    w, h = _png_dims(2)
-    stride = w * 3 + 1
-    filters = {raw[y * stride] for y in range(h)}
-    assert filters == {0, 1, 2}
-
-
-def test_png_crc_corruption_detected():
-    data = bytearray(synth_png(7))
-    data[40] ^= 0xFF  # flip a byte inside the IDAT payload
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(data))
-
-
-def test_png_rejects_unknown_filter():
-    # hand-build a PNG with filter type 4 (Paeth) — honest partial support
-    import struct
-    import zlib
-
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import _png_chunk
-
-    ihdr = struct.pack(">IIBBBBB", 2, 1, 8, 2, 0, 0, 0)
-    row = bytes([4]) + bytes(6)
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(row))
-        + _png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="filter"):
-        decode_png(png)
 
 
 def test_streamed_bottomk_equals_batch(spark):
@@ -82,38 +22,3 @@ def test_streamed_bottomk_equals_batch(spark):
         for r in streamed_bottomk_sample(spark, SF_SMOKE).collect()
     )
     assert got == want
-
-
-def test_png_sub_filter_inverse_is_exact():
-    # adversarial image: values that overflow uint8 deltas repeatedly
-    rng = np.random.RandomState(3)
-    import struct
-    import zlib
-
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import _png_chunk
-
-    w, h = 5, 4
-    px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    lines = []
-    prior = np.zeros(w * 3, dtype=np.uint8)
-    for yy in range(h):
-        row = px[yy].reshape(-1)
-        ft = yy % 3
-        if ft == 0:
-            filt = row
-        elif ft == 1:
-            left = np.concatenate([np.zeros(3, dtype=np.uint8), row[:-3]])
-            filt = row - left
-        else:
-            filt = row - prior
-        lines.append(bytes([ft]) + filt.tobytes())
-        prior = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(b"".join(lines)))
-        + _png_chunk(b"IEND", b"")
-    )
-    _, _, out = decode_png(png)
-    assert (out == px).all()

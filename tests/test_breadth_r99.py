@@ -3,17 +3,10 @@
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 
-import numpy as np
-
-from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-    _wav_samples,
-)
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r99 import (
     _SE_FREQS,
-    _WALSH_KS,
-    mm_wav_walsh_tones,
     ns_dedup_cost_savings,
     ts_spectral_entropy,
 )
@@ -48,21 +41,6 @@ def test_spectral_entropy_matches_python(spark):
     assert math.isclose(row.spectral_entropy_r, h, abs_tol=1e-6)
     assert row.dominant_k == dom
     assert 0.0 <= row.spectral_entropy_r <= 1.0
-
-
-def test_walsh_tones_match_direct_waveform(spark):
-    got = defaultdict(dict)
-    for r in mm_wav_walsh_tones(spark, SF_SMOKE).collect():
-        got[r.doc_id][r.k] = (r.n_samples, r.walsh_corr)
-    docs = [r.doc_id for r in load_table(spark, SF_SMOKE, "documents").collect()]
-    assert set(got) == set(docs)
-    for doc_id in docs[:50]:
-        v = _wav_samples(doc_id)
-        n = len(v)
-        i = np.arange(n, dtype=np.int64)
-        for k in _WALSH_KS:
-            w = np.where(((2 * k * i) // n) % 2 == 0, 1, -1)
-            assert got[doc_id][k] == (n, int((v * w).sum()))
 
 
 def test_dedup_savings_match_cluster_labels(spark):

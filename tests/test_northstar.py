@@ -1,6 +1,6 @@
 """Unit tests for the north-star (M5) primitives beyond the registry
 parity sweep in test_oracle_parity.py: known-answer checks for the
-hashing/text/vector functions and the multimodal mapInPandas plumbing.
+hashing/text/vector functions.
 """
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ import math
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import hashing, text, vectors
-from matt3r_data_ingestion_serverless_spark.operators import multimodal
 
 
 def _one(spark, col):
@@ -79,35 +78,6 @@ def test_srp_band_keys_shape(spark):
     assert got[0]["key"] == "00000000"
     assert got[2]["key"] == "11111111"
     assert all(len(r["key"]) == vectors.SRP_BAND_BITS for r in got)
-
-
-def test_multimodal_frame_features_plumbing(spark):
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, "spark")], ["doc_id", "text"]
-    ).withColumn("source", F.lit("img"))
-    out = multimodal.frame_features(
-        multimodal.with_blob(df).select("doc_id", "blob")
-    ).collect()
-    assert len(out) == 2 * multimodal.N_FRAMES
-    by_doc = {(r["doc_id"], r["frame_idx"]): r for r in out}
-    r = by_doc[(2, 0)]
-    assert r["n_bytes"] == 5
-    blob = b"spark"
-    want = [blob[(0 * 7 + k * 3) % 5] / 256.0 for k in range(multimodal.FEATURE_DIM)]
-    assert list(r["feature"]) == want
-    # determinism across runs
-    out2 = multimodal.frame_features(
-        multimodal.with_blob(df).select("doc_id", "blob")
-    ).collect()
-    assert sorted(map(str, out)) == sorted(map(str, out2))
-
-
-def test_decode_image_is_stubbed():
-    try:
-        multimodal.decode_image(b"\x89PNG")
-        raise AssertionError("expected NotImplementedError")
-    except NotImplementedError:
-        pass
 
 
 def test_rolling_fingerprint_matches_python(spark):

@@ -22,7 +22,7 @@ Honest limits (raise, never silently wrong): progressive (SOF2),
 arithmetic coding, 12-bit precision, sampling factors above 2.
 
 Graded-oracle note: JPEG is lossy, so the oracle-checked corpus
-(plans/breadth_r100.mm_mixed_format_decode) uses images CONSTANT per
+(plans/multimodal.mm_mixed_format_decode) uses images CONSTANT per
 8x8 block with a unit quantization table — for those the round trip is
 bit-exact (a constant block's only nonzero coefficient is the DC term,
 which quantizes exactly to the integer 8*(v-128); every AC quantizes

@@ -9,11 +9,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from matt3r_data_ingestion_serverless_spark.operators import multimodal
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
+
+# decoded-pixel aggregates (multimodal.pixel_stats) per document
+_PIXELS = "n_pixels long, sum_r long, sum_g long, sum_b long, checksum long"
 
 
 # ---------------------------------------------------------------------------
@@ -87,8 +89,6 @@ def ns_multimodal_fps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure integer arithmetic + a static 8-element explode in the scan
     stage: no shuffle at all — the plan is embarrassingly parallel at
     any scale."""
-    from matt3r_data_ingestion_serverless_spark.operators import multimodal
-
     docs = multimodal.with_blob(spread(load_table(spark, sf_dir, "documents")))
     v = docs.select(
         "doc_id",
@@ -233,6 +233,9 @@ def ns_multimodal_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+AUDIO_CHUNK_BYTES = 256  # stand-in for a fixed-duration PCM window
+
+
 @register(
     "ns_multimodal_audio_chunks",
     sql=f"""
@@ -244,33 +247,51 @@ WITH t AS (
 )
 SELECT doc_id,
        CAST(i AS INT) AS chunk_idx,
-       CAST(len(list_slice(a, i * {multimodal.AUDIO_CHUNK_BYTES} + 1,
-                           (i + 1) * {multimodal.AUDIO_CHUNK_BYTES})) AS BIGINT)
+       CAST(len(list_slice(a, i * {AUDIO_CHUNK_BYTES} + 1,
+                           (i + 1) * {AUDIO_CHUNK_BYTES})) AS BIGINT)
          AS chunk_bytes,
        round(list_aggregate(
-               list_transform(list_slice(a, i * {multimodal.AUDIO_CHUNK_BYTES} + 1,
-                                         (i + 1) * {multimodal.AUDIO_CHUNK_BYTES}),
+               list_transform(list_slice(a, i * {AUDIO_CHUNK_BYTES} + 1,
+                                         (i + 1) * {AUDIO_CHUNK_BYTES}),
                               x -> x * x), 'avg'), 6) AS energy
-FROM t, unnest(range(0, greatest(CAST(ceil(len(a) / {multimodal.AUDIO_CHUNK_BYTES}.0)
+FROM t, unnest(range(0, greatest(CAST(ceil(len(a) / {AUDIO_CHUNK_BYTES}.0)
                                       AS BIGINT), 1))) u(i)
 """,
 )
 def ns_multimodal_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-style chunking of the binary column: fixed-size windows +
-    per-window mean-square energy via mapInPandas
-    (operators/multimodal.py:audio_chunks). The blob is the UTF-8
-    payload; because the corpus is ASCII, byte values equal code
-    points, which is what lets a pure-SQL oracle replay the identical
-    math (amplitudes are exact binary fractions k/128 — bit-stable on
-    both engines)."""
+    per-window mean-square energy — the segment-then-featurize pass a
+    speech pipeline runs before transcription/VAD. Bytes stand in for
+    PCM samples, centred to signed amplitude; a blob shorter than one
+    window still yields one chunk. The blob is the UTF-8 payload;
+    because the corpus is ASCII, byte values equal code points, which
+    is what lets a pure-SQL oracle replay the identical math
+    (amplitudes are exact binary fractions k/128 — bit-stable on both
+    engines)."""
+
+    def chunks(doc_id, blob):
+        import numpy as np
+
+        a = (np.frombuffer(blob, dtype=np.uint8) - 128.0) / 128.0
+        for i in range(max(1, -(-len(a) // AUDIO_CHUNK_BYTES))):
+            seg = a[i * AUDIO_CHUNK_BYTES : (i + 1) * AUDIO_CHUNK_BYTES]
+            yield doc_id, i, len(seg), round(float(np.mean(seg * seg)), 6)
+
     docs = multimodal.with_blob(
         spread(load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100))
     )
-    return multimodal.audio_chunks(docs.select("doc_id", "blob"))
+    return multimodal.per_doc(
+        docs.select("doc_id", "blob"),
+        "doc_id long, chunk_idx int, chunk_bytes long, energy double",
+        chunks,
+    )
+
+
+RESIZE_W, RESIZE_H = 8, 4  # thumbnail grid (stand-in for pixel dims)
 
 
 def _resize_sql() -> str:
-    k = multimodal.RESIZE_W * multimodal.RESIZE_H
+    k = RESIZE_W * RESIZE_H
     pick = f"ch[(i * n) // {k} + 1]"
     return f"""
 WITH t AS (
@@ -289,18 +310,38 @@ FROM t
 
 @register("ns_multimodal_resize", sql=_resize_sql())
 def ns_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize/thumbnail over the binary column: uniform-stride gather to
-    a fixed {w}×{h} grid via mapInPandas
-    (operators/multimodal.py:resize_thumbnails) — completing the
-    multimodal op set (decode stub, frame-sample, feature-extract,
-    audio-chunk, resize). ASCII payloads again make the gather
-    SQL-replayable byte-for-byte: the oracle recomputes the same
-    strided pick, the same exact /{k} mean, and the md5 of the same
-    byte string."""
+    """Resize/thumbnail over the binary column: uniform-stride gather of
+    w·h bytes (index floor(i·n/(w·h))) to a fixed 8×4 grid, the
+    constant-size derivative a multimodal pipeline stores next to the
+    full-resolution object — completing the multimodal op set (decode
+    stub, frame-sample, feature-extract, audio-chunk, resize). ASCII
+    payloads again make the gather SQL-replayable byte-for-byte: the
+    oracle recomputes the same strided pick, the same exact /32 mean,
+    and the md5 of the same byte string."""
+    k = RESIZE_W * RESIZE_H
+
+    def thumbnail(doc_id, blob):
+        import hashlib
+
+        import numpy as np
+
+        a = np.frombuffer(blob, dtype=np.uint8)
+        thumb = a[(np.arange(k) * len(a)) // k]
+        yield (
+            doc_id,
+            len(a),
+            round(float(thumb.mean()), 6),
+            hashlib.md5(thumb.tobytes()).hexdigest(),
+        )
+
     docs = multimodal.with_blob(
         spread(load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
     )
-    return multimodal.resize_thumbnails(docs.select("doc_id", "blob"))
+    return multimodal.per_doc(
+        docs.select("doc_id", "blob"),
+        "doc_id long, n_bytes long, thumb_mean double, thumb_hash string",
+        thumbnail,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -327,7 +368,7 @@ FROM v GROUP BY doc_id
 )
 def mm_wav_roundtrip_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal REAL-codec path (operators/multimodal.py:synth_wav/
-    decode_wav/wav_features): each document's deterministic PCM16
+    decode_wav): each document's deterministic PCM16
     waveform is encoded as a genuine RIFF/WAVE file and decoded back
     through the stdlib ``wave`` codec inside the Arrow batch loop; the
     graded columns are integer-exact aggregates of the DECODED samples.
@@ -340,13 +381,22 @@ def mm_wav_roundtrip_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map-side — blobs are encoded, decoded, and reduced to
     7 ints inside the executor batch; nothing but the feature rows ever
     shuffles."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        wav_features,
-    )
-    from matt3r_data_ingestion_serverless_spark.sources.tables import spread
+
+    def wav_stats(doc_id):
+        import numpy as np
+
+        sr, v = multimodal.decode_wav(multimodal.synth_wav(doc_id))
+        checksum = int((v * np.arange(1, len(v) + 1, dtype=np.int64)).sum())
+        duration_us = len(v) * 1_000_000 // sr
+        yield doc_id, len(v), duration_us, int(v.sum()), int(v.min()), int(v.max()), checksum
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return wav_features(docs)
+    return multimodal.per_doc(
+        docs.select("doc_id"),
+        "doc_id long, n_samples long, duration_us long, sum_v long, min_v long, "
+        "max_v long, checksum long",
+        wav_stats,
+    )
 
 
 _WALSH_KS = (1, 2, 4)
@@ -389,44 +439,22 @@ def mm_wav_walsh_tones(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: codec work is per-blob inside the Arrow batch loop (blobs
     never shuffle); the correlation is O(n·K) integer ops per doc."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        decode_wav,
-        synth_wav,
-    )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("k", LongType()),
-            StructField("walsh_corr", LongType()),
-        ]
-    )
-
-    def gen(batches):
+    def walsh(doc_id):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for doc_id in pdf["doc_id"].astype("int64"):
-                _, v = decode_wav(synth_wav(int(doc_id)))
-                n = len(v)
-                i = np.arange(n, dtype=np.int64)
-                for k in _WALSH_KS:
-                    w = np.where(((2 * k * i) // n) % 2 == 0, 1, -1)
-                    rows.append((int(doc_id), n, k, int((v * w).sum())))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_samples", "k", "walsh_corr"]
-            )
+        _, v = multimodal.decode_wav(multimodal.synth_wav(doc_id))
+        n = len(v)
+        i = np.arange(n, dtype=np.int64)
+        for k in _WALSH_KS:
+            w = np.where(((2 * k * i) // n) % 2 == 0, 1, -1)
+            yield doc_id, n, k, int((v * w).sum())
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    ).mapInPandas(gen, schema).select(
-        "doc_id", "n_samples", F.col("k").cast("int").alias("k"), "walsh_corr"
+    return multimodal.per_doc(
+        docs.repartition(spark.sparkContext.defaultParallelism),
+        "doc_id long, n_samples long, k int, walsh_corr long",
+        walsh,
     )
 
 
@@ -460,7 +488,7 @@ FROM p GROUP BY doc_id
 def mm_ppm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal REAL-codec path, image sibling of
     mm_wav_roundtrip_features (operators/multimodal.py:synth_ppm/
-    decode_ppm/ppm_features): each document's deterministic RGB24 image
+    decode_ppm/pixel_stats): each document's deterministic RGB24 image
     is written as a genuine P6 PPM — ASCII header with a comment line,
     maxval, raw payload — and decoded back through a real header
     tokenizer inside the Arrow batch loop; the graded columns are
@@ -470,12 +498,13 @@ def mm_ppm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure map-side — blobs are encoded, decoded, and reduced to
     6 ints inside the executor batch; only feature rows shuffle."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        ppm_features,
-    )
+
+    def ppm(doc_id):
+        _w, _h, px = multimodal.decode_ppm(multimodal.synth_ppm(doc_id))
+        yield doc_id, *multimodal.pixel_stats(px)
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return ppm_features(docs)
+    return multimodal.per_doc(docs.select("doc_id"), f"doc_id long, {_PIXELS}", ppm)
 
 
 _PNG_SQL = """
@@ -503,7 +532,7 @@ FROM p GROUP BY doc_id
 @register("mm_png_image_features", _PNG_SQL)
 def mm_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal real-codec path, COMPRESSED sibling (operators/
-    multimodal.py:synth_png/decode_png/png_features): each document's
+    multimodal.py:synth_png/decode_png/pixel_stats): each document's
     deterministic RGB24 image round-trips through a genuine PNG —
     zlib-DEFLATE-compressed IDAT, CRC-32-verified chunks, and per-row
     filter types rotating None/Sub/Up that the decoder must INVERT in
@@ -517,12 +546,13 @@ def mm_png_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure map-side — encode, decode, and reduce all inside the
     executor Arrow batch loop; only the 6-int feature rows shuffle."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        png_features,
-    )
+
+    def png(doc_id):
+        _w, _h, px = multimodal.decode_png(multimodal.synth_png(doc_id))
+        yield doc_id, *multimodal.pixel_stats(px)
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return png_features(docs)
+    return multimodal.per_doc(docs.select("doc_id"), f"doc_id long, {_PIXELS}", png)
 
 
 # ---------------------------------------------------------------------------
@@ -582,15 +612,16 @@ FROM p GROUP BY doc_id
 @register("mm_mixed_format_decode", _MIXED_SQL)
 def mm_mixed_format_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heterogeneous-container ingest (operators/multimodal.py:
-    sniff_format/decode_image/mixed_image_features): every blob is
+    sniff_format/decode_image/pixel_stats): every blob is
     routed by MAGIC BYTES alone — doc_id % 4 arrives as P6 PPM, PNG
     (zlib + CRC-32 + scanline filters), baseline JPEG (marker walk +
     canonical Huffman + dequant + IDCT, operators/jpeg.py; the corpus
     images are constant per 8x8 block with a unit quant table, the
     regime where the lossy codec is bit-exact), or GIF (variable-width
     LZW + palette, operators/gif.py — lossless, so no special regime),
-    and decode_image picks the decoder with no per-row format hint. The graded columns are
-    integer-exact aggregates of the DECODED pixels of all three formats
+    and decode_image picks the decoder with no per-row format hint.
+    The graded columns are integer-exact aggregates of the DECODED
+    pixels of all four formats
     in one pass; the oracle regenerates each format's pixels
     arithmetically, so a mis-sniff (wrong decoder per row) or any
     decode bug in any branch breaks the hash.
@@ -599,12 +630,22 @@ def mm_mixed_format_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor Arrow batch; only 7-column feature rows shuffle. This is
     the shape a 100 TB multimodal crawl needs: one scan over a mixed
     object corpus, no per-format shuffle split."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        mixed_image_features,
+    synths = (
+        multimodal.synth_ppm,
+        multimodal.synth_png,
+        multimodal.synth_jpeg,
+        multimodal.synth_gif,
     )
 
+    def mixed(doc_id):
+        blob = synths[doc_id % 4](doc_id)
+        _w, _h, px = multimodal.decode_image(blob)
+        yield doc_id, multimodal.sniff_format(blob), *multimodal.pixel_stats(px)
+
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return mixed_image_features(docs)
+    return multimodal.per_doc(
+        docs.select("doc_id"), f"doc_id long, fmt string, {_PIXELS}", mixed
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -641,7 +682,7 @@ FROM p GROUP BY doc_id, k
 def mm_video_mjpeg_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MJPEG-in-AVI video decode with IN-SEAM frame sampling
     (operators/video.py + operators/multimodal.py synth_avi /
-    video_frame_summaries): each document arrives as a real AVI (RIFF
+    pixel_stats): each document arrives as a real AVI (RIFF
     chunk walk, avih/strh/strf headers, movi '00dc' frames) whose 3-5
     frames are independent baseline JPEGs in the bit-exact
     constant-block regime; every SECOND frame is decoded (sampled
@@ -656,9 +697,23 @@ def mm_video_mjpeg_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map-side like every codec sibling — container walk,
     frame extraction, JPEG decode and reduction run inside the Arrow
     batch; only 5-column per-frame summary rows shuffle."""
-    from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
-        video_frame_summaries,
-    )
+    every = 2  # decode every second frame
+
+    def frames(doc_id):
+        from matt3r_data_ingestion_serverless_spark.operators.video import decode_video
+
+        blob = multimodal.synth_avi(doc_id)
+        if multimodal.sniff_format(blob) != "avi":
+            raise ValueError(f"doc {doc_id}: synth_avi did not produce an AVI container")
+        _w, _h, nf = multimodal._avi_dims(doc_id)
+        _w, _h, px = decode_video(blob, sample_every=every)
+        for j, frame in enumerate(px):
+            _n, r, g, b, checksum = multimodal.pixel_stats(frame)
+            yield doc_id, j * every, nf, r + g + b, checksum
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return video_frame_summaries(docs, sample_every=2)
+    return multimodal.per_doc(
+        docs.select("doc_id"),
+        "doc_id long, frame_idx int, n_frames int, sum_rgb long, checksum long",
+        frames,
+    )

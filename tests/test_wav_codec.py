@@ -1,6 +1,6 @@
 """operators/multimodal.py WAV seam: a REAL stdlib codec behind the
 decode seam (VERDICT r02 next-step 7) — byte-exact round-trip, header
-honesty, and the Spark featurizer on decoded bytes."""
+honesty, and the Spark query over decoded bytes."""
 
 from __future__ import annotations
 
@@ -16,8 +16,9 @@ from matt3r_data_ingestion_serverless_spark.operators.multimodal import (
     _wav_samples,
     decode_wav,
     synth_wav,
-    wav_features,
 )
+from matt3r_data_ingestion_serverless_spark.plans.multimodal import mm_wav_roundtrip_features
+from tests.conftest import SF_SMOKE
 
 
 @pytest.mark.parametrize("doc_id", [0, 1, 63, 64, 977, 10**9])
@@ -55,11 +56,12 @@ def test_decode_rejects_wrong_format():
 
 
 def test_wav_features_match_numpy_oracle(spark):
-    ids = [0, 5, 17, 100, 511]
-    df = spark.createDataFrame([(i,) for i in ids], "doc_id BIGINT")
-    got = {r.doc_id: r for r in wav_features(df).collect()}
-    assert set(got) == set(ids)
-    for i in ids:
+    from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+
+    got = {r.doc_id: r for r in mm_wav_roundtrip_features(spark, SF_SMOKE).collect()}
+    ids = {r.doc_id for r in load_table(spark, SF_SMOKE, "documents").collect()}
+    assert set(got) == ids
+    for i in sorted(ids)[:64]:
         v = _wav_samples(i)
         r = got[i]
         assert r.n_samples == len(v)

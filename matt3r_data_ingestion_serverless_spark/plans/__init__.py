@@ -17,10 +17,4 @@ from matt3r_data_ingestion_serverless_spark.plans.registry import QUERIES, all_q
 for _mod in pkgutil.iter_modules(__path__):
     importlib.import_module(f"{__name__}.{_mod.name}")
 
-# ts_streamed_bollinger shares the batch operator's oracle, which
-# registers in breadth_r4: attach it once every module has loaded.
-from matt3r_data_ingestion_serverless_spark.plans import telemetry  # noqa: E402
-
-telemetry._attach_streamed_bollinger_oracle()
-
 __all__ = ["QUERIES", "all_queries", "register"]

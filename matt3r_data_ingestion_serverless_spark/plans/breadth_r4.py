@@ -506,10 +506,7 @@ def window_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BOLL_N = 20  # trailing window length
 
-
-@register(
-    "ts_bollinger_breach",
-    sql=f"""
+_BOLL_SQL = f"""
 WITH c AS (
   SELECT user_id, ts, event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents
   FROM events WHERE event_type = 'purchase'
@@ -530,8 +527,10 @@ SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, cents,
        ((n * cents - s1) * (n * cents - s1) * (n - 1) > 4 * n * (n * s2 - s1 * s1))
          AS breach
 FROM w WHERE n >= {_BOLL_N}
-""",
-)
+"""
+
+
+@register("ts_bollinger_breach", sql=_BOLL_SQL)
 def ts_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger-band monitoring over each user's purchase stream: the
     trailing-{n} mean ± 2σ envelope, with the breach decision made in

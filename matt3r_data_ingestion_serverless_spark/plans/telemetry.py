@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.operators.autopilot import ap_transitions
 from matt3r_data_ingestion_serverless_spark.operators.stationary import stationary_intervals
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import _BOLL_SQL
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import _has_nanos_timestamp, load_table
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
@@ -985,10 +986,7 @@ def _bollinger_state_fn(key, pdfs, state):
     )
 
 
-@register(
-    "ts_streamed_bollinger",
-    sql=None,  # set right below — shares the batch operator's oracle
-)
+@register("ts_streamed_bollinger", sql=_BOLL_SQL)
 def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ts_bollinger_breach through the STREAMING engine, graded against
     the IDENTICAL batch oracle: the trailing-window monitor is the
@@ -1040,11 +1038,3 @@ def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_sigma",
         "breach",
     )
-
-
-def _attach_streamed_bollinger_oracle() -> None:
-    from matt3r_data_ingestion_serverless_spark.plans.registry import QUERIES
-
-    fn, _ = QUERIES["ts_streamed_bollinger"]
-    _, batch_sql = QUERIES["ts_bollinger_breach"]
-    QUERIES["ts_streamed_bollinger"] = (fn, batch_sql)

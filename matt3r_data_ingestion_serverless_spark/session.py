@@ -22,8 +22,6 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def _fast_scratch() -> str | None:
     """tmpfs scratch for shuffle spill + streaming WAL commits, when
@@ -72,7 +70,7 @@ def scratch_dir(prefix: str) -> str:
 
 
 def get_spark(app_name: str = "matt3r-dpl-spark", extra_conf: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

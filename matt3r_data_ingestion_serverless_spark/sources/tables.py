@@ -37,7 +37,7 @@ TABLES = (
 # locally it is keyed on (size, mtime) and cached in tmpfs scratch. The
 # threshold keeps every sf0.01/sf0.001 table (correctness gate, tests)
 # on the untouched source files — only bench-scale facts re-chunk.
-_COMPACT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_COMPACT_MIN_ROWS", "80000"))
+_COMPACT_MIN_ROWS = 80_000
 
 
 def _scan_parallelism_deficit(path: str, cores: int) -> bool:

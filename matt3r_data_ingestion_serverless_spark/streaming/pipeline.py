@@ -46,10 +46,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from matt3r_data_ingestion_serverless_spark.operators.merge import (
-    _table_exists,
-    foreach_batch_upsert,
-)
+from matt3r_data_ingestion_serverless_spark.operators.merge import foreach_batch_upsert
 from matt3r_data_ingestion_serverless_spark.sources.canserver import read_canserver_stream
 
 REORDER_WATERMARK = "1.2 seconds"  # MAX_SR, parse_canserver_filtered_log.py:117
@@ -470,13 +467,32 @@ def speed_ap_joined_stream(
 SKETCH_LG_K = 14  # matches plans/curation.py:sketch_hll_rollup
 
 
+def _sketch_version(sketch_dir: str) -> int | None:
+    """Newest complete version of the sketch table: the highest
+    ``v=<n>`` directory whose write job committed (Spark's ``_SUCCESS``
+    marker), or None before the first commit."""
+    if not os.path.isdir(sketch_dir):
+        return None
+    done = [
+        int(d[2:])
+        for d in os.listdir(sketch_dir)
+        if d.startswith("v=") and os.path.isfile(os.path.join(sketch_dir, d, "_SUCCESS"))
+    ]
+    return max(done, default=None)
+
+
 def _sketch_merge_sink(sketch_dir: str, lg_k: int):
     """foreachBatch body: sketch the batch's term vocabulary per source,
     then MERGE into the at-rest sketch table via hll_union — the batch
     is scanned once and never again; the table stays K rows × ~2^lg_k
     bytes regardless of corpus size. Idempotent only at the table level
     (re-delivering a batch double-counts nothing: HLL registers are
-    max-combine, so re-unioning the same items is a no-op)."""
+    max-combine, so re-unioning the same items is a no-op).
+
+    Each merge writes a new version directory next to the one it read,
+    and older versions are dropped only after that write committed: a
+    write that fails half-way leaves the last committed table in place
+    for the replayed batch to merge into."""
     from matt3r_data_ingestion_serverless_spark.functions import text as textfns
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
@@ -488,16 +504,20 @@ def _sketch_merge_sink(sketch_dir: str, lg_k: int):
             .groupBy("source")
             .agg(F.hll_sketch_agg("term", F.lit(lg_k)).alias("sk"))
         )
-        if _table_exists(spark, sketch_dir):
-            old = spark.read.parquet(sketch_dir)
+        version = _sketch_version(sketch_dir)
+        if version is not None:
+            old = spark.read.parquet(os.path.join(sketch_dir, f"v={version}"))
             new = (
                 old.unionByName(new)
                 .groupBy("source")
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
-        # the union reads sketch_dir: cut the lineage before the
-        # overwrite deletes the files it reads
-        new.localCheckpoint(eager=True).write.mode("overwrite").parquet(sketch_dir)
+        latest = f"v={0 if version is None else version + 1}"
+        # overwrite clears only what a failed attempt left in this version
+        new.write.mode("overwrite").parquet(os.path.join(sketch_dir, latest))
+        for d in os.listdir(sketch_dir):
+            if d.startswith("v=") and d != latest:
+                shutil.rmtree(os.path.join(sketch_dir, d))
 
     return _sink
 
@@ -537,7 +557,7 @@ def sketch_estimates(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """Per-source + global distinct-term estimates from the materialized
     sketch table — the query side of run_sketch_rollup_pipeline, same
     output shape as plans/curation.py:sketch_hll_rollup."""
-    sk = spark.read.parquet(sketch_dir)
+    sk = spark.read.parquet(os.path.join(sketch_dir, f"v={_sketch_version(sketch_dir)}"))
     per = sk.select(
         "source", F.hll_sketch_estimate("sk").cast("long").alias("est_distinct_terms")
     )

@@ -285,12 +285,16 @@ def test_stationary_sessions_stream_schema(spark, dirs):
     assert s["n_samples"] == 5 and s["end_us"] - s["start_us"] >= 4_000_000
 
 
-def test_streamed_sketch_rollup_matches_batch(spark, tmp_path):
+def test_streamed_sketch_rollup_matches_batch(spark, tmp_path, monkeypatch):
     """Sketch table materialized incrementally by the stream == sketch
     built in one batch pass: HLL registers are max-combine, so merging
     per-batch sketches over a partition of the corpus is exact w.r.t.
     the one-shot sketch — including across a second pipeline run that
-    folds new files into the existing table."""
+    folds new files into the existing table, and whose first attempt
+    fails in the middle of writing the table."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from matt3r_data_ingestion_serverless_spark.functions import text as textfns
     from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
     from tests.conftest import SF_CORRECTNESS
@@ -306,9 +310,27 @@ def test_streamed_sketch_rollup_matches_batch(spark, tmp_path):
     )
     # third chunk arrives later: a NEW pipeline run folds it into the table
     docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode("append").parquet(stream_dir)
+
+    # its first attempt fails in a task of the table write, i.e. after an
+    # overwrite would already have cleared the target
+    def boom(_batches):
+        raise RuntimeError("sketch write failed")
+        yield
+
+    def failing_write(df):
+        return DataFrameWriter(df.mapInPandas(boom, df.schema))
+
+    monkeypatch.setattr(ClassicDataFrame, "write", property(failing_write))
+    with pytest.raises(StreamingQueryException, match="sketch write failed"):
+        pl.run_sketch_rollup_pipeline(
+            spark, stream_dir, sketch_dir, str(tmp_path / "ck1"), max_files_per_trigger=1
+        )
+    monkeypatch.undo()
+    # the rerun replays the failed batch from the checkpoint
     pl.run_sketch_rollup_pipeline(
         spark, stream_dir, sketch_dir, str(tmp_path / "ck1"), max_files_per_trigger=1
     )
+    assert len(os.listdir(sketch_dir)) == 1  # superseded versions are dropped
 
     streamed = {
         r["source"]: r["est_distinct_terms"]
@@ -639,6 +661,61 @@ def test_drain_topology_failed_leg_stops_every_stream(spark, dirs, tmp_path, mon
     monkeypatch.undo()
     counts = drain_topology(spark, dirs["raw"], root)
     assert counts["autopilot_events"] == 1
+
+
+@pytest.mark.parametrize("leg", ["silver", "gold_stationary"])
+def test_sweep_replayed_after_its_sink_wrote_reaches_the_same_tables(
+    spark, dirs, tmp_path, monkeypatch, leg
+):
+    """A sweep killed after a sink has written its batch, but before the
+    batch is committed, replays that batch on the next sweep: the
+    insert-only sinks add nothing twice, so every zone ends equal to an
+    uninterrupted twin's."""
+    from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
+        drain_topology,
+        topology_paths,
+    )
+
+    root, twin_root = str(tmp_path / "topo"), str(tmp_path / "twin")
+    p, twin = topology_paths(root), topology_paths(twin_root)
+    real_sink = pl.foreach_batch_upsert
+    killed = []
+
+    def sink_then_kill(target_dir, keys, partition_cols=None):
+        sink = real_sink(target_dir, keys, partition_cols)
+        if target_dir != p[leg]:
+            return sink
+
+        def _sink(batch_df, batch_id):
+            before = len(_rows(spark, target_dir))
+            sink(batch_df, batch_id)
+            if not killed and len(_rows(spark, target_dir)) > before:
+                killed.append(batch_id)
+                raise RuntimeError("killed after the sink wrote")
+
+        return _sink
+
+    monkeypatch.setattr(pl, "foreach_batch_upsert", sink_then_kill)
+    for k in range(len(_DROPS)):
+        _land_drop(dirs, k)
+        drain_topology(spark, dirs["raw"], twin_root)
+        try:
+            drain_topology(spark, dirs["raw"], root)
+        except StreamingQueryException as e:
+            assert "killed after the sink wrote" in str(e)
+            assert not spark.streams.active
+            drain_topology(spark, dirs["raw"], root)  # replays the killed batch
+    assert killed
+    assert not spark.streams.active
+    keys = {
+        "silver": ["device_id", "channel", "ts"],
+        "gold_autopilot": ["device_id", "ts_us", "status"],
+        "gold_stationary": ["device_id", "start_us"],
+    }
+    for zone, key in keys.items():
+        rows = _rows(spark, p[zone])
+        assert rows and rows == _rows(spark, twin[zone]), zone
+        assert not spark.read.parquet(p[zone]).groupBy(*key).count().filter("count > 1").take(1)
 
 
 def test_foreach_batch_upsert_evaluates_each_batch_once(spark, tmp_path):

@@ -621,10 +621,9 @@ def mm_mixed_format_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     LZW + palette, operators/gif.py — lossless, so no special regime),
     and decode_image picks the decoder with no per-row format hint.
     The graded columns are integer-exact aggregates of the DECODED
-    pixels of all four formats
-    in one pass; the oracle regenerates each format's pixels
-    arithmetically, so a mis-sniff (wrong decoder per row) or any
-    decode bug in any branch breaks the hash.
+    pixels of all four formats in one pass; the oracle regenerates
+    each format's pixels arithmetically, so a mis-sniff (wrong decoder
+    per row) or any decode bug in any branch breaks the hash.
 
     Scale: pure map-side — sniff + decode + reduce run inside the
     executor Arrow batch; only 7-column feature rows shuffle. This is

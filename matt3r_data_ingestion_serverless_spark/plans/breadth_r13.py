@@ -1,5 +1,5 @@
-"""Round-4 batch 9: numerical differentiation of irregular telemetry
-and neighborhood-Jaccard link prediction on the near-dup graph.
+"""Round-4 batch 9: numerical differentiation of irregular telemetry,
+peak-over-threshold tail analysis and the SPC control chart.
 """
 
 from __future__ import annotations
@@ -79,118 +79,6 @@ def ts_numerical_derivative(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("c_next").isNotNull()
         & (F.col("t_next") > F.col("t_prev"))
     ).select("user_id", "event_id", "t_us", round6(deriv).alias("deriv_per_day"))
-
-
-# ---------------------------------------------------------------------------
-# link prediction: neighborhood Jaccard over the near-dup graph
-# ---------------------------------------------------------------------------
-
-_LP_MIN_JACCARD = 0.2
-_LP_MIN_COOCCUR = 2
-
-
-def _link_pred_sql() -> str:
-    return f"""
-WITH e0 AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-),
-pairs AS (
-  SELECT a.l_partkey AS part_a, b.l_partkey AS part_b
-  FROM e0 a JOIN e0 b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= {_LP_MIN_COOCCUR}
-),
-edges AS (
-  SELECT part_a AS src, part_b AS dst FROM pairs
-  UNION SELECT part_b, part_a FROM pairs
-),
-deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src),
-common AS (
-  SELECT e1.src AS u, e2.src AS v, count(*) AS cn
-  FROM edges e1 JOIN edges e2
-    ON e1.dst = e2.dst AND e1.src < e2.src
-  GROUP BY 1, 2
-),
-cand AS (
-  SELECT c.u, c.v, c.cn, du.d AS du, dv.d AS dv
-  FROM common c
-  JOIN deg du ON c.u = du.node
-  JOIN deg dv ON c.v = dv.node
-  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.src = c.u AND e.dst = c.v)
-)
-SELECT u AS part_a, v AS part_b, CAST(cn AS BIGINT) AS common_neighbors,
-       {round6_sql("CAST(cn AS DOUBLE) / (du + dv - cn)")} AS nbr_jaccard
-FROM cand
-WHERE CAST(cn AS DOUBLE) / (du + dv - cn) >= {_LP_MIN_JACCARD}
-"""
-
-
-@register("graph_link_prediction", sql=_link_pred_sql())
-def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction by neighborhood Jaccard over the part
-    CO-PURCHASE graph (parts sharing >= 2 distinct orders): for
-    NON-adjacent part pairs sharing co-purchase neighbours, score
-    |N(u)∩N(v)|/|N(u)∪N(v)| — the classic "triangle-closing"
-    recommender candidate generator (Amazon's people-also-bought).
-
-    The r07 version ran this over the MinHash-LSH near-dup graph and
-    was VACUOUS AT EVERY SF (r08 finding): LSH banding recovers dup
-    clusters as complete cliques, so every wedge's endpoints are
-    already adjacent and the non-adjacency anti-join leaves zero
-    candidates structurally — no threshold can fix a graph whose
-    triangles always close. Co-purchase edges carry no such closure, so
-    the query grades non-trivial rows at sf0.01/sf0.1/sf1 (2076 / 1390
-    / 161 measured).
-
-    Shape: per-order part pairs from ONE equi-self-join on l_orderkey
-    (per-key fan-out bounded by lines-per-order, a constant ≤ C(7,2));
-    the >= 2-order HAVING makes the edge list collision-sparse (~4k
-    edges at every SF); common neighbours come from one self-join of
-    that edge list on the shared endpoint, degrees broadcast back,
-    existing edges anti-joined away. Work is Σ deg² over a sparse
-    graph. The Jaccard |N(u)∪N(v)| = du + dv − cn stays exact-integer
-    under the single rounded division."""
-    e0 = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = e0.select("l_orderkey", F.col("l_partkey").alias("part_a"))
-    b = e0.select("l_orderkey", F.col("l_partkey").alias("part_b"))
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _LP_MIN_COOCCUR)
-        .select("part_a", "part_b")
-    )
-    edges = (
-        pairs.union(pairs.select(F.col("part_b"), F.col("part_a")))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
-    e1 = edges.select(F.col("src").alias("u"), F.col("dst").alias("mid"))
-    e2 = edges.select(F.col("src").alias("v"), F.col("dst").alias("mid"))
-    common = (
-        e1.join(e2, "mid")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("cn"))
-    )
-    cand = (
-        common.join(edges, (common.u == edges.src) & (common.v == edges.dst), "left_anti")
-        .join(F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("du"))), "u")
-        .join(F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))), "v")
-    )
-    jac = F.col("cn").cast("double") / (F.col("du") + F.col("dv") - F.col("cn"))
-    return cand.filter(jac >= _LP_MIN_JACCARD).select(
-        F.col("u").alias("part_a"),
-        F.col("v").alias("part_b"),
-        F.col("cn").cast("long").alias("common_neighbors"),
-        round6(jac).alias("nbr_jaccard"),
-    )
 
 
 # ---------------------------------------------------------------------------

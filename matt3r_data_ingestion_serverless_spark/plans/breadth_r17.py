@@ -256,100 +256,6 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# degree assortativity of the near-dup graph
-# ---------------------------------------------------------------------------
-
-
-def _assortativity_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src),
-de AS (
-  SELECT du.d AS x, dv.d AS y
-  FROM edges e JOIN deg du ON e.src = du.node JOIN deg dv ON e.dst = dv.node
-),
-m AS (
-  SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-  FROM de
-)
-SELECT CAST(n AS BIGINT) AS n_directed_edges,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-            THEN {round6_sql(
-                "CAST(n * sxy - sx * sy AS DOUBLE)"
-                " / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))"
-                " * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))"
-            )} END AS assortativity
-FROM m
-"""
-
-
-@register("graph_assortativity", sql=_assortativity_sql())
-def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the near-dup graph — the Pearson
-    correlation of endpoint degrees over all directed edges (Newman
-    2002): positive = hubs attach to hubs (one mega-dup-cluster
-    forming), negative = hub-and-spoke (template plus variants). A
-    one-number structural health check for the dedup graph, beside
-    PageRank/triangles/components on the same edges.
-
-    Exact int64 degree power sums over the edge list (two broadcast
-    joins of the degree table), one fixed double formula, NULL for
-    degenerate (regular) graphs."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
-    # NO broadcast hints on the degree table: it is one row per node —
-    # corpus-scaled, so a forced broadcast cannot hold at 100 TB (the
-    # graph_kcore_peel r09 fix). The planner still auto-broadcasts under
-    # threshold locally; at scale these become plain shuffle joins.
-    de = (
-        edges.join(
-            deg.select(F.col("node").alias("src"), F.col("d").alias("x")),
-            "src",
-        )
-        .join(
-            deg.select(F.col("node").alias("dst"), F.col("d").alias("y")),
-            "dst",
-        )
-        .select("x", "y")
-    )
-    m = de.agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    vx = n * F.col("sxx") - sx * sx
-    vy = n * F.col("syy") - sy * sy
-    r = (n * F.col("sxy") - sx * sy).cast("double") / (
-        F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double"))
-    )
-    return m.select(
-        n.cast("long").alias("n_directed_edges"),
-        F.when((vx > 0) & (vy > 0), round6(r)).alias("assortativity"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # ecological diversity indices of the corpus mix
 # ---------------------------------------------------------------------------
 

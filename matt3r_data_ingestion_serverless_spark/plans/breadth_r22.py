@@ -1,5 +1,4 @@
-"""Round-4 batch 18: cross-source vocabulary overlap and per-node
-clustering coefficients.
+"""Round-4 batch 18: cross-source vocabulary overlap.
 """
 
 from __future__ import annotations
@@ -87,89 +86,4 @@ def ns_vocab_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         round6(F.col("both").cast("double") / F.least("va", "vb")).alias(
             "containment"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# per-node clustering coefficient over the near-dup graph
-# ---------------------------------------------------------------------------
-
-
-def _clustering_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-e AS (SELECT doc_a AS s, doc_b AS t FROM pairs),
-und AS (SELECT s, t FROM e UNION SELECT t, s FROM e),
-deg AS (SELECT s AS node, count(*) AS d FROM und GROUP BY s),
-tri AS (
-  SELECT e1.s AS a, e1.t AS b, e2.t AS c
-  FROM e e1 JOIN e e2 ON e1.t = e2.s
-  JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t
-),
-per_node AS (
-  SELECT node, count(*) AS t FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) GROUP BY node
-)
-SELECT deg.node AS doc_id, CAST(deg.d AS INT) AS degree,
-       CAST(coalesce(per_node.t, 0) AS BIGINT) AS n_triangles,
-       CASE WHEN deg.d >= 2 THEN {round6_sql(
-           "2.0 * coalesce(per_node.t, 0) / (CAST(deg.d AS DOUBLE) * (deg.d - 1))"
-       )} END AS clustering_coef
-FROM deg LEFT JOIN per_node ON deg.node = per_node.node
-"""
-
-
-@register("graph_clustering_coefficient", sql=_clustering_sql())
-def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node clustering coefficient 2T_v/(d_v(d_v−1)) over the
-    near-dup graph: coefficient ≈ 1 = the node sits in a tight dup
-    CLIQUE (safe to keep one representative), ≈ 0 at degree ≥ 2 = a
-    CHAIN/star (transitive merging would over-collapse distinct docs)
-    — the per-node readout behind ns_dup_clusters' keep-one decisions,
-    refining graph_triangles' global count.
-
-    Triangles enumerate once on canonical a<b<c edges (two single-key
-    joins), each triangle credits its three corners via an explode, and
-    degrees come from the mirrored edge list — no per-node
-    neighborhood materialization. Nodes with degree < 2 have no defined
-    coefficient (NULL)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    und = pairs.union(pairs.select(F.col("t"), F.col("s")))
-    deg = und.groupBy(F.col("s").alias("node")).agg(F.count("*").alias("d"))
-    e1 = pairs.select(F.col("s").alias("a"), F.col("t").alias("b"))
-    e2 = pairs.select(F.col("s").alias("b"), F.col("t").alias("c"))
-    e3 = pairs.select(F.col("s").alias("a3"), F.col("t").alias("c3"))
-    tri = (
-        e1.join(e2, "b")
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .select("a", "b", "c")
-    )
-    corners = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-    )
-    per_node = corners.groupBy("node").agg(F.count("*").alias("t"))
-    j = deg.join(per_node, "node", "left")
-    t = F.coalesce(F.col("t"), F.lit(0))
-    coef = 2.0 * t / (F.col("d").cast("double") * (F.col("d") - 1))
-    return j.select(
-        F.col("node").alias("doc_id"),
-        F.col("d").cast("int").alias("degree"),
-        t.cast("long").alias("n_triangles"),
-        F.when(F.col("d") >= 2, round6(coef)).alias("clustering_coef"),
     )

@@ -1,9 +1,5 @@
-"""Round-2 batch 13 (this run): HITS hubs/authorities in pure integer
-arithmetic, the Hodges–Lehmann shift estimator, and the cumulative
-unique-user curve.
-
-HITS scores renormalize by integer division each half-step, so the
-whole iteration is int64 and engine-exact (SCALE.md §13).
+"""Round-2 batch 13 (this run): the Hodges–Lehmann shift estimator and
+the cumulative unique-user curve.
 """
 
 from __future__ import annotations
@@ -14,124 +10,6 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# HITS (2 iterations) over the directed near-dup graph
-# ---------------------------------------------------------------------------
-
-
-def _hits_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs),
-nodes AS (SELECT DISTINCT node FROM
-          (SELECT s AS node FROM edges UNION SELECT t FROM edges)),
-a1r AS (SELECT t AS node, count(*) * 1000000 AS v FROM edges GROUP BY t),
-a1 AS (SELECT node, (v * 1000000) // (SELECT max(v) FROM a1r) AS v FROM a1r),
-h1r AS (SELECT e.s AS node, sum(a1.v) AS v
-        FROM edges e JOIN a1 ON e.t = a1.node GROUP BY e.s),
-h1 AS (SELECT node, (v * 1000000) // (SELECT max(v) FROM h1r) AS v FROM h1r),
-a2r AS (SELECT e.t AS node, sum(h1.v) AS v
-        FROM edges e JOIN h1 ON e.s = h1.node GROUP BY e.t),
-a2 AS (SELECT node, (v * 1000000) // (SELECT max(v) FROM a2r) AS v FROM a2r),
-h2r AS (SELECT e.s AS node, sum(a2.v) AS v
-        FROM edges e JOIN a2 ON e.t = a2.node GROUP BY e.s),
-h2 AS (SELECT node, (v * 1000000) // (SELECT max(v) FROM h2r) AS v FROM h2r)
-SELECT n.node AS doc_id,
-       CAST(coalesce(ideg.d, 0) AS BIGINT) AS in_deg,
-       CAST(coalesce(odeg.d, 0) AS BIGINT) AS out_deg,
-       CAST(coalesce(a2.v, 0) AS BIGINT) AS auth_micro,
-       CAST(coalesce(h2.v, 0) AS BIGINT) AS hub_micro
-FROM nodes n
-LEFT JOIN (SELECT t, count(*) AS d FROM edges GROUP BY t) ideg ON n.node = ideg.t
-LEFT JOIN (SELECT s, count(*) AS d FROM edges GROUP BY s) odeg ON n.node = odeg.s
-LEFT JOIN a2 ON n.node = a2.node
-LEFT JOIN h2 ON n.node = h2.node
-"""
-
-
-@register("graph_hits_hubs_authorities", _hits_sql())
-def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS (Kleinberg) hubs-and-authorities, two full iterations over
-    the near-dup graph directed low-id → high-id (the citation-style
-    orientation that keeps hubs and authorities distinct — symmetric
-    edges would collapse them). Every half-step renormalizes by the
-    current MAX via TRUE integer division (v·10⁶ // max), so scores
-    stay exact int64 through both iterations — no float ever enters,
-    unlike the classic L2 normalization. Each half-step is one
-    edge-list join + hash agg on the same key (the exchange is reused
-    across steps), the same shape as graph_pagerank; max() is a 1-row
-    broadcast."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    edges = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("s").alias("node"))
-        .union(edges.select("t"))
-        .distinct()
-    )
-
-    def normalize(raw: DataFrame) -> DataFrame:
-        # Checkpoint the half-step's raw scores FIRST: `raw` is consumed
-        # twice (the max subquery and the projection), and each of the
-        # four chained half-steps consumed its predecessor's WHOLE plan
-        # twice more — the returned plan held 178 Exchanges / 96 scans /
-        # 276 aggregates of duplicated subtrees (measured, r10). With
-        # the lazy checkpoint each half-step is one join + one hash agg
-        # over a materialized table: plan size O(steps), the pagerank
-        # treatment. The 1-row max broadcast is bounded at any scale.
-        raw = raw.localCheckpoint(eager=False)
-        mx = raw.agg(F.max("v").alias("mx"))
-        return raw.crossJoin(F.broadcast(mx)).select(
-            "node", F.expr("(v * 1000000) div mx").alias("v")
-        )
-
-    a1 = normalize(
-        edges.groupBy(F.col("t").alias("node")).agg((F.count("*") * 1000000).alias("v"))
-    )
-    h1 = normalize(
-        edges.join(a1, edges.t == a1.node)
-        .groupBy(F.col("s").alias("node2"))
-        .agg(F.sum("v").alias("v"))
-        .withColumnRenamed("node2", "node")
-    )
-    a2 = normalize(
-        edges.join(h1, edges.s == h1.node)
-        .groupBy(F.col("t").alias("node2"))
-        .agg(F.sum("v").alias("v"))
-        .withColumnRenamed("node2", "node")
-    )
-    h2 = normalize(
-        edges.join(a2, edges.t == a2.node)
-        .groupBy(F.col("s").alias("node2"))
-        .agg(F.sum("v").alias("v"))
-        .withColumnRenamed("node2", "node")
-    )
-    ideg = edges.groupBy(F.col("t").alias("node")).agg(F.count("*").alias("in_deg"))
-    odeg = edges.groupBy(F.col("s").alias("node")).agg(F.count("*").alias("out_deg"))
-    out = (
-        nodes.join(ideg, "node", "left")
-        .join(odeg, "node", "left")
-        .join(a2.withColumnRenamed("v", "auth"), "node", "left")
-        .join(h2.withColumnRenamed("v", "hub"), "node", "left")
-    )
-    return out.select(
-        F.col("node").alias("doc_id"),
-        F.coalesce("in_deg", F.lit(0)).cast("long").alias("in_deg"),
-        F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"),
-        F.coalesce("auth", F.lit(0)).cast("long").alias("auth_micro"),
-        F.coalesce("hub", F.lit(0)).cast("long").alias("hub_micro"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # Hodges–Lehmann shift estimator between two daily series

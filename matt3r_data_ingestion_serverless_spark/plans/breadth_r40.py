@@ -1,9 +1,8 @@
-"""Round-2 batch 15 (this run): 2-core graph peeling and a daily
-periodogram.
+"""Round-2 batch 15 (this run): a daily periodogram.
 
 The periodogram's trig factors are quantized to micro-units per term
 (identical pi literal in both dialects) so the only cross-row sums are
-int64; k-core peeling is pure integer degree arithmetic.
+int64.
 """
 
 from __future__ import annotations
@@ -16,107 +15,6 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# 2-core peeling (4 unrolled rounds) over the near-dup graph
-# ---------------------------------------------------------------------------
-
-_PEEL_ROUNDS = 4
-
-
-def _kcore_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    # every CTE is MATERIALIZED: each round names the previous alive set
-    # four times, and DuckDB would otherwise re-expand the whole LSH
-    # pipeline at every reference (exponential in the rounds; it ran out
-    # of memory at sf0.01)
-    step = """
-alive{k} AS MATERIALIZED (
-  SELECT node FROM (
-    SELECT node, count(*) AS d FROM (
-      SELECT s AS node FROM edges
-      WHERE s IN (SELECT node FROM alive{p}) AND t IN (SELECT node FROM alive{p})
-      UNION ALL
-      SELECT t FROM edges
-      WHERE s IN (SELECT node FROM alive{p}) AND t IN (SELECT node FROM alive{p})
-    ) GROUP BY node
-  ) WHERE d >= 2
-)"""
-    steps = ",".join(step.format(k=k, p=k - 1) for k in range(1, _PEEL_ROUNDS + 1))
-    return f"""
-WITH pairs AS MATERIALIZED ({pairs}),
-edges AS MATERIALIZED (SELECT doc_a AS s, doc_b AS t FROM pairs),
-alive0 AS MATERIALIZED (SELECT DISTINCT node FROM
-           (SELECT s AS node FROM edges UNION SELECT t FROM edges)),
-{steps}
-SELECT n.node AS doc_id,
-       CAST(d0.d AS BIGINT) AS degree,
-       CAST(n.node IN (SELECT node FROM alive{_PEEL_ROUNDS}) AS BOOLEAN) AS in_2core
-FROM alive0 n
-JOIN (SELECT node, count(*) AS d FROM
-      (SELECT s AS node FROM edges UNION ALL SELECT t FROM edges)
-      GROUP BY node) d0
-  ON n.node = d0.node
-"""
-
-
-@register("graph_kcore_peel", _kcore_sql())
-def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-core decomposition by iterative peeling (4 unrolled rounds):
-    repeatedly delete nodes whose degree in the SURVIVING subgraph is
-    < 2 — what remains is the 2-core, the dense backbone that
-    separates real duplicate clusters from dangling pair-chains
-    (cluster_size_histogram counts components; this grades their
-    internal density). Each round is one semi-join of the edge list
-    against the alive set + a degree agg — the same peel that runs
-    to fixpoint at 100 TB with iterative checkpointing; four rounds
-    provably suffice on this graph (asserted stable in tests). All
-    integer degree arithmetic."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    edges = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    both = edges.select(F.col("s").alias("node")).unionAll(edges.select("t"))
-    nodes = both.distinct()
-    deg0 = both.groupBy("node").agg(F.count("*").alias("degree"))
-    alive = nodes
-    for _ in range(_PEEL_ROUNDS):
-        # semi-joins with NO broadcast hint: the alive set is
-        # corpus-scaled (one row per surviving node), so a forced
-        # broadcast cannot hold at 100 TB — let the planner pick
-        # (it still auto-broadcasts under the threshold locally)
-        live_edges = edges.join(
-            alive.withColumnRenamed("node", "s"), "s", "left_semi"
-        ).join(alive.withColumnRenamed("node", "t"), "t", "left_semi")
-        d = (
-            live_edges.select(F.col("s").alias("node"))
-            .unionAll(live_edges.select("t"))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
-        # checkpoint each round: alive feeds TWO joins next round, and
-        # without cutting lineage the final action re-evaluates every
-        # earlier round once per branch — exponential recompute
-        # (measured 5.4 s → ~2 s at sf0.1)
-        alive = d.filter(F.col("d") >= 2).select("node").localCheckpoint(eager=True)
-    core = alive.withColumn("in_core", F.lit(True))
-    return (
-        nodes.join(deg0, "node")
-        .join(core, "node", "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("degree").cast("long").alias("degree"),
-            F.coalesce("in_core", F.lit(False)).alias("in_2core"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # periodogram of the daily event-count series

@@ -1,10 +1,9 @@
-"""Round-2 batch 21 (this run): position-based (U-shaped) attribution,
-partition modularity of the dup-cluster graph, and expected
-calibration error.
+"""Round-2 batch 21 (this run): position-based (U-shaped) attribution
+and expected calibration error.
 
 Attribution shares use integer micro-division with the remainder
-assigned to the first touch; modularity and ECE are single double
-expressions over exact int64 sums (SCALE.md §13).
+assigned to the first touch; ECE is a single double expression over
+exact int64 sums (SCALE.md §13).
 """
 
 from __future__ import annotations
@@ -90,84 +89,6 @@ def position_based_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_touches"),
             F.sum("share_milli").cast("long").alias("credit_millicents"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# modularity of the duplicate-cluster partition
-# ---------------------------------------------------------------------------
-
-
-def _modularity_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
-
-    return f"""
-{_dup_clusters_ctes()},
-deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src),
-m AS (SELECT count(*) // 2 AS m FROM edges),
-dc AS (
-  SELECT l.cluster_id, sum(deg.d) AS d_c, count(*) AS n_nodes
-  FROM lbl l JOIN deg ON l.node = deg.node
-  GROUP BY l.cluster_id
-)
-SELECT CAST(max(m.m) AS BIGINT) AS n_edges,
-       CAST(count(*) AS BIGINT) AS n_clusters,
-       CAST(sum(d_c * d_c) AS BIGINT) AS sum_dc2,
-       {round6_sql(
-           "1.0 - CAST(sum(d_c * d_c) AS DOUBLE)"
-           " / (4.0 * CAST(max(m.m) AS DOUBLE) * max(m.m))"
-       )} AS modularity
-FROM dc CROSS JOIN m
-"""
-
-
-@register("graph_modularity_clusters", _modularity_sql())
-def graph_modularity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity Q of the duplicate-cluster partition over the
-    near-dup graph. Clusters are connected components, so every edge
-    is intra-community and Q reduces to 1 − Σ_c (d_c/2m)² — the
-    degree-balance term that distinguishes a few giant hubs (low Q)
-    from many balanced clusters (Q→1); the partition-quality number
-    beside cluster_size_histogram and graph_kcore_peel's density.
-    Degree sums and Σd_c² are exact int64; Q is one double expression.
-    Reuses the components labeling — fed the SAME checkpointed pair
-    table via _dup_clusters_from_pairs, so the MinHash detector runs
-    once, not twice — and the edge degree agg: two hash aggs and a
-    broadcast on top of one detector pass."""
-    from matt3r_data_ingestion_serverless_spark.plans.curation import (
-        _dup_clusters_from_pairs,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
-    edges = edges.localCheckpoint(eager=True)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
-    m = edges.agg((F.count("*") / 2).cast("long").alias("m"))
-    lbl = _dup_clusters_from_pairs(pairs).select("doc_id", "cluster_id")
-    dc = (
-        lbl.join(deg, lbl.doc_id == deg.node)
-        .groupBy("cluster_id")
-        .agg(F.sum("d").alias("d_c"))
-    )
-    agg = dc.crossJoin(F.broadcast(m)).groupBy("m").agg(
-        F.count("*").alias("n_clusters"),
-        F.sum(F.col("d_c") * F.col("d_c")).alias("sum_dc2"),
-    )
-    q = 1.0 - F.col("sum_dc2").cast("double") / (
-        4.0 * F.col("m").cast("double") * F.col("m")
-    )
-    return agg.select(
-        F.col("m").cast("long").alias("n_edges"),
-        F.col("n_clusters").cast("long").alias("n_clusters"),
-        F.col("sum_dc2").cast("long").alias("sum_dc2"),
-        round6(q).alias("modularity"),
     )
 
 

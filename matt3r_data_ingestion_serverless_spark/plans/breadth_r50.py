@@ -1,8 +1,7 @@
-"""Round-2 batch 25 (this run): a weekday seasonal index and the
-open-triad (dedup chaining risk) audit.
+"""Round-2 batch 25 (this run): a weekday seasonal index.
 
-Index shares use cross-multiplied true integer division; triad counts
-come from the degree identity — both engine-exact.
+Index shares use cross-multiplied true integer division, so they are
+engine-exact.
 """
 
 from __future__ import annotations
@@ -72,78 +71,4 @@ def weekday_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_w").cast("long").alias("revenue_cents"),
         idx_int.alias("index_micro"),
         round6(idx_dbl).alias("seasonal_index"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# open triads: near-dup transitivity violations
-# ---------------------------------------------------------------------------
-
-
-def _triads_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-und AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-deg AS (SELECT s, count(*) AS d FROM und GROUP BY s),
-paths AS (SELECT CAST(sum(d * (d - 1)) AS BIGINT) // 2 AS n_paths2 FROM deg),
-tri AS (
-  SELECT count(*) AS n_triangles
-  FROM pairs e1
-  JOIN pairs e2 ON e1.doc_b = e2.doc_a
-  JOIN pairs e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b
-)
-SELECT CAST(p.n_paths2 AS BIGINT) AS n_paths2,
-       CAST(t.n_triangles AS BIGINT) AS n_triangles,
-       CAST(p.n_paths2 - 3 * t.n_triangles AS BIGINT) AS n_open_triads,
-       {round6_sql(
-           "CASE WHEN p.n_paths2 = 0 THEN 0.0"
-           " ELSE 3.0 * t.n_triangles / p.n_paths2 END"
-       )} AS global_clustering
-FROM paths p CROSS JOIN tri t
-"""
-
-
-@register("graph_open_triads", _triads_sql())
-def graph_open_triads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Open-triad audit of the near-dup graph: a~b and b~c with a≁c —
-    exactly where greedy dedup-by-chaining (connected components)
-    merges documents that are NOT mutually similar, so the open-triad
-    count is the transitivity-violation exposure of ns_dup_clusters
-    and the global clustering coefficient (3T / paths₂) its quality
-    score. Paths-of-length-2 come from the degree identity Σd(d−1)/2 —
-    one agg, no path enumeration; only the (already canonical a<b<c)
-    triangle count joins. All exact int64."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    und = pairs.union(pairs.select("doc_b", "doc_a")).toDF("s", "t")
-    deg = und.groupBy("s").agg(F.count("*").alias("d"))
-    paths = deg.agg(
-        (F.sum(F.col("d") * (F.col("d") - 1)) / 2).cast("long").alias("n_paths2")
-    )
-    e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    e2 = pairs.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    e3 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"]).agg(F.count("*").alias("n_triangles"))
-    j = paths.crossJoin(F.broadcast(tri))
-    cc = F.when(F.col("n_paths2") == 0, F.lit(0.0)).otherwise(
-        3.0 * F.col("n_triangles") / F.col("n_paths2")
-    )
-    return j.select(
-        F.col("n_paths2").cast("long").alias("n_paths2"),
-        F.col("n_triangles").cast("long").alias("n_triangles"),
-        (F.col("n_paths2") - 3 * F.col("n_triangles")).cast("long").alias("n_open_triads"),
-        round6(cc).alias("global_clustering"),
     )

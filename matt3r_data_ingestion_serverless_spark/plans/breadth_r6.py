@@ -1,8 +1,7 @@
 """Round-4 batch 2: CDC log apply / time travel, scalable exact heavy
 hitters (Misra–Gries candidates + exact recount), rolling correlation,
 leave-one-out target encoding, the hashing trick, largest-remainder
-apportionment, BFS hop levels over the near-dup graph, and GROUP BY ALL
-surface parity.
+apportionment, and GROUP BY ALL surface parity.
 
 Each is a building block the reference's imperative stages would
 hand-roll (cf. the iterrows loops at infer_autopilot_states.py:80-86 and
@@ -23,7 +22,6 @@ from matt3r_data_ingestion_serverless_spark.functions.hashing import (
     md5_hash64_sql,
 )
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -698,83 +696,6 @@ def apportion_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("seats"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# BFS hop levels over the near-dup graph
-# ---------------------------------------------------------------------------
-
-_BFS_MAX_HOPS = 4
-
-
-def _bfs_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH RECURSIVE pairs AS ({pairs}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-seed AS (SELECT min(src) AS s FROM edges),
-walk(node, lvl) AS (
-  SELECT s, 0 FROM seed WHERE s IS NOT NULL
-  UNION
-  SELECT e.dst, w.lvl + 1
-  FROM walk w JOIN edges e ON e.src = w.node
-  WHERE w.lvl < {_BFS_MAX_HOPS}
-)
-SELECT node AS doc_id, CAST(min(lvl) AS INT) AS hop
-FROM walk GROUP BY node
-"""
-
-
-@register("graph_bfs_levels", sql=_bfs_sql())
-def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BFS hop distance (≤ 4 hops) from the lowest-id document through
-    the near-dup graph — "how far does this duplication neighbourhood
-    extend from a seed?", the traversal primitive behind contamination
-    blast-radius and lineage queries (beside ns_dup_clusters' components
-    and graph_pagerank's scores on the same edge list).
-
-    Spark-first iterative BFS (operators/iterate.py:frontier_loop): the
-    frontier expands by one join-per-level against the localCheckpointed
-    edge list, anti-joined against the visited set so each node is
-    labeled with its FIRST (minimal) level; ≤ 4 rounds of (join +
-    distinct + anti-join), each a bounded shuffle on the frontier —
-    never the whole graph. The oracle is a depth-bounded recursive CTE
-    taking min(level) per node. The seed stays a 1-row DataFrame
-    (cross-join broadcast), so the plan has no driver-side collect.
-    """
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    seed = (
-        edges.agg(F.min("src").alias("node"))
-        .filter(F.col("node").isNotNull())  # empty graph → empty result
-        .withColumn("hop", F.lit(0))
-    )
-
-    def step(frontier: DataFrame, hop: int, seen: DataFrame) -> DataFrame:
-        return (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(seen, "node", "left_anti")
-            .withColumn("hop", F.lit(hop))
-        )
-
-    return frontier_loop(seed, step, _BFS_MAX_HOPS).select(
-        F.col("node").alias("doc_id"), F.col("hop").cast("int").alias("hop")
     )
 
 

@@ -1,9 +1,7 @@
-"""Round-4 batch 13: parallel greedy matching, quantile treatment
-effects, and the gap-constrained followed-by matrix.
+"""Round-4 batch 13: quantile treatment effects and the gap-constrained
+followed-by matrix.
 
-Three operator families: locally-dominant-edge matching over the
-weighted near-dup graph (the Preis / Manne–Bisseling parallel greedy
-that pairs duplicates for merging), per-decile treatment effects on
+Two operator families: per-decile treatment effects on
 the experiment from ab_cuped_adjustment's assignment (distributional
 effects that a mean hides), and the "A followed by B within Δt"
 co-occurrence matrix (sequence mining beyond adjacent transitions).
@@ -15,124 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# locally-dominant-edge greedy matching
-# ---------------------------------------------------------------------------
-
-_MATCH_ROUNDS = 5
-# strict total edge order packed into one BIGINT: heavier first, then
-# (doc_a, doc_b) — doc ids stay < 10^6 at every graded SF
-_ORD_SQL = (
-    "(10000 - CAST(floor(jaccard * 10000 + 0.5) AS BIGINT)) * 1000000000000"
-    " + doc_a * 1000000 + doc_b"
-)
-
-
-def _matching_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    # every CTE is MATERIALIZED: the round-r stages reference their
-    # predecessors up to 3x (dominance joins + the NOT IN pair), and an
-    # inlining planner would otherwise re-evaluate the whole minhash
-    # pipeline 3^rounds times
-    ctes = [
-        f"pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()})",
-        f"e0 AS MATERIALIZED (SELECT doc_a, doc_b, {_ORD_SQL} AS ord FROM pairs)",
-    ]
-    sel = []
-    for r in range(1, _MATCH_ROUNDS + 1):
-        p = r - 1
-        ctes.append(
-            f"""v{r} AS MATERIALIZED (
-  SELECT node, min(ord) AS mo FROM (
-    SELECT doc_a AS node, ord FROM e{p}
-    UNION ALL SELECT doc_b, ord FROM e{p}
-  ) GROUP BY node
-)"""
-        )
-        ctes.append(
-            f"""s{r} AS MATERIALIZED (
-  SELECT e.doc_a, e.doc_b, e.ord FROM e{p} e
-  JOIN v{r} va ON va.node = e.doc_a AND va.mo = e.ord
-  JOIN v{r} vb ON vb.node = e.doc_b AND vb.mo = e.ord
-)"""
-        )
-        ctes.append(
-            f"""m{r} AS MATERIALIZED (SELECT doc_a AS node FROM s{r} UNION SELECT doc_b FROM s{r})"""
-        )
-        ctes.append(
-            f"""e{r} AS MATERIALIZED (
-  SELECT e.* FROM e{p} e
-  WHERE e.doc_a NOT IN (SELECT node FROM m{r})
-    AND e.doc_b NOT IN (SELECT node FROM m{r})
-)"""
-        )
-        sel.append(f"SELECT {r} AS round, doc_a, doc_b FROM s{r}")
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL ".join(sel)
-
-
-@register("graph_local_dominant_matching", sql=_matching_sql())
-def graph_local_dominant_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parallel greedy maximum-weight matching over the near-dup graph
-    via locally dominant edges (Preis; Manne–Bisseling): per round,
-    every edge that is the best-ranked edge of BOTH its endpoints joins
-    the matching, its endpoints leave the graph, repeat. Under a strict
-    total edge order (weight desc, then ids — packed into one BIGINT)
-    the result equals the SEQUENTIAL greedy matching, but each round is
-    fully data-parallel — the standard way to pair up duplicate docs
-    for pairwise merging without a driver-side loop over edges.
-
-    Scale: each round is one groupBy(node) for per-vertex minima, two
-    equi-joins to test dominance, and an anti-join to drop matched
-    endpoints — all frontier-sized shuffles; rounds needed is
-    O(log E) in expectation, here fixed at 5 (both engines compute the
-    identical 5-round prefix, converged or not)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    ordc = (
-        (
-            F.lit(10000) - F.floor(F.col("jaccard") * 10000 + 0.5).cast("long")
-        )
-        * F.lit(1_000_000_000_000)
-        + F.col("doc_a") * 1_000_000
-        + F.col("doc_b")
-    ).alias("ord")
-    edges = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b", ordc)
-        .localCheckpoint(eager=True)
-    )
-
-    def dominant(live: DataFrame, rnd: int) -> DataFrame:
-        ends = live.select(F.col("doc_a").alias("node"), "ord").union(
-            live.select(F.col("doc_b").alias("node"), "ord")
-        )
-        vmin = ends.groupBy("node").agg(F.min("ord").alias("mo"))
-        va = vmin.select(F.col("node").alias("doc_a"), F.col("mo").alias("mo_a"))
-        vb = vmin.select(F.col("node").alias("doc_b"), F.col("mo").alias("mo_b"))
-        return (
-            live.join(va, "doc_a")
-            .join(vb, "doc_b")
-            .filter((F.col("ord") == F.col("mo_a")) & (F.col("ord") == F.col("mo_b")))
-            .select(F.lit(rnd).alias("round"), "doc_a", "doc_b")
-        )
-
-    def step(_picked: DataFrame, rnd: int, seen: DataFrame) -> DataFrame:
-        # every endpoint matched so far leaves the graph
-        matched = seen.select(F.col("doc_a").alias("node")).union(seen.select("doc_b"))
-        live = edges.join(
-            matched.withColumnRenamed("node", "doc_a"), "doc_a", "left_anti"
-        ).join(matched.withColumnRenamed("node", "doc_b"), "doc_b", "left_anti")
-        return dominant(live, rnd + 1)
-
-    return frontier_loop(dominant(edges, 1), step, _MATCH_ROUNDS - 1)
-
 
 # ---------------------------------------------------------------------------
 # quantile treatment effects

@@ -1,12 +1,11 @@
-"""Round-4 batch 15: merge-on-read deletes, k-center coreset
-selection, and bipartiteness checking.
+"""Round-4 batch 15: merge-on-read deletes and k-center coreset
+selection.
 
-Three operator families: equality-delete tombstones on the
+Two operator families: equality-delete tombstones on the
 manifest-tracked lakehouse table (j16 — DELETE without rewriting a
 single data file), farthest-first k-center selection over embeddings
 (the diversity-coreset primitive active learning and exemplar
-selection use), and 2-colorability of the near-dup graph via parity
-BFS (odd-cycle detection).
+selection use).
 """
 
 from __future__ import annotations
@@ -18,7 +17,6 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
     _build_table,
     _final_select,
@@ -181,86 +179,3 @@ def ns_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in picks[1:]:
         out = out.union(p)
     return out
-
-
-# ---------------------------------------------------------------------------
-# bipartiteness (odd-cycle detection) via parity BFS
-# ---------------------------------------------------------------------------
-
-_BIP_HOPS = 6
-
-
-def _bipartite_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    return f"""
-WITH RECURSIVE pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()}),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-seed AS (SELECT min(src) AS s FROM edges),
-walk(node, par, lvl) AS (
-  SELECT s, 0, 0 FROM seed WHERE s IS NOT NULL
-  UNION
-  SELECT e.dst, 1 - w.par, w.lvl + 1
-  FROM walk w JOIN edges e ON e.src = w.node
-  WHERE w.lvl < {_BIP_HOPS}
-)
-SELECT node AS doc_id,
-       max(CASE WHEN par = 0 THEN 1 ELSE 0 END) = 1 AS even_reach,
-       max(CASE WHEN par = 1 THEN 1 ELSE 0 END) = 1 AS odd_reach,
-       max(CASE WHEN par = 0 THEN 1 ELSE 0 END) = 1
-         AND max(CASE WHEN par = 1 THEN 1 ELSE 0 END) = 1 AS odd_cycle_witness
-FROM walk GROUP BY node
-"""
-
-
-@register("graph_bipartite_check", sql=_bipartite_sql())
-def graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-colorability probe of the near-dup component around the lowest
-    doc id: parity BFS (≤ 6 hops) labels each reached node with the
-    path parities that reach it — a node reachable at BOTH parities
-    witnesses an odd cycle, so the component is not bipartite (dup
-    graphs full of triangles fail immediately; a clean
-    mirror-translation corpus would pass). The bounded-hop frontier
-    loop is the same Pregel shape as graph_bfs_levels with (node,
-    parity) as the vertex key.
-
-    Scale: frontier-sized joins per round against the checkpointed
-    edge list; the visited set is keyed (node, parity) so each state
-    expands at most once."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select("doc_b", "doc_a"))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    seed = (
-        edges.agg(F.min("src").alias("node"))
-        .filter(F.col("node").isNotNull())
-        .withColumn("par", F.lit(0))
-    )
-
-    def step(frontier: DataFrame, _hop: int, seen: DataFrame) -> DataFrame:
-        return (
-            frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
-            .select(F.col("e.dst").alias("node"), (1 - F.col("f.par")).alias("par"))
-            .distinct()
-            .join(seen, ["node", "par"], "left_anti")
-        )
-
-    visited = frontier_loop(seed, step, _BIP_HOPS)
-    return visited.groupBy("node").agg(
-        (F.max(F.when(F.col("par") == 0, 1).otherwise(0)) == 1).alias("even_reach"),
-        (F.max(F.when(F.col("par") == 1, 1).otherwise(0)) == 1).alias("odd_reach"),
-        (
-            (F.max(F.when(F.col("par") == 0, 1).otherwise(0)) == 1)
-            & (F.max(F.when(F.col("par") == 1, 1).otherwise(0)) == 1)
-        ).alias("odd_cycle_witness"),
-    ).select(F.col("node").alias("doc_id"), "even_reach", "odd_reach", "odd_cycle_witness")

@@ -1,12 +1,10 @@
-"""Round-4 batch 18: dup-cluster medoids, Dirichlet query-likelihood
-ranking, and a power-law degree fit.
+"""Round-4 batch 18: dup-cluster medoids and Dirichlet query-likelihood
+ranking.
 
-Three operator families: per-cluster medoid election over the near-dup
-components (which copy a dedup pipeline should KEEP), the classical
+Two operator families: per-cluster medoid election over the near-dup
+components (which copy a dedup pipeline should KEEP) and the classical
 language-model retrieval ranker with Dirichlet smoothing (the third
-lexical ranker beside TF-IDF and BM25), and the continuous MLE for a
-power-law exponent over the dup-graph degree distribution (the
-heavy-tail diagnostic for duplication hubs).
+lexical ranker beside TF-IDF and BM25).
 """
 
 from __future__ import annotations
@@ -193,58 +191,4 @@ def search_query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataF
         scored.withColumn("rnk", F.row_number().over(wr))
         .filter(F.col("rnk") <= _QL_TOP_K)
         .select("doc_id", "rnk", round6(F.col("score")).alias("ql_score_r"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# power-law exponent MLE over dup-graph degrees
-# ---------------------------------------------------------------------------
-
-
-def _powerlaw_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    return f"""
-WITH pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()}),
-deg AS (
-  SELECT node, count(*) AS d FROM (
-    SELECT doc_a AS node FROM pairs UNION ALL SELECT doc_b FROM pairs
-  ) GROUP BY node
-)
-SELECT count(*) AS n_nodes,
-       max(d) AS max_degree,
-       {round6_sql('1.0 + count(*) / sum(ln(d / 0.5))')} AS alpha_r
-FROM deg
-"""
-
-
-@register("graph_powerlaw_alpha", sql=_powerlaw_sql())
-def graph_powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous power-law exponent MLE (Clauset-Shalizi-Newman, dmin=1)
-    over the near-dup graph's degree distribution:
-    α = 1 + n / Σ ln(dᵢ/(dmin−½)) — the heavy-tail diagnostic that says
-    whether duplication concentrates in hub documents (small α) or
-    spreads evenly (large α), which decides whether dedup should
-    special-case boilerplate hubs.
-
-    Scale: degrees are one groupBy over the mirrored edge list; the MLE
-    is a single aggregate of ln-degrees (round6 absorbs the summation
-    order of the one float sum)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir)
-    deg = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .union(pairs.select("doc_b"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    return deg.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.max("d").alias("max_degree"),
-        round6(
-            1.0 + F.count(F.lit(1)) / F.sum(F.log(F.col("d") / 0.5))
-        ).alias("alpha_r"),
     )

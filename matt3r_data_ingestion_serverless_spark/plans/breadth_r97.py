@@ -1,12 +1,11 @@
-"""Round-4 batch 25: Heaps-law fit over shingles, RLE storage
-estimates, and k-truss edge support.
+"""Round-4 batch 25: Heaps-law fit over shingles and RLE storage
+estimates.
 
-Three operator families: the Heaps'-law exponent fitted to the shingle
+Two operator families: the Heaps'-law exponent fitted to the shingle
 vocabulary-growth curve (the sublinear-vocabulary law that sizes
 tokenizers and dedup indexes ahead of a crawl), run-length-encoding
 effectiveness per column/ordering (the storage-layout estimate behind
-encoding choices), and triangle support per edge with one k-truss peel
-(the cohesive-subgraph primitive a step past triangle counting).
+encoding choices).
 """
 
 from __future__ import annotations
@@ -189,88 +188,4 @@ def storage_rle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("prev_st").isNull() | (F.col("st") != F.col("prev_st")), 1
             ).otherwise(0)
         ).alias("runs_type_sorted"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# k-truss edge support (one peel round)
-# ---------------------------------------------------------------------------
-
-_TRUSS_K = 3  # keep edges in ≥ k-2 = 1 triangle
-
-
-def _ktruss_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    return f"""
-WITH e AS MATERIALIZED (
-  SELECT doc_a AS a, doc_b AS b FROM ({_minhash_lsh_sql().strip()})
-),
-tri AS (
-  -- oriented wedge (a<b<c) closed by (a,c): each triangle found once
-  SELECT e1.a, e1.b, e2.b AS c
-  FROM e e1 JOIN e e2 ON e1.b = e2.a
-  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-),
-sup AS (
-  SELECT a, b, count(*) AS support FROM (
-    SELECT a, b FROM tri
-    UNION ALL SELECT b AS a, c AS b FROM tri
-    UNION ALL SELECT a, c AS b FROM tri
-  ) GROUP BY a, b
-)
-SELECT e.a AS doc_a, e.b AS doc_b,
-       coalesce(s.support, 0) AS n_triangles,
-       coalesce(s.support, 0) >= {_TRUSS_K - 2} AS in_truss
-FROM e LEFT JOIN sup s ON s.a = e.a AND s.b = e.b
-"""
-
-
-@register("graph_ktruss_edges", sql=_ktruss_sql())
-def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge triangle support + the k=3 truss membership flag over the
-    near-dup graph: an edge is in the 3-truss iff it closes at least
-    one triangle — the cohesive-subgraph criterion (Cohen's k-truss)
-    one step past graph_triangles' global count, and the first peel
-    round of the full truss decomposition. Wedges orient a<b<c so each
-    triangle is found exactly once and each of its three edges gets one
-    support credit.
-
-    Scale: the wedge join keys on the shared endpoint and the closing
-    edge is a semi-join-shaped equi-join — the standard oriented
-    triangle enumeration whose fan-out is Σ deg², managed at scale by
-    degree-ordering the orientation (high-degree nodes get few
-    out-edges)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    e = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    e1 = e
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = (
-        e1.join(e2, "b")
-        .join(e3, (F.col("ta") == F.col("a")) & (F.col("tc") == F.col("c")), "left_semi")
-        .select("a", "b", "c")
-    )
-    sup = (
-        tri.select("a", "b")
-        .union(tri.select(F.col("b").alias("a"), F.col("c").alias("b")))
-        .union(tri.select("a", F.col("c").alias("b")))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("support"))
-    )
-    return (
-        e.join(sup, ["a", "b"], "left")
-        .select(
-            F.col("a").alias("doc_a"),
-            F.col("b").alias("doc_b"),
-            F.coalesce("support", F.lit(0)).alias("n_triangles"),
-            (F.coalesce("support", F.lit(0)) >= _TRUSS_K - 2).alias("in_truss"),
-        )
     )

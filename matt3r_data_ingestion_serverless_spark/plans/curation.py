@@ -593,142 +593,6 @@ def stats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# PageRank (fixed iterations) over the near-dup graph
-# ---------------------------------------------------------------------------
-
-_PR_DAMP = 0.85
-_PR_ITERS = 3
-
-
-def _pagerank_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    it = """
-r{k} AS (
-  SELECT e.t AS node,
-         (1 - {d}) / max(n.n) + {d} * sum(r{p}.r / deg.deg) AS r
-  FROM edges e
-  JOIN r{p} ON e.s = r{p}.node
-  JOIN deg ON e.s = deg.s
-  CROSS JOIN n
-  GROUP BY e.t
-)"""
-    iters = ",".join(
-        it.format(k=k, p=k - 1, d=_PR_DAMP) for k in range(1, _PR_ITERS + 1)
-    )
-    return f"""
-WITH pairs AS ({pairs}),
-edges AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-nodes AS (SELECT DISTINCT s AS node FROM edges),
-n AS (SELECT count(*)::DOUBLE AS n FROM nodes),
-deg AS (SELECT s, count(*)::DOUBLE AS deg FROM edges GROUP BY s),
-r0 AS (SELECT node, 1.0 / n.n AS r FROM nodes CROSS JOIN n),
-{iters}
-SELECT node AS doc_id, round(r, 6) AS pagerank
-FROM r{_PR_ITERS}
-"""
-
-
-@register("graph_pagerank", sql=_pagerank_sql())
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank ({it} fixed power iterations, damping {d}) over the
-    near-dup graph: rank the most central documents in each duplicate
-    neighborhood — the canonical-representative signal when min-id
-    (ns_dedup_keep_one) is too arbitrary. Every node here has degree
-    ≥ 1 (the graph IS the pair list), so there is no dangling-mass
-    term.
-
-    Scale: each iteration is one join of the rank vector against the
-    edge list (both hashed on the same key — the exchange is reused)
-    plus a hash agg. Fixed iteration count, deterministic at 6 dp;
-    full convergence at 100 TB pairs with the iterative-checkpoint
-    pattern ns_dup_clusters uses."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    # One checkpointed edge table CARRYING the source degree: the old
-    # shape re-attached deg (broadcast build) and n (crossJoin of a
-    # 1-row agg) inside every iteration, so the 3-iteration plan held
-    # 36 Exchanges / 22 scans and cost ~2.4 s of driver planning alone
-    # (measured). Pre-joining deg once and inlining n as a bounded
-    # 1-value scalar (same arithmetic: Python float division IS IEEE
-    # double division) shrinks each iteration to join + hash-agg —
-    # plan size O(iters), not O(iters · subquery forest).
-    edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("s", "t")
-    deg = edges.groupBy("s").agg(F.count("*").cast("double").alias("deg"))
-    ed = edges.join(deg, "s").localCheckpoint(eager=True)
-    nodes = ed.select(F.col("s").alias("node")).distinct().localCheckpoint(eager=False)
-    n_nodes = nodes.count()  # bounded scalar; materializes the node ckpt
-    r = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
-    for _ in range(_PR_ITERS):
-        r = (
-            ed.join(r, ed.s == r.node)
-            .groupBy(F.col("t").alias("node"))
-            .agg(
-                (
-                    F.lit((1 - _PR_DAMP) / n_nodes)
-                    + _PR_DAMP * F.sum(F.col("r") / F.col("deg"))
-                ).alias("r")
-            )
-        )
-    return r.select(F.col("node").alias("doc_id"), F.round("r", 6).alias("pagerank"))
-
-
-def _triangles_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-e AS (SELECT doc_a AS s, doc_b AS t FROM pairs)
-SELECT e1.s AS a, e1.t AS b, e2.t AS c
-FROM e e1
-JOIN e e2 ON e1.t = e2.s
-JOIN e e3 ON e3.s = e1.s AND e3.t = e2.t
-"""
-
-
-@register("graph_triangles", sql=_triangles_sql())
-def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle enumeration over the near-dup graph (edges canonical
-    a<b, so each triangle lists once as a<b<c) — the clustering-
-    coefficient primitive that separates tight dup cliques from
-    accidental chains.
-
-    Scale: the two joins are on single node keys; with edges
-    pre-partitioned by source the first join is co-located, and the
-    closing-edge probe hits the same partitioning. Degree-ordering
-    (orient edges low-degree → high-degree) keeps worst-case work at
-    O(m^1.5) on skewed graphs — here edges are already canonical."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    e = _pin(ns_dedup_minhash_lsh(spark, sf_dir).select(
-        F.col("doc_a").alias("s"), F.col("doc_b").alias("t")
-    ))
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    return (
-        e1.join(e2, F.col("e1.t") == F.col("e2.s"))
-        .join(
-            e3,
-            (F.col("e3.s") == F.col("e1.s")) & (F.col("e3.t") == F.col("e2.t")),
-        )
-        .select(
-            F.col("e1.s").alias("a"),
-            F.col("e1.t").alias("b"),
-            F.col("e2.t").alias("c"),
-        )
-    )
-
-
 PMI_VOCAB_K = 30  # top-df terms admitted to the co-occurrence matrix
 PMI_MIN_PAIR = 25  # documents containing both terms
 

@@ -5,11 +5,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r13 import (
-    _LP_MIN_JACCARD,
-    graph_link_prediction,
-    ts_numerical_derivative,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r13 import ts_numerical_derivative
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -45,50 +41,6 @@ def test_derivative_matches_python(spark):
     assert set(got) == set(expected)
     for k, v in expected.items():
         assert abs(got[k] - v) < 1e-9, k
-
-
-def test_link_prediction_matches_python(spark):
-    """Brute-force twin on the co-purchase graph (r08 substrate: parts
-    sharing >= 2 distinct orders — the LSH dup graph was a union of
-    cliques, making the non-adjacency anti-join structurally empty)."""
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r13 import (
-        _LP_MIN_COOCCUR,
-    )
-
-    li = load_table(spark, SF_SMOKE, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    ).collect()
-    per_order = defaultdict(set)
-    for r in li:
-        per_order[r.l_orderkey].add(r.l_partkey)
-    weight = defaultdict(int)
-    for parts in per_order.values():
-        ps = sorted(parts)
-        for i, a in enumerate(ps):
-            for b in ps[i + 1 :]:
-                weight[(a, b)] += 1
-    adj = defaultdict(set)
-    for (a, b), w in weight.items():
-        if w >= _LP_MIN_COOCCUR:
-            adj[a].add(b)
-            adj[b].add(a)
-    expected = {}
-    nodes = sorted(adj)
-    for i, u in enumerate(nodes):
-        for v in nodes[i + 1 :]:
-            if v in adj[u]:
-                continue
-            cn = len(adj[u] & adj[v])
-            if cn == 0:
-                continue
-            jac = cn / (len(adj[u]) + len(adj[v]) - cn)
-            if jac >= _LP_MIN_JACCARD:
-                expected[(u, v)] = (cn, _round6(jac))
-    got = {
-        (r.part_a, r.part_b): (r.common_neighbors, r.nbr_jaccard)
-        for r in graph_link_prediction(spark, SF_SMOKE).collect()
-    }
-    assert got == expected and len(got) > 0
 
 
 def test_pot_tail_matches_python(spark):

@@ -93,41 +93,6 @@ def test_matrix_profile_matches_numpy(spark):
         assert {k[1] for k in got if k[0] == et} == set(prof)
 
 
-def test_assortativity_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r17 import (
-        graph_assortativity,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
-    de = [
-        (len(adj[u]), len(adj[w])) for u in adj for w in adj[u]
-    ]
-    r = graph_assortativity(spark, SF_SMOKE).collect()[0]
-    assert r.n_directed_edges == len(de)
-    n = len(de)
-    sx = sum(x for x, _ in de)
-    sy = sum(y for _, y in de)
-    sxy = sum(x * y for x, y in de)
-    sxx = sum(x * x for x, _ in de)
-    syy = sum(y * y for _, y in de)
-    vx, vy = n * sxx - sx * sx, n * syy - sy * sy
-    if vx > 0 and vy > 0:
-        expect = _round6((n * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy)))
-        assert abs(r.assortativity - expect) < 1e-9
-    else:
-        assert r.assortativity is None
-
-
 def test_source_diversity_matches_python(spark):
     from matt3r_data_ingestion_serverless_spark.plans.breadth_r17 import (
         ns_source_diversity,

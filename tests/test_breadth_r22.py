@@ -5,10 +5,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r22 import (
-    graph_clustering_coefficient,
-    ns_vocab_overlap_matrix,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r22 import ns_vocab_overlap_matrix
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -46,29 +43,3 @@ def test_vocab_overlap_matches_python(spark):
                 r.containment - _round6(inter / min(len(vocab[a]), len(vocab[b])))
             ) < 1e-12
     assert set(got) == expected_keys
-
-
-def test_clustering_coefficient_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
-    got = {r.doc_id: r for r in graph_clustering_coefficient(spark, SF_SMOKE).collect()}
-    assert set(got) == set(adj)
-    for v, nbrs in adj.items():
-        tri = sum(1 for u in nbrs for w in nbrs if u < w and w in adj[u]) if nbrs else 0
-        d = len(nbrs)
-        r = got[v]
-        assert (r.degree, r.n_triangles) == (d, tri), v
-        if d >= 2:
-            assert abs(r.clustering_coef - _round6(2.0 * tri / (d * (d - 1)))) < 1e-12
-        else:
-            assert r.clustering_coef is None

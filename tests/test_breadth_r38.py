@@ -7,45 +7,10 @@ from collections import Counter, defaultdict
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r38 import (
     cumulative_unique_users,
-    graph_hits_hubs_authorities,
     hodges_lehmann_shift,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_hits_matches_python(spark):
-    edges = [
-        (r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    ]
-    nodes = sorted({x for e in edges for x in e})
-    out_e = defaultdict(list)
-    in_e = defaultdict(list)
-    for s, t in edges:
-        out_e[s].append(t)
-        in_e[t].append(s)
-
-    def normalize(raw):
-        mx = max(raw.values())
-        return {k: (v * 1000000) // mx for k, v in raw.items()}
-
-    a1 = normalize({v: len(in_e[v]) * 1000000 for v in in_e})
-    h1 = normalize({u: sum(a1[t] for t in out_e[u]) for u in out_e})
-    a2 = normalize({v: sum(h1[s] for s in in_e[v] if s in h1) for v in in_e})
-    # drop zero-valued nodes the engine never materializes
-    a2 = {k: v for k, v in a2.items()}
-    h2 = normalize({u: sum(a2.get(t, 0) for t in out_e[u]) for u in out_e})
-    got = {r.doc_id: r for r in graph_hits_hubs_authorities(spark, SF_SMOKE).collect()}
-    assert set(got) == set(nodes)
-    for v in nodes:
-        r = got[v]
-        assert r.in_deg == len(in_e.get(v, []))
-        assert r.out_deg == len(out_e.get(v, []))
-        assert r.auth_micro == a2.get(v, 0)
-        assert r.hub_micro == h2.get(v, 0)
-    assert max(r.auth_micro for r in got.values()) == 1000000
-    assert max(r.hub_micro for r in got.values()) == 1000000
 
 
 def test_hodges_lehmann_matches_python(spark):

@@ -6,49 +6,16 @@ import math
 from collections import defaultdict
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r40 import (
-    _PEEL_ROUNDS,
     _PGRAM_FREQS,
     _PI,
-    graph_kcore_peel,
     ts_periodogram_daily,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 
 def _round6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def test_kcore_matches_python_and_is_stable(spark):
-    edges = [(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()]
-    nodes = {x for e in edges for x in e}
-    deg0 = defaultdict(int)
-    for s, t in edges:
-        deg0[s] += 1
-        deg0[t] += 1
-    alive = set(nodes)
-    history = []
-    for _ in range(_PEEL_ROUNDS):
-        d = defaultdict(int)
-        for s, t in edges:
-            if s in alive and t in alive:
-                d[s] += 1
-                d[t] += 1
-        alive = {v for v, dd in d.items() if dd >= 2}
-        history.append(set(alive))
-    # fixpoint reached within the unrolled rounds on this graph
-    assert history[-1] == history[-2]
-    got = {r.doc_id: r for r in graph_kcore_peel(spark, SF_SMOKE).collect()}
-    assert set(got) == nodes
-    for v in nodes:
-        r = got[v]
-        assert r.degree == deg0[v]
-        assert r.in_2core == (v in alive)
-    # every 2-core member has original degree >= 2
-    for v in alive:
-        assert got[v].degree >= 2
 
 
 def test_periodogram_matches_python(spark):

@@ -6,12 +6,9 @@ import math
 from collections import defaultdict
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r46 import (
-    graph_modularity_clusters,
     ml_expected_calibration_error,
     position_based_attribution,
 )
-from matt3r_data_ingestion_serverless_spark.plans.curation import ns_dup_clusters
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -53,25 +50,6 @@ def test_position_attribution_matches_and_conserves(spark):
         assert (got[et].n_touches, got[et].credit_millicents) == (n, s)
     # conservation: total credit == 1000x total conversion cents
     assert sum(r.credit_millicents for r in got.values()) == 1000 * sum(conv.values())
-
-
-def test_modularity_matches_python(spark):
-    pairs = [(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()]
-    lbl = {r.doc_id: r.cluster_id for r in ns_dup_clusters(spark, SF_SMOKE).collect()}
-    deg = defaultdict(int)
-    for a, b in pairs:
-        deg[a] += 1
-        deg[b] += 1
-    m = len(pairs)
-    d_c = defaultdict(int)
-    for node, d in deg.items():
-        d_c[lbl[node]] += d
-    sum_dc2 = sum(v * v for v in d_c.values())
-    row = graph_modularity_clusters(spark, SF_SMOKE).collect()[0]
-    assert (row.n_edges, row.n_clusters, row.sum_dc2) == (m, len(d_c), sum_dc2)
-    q = 1.0 - sum_dc2 / (4.0 * m * m)
-    assert abs(row.modularity - _round6(q)) <= 1e-6
-    assert row.modularity < 1.0
 
 
 def test_ece_matches_python_and_bins(spark):

@@ -5,11 +5,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r50 import (
-    graph_open_triads,
-    weekday_seasonal_index,
-)
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r50 import weekday_seasonal_index
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -39,28 +35,3 @@ def test_weekday_index_matches_python(spark):
         assert abs(r.seasonal_index - _round6(idx)) <= 1e-6
         # integer and float forms agree to the milli-cent quantization
         assert abs(r.index_micro / 1e6 - r.seasonal_index) < 1e-3
-
-
-def test_open_triads_match_python(spark):
-    pairs = [(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()]
-    deg = defaultdict(int)
-    eset = set(pairs)
-    for a, b in pairs:
-        deg[a] += 1
-        deg[b] += 1
-    paths2 = sum(d * (d - 1) for d in deg.values()) // 2
-    tris = 0
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-    for a, b in pairs:
-        for c in adj.get(b, ()):
-            if (a, c) in eset:
-                tris += 1
-    row = graph_open_triads(spark, SF_SMOKE).collect()[0]
-    assert (row.n_paths2, row.n_triangles) == (paths2, tris)
-    assert row.n_open_triads == paths2 - 3 * tris
-    assert row.n_open_triads >= 0
-    cc = 0.0 if paths2 == 0 else 3.0 * tris / paths2
-    assert abs(row.global_clustering - _round6(cc)) <= 1e-6
-    assert 0.0 <= row.global_clustering <= 1.0

@@ -18,7 +18,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r6 import (
     apportion_largest_remainder,
     cdc_apply_log,
     cdc_streamed_apply,
-    graph_bfs_levels,
     heavy_hitters_mg_exact,
     ns_feature_hashing,
     ts_rolling_corr,
@@ -134,43 +133,6 @@ def test_apportionment_invariants(spark):
     for r in rows:
         assert r.seats in (r.floor_seats, r.floor_seats + 1)
         assert r.floor_seats == r.cents * 10_000 // total
-
-
-# ---------------------------------------------------------------------------
-# BFS levels vs pure-python BFS on the same edge list
-# ---------------------------------------------------------------------------
-
-
-def test_bfs_levels_match_python_bfs(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    adj: dict[int, set[int]] = {}
-    for a, b in pairs:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    got = {r.doc_id: r.hop for r in graph_bfs_levels(spark, SF_SMOKE).collect()}
-    if not adj:
-        assert got == {}
-        return
-    seed = min(adj)
-    expected = {seed: 0}
-    frontier = [seed]
-    for lvl in range(1, 5):
-        frontier = [
-            n for cur in frontier for n in adj[cur] if n not in expected
-        ]
-        frontier = sorted(set(frontier))
-        for n in frontier:
-            expected[n] = lvl
-        if not frontier:
-            break
-    assert got == expected
 
 
 # ---------------------------------------------------------------------------

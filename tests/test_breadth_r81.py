@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 import math
-from collections import defaultdict
 
 import numpy as np
 
@@ -12,13 +11,9 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import (
     _HAAR_LEVELS,
     _HAAR_SLOTS,
     _KNN_K,
-    _MAX_HOPS,
-    graph_sssp_bounded,
-    graph_topo_longest_path,
     ns_knn_outlier_scores,
     ts_haar_coefficients,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -41,63 +36,6 @@ def test_knn_outlier_matches_numpy_bruteforce(spark):
     }
     assert set(got) == set(want)
     assert all(math.isclose(got[i], want[i], abs_tol=1e-12) for i in got)
-
-
-def _weighted_pairs(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    return [
-        (r.doc_a, r.doc_b, 10001 - int(math.floor(r.jaccard * 10000 + 0.5)))
-        for r in pairs
-    ]
-
-
-def test_sssp_matches_python_bellman_ford(spark):
-    pairs = _weighted_pairs(spark)
-    adj = defaultdict(list)
-    for a, b, w in pairs:
-        adj[a].append((b, w))
-        adj[b].append((a, w))
-    seed = min(adj)
-    best = {seed: 0}
-    frontier = {seed: 0}
-    for _ in range(_MAX_HOPS):
-        nxt = {}
-        for u, du in frontier.items():
-            for v, w in adj[u]:
-                d = du + w
-                if d < best.get(v, float("inf")) and d < nxt.get(v, float("inf")):
-                    nxt[v] = d
-        frontier = {v: d for v, d in nxt.items() if d < best.get(v, float("inf"))}
-        best.update(frontier)
-        if not frontier:
-            break
-    got = {r.doc_id: r.dist for r in graph_sssp_bounded(spark, SF_SMOKE).collect()}
-    assert got == best
-    assert len(got) > 1, "smoke near-dup graph must reach beyond the seed"
-
-
-def test_topo_longest_path_matches_python_dp(spark):
-    pairs = _weighted_pairs(spark)
-    nodes = {a for a, _, _ in pairs} | {b for _, b, _ in pairs}
-    # exact-r-edge DP over the low->high DAG
-    best = {n: (0, 0) for n in nodes}  # node -> (max_dist, max_depth)
-    frontier = {n: 0 for n in nodes}
-    for lvl in range(1, _MAX_HOPS + 1):
-        nxt = defaultdict(int)
-        for a, b, w in pairs:
-            if a in frontier:
-                nxt[b] = max(nxt[b], frontier[a] + w)
-        if not nxt:
-            break
-        for n, d in nxt.items():
-            best[n] = (max(best[n][0], d), lvl)
-        frontier = dict(nxt)
-    got = {
-        r.doc_id: (r.max_dist, r.max_depth)
-        for r in graph_topo_longest_path(spark, SF_SMOKE).collect()
-    }
-    assert got == best
-    assert any(d > 0 for d, _ in got.values()), "DAG must contain at least one edge"
 
 
 def test_haar_details_match_python(spark):

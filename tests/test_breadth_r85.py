@@ -10,40 +10,10 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r85 import (
     _FOLLOW_GAP_US,
     _QTE_PS,
     ab_quantile_treatment_effect,
-    graph_local_dominant_matching,
     seq_followed_by_matrix,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_matching_equals_sequential_greedy(spark):
-    """Locally-dominant matching under a strict total order must equal
-    the sequential greedy matching (Preis) — and be a valid matching."""
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    edges = sorted(
-        (
-            (10000 - int(math.floor(r.jaccard * 10000 + 0.5))) * 10**12
-            + r.doc_a * 10**6
-            + r.doc_b,
-            r.doc_a,
-            r.doc_b,
-        )
-        for r in pairs
-    )
-    used: set = set()
-    greedy = set()
-    for _, a, b in edges:
-        if a not in used and b not in used:
-            greedy.add((a, b))
-            used |= {a, b}
-    got_rows = graph_local_dominant_matching(spark, SF_SMOKE).collect()
-    got = {(r.doc_a, r.doc_b) for r in got_rows}
-    assert got == greedy
-    assert greedy, "smoke near-dup graph must admit at least one matched pair"
-    ends = [v for a, b in got for v in (a, b)]
-    assert len(ends) == len(set(ends)), "matched endpoints must be disjoint"
 
 
 def test_qte_matches_python_interpolated_quantiles(spark):

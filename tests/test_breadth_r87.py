@@ -7,13 +7,10 @@ import math
 import numpy as np
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r87 import (
-    _BIP_HOPS,
     _KCENTER_ROUNDS,
-    graph_bipartite_check,
     j16_lakehouse_merge_on_read_delete,
     ns_kcenter_coreset,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -73,36 +70,3 @@ def test_kcenter_matches_python_farthest_first(spark):
     # added, so the picked point's similarity-at-pick is non-DECREASING
     sims = [s for _, _, s in want if s is not None]
     assert sims == sorted(sims)
-
-
-def test_bipartite_matches_python_parity_bfs(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    adj = {}
-    for r in pairs:
-        adj.setdefault(r.doc_a, set()).add(r.doc_b)
-        adj.setdefault(r.doc_b, set()).add(r.doc_a)
-    seed = min(adj)
-    reach = {(seed, 0)}
-    frontier = {(seed, 0)}
-    for _ in range(_BIP_HOPS):
-        nxt = {
-            (v, 1 - p)
-            for u, p in frontier
-            for v in adj[u]
-            if (v, 1 - p) not in reach
-        }
-        if not nxt:
-            break
-        reach |= nxt
-        frontier = nxt
-    want = {}
-    nodes = {n for n, _ in reach}
-    for n in nodes:
-        even = (n, 0) in reach
-        odd = (n, 1) in reach
-        want[n] = (even, odd, even and odd)
-    got = {
-        r.doc_id: (r.even_reach, r.odd_reach, r.odd_cycle_witness)
-        for r in graph_bipartite_check(spark, SF_SMOKE).collect()
-    }
-    assert got == want

@@ -9,7 +9,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r90 import (
     _QL_MU,
     _QL_TERMS,
     _QL_TOP_K,
-    graph_powerlaw_alpha,
     ns_dup_cluster_medoids,
     search_query_likelihood_dirichlet,
 )
@@ -92,18 +91,3 @@ def test_query_likelihood_matches_python(spark):
     assert got == want
     for r in search_query_likelihood_dirichlet(spark, SF_SMOKE).collect():
         assert math.isclose(r.ql_score_r, scores[r.doc_id], abs_tol=1e-6)
-
-
-def test_powerlaw_alpha_matches_python(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    deg = Counter()
-    for r in pairs:
-        deg[r.doc_a] += 1
-        deg[r.doc_b] += 1
-    n = len(deg)
-    alpha = 1.0 + n / sum(math.log(d / 0.5) for d in deg.values())
-    row = graph_powerlaw_alpha(spark, SF_SMOKE).collect()[0]
-    assert row.n_nodes == n
-    assert row.max_degree == max(deg.values())
-    assert math.isclose(row.alpha_r, alpha, abs_tol=1e-6)
-    assert alpha > 1.0

@@ -3,18 +3,13 @@
 from __future__ import annotations
 
 import math
-from collections import defaultdict
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r97 import (
     _HEAPS_CPS,
-    graph_ktruss_edges,
     ns_shingle_heaps_fit,
     storage_rle_estimate,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-    _with_hashed_shingles,
-    ns_dedup_minhash_lsh,
-)
+from matt3r_data_ingestion_serverless_spark.plans.northstar import _with_hashed_shingles
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 from tests.conftest import SF_SMOKE
 
@@ -69,22 +64,3 @@ def test_rle_runs_match_python(spark):
     assert row.runs_type_sorted == runs(types_s)
     # clustering must collapse the run count to ~|distinct|
     assert row.runs_type_sorted <= 5 < row.runs_type_by_time
-
-
-def test_ktruss_support_matches_python(spark):
-    pairs = {(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()}
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
-    support = {}
-    for a, b in pairs:
-        support[(a, b)] = len(adj[a] & adj[b])
-    got = {
-        (r.doc_a, r.doc_b): (r.n_triangles, r.in_truss)
-        for r in graph_ktruss_edges(spark, SF_SMOKE).collect()
-    }
-    assert set(got) == pairs
-    for e, s in support.items():
-        assert got[e] == (s, s >= 1)
-    assert any(s > 0 for s in support.values()), "dup graph must have a triangle"

@@ -3,7 +3,11 @@ peeling, matching and link prediction over the near-dup graph (the
 verified MinHash-LSH pairs of plans/northstar.py), each graded against
 a DuckDB oracle that derives the same graph from the documents.
 graph_link_prediction runs on the lineitem part co-purchase graph
-instead. The convergence loops go through operators/iterate.py.
+instead.
+
+Every query starts from the shared pieces below: the pinned edge list
+(near_dup_edges), per-node degrees (degrees) and the oriented triangle
+list (triangles). The convergence loops go through operators/iterate.py.
 """
 
 from __future__ import annotations
@@ -12,10 +16,67 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.operators.iterate import frontier_loop
-from matt3r_data_ingestion_serverless_spark.plans.northstar import _pin
+from matt3r_data_ingestion_serverless_spark.operators.iterate import (
+    connected_components,
+    frontier_loop,
+)
+from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
+from matt3r_data_ingestion_serverless_spark.plans.northstar import (
+    _minhash_lsh_sql,
+    ns_dedup_minhash_lsh,
+)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+
+
+# ---------------------------------------------------------------------------
+# the near-dup graph: edge list, degrees, triangles
+# ---------------------------------------------------------------------------
+
+
+def mirror(edges: DataFrame) -> DataFrame:
+    """Every edge of ``edges`` in both directions: ``src`` and ``dst``
+    swapped, any other column carried along. An explode, not a union:
+    the input is computed once, where a union would plan it twice."""
+    flip = {"src": "dst", "dst": "src"}
+    fwd = F.struct(*edges.columns)
+    rev = F.struct(*(F.col(flip.get(c, c)).alias(c) for c in edges.columns))
+    return edges.select(F.explode(F.array(fwd, rev)).alias("e")).select("e.*")
+
+
+def near_dup_edges(spark: SparkSession, sf_dir: str, *, mirrored: bool = False) -> DataFrame:
+    """The near-dup graph as a pinned edge list ``(src, dst, jaccard)``:
+    each verified pair once with src < dst, or in both directions when
+    ``mirrored``. The eager checkpoint runs the MinHash detector once;
+    every join and loop round after it reads the materialized list."""
+    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"), "jaccard"
+    )
+    return (mirror(pairs) if mirrored else pairs).localCheckpoint(eager=True)
+
+
+def degrees(edges: DataFrame) -> DataFrame:
+    """``(node, degree)``: the number of edges leaving each node. Over a
+    mirrored edge list that is the undirected degree."""
+    return edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("degree"))
+
+
+def triangles(edges: DataFrame) -> DataFrame:
+    """``(a, b, c)``, a < b < c, once per triangle of a src < dst edge
+    list: the wedge a→b→c closed by the edge a→c. Both joins key on a
+    node id; on skewed graphs, orienting low → high degree bounds the
+    wedge fan-out at O(m^1.5)."""
+    ab = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    bc = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    ac = edges.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    return ab.join(bc, "b").join(ac, ["a", "c"]).select("a", "b", "c")
+
+
+def _lowest_node(edges: DataFrame) -> DataFrame:
+    """The lowest source node as a 1-row ``(node)`` frame, the seed of
+    the traversals; empty for an empty graph. It stays a DataFrame
+    (cross-join broadcast), so the plan has no driver-side collect."""
+    return edges.agg(F.min("src").alias("node")).filter(F.col("node").isNotNull())
 
 
 # ---------------------------------------------------------------------------
@@ -26,8 +87,6 @@ _BFS_MAX_HOPS = 4
 
 
 def _bfs_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     return f"""
 WITH RECURSIVE pairs AS ({pairs}),
@@ -62,24 +121,10 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled with its FIRST (minimal) level; ≤ 4 rounds of (join +
     distinct + anti-join), each a bounded shuffle on the frontier —
     never the whole graph. The oracle is a depth-bounded recursive CTE
-    taking min(level) per node. The seed stays a 1-row DataFrame
-    (cross-join broadcast), so the plan has no driver-side collect.
+    taking min(level) per node.
     """
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    seed = (
-        edges.agg(F.min("src").alias("node"))
-        .filter(F.col("node").isNotNull())  # empty graph → empty result
-        .withColumn("hop", F.lit(0))
-    )
+    edges = near_dup_edges(spark, sf_dir, mirrored=True)
+    seed = _lowest_node(edges).withColumn("hop", F.lit(0))
 
     def step(frontier: DataFrame, hop: int, seen: DataFrame) -> DataFrame:
         return (
@@ -96,7 +141,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# weighted near-dup graph: shared edge derivation
+# weighted near-dup graph: shortest and longest paths
 # ---------------------------------------------------------------------------
 #
 # Edge weight = 10001 - floor(jaccard·10⁴ + .5): a near-identical pair
@@ -108,25 +153,12 @@ _MAX_HOPS = 4
 _W_SQL = "10001 - CAST(floor(jaccard * 10000 + 0.5) AS BIGINT)"
 
 
-def _weighted_edges(spark: SparkSession, sf_dir: str, *, mirror: bool) -> DataFrame:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
+def _weighted_edges(spark: SparkSession, sf_dir: str, *, mirrored: bool) -> DataFrame:
     w = (F.lit(10001) - F.floor(F.col("jaccard") * 10000 + 0.5).cast("long")).alias("w")
-    e1 = ns_dedup_minhash_lsh(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"), w
-    )
-    if mirror:
-        e1 = e1.union(
-            e1.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    return e1.localCheckpoint(eager=True)
+    return near_dup_edges(spark, sf_dir, mirrored=mirrored).select("src", "dst", w)
 
 
 def _sssp_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     return f"""
 WITH RECURSIVE pairs AS ({_minhash_lsh_sql().strip()}),
 e0 AS (SELECT doc_a AS src, doc_b AS dst, {_W_SQL} AS w FROM pairs),
@@ -160,12 +192,8 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the per-round cost is one shuffle on the frontier hash —
     the standard Pregel layout (GraphX/GraphFrames run this exact
     loop)."""
-    edges = _weighted_edges(spark, sf_dir, mirror=True)
-    seed = (
-        edges.agg(F.min("src").alias("node"))
-        .filter(F.col("node").isNotNull())
-        .withColumn("dist", F.lit(0).cast("long"))
-    )
+    edges = _weighted_edges(spark, sf_dir, mirrored=True)
+    seed = _lowest_node(edges).withColumn("dist", F.lit(0).cast("long"))
 
     def relax(frontier: DataFrame, _rnd: int, seen: DataFrame) -> DataFrame:
         cand = (
@@ -190,8 +218,6 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _topo_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     return f"""
 WITH RECURSIVE pairs AS ({_minhash_lsh_sql().strip()}),
 edges AS (SELECT doc_a AS src, doc_b AS dst, {_W_SQL} AS w FROM pairs),
@@ -222,12 +248,9 @@ def graph_topo_longest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     union's final groupBy-max gives the ≤-4-edge answer. Each round is
     one frontier-sized shuffle. The oracle enumerates the same bounded
     walks in a recursive CTE."""
-    edges = _weighted_edges(spark, sf_dir, mirror=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select("dst"))
-        .distinct()
-        .select("node", F.lit(0).cast("long").alias("dist"), F.lit(0).alias("lvl"))
+    edges = _weighted_edges(spark, sf_dir, mirrored=False)
+    nodes = degrees(mirror(edges)).select(
+        "node", F.lit(0).cast("long").alias("dist"), F.lit(0).alias("lvl")
     )
 
     def extend(frontier: DataFrame, lvl: int, _seen: DataFrame) -> DataFrame:
@@ -258,8 +281,6 @@ _BIP_HOPS = 6
 
 
 def _bipartite_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     return f"""
 WITH RECURSIVE pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()}),
 edges AS MATERIALIZED (
@@ -297,21 +318,8 @@ def graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: frontier-sized joins per round against the checkpointed
     edge list; the visited set is keyed (node, parity) so each state
     expands at most once."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select("doc_b", "doc_a"))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    seed = (
-        edges.agg(F.min("src").alias("node"))
-        .filter(F.col("node").isNotNull())
-        .withColumn("par", F.lit(0))
-    )
+    edges = near_dup_edges(spark, sf_dir, mirrored=True)
+    seed = _lowest_node(edges).withColumn("par", F.lit(0))
 
     def step(frontier: DataFrame, _hop: int, seen: DataFrame) -> DataFrame:
         return (
@@ -323,13 +331,10 @@ def graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     visited = frontier_loop(seed, step, _BIP_HOPS)
+    even = F.max(F.when(F.col("par") == 0, 1).otherwise(0)) == 1
+    odd = F.max(F.when(F.col("par") == 1, 1).otherwise(0)) == 1
     return visited.groupBy("node").agg(
-        (F.max(F.when(F.col("par") == 0, 1).otherwise(0)) == 1).alias("even_reach"),
-        (F.max(F.when(F.col("par") == 1, 1).otherwise(0)) == 1).alias("odd_reach"),
-        (
-            (F.max(F.when(F.col("par") == 0, 1).otherwise(0)) == 1)
-            & (F.max(F.when(F.col("par") == 1, 1).otherwise(0)) == 1)
-        ).alias("odd_cycle_witness"),
+        even.alias("even_reach"), odd.alias("odd_reach"), (even & odd).alias("odd_cycle_witness")
     ).select(F.col("node").alias("doc_id"), "even_reach", "odd_reach", "odd_cycle_witness")
 
 
@@ -342,8 +347,6 @@ _PR_ITERS = 3
 
 
 def _pagerank_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     it = """
 r{k} AS (
@@ -376,7 +379,7 @@ FROM r{_PR_ITERS}
 
 @register("graph_pagerank", sql=_pagerank_sql())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank ({it} fixed power iterations, damping {d}) over the
+    """PageRank (3 fixed power iterations, damping 0.85) over the
     near-dup graph: rank the most central documents in each duplicate
     neighborhood — the canonical-representative signal when min-id
     (ns_dedup_keep_one) is too arbitrary. Every node here has degree
@@ -388,29 +391,24 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a hash agg. Fixed iteration count, deterministic at 6 dp;
     full convergence at 100 TB pairs with the iterative-checkpoint
     pattern ns_dup_clusters uses."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    # One checkpointed edge table CARRYING the source degree: the old
-    # shape re-attached deg (broadcast build) and n (crossJoin of a
-    # 1-row agg) inside every iteration, so the 3-iteration plan held
-    # 36 Exchanges / 22 scans and cost ~2.4 s of driver planning alone
-    # (measured). Pre-joining deg once and inlining n as a bounded
+    edges = near_dup_edges(spark, sf_dir, mirrored=True)
+    # The edge list CARRIES the source degree, and n is a bounded
     # 1-value scalar (same arithmetic: Python float division IS IEEE
-    # double division) shrinks each iteration to join + hash-agg —
-    # plan size O(iters), not O(iters · subquery forest).
-    edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("s", "t")
-    deg = edges.groupBy("s").agg(F.count("*").cast("double").alias("deg"))
-    ed = edges.join(deg, "s").localCheckpoint(eager=True)
-    nodes = ed.select(F.col("s").alias("node")).distinct().localCheckpoint(eager=False)
-    n_nodes = nodes.count()  # bounded scalar; materializes the node ckpt
-    r = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
+    # double division), so each iteration is one join + hash agg — plan
+    # size O(iters). Re-attaching deg (broadcast build) and n (crossJoin
+    # of a 1-row agg) inside every iteration held 36 Exchanges / 22
+    # scans and ~2.4 s of driver planning (measured).
+    deg = degrees(edges)
+    ed = edges.join(
+        deg.select(F.col("node").alias("src"), F.col("degree").cast("double").alias("deg")),
+        "src",
+    )
+    n_nodes = deg.count()
+    r = deg.select("node", F.lit(1.0 / n_nodes).alias("r"))
     for _ in range(_PR_ITERS):
         r = (
-            ed.join(r, ed.s == r.node)
-            .groupBy(F.col("t").alias("node"))
+            ed.join(r, ed.src == r.node)
+            .groupBy(F.col("dst").alias("node"))
             .agg(
                 (
                     F.lit((1 - _PR_DAMP) / n_nodes)
@@ -422,8 +420,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangles_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
@@ -440,33 +436,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle enumeration over the near-dup graph (edges canonical
     a<b, so each triangle lists once as a<b<c) — the clustering-
     coefficient primitive that separates tight dup cliques from
-    accidental chains.
-
-    Scale: the two joins are on single node keys; with edges
-    pre-partitioned by source the first join is co-located, and the
-    closing-edge probe hits the same partitioning. Degree-ordering
-    (orient edges low-degree → high-degree) keeps worst-case work at
-    O(m^1.5) on skewed graphs — here edges are already canonical."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    e = _pin(ns_dedup_minhash_lsh(spark, sf_dir).select(
-        F.col("doc_a").alias("s"), F.col("doc_b").alias("t")
-    ))
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    return (
-        e1.join(e2, F.col("e1.t") == F.col("e2.s"))
-        .join(
-            e3,
-            (F.col("e3.s") == F.col("e1.s")) & (F.col("e3.t") == F.col("e2.t")),
-        )
-        .select(
-            F.col("e1.s").alias("a"),
-            F.col("e1.t").alias("b"),
-            F.col("e2.t").alias("c"),
-        )
-    )
+    accidental chains."""
+    return triangles(near_dup_edges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -475,8 +446,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hits_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
@@ -519,20 +488,9 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-list join + hash agg on the same key (the exchange is reused
     across steps), the same shape as graph_pagerank; max() is a 1-row
     broadcast."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    edges = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        edges.select(F.col("s").alias("node"))
-        .union(edges.select("t"))
-        .distinct()
-    )
+    edges = near_dup_edges(spark, sf_dir)
+    in_deg = degrees(edges.select(F.col("dst").alias("src")))
+    out_deg = degrees(edges)
 
     def normalize(raw: DataFrame) -> DataFrame:
         # Checkpoint the half-step's raw scores FIRST: `raw` is consumed
@@ -549,32 +507,24 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             "node", F.expr("(v * 1000000) div mx").alias("v")
         )
 
-    a1 = normalize(
-        edges.groupBy(F.col("t").alias("node")).agg((F.count("*") * 1000000).alias("v"))
-    )
-    h1 = normalize(
-        edges.join(a1, edges.t == a1.node)
-        .groupBy(F.col("s").alias("node2"))
-        .agg(F.sum("v").alias("v"))
-        .withColumnRenamed("node2", "node")
-    )
-    a2 = normalize(
-        edges.join(h1, edges.s == h1.node)
-        .groupBy(F.col("t").alias("node2"))
-        .agg(F.sum("v").alias("v"))
-        .withColumnRenamed("node2", "node")
-    )
-    h2 = normalize(
-        edges.join(a2, edges.t == a2.node)
-        .groupBy(F.col("s").alias("node2"))
-        .agg(F.sum("v").alias("v"))
-        .withColumnRenamed("node2", "node")
-    )
-    ideg = edges.groupBy(F.col("t").alias("node")).agg(F.count("*").alias("in_deg"))
-    odeg = edges.groupBy(F.col("s").alias("node")).agg(F.count("*").alias("out_deg"))
+    def half_step(scores: DataFrame, frm: str, to: str) -> DataFrame:
+        # each node's new score: the sum over its edges of the scores at
+        # their other (`frm`) end
+        return normalize(
+            edges.join(scores, edges[frm] == scores.node)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum("v").alias("v"))
+        )
+
+    a1 = normalize(in_deg.select("node", (F.col("degree") * 1000000).alias("v")))
+    h1 = half_step(a1, "dst", "src")
+    a2 = half_step(h1, "src", "dst")
+    h2 = half_step(a2, "dst", "src")
     out = (
-        nodes.join(ideg, "node", "left")
-        .join(odeg, "node", "left")
+        degrees(mirror(edges))
+        .select("node")
+        .join(in_deg.withColumnRenamed("degree", "in_deg"), "node", "left")
+        .join(out_deg.withColumnRenamed("degree", "out_deg"), "node", "left")
         .join(a2.withColumnRenamed("v", "auth"), "node", "left")
         .join(h2.withColumnRenamed("v", "hub"), "node", "left")
     )
@@ -593,8 +543,6 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _clustering_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
@@ -636,39 +584,18 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees come from the mirrored edge list — no per-node
     neighborhood materialization. Nodes with degree < 2 have no defined
     coefficient (NULL)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    und = pairs.union(pairs.select(F.col("t"), F.col("s")))
-    deg = und.groupBy(F.col("s").alias("node")).agg(F.count("*").alias("d"))
-    e1 = pairs.select(F.col("s").alias("a"), F.col("t").alias("b"))
-    e2 = pairs.select(F.col("s").alias("b"), F.col("t").alias("c"))
-    e3 = pairs.select(F.col("s").alias("a3"), F.col("t").alias("c3"))
-    tri = (
-        e1.join(e2, "b")
-        .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .select("a", "b", "c")
-    )
-    corners = (
-        tri.select(F.col("a").alias("node"))
-        .unionAll(tri.select(F.col("b").alias("node")))
-        .unionAll(tri.select(F.col("c").alias("node")))
-    )
+    edges = near_dup_edges(spark, sf_dir)
+    corners = triangles(edges).select(F.explode(F.array("a", "b", "c")).alias("node"))
     per_node = corners.groupBy("node").agg(F.count("*").alias("t"))
-    j = deg.join(per_node, "node", "left")
+    j = degrees(mirror(edges)).join(per_node, "node", "left")
+    d = F.col("degree")
     t = F.coalesce(F.col("t"), F.lit(0))
-    coef = 2.0 * t / (F.col("d").cast("double") * (F.col("d") - 1))
+    coef = 2.0 * t / (d.cast("double") * (d - 1))
     return j.select(
         F.col("node").alias("doc_id"),
-        F.col("d").cast("int").alias("degree"),
+        d.cast("int").alias("degree"),
         t.cast("long").alias("n_triangles"),
-        F.when(F.col("d") >= 2, round6(coef)).alias("clustering_coef"),
+        F.when(d >= 2, round6(coef)).alias("clustering_coef"),
     )
 
 
@@ -678,8 +605,6 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triads_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
@@ -716,24 +641,10 @@ def graph_open_triads(spark: SparkSession, sf_dir: str) -> DataFrame:
     score. Paths-of-length-2 come from the degree identity Σd(d−1)/2 —
     one agg, no path enumeration; only the (already canonical a<b<c)
     triangle count joins. All exact int64."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    und = pairs.union(pairs.select("doc_b", "doc_a")).toDF("s", "t")
-    deg = und.groupBy("s").agg(F.count("*").alias("d"))
-    paths = deg.agg(
-        (F.sum(F.col("d") * (F.col("d") - 1)) / 2).cast("long").alias("n_paths2")
-    )
-    e1 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    e2 = pairs.select(F.col("doc_a").alias("b"), F.col("doc_b").alias("c"))
-    e3 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"]).agg(F.count("*").alias("n_triangles"))
+    edges = near_dup_edges(spark, sf_dir)
+    d = F.col("degree")
+    paths = degrees(mirror(edges)).agg((F.sum(d * (d - 1)) / 2).cast("long").alias("n_paths2"))
+    tri = triangles(edges).agg(F.count("*").alias("n_triangles"))
     j = paths.crossJoin(F.broadcast(tri))
     cc = F.when(F.col("n_paths2") == 0, F.lit(0.0)).otherwise(
         3.0 * F.col("n_triangles") / F.col("n_paths2")
@@ -754,8 +665,6 @@ _TRUSS_K = 3  # keep edges in ≥ k-2 = 1 triangle
 
 
 def _ktruss_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     return f"""
 WITH e AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM ({_minhash_lsh_sql().strip()})
@@ -788,30 +697,9 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     one step past graph_triangles' global count, and the first peel
     round of the full truss decomposition. Wedges orient a<b<c so each
     triangle is found exactly once and each of its three edges gets one
-    support credit.
-
-    Scale: the wedge join keys on the shared endpoint and the closing
-    edge is a semi-join-shaped equi-join — the standard oriented
-    triangle enumeration whose fan-out is Σ deg², managed at scale by
-    degree-ordering the orientation (high-degree nodes get few
-    out-edges)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    e = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    e1 = e
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = (
-        e1.join(e2, "b")
-        .join(e3, (F.col("ta") == F.col("a")) & (F.col("tc") == F.col("c")), "left_semi")
-        .select("a", "b", "c")
-    )
+    support credit."""
+    edges = near_dup_edges(spark, sf_dir)
+    tri = triangles(edges)
     sup = (
         tri.select("a", "b")
         .union(tri.select(F.col("b").alias("a"), F.col("c").alias("b")))
@@ -819,13 +707,15 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("support"))
     )
+    support = F.coalesce("support", F.lit(0))
     return (
-        e.join(sup, ["a", "b"], "left")
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .join(sup, ["a", "b"], "left")
         .select(
             F.col("a").alias("doc_a"),
             F.col("b").alias("doc_b"),
-            F.coalesce("support", F.lit(0)).alias("n_triangles"),
-            (F.coalesce("support", F.lit(0)) >= _TRUSS_K - 2).alias("in_truss"),
+            support.alias("n_triangles"),
+            (support >= _TRUSS_K - 2).alias("in_truss"),
         )
     )
 
@@ -838,8 +728,6 @@ _PEEL_ROUNDS = 4
 
 
 def _kcore_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     # every CTE is MATERIALIZED: each round names the previous alive set
     # four times, and DuckDB would otherwise re-expand the whole LSH
@@ -887,42 +775,30 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     to fixpoint at 100 TB with iterative checkpointing; four rounds
     provably suffice on this graph (asserted stable in tests). All
     integer degree arithmetic."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    edges = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-        .localCheckpoint(eager=True)
-    )
-    both = edges.select(F.col("s").alias("node")).unionAll(edges.select("t"))
-    nodes = both.distinct()
-    deg0 = both.groupBy("node").agg(F.count("*").alias("degree"))
-    alive = nodes
+    edges = near_dup_edges(spark, sf_dir).select("src", "dst")
+    deg0 = degrees(mirror(edges))
+    alive = deg0.select("node")
     for _ in range(_PEEL_ROUNDS):
         # semi-joins with NO broadcast hint: the alive set is
         # corpus-scaled (one row per surviving node), so a forced
         # broadcast cannot hold at 100 TB — let the planner pick
         # (it still auto-broadcasts under the threshold locally)
         live_edges = edges.join(
-            alive.withColumnRenamed("node", "s"), "s", "left_semi"
-        ).join(alive.withColumnRenamed("node", "t"), "t", "left_semi")
-        d = (
-            live_edges.select(F.col("s").alias("node"))
-            .unionAll(live_edges.select("t"))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        )
+            alive.withColumnRenamed("node", "src"), "src", "left_semi"
+        ).join(alive.withColumnRenamed("node", "dst"), "dst", "left_semi")
         # checkpoint each round: alive feeds TWO joins next round, and
         # without cutting lineage the final action re-evaluates every
         # earlier round once per branch — exponential recompute
         # (measured 5.4 s → ~2 s at sf0.1)
-        alive = d.filter(F.col("d") >= 2).select("node").localCheckpoint(eager=True)
+        alive = (
+            degrees(mirror(live_edges))
+            .filter(F.col("degree") >= 2)
+            .select("node")
+            .localCheckpoint(eager=True)
+        )
     core = alive.withColumn("in_core", F.lit(True))
     return (
-        nodes.join(deg0, "node")
-        .join(core, "node", "left")
+        deg0.join(core, "node", "left")
         .select(
             F.col("node").alias("doc_id"),
             F.col("degree").cast("long").alias("degree"),
@@ -937,8 +813,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assortativity_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     pairs = _minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
@@ -979,28 +853,19 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact int64 degree power sums over the edge list (two broadcast
     joins of the degree table), one fixed double formula, NULL for
     degenerate (regular) graphs."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
+    edges = near_dup_edges(spark, sf_dir, mirrored=True)
+    deg = degrees(edges)
     # NO broadcast hints on the degree table: it is one row per node —
     # corpus-scaled, so a forced broadcast cannot hold at 100 TB (the
     # graph_kcore_peel r09 fix). The planner still auto-broadcasts under
     # threshold locally; at scale these become plain shuffle joins.
     de = (
         edges.join(
-            deg.select(F.col("node").alias("src"), F.col("d").alias("x")),
+            deg.select(F.col("node").alias("src"), F.col("degree").alias("x")),
             "src",
         )
         .join(
-            deg.select(F.col("node").alias("dst"), F.col("d").alias("y")),
+            deg.select(F.col("node").alias("dst"), F.col("degree").alias("y")),
             "dst",
         )
         .select("x", "y")
@@ -1031,8 +896,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _powerlaw_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     return f"""
 WITH pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()}),
 deg AS (
@@ -1059,22 +922,12 @@ def graph_powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degrees are one groupBy over the mirrored edge list; the MLE
     is a single aggregate of ln-degrees (round6 absorbs the summation
     order of the one float sum)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir)
-    deg = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .union(pairs.select("doc_b"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = degrees(mirror(near_dup_edges(spark, sf_dir)))
     return deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
-        F.max("d").alias("max_degree"),
+        F.max("degree").alias("max_degree"),
         round6(
-            1.0 + F.count(F.lit(1)) / F.sum(F.log(F.col("d") / 0.5))
+            1.0 + F.count(F.lit(1)) / F.sum(F.log(F.col("degree") / 0.5))
         ).alias("alpha_r"),
     )
 
@@ -1085,8 +938,6 @@ def graph_powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
-
     return f"""
 {_dup_clusters_ctes()},
 deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src),
@@ -1116,32 +967,15 @@ def graph_modularity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from many balanced clusters (Q→1); the partition-quality number
     beside cluster_size_histogram and graph_kcore_peel's density.
     Degree sums and Σd_c² are exact int64; Q is one double expression.
-    Reuses the components labeling — fed the SAME checkpointed pair
-    table via _dup_clusters_from_pairs, so the MinHash detector runs
-    once, not twice — and the edge degree agg: two hash aggs and a
-    broadcast on top of one detector pass."""
-    from matt3r_data_ingestion_serverless_spark.plans.curation import (
-        _dup_clusters_from_pairs,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
-    edges = edges.localCheckpoint(eager=True)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
+    The components labeling (operators/iterate.py) and the degree agg
+    both read the one pinned mirrored edge list, so the MinHash
+    detector runs once: two hash aggs and a broadcast on top of the
+    labeling loop."""
+    edges = near_dup_edges(spark, sf_dir, mirrored=True).select("src", "dst")
+    deg = degrees(edges)
     m = edges.agg((F.count("*") / 2).cast("long").alias("m"))
-    lbl = _dup_clusters_from_pairs(pairs).select("doc_id", "cluster_id")
-    dc = (
-        lbl.join(deg, lbl.doc_id == deg.node)
-        .groupBy("cluster_id")
-        .agg(F.sum("d").alias("d_c"))
-    )
+    lbl = connected_components(deg.select("node"), edges)
+    dc = lbl.join(deg, "node").groupBy("cluster_id").agg(F.sum("degree").alias("d_c"))
     agg = dc.crossJoin(F.broadcast(m)).groupBy("m").agg(
         F.count("*").alias("n_clusters"),
         F.sum(F.col("d_c") * F.col("d_c")).alias("sum_dc2"),
@@ -1171,8 +1005,6 @@ _ORD_SQL = (
 
 
 def _matching_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
     # every CTE is MATERIALIZED: the round-r stages reference their
     # predecessors up to 3x (dominance joins + the NOT IN pair), and an
     # inlining planner would otherwise re-evaluate the whole minhash
@@ -1229,51 +1061,42 @@ def graph_local_dominant_matching(spark: SparkSession, sf_dir: str) -> DataFrame
     endpoints — all frontier-sized shuffles; rounds needed is
     O(log E) in expectation, here fixed at 5 (both engines compute the
     identical 5-round prefix, converged or not)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
     ordc = (
         (
             F.lit(10000) - F.floor(F.col("jaccard") * 10000 + 0.5).cast("long")
         )
         * F.lit(1_000_000_000_000)
-        + F.col("doc_a") * 1_000_000
-        + F.col("doc_b")
+        + F.col("src") * 1_000_000
+        + F.col("dst")
     ).alias("ord")
-    edges = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b", ordc)
-        .localCheckpoint(eager=True)
-    )
+    edges = near_dup_edges(spark, sf_dir).select("src", "dst", ordc)
 
     def dominant(live: DataFrame, rnd: int) -> DataFrame:
-        ends = live.select(F.col("doc_a").alias("node"), "ord").union(
-            live.select(F.col("doc_b").alias("node"), "ord")
-        )
-        vmin = ends.groupBy("node").agg(F.min("ord").alias("mo"))
-        va = vmin.select(F.col("node").alias("doc_a"), F.col("mo").alias("mo_a"))
-        vb = vmin.select(F.col("node").alias("doc_b"), F.col("mo").alias("mo_b"))
+        vmin = mirror(live).groupBy(F.col("src").alias("node")).agg(F.min("ord").alias("mo"))
+        va = vmin.select(F.col("node").alias("src"), F.col("mo").alias("mo_a"))
+        vb = vmin.select(F.col("node").alias("dst"), F.col("mo").alias("mo_b"))
         return (
-            live.join(va, "doc_a")
-            .join(vb, "doc_b")
+            live.join(va, "src")
+            .join(vb, "dst")
             .filter((F.col("ord") == F.col("mo_a")) & (F.col("ord") == F.col("mo_b")))
-            .select(F.lit(rnd).alias("round"), "doc_a", "doc_b")
+            .select(
+                F.lit(rnd).alias("round"), F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
+            )
         )
 
     def step(_picked: DataFrame, rnd: int, seen: DataFrame) -> DataFrame:
         # every endpoint matched so far leaves the graph
         matched = seen.select(F.col("doc_a").alias("node")).union(seen.select("doc_b"))
         live = edges.join(
-            matched.withColumnRenamed("node", "doc_a"), "doc_a", "left_anti"
-        ).join(matched.withColumnRenamed("node", "doc_b"), "doc_b", "left_anti")
+            matched.withColumnRenamed("node", "src"), "src", "left_anti"
+        ).join(matched.withColumnRenamed("node", "dst"), "dst", "left_anti")
         return dominant(live, rnd + 1)
 
     return frontier_loop(dominant(edges, 1), step, _MATCH_ROUNDS - 1)
 
 
 # ---------------------------------------------------------------------------
-# link prediction: neighborhood Jaccard over the near-dup graph
+# link prediction: neighborhood Jaccard over the part co-purchase graph
 # ---------------------------------------------------------------------------
 
 _LP_MIN_JACCARD = 0.2
@@ -1354,14 +1177,10 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= _LP_MIN_COOCCUR)
-        .select("part_a", "part_b")
+        .select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
     )
-    edges = (
-        pairs.union(pairs.select(F.col("part_b"), F.col("part_a")))
-        .toDF("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
+    edges = mirror(pairs).localCheckpoint(eager=True)
+    deg = degrees(edges)
     e1 = edges.select(F.col("src").alias("u"), F.col("dst").alias("mid"))
     e2 = edges.select(F.col("src").alias("v"), F.col("dst").alias("mid"))
     common = (
@@ -1372,8 +1191,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         common.join(edges, (common.u == edges.src) & (common.v == edges.dst), "left_anti")
-        .join(F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("du"))), "u")
-        .join(F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))), "v")
+        .join(F.broadcast(deg.select(F.col("node").alias("u"), F.col("degree").alias("du"))), "u")
+        .join(F.broadcast(deg.select(F.col("node").alias("v"), F.col("degree").alias("dv"))), "v")
     )
     jac = F.col("cn").cast("double") / (F.col("du") + F.col("dv") - F.col("cn"))
     return cand.filter(jac >= _LP_MIN_JACCARD).select(

@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import defaultdict
+from types import SimpleNamespace
+
+import pytest
 
 from matt3r_data_ingestion_serverless_spark.plans.curation import ns_dup_clusters
 from matt3r_data_ingestion_serverless_spark.plans.graph import (
@@ -12,6 +15,9 @@ from matt3r_data_ingestion_serverless_spark.plans.graph import (
     _LP_MIN_JACCARD,
     _MAX_HOPS,
     _PEEL_ROUNDS,
+    _PR_DAMP,
+    _PR_ITERS,
+    degrees,
     graph_assortativity,
     graph_bfs_levels,
     graph_bipartite_check,
@@ -23,9 +29,13 @@ from matt3r_data_ingestion_serverless_spark.plans.graph import (
     graph_local_dominant_matching,
     graph_modularity_clusters,
     graph_open_triads,
+    graph_pagerank,
     graph_powerlaw_alpha,
     graph_sssp_bounded,
     graph_topo_longest_path,
+    graph_triangles,
+    mirror,
+    near_dup_edges,
 )
 from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
@@ -36,15 +46,25 @@ def _round6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
 
 
-def test_bfs_levels_match_python_bfs(spark):
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    adj: dict[int, set[int]] = {}
+@pytest.fixture(scope="module")
+def dup_graph(spark):
+    """The sf0.001 near-dup graph, collected once for the module:
+    ``rows`` (doc_a, doc_b, jaccard), ``pairs`` [(doc_a, doc_b)], the
+    undirected adjacency ``adj`` {node: set of neighbours}, ``deg``
+    {node: degree} and the triangle set ``tri`` {(a, b, c), a < b < c}."""
+    rows = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
+    pairs = [(r.doc_a, r.doc_b) for r in rows]
+    adj = defaultdict(set)
     for a, b in pairs:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
+        adj[a].add(b)
+        adj[b].add(a)
+    tri = {(a, b, c) for a, b in pairs for c in adj[b] if c > b and c in adj[a]}
+    deg = {v: len(nbrs) for v, nbrs in adj.items()}
+    return SimpleNamespace(rows=rows, pairs=pairs, adj=dict(adj), deg=deg, tri=tri)
+
+
+def test_bfs_levels_match_python_bfs(spark, dup_graph):
+    adj = dup_graph.adj
     got = {r.doc_id: r.hop for r in graph_bfs_levels(spark, SF_SMOKE).collect()}
     if not adj:
         assert got == {}
@@ -64,16 +84,15 @@ def test_bfs_levels_match_python_bfs(spark):
     assert got == expected
 
 
-def _weighted_pairs(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
+def _weighted_pairs(rows):
     return [
         (r.doc_a, r.doc_b, 10001 - int(math.floor(r.jaccard * 10000 + 0.5)))
-        for r in pairs
+        for r in rows
     ]
 
 
-def test_sssp_matches_python_bellman_ford(spark):
-    pairs = _weighted_pairs(spark)
+def test_sssp_matches_python_bellman_ford(spark, dup_graph):
+    pairs = _weighted_pairs(dup_graph.rows)
     adj = defaultdict(list)
     for a, b, w in pairs:
         adj[a].append((b, w))
@@ -97,8 +116,8 @@ def test_sssp_matches_python_bellman_ford(spark):
     assert len(got) > 1, "smoke near-dup graph must reach beyond the seed"
 
 
-def test_topo_longest_path_matches_python_dp(spark):
-    pairs = _weighted_pairs(spark)
+def test_topo_longest_path_matches_python_dp(spark, dup_graph):
+    pairs = _weighted_pairs(dup_graph.rows)
     nodes = {a for a, _, _ in pairs} | {b for _, b, _ in pairs}
     # exact-r-edge DP over the low->high DAG
     best = {n: (0, 0) for n in nodes}  # node -> (max_dist, max_depth)
@@ -121,12 +140,8 @@ def test_topo_longest_path_matches_python_dp(spark):
     assert any(d > 0 for d, _ in got.values()), "DAG must contain at least one edge"
 
 
-def test_bipartite_matches_python_parity_bfs(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    adj = {}
-    for r in pairs:
-        adj.setdefault(r.doc_a, set()).add(r.doc_b)
-        adj.setdefault(r.doc_b, set()).add(r.doc_a)
+def test_bipartite_matches_python_parity_bfs(spark, dup_graph):
+    adj = dup_graph.adj
     seed = min(adj)
     reach = {(seed, 0)}
     frontier = {(seed, 0)}
@@ -154,10 +169,8 @@ def test_bipartite_matches_python_parity_bfs(spark):
     assert got == want
 
 
-def test_hits_matches_python(spark):
-    edges = [
-        (r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    ]
+def test_hits_matches_python(spark, dup_graph):
+    edges = dup_graph.pairs
     nodes = sorted({x for e in edges for x in e})
     out_e = defaultdict(list)
     in_e = defaultdict(list)
@@ -187,15 +200,8 @@ def test_hits_matches_python(spark):
     assert max(r.hub_micro for r in got.values()) == 1000000
 
 
-def test_clustering_coefficient_matches_python(spark):
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
+def test_clustering_coefficient_matches_python(spark, dup_graph):
+    adj = dup_graph.adj
     got = {r.doc_id: r for r in graph_clustering_coefficient(spark, SF_SMOKE).collect()}
     assert set(got) == set(adj)
     for v, nbrs in adj.items():
@@ -209,22 +215,9 @@ def test_clustering_coefficient_matches_python(spark):
             assert r.clustering_coef is None
 
 
-def test_open_triads_match_python(spark):
-    pairs = [(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()]
-    deg = defaultdict(int)
-    eset = set(pairs)
-    for a, b in pairs:
-        deg[a] += 1
-        deg[b] += 1
-    paths2 = sum(d * (d - 1) for d in deg.values()) // 2
-    tris = 0
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-    for a, b in pairs:
-        for c in adj.get(b, ()):
-            if (a, c) in eset:
-                tris += 1
+def test_open_triads_match_python(spark, dup_graph):
+    paths2 = sum(d * (d - 1) for d in dup_graph.deg.values()) // 2
+    tris = len(dup_graph.tri)
     row = graph_open_triads(spark, SF_SMOKE).collect()[0]
     assert (row.n_paths2, row.n_triangles) == (paths2, tris)
     assert row.n_open_triads == paths2 - 3 * tris
@@ -234,15 +227,10 @@ def test_open_triads_match_python(spark):
     assert 0.0 <= row.global_clustering <= 1.0
 
 
-def test_ktruss_support_matches_python(spark):
-    pairs = {(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()}
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
-    support = {}
-    for a, b in pairs:
-        support[(a, b)] = len(adj[a] & adj[b])
+def test_ktruss_support_matches_python(spark, dup_graph):
+    pairs = set(dup_graph.pairs)
+    adj = dup_graph.adj
+    support = {(a, b): len(adj[a] & adj[b]) for a, b in pairs}
     got = {
         (r.doc_a, r.doc_b): (r.n_triangles, r.in_truss)
         for r in graph_ktruss_edges(spark, SF_SMOKE).collect()
@@ -253,13 +241,40 @@ def test_ktruss_support_matches_python(spark):
     assert any(s > 0 for s in support.values()), "dup graph must have a triangle"
 
 
-def test_kcore_matches_python_and_is_stable(spark):
-    edges = [(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()]
-    nodes = {x for e in edges for x in e}
-    deg0 = defaultdict(int)
-    for s, t in edges:
-        deg0[s] += 1
-        deg0[t] += 1
+def test_edge_list_and_degrees_match_python(spark, dup_graph):
+    canonical = near_dup_edges(spark, SF_SMOKE)
+    assert sorted((r.src, r.dst) for r in canonical.collect()) == sorted(dup_graph.pairs)
+    mirrored = near_dup_edges(spark, SF_SMOKE, mirrored=True)
+    assert {r.node: r.degree for r in degrees(mirrored).collect()} == dup_graph.deg
+    assert {r.node: r.degree for r in degrees(mirror(canonical)).collect()} == dup_graph.deg
+
+
+def test_triangles_match_python(spark, dup_graph):
+    got = [(r.a, r.b, r.c) for r in graph_triangles(spark, SF_SMOKE).collect()]
+    assert len(got) == len(set(got)), "each triangle lists once"
+    assert set(got) == dup_graph.tri
+    assert dup_graph.tri, "dup graph must have a triangle"
+
+
+def test_pagerank_matches_python_power_iteration(spark, dup_graph):
+    adj = dup_graph.adj
+    n = len(adj)
+    rank = {v: 1.0 / n for v in adj}
+    for _ in range(_PR_ITERS):
+        rank = {
+            v: (1 - _PR_DAMP) / n + _PR_DAMP * sum(rank[u] / len(adj[u]) for u in nbrs)
+            for v, nbrs in adj.items()
+        }
+    got = {r.doc_id: r.pagerank for r in graph_pagerank(spark, SF_SMOKE).collect()}
+    assert set(got) == set(adj)
+    for v, r in rank.items():
+        assert abs(got[v] - _round6(r)) <= 1e-6, v
+
+
+def test_kcore_matches_python_and_is_stable(spark, dup_graph):
+    edges = dup_graph.pairs
+    deg0 = dup_graph.deg
+    nodes = set(deg0)
     alive = set(nodes)
     history = []
     for _ in range(_PEEL_ROUNDS):
@@ -283,15 +298,8 @@ def test_kcore_matches_python_and_is_stable(spark):
         assert got[v].degree >= 2
 
 
-def test_assortativity_matches_python(spark):
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    adj = defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
+def test_assortativity_matches_python(spark, dup_graph):
+    adj = dup_graph.adj
     de = [
         (len(adj[u]), len(adj[w])) for u in adj for w in adj[u]
     ]
@@ -311,12 +319,8 @@ def test_assortativity_matches_python(spark):
         assert r.assortativity is None
 
 
-def test_powerlaw_alpha_matches_python(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    deg = Counter()
-    for r in pairs:
-        deg[r.doc_a] += 1
-        deg[r.doc_b] += 1
+def test_powerlaw_alpha_matches_python(spark, dup_graph):
+    deg = dup_graph.deg
     n = len(deg)
     alpha = 1.0 + n / sum(math.log(d / 0.5) for d in deg.values())
     row = graph_powerlaw_alpha(spark, SF_SMOKE).collect()[0]
@@ -326,16 +330,11 @@ def test_powerlaw_alpha_matches_python(spark):
     assert alpha > 1.0
 
 
-def test_modularity_matches_python(spark):
-    pairs = [(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()]
+def test_modularity_matches_python(spark, dup_graph):
     lbl = {r.doc_id: r.cluster_id for r in ns_dup_clusters(spark, SF_SMOKE).collect()}
-    deg = defaultdict(int)
-    for a, b in pairs:
-        deg[a] += 1
-        deg[b] += 1
-    m = len(pairs)
+    m = len(dup_graph.pairs)
     d_c = defaultdict(int)
-    for node, d in deg.items():
+    for node, d in dup_graph.deg.items():
         d_c[lbl[node]] += d
     sum_dc2 = sum(v * v for v in d_c.values())
     row = graph_modularity_clusters(spark, SF_SMOKE).collect()[0]
@@ -345,10 +344,10 @@ def test_modularity_matches_python(spark):
     assert row.modularity < 1.0
 
 
-def test_matching_equals_sequential_greedy(spark):
+def test_matching_equals_sequential_greedy(spark, dup_graph):
     """Locally-dominant matching under a strict total order must equal
     the sequential greedy matching (Preis) — and be a valid matching."""
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
+    pairs = dup_graph.rows
     edges = sorted(
         (
             (10000 - int(math.floor(r.jaccard * 10000 + 0.5))) * 10**12

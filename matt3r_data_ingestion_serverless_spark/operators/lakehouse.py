@@ -604,16 +604,7 @@ class LakehouseTable:
         post-evolution scan over pre-evolution files still projects the
         evolved columns (as null) instead of inheriting whichever file
         schema Spark sampled."""
-        man = self.manifest(version)
-        hit, _ = self._split_by_range(man, bounds)
-        if not hit:
-            return self.read(version).limit(0)
-        return self._apply_deletes(
-            self._apply_schema_reader(man).parquet(
-                *[os.path.join(self.path, f["path"]) for f in hit]
-            ),
-            man,
-        )
+        return self.scan_any([bounds], version)
 
     def scan_any(
         self, bounds_list: list[dict[str, tuple]], version: int | None = None
@@ -716,9 +707,7 @@ class LakehouseTable:
         """(files read, files total) for a bounded scan — the pruning
         ratio tests/SCALE.md cite. ``version`` mirrors :meth:`scan` so
         the probe agrees with a version-pinned scan."""
-        man = self.manifest(version)
-        hit, _ = self._split_by_range(man, bounds)
-        return len(hit), man["files"]
+        return self.files_scanned_any([bounds], version)
 
     # -- write-audit-publish (WAP) staging ---------------------------------
     def stage_append(self, df: DataFrame) -> str:

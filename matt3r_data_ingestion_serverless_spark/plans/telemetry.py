@@ -113,9 +113,7 @@ def w2_stationary_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "w1_ap_transitions",
-    sql=f"""
+_W1_SQL = f"""
 WITH coded AS (
   SELECT user_id, ts, {_CODE_CASE_SQL} AS code FROM events
 ), lagged AS (
@@ -129,8 +127,10 @@ SELECT user_id, epoch_us(ts) AS ts_us,
        CAST(code AS DOUBLE) AS canbus_state
 FROM lagged
 WHERE (code = 3 AND prev <= 2) OR (code <= 2 AND prev = 3)
-""",
-)
+"""
+
+
+@register("w1_ap_transitions", sql=_W1_SQL)
 def w1_ap_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 lag transition detection (infer_autopilot_states.py:78-88)."""
     events = load_table(spark, sf_dir, "events").withColumn("code", _event_code_col())
@@ -516,24 +516,7 @@ def w2_streamed_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "w1_streamed_transitions",
-    sql=f"""
-WITH coded AS (
-  SELECT user_id, ts, {_CODE_CASE_SQL} AS code FROM events
-), lagged AS (
-  SELECT user_id, ts, code,
-         lag(code, 1) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-  FROM coded
-)
-SELECT user_id, epoch_us(ts) AS ts_us,
-       CASE WHEN code = 3 AND prev <= 2 THEN 'engagement'
-            ELSE 'disengagement' END AS status,
-       CAST(code AS DOUBLE) AS canbus_state
-FROM lagged
-WHERE (code = 3 AND prev <= 2) OR (code <= 2 AND prev = 3)
-""",
-)
+@register("w1_streamed_transitions", sql=_W1_SQL)
 def w1_streamed_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 through the STREAMING engine, graded against the IDENTICAL
     batch oracle: unlike W2's runs, a transition emits the moment its

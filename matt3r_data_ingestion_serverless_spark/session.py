@@ -11,6 +11,12 @@ code runs unchanged on a multi-executor cluster:
   mapInPandas, so Arrow batch transfer is the Python boundary.
 - session timezone pinned to UTC: timestamps compare bit-stable against
   the DuckDB oracle and across clusters in different zones.
+- Python workers fork from the package's `worker_daemon`, which keeps
+  each zip importer's directory (pyspark.zip, the Spark jar, py4j)
+  across tasks unless its archive changed on disk; pyspark's stock
+  daemon re-reads all of them at the start of every task (~0.17 s of
+  worker CPU per task). The workers must be able to import the
+  package: run from the repo root or put it on PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -80,6 +86,10 @@ def get_spark(app_name: str = "matt3r-dpl-spark", extra_conf: dict | None = None
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(
+            "spark.python.daemon.module",
+            "matt3r_data_ingestion_serverless_spark.worker_daemon",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # static conf: bucketed tables (saveAsTable) land outside the

@@ -40,6 +40,16 @@ def frontier_loop(
     return seen
 
 
+def mirror(edges: DataFrame) -> DataFrame:
+    """Every edge of ``edges`` in both directions: ``src`` and ``dst``
+    swapped, any other column carried along. An explode, not a union:
+    the input is computed once, where a union would plan it twice."""
+    flip = {"src": "dst", "dst": "src"}
+    fwd = F.struct(*edges.columns)
+    rev = F.struct(*(F.col(flip.get(c, c)).alias(c) for c in edges.columns))
+    return edges.select(F.explode(F.array(fwd, rev)).alias("e")).select("e.*")
+
+
 def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node) + symmetric, pinned (src, dst) → (node, cluster_id), the
     minimum node id of each component; a node without edges keeps its

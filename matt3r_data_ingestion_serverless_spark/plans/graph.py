@@ -19,6 +19,7 @@ from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, ro
 from matt3r_data_ingestion_serverless_spark.operators.iterate import (
     connected_components,
     frontier_loop,
+    mirror,
 )
 from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
 from matt3r_data_ingestion_serverless_spark.plans.northstar import (
@@ -32,16 +33,6 @@ from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 # ---------------------------------------------------------------------------
 # the near-dup graph: edge list, degrees, triangles
 # ---------------------------------------------------------------------------
-
-
-def mirror(edges: DataFrame) -> DataFrame:
-    """Every edge of ``edges`` in both directions: ``src`` and ``dst``
-    swapped, any other column carried along. An explode, not a union:
-    the input is computed once, where a union would plan it twice."""
-    flip = {"src": "dst", "dst": "src"}
-    fwd = F.struct(*edges.columns)
-    rev = F.struct(*(F.col(flip.get(c, c)).alias(c) for c in edges.columns))
-    return edges.select(F.explode(F.array(fwd, rev)).alias("e")).select("e.*")
 
 
 def near_dup_edges(spark: SparkSession, sf_dir: str, *, mirrored: bool = False) -> DataFrame:

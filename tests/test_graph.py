@@ -8,6 +8,7 @@ from types import SimpleNamespace
 
 import pytest
 
+from matt3r_data_ingestion_serverless_spark.operators.iterate import mirror
 from matt3r_data_ingestion_serverless_spark.plans.curation import ns_dup_clusters
 from matt3r_data_ingestion_serverless_spark.plans.graph import (
     _BIP_HOPS,
@@ -34,7 +35,6 @@ from matt3r_data_ingestion_serverless_spark.plans.graph import (
     graph_sssp_bounded,
     graph_topo_longest_path,
     graph_triangles,
-    mirror,
     near_dup_edges,
 )
 from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh

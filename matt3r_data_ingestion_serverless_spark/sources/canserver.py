@@ -358,10 +358,10 @@ def _device_of(path: str) -> str:
 
 def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        for _, row in pdf.iterrows():
-            device = _device_of(row["path"])
+        for path, mtime, content in zip(pdf["path"], pdf["modificationTime"], pdf["content"]):
+            device = _device_of(path)
             try:
-                sig = decode_signals(bytes(row["content"]), device)
+                sig = decode_signals(bytes(content), device)
             except ValueError as exc:
                 # bad header (S2): the reference exit(1)s the whole
                 # Lambda (:197-198); a stream must survive one bad
@@ -372,10 +372,10 @@ def _decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
                 yield pd.DataFrame(
                     {
                         "device_id": [device],
-                        "ts": [row["modificationTime"]],
+                        "ts": [mtime],
                         "channel": ["_quarantine"],
                         "values": [None],
-                        "state": [f"{row['path']}: {exc}"],
+                        "state": [f"{path}: {exc}"],
                     }
                 )
                 continue

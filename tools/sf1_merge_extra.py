@@ -37,16 +37,12 @@ def main() -> None:
     args = sys.argv[1:]
     force = "--force" in args  # re-grade even recorded-OK names
     names = [a for a in args if a != "--force"]
-    from pyspark.sql import SparkSession
+    from matt3r_data_ingestion_serverless_spark import get_spark
+    from matt3r_data_ingestion_serverless_spark.session import machine_driver_mem
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("sf1-merge-extra")
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", machine_driver_mem())
+    # the session tools/sf1_sweep.py grades with
+    spark = get_spark("sf1-merge-extra", extra_conf={"spark.sql.shuffle.partitions": "32"})
     spark.sparkContext.setLogLevel("ERROR")
 
     import importlib

@@ -5,10 +5,10 @@ every streamed gate entry, the whole lakehouse family (j6-j17),
 the reference-parity telemetry heads, and the top-40 most expensive
 bench queries.
 
-Runs on a PLAIN SparkSession (the driver's verify shape), compares each
-query against its DuckDB oracle on the SAME .sf1data parquet, records
-the Spark row count as the non-vacuousness proof, and writes
-CORRECTNESS_sf1.json.
+Runs on a `get_spark` session (the machine's cores and driver heap, 32
+shuffle partitions), compares each query against its DuckDB oracle on
+the SAME .sf1data parquet, records the Spark row count as the
+non-vacuousness proof, and writes CORRECTNESS_sf1.json.
 
 Usage: python tools/gen_sf1.py && python tools/sf1_sweep.py
 """
@@ -73,21 +73,14 @@ TELEMETRY = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from matt3r_data_ingestion_serverless_spark import get_spark
+    from matt3r_data_ingestion_serverless_spark.session import machine_driver_mem
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("sf1-sweep")
-        .config("spark.driver.memory", "24g")
-        # sized for the 10x fixtures: the plain-session default of 200
-        # shuffle partitions turns the iterative queries (DBSCAN /
-        # component labeling) into hundreds of 200-task rounds on a
-        # small core count; AQE coalescing + 32 matches bench.py's
-        # sizing discipline (SCALE.md §15)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", machine_driver_mem())
+    # 32 shuffle partitions, as the earlier sf1 sweeps ran: a 200-task
+    # default made the iterative queries (DBSCAN / component labeling)
+    # hundreds of 200-task rounds; AQE coalesces from 32 (SCALE.md §15)
+    spark = get_spark("sf1-sweep", extra_conf={"spark.sql.shuffle.partitions": "32"})
     spark.sparkContext.setLogLevel("ERROR")
 
     import importlib

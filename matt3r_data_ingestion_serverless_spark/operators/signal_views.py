@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _first_values(channel: str):
-    return F.first(F.when(F.col("channel") == channel, F.col("values")), ignorenulls=True)
+def _first_values(channel: str, col: str = "`values`") -> str:
+    return f"first(IF(channel = '{channel}', {col}, NULL), true)"
 
 
 def signals_to_wide(signals: DataFrame) -> DataFrame:
@@ -27,29 +27,27 @@ def signals_to_wide(signals: DataFrame) -> DataFrame:
     return (
         signals.groupBy("device_id", "ts")
         .agg(
-            _first_values("accel").alias("_accel"),
-            _first_values("gyro").alias("_gyro"),
-            _first_values("location").alias("_loc"),
-            _first_values("speed").alias("_speed"),
-            F.first(F.when(F.col("channel") == "ap_status", F.col("state")), ignorenulls=True).alias(
-                "AP_status"
-            ),
+            F.expr(f"{_first_values('accel')} AS _accel"),
+            F.expr(f"{_first_values('gyro')} AS _gyro"),
+            F.expr(f"{_first_values('location')} AS _loc"),
+            F.expr(f"{_first_values('speed')} AS _speed"),
+            F.expr(f"{_first_values('ap_status', 'state')} AS AP_status"),
         )
-        .select(
+        .selectExpr(
             "device_id",
             "ts",
-            F.col("_accel")[0].alias("long_acc"),
-            F.col("_accel")[1].alias("lat_acc"),
-            F.col("_accel")[2].alias("vert_acc"),
-            F.when(F.col("_accel").isNotNull(), F.lit("m/s^2")).alias("acc_unit"),
-            F.col("_gyro")[0].alias("yaw_rate"),
-            F.col("_gyro")[1].alias("pitch_rate"),
-            F.col("_gyro")[2].alias("roll_rate"),
-            F.when(F.col("_gyro").isNotNull(), F.lit("rad/s")).alias("gyro_unit"),
-            F.col("_loc")[0].alias("lat"),
-            F.col("_loc")[1].alias("long"),
-            F.col("_speed")[0].alias("speed"),
-            F.when(F.col("_speed").isNotNull(), F.lit("KPH")).alias("speed_unit"),
+            "_accel[0] AS long_acc",
+            "_accel[1] AS lat_acc",
+            "_accel[2] AS vert_acc",
+            "IF(_accel IS NULL, NULL, 'm/s^2') AS acc_unit",
+            "_gyro[0] AS yaw_rate",
+            "_gyro[1] AS pitch_rate",
+            "_gyro[2] AS roll_rate",
+            "IF(_gyro IS NULL, NULL, 'rad/s') AS gyro_unit",
+            "_loc[0] AS lat",
+            "_loc[1] AS long",
+            "_speed[0] AS speed",
+            "IF(_speed IS NULL, NULL, 'KPH') AS speed_unit",
             "AP_status",
         )
     )

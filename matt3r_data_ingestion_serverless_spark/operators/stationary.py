@@ -12,35 +12,43 @@ the naive plan windows by device alone, so one device's ENTIRE history
 is a single sort in a single task — a multi-year backfill funnels
 10^8-10^9 rows through one core. Instead we sessionize within
 (device, day) buckets — matching the silver partition layout
-(SCALE.md §1) — and stitch runs that span bucket boundaries:
+(SCALE.md §1) — and stitch runs that span bucket boundaries. The plan
+is one scan and two exchanges:
 
-    stage 1 (bulk, bounded):  window per (device, DAY) → run-id →
-        groupBy(device, day, run) → per-run extent + open_start /
-        open_end flags (run touches the bucket's first/last sample)
-    stage 2 (interior runs):  runs open at NEITHER end can never merge
-        across buckets → emitted directly, no further shuffle
-    stage 3 (boundary stitch): runs open at start or end — at most TWO
-        per (device, day) — chain via a device-ordered window: run B
-        continues run A iff A is open at its bucket's end, B is open at
-        its bucket's start, and B's bucket is the device's NEXT
-        data-bearing bucket (an all-zero day is open at both ends and
-        chains straight through; a day whose boundary sample is moving
-        breaks the chain, as does a data-bearing day with no boundary
-        zero-run, because the bucket sequence number jumps)
+    stage 1 (exchange 1, keyed (device, DAY)): one ordered window gives
+        the run ids and whether each run holds the bucket's first /
+        last sample (open_start / open_end); one aggregate gives one
+        row per run, zero or moving
+    stage 2 (exchange 2, keyed (device, _pb, _pr)): _pb/_pr are the
+        run's bucket and run id for an INTERIOR run (open at neither
+        end) and NULL for a boundary run. So each interior run is a
+        partition of its own, and a device's boundary runs — the first
+        and last run of each bucket, at most 2 per device-day — share
+        the partition (device, NULL, NULL), ordered by start. There the
+        row before a run open at its bucket's start is the last run of
+        the device's previous data-bearing bucket. The running count of
+        rows that are NOT (zero and open at start) numbers the chains,
+        so such a zero run joins the chain of the row before it. If
+        that row is a zero run, the two are one run of the series (an
+        all-zero day is one run open at both ends and chains straight
+        through). If it is a moving run, the chain is the moving run
+        plus the zero run; moving runs are dropped after the window,
+        so the zero run stands alone (a moving boundary sample breaks
+        the chain). The groupBy on (device, _pb, _pr, chain) needs no
+        further exchange: the window's hash partitioning satisfies it.
 
-The heavy window is now keyed by (device, day): max task input is one
-device-day, regardless of total history length. The stitch window is
-keyed by device but holds <= 2 rows per device-day — bounded by days
+The heavy window is keyed by (device, day): max task input is one
+device-day, regardless of total history length. The boundary partition
+is keyed by device but holds <= 2 rows per device-day — bounded by days
 of history (~10^3-10^4 rows/device at 100 TB), not by sample count.
 Duration filter and trim run AFTER stitching so a run spanning
-midnight still qualifies on its full length.
+midnight still qualifies on its full length. Nothing is persisted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def stationary_intervals(
@@ -69,152 +77,70 @@ def stationary_intervals(
     partitioning ("day"/"hour"/...); ``bucket=None`` falls back to the
     single-window-per-device plan (kept for differential testing —
     results are identical by construction, see
-    tests/test_temporal_props.py::test_bucketed_equals_unbucketed).
+    tests/test_bucketed_windows.py).
     """
+    is_zero = f"CAST({speed} <= {float(zero_threshold)!r}D AS INT) AS _z"
     if bucket is None:
-        return _device_window_plan(
-            df, key, ts, speed,
-            zero_threshold=zero_threshold,
-            min_duration_s=min_duration_s,
-            trim_s=trim_s,
+        w = f"PARTITION BY {key} ORDER BY {ts}"
+        runs = (
+            df.selectExpr(key, ts, f"unix_micros({ts}) AS _us", is_zero)
+            .selectExpr("*", f"CAST(lag(_z, 1, -1) OVER ({w}) <> _z AS INT) AS _chg")
+            .selectExpr("*", f"sum(_chg) OVER ({w}) AS _run")
+            .where("_z = 1")
+            .groupBy(key, "_run")
+            .agg(F.expr("min(_us) AS _s"), F.expr("max(_us) AS _e"))
         )
-
-    bkt = F.date_trunc(bucket, F.col(ts))
-    w = Window.partitionBy(key, "_bkt").orderBy(ts)
-    is_zero: Column = (F.col(speed) <= F.lit(zero_threshold)).cast("int")
-
-    # Stage 1: per-(device, bucket) runs — the only exchange that sees
-    # raw samples, and its partition key includes the date bucket.
-    # Openness is detected POSITIONALLY in the same ordered window that
-    # computes the run ids (a run is open at the bucket start iff it
-    # holds the row with no lag-predecessor, i.e. the bucket's first
-    # sample; symmetrically for lead/last) and folded into the stage-1
-    # aggregate as max(bool) — this removes the extra whole-partition
-    # min/max window pass the r05 plan paid (VERDICT r05 next-step 7);
-    # lag/lead share one WindowExec with the run-id lag, so stage 1 is
-    # one sort, two window passes, one hash aggregate.
-    all_runs = (
-        df.select(key, ts, speed)
-        .withColumn("_bkt", bkt)
-        .withColumn("_us", F.unix_micros(F.col(ts)))
-        .withColumn("_z", is_zero)
-        .withColumn("_first", F.lag("_us", 1).over(w).isNull())
-        .withColumn("_last", F.lead("_us", 1).over(w).isNull())
-        .withColumn("_chg", (F.lag("_z", 1, -1).over(w) != F.col("_z")).cast("int"))
-        .withColumn("_run", F.sum("_chg").over(w))
-        # ALL runs (zero AND moving) aggregate here — keeping the moving
-        # runs costs only extra hash-agg groups in the same exchange
-        # (the window's (key, bucket) partitioning already satisfies the
-        # groupBy, so no shuffle either way) and buys the data-bearing
-        # bucket list below WITHOUT a second scan of the sample table
-        # (the r06 plan re-read df just to number the buckets —
-        # VERDICT r06 next-step 6).
-        .groupBy(key, "_bkt", "_run")
-        .agg(
-            F.min("_us").alias("_start_us"),
-            F.max("_us").alias("_end_us"),
-            F.max("_first").alias("_open_start"),
-            F.max("_last").alias("_open_end"),
-            F.max("_z").alias("_zrun"),
+    else:
+        w = f"PARTITION BY {key}, _bkt ORDER BY {ts}"
+        ws = f"PARTITION BY {key}, _pb, _pr ORDER BY _s"
+        runs = (
+            df.selectExpr(
+                key, ts, f"date_trunc('{bucket}', {ts}) AS _bkt",
+                f"unix_micros({ts}) AS _us", is_zero,
+            )
+            # Stage 1: the only exchange that sees raw samples; its
+            # partition key includes the date bucket. lag/lead share one
+            # WindowExec with the run-id lag.
+            .selectExpr(
+                "*",
+                f"lag(_us) OVER ({w}) IS NULL AS _first",
+                f"lead(_us) OVER ({w}) IS NULL AS _last",
+                f"CAST(lag(_z, 1, -1) OVER ({w}) <> _z AS INT) AS _chg",
+            )
+            .selectExpr("*", f"sum(_chg) OVER ({w}) AS _run")
+            .groupBy(key, "_bkt", "_run")
+            .agg(
+                F.expr("min(_us) AS _s"),
+                F.expr("max(_us) AS _e"),
+                F.expr("max(_z) AS _z"),
+                F.expr("max(_first) OR max(_last) AS _open"),
+                F.expr("max(_first) AS _open_start"),
+            )
+            # an interior moving run can never join a zero chain
+            .where("_z = 1 OR _open")
+            # Stage 2: see the module docstring
+            .selectExpr(
+                key, "_s", "_e", "_z", "_open_start",
+                "IF(_open, NULL, _bkt) AS _pb",
+                "IF(_open, NULL, _run) AS _pr",
+            )
+            .selectExpr(
+                "*",
+                f"sum(IF(_z = 1 AND _open_start, 0, 1)) OVER ({ws} ROWS UNBOUNDED PRECEDING)"
+                " AS _grp",
+            )
+            # after the window: a zero run that follows a moving one
+            # shares its chain number, and must stand alone
+            .where("_z = 1")
+            .groupBy(key, "_pb", "_pr", "_grp")
+            .agg(F.expr("min(_s) AS _s"), F.expr("max(_e) AS _e"))
         )
-        # consumed by THREE readers (interior, boundary, bucket list):
-        # persist so the sample-level window stack runs once. One row
-        # per run — a tiny fraction of sample bytes; MEMORY_AND_DISK
-        # spills instead of OOM at scale.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    runs = all_runs.filter(F.col("_zrun") == 1)
-
-    # Stage 2: interior runs never cross a bucket edge — emit directly.
-    interior = runs.filter(~F.col("_open_start") & ~F.col("_open_end")).select(
-        key, "_start_us", "_end_us"
-    )
-
-    # Stage 3: boundary runs (<= 2 per device-bucket). Sequence number
-    # of each DATA-BEARING bucket per device: a gap in this sequence
-    # means an intervening day whose samples were all moving (or whose
-    # boundary runs were interior-only — impossible: a run containing
-    # the bucket's first/last sample is by definition open), so the
-    # chain must break there. Every data-bearing bucket owns at least
-    # one run, so the bucket list is a distinct over the persisted run
-    # table — no second pass over raw samples.
-    bucket_seq = (
-        all_runs.select(key, "_bkt")
-        .distinct()
-        .withColumn(
-            "_seq", F.row_number().over(Window.partitionBy(key).orderBy("_bkt"))
-        )
-        .select(key, "_bkt", "_seq")
-    )
-    boundary = runs.filter(F.col("_open_start") | F.col("_open_end")).join(
-        bucket_seq, on=[key, "_bkt"], how="inner"
-    )
-
-    ws = Window.partitionBy(key).orderBy("_start_us")
-    wsr = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    stitched = (
-        boundary.withColumn(
-            "_continues",
-            F.lag("_open_end", 1, False).over(ws)
-            & F.col("_open_start")
-            & (F.lag("_seq", 1, -2).over(ws) == F.col("_seq") - 1),
-        )
-        .withColumn("_grp", F.sum((~F.col("_continues")).cast("int")).over(wsr))
-        .groupBy(key, "_grp")
-        .agg(F.min("_start_us").alias("_start_us"), F.max("_end_us").alias("_end_us"))
-        .select(key, "_start_us", "_end_us")
-    )
 
     trim_us = int(trim_s * 1_000_000)
     min_dur_us = int(min_duration_s * 1_000_000)
-    return (
-        interior.unionByName(stitched)
-        .filter(F.col("_end_us") - F.col("_start_us") >= min_dur_us)
-        .select(
-            F.col(key),
-            (F.col("_start_us") + trim_us).alias("start_us"),
-            (F.col("_end_us") - trim_us).alias("end_us"),
-            F.round((F.col("_end_us") - F.col("_start_us")) / 1e6, 6).alias("duration_s"),
-        )
-    )
-
-
-def _device_window_plan(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    speed: str,
-    *,
-    zero_threshold: float,
-    min_duration_s: float,
-    trim_s: float,
-) -> DataFrame:
-    """The pre-r05 single-window-per-device plan. Unsplittable for one
-    device's unbounded history — retained only as the differential
-    twin for the bucketed plan's property tests."""
-    w = Window.partitionBy(key).orderBy(ts)
-    is_zero: Column = (F.col(speed) <= F.lit(zero_threshold)).cast("int")
-
-    runs = (
-        df.select(key, ts, speed)
-        .withColumn("_z", is_zero)
-        .withColumn("_chg", (F.lag("_z", 1, -1).over(w) != F.col("_z")).cast("int"))
-        .withColumn("_run", F.sum("_chg").over(w))
-        .filter(F.col("_z") == 1)
-        .groupBy(key, "_run")
-        .agg(
-            F.min(F.unix_micros(F.col(ts))).alias("_start_us"),
-            F.max(F.unix_micros(F.col(ts))).alias("_end_us"),
-        )
-    )
-    trim_us = int(trim_s * 1_000_000)
-    min_dur_us = int(min_duration_s * 1_000_000)
-    return (
-        runs.filter(F.col("_end_us") - F.col("_start_us") >= min_dur_us)
-        .select(
-            F.col(key),
-            (F.col("_start_us") + trim_us).alias("start_us"),
-            (F.col("_end_us") - trim_us).alias("end_us"),
-            F.round((F.col("_end_us") - F.col("_start_us")) / 1e6, 6).alias("duration_s"),
-        )
+    return runs.where(f"_e - _s >= {min_dur_us}").selectExpr(
+        key,
+        f"_s + {trim_us} AS start_us",
+        f"_e - {trim_us} AS end_us",
+        "round((_e - _s) / 1e6, 6) AS duration_s",
     )

@@ -6,7 +6,8 @@ Three layers of proof:
   1. hypothesis differential: on random zero/moving sequences spanning
      several days (including runs that straddle midnight, all-zero
      days, and absent days), the bucketed plan == the legacy
-     device-window plan row-for-row. Same for transition carry rows.
+     device-window plan row-for-row, with 2-3 devices interleaved on the
+     same days and for day and hour buckets. Same for transitions.
   2. plan pins: the heavy window exchange's hashpartitioning key
      includes the date_trunc bucket for both operators.
   3. planted skew: one device holding 80 % of rows across 30 days
@@ -35,47 +36,65 @@ _settings = settings(
 
 _EPOCH = datetime.datetime(2024, 3, 1)
 
-# A day-plan: list of (hour_offsets_present, zero_flags). Encoded as a
-# list of days, each day a list of (second_of_day, is_zero) samples.
-# Gaps between samples and whole missing days are the interesting part.
+# A device's schedule is a list of days, each day a list of
+# (second_of_day, is_zero) samples. Gaps between samples and whole
+# missing days are the interesting part.
 _day = st.lists(
     st.tuples(st.integers(0, 86_399), st.booleans()),
     min_size=0,
     max_size=14,
 ).map(lambda xs: sorted(set(xs)))
-_schedule = st.lists(_day, min_size=1, max_size=5)
+# one schedule per device: 2-3 devices interleaved on the same days, so
+# the boundary-run partition (device, NULL, NULL) and the one-row
+# interior partitions are exercised across keys
+_fleet = st.lists(st.lists(_day, min_size=1, max_size=5), min_size=2, max_size=3)
 
 
-def _rows(schedule):
+def _rows(fleet, value):
     rows = []
-    for d, day in enumerate(schedule):
-        seen = set()
-        for sec, z in day:
-            if sec in seen:  # dedupe second-of-day collisions
-                continue
-            seen.add(sec)
-            ts = _EPOCH + datetime.timedelta(days=d, seconds=sec)
-            rows.append(("dev", ts, 0.0 if z else 10.0))
+    for i, schedule in enumerate(fleet):
+        for d, day in enumerate(schedule):
+            seen = set()
+            for sec, x in day:
+                if sec in seen:  # dedupe second-of-day collisions
+                    continue
+                seen.add(sec)
+                ts = _EPOCH + datetime.timedelta(days=d, seconds=sec)
+                rows.append((f"dev{i}", ts, value(x)))
     return rows
 
 
-@given(_schedule)
-@_settings
-def test_bucketed_stationary_equals_unbucketed(spark, schedule):
-    rows = _rows(schedule)
+def _same_rows(bucketed, unbucketed):
+    def key(r):
+        return (r.device_id, r[1])
+
+    got = sorted(bucketed.collect(), key=key)
+    want = sorted(unbucketed.collect(), key=key)
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def _check_stationary(spark, fleet, bucket):
+    rows = _rows(fleet, lambda z: 0.0 if z else 10.0)
     if not rows:
         return
     df = spark.createDataFrame(rows, "device_id string, ts timestamp, speed double")
     kw = dict(zero_threshold=0.0, min_duration_s=13.0, trim_s=3.0)
-    got = sorted(
-        stationary_intervals(df, bucket="day", **kw).collect(),
-        key=lambda r: r.start_us,
+    _same_rows(
+        stationary_intervals(df, bucket=bucket, **kw),
+        stationary_intervals(df, bucket=None, **kw),
     )
-    want = sorted(
-        stationary_intervals(df, bucket=None, **kw).collect(),
-        key=lambda r: r.start_us,
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+@given(_fleet)
+@_settings
+def test_bucketed_stationary_equals_unbucketed(spark, fleet):
+    _check_stationary(spark, fleet, "day")
+
+
+@given(_fleet)
+@_settings
+def test_hour_bucketed_stationary_equals_unbucketed(spark, fleet):
+    _check_stationary(spark, fleet, "hour")
 
 
 _codes = st.lists(
@@ -83,31 +102,43 @@ _codes = st.lists(
     min_size=0,
     max_size=14,
 ).map(lambda xs: sorted(set(xs)))
-_code_schedule = st.lists(_codes, min_size=1, max_size=5)
+_code_fleet = st.lists(
+    st.lists(_codes, min_size=1, max_size=5), min_size=2, max_size=3
+)
 
 
-@given(_code_schedule)
-@_settings
-def test_bucketed_transitions_equal_unbucketed(spark, schedule):
-    rows = []
-    for d, day in enumerate(schedule):
-        seen = set()
-        for sec, code in day:
-            if sec in seen:
-                continue
-            seen.add(sec)
-            ts = _EPOCH + datetime.timedelta(days=d, seconds=sec)
-            rows.append(("dev", ts, code if code != 4 else None))  # None = unmapped
+def _check_transitions(spark, fleet, bucket):
+    rows = _rows(fleet, lambda c: c if c != 4 else None)  # None = unmapped
     if not rows:
         return
     df = spark.createDataFrame(rows, "device_id string, ts timestamp, code int")
-    got = sorted(
-        ap_transitions(df, bucket="day").collect(), key=lambda r: r.ts_us
-    )
-    want = sorted(
-        ap_transitions(df, bucket=None).collect(), key=lambda r: r.ts_us
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    _same_rows(ap_transitions(df, bucket=bucket), ap_transitions(df, bucket=None))
+
+
+@given(_code_fleet)
+@_settings
+def test_bucketed_transitions_equal_unbucketed(spark, fleet):
+    _check_transitions(spark, fleet, "day")
+
+
+@given(_code_fleet)
+@_settings
+def test_hour_bucketed_transitions_equal_unbucketed(spark, fleet):
+    _check_transitions(spark, fleet, "hour")
+
+
+def test_null_last_code_blocks_next_buckets_engagement(spark):
+    # the first day ends on an unmapped (NULL) code; the next day opens
+    # on ACTIVE_NOMINAL: its predecessor is NULL, not the earlier 2
+    day = datetime.timedelta(days=1)
+    rows = [
+        ("dev", _EPOCH + datetime.timedelta(hours=9), 2),
+        ("dev", _EPOCH + datetime.timedelta(hours=10), None),
+        ("dev", _EPOCH + day + datetime.timedelta(hours=1), 3),
+    ]
+    df = spark.createDataFrame(rows, "device_id string, ts timestamp, code int")
+    assert ap_transitions(df, bucket="day").collect() == []
+    assert ap_transitions(df, bucket=None).collect() == []
 
 
 def _executed_plan(df) -> str:

@@ -6,9 +6,9 @@
    _resolve_blocks), and the physical plan must carry the block-pair
    FlatMapGroupsInPandas kernel plus the downstream per-vector max and
    label-pair aggregates — the shape that stays bounded at 100×.
-2. The W2 stage-1 window stack must not reintroduce the whole-partition
-   bucket-extent pass: exactly TWO Window nodes (lag/lead offsets +
-   running run-id sum) above one exchange keyed by (device, bucket).
+2. The batch W1/W2 operators scan their input once and shuffle it at
+   most twice: no persisted run table, no union of branches that each
+   re-plan the scan. W2 leaves no cached block behind.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans import all_queries
@@ -49,25 +50,32 @@ def test_colbert_maxsim_no_driver_collect(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-def test_w2_stage1_two_window_passes(spark):
-    # a prior test may have MATERIALIZED the identical cached run stage;
-    # formatted explain then re-prints the cached child plan under every
-    # InMemoryTableScan, double-counting the stage-1 windows — clear the
-    # cache so the lazy single-print shape is what's asserted
-    spark.catalog.clearCache()
-    plan = _plan_of(_QUERIES["w2_stationary_intervals"][0](spark, SF_CORRECTNESS))
-    # r05's stage 1 ran three window passes on the (device, day) key
-    # (lag stack, run-id sum, whole-partition bucket extent) and
-    # recomputed them PER UNION BRANCH (interior + boundary) — six
-    # sample-level passes. r06 folds the extent into the lag pass (two
-    # passes) and persists the run table so the stack runs once: the
-    # formatted plan shows the cached run stage (InMemoryRelation) and
-    # at most 5 Window lines (2 stage-1 inside the cached plan, printed
-    # once per scan, + bucket-seq row_number + stitch lag/sum)
-    assert "InMemoryRelation" in plan or "InMemoryTableScan" in plan, plan
-    count = sum(
-        1
-        for ln in plan.splitlines()
-        if ln.strip().startswith("(") and ") Window" in ln
+@pytest.mark.parametrize("name", ["w2_stationary_intervals", "w1_ap_transitions"])
+def test_w1_w2_one_scan_two_exchanges(spark, name):
+    df = _QUERIES[name][0](spark, SF_CORRECTNESS)
+    df.collect()  # let AQE finalize
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, final
+    assert "InMemoryRelation" not in final and "InMemoryTableScan" not in final, final
+    assert "Union" not in final, final
+    assert final.count("Exchange ") <= 2, final
+
+
+def test_w2_leaves_no_cached_blocks(spark):
+    from matt3r_data_ingestion_serverless_spark.operators.stationary import (
+        stationary_intervals,
     )
-    assert 0 < count <= 5, plan
+
+    def cached_rdds():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {info.id() for info in infos if info.numCachedPartitions() > 0}
+
+    before = cached_rdds()
+    df = spark.range(2_000).selectExpr(
+        "CAST(id % 2 AS STRING) AS device_id",
+        "timestamp_seconds(1709251200 + id * 97) AS ts",
+        "IF(id % 5 < 3, 0.0D, 9.0D) AS speed",
+    )
+    assert stationary_intervals(df, min_duration_s=60.0).collect()
+    assert cached_rdds() - before == set()

@@ -55,14 +55,13 @@ AP_STATE_NAMES = {
 # infer_autopilot_states.py:22-23 — the reverse map used by the infer
 # stage omits FAULT/SNA (KeyError in the reference); we map them to NULL.
 AP_CODE_BY_NAME = {v: k for k, v in AP_STATE_NAMES.items() if k < 14}
+_AP_CODE_MAP = "map({})".format(", ".join(f"'{n}', {c}" for n, c in AP_CODE_BY_NAME.items()))
 
 
 def ap_state_code(state: Column) -> Column:
-    """String enum → int code (SURVEY §2.3 D6) as a CASE expression."""
-    expr = F.lit(None).cast("int")
-    for name, code in AP_CODE_BY_NAME.items():
-        expr = F.when(state == name, F.lit(code)).otherwise(expr)
-    return expr
+    """String enum → int code (SURVEY §2.3 D6): one literal map lookup,
+    NULL for FAULT, SNA, NULL and any unknown name."""
+    return F.try_element_at(F.expr(_AP_CODE_MAP), state)
 
 
 def ap_transitions(

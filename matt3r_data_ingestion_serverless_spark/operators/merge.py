@@ -10,13 +10,16 @@ dropped, so the first writer wins and re-delivering any batch (SQS
 at-least-once, serverless.yml:179-204) is a no-op.
 
 Scale stance: committed files are never rewritten. Only the key
-columns of the partitions the incoming batch touches are read back, and
-the rows whose key is new are appended as new files, so the cost is
-proportional to the batch, not the table, and a file-source stream over
-the table reads each row exactly once. The trade-off: every upsert that
-adds rows adds one file per touched partition, and nothing compacts
-them. A compaction must never publish rewritten files into a directory
-that a file-source stream reads, or the stream reads their rows again.
+columns of the partitions the incoming batch touches are read back,
+with the batch's schema (no footer-inference job), and the rows whose
+key is new are appended as new files, so the cost is proportional to
+the batch, not the table, and a file-source stream over the table reads
+each row exactly once. An empty micro-batch costs one job, the collect
+of its partition values: no target read, no join, no write. The
+trade-off: every upsert that adds rows adds one file per touched
+partition, and nothing compacts them. A compaction must never publish
+rewritten files into a directory that a file-source stream reads, or
+the stream reads their rows again.
 
 :func:`merge_plan` is the keyed MERGE INTO (update/delete/insert) plan
 that ``operators/lakehouse.LakehouseTable.merge`` commits.
@@ -27,6 +30,7 @@ from __future__ import annotations
 import functools
 import operator
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,20 +48,29 @@ def upsert_parquet(
     the committed keys of the partitions it touches. Committed files
     are never touched again.
 
-    Into an existing partitioned table the batch is evaluated twice (its
-    partition values, then the write), so callers persist it first, as
-    :func:`foreach_batch_upsert` does."""
+    Into a partitioned table the batch is evaluated twice (its distinct
+    partition values, which prune the target scan, then the write), so
+    callers persist it first, as :func:`foreach_batch_upsert` does. A
+    batch with no partition value (an empty one) writes nothing."""
     spark = batch_df.sparkSession
     partition_cols = list(partition_cols or [])
+    if partition_cols:
+        touched = batch_df.select(*partition_cols).distinct().collect()
+        if not touched:
+            return
     new = batch_df.dropDuplicates(keys)
     if _table_exists(spark, target_dir):
-        old = _read_touched(batch_df, target_dir, partition_cols).select(*keys)
+        old = spark.read.schema(batch_df.schema).parquet(target_dir)
+        if partition_cols:
+            old = old.filter(_partition_predicate(partition_cols, touched))
         on = functools.reduce(operator.and_, [new[k].eqNullSafe(old[k]) for k in keys])
-        new = new.join(old, on, "left_anti")
-        # an empty unpartitioned write still commits a schema-only file;
-        # a partitioned one writes nothing, so it needs no extra job
+        new = new.join(old.select(*keys), on, "left_anti")
+        # an empty unpartitioned write still commits a schema-only file
         if not partition_cols and new.isEmpty():
             return
+    # a write that died left its committed tasks under _temporary; this
+    # job's commit would publish them next to this batch's copy of the rows
+    shutil.rmtree(os.path.join(target_dir, "_temporary"), ignore_errors=True)
     new.write.mode("append").partitionBy(*partition_cols).parquet(target_dir)
 
 
@@ -126,18 +139,6 @@ def merge_plan(
     return j.filter(keep).select(*out)
 
 
-def _read_touched(batch_df: DataFrame, target_dir: str, partition_cols: list[str]) -> DataFrame:
-    """The committed table at ``target_dir``, read back only in the
-    partitions ``batch_df`` touches: the batch's distinct partition
-    values, collected to the driver, become a literal predicate that
-    prunes the parquet scan. This evaluates the batch once more."""
-    target = batch_df.sparkSession.read.parquet(target_dir)
-    if not partition_cols:
-        return target
-    touched = batch_df.select(*partition_cols).distinct().collect()
-    return target.filter(_partition_predicate(partition_cols, touched))
-
-
 def _partition_predicate(cols: list[str], values: list) -> Column:
     """True exactly on the partitions listed in ``values`` (rows over
     ``cols``). Null-safe: a null partition value (the
@@ -156,14 +157,23 @@ def _partition_predicate(cols: list[str], values: list) -> Column:
     return terms[0]
 
 
+def _data_files(path: str):
+    """The files a parquet read of ``path`` takes as data: as Spark's
+    file index does, it skips a file whose path below ``path`` has a
+    component starting with ``.``, or with ``_`` unless it holds ``=``
+    (a partition directory). So ``_SUCCESS``, ``.crc`` files and the
+    ``_temporary/`` tree of a write that died are not data."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        yield from (os.path.join(root, f) for f in files if not hidden(f))
+
+
 def _table_exists(spark: SparkSession, path: str) -> bool:
-    if not os.path.exists(path):
-        return False
-    # a dir with no committed parquet part files is "absent"
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+    return next(_data_files(path), None) is not None
 
 
 def foreach_batch_upsert(target_dir: str, keys: list[str], partition_cols: list[str] | None = None):

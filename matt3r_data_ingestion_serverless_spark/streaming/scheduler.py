@@ -28,22 +28,22 @@ reads the files added since the checkpoint, and committed silver files
 are never rewritten, so each gold leg reads each silver row once. State
 (stationary runs in flight, autopilot last-codes) persists in the state
 store across sweeps, so a 1-minute or 1-day sweep cadence produce
-identical gold tables.
+identical gold tables. A sweep's zone counts are summed from parquet
+footers (one small read per committed file, no Spark job), so a sweep
+with no new raw files runs no Spark job at all.
 """
 
 from __future__ import annotations
 
-import functools
 import os
 
+import pyarrow.parquet as pq
 from pyspark.errors import StreamingQueryException
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from matt3r_data_ingestion_serverless_spark.operators.merge import _table_exists
+from matt3r_data_ingestion_serverless_spark.operators.merge import _data_files
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import (
-    SILVER_SCHEMA,
     _start_autopilot,
     _start_stationary,
     run_silver_pipeline,
@@ -66,8 +66,9 @@ def topology_paths(root: str) -> dict[str, str]:
 def drain_topology(spark: SparkSession, raw_dir: str, root: str) -> dict[str, int]:
     """Run ONE invocation sweep of the full topology: raw → silver,
     then silver → (autopilot ∥ stationary). Returns current row counts
-    per zone so a scheduler can emit progress metrics. Idempotent: a
-    sweep with no new raw files changes nothing.
+    per zone, read from parquet footers, so a scheduler can emit
+    progress metrics. Idempotent: a sweep with no new raw files changes
+    nothing and runs no Spark job.
 
     The gold legs start only after silver has committed, then run
     concurrently. If a leg fails, the sweep still waits for the other
@@ -84,7 +85,7 @@ def drain_topology(spark: SparkSession, raw_dir: str, root: str) -> dict[str, in
         )
     finally:
         _await_all(legs)
-    return _zone_counts(spark, p)
+    return _zone_counts(p)
 
 
 def _await_all(queries: list[StreamingQuery]) -> None:
@@ -100,31 +101,19 @@ def _await_all(queries: list[StreamingQuery]) -> None:
         raise errors[0]
 
 
-# what each zone's count reports, and the zone's parquet schema: reading
-# with a known schema skips the footer-inference job a plain read runs
+# the zone each count reports
 _ZONES = {
-    "silver_rows": ("silver", SILVER_SCHEMA),
-    "autopilot_events": (
-        "gold_autopilot",
-        "device_id string, ts_us bigint, status string, canbus_state double, date date",
-    ),
-    "stationary_intervals": (
-        "gold_stationary",
-        "device_id string, start_us bigint, end_us bigint, n_samples bigint, date date",
-    ),
+    "silver_rows": "silver",
+    "autopilot_events": "gold_autopilot",
+    "stationary_intervals": "gold_stationary",
 }
 
 
-def _zone_counts(spark: SparkSession, p: dict[str, str]) -> dict[str, int]:
-    """Row count per zone, all zones in one aggregation; a zone not
+def _zone_counts(p: dict[str, str]) -> dict[str, int]:
+    """Row count per zone, summed over the footers of its committed data
+    files: no Spark job, one footer read per file. A zone not
     materialized yet (no qualifying events) counts 0."""
-    counts = dict.fromkeys(_ZONES, 0)
-    parts = [
-        spark.read.schema(schema).parquet(p[zone]).select(F.lit(name).alias("zone"))
-        for name, (zone, schema) in _ZONES.items()
-        if _table_exists(spark, p[zone])
-    ]
-    if parts:
-        rows = functools.reduce(DataFrame.unionByName, parts).groupBy("zone").count().collect()
-        counts.update({r["zone"]: r["count"] for r in rows})
-    return counts
+    return {
+        name: sum(pq.read_metadata(f).num_rows for f in _data_files(p[zone]))
+        for name, zone in _ZONES.items()
+    }

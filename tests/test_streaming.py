@@ -15,7 +15,11 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.operators.merge import _table_exists, upsert_parquet
+from matt3r_data_ingestion_serverless_spark.operators.merge import (
+    _data_files,
+    _table_exists,
+    upsert_parquet,
+)
 from matt3r_data_ingestion_serverless_spark.sources import canserver as cs
 from matt3r_data_ingestion_serverless_spark.streaming import pipeline as pl
 from tests.test_canserver import SYNC_US, build_stream
@@ -136,6 +140,27 @@ def test_null_ap_code_suppresses_the_next_transition(spark, dirs):
     assert {(r.status, r.ts_us - SYNC_US) for r in batch.collect()} == want
     gold = spark.read.parquet(dirs["gold"]).collect()
     assert {(r.status, r.ts_us - SYNC_US) for r in gold} == want
+
+
+def test_ap_state_code_maps_every_name(spark):
+    # the reference's reverse map (infer_autopilot_states.py:22-23) has
+    # the eight codes below 14; FAULT, SNA, NULL and an unknown name map
+    # to NULL
+    from matt3r_data_ingestion_serverless_spark.operators.autopilot import (
+        AP_STATE_NAMES,
+        ap_state_code,
+    )
+
+    want = {
+        "DISABLED": 0, "UNAVAILABLE": 1, "AVAILABLE": 2, "ACTIVE_NOMINAL": 3,
+        "ACTIVE_RESTRICTED": 4, "ACTIVE_NAV": 5, "ABORTING": 8, "ABORTED": 9,
+        "FAULT": None, "SNA": None, None: None, "BOGUS": None, "disabled": None,
+    }
+    assert set(AP_STATE_NAMES.values()) <= set(want)
+    df = spark.createDataFrame([(n,) for n in want], "state string")
+    out = df.select("state", ap_state_code(F.col("state")).alias("code"))
+    assert out.schema["code"].dataType.simpleString() == "int"
+    assert dict(tuple(r) for r in out.collect()) == want
 
 
 def test_full_fanout_topology(spark, dirs, tmp_path):
@@ -269,6 +294,27 @@ def test_repeated_unpartitioned_upsert_adds_no_file(spark, tmp_path):
     files = [f for f in os.listdir(target) if f.endswith(".parquet")]
     assert len(files) == 1
     assert spark.read.parquet(target).count() == 2
+
+
+def test_upsert_recovers_from_a_write_that_died(spark, tmp_path):
+    """A write that died leaves part files only under ``_temporary``:
+    they are not data, so the next upsert into an empty target neither
+    fails to infer a schema nor lets its commit publish them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    batch = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "k int, p string, v int")
+    first, later = str(tmp_path / "first"), str(tmp_path / "later")
+    upsert_parquet(batch.limit(1), later, keys=["k"], partition_cols=["p"])
+    for target, task in ((first, "task"), (later, "task/p=b")):
+        os.makedirs(os.path.join(target, "_temporary", "0", task))
+        stale = pa.table({"k": pa.array([2], pa.int32()), "v": pa.array([20], pa.int32())})
+        pq.write_table(stale, os.path.join(target, "_temporary", "0", task, "part-0.parquet"))
+    assert not _table_exists(spark, first)
+    for target in (first, later):
+        upsert_parquet(batch, target, keys=["k"], partition_cols=["p"])
+        assert _rows(spark, target) == [(1, 10, "a"), (2, 20, "b")]
+        assert not os.path.exists(os.path.join(target, "_temporary"))
 
 
 def test_stationary_sessions_stream_schema(spark, dirs):
@@ -623,6 +669,72 @@ def test_gold_legs_read_each_silver_row_once(spark, dirs, tmp_path):
         assert rows_read("autopilot") == rows_read("stationary") == added
 
 
+def _last_job_id(spark):
+    """The newest Spark job id the status store has recorded (-1 if
+    none): the difference of two readings counts the jobs run between
+    them, also once the store has dropped old jobs."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_idle_sweep_runs_no_spark_job(spark, dirs, tmp_path):
+    """A sweep with no new raw files starts no micro-batch and reads its
+    counts from parquet footers: it runs no Spark job."""
+    from matt3r_data_ingestion_serverless_spark.streaming.scheduler import drain_topology
+
+    root = str(tmp_path / "topo")
+    _land_drop(dirs, 0)
+    counts = drain_topology(spark, dirs["raw"], root)
+    assert counts["silver_rows"] > 0
+    before = _last_job_id(spark)
+    assert drain_topology(spark, dirs["raw"], root) == counts
+    assert _last_job_id(spark) == before
+
+
+def test_zone_counts_equal_table_counts(spark, dirs, tmp_path):
+    """The footer-summed zone counts equal a Spark count of every zone
+    after each sweep, and still do with a null partition, ``_SUCCESS``,
+    ``.crc`` and a dead write's ``_temporary`` files in the zones."""
+    from matt3r_data_ingestion_serverless_spark.streaming.scheduler import (
+        _ZONES,
+        _zone_counts,
+        drain_topology,
+        topology_paths,
+    )
+
+    root = str(tmp_path / "topo")
+    p = topology_paths(root)
+
+    def spark_counts():
+        return {
+            name: spark.read.parquet(p[zone]).count() if _table_exists(spark, p[zone]) else 0
+            for name, zone in _ZONES.items()
+        }
+
+    for k in range(len(_DROPS)):
+        _land_drop(dirs, k)
+        counts = drain_topology(spark, dirs["raw"], root)
+        assert counts == _zone_counts(p) == spark_counts()
+    assert all(counts.values())
+
+    null_day = spark.createDataFrame(
+        [("dev9", 1, "engagement", 3.0, None)],
+        "device_id string, ts_us bigint, status string, canbus_state double, date date",
+    )
+    upsert_parquet(null_day, p["gold_autopilot"], ["device_id", "ts_us", "status"], ["date"])
+    assert os.path.isdir(os.path.join(p["gold_autopilot"], "date=__HIVE_DEFAULT_PARTITION__"))
+    for zone in _ZONES.values():
+        names = {f for _, _, fs in os.walk(p[zone]) for f in fs}
+        assert "_SUCCESS" in names and any(f.endswith(".crc") for f in names)
+        src = next(_data_files(p[zone]))
+        os.makedirs(os.path.join(p[zone], "_temporary", "0", "task"))
+        shutil.copy(src, os.path.join(p[zone], "_temporary", "0", "task", "part-0.parquet"))
+    assert _zone_counts(p) == spark_counts()
+    assert _zone_counts(p)["autopilot_events"] == counts["autopilot_events"] + 1
+
+
 def test_drain_topology_failed_leg_stops_every_stream(spark, dirs, tmp_path, monkeypatch):
     """A failing gold leg fails the sweep only after the other leg has
     finished, so no stream is left running; the next sweep resumes the
@@ -753,6 +865,27 @@ def test_foreach_batch_upsert_evaluates_each_batch_once(spark, tmp_path):
     assert cached_rdds() <= before
     out = {(r.k, r.p, r.v) for r in spark.read.parquet(target).collect()}
     assert out == {(1, "odd", 10), (2, "even", 20), (3, "odd", 30), (4, "even", 40), (5, "odd", 50)}
+
+
+def test_empty_micro_batch_writes_nothing(spark, tmp_path):
+    """An empty micro-batch costs the one job that collects its partition
+    values: no target read, no write, not even the target directory."""
+    from matt3r_data_ingestion_serverless_spark.operators.merge import foreach_batch_upsert
+
+    target = str(tmp_path / "t")
+    empty = spark.createDataFrame([], "k int, p string, v int")
+    before = _last_job_id(spark)
+    foreach_batch_upsert(target, ["k"], ["p"])(empty, 0)
+    assert _last_job_id(spark) - before == 1
+    assert not os.path.exists(target)
+
+    one = spark.createDataFrame([(1, "a", 10)], "k int, p string, v int")
+    upsert_parquet(one, target, ["k"], ["p"])
+    committed = sorted(os.listdir(target))
+    before = _last_job_id(spark)
+    foreach_batch_upsert(target, ["k"], ["p"])(empty, 1)
+    assert _last_job_id(spark) - before == 1
+    assert sorted(os.listdir(target)) == committed
 
 
 def test_streamed_bollinger_matches_batch_across_batches(spark, tmp_path):

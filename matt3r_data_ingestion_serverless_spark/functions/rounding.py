@@ -33,3 +33,14 @@ def round6_sql(expr: str) -> str:
     return (
         f"sign({expr}) * floor(abs({expr}) * 1e6 + 0.5) / 1e6"
     )
+
+
+# Integer cents of a 2-decimal value, rounded half away from zero by
+# both engines. Other queries use floor(value * 100 + 0.5), which
+# rounds half up: the two rules differ at .5 boundaries (-0.005 is -1
+# cent here, 0 there), so each oracle names its own rule.
+CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
+
+
+def cents(col: str = "value") -> Column:
+    return F.round(F.col(col) * 100, 0).cast("long")

@@ -14,17 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.functions.rounding import (
+    CENTS_SQL,
+    cents,
+    round6,
+    round6_sql,
+)
 from matt3r_data_ingestion_serverless_spark.operators.temporal import asof_join
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-_CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
-
-
-def _cents(col="value"):
-    return F.round(F.col(col) * 100, 0).cast("long")
-
 
 # ---------------------------------------------------------------------------
 # training-data mixture sampling
@@ -111,8 +109,8 @@ def ns_dataset_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=f"""
 WITH txn AS (
   SELECT user_id, ts, event_id,
-         CASE WHEN event_type = 'purchase' THEN {_CENTS_SQL}
-              ELSE -{_CENTS_SQL} END AS delta
+         CASE WHEN event_type = 'purchase' THEN {CENTS_SQL}
+              ELSE -{CENTS_SQL} END AS delta
   FROM events WHERE event_type IN ('purchase', 'error')
 )
 SELECT user_id, count(*) AS n_txns,
@@ -137,8 +135,8 @@ def capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
-        F.when(F.col("event_type") == "purchase", _cents())
-        .otherwise(-_cents())
+        F.when(F.col("event_type") == "purchase", cents())
+        .otherwise(-cents())
         .alias("delta"),
     )
     deltas = F.transform(
@@ -377,7 +375,7 @@ _ATTR_WINDOW_US = 7 * 24 * 3600 * 1_000_000
 @register(
     "last_touch_attribution",
     sql=f"""
-WITH p AS (SELECT user_id, ts, {_CENTS_SQL} AS rev_cents
+WITH p AS (SELECT user_id, ts, {CENTS_SQL} AS rev_cents
            FROM events WHERE event_type = 'purchase'),
 t AS (SELECT user_id, ts, event_type FROM events
       WHERE event_type IN ('click', 'view'))
@@ -399,7 +397,7 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ASOF JOIN oracle."""
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", _cents().alias("rev_cents")
+        "user_id", "ts", cents().alias("rev_cents")
     )
     t = ev.filter(F.col("event_type").isin("click", "view")).select(
         "user_id", "ts", F.col("event_type").alias("touch_type")

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
+from matt3r_data_ingestion_serverless_spark.plans.telemetry import events_stream
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
@@ -36,7 +36,7 @@ def streamed_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join, stateful scans, windowed aggs, keyed dedupe, CDC
     apply, and the curation gate."""
     nation = load_table(spark, sf_dir, "nation")
-    stream = _events_stream(spark, sf_dir).select("user_id", "value")
+    stream = events_stream(spark, sf_dir).select("user_id", "value")
     joined = stream.join(
         F.broadcast(nation), stream.user_id % 25 == nation.n_nationkey
     )

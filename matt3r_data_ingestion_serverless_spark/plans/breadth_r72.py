@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
+from matt3r_data_ingestion_serverless_spark.plans.telemetry import events_stream
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
 
 # ---------------------------------------------------------------------------
@@ -52,13 +52,13 @@ def streamed_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. Joined pairs land in the (append-mode) sink; the driver-side
     summary is a batch aggregate of the materialized pairs."""
     s = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
         .select("user_id", F.col("ts").alias("s_ts"))
         .withWatermark("s_ts", "30 seconds")
     )
     c = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("cuid"), F.col("ts").alias("c_ts"))
         .withWatermark("c_ts", "30 seconds")

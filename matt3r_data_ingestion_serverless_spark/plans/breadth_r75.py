@@ -15,11 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.functions.rounding import CENTS_SQL, round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
-_CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
 
 # ---------------------------------------------------------------------------
 # column profiling (the dbt/deequ "profile" pass)
@@ -27,7 +26,7 @@ _CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
 
 _PROFILE_SQL = f"""
 WITH src AS (
-  SELECT event_id, user_id, event_type, {_CENTS_SQL} AS cents, props FROM events
+  SELECT event_id, user_id, event_type, {CENTS_SQL} AS cents, props FROM events
 )
 SELECT 'event_id' AS col_name, count(*) AS n_rows,
        count(*) - count(event_id) AS n_nulls,
@@ -241,7 +240,7 @@ def dq_partition_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRIM_SQL = f"""
 WITH c AS (
-  SELECT event_type, event_id, {_CENTS_SQL} AS cents FROM events
+  SELECT event_type, event_id, {CENTS_SQL} AS cents FROM events
   WHERE value IS NOT NULL
 ),
 r AS (

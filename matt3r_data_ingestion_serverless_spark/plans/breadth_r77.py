@@ -15,11 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.functions.rounding import CENTS_SQL, round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
-_CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
 
 # ---------------------------------------------------------------------------
 # RFM segmentation
@@ -30,7 +29,7 @@ WITH per_user AS (
   SELECT user_id,
          max(CAST(ts AS DATE)) AS last_day,
          count(*) AS freq,
-         sum({_CENTS_SQL}) AS monetary_cents
+         sum({CENTS_SQL}) AS monetary_cents
   FROM events GROUP BY user_id
 ),
 anchor AS (SELECT max(last_day) AS today FROM per_user),

@@ -14,11 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.functions.rounding import CENTS_SQL, round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
-_CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
 
 # ---------------------------------------------------------------------------
 # OHLC daily bars
@@ -29,7 +28,7 @@ WITH c AS (
   SELECT CAST(ts AS DATE) AS day,
          lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
            || lpad(CAST(event_id AS VARCHAR), 10, '0') AS ord_key,
-         {_CENTS_SQL} AS cents
+         {CENTS_SQL} AS cents
   FROM events WHERE value IS NOT NULL
 )
 SELECT strftime(day, '%Y-%m-%d') AS day,
@@ -152,7 +151,7 @@ def phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LOCF_SQL = f"""
 WITH s AS (
   SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-         CASE WHEN event_id % 7 = 0 THEN NULL ELSE {_CENTS_SQL} END AS cents
+         CASE WHEN event_id % 7 = 0 THEN NULL ELSE {CENTS_SQL} END AS cents
   FROM events
 ),
 filled AS (

@@ -45,9 +45,9 @@ def streamed_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry is the bounded histogram, never raw rows, and ANY
     CDF-functional (W₁, KS, PSI) reads off the same state. Graded
     against the identical batch oracle as drift_wasserstein_1d."""
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import events_stream
 
-    s = _events_stream(spark, sf_dir).filter(
+    s = events_stream(spark, sf_dir).filter(
         F.col("event_type").isin(_W1_A, _W1_B) & F.col("value").isNotNull()
     )
     g = (

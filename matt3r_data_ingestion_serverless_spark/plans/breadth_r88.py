@@ -316,12 +316,12 @@ def streamed_scd2_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from matt3r_data_ingestion_serverless_spark.plans.llmprep import (
         scd2_customer_history,
     )
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import _events_stream
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import events_stream
 
     hist = scd2_customer_history(spark, sf_dir).select(
         "c_custkey", "segment", "valid_from", "valid_to"
     )
-    s = _events_stream(spark, sf_dir).select(
+    s = events_stream(spark, sf_dir).select(
         "user_id",
         "event_id",
         (F.col("user_id") % 1000 + 1).alias("ck"),

@@ -19,16 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.functions.rounding import (
+    CENTS_SQL,
+    cents,
+    round6,
+    round6_sql,
+)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-_CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
-
-
-def _cents(col="value"):
-    return F.round(F.col(col) * 100, 0).cast("long")
-
 
 # ---------------------------------------------------------------------------
 # time-weighted average (step-function / LOCF weighting)
@@ -39,7 +37,7 @@ def _cents(col="value"):
     "ts_time_weighted_avg",
     sql=f"""
 WITH e AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, {_CENTS_SQL} AS v_cents,
+  SELECT user_id, epoch_us(ts) AS ts_us, {CENTS_SQL} AS v_cents,
          lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
            AS next_us
   FROM events
@@ -69,7 +67,7 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts",
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
-            _cents().alias("v_cents"),
+            cents().alias("v_cents"),
         )
         .withColumn("next_us", F.lead("ts_us").over(w))
         .filter(F.col("next_us").isNotNull())
@@ -262,7 +260,7 @@ def pct_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH fp AS (
   SELECT CAST(ts AS DATE) AS day,
          md5(concat_ws('|', event_id, epoch_us(ts), user_id, event_type,
-                       {_CENTS_SQL}, props)) AS fp
+                       {CENTS_SQL}, props)) AS fp
   FROM events
 )
 SELECT strftime(day, '%Y-%m-%d') AS day, count(*) AS n_rows,
@@ -288,7 +286,7 @@ def table_checksum_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame
             F.unix_micros("ts"),
             F.col("user_id"),
             F.col("event_type"),
-            _cents(),
+            cents(),
             F.col("props"),
         )
     )
@@ -390,8 +388,8 @@ _MV_CUTOFF = "2024-01-16"
     "ns_mv_incremental_agg",
     sql=f"""
 SELECT user_id, count(*) AS n_events,
-       round(CAST(sum({_CENTS_SQL}) AS DOUBLE) / 100.0, 6) AS total_value,
-       {round6_sql(f"CAST(sum({_CENTS_SQL}) AS DOUBLE) / (100.0 * count(*))")}
+       round(CAST(sum({CENTS_SQL}) AS DOUBLE) / 100.0, 6) AS total_value,
+       {round6_sql(f"CAST(sum({CENTS_SQL}) AS DOUBLE) / (100.0 * count(*))")}
          AS avg_value,
        min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
 FROM events GROUP BY user_id
@@ -412,7 +410,7 @@ def ns_mv_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = ev.select(
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
-        _cents().alias("v_cents"),
+        cents().alias("v_cents"),
         (F.col("ts") < F.lit(_MV_CUTOFF).cast("timestamp")).alias("is_base"),
     )
     partial = seg.groupBy("user_id", "is_base").agg(

@@ -36,7 +36,7 @@ STATIONARY_MIN_DUR_S = 900.0  # events are minutes apart; 13 s scaled up
 STATIONARY_TRIM_S = 3.0
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table with `ts` standardized
     to TimestampType µs under a UTC-pinned session.
 
@@ -496,7 +496,7 @@ def w2_streamed_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         stationary_intervals_stream,
     )
 
-    sig = _events_stream(spark, sf_dir).select(
+    sig = events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("device_id"),
         "ts",
         F.lit("speed").alias("channel"),
@@ -530,7 +530,7 @@ def w1_streamed_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ap_transitions_from_codes,
     )
 
-    coded = _events_stream(spark, sf_dir).select(
+    coded = events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("device_id"),
         F.unix_micros("ts").alias("ts_us"),
         _event_code_col().alias("code"),
@@ -565,7 +565,7 @@ def w5_streamed_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     with `withWatermark` so closed windows emit incrementally and state
     is evicted; complete mode here lets the whole table be graded."""
     out = (
-        _events_stream(spark, sf_dir)
+        events_stream(spark, sf_dir)
         .select("user_id", "ts", "value")
         .groupBy("user_id", F.window("ts", "1 hour").alias("w"))
         .agg(
@@ -693,8 +693,8 @@ def j1_streamed_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the closed replay ends. The union is stream-native: both
     legs read the same files, no join, no shuffle beyond the dedupe
     key hash."""
-    s1 = _events_stream(spark, sf_dir).select("event_id", "event_type")
-    s2 = _events_stream(spark, sf_dir).select("event_id", "event_type")
+    s1 = events_stream(spark, sf_dir).select("event_id", "event_type")
+    s2 = events_stream(spark, sf_dir).select("event_id", "event_type")
     dd = s1.unionByName(s2).dropDuplicates(["event_id"])
     return (
         collect_stream(dd)
@@ -982,7 +982,7 @@ def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    ev = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     coded = ev.select(
         F.col("user_id").cast("string").alias("device_id"),
         F.unix_micros("ts").alias("ts_us"),

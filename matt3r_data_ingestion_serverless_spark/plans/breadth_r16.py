@@ -1,5 +1,5 @@
-"""Round-4 batch 12: lagged cross-correlation (lead/lag structure
-between channels) and the Arrow-optimized scalar Python UDF path.
+"""Round-4 batch 12: the Arrow-optimized scalar Python UDF path, pinball-loss
+forecast evaluation and a generated date dimension.
 """
 
 from __future__ import annotations
@@ -10,99 +10,6 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# lagged cross-correlation between two channels
-# ---------------------------------------------------------------------------
-
-_XC_MAX_LAG = 3
-
-_XC_SQL = f"""
-WITH h AS (
-  SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS hi,
-         coalesce(sum(CASE WHEN event_type = 'view'
-                           THEN CAST(round(value, 0) AS BIGINT) END), 0) AS x,
-         coalesce(sum(CASE WHEN event_type = 'click'
-                           THEN CAST(round(value, 0) AS BIGINT) END), 0) AS y
-  FROM events GROUP BY 1
-),
-lags AS (SELECT unnest(range(-{_XC_MAX_LAG}, {_XC_MAX_LAG} + 1)) AS lag),
-p AS (
-  SELECT lags.lag, a.x, b.y
-  FROM lags, h a JOIN h b ON b.hi = a.hi + lags.lag
-),
-m AS (
-  SELECT lag, count(*) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-         sum(x * x) AS sxx, sum(y * y) AS syy
-  FROM p GROUP BY lag
-)
-SELECT CAST(lag AS INT) AS lag, CAST(n AS BIGINT) AS n,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-            THEN {round6_sql(
-                "CAST(n * sxy - sx * sy AS DOUBLE)"
-                " / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))"
-                " * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))"
-            )} END AS xcorr
-FROM m
-"""
-
-
-@register("ts_cross_correlation_lagged", _XC_SQL)
-def ts_cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lagged cross-correlation between the view and click channels'
-    hourly totals at lags −3…+3 hours — "does one channel LEAD the
-    other?", the lead/lag screen run before any causal claim (the
-    argmax lag is the candidate response delay). Pairs align by
-    integer hour index join (b.hi = a.hi + lag), so gaps in either
-    series drop pairs instead of misaligning them.
-
-    The ts_rolling_corr idiom at a different shape: per lag, exact
-    int64 power sums via one hash agg (the raw events aggregated to
-    hours first — the expensive shuffle happens once, the 7-lag
-    explosion touches only the hourly table), Pearson r as one fixed
-    double formula, NULL on degenerate variance."""
-    ev = load_table(spark, sf_dir, "events")
-    as_int = F.round(F.col("value"), 0).cast("long")
-    h = ev.groupBy(
-        (F.expr("unix_micros(date_trunc('hour', ts)) div 3600000000")).alias("hi")
-    ).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "view", as_int)), F.lit(0)
-        ).alias("x"),
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "click", as_int)), F.lit(0)
-        ).alias("y"),
-    )
-    lags = spark.range(-_XC_MAX_LAG, _XC_MAX_LAG + 1).select(
-        F.col("id").cast("long").alias("lag")
-    )
-    a = h.select(F.col("hi").alias("ha"), "x")
-    b = h.select(F.col("hi").alias("hb"), "y")
-    p = (
-        F.broadcast(lags)
-        .crossJoin(a)
-        .join(b, F.col("hb") == F.col("ha") + F.col("lag"))
-    )
-    m = p.groupBy("lag").agg(
-        F.count("*").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    vx = n * F.col("sxx") - sx * sx
-    vy = n * F.col("syy") - sy * sy
-    r = (n * F.col("sxy") - sx * sy).cast("double") / (
-        F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double"))
-    )
-    return m.select(
-        F.col("lag").cast("int").alias("lag"),
-        n.cast("long").alias("n"),
-        F.when((vx > 0) & (vy > 0), round6(r)).alias("xcorr"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,4 @@
-"""Round-4 batch 20: exact weighted quantiles and the Fano burstiness
-factor.
+"""Round-4 batch 20: exact weighted quantiles.
 """
 
 from __future__ import annotations
@@ -7,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
@@ -81,59 +79,4 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(10 * F.col("cw") >= 9 * F.col("tw"), F.col("cents")))
         .cast("long")
         .alias("weighted_p90_cents"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Fano factor (burstiness of the event arrival process)
-# ---------------------------------------------------------------------------
-
-_FANO_SQL = f"""
-WITH h AS (
-  SELECT event_type, date_trunc('hour', ts) AS hr, count(*) AS c
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type,
-       count(*) AS n_hours,
-       CAST(sum(c) AS BIGINT) AS n_events,
-       {round6_sql(
-           "(CAST(count(*) * sum(c * c) - sum(c) * sum(c) AS DOUBLE)"
-           " / count(*) / (count(*) - 1))"
-           " / (CAST(sum(c) AS DOUBLE) / count(*))"
-       )} AS fano_factor
-FROM h GROUP BY event_type
-"""
-
-
-@register("ts_fano_factor", _FANO_SQL)
-def ts_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fano factor (index of dispersion) of hourly event counts per
-    channel: sample-variance / mean. A Poisson arrival process has
-    F = 1; F ≫ 1 = bursty (batched uploads, thundering herds — the
-    reference's per-file Lambda fan-out produces exactly such bursts),
-    F < 1 = regularized (rate-limited, heartbeat-like). The one-number
-    arrival-process characterization read next to interarrival_stats.
-
-    Hourly counts are exact ints; variance comes from the
-    (n·Σc² − (Σc)²)/(n(n−1)) moment identity and the final ratio is
-    one fixed double formula — the welch_ttest_events discipline. NOTE
-    the missing-hour caveat: absent cells are not zero-filled here (the
-    grid join in ts_gap_fill_locf adds them when that matters)."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("hr")).agg(
-        F.count("*").alias("c")
-    )
-    agg = h.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("c").alias("s"),
-        F.sum(F.col("c") * F.col("c")).alias("s2"),
-    )
-    n, s, s2 = F.col("n"), F.col("s"), F.col("s2")
-    var = (n * s2 - s * s).cast("double") / n / (n - 1)
-    mean = s.cast("double") / n
-    return agg.select(
-        "event_type",
-        n.cast("long").alias("n_hours"),
-        s.cast("long").alias("n_events"),
-        round6(var / mean).alias("fano_factor"),
     )

@@ -1,13 +1,11 @@
-"""Round-4 batch 21: canonicalized exact dedup and the Wald–Wolfowitz
-runs test.
+"""Round-4 batch 21: canonicalized exact dedup.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -64,129 +62,4 @@ def ns_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("source").alias("n_sources"),
         )
         .filter(F.col("n_copies") > 1)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wald–Wolfowitz runs test (randomness of the daily series)
-# ---------------------------------------------------------------------------
-
-_RUNS_SQL = f"""
-WITH dly AS (
-  SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-         sum(CAST(round(value, 0) AS BIGINT)) AS v
-  FROM events GROUP BY 1, 2
-),
-med AS (
-  -- exact median via the value histogram (⌈n/2⌉ threshold)
-  SELECT event_type, min(v) AS m FROM (
-    SELECT event_type, v,
-           sum(c) OVER (PARTITION BY event_type ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-           sum(c) OVER (PARTITION BY event_type) AS n
-    FROM (SELECT event_type, v, count(*) AS c FROM dly GROUP BY 1, 2)
-  ) WHERE 2 * cum >= n GROUP BY event_type
-),
-signed AS (
-  -- days AT the median drop (standard runs-test practice)
-  SELECT dly.event_type, day, CASE WHEN v > m THEN 1 ELSE 0 END AS s
-  FROM dly JOIN med ON dly.event_type = med.event_type
-  WHERE v != m
-),
-runs AS (
-  SELECT event_type, s,
-         CASE WHEN lag(s) OVER (PARTITION BY event_type ORDER BY day) IS NULL
-               OR lag(s) OVER (PARTITION BY event_type ORDER BY day) != s
-              THEN 1 ELSE 0 END AS new_run
-  FROM signed
-),
-agg AS (
-  SELECT event_type,
-         sum(new_run) AS r,
-         sum(s) AS n1,
-         sum(1 - s) AS n2
-  FROM runs GROUP BY event_type
-)
-SELECT event_type,
-       CAST(r AS BIGINT) AS n_runs,
-       CAST(n1 AS BIGINT) AS n_above, CAST(n2 AS BIGINT) AS n_below,
-       {round6_sql(
-           "(r - (2.0 * n1 * n2 / (n1 + n2) + 1))"
-           " / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)"
-           "        / ((CAST(n1 + n2 AS DOUBLE)) * (n1 + n2)"
-           "           * (n1 + n2 - 1)))"
-       )} AS z_stat
-FROM agg WHERE n1 > 0 AND n2 > 0
-"""
-
-
-@register("ts_runs_test", _RUNS_SQL)
-def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald–Wolfowitz runs test on each channel's daily series: dichotomize
-    against the exact median (ties dropped, histogram-derived — no raw
-    sort), count maximal above/below RUNS via the lag-transition scan
-    (the reference's W1 machinery counting runs instead of emitting
-    events), and standardize against the null E[R] = 2n₁n₂/(n₁+n₂)+1.
-    |Z| large = the series is trending or oscillating, not random —
-    the nonparametric randomness gate run before trusting any iid-based
-    monitor (SPC, z-score) on the same data.
-
-    Ints end to end (runs counted by exact lag comparisons; the median
-    from the ⌈n/2⌉ histogram rule); Z is one fixed double formula on a
-    channels-sized table."""
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
-    vc = dly.groupBy("event_type", "v").agg(F.count("*").alias("c"))
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    med = (
-        vc.select(
-            "event_type",
-            "v",
-            F.sum("c").over(wcum).alias("cum"),
-            F.sum("c").over(Window.partitionBy("event_type")).alias("n"),
-        )
-        .filter(2 * F.col("cum") >= F.col("n"))
-        .groupBy("event_type")
-        .agg(F.min("v").alias("m"))
-    )
-    signed = (
-        dly.join(F.broadcast(med), "event_type")
-        .filter(F.col("v") != F.col("m"))
-        .select("event_type", "day", (F.col("v") > F.col("m")).cast("int").alias("s"))
-    )
-    lag_s = F.lag("s").over(Window.partitionBy("event_type").orderBy("day"))
-    runs = signed.select(
-        "event_type",
-        "s",
-        F.when(lag_s.isNull() | (lag_s != F.col("s")), 1).otherwise(0).alias(
-            "new_run"
-        ),
-    )
-    agg = runs.groupBy("event_type").agg(
-        F.sum("new_run").alias("r"),
-        F.sum("s").alias("n1"),
-        F.sum(1 - F.col("s")).alias("n2"),
-    )
-    n1, n2, r = F.col("n1"), F.col("n2"), F.col("r")
-    mean_r = 2.0 * n1 * n2 / (n1 + n2) + 1
-    var_r = (
-        2.0
-        * n1
-        * n2
-        * (2.0 * n1 * n2 - n1 - n2)
-        / ((n1 + n2).cast("double") * (n1 + n2) * (n1 + n2 - 1))
-    )
-    return agg.filter((n1 > 0) & (n2 > 0)).select(
-        "event_type",
-        r.cast("long").alias("n_runs"),
-        n1.cast("long").alias("n_above"),
-        n2.cast("long").alias("n_below"),
-        round6((r - mean_r) / F.sqrt(var_r)).alias("z_stat"),
     )

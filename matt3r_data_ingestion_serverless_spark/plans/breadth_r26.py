@@ -1,5 +1,5 @@
 """Round-2 batch 1 (this run): probabilistic-filter audits, latest-row
-dedup parity, drawdown analytics, rank correlation, and an A/B z-test.
+dedup parity, rank correlation, and an A/B z-test.
 
 All md5-keyed randomness follows functions/hashing.py's cross-engine
 contract; floats follow SCALE.md §7 (exact integers where possible,
@@ -216,68 +216,6 @@ def distinct_on_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "value",
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# maximum drawdown over per-user cumulative value (integer cents)
-# ---------------------------------------------------------------------------
-
-_DRAWDOWN_SQL = """
-WITH s AS (
-  SELECT user_id,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-             OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS equity
-  FROM events
-),
-d AS (
-  SELECT user_id, rn, equity,
-         max(equity) OVER (PARTITION BY user_id ORDER BY rn
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-  FROM s
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(max(peak - equity) AS BIGINT) AS max_drawdown_cents,
-       CAST(max(peak) AS BIGINT) AS peak_cents,
-       CAST(arg_max(equity, rn) AS BIGINT) AS final_cents
-FROM d
-GROUP BY user_id
-"""
-
-
-@register("ts_max_drawdown", _DRAWDOWN_SQL)
-def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown of each user's cumulative-value curve — the
-    canonical risk statistic that needs TWO stacked prefix scans
-    (running sum → running max) before the final aggregate; everything
-    stays in integer cents so the result is exact at any scale. One
-    hash-partition by user feeds all three steps (both windows and the
-    groupBy share the user_id partitioning — Catalyst plans a single
-    Exchange)."""
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
-    wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    s = ev.select(
-        "user_id",
-        F.row_number().over(wo).alias("rn"),
-        F.sum(cents).over(run).alias("equity"),
-    ).withColumn(
-        "peak",
-        F.max("equity").over(
-            Window.partitionBy("user_id")
-            .orderBy("rn")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return s.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.max(F.col("peak") - F.col("equity")).cast("long").alias("max_drawdown_cents"),
-        F.max("peak").cast("long").alias("peak_cents"),
-        F.max_by("equity", "rn").cast("long").alias("final_cents"),
     )
 
 

@@ -1,6 +1,6 @@
-"""Round-2 batch 2 (this run): Kendall tau-b association, historical
-VaR/CVaR, sorted-neighborhood entity blocking, a mutual-information
-grid, probability-calibration bins, and graded-relevance NDCG.
+"""Round-2 batch 2: sorted-neighborhood entity blocking, a
+mutual-information grid, probability-calibration bins, and
+graded-relevance NDCG.
 
 All determinism follows SCALE.md §7: exact int64 until one final double
 expression, round6 (sign·floor(|x|·1e6+0.5)/1e6) in both dialects;
@@ -20,186 +20,6 @@ from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# Kendall tau-b between daily event count and daily value mass
-# ---------------------------------------------------------------------------
-
-_KENDALL_SQL = f"""
-WITH daily AS (
-  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-         count(*) AS cnt,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS cents
-  FROM events GROUP BY event_type, strftime(ts, '%Y-%m-%d')
-),
-r AS (
-  SELECT event_type, cnt, cents,
-         row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-  FROM daily
-),
-p AS (
-  SELECT a.event_type,
-         CASE WHEN (a.cnt < b.cnt AND a.cents < b.cents)
-                OR (a.cnt > b.cnt AND a.cents > b.cents) THEN 1 ELSE 0 END AS conc,
-         CASE WHEN (a.cnt < b.cnt AND a.cents > b.cents)
-                OR (a.cnt > b.cnt AND a.cents < b.cents) THEN 1 ELSE 0 END AS disc,
-         CASE WHEN a.cnt = b.cnt THEN 1 ELSE 0 END AS tx,
-         CASE WHEN a.cents = b.cents THEN 1 ELSE 0 END AS ty
-  FROM r a JOIN r b ON a.event_type = b.event_type AND a.rn < b.rn
-),
-s AS (
-  SELECT event_type, count(*) AS n_pairs,
-         sum(conc) AS concordant, sum(disc) AS discordant,
-         sum(tx) AS ties_x, sum(ty) AS ties_y
-  FROM p GROUP BY event_type
-)
-SELECT event_type,
-       CAST(n_pairs AS BIGINT) AS n_pairs,
-       CAST(concordant AS BIGINT) AS concordant,
-       CAST(discordant AS BIGINT) AS discordant,
-       CAST(ties_x AS BIGINT) AS ties_x,
-       CAST(ties_y AS BIGINT) AS ties_y,
-       {round6_sql(
-           "CAST(concordant - discordant AS DOUBLE)"
-           " / sqrt(CAST(n_pairs - ties_x AS DOUBLE) * CAST(n_pairs - ties_y AS DOUBLE))"
-       )} AS tau_b
-FROM s
-"""
-
-
-@register("ts_kendall_tau_daily", _KENDALL_SQL)
-def ts_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between each event type's daily count and daily
-    value mass — the rank-association twin of spearman_rank_corr that
-    is exact under heavy ties. Aggregate-first shrinks the stream to
-    ~365 rows per type BEFORE the O(n²) pair scan (the only sound way
-    to run Kendall at 100 TB: the quadratic part never touches raw
-    data), then concordant / discordant / tie pair counts accumulate as
-    exact int64 and tau-b is one final double. Complements
-    ts_mann_kendall (trend vs time) by measuring cross-series
-    association."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"),
-    )
-    r = daily.select(
-        "event_type",
-        "cnt",
-        "cents",
-        F.row_number().over(Window.partitionBy("event_type").orderBy("day")).alias("rn"),
-    )
-    a, b = r.alias("a"), r.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type")) & (F.col("a.rn") < F.col("b.rn")),
-    )
-    up = (F.col("a.cnt") < F.col("b.cnt")) & (F.col("a.cents") < F.col("b.cents"))
-    down = (F.col("a.cnt") > F.col("b.cnt")) & (F.col("a.cents") > F.col("b.cents"))
-    xup = (F.col("a.cnt") < F.col("b.cnt")) & (F.col("a.cents") > F.col("b.cents"))
-    xdown = (F.col("a.cnt") > F.col("b.cnt")) & (F.col("a.cents") < F.col("b.cents"))
-    s = pairs.groupBy(F.col("a.event_type").alias("event_type")).agg(
-        F.count("*").alias("n_pairs"),
-        F.sum((up | down).cast("int")).alias("concordant"),
-        F.sum((xup | xdown).cast("int")).alias("discordant"),
-        F.sum((F.col("a.cnt") == F.col("b.cnt")).cast("int")).alias("ties_x"),
-        F.sum((F.col("a.cents") == F.col("b.cents")).cast("int")).alias("ties_y"),
-    )
-    tau = (F.col("concordant") - F.col("discordant")).cast("double") / F.sqrt(
-        (F.col("n_pairs") - F.col("ties_x")).cast("double")
-        * (F.col("n_pairs") - F.col("ties_y")).cast("double")
-    )
-    return s.select(
-        "event_type",
-        F.col("n_pairs").cast("long").alias("n_pairs"),
-        F.col("concordant").cast("long").alias("concordant"),
-        F.col("discordant").cast("long").alias("discordant"),
-        F.col("ties_x").cast("long").alias("ties_x"),
-        F.col("ties_y").cast("long").alias("ties_y"),
-        round6(tau).alias("tau_b"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# historical VaR / CVaR of day-over-day value changes
-# ---------------------------------------------------------------------------
-
-_VAR_SQL = f"""
-WITH daily AS (
-  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS cents
-  FROM events GROUP BY event_type, strftime(ts, '%Y-%m-%d')
-),
-delta AS (
-  SELECT event_type,
-         cents - lag(cents) OVER (PARTITION BY event_type ORDER BY day) AS d
-  FROM daily
-),
-ranked AS (
-  SELECT event_type, d,
-         row_number() OVER (PARTITION BY event_type ORDER BY d, event_type) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM delta WHERE d IS NOT NULL
-)
-SELECT event_type,
-       CAST(max(n) AS BIGINT) AS n_days,
-       CAST(max(CASE WHEN rn = CAST(ceil(0.05 * n) AS BIGINT) THEN d END) AS BIGINT)
-         AS var5_cents,
-       {round6_sql(
-           "CAST(sum(CASE WHEN rn <= CAST(ceil(0.05 * n) AS BIGINT) THEN d ELSE 0 END)"
-           " AS DOUBLE) / CAST(ceil(0.05 * max(n)) AS DOUBLE)"
-       )} AS cvar5_cents,
-       CAST(min(d) AS BIGINT) AS worst_cents
-FROM ranked
-GROUP BY event_type
-"""
-
-
-@register("ts_var_cvar_daily", _VAR_SQL)
-def ts_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Historical Value-at-Risk and Conditional VaR (expected shortfall)
-    of day-over-day changes in each event type's daily value mass — the
-    risk-desk readout beyond plain quantiles: VaR5 is the 5th-percentile
-    change (discrete, by rank k = ⌈0.05n⌉) and CVaR5 the exact mean of
-    the k worst changes. Everything is integer cents — the tail mean is
-    an int64 sum over exactly k rows divided once — so the statistic is
-    bit-stable. Aggregate-first (day grain) then one window per type; at
-    100 TB the quantile runs on ~365 rows per key, never the raw
-    stream."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
-    wday = Window.partitionBy("event_type").orderBy("day")
-    delta = daily.select(
-        "event_type", (F.col("cents") - F.lag("cents").over(wday)).alias("d")
-    ).filter(F.col("d").isNotNull())
-    wrank = Window.partitionBy("event_type").orderBy("d", "event_type")
-    ranked = delta.select(
-        "event_type",
-        "d",
-        F.row_number().over(wrank).alias("rn"),
-        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
-    )
-    k = F.ceil(0.05 * F.col("n")).cast("long")
-    agg = ranked.groupBy("event_type").agg(
-        F.max("n").cast("long").alias("n_days"),
-        F.max(F.when(F.col("rn") == k, F.col("d"))).cast("long").alias("var5_cents"),
-        F.sum(F.when(F.col("rn") <= k, F.col("d")).otherwise(0)).alias("tail_sum"),
-        F.ceil(0.05 * F.max("n")).cast("long").alias("k"),
-        F.min("d").cast("long").alias("worst_cents"),
-    )
-    return agg.select(
-        "event_type",
-        "n_days",
-        "var5_cents",
-        round6(F.col("tail_sum").cast("double") / F.col("k").cast("double")).alias(
-            "cvar5_cents"
-        ),
-        "worst_cents",
-    )
 
 
 # ---------------------------------------------------------------------------

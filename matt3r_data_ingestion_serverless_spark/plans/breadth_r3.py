@@ -1,7 +1,6 @@
 """Round-3 breadth: language-model-flavored corpus statistics (unigram
 surprisal, bigram next-word tables, char entropy, BPE pair counts), a
-self-evaluating LSH quality gate, integer-exact CUSUM changepoint
-detection, spatial grid density, series autocorrelation, and the
+self-evaluating LSH quality gate, spatial grid density, and the
 remaining modern-SQL surface (LATERAL correlated subqueries, multiset
 INTERSECT/EXCEPT ALL, SQL PIVOT).
 
@@ -9,8 +8,8 @@ Each query demonstrates a capability the earlier families don't:
 statistical language modelling over the documents corpus (the scoring
 signals an LLM-data pipeline ranks/filter by), eval-harness composition
 (grading one operator's output against another's inside the engine),
-and sequential-change statistics kept in exact integer arithmetic so
-the cross-engine oracle is bit-stable.
+and privacy audits kept in exact integer arithmetic so the cross-engine
+oracle is bit-stable.
 """
 
 from __future__ import annotations
@@ -464,83 +463,8 @@ def ns_lsh_eval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sequential statistics over the events stream
+# geographic grid density
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "ts_cusum_changepoint",
-    sql="""
-WITH txn AS (
-  SELECT user_id, ts, event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents,
-         row_number() OVER w AS k,
-         sum(CAST(round(value * 100, 0) AS BIGINT)) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix_cents,
-         count(*) OVER (PARTITION BY user_id) AS n,
-         sum(CAST(round(value * 100, 0) AS BIGINT))
-           OVER (PARTITION BY user_id) AS total_cents
-  FROM events WHERE event_type = 'purchase'
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-d AS (
-  SELECT user_id, k, n, epoch_us(ts) AS ts_us,
-         abs(n * prefix_cents - k * total_cents) AS absd,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY abs(n * prefix_cents - k * total_cents) DESC,
-                                     k) AS rn
-  FROM txn
-)
-SELECT user_id, CAST(n AS BIGINT) AS n_txns, CAST(k AS BIGINT) AS cp_index,
-       CAST(absd AS BIGINT) AS max_abs_d, CAST(ts_us AS BIGINT) AS cp_epoch_us
-FROM d WHERE rn = 1 AND n >= 20
-""",
-)
-def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint detection per user over the purchase stream:
-    the index k maximizing |n·S_k − k·S_n| (the cumulative-sum deviation
-    statistic, kept in cross-multiplied integer cents so no division and
-    no float drift enters the argmax) — where a user's mean spend most
-    likely shifted. The reference's stationary-run scan (W2) is the same
-    shape: a sequential statistic over a per-key time order.
-
-    Scale: everything runs in TWO window passes over one hash partition
-    by user_id (the same shuffle), then a 1-row-per-user filter; exact
-    BIGINT arithmetic end to end. Users with < 20 purchases are noise
-    and dropped."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wu = Window.partitionBy("user_id")
-    txn = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.row_number().over(w).alias("k"),
-        F.sum(cents).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
-            "prefix_cents"
-        ),
-        F.count("*").over(wu).alias("n"),
-        F.sum(cents).over(wu).alias("total_cents"),
-    )
-    absd = F.abs(F.col("n") * F.col("prefix_cents") - F.col("k") * F.col("total_cents"))
-    ranked = txn.select(
-        "user_id",
-        "k",
-        "n",
-        F.unix_micros("ts").alias("ts_us"),
-        absd.alias("absd"),
-        F.row_number()
-        .over(Window.partitionBy("user_id").orderBy(absd.desc(), F.asc("k")))
-        .alias("rn"),
-    )
-    return ranked.filter((F.col("rn") == 1) & (F.col("n") >= 20)).select(
-        "user_id",
-        F.col("n").cast("long").alias("n_txns"),
-        F.col("k").cast("long").alias("cp_index"),
-        F.col("absd").cast("long").alias("max_abs_d"),
-        F.col("ts_us").cast("long").alias("cp_epoch_us"),
-    )
 
 
 @register(
@@ -581,60 +505,6 @@ def geo_grid_density(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
         )
     )
-
-
-@register(
-    "ts_autocorr_hourly",
-    sql="""
-WITH hourly AS (
-  SELECT date_trunc('hour', ts) AS h, CAST(count(*) AS DOUBLE) AS cnt
-  FROM events GROUP BY 1
-),
-lagged AS (
-  SELECT cnt,
-         lag(cnt, 1) OVER (ORDER BY h) AS lag1,
-         lag(cnt, 24) OVER (ORDER BY h) AS lag24
-  FROM hourly
-)
-SELECT 1 AS lag_hours, count(lag1) AS n_pairs, round(corr(cnt, lag1), 6) AS autocorr
-FROM lagged
-UNION ALL
-SELECT 24 AS lag_hours, count(lag24) AS n_pairs, round(corr(cnt, lag24), 6) AS autocorr
-FROM lagged
-""",
-)
-def ts_autocorr_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Series autocorrelation of the hourly event-count signal at lag 1
-    (persistence) and lag 24 (diurnal seasonality) — the two numbers a
-    capacity model checks before fitting anything fancier. Composes a
-    tumbling-window count (W5's shape) with lag windows and the corr
-    aggregate.
-
-    Scale note: the global ORDER BY h window runs single-partition —
-    acceptable because it operates on the AGGREGATED series (rows =
-    hours, ~10⁴/year regardless of raw volume), the standard
-    reduce-then-sequence pattern for series statistics over big data."""
-    e = load_table(spark, sf_dir, "events")
-    hourly = e.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.count("*").cast("double").alias("cnt")
-    )
-    w = Window.orderBy("h")
-    lagged = hourly.select(
-        "cnt",
-        F.lag("cnt", 1).over(w).alias("lag1"),
-        F.lag("cnt", 24).over(w).alias("lag24"),
-    )
-    out1 = lagged.agg(
-        F.lit(1).alias("lag_hours"),
-        F.count("lag1").alias("n_pairs"),
-        F.round(F.corr("cnt", "lag1"), 6).alias("autocorr"),
-    )
-    out24 = lagged.agg(
-        F.lit(24).alias("lag_hours"),
-        F.count("lag24").alias("n_pairs"),
-        F.round(F.corr("cnt", "lag24"), 6).alias("autocorr"),
-    )
-    return out1.unionByName(out24)
 
 
 # ---------------------------------------------------------------------------
@@ -925,7 +795,7 @@ def udaf_gini_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# repetition filters, privacy audits, and a two-state smoothing fold
+# repetition filters and privacy audits
 # ---------------------------------------------------------------------------
 
 
@@ -1096,94 +966,4 @@ def ns_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         F.col("true_n").cast("long").alias("true_n"),
         F.round(F.col("true_n") + noise, 6).alias("noisy_n"),
-    )
-
-
-@register(
-    "ts_holt_linear",
-    # NOTE the oracle is a recursive CTE, not a list_reduce struct fold:
-    # DuckDB's list_reduce evaluates the result-struct fields
-    # SEQUENTIALLY against an in-place accumulator (the 'b' expression
-    # observes the already-updated 'l'), so a two-state fold cannot be
-    # expressed there with simultaneous-assignment semantics. The
-    # recursive CTE updates both states in one SELECT — standard SQL
-    # simultaneous binding — with the exact IEEE op sequence of the
-    # Spark lambda.
-    sql="""
-WITH RECURSIVE
-r AS (
-  SELECT user_id, value,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS k
-  FROM events
-),
-nn AS (SELECT user_id, max(k) AS n FROM r GROUP BY user_id),
-rec AS (
-  SELECT a.user_id, 2 AS k, b.value AS l, b.value - a.value AS bb
-  FROM r a JOIN r b ON a.user_id = b.user_id AND a.k = 1 AND b.k = 2
-  UNION ALL
-  SELECT s.user_id, s.k + 1,
-         0.5 * r.value + 0.5 * (s.l + s.bb),
-         0.25 * ((0.5 * r.value + 0.5 * (s.l + s.bb)) - s.l) + 0.75 * s.bb
-  FROM rec s JOIN r ON r.user_id = s.user_id AND r.k = s.k + 1
-)
-SELECT rec.user_id, CAST(n AS BIGINT) AS n_events,
-       round(l, 6) AS holt_level, round(bb, 6) AS holt_trend
-FROM rec JOIN nn ON rec.user_id = nn.user_id
-WHERE k = n AND n >= 3
-""",
-)
-def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt double-exponential smoothing (alpha = 0.5, beta = 0.25):
-    the TWO-state recursive fold — level and trend update jointly, each
-    step reading both previous states — that no window frame and no
-    single-value fold expresses. State is a struct threaded through the
-    aggregate() higher-order function over the time-sorted value list;
-    initialization is the standard l₀ = x₂, b₀ = x₂ − x₁.
-
-    Determinism: operand order pinned by the sorted collect; 0.5/0.25/
-    0.75 are binary-exact; both engines execute the identical IEEE
-    sequence (the level expression is deliberately repeated inside the
-    trend update rather than bound to a local, keeping the op order
-    textual in both dialects) → bit-equal before the final round. The
-    oracle is a recursive CTE rather than a list_reduce struct fold —
-    see the SQL-side note on DuckDB's sequential field evaluation.
-    Scale: one shuffle; per-key state is two doubles. Million-row keys
-    move to the incremental applyInPandasWithState fold, same as EWMA."""
-    ev = load_table(spark, sf_dir, "events")
-    vals = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("value").alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
-    x1, x2 = F.element_at(vals, 1), F.element_at(vals, 2)
-    init = F.struct(x2.alias("l"), (x2 - x1).alias("b"))
-    tail = F.slice(vals, 3, F.greatest(F.size(vals) - 2, F.lit(0)))
-
-    def step(acc, x):
-        new_l = F.lit(0.5) * x + F.lit(0.5) * (acc["l"] + acc["b"])
-        new_b = (
-            F.lit(0.25)
-            * ((F.lit(0.5) * x + F.lit(0.5) * (acc["l"] + acc["b"])) - acc["l"])
-            + F.lit(0.75) * acc["b"]
-        )
-        return F.struct(new_l.alias("l"), new_b.alias("b"))
-
-    st = F.aggregate(tail, init, step)
-    return (
-        ev.groupBy("user_id")
-        .agg(F.count("*").alias("n_events"), st.alias("st"))
-        .filter(F.col("n_events") >= 3)
-        .select(
-            "user_id",
-            "n_events",
-            F.round(F.col("st.l"), 6).alias("holt_level"),
-            F.round(F.col("st.b"), 6).alias("holt_trend"),
-        )
     )

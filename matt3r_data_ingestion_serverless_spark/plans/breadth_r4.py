@@ -443,7 +443,7 @@ def ns_shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# leaderboard rank movement + Bollinger breach detection (integer-exact)
+# leaderboard rank movement
 # ---------------------------------------------------------------------------
 
 
@@ -501,77 +501,6 @@ def window_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select(
         "m", "brand", "revenue_cents", "rnk",
         prev.alias("prev_rnk"), (prev - F.col("rnk")).cast("int").alias("shift"),
-    )
-
-
-_BOLL_N = 20  # trailing window length
-
-_BOLL_SQL = f"""
-WITH c AS (
-  SELECT user_id, ts, event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase'
-),
-w AS (
-  SELECT user_id, ts, event_id, cents,
-         count(*) OVER win AS n,
-         sum(cents) OVER win AS s1,
-         sum(cents * cents) OVER win AS s2
-  FROM c
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN {_BOLL_N} PRECEDING AND 1 PRECEDING)
-)
-SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, cents,
-       round(s1 / CAST(n AS DOUBLE) / 100.0, 6) AS band_mean,
-       round(sqrt((n * s2 - s1 * s1) / (CAST(n AS DOUBLE) * (n - 1))) / 100.0, 6)
-         AS band_sigma,
-       ((n * cents - s1) * (n * cents - s1) * (n - 1) > 4 * n * (n * s2 - s1 * s1))
-         AS breach
-FROM w WHERE n >= {_BOLL_N}
-"""
-
-
-@register("ts_bollinger_breach", sql=_BOLL_SQL)
-def ts_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bollinger-band monitoring over each user's purchase stream: the
-    trailing-{n} mean ± 2σ envelope, with the breach decision made in
-    EXACT INTEGER arithmetic — |x−μ| > 2σ cross-multiplies to
-    (n·x−s1)²·(n−1) > 4·n·(n·s2−s1²) over bigint power sums, so the
-    boolean can never flip on an engine's last-ulp sqrt difference
-    (the displayed band edges are rounded floats; the decision never
-    touches them). The window excludes the current row (1 PRECEDING) so
-    a spike can't mask itself.
-
-    Scale: one shuffle on user_id; the frame is a bounded ROWS window —
-    state per key is {n} rows regardless of history length, the same
-    bound the streaming variant would keep in its state store."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    win = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(_BOLL_N - 1) - 1, -1)
-    )
-    c = e.select("user_id", "ts", "event_id", cents.alias("cents"))
-    w = c.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "cents",
-        F.count("*").over(win).alias("n"),
-        F.sum("cents").over(win).alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).over(win).alias("s2"),
-    ).filter(F.col("n") >= _BOLL_N)
-    n, s1, s2, x = F.col("n"), F.col("s1"), F.col("s2"), F.col("cents")
-    dev = n * x - s1
-    return w.select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "cents",
-        F.round(s1 / n.cast("double") / 100.0, 6).alias("band_mean"),
-        F.round(
-            F.sqrt((n * s2 - s1 * s1) / (n.cast("double") * (n - 1))) / 100.0, 6
-        ).alias("band_sigma"),
-        (dev * dev * (n - 1) > 4 * n * (n * s2 - s1 * s1)).alias("breach"),
     )
 
 
@@ -766,95 +695,8 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 1-D Kalman filtering + interval-complement (idle-gap) algebra
+# interval-complement (idle-gap) algebra
 # ---------------------------------------------------------------------------
-
-_KAL_Q, _KAL_R = 0.25, 1.0  # process / measurement noise (binary-exact)
-
-
-@register(
-    "ts_kalman_1d",
-    # recursive-CTE oracle for the same reason as ts_holt_linear:
-    # DuckDB's list_reduce cannot thread a two-field struct state with
-    # simultaneous-assignment semantics.
-    sql=f"""
-WITH RECURSIVE
-r AS (
-  SELECT user_id, value,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS k
-  FROM events
-),
-nn AS (SELECT user_id, max(k) AS n FROM r GROUP BY user_id),
-rec AS (
-  SELECT user_id, 1 AS k, value AS x, CAST(1.0 AS DOUBLE) AS p FROM r WHERE k = 1
-  UNION ALL
-  SELECT s.user_id, s.k + 1,
-         s.x + ((s.p + {_KAL_Q}) / ((s.p + {_KAL_Q}) + {_KAL_R}))
-               * (r.value - s.x),
-         (1.0 - ((s.p + {_KAL_Q}) / ((s.p + {_KAL_Q}) + {_KAL_R})))
-               * (s.p + {_KAL_Q})
-  FROM rec s JOIN r ON r.user_id = s.user_id AND r.k = s.k + 1
-)
-SELECT rec.user_id, CAST(n AS BIGINT) AS n_obs,
-       round(x, 6) AS kalman_estimate, round(p, 6) AS kalman_variance
-FROM rec JOIN nn ON rec.user_id = nn.user_id
-WHERE k = n AND n >= 2
-""",
-)
-def ts_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-D Kalman filter (constant-state model, q = 0.25, r = 1.0) over
-    each user's value stream: the optimal recursive estimator — per
-    step the gain K = (P+q)/(P+q+r) blends prediction and measurement,
-    and the error variance P contracts toward its steady state. Like
-    Holt this is a TWO-state fold (estimate, variance) with the extra
-    wrinkle of a per-step DIVISION, done as a struct-accumulator
-    aggregate() over the time-sorted values.
-
-    Determinism: the gain expression is repeated textually instead of
-    bound to a local (identical IEEE op sequence in both dialects —
-    division included, IEEE-exact given identical operands); noise
-    constants are binary-exact. Scale: one shuffle on user_id, state is
-    two doubles; unbounded keys move to the incremental stateful-stream
-    fold like EWMA/Holt."""
-    ev = load_table(spark, sf_dir, "events")
-    vals = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("value").alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
-    init = F.struct(
-        F.element_at(vals, 1).alias("x"), F.lit(1.0).alias("p")
-    )
-    tail = F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0)))
-
-    def step(acc, z):
-        pp = acc["p"] + F.lit(_KAL_Q)
-        gain = pp / (pp + F.lit(_KAL_R))
-        return F.struct(
-            (acc["x"] + gain * (z - acc["x"])).alias("x"),
-            ((F.lit(1.0) - gain) * pp).alias("p"),
-        )
-
-    st = F.aggregate(tail, init, step)
-    return (
-        ev.groupBy("user_id")
-        .agg(F.count("*").alias("n_obs"), st.alias("st"))
-        .filter(F.col("n_obs") >= 2)
-        .select(
-            "user_id",
-            F.col("n_obs").cast("long").alias("n_obs"),
-            F.round(F.col("st.x"), 6).alias("kalman_estimate"),
-            F.round(F.col("st.p"), 6).alias("kalman_variance"),
-        )
-    )
-
 
 _BUSY_US = 300 * 1_000_000  # each purchase opens a 5-minute busy window
 

@@ -1,109 +1,15 @@
-"""Round-2 batch 19 (this run): maximum-sum subarray via the
-prefix-min window identity, a code-like document filter, and local
-peak detection on daily series.
-
-All three are pure integer window/regex arithmetic — no folds, no
-floats except final round6 ratios.
+"""Round-2 batch 19: a code-like document filter, pure regex
+arithmetic with no floats except final round6 ratios.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# maximum-sum contiguous run of daily deltas (Kadane via windows)
-# ---------------------------------------------------------------------------
-
-_KADANE_SQL = """
-WITH daily AS (
-  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS cents
-  FROM events GROUP BY event_type, strftime(ts, '%Y-%m-%d')
-),
-delta AS (
-  SELECT event_type, day,
-         cents - lag(cents) OVER (PARTITION BY event_type ORDER BY day) AS d
-  FROM daily
-),
-p AS (
-  SELECT event_type, day,
-         sum(d) OVER (PARTITION BY event_type ORDER BY day
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix
-  FROM delta WHERE d IS NOT NULL
-),
-q AS (
-  SELECT event_type, day, prefix,
-         coalesce(min(prefix) OVER (PARTITION BY event_type ORDER BY day
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS minp
-  FROM p
-),
-best AS (
-  SELECT event_type, day, prefix - least(minp, 0) AS run_sum
-  FROM q
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_days,
-       CAST(max(run_sum) AS BIGINT) AS best_run_cents,
-       max(CASE WHEN run_sum = (SELECT max(b2.run_sum) FROM best b2
-                                WHERE b2.event_type = best.event_type)
-                THEN day END) AS best_end_day
-FROM best GROUP BY event_type
-"""
-
-
-@register("ts_max_subarray_window", _KADANE_SQL)
-def ts_max_subarray_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum-sum contiguous run of day-over-day value changes per
-    event type — the best winning streak, i.e. Kadane's max-subarray,
-    computed WITHOUT a sequential fold: best run ending at day j =
-    prefix_j − min(0, min prefix before j), so two stacked window
-    passes (prefix sum → running min) solve it declaratively — the
-    identity that keeps an inherently sequential-looking DP fully
-    parallel at 100 TB. Everything is exact integer cents; the best
-    end-day tie-breaks by max(day)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
-    wd = Window.partitionBy("event_type").orderBy("day")
-    delta = daily.select(
-        "event_type", "day", (F.col("cents") - F.lag("cents").over(wd)).alias("d")
-    ).filter(F.col("d").isNotNull())
-    p = delta.select(
-        "event_type",
-        "day",
-        F.sum("d")
-        .over(wd.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("prefix"),
-    )
-    q = p.select(
-        "event_type",
-        "day",
-        "prefix",
-        F.coalesce(
-            F.min("prefix").over(wd.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
-        ).alias("minp"),
-    )
-    best = q.select(
-        "event_type",
-        "day",
-        (F.col("prefix") - F.least(F.col("minp"), F.lit(0))).alias("run_sum"),
-    )
-    mx = best.groupBy("event_type").agg(
-        F.count("*").alias("n_days"), F.max("run_sum").alias("best")
-    )
-    j = best.join(F.broadcast(mx.withColumnRenamed("event_type", "et")),
-                  (F.col("event_type") == F.col("et")) & (F.col("run_sum") == F.col("best")))
-    return j.groupBy("event_type").agg(
-        F.max("n_days").cast("long").alias("n_days"),
-        F.max("best").cast("long").alias("best_run_cents"),
-        F.max("day").alias("best_end_day"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -166,65 +72,4 @@ def ns_code_like_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("n_code_chars") * 20 >= F.col("n_chars")) | (F.col("n_keywords") >= 3)).alias(
             "looks_like_code"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# local peak detection on the daily count series
-# ---------------------------------------------------------------------------
-
-_PEAKS_SQL = """
-WITH daily AS (
-  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS cnt
-  FROM events GROUP BY event_type, strftime(ts, '%Y-%m-%d')
-),
-w AS (
-  SELECT event_type, day, cnt,
-         lag(cnt) OVER win AS prev1, lead(cnt) OVER win AS next1,
-         max(cnt) OVER (win ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS local_max
-  FROM daily
-  WINDOW win AS (PARTITION BY event_type ORDER BY day)
-)
-SELECT event_type, day, CAST(cnt AS BIGINT) AS cnt,
-       CAST(prev1 AS BIGINT) AS prev_cnt, CAST(next1 AS BIGINT) AS next_cnt
-FROM w
-WHERE prev1 IS NOT NULL AND next1 IS NOT NULL
-  AND cnt > prev1 AND cnt > next1 AND cnt = local_max
-"""
-
-
-@register("ts_local_peaks", _PEAKS_SQL)
-def ts_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local peak detection on each type's daily count series: a day
-    is a peak iff it strictly beats both neighbors AND is the maximum
-    of its ±3-day neighborhood — the event-spike detector that feeds
-    alerting/annotation (the discrete cousin of ts_anomaly_zscore's
-    statistical gate). One window partition serves the lag, lead, and
-    neighborhood-max frames (named WINDOW in the oracle, shared sort
-    in Spark); all comparisons are exact integers."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.count("*").alias("cnt"))
-    win = Window.partitionBy("event_type").orderBy("day")
-    w = daily.select(
-        "event_type",
-        "day",
-        "cnt",
-        F.lag("cnt").over(win).alias("prev1"),
-        F.lead("cnt").over(win).alias("next1"),
-        F.max("cnt").over(win.rowsBetween(-3, 3)).alias("local_max"),
-    )
-    return w.filter(
-        F.col("prev1").isNotNull()
-        & F.col("next1").isNotNull()
-        & (F.col("cnt") > F.col("prev1"))
-        & (F.col("cnt") > F.col("next1"))
-        & (F.col("cnt") == F.col("local_max"))
-    ).select(
-        "event_type",
-        "day",
-        F.col("cnt").cast("long").alias("cnt"),
-        F.col("prev1").cast("long").alias("prev_cnt"),
-        F.col("next1").cast("long").alias("next_cnt"),
     )

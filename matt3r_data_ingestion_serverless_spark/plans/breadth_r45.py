@@ -1,9 +1,6 @@
-"""Round-2 batch 20 (this run): an autocorrelation-function table and
-monthly growth accounting.
-
-ACF moment sums are exact int64 per lag; growth accounting is pure set
-logic on (user, month) activity — no floats anywhere except final
-round6 ratios.
+"""Round-2 batch 20: monthly growth accounting, pure set logic on
+(user, month) activity — no floats anywhere except final round6
+ratios.
 """
 
 from __future__ import annotations
@@ -11,94 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# ACF table: lags 1..14 of the global daily value-mass series
-# ---------------------------------------------------------------------------
-
-_ACF_MAX_LAG = 14
-
-_ACF_SQL = f"""
-WITH daily AS (
-  SELECT strftime(ts, '%Y-%m-%d') AS day,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS x
-  FROM events GROUP BY strftime(ts, '%Y-%m-%d')
-),
-r AS (SELECT x, row_number() OVER (ORDER BY day) AS rn FROM daily),
-p AS (
-  SELECT k.k, a.x AS xa, b.x AS xb
-  FROM (SELECT unnest(range(1, {_ACF_MAX_LAG + 1})) AS k) k
-  JOIN r a ON TRUE
-  JOIN r b ON b.rn = a.rn + k.k
-),
-s AS (
-  SELECT k, count(*) AS n,
-         sum(xa) AS sa, sum(xb) AS sb,
-         sum(CAST(xa AS DECIMAL(38,0)) * xb) AS sab,
-         sum(CAST(xa AS DECIMAL(38,0)) * xa) AS saa,
-         sum(CAST(xb AS DECIMAL(38,0)) * xb) AS sbb
-  FROM p GROUP BY k
-)
-SELECT k AS lag,
-       CAST(n AS BIGINT) AS n_pairs,
-       {round6_sql(
-           "(CAST(n AS DOUBLE) * CAST(sab AS DOUBLE)"
-           " - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE))"
-           " / (sqrt(CAST(n AS DOUBLE) * CAST(saa AS DOUBLE)"
-           "          - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE))"
-           "    * sqrt(CAST(n AS DOUBLE) * CAST(sbb AS DOUBLE)"
-           "           - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)))"
-       )} AS acf
-FROM s
-"""
-
-
-@register("ts_acf_table", _ACF_SQL)
-def ts_acf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full autocorrelation function of the daily value-mass
-    series at lags 1..14 — the table behind an ACF plot (weekly
-    seasonality shows as a spike at 7), generalizing
-    ts_autocorr_hourly's two fixed lags. Per lag, the lagged pairing
-    is an rn-offset EQUI-join on the ~365-row daily rollup (the
-    aggregate-first discipline), and all five moment sums accumulate
-    exactly (DECIMAL(38,0) products — daily cents reach ~10⁹ at sf0.1,
-    so Σx² exceeds int64); the Pearson closed form runs once per lag.
-    14 lags × 365 rows — trivially broadcast-sized after the shrink."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("x")
-    )
-    r = daily.select("x", F.row_number().over(Window.orderBy("day")).alias("rn"))
-    ks = spark.range(1, _ACF_MAX_LAG + 1).select(F.col("id").cast("int").alias("k"))
-    a = r.crossJoin(F.broadcast(ks)).select(
-        "k", F.col("x").alias("xa"), (F.col("rn") + F.col("k")).alias("probe_rn")
-    )
-    b = r.select(F.col("x").alias("xb"), F.col("rn").alias("probe_rn"))
-    p = a.join(b, "probe_rn")
-    s = p.groupBy("k").agg(
-        F.count("*").alias("n"),
-        F.sum("xa").alias("sa"),
-        F.sum("xb").alias("sb"),
-        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xb")).alias("sab"),
-        F.sum(F.col("xa").cast("decimal(38,0)") * F.col("xa")).alias("saa"),
-        F.sum(F.col("xb").cast("decimal(38,0)") * F.col("xb")).alias("sbb"),
-    )
-    n = F.col("n").cast("double")
-    sa, sb = F.col("sa").cast("double"), F.col("sb").cast("double")
-    sab, saa, sbb = (
-        F.col("sab").cast("double"),
-        F.col("saa").cast("double"),
-        F.col("sbb").cast("double"),
-    )
-    acf = (n * sab - sa * sb) / (F.sqrt(n * saa - sa * sa) * F.sqrt(n * sbb - sb * sb))
-    return s.select(
-        F.col("k").alias("lag"),
-        F.col("n").cast("long").alias("n_pairs"),
-        round6(acf).alias("acf"),
-    )
 
 
 # ---------------------------------------------------------------------------

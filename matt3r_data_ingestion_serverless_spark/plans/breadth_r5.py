@@ -1,6 +1,5 @@
-"""Round-4 batch 1: time-series bar aggregation (OHLC), time-weighted
-averages over irregular samples, a chi-squared independence audit, and
-the first merge step of BPE tokenizer training (adjacent-pair counts).
+"""Round-4 batch 1: a chi-squared independence audit, source-wise
+winsorization, Welch's t-test and RFM segmentation.
 
 All four are classic building blocks of a telemetry/training-data
 pipeline the reference's pandas stages would hand-roll row-by-row
@@ -15,57 +14,7 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# OHLC bars — min_by/max_by with a total (ts, event_id) key
-# ---------------------------------------------------------------------------
-
-_OHLC_SQL = """
-SELECT event_type,
-       strftime(date_trunc('day', ts), '%Y-%m-%d') AS bar_date,
-       -- composite key in HUGEINT: epoch µs ≈ 1.7e15, ×1e5 + id needs int128
-       arg_min(value, epoch_us(ts)::HUGEINT * 100000 + event_id) AS open,
-       max(value) AS high,
-       min(value) AS low,
-       arg_max(value, epoch_us(ts)::HUGEINT * 100000 + event_id) AS close,
-       count(*) AS n_ticks,
-       CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS volume_cents
-FROM events
-GROUP BY 1, 2
-"""
-
-
-@register("ts_ohlc_bars", _OHLC_SQL)
-def ts_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily OHLC bars per event type — the downsampling primitive every
-    market-data / telemetry store exposes (candlesticks, signal bars).
-
-    Spark-first: `min_by`/`max_by` with a struct key is a single
-    hash-aggregate — partial min_by runs map-side, so the shuffle
-    carries one row per (type, day) per mapper, never the ticks. The
-    (ts, event_id) struct makes the ordering total (µs ties broken by
-    the unique id), so open/close are deterministic on any partitioning.
-    At 100 TB this is the canonical "first rollup" materialization; no
-    window sort, no per-group collect.
-
-    Reference parity: the pandas stages' `df.iloc[0]`/`df.iloc[-1]`
-    after a sort (infer_stationary_states.py:70-78) is this exact
-    first/last-of-group semantics, minus the distributed total order.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    key = F.struct("ts", "event_id")
-    return ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("bar_date"),
-    ).agg(
-        F.min_by("value", key).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", key).alias("close"),
-        F.count("*").alias("n_ticks"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("volume_cents"),
-    )
+from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
@@ -131,138 +80,6 @@ def chisq_type_by_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         round6(F.pow(F.col("observed") - expected, 2) / expected).alias(
             "chi2_contrib"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# linear-interpolation resampling to a regular grid
-# ---------------------------------------------------------------------------
-
-_RESAMPLE_SQL = """
-WITH grid AS (
-  SELECT t.event_type, g.gts
-  FROM (SELECT DISTINCT event_type FROM events) t,
-       (SELECT unnest(generate_series(TIMESTAMP '2024-01-01',
-                                      TIMESTAMP '2024-01-31 18:00:00',
-                                      INTERVAL 6 HOUR)) AS gts) g
-),
-u AS (
-  SELECT event_type, epoch_us(ts) AS t_us, value, 0 AS is_grid, event_id
-  FROM events
-  UNION ALL
-  SELECT event_type, epoch_us(gts), NULL, 1, NULL FROM grid
-),
-m AS (
-  SELECT event_type, t_us, is_grid,
-    last_value(value IGNORE NULLS) OVER w_prev AS v0,
-    last_value(CASE WHEN value IS NOT NULL THEN t_us END IGNORE NULLS)
-      OVER w_prev AS t0,
-    first_value(value IGNORE NULLS) OVER w_next AS v1,
-    first_value(CASE WHEN value IS NOT NULL THEN t_us END IGNORE NULLS)
-      OVER w_next AS t1
-  FROM u
-  WINDOW
-    w_prev AS (PARTITION BY event_type ORDER BY t_us, is_grid, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    w_next AS (PARTITION BY event_type ORDER BY t_us, is_grid, event_id
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-)
-SELECT event_type, CAST(t_us AS BIGINT) AS grid_us,
-       CASE WHEN v0 IS NULL OR v1 IS NULL THEN NULL
-            WHEN t1 = t0 THEN {v0_round}
-            ELSE {interp_round} END AS v_interp
-FROM m WHERE is_grid = 1
-""".replace("{v0_round}", round6_sql("v0")).replace(
-    "{interp_round}",
-    round6_sql(
-        "v0 + (v1 - v0) * CAST(t_us - t0 AS DOUBLE) / CAST(t1 - t0 AS DOUBLE)"
-    ),
-)
-
-
-@register("ts_resample_linear", _RESAMPLE_SQL)
-def ts_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resample each event type's irregular series onto a regular 6-hour
-    grid by linear interpolation between the bracketing samples — the
-    feature-alignment step before any multi-channel model join (the
-    continuous twin of ts_gap_fill_locf's step interpolation).
-
-    Spark-first: no as-of join pair — UNION the grid into the sample
-    stream and take `last(value, ignorenulls)` looking back, plus the
-    same running frame over the REVERSED sort for the forward
-    neighbour (Spark's UNBOUNDED FOLLOWING frames re-aggregate per row,
-    O(n²) — see the w_next comment). One shuffle, two in-partition
-    sorts. The ordering key (t_us, is_grid, event_id) is a total order (grid
-    points are unique per type; sample µs ties break on the unique id,
-    and a sample landing exactly on a grid instant sorts before it, so
-    the grid row sees it as its backward neighbour → interpolation
-    degenerates to the sample value exactly).
-
-    At scale: grid rows are O(span/step) per key — negligible next to
-    the data; the plan stays one shuffle regardless of channel count,
-    where per-channel as-of joins would be 2 shuffles per channel.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    types = ev.select("event_type").distinct()
-    grid = types.crossJoin(
-        spark.sql(
-            """SELECT explode(sequence(timestamp'2024-01-01 00:00:00',
-                                       timestamp'2024-01-31 18:00:00',
-                                       interval 6 hours)) AS gts"""
-        )
-    ).select(
-        "event_type",
-        F.unix_micros("gts").alias("t_us"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(1).alias("is_grid"),
-        F.lit(None).cast("long").alias("event_id"),
-    )
-    samples = ev.select(
-        "event_type",
-        F.unix_micros("ts").alias("t_us"),
-        "value",
-        F.lit(0).alias("is_grid"),
-        "event_id",
-    )
-    u = samples.unionByName(grid)
-    w_prev = (
-        Window.partitionBy("event_type")
-        .orderBy("t_us", "is_grid", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # the forward neighbour via a REVERSE-sorted running frame: Spark
-    # executes (CURRENT ROW, UNBOUNDED FOLLOWING) frames by recomputing
-    # the aggregate from each row to the partition end — O(n²) per
-    # partition (measured: 37 s at sf0.1 vs 0.6 s this way). A running
-    # last(ignorenulls) over the reversed total order is the same value
-    # in O(n); the keys are unique, so reversal is exact.
-    w_next = (
-        Window.partitionBy("event_type")
-        .orderBy(F.desc("t_us"), F.desc("is_grid"), F.desc("event_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    t_if_sample = F.when(F.col("value").isNotNull(), F.col("t_us"))
-    m = u.select(
-        "event_type",
-        "t_us",
-        "is_grid",
-        F.last("value", ignorenulls=True).over(w_prev).alias("v0"),
-        F.last(t_if_sample, ignorenulls=True).over(w_prev).alias("t0"),
-        F.last("value", ignorenulls=True).over(w_next).alias("v1"),
-        F.last(t_if_sample, ignorenulls=True).over(w_next).alias("t1"),
-    ).filter(F.col("is_grid") == 1)
-    frac = (F.col("t_us") - F.col("t0")).cast("double") / (
-        F.col("t1") - F.col("t0")
-    ).cast("double")
-    interp = (
-        F.when(F.col("v0").isNull() | F.col("v1").isNull(), F.lit(None).cast("double"))
-        .when(F.col("t1") == F.col("t0"), round6(F.col("v0")))
-        .otherwise(round6(F.col("v0") + (F.col("v1") - F.col("v0")) * frac))
-    )
-    return m.select(
-        "event_type",
-        F.col("t_us").cast("long").alias("grid_us"),
-        interp.alias("v_interp"),
     )
 
 

@@ -1,119 +1,13 @@
-"""Round-2 batch 26 (this run): hysteresis burst detection without a
-fold, and ClickHouse-style windowFunnel depth.
-
-The hysteresis recurrence is rewritten as LOCF over boundary-crossing
-markers (last_value IGNORE NULLS), so the 'stateful' automaton runs as
-one declarative window; thresholds are cross-multiplied integers.
+"""Round-2 batch 26: ClickHouse-style windowFunnel depth.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# hysteresis (Schmitt-trigger) burst episodes over hourly counts
-# ---------------------------------------------------------------------------
-
-# enter burst when cnt > 1.5×mean, leave when cnt < 0.8×mean
-_HYST_HI_NUM, _HYST_LO_NUM = 15, 8  # ×mean_milli/10 cross-multiplied
-
-_HYST_SQL = f"""
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hr, count(*) AS cnt
-  FROM events GROUP BY event_type, date_trunc('hour', ts)
-),
-m AS (
-  SELECT event_type, count(*) AS n_hours, sum(cnt) AS s FROM hourly GROUP BY event_type
-),
-mk AS (
-  SELECT h.event_type, h.hr, h.cnt, m.n_hours,
-         CASE WHEN h.cnt * 10000 > {_HYST_HI_NUM} * ((m.s * 1000) // m.n_hours) THEN 1
-              WHEN h.cnt * 10000 < {_HYST_LO_NUM} * ((m.s * 1000) // m.n_hours) THEN 0
-              ELSE NULL END AS marker
-  FROM hourly h JOIN m USING (event_type)
-),
-st AS (
-  SELECT event_type, hr, n_hours,
-         coalesce(last_value(marker IGNORE NULLS)
-                  OVER (PARTITION BY event_type ORDER BY hr
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS state
-  FROM mk
-),
-tr AS (
-  SELECT event_type, n_hours, state,
-         coalesce(lag(state) OVER (PARTITION BY event_type ORDER BY hr), 0) AS prev
-  FROM st
-)
-SELECT event_type,
-       CAST(max(n_hours) AS BIGINT) AS n_hours,
-       CAST(sum(state) AS BIGINT) AS burst_hours,
-       CAST(sum(CASE WHEN state = 1 AND prev = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_bursts
-FROM tr GROUP BY event_type
-"""
-
-
-@register("ts_hysteresis_bursts", _HYST_SQL)
-def ts_hysteresis_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schmitt-trigger burst detection on hourly counts — enter a
-    burst above 1.5× the mean rate, leave below 0.8× (the two-
-    threshold hysteresis that kills the flapping a single threshold
-    produces; the practical cousin of Kleinberg's burst automaton).
-    The recurrence state_t = f(state_{t-1}, cnt_t) needs NO fold: the
-    state equals the LAST boundary-crossing marker, so last_value
-    IGNORE NULLS over the marker column runs the automaton as one
-    declarative window — the LOCF identity that keeps stateful scans
-    parallel (same family as ts_gap_fill_locf). Thresholds compare
-    cross-multiplied integers against the milli-quantized mean; burst
-    episodes count 0→1 transitions."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr")).agg(
-        F.count("*").alias("cnt")
-    )
-    m = hourly.groupBy("event_type").agg(
-        F.count("*").alias("n_hours"), F.sum("cnt").alias("s")
-    )
-    mk = hourly.join(F.broadcast(m), "event_type").select(
-        "event_type",
-        "hr",
-        "n_hours",
-        F.when(
-            F.col("cnt") * 10000 > _HYST_HI_NUM * F.expr("(s * 1000) div n_hours"), 1
-        )
-        .when(F.col("cnt") * 10000 < _HYST_LO_NUM * F.expr("(s * 1000) div n_hours"), 0)
-        .otherwise(F.lit(None))
-        .alias("marker"),
-    )
-    wcum = (
-        Window.partitionBy("event_type")
-        .orderBy("hr")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    st = mk.select(
-        "event_type",
-        "hr",
-        "n_hours",
-        F.coalesce(F.last("marker", ignorenulls=True).over(wcum), F.lit(0)).alias("state"),
-    )
-    tr = st.select(
-        "event_type",
-        "n_hours",
-        "state",
-        F.coalesce(
-            F.lag("state").over(Window.partitionBy("event_type").orderBy("hr")), F.lit(0)
-        ).alias("prev"),
-    )
-    return tr.groupBy("event_type").agg(
-        F.max("n_hours").cast("long").alias("n_hours"),
-        F.sum("state").cast("long").alias("burst_hours"),
-        F.sum(F.when((F.col("state") == 1) & (F.col("prev") == 0), 1).otherwise(0))
-        .cast("long")
-        .alias("n_bursts"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Round-4 batch 2: CDC log apply / time travel, scalable exact heavy
-hitters (Misra–Gries candidates + exact recount), rolling correlation,
+hitters (Misra–Gries candidates + exact recount),
 leave-one-out target encoding, the hashing trick, largest-remainder
 apportionment, and GROUP BY ALL surface parity.
 
@@ -369,101 +369,6 @@ def heavy_hitters_mg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             round6(F.col("cnt") * 1000.0 / F.col("n")).alias("share_permille"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# rolling 24-hour correlation between two channels
-# ---------------------------------------------------------------------------
-
-_RCORR_SQL = f"""
-WITH h AS (
-  SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hr,
-         coalesce(sum(CASE WHEN event_type = 'view'
-                           THEN CAST(round(value, 0) AS BIGINT) END), 0) AS x,
-         coalesce(sum(CASE WHEN event_type = 'click'
-                           THEN CAST(round(value, 0) AS BIGINT) END), 0) AS y
-  FROM events GROUP BY 1
-),
-w AS (
-  SELECT hr, x, y,
-         count(*)   OVER f AS n,
-         sum(x)     OVER f AS sx,
-         sum(y)     OVER f AS sy,
-         sum(x * y) OVER f AS sxy,
-         sum(x * x) OVER f AS sxx,
-         sum(y * y) OVER f AS syy
-  FROM h
-  WINDOW f AS (ORDER BY hr ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)
-)
-SELECT hr, CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y,
-       CASE WHEN n = 24
-             AND n * sxx - sx * sx > 0
-             AND n * syy - sy * sy > 0
-            THEN {round6_sql(
-                "CAST(n * sxy - sx * sy AS DOUBLE) / "
-                "(sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * "
-                "sqrt(CAST(n * syy - sy * sy AS DOUBLE)))"
-            )}
-       END AS corr24
-FROM w
-"""
-
-
-@register("ts_rolling_corr", _RCORR_SQL)
-def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-24-hour rolling correlation between two channels' hourly
-    totals (view vs click) — the cross-channel co-movement monitor a
-    telemetry stack runs over every signal pair.
-
-    Determinism contract (the ts_bollinger_breach idiom): the window
-    carries EXACT int64 power sums (Σx, Σy, Σxy, Σx², Σy²) of rounded
-    integer hourly totals; Pearson r derives from those ints with one
-    fixed double formula, so the result is identical on any partitioning
-    or engine — windowed SUM of doubles would drift in the last ulp.
-    Zero-variance windows and the first 23 rows are NULL by rule.
-
-    Scale: the hourly pre-aggregation shuffles once (map-side partial
-    sums); the window then runs over hours — thousands of rows per
-    device-month, not events. A global ORDER BY window is fine for one
-    pair; per-device it partitions by device_id and parallelizes.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    as_int = F.round(F.col("value"), 0).cast("long")
-    h = ev.groupBy(
-        F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH").alias("hr")
-    ).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "view", as_int)), F.lit(0)
-        ).alias("x"),
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "click", as_int)), F.lit(0)
-        ).alias("y"),
-    )
-    f = Window.orderBy("hr").rowsBetween(-23, 0)
-    x, y = F.col("x"), F.col("y")
-    w = h.select(
-        "hr",
-        "x",
-        "y",
-        F.count("*").over(f).alias("n"),
-        F.sum(x).over(f).alias("sx"),
-        F.sum(y).over(f).alias("sy"),
-        F.sum(x * y).over(f).alias("sxy"),
-        F.sum(x * x).over(f).alias("sxx"),
-        F.sum(y * y).over(f).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    var_x = n * F.col("sxx") - sx * sx
-    var_y = n * F.col("syy") - sy * sy
-    r = (n * F.col("sxy") - sx * sy).cast("double") / (
-        F.sqrt(var_x.cast("double")) * F.sqrt(var_y.cast("double"))
-    )
-    return w.select(
-        "hr",
-        "x",
-        "y",
-        F.when((n == 24) & (var_x > 0) & (var_y > 0), round6(r)).alias("corr24"),
     )
 
 

@@ -1,7 +1,6 @@
 """Round-4 batch 3: incremental batch-vs-corpus dedup (the production
-ingest mode), Mann–Kendall trend testing, SAX time-series
-symbolization, cross-source quantile normalization, and an LTTB-style
-visual downsample — each exact-integer deterministic and oracle-paired.
+ingest mode) and cross-source quantile normalization — each
+exact-integer deterministic and oracle-paired.
 """
 
 from __future__ import annotations
@@ -114,223 +113,6 @@ def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mann–Kendall monotonic-trend test per channel
-# ---------------------------------------------------------------------------
-
-_MK_SQL = f"""
-WITH dly AS (
-  SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-         sum(CAST(round(value, 0) AS BIGINT)) AS v
-  FROM events GROUP BY 1, 2
-),
-pairs AS (
-  SELECT a.event_type,
-         sum(CASE WHEN b.v > a.v THEN 1 WHEN b.v < a.v THEN -1 ELSE 0 END) AS s
-  FROM dly a JOIN dly b ON a.event_type = b.event_type AND a.day < b.day
-  GROUP BY 1
-),
-ties AS (
-  SELECT event_type, sum(t * (t - 1) * (2 * t + 5)) AS tie_term
-  FROM (SELECT event_type, v, count(*) AS t FROM dly GROUP BY 1, 2)
-  GROUP BY 1
-),
-n AS (SELECT event_type, count(*) AS nd FROM dly GROUP BY 1)
-SELECT n.event_type, CAST(nd AS BIGINT) AS n_days, CAST(s AS BIGINT) AS s_stat,
-       CAST(nd * (nd - 1) * (2 * nd + 5) - tie_term AS BIGINT) AS var18,
-       CASE WHEN nd * (nd - 1) * (2 * nd + 5) - tie_term = 0 THEN NULL
-            WHEN s > 0 THEN {round6_sql(
-                "(s - 1) / sqrt(CAST(nd * (nd - 1) * (2 * nd + 5) - tie_term "
-                "AS DOUBLE) / 18.0)"
-            )}
-            WHEN s < 0 THEN {round6_sql(
-                "(s + 1) / sqrt(CAST(nd * (nd - 1) * (2 * nd + 5) - tie_term "
-                "AS DOUBLE) / 18.0)"
-            )}
-            ELSE 0.0 END AS z_stat
-FROM n JOIN pairs USING (event_type) JOIN ties USING (event_type)
-"""
-
-
-@register("ts_mann_kendall", _MK_SQL)
-def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann–Kendall monotonic-trend test per channel over the daily
-    series: S = Σ_{{i<j}} sign(x_j − x_i), tie-corrected variance
-    (n(n−1)(2n+5) − Σ t(t−1)(2t+5))/18, continuity-corrected Z — the
-    nonparametric "is this drifting?" monitor paired with
-    ts_theilsen_trend's slope estimate (MK tests, Theil–Sen sizes).
-
-    Scale: the O(d²) pair scan runs on the DAILY aggregate (d = days,
-    not events) after one map-side-combining shuffle — 31 days → 465
-    pairs per channel; a year is ~66k pairs, trivial. S and the tie
-    term stay exact int64; Z is one fixed double formula at the end.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
-    a, b = dly.alias("a"), dly.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.day") < F.col("b.day")),
-        )
-        .groupBy(F.col("a.event_type").alias("event_type"))
-        .agg(
-            F.sum(
-                F.when(F.col("b.v") > F.col("a.v"), 1)
-                .when(F.col("b.v") < F.col("a.v"), -1)
-                .otherwise(0)
-            ).alias("s")
-        )
-    )
-    ties = (
-        dly.groupBy("event_type", "v")
-        .agg(F.count("*").alias("t"))
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)).alias(
-                "tie_term"
-            )
-        )
-    )
-    n = dly.groupBy("event_type").agg(F.count("*").alias("nd"))
-    j = n.join(pairs, "event_type").join(ties, "event_type")
-    nd, s = F.col("nd"), F.col("s")
-    var18 = nd * (nd - 1) * (2 * nd + 5) - F.col("tie_term")
-    sd = F.sqrt(var18.cast("double") / 18.0)
-    z = (
-        F.when(var18 == 0, F.lit(None).cast("double"))
-        .when(s > 0, round6((s - 1) / sd))
-        .when(s < 0, round6((s + 1) / sd))
-        .otherwise(F.lit(0.0))
-    )
-    return j.select(
-        "event_type",
-        nd.cast("long").alias("n_days"),
-        s.cast("long").alias("s_stat"),
-        var18.cast("long").alias("var18"),
-        z.alias("z_stat"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# SAX symbolization of the daily series
-# ---------------------------------------------------------------------------
-
-_SAX_SEG_DAYS = 4  # PAA segment width in days
-_SAX_SQL = f"""
-WITH dly AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS BIGINT)
-           AS di,
-         sum(CAST(round(value, 0) AS BIGINT)) AS v
-  FROM events GROUP BY 1, 2
-),
-g AS (
-  SELECT event_type, count(*) AS n, sum(v) AS s,
-         count(*) * sum(v * v) - sum(v) * sum(v) AS k
-  FROM dly GROUP BY 1
-),
-seg AS (
-  SELECT event_type, di // {_SAX_SEG_DAYS} AS seg, sum(v) AS s_seg,
-         count(*) AS n_seg
-  FROM dly GROUP BY 1, 2
-),
-z AS (
-  SELECT s.event_type, s.seg,
-         CAST(s.s_seg * g.n - g.s * s.n_seg AS DOUBLE)
-           / (s.n_seg * sqrt(CAST(g.k AS DOUBLE))) AS zval
-  FROM seg s JOIN g ON s.event_type = g.event_type
-  WHERE g.k > 0
-),
-sym AS (
-  SELECT event_type, seg,
-         CASE WHEN zval < -0.6745 THEN 'a' WHEN zval < 0 THEN 'b'
-              WHEN zval < 0.6745 THEN 'c' ELSE 'd' END AS sy
-  FROM z
-)
-SELECT event_type,
-       string_agg(sy, '' ORDER BY seg) AS sax_word,
-       count(*) AS n_segments
-FROM sym GROUP BY event_type
-"""
-
-
-@register("ts_sax_symbols", _SAX_SQL)
-def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SAX (Symbolic Aggregate approXimation, Lin et al. 2003): z-score
-    the channel's daily series, piecewise-aggregate into 4-day
-    segments, quantize each segment mean against the 4-symbol Gaussian
-    breakpoints (−0.6745, 0, 0.6745) and emit the SAX word — the
-    symbolic index motif/anomaly miners build over telemetry.
-
-    Determinism: the z-scored PAA mean is algebraically rearranged so
-    every sum is exact int64 — z_seg = (s_seg·n − s·n_seg)/(n_seg·√k)
-    with k = n·Σv² − (Σv)² — and the only doubles are one division and
-    one sqrt of exact ints, so the breakpoint comparisons can't be
-    flipped by summation order in either engine. The word assembles
-    with an ordered string_agg / sorted-collect_list fold.
-
-    Scale: daily agg (one shuffle) → per-channel scalars (tiny) →
-    per-segment agg; everything after the first shuffle is
-    channel-count sized.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.datediff(
-            F.date_trunc("day", F.col("ts")), F.lit("2024-01-01").cast("date")
-        )
-        .cast("long")
-        .alias("di"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
-    g = dly.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("v").alias("s"),
-        (F.count("*") * F.sum(F.col("v") * F.col("v")) - F.sum("v") * F.sum("v")).alias(
-            "k"
-        ),
-    )
-    seg = dly.groupBy(
-        "event_type", F.expr(f"di div {_SAX_SEG_DAYS}").alias("seg")
-    ).agg(F.sum("v").alias("s_seg"), F.count("*").alias("n_seg"))
-    z = (
-        seg.join(g, "event_type")
-        .filter(F.col("k") > 0)
-        .select(
-            "event_type",
-            "seg",
-            (
-                (F.col("s_seg") * F.col("n") - F.col("s") * F.col("n_seg")).cast(
-                    "double"
-                )
-                / (F.col("n_seg") * F.sqrt(F.col("k").cast("double")))
-            ).alias("zval"),
-        )
-    )
-    sym = z.select(
-        "event_type",
-        "seg",
-        F.when(F.col("zval") < -0.6745, "a")
-        .when(F.col("zval") < 0, "b")
-        .when(F.col("zval") < 0.6745, "c")
-        .otherwise("d")
-        .alias("sy"),
-    )
-    word = F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("seg", "sy"))), lambda x: x["sy"]
-        ),
-        "",
-    )
-    return sym.groupBy("event_type").agg(
-        word.alias("sax_word"), F.count("*").alias("n_segments")
-    )
-
-
-# ---------------------------------------------------------------------------
 # cross-source quantile normalization (rank-bucket granularity)
 # ---------------------------------------------------------------------------
 
@@ -388,106 +170,4 @@ def ns_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             round6(F.sum("n_chars").cast("double") / F.count("*")).alias("raw_mean"),
             round6(F.max("s").cast("double") / F.max("c")).alias("normalized_value"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# LTTB-style visual downsample (bucket-anchored, fully parallel)
-# ---------------------------------------------------------------------------
-
-_LTTB_SQL = """
-WITH pts AS (
-  SELECT event_type, event_id, epoch_us(ts) AS t_us,
-         CAST(round(value, 0) AS BIGINT) AS v,
-         strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
-  FROM events
-),
-bkt AS (
-  SELECT event_type, day, sum(v) AS s, count(*) AS n FROM pts GROUP BY 1, 2
-),
-nb AS (
-  SELECT event_type, day, n,
-         lag(s)  OVER w AS s_prev, lag(n)  OVER w AS n_prev,
-         lead(s) OVER w AS s_next, lead(n) OVER w AS n_next
-  FROM bkt
-  WINDOW w AS (PARTITION BY event_type ORDER BY day)
-),
-scored AS (
-  SELECT p.event_type, p.day, p.event_id, p.t_us, p.v,
-         abs(2 * p.v * nb.n_prev * nb.n_next
-             - nb.s_prev * nb.n_next - nb.s_next * nb.n_prev) AS score,
-         row_number() OVER (PARTITION BY p.event_type, p.day
-                            ORDER BY abs(2 * p.v * nb.n_prev * nb.n_next
-                                         - nb.s_prev * nb.n_next
-                                         - nb.s_next * nb.n_prev) DESC,
-                                     p.event_id) AS rn
-  FROM pts p JOIN nb ON p.event_type = nb.event_type AND p.day = nb.day
-  WHERE nb.s_prev IS NOT NULL AND nb.s_next IS NOT NULL
-)
-SELECT event_type, day, event_id, CAST(t_us AS BIGINT) AS t_us, v,
-       CAST(score AS BIGINT) AS score
-FROM scored WHERE rn = 1
-"""
-
-
-@register("ts_downsample_lttb", _LTTB_SQL)
-def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LTTB-flavored visual downsampling: one representative point per
-    (channel, day) — the point deviating most from the straight line
-    through its neighbour buckets' means. True LTTB anchors on the
-    PREVIOUSLY SELECTED point, a sequential dependency no parallel
-    engine should accept; anchoring on fixed bucket means (the
-    standard parallel variant) keeps the selection embarrassingly
-    parallel and cross-engine exact: score = |2·v·n₋·n₊ − s₋·n₊ −
-    s₊·n₋| is the deviation |v − (m₋+m₊)/2| scaled by the positive
-    constant 2n₋n₊ — same argmax, all int64, no division.
-
-    Scale: bucket stats are one map-combining shuffle; neighbour means
-    come from a lag/lead window over BUCKETS (days, not points); the
-    scan-sized argmax per bucket reuses the same (type, day) hash. The
-    first/last buckets have no neighbours and are kept whole by the
-    real renderer; they are omitted here.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    pts = ev.select(
-        "event_type",
-        "event_id",
-        F.unix_micros("ts").alias("t_us"),
-        F.round(F.col("value"), 0).cast("long").alias("v"),
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    )
-    bkt = pts.groupBy("event_type", "day").agg(
-        F.sum("v").alias("s"), F.count("*").alias("n")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    nb = bkt.select(
-        "event_type",
-        "day",
-        F.lag("s").over(w).alias("s_prev"),
-        F.lag("n").over(w).alias("n_prev"),
-        F.lead("s").over(w).alias("s_next"),
-        F.lead("n").over(w).alias("n_next"),
-    ).filter(F.col("s_prev").isNotNull() & F.col("s_next").isNotNull())
-    j = pts.join(nb, ["event_type", "day"])
-    score = F.abs(
-        2 * F.col("v") * F.col("n_prev") * F.col("n_next")
-        - F.col("s_prev") * F.col("n_next")
-        - F.col("s_next") * F.col("n_prev")
-    )
-    scored = j.select(
-        "event_type", "day", "event_id", "t_us", "v", score.alias("score")
-    )
-    best = scored.groupBy("event_type", "day").agg(
-        F.max_by(
-            F.struct("event_id", "t_us", "v", "score"),
-            F.struct(F.col("score"), (-F.col("event_id")).alias("nid")),
-        ).alias("p")
-    )
-    return best.select(
-        "event_type",
-        "day",
-        F.col("p.event_id").alias("event_id"),
-        F.col("p.t_us").alias("t_us"),
-        F.col("p.v").alias("v"),
-        F.col("p.score").alias("score"),
     )

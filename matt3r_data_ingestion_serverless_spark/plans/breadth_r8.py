@@ -1,7 +1,7 @@
 """Round-4 batch 4: exact global quantiles over a value histogram,
 bitmap-index distinct counting, length-bucketed batch packing,
-stratified k-fold assignment, BOM explosion rollup, and preference-pair
-mining — more of the relational + ML-prep surface, each exact-integer
+stratified k-fold assignment, BOM explosion rollup, preference-pair
+mining and kNN classification — more of the relational + ML-prep surface, each exact-integer
 deterministic with a DuckDB oracle.
 """
 
@@ -402,87 +402,6 @@ def ns_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_candidates"),
         )
         .filter(F.col("n_candidates") >= 2)
-    )
-
-
-# ---------------------------------------------------------------------------
-# rolling-quantile outlier fence (windowed percentile frames)
-# ---------------------------------------------------------------------------
-
-_IQR_SQL = f"""
-WITH h AS (
-  SELECT event_type, strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hr,
-         sum(CAST(round(value, 0) AS BIGINT)) AS v
-  FROM events GROUP BY 1, 2
-),
-w AS (
-  SELECT event_type, hr, v,
-         count(*) OVER f AS n,
-         quantile_cont(v, 0.25) OVER f AS q25,
-         quantile_cont(v, 0.75) OVER f AS q75
-  FROM h
-  WINDOW f AS (PARTITION BY event_type ORDER BY hr
-               ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)
-)
-SELECT event_type, hr, CAST(v AS BIGINT) AS v,
-       CASE WHEN n = 24 THEN {round6_sql("q25")} END AS q25,
-       CASE WHEN n = 24 THEN {round6_sql("q75")} END AS q75,
-       CASE WHEN n = 24
-            THEN v < q25 - 1.5 * (q75 - q25) OR v > q75 + 1.5 * (q75 - q25)
-       END AS is_outlier
-FROM w
-"""
-
-
-@register("ts_rolling_iqr_outliers", _IQR_SQL)
-def ts_rolling_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling Tukey-fence outlier detection: per channel, the trailing
-    24-hour interquartile range flags hourly totals outside
-    [q25 − 1.5·IQR, q75 + 1.5·IQR] — the robust anomaly monitor that,
-    unlike ts_anomaly_zscore's mean/σ, a single spike cannot poison.
-
-    This exercises EXACT PERCENTILES AS WINDOW FRAME AGGREGATES
-    (percentile() OVER rolling rows — the one window/agg combination no
-    other query covers). Determinism: frame inputs are exact int64
-    hourly sums; both engines linearly interpolate the sorted frame at
-    (n−1)·q with the same formula, so q25/q75 and the fence comparisons
-    agree bit-for-bit. The fence itself compares UNROUNDED doubles
-    (rounding only the reported quantiles) — rounding before comparing
-    could flip a boundary verdict differently per engine.
-
-    Scale: the window runs over hours (25 rows/channel-day), not
-    events; per-frame interpolation cost is O(frame log frame)."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH").alias("hr"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
-    f = (
-        Window.partitionBy("event_type")
-        .orderBy("hr")
-        .rowsBetween(-23, 0)
-    )
-    w = h.select(
-        "event_type",
-        "hr",
-        "v",
-        F.count("*").over(f).alias("n"),
-        F.expr("percentile(v, 0.25)").over(f).alias("q25"),
-        F.expr("percentile(v, 0.75)").over(f).alias("q75"),
-    )
-    iqr = F.col("q75") - F.col("q25")
-    full = F.col("n") == 24
-    return w.select(
-        "event_type",
-        "hr",
-        "v",
-        F.when(full, round6(F.col("q25"))).alias("q25"),
-        F.when(full, round6(F.col("q75"))).alias("q75"),
-        F.when(
-            full,
-            (F.col("v") < F.col("q25") - 1.5 * iqr)
-            | (F.col("v") > F.col("q75") + 1.5 * iqr),
-        ).alias("is_outlier"),
     )
 
 

@@ -1,11 +1,9 @@
-"""Round-4 batch 10: behavioural edit-distance drift, Hurst R/S
-long-range dependence, grid-bucketed radius nearest neighbour, and the
-streamed session-window gate.
+"""Round-4 batch 10: behavioural edit-distance drift, grid-bucketed
+radius nearest neighbour, and the streamed session-window gate.
 
-Four more operator families: Levenshtein distance between a user's
+Three more operator families: Levenshtein distance between a user's
 consecutive daily event sequences (behavioural drift — both engines
-ship the same classic DP built-in), the rescaled-range Hurst exponent
-of the hourly arrival series (the long-memory diagnostic), an exact
+ship the same classic DP built-in), an exact
 within-radius nearest-neighbour join via 3×3 grid-cell blocking (the
 planar spatial-join primitive), and native `session_window`
 sessionization run through Structured Streaming (the streamed twin of
@@ -14,16 +12,10 @@ sessionization run through Structured Streaming (the streamed twin of
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import (
-    _SLOTS_CTE_SQL,
-    hourly_slots,
-)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
@@ -104,132 +96,6 @@ def seq_edit_distance_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("seq").cast("int").alias("seq_len"),
         F.length("prev").cast("int").alias("prev_len"),
         F.levenshtein("seq", "prev").cast("int").alias("lev_dist"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hurst exponent via rescaled-range (R/S) analysis
-# ---------------------------------------------------------------------------
-
-_RS_WINDOWS = (8, 16, 32, 64)
-
-
-def _rs_per_w_sql(w: int) -> str:
-    # all chunk statistics derive from exact integer sums; the only
-    # cross-engine float risk is the final chunk-average (summation
-    # order), absorbed by round6
-    return f"""
-  SELECT {w} AS w, count(*) AS n_chunks,
-         {round6_sql('sum(rs) / count(*)')} AS rs_avg
-  FROM (
-    SELECT chunk, (max(dev) - min(dev))
-             / sqrt(s2 / {w}.0 - (s1 / {w}.0) * (s1 / {w}.0)) AS rs
-    FROM (
-      SELECT slot // {w} AS chunk,
-             sum(n) OVER (PARTITION BY slot // {w} ORDER BY slot
-                          ROWS UNBOUNDED PRECEDING)
-               - (slot % {w} + 1) * (sum(n) OVER (PARTITION BY slot // {w}) / {w}.0)
-               AS dev,
-             sum(n) OVER (PARTITION BY slot // {w}) AS s1,
-             sum(n * n) OVER (PARTITION BY slot // {w}) AS s2
-      FROM s
-    )
-    GROUP BY chunk, s1, s2
-    HAVING s2 * {w} > s1 * s1
-  )
-"""
-
-
-def _hurst_sql() -> str:
-    per_w = "\n  UNION ALL\n".join(_rs_per_w_sql(w) for w in _RS_WINDOWS)
-    return f"""
-WITH {_SLOTS_CTE_SQL},
-rs AS ({per_w}),
-pts AS (SELECT w, n_chunks, rs_avg, ln(w) AS x, ln(rs_avg) AS y FROM rs),
-slope AS (
-  SELECT (count(*) * sum(x * y) - sum(x) * sum(y))
-           / (count(*) * sum(x * x) - sum(x) * sum(x)) AS h
-  FROM pts
-)
-SELECT w, n_chunks, rs_avg AS rs_avg_r, {round6_sql('slope.h')} AS hurst_r
-FROM pts, slope
-"""
-
-
-@register("ts_hurst_rs", sql=_hurst_sql())
-def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hurst exponent by rescaled-range analysis of the hourly event
-    arrival series: for window sizes 8..64 slots, each chunk's
-    R (range of cumulative deviations from the chunk mean) over
-    S (population σ) averages into one point; the log-log slope across
-    window sizes is H (0.5 = memoryless arrivals, > 0.5 = long-range
-    persistence) — the classic long-memory diagnostic (Mandelbrot &
-    Wallis) that tells a capacity planner whether bursts aggregate
-    away.
-
-    Scale: chunk statistics come from ONE pass of window aggregates
-    partitioned on chunk id (integer sums — exact), the per-w results
-    are a 4-branch union over the same 512-slot dense frame, and the
-    final slope is a 4-point regression folded as sums. Per-device at
-    100 TB, every window re-keys by (device, chunk) — no stage holds
-    more than a chunk."""
-    s = hourly_slots(spark, sf_dir).localCheckpoint(eager=True)
-    per_w = []
-    for w in _RS_WINDOWS:
-        chunk = (F.col("slot") - F.pmod("slot", F.lit(w))) / w
-        wc = Window.partitionBy("chunk")
-        wrun = Window.partitionBy("chunk").orderBy("slot").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        st = s.select(
-            F.col("slot"),
-            F.col("n"),
-            chunk.cast("long").alias("chunk"),
-        ).select(
-            "chunk",
-            "slot",
-            (
-                F.sum("n").over(wrun)
-                - (F.pmod("slot", F.lit(w)) + 1) * (F.sum("n").over(wc) / float(w))
-            ).alias("dev"),
-            F.sum("n").over(wc).alias("s1"),
-            F.sum(F.col("n") * F.col("n")).over(wc).alias("s2"),
-        )
-        rs = (
-            st.groupBy("chunk", "s1", "s2")
-            .agg((F.max("dev") - F.min("dev")).alias("r"))
-            .filter(F.col("s2") * w > F.col("s1") * F.col("s1"))
-            .select(
-                (
-                    F.col("r")
-                    / F.sqrt(
-                        F.col("s2") / float(w)
-                        - (F.col("s1") / float(w)) * (F.col("s1") / float(w))
-                    )
-                ).alias("rs")
-            )
-        )
-        per_w.append(
-            rs.agg(
-                F.lit(w).alias("w"),
-                F.count(F.lit(1)).alias("n_chunks"),
-                round6(F.sum("rs") / F.count(F.lit(1))).alias("rs_avg"),
-            )
-        )
-    pts = per_w[0]
-    for other in per_w[1:]:
-        pts = pts.union(other)
-    pts = pts.select(
-        "*", F.log("w").alias("x"), F.log("rs_avg").alias("y")
-    ).localCheckpoint(eager=True)
-    slope = pts.agg(
-        (
-            (F.count(F.lit(1)) * F.sum(F.col("x") * F.col("y")) - F.sum("x") * F.sum("y"))
-            / (F.count(F.lit(1)) * F.sum(F.col("x") * F.col("x")) - F.sum("x") * F.sum("x"))
-        ).alias("h")
-    )
-    return pts.join(F.broadcast(slope)).select(
-        "w", "n_chunks", F.col("rs_avg").alias("rs_avg_r"), round6(F.col("h")).alias("hurst_r")
     )
 
 

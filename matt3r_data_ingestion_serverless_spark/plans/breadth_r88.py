@@ -1,11 +1,9 @@
-"""Round-4 batch 16: Apriori frequent triples, median-polish
-decomposition, and the streamed SCD2 point-in-time enrichment gate.
+"""Round-4 batch 16: Apriori frequent triples and the streamed SCD2
+point-in-time enrichment gate.
 
-Three operator families: candidate-pruned frequent-itemset mining one
+Two operator families: candidate-pruned frequent-itemset mining one
 size up from basket_pair_lift's pairs (the Apriori join+prune step on
-a composite-item universe where pruning actually bites), Tukey's median
-polish of the day-of-week × hour activity grid (the robust two-way
-decomposition whose residuals expose localized anomalies), and the
+a composite-item universe where pruning actually bites), and the
 13th streamed gate: events enriched AS-OF their effective date against
 the SCD2 dimension history (the feature-store PIT-correctness rule run
 inside a stream).
@@ -16,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
@@ -177,83 +174,6 @@ def basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         thr = top.s10 if top.s10 is not None else minsup
     return sup.filter(F.col("support") >= thr).select("ia", "ib", "ic", "support")
-
-
-# ---------------------------------------------------------------------------
-# Tukey median polish of the dow × hour grid
-# ---------------------------------------------------------------------------
-
-_POLISH_SWEEPS = 2
-
-
-def _polish_sql() -> str:
-    # g, r{s}a and r{s} are MATERIALIZED: each is named twice by the next
-    # step, so inlining would rescan events 4^sweeps times
-    body = [
-        """g AS MATERIALIZED (
-  SELECT CAST(isodow(ts) AS INT) AS dow, CAST(hour(ts) AS INT) AS hr,
-         CAST(count(*) AS DOUBLE) AS r
-  FROM events GROUP BY 1, 2
-)"""
-    ]
-    prev = "g"
-    for s in range(1, _POLISH_SWEEPS + 1):
-        body.append(
-            f"""rm{s} AS (SELECT dow, quantile_cont(r, 0.5) AS med FROM {prev} GROUP BY dow),
-r{s}a AS MATERIALIZED (
-  SELECT t.dow, t.hr, t.r - m.med AS r FROM {prev} t JOIN rm{s} m USING (dow)
-),
-cm{s} AS (SELECT hr, quantile_cont(r, 0.5) AS med FROM r{s}a GROUP BY hr),
-r{s} AS MATERIALIZED (
-  SELECT t.dow, t.hr, t.r - m.med AS r FROM r{s}a t JOIN cm{s} m USING (hr)
-)"""
-        )
-        prev = f"r{s}"
-    return (
-        "WITH "
-        + ",\n".join(body)
-        + f"\nSELECT dow, hr, {round6_sql('r')} AS resid_r FROM {prev}"
-    )
-
-
-@register("ts_median_polish_residuals", sql=_polish_sql())
-def ts_median_polish_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey median polish of the day-of-week × hour event-count grid
-    (2 sweeps): alternately subtract row and column medians, leaving
-    residuals robust to outlier cells — the additive two-way
-    decomposition (overall + dow effect + hour effect + residual) that
-    exposes localized anomalies plain row/column means would smear.
-    Counts enter as exact integers; medians of ≤ 24 values interpolate
-    exactly (both engines' interpolated median), so every residual is
-    an identical float expression.
-
-    Scale: the grid materializes with ONE groupBy over the scan
-    (168 cells at any data size); the polish sweeps are joins over the
-    constant-size grid — per-device at 100 TB the same plan re-keys
-    the grid and medians by device."""
-    g = (
-        load_table(spark, sf_dir, "events")
-        # Spark dayofweek: Sunday=1..Saturday=7 → ISO Monday=1..Sunday=7
-        .groupBy(
-            (((F.dayofweek("ts") + 5) % 7) + 1).cast("int").alias("dow"),
-            F.hour("ts").cast("int").alias("hr"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("r"))
-        .localCheckpoint(eager=True)
-    )
-    cur = g
-    for _ in range(_POLISH_SWEEPS):
-        rm = cur.groupBy("dow").agg(F.percentile("r", F.lit(0.5)).alias("med"))
-        cur = (
-            cur.join(F.broadcast(rm), "dow")
-            .select("dow", "hr", (F.col("r") - F.col("med")).alias("r"))
-        )
-        cm = cur.groupBy("hr").agg(F.percentile("r", F.lit(0.5)).alias("med"))
-        cur = (
-            cur.join(F.broadcast(cm), "hr")
-            .select("dow", "hr", (F.col("r") - F.col("med")).alias("r"))
-        )
-    return cur.select("dow", "hr", round6(F.col("r")).alias("resid_r"))
 
 
 # ---------------------------------------------------------------------------

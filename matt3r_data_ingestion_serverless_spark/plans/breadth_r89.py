@@ -1,14 +1,12 @@
-"""Round-4 batch 17: an ALS user-factor solve, Naive Bayes language
-ID, and AR(2) Yule-Walker fitting.
+"""Round-4 batch 17: an ALS user-factor solve and Naive Bayes language
+ID.
 
-Three model-fitting operator families expressed relationally: one
+Two model-fitting operator families expressed relationally: one
 alternating-least-squares half-round with the per-user 2×2 normal
 equations solved in closed form (the recommender-systems primitive),
-multinomial Naive Bayes trained on half the corpus and confusion-
+and multinomial Naive Bayes trained on half the corpus and confusion-
 evaluated on the other half (the classical text classifier as pure
-joins + aggregates), and an autoregressive AR(2) fit via the
-Yule-Walker equations over the hourly arrival series (classical
-time-series model estimation from exact integer sums).
+joins + aggregates).
 """
 
 from __future__ import annotations
@@ -17,11 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import (
-    _HAAR_SLOTS,
-    _SLOTS_CTE_SQL,
-    hourly_slots,
-)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
@@ -279,132 +272,4 @@ def ns_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
         .groupBy("true_lang", F.col("cand").alias("pred_lang"))
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# AR(2) via Yule-Walker
-# ---------------------------------------------------------------------------
-
-
-def _ar2_sql() -> str:
-    n = _HAAR_SLOTS
-    return f"""
-WITH {_SLOTS_CTE_SQL},
-lagged AS (
-  SELECT slot, n,
-         lag(n, 1) OVER (ORDER BY slot) AS n1,
-         lag(n, 2) OVER (ORDER BY slot) AS n2
-  FROM s
-),
-sums AS (
-  SELECT sum(n) AS s1, sum(n * n) AS s11,
-         sum(CASE WHEN n1 IS NOT NULL THEN n * n1 END) AS p1,
-         sum(CASE WHEN n1 IS NOT NULL THEN n END) AS h1a,
-         sum(CASE WHEN n1 IS NOT NULL THEN n1 END) AS h1b,
-         sum(CASE WHEN n2 IS NOT NULL THEN n * n2 END) AS p2,
-         sum(CASE WHEN n2 IS NOT NULL THEN n END) AS h2a,
-         sum(CASE WHEN n2 IS NOT NULL THEN n2 END) AS h2b,
-         max(CASE WHEN slot = {n - 1} THEN n END) AS x_last,
-         max(CASE WHEN slot = {n - 2} THEN n END) AS x_prev
-  FROM lagged
-),
-acv AS (
-  SELECT CAST(s1 AS DOUBLE) / {n} AS mu,
-         (s11 - 2.0 * (CAST(s1 AS DOUBLE) / {n}) * s1
-              + {n} * pow(CAST(s1 AS DOUBLE) / {n}, 2)) / {n} AS c0,
-         (p1 - (CAST(s1 AS DOUBLE) / {n}) * (h1a + h1b)
-             + {n - 1} * pow(CAST(s1 AS DOUBLE) / {n}, 2)) / {n} AS c1,
-         (p2 - (CAST(s1 AS DOUBLE) / {n}) * (h2a + h2b)
-             + {n - 2} * pow(CAST(s1 AS DOUBLE) / {n}, 2)) / {n} AS c2,
-         x_last, x_prev
-  FROM sums
-),
-fit AS (
-  SELECT mu, c0, c1 / c0 AS r1, c2 / c0 AS r2, x_last, x_prev FROM acv
-)
-SELECT {round6_sql('r1')} AS r1_r,
-       {round6_sql('r2')} AS r2_r,
-       {round6_sql('r1 * (1 - r2) / (1 - r1 * r1)')} AS phi1_r,
-       {round6_sql('(r2 - r1 * r1) / (1 - r1 * r1)')} AS phi2_r,
-       {round6_sql(
-           "mu + (r1 * (1 - r2) / (1 - r1 * r1)) * (x_last - mu)"
-           " + ((r2 - r1 * r1) / (1 - r1 * r1)) * (x_prev - mu)"
-       )} AS forecast_r
-FROM fit
-"""
-
-
-@register("ts_ar2_yule_walker", sql=_ar2_sql())
-def ts_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AR(2) fit of the hourly arrival series by the Yule-Walker
-    equations: autocovariances c₀,c₁,c₂ from exact integer sums
-    (Σxₜxₜ₊ₖ via two lag windows), φ₁ = r₁(1−r₂)/(1−r₁²),
-    φ₂ = (r₂−r₁²)/(1−r₁²), plus the one-step-ahead forecast
-    μ + φ₁(xₙ−μ) + φ₂(xₙ₋₁−μ) — classical time-series model estimation
-    beside ts_acf_table's raw correlogram and ts_holt_linear's
-    smoother.
-
-    Scale: the 512-slot dense frame aggregates to ONE row of integer
-    sums (the lag products come from the same ordered pass), and the
-    fit is arithmetic on that row — per-device at 100 TB the same plan
-    keys the sums by device. Every float derives from the identical
-    expression over exact integers."""
-    n = _HAAR_SLOTS
-    s = hourly_slots(spark, sf_dir)
-    wo = Window.orderBy("slot")
-    lagged = s.select(
-        "slot",
-        "n",
-        F.lag("n", 1).over(wo).alias("n1"),
-        F.lag("n", 2).over(wo).alias("n2"),
-    )
-    sums = lagged.agg(
-        F.sum("n").alias("s1"),
-        F.sum(F.col("n") * F.col("n")).alias("s11"),
-        F.sum(F.when(F.col("n1").isNotNull(), F.col("n") * F.col("n1"))).alias("p1"),
-        F.sum(F.when(F.col("n1").isNotNull(), F.col("n"))).alias("h1a"),
-        F.sum(F.when(F.col("n1").isNotNull(), F.col("n1"))).alias("h1b"),
-        F.sum(F.when(F.col("n2").isNotNull(), F.col("n") * F.col("n2"))).alias("p2"),
-        F.sum(F.when(F.col("n2").isNotNull(), F.col("n"))).alias("h2a"),
-        F.sum(F.when(F.col("n2").isNotNull(), F.col("n2"))).alias("h2b"),
-        F.max(F.when(F.col("slot") == n - 1, F.col("n"))).alias("x_last"),
-        F.max(F.when(F.col("slot") == n - 2, F.col("n"))).alias("x_prev"),
-    )
-    mu = F.col("s1").cast("double") / n
-    acv = sums.select(
-        mu.alias("mu"),
-        ((F.col("s11") - 2.0 * mu * F.col("s1") + n * F.pow(mu, 2)) / n).alias("c0"),
-        (
-            (F.col("p1") - mu * (F.col("h1a") + F.col("h1b")) + (n - 1) * F.pow(mu, 2))
-            / n
-        ).alias("c1"),
-        (
-            (F.col("p2") - mu * (F.col("h2a") + F.col("h2b")) + (n - 2) * F.pow(mu, 2))
-            / n
-        ).alias("c2"),
-        "x_last",
-        "x_prev",
-    )
-    fit = acv.select(
-        "mu",
-        (F.col("c1") / F.col("c0")).alias("r1"),
-        (F.col("c2") / F.col("c0")).alias("r2"),
-        "x_last",
-        "x_prev",
-    )
-    phi1 = F.col("r1") * (1 - F.col("r2")) / (1 - F.col("r1") * F.col("r1"))
-    phi2 = (F.col("r2") - F.col("r1") * F.col("r1")) / (
-        1 - F.col("r1") * F.col("r1")
-    )
-    return fit.select(
-        round6(F.col("r1")).alias("r1_r"),
-        round6(F.col("r2")).alias("r2_r"),
-        round6(phi1).alias("phi1_r"),
-        round6(phi2).alias("phi2_r"),
-        round6(
-            F.col("mu")
-            + phi1 * (F.col("x_last") - F.col("mu"))
-            + phi2 * (F.col("x_prev") - F.col("mu"))
-        ).alias("forecast_r"),
     )

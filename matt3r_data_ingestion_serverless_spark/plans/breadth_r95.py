@@ -1,13 +1,11 @@
-"""Round-4 batch 23: bisection exact median, IRLS logistic regression,
-and circular time-of-day statistics.
+"""Round-4 batch 23: bisection exact median and IRLS logistic
+regression.
 
-Three operator families: the counting-bisection exact median (the
+Two operator families: the counting-bisection exact median (the
 2-pass-per-round algorithm that computes exact order statistics at
-scales where a sort or an exact percentile buffer would not fit),
+scales where a sort or an exact percentile buffer would not fit), and
 two Newton/IRLS steps of a logistic regression trained relationally
-(the GLM loop as aggregates), and circular statistics of the
-time-of-day distribution (mean direction + resultant length — the
-right way to average hours, where 23:00 and 01:00 are 2 h apart).
+(the GLM loop as aggregates).
 """
 
 from __future__ import annotations
@@ -230,67 +228,4 @@ def ml_logreg_irls_2steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         round6(F.col("b1")).alias("beta1_r"),
         "n_pos",
         "n_users",
-    )
-
-
-# ---------------------------------------------------------------------------
-# circular time-of-day statistics
-# ---------------------------------------------------------------------------
-
-_CIRC_SQL = f"""
-WITH a AS (
-  SELECT event_type,
-         -- integer microseconds: DuckDB epoch() keeps fractional
-         -- seconds while Spark unix_seconds truncates — epoch_us is
-         -- the shared exact clock
-         2 * pi() * (epoch_us(ts) % 86400000000) / 86400000000.0 AS theta
-  FROM events
-),
-s AS (
-  SELECT event_type, count(*) AS n,
-         sum(cos(theta)) AS sc, sum(sin(theta)) AS ss
-  FROM a GROUP BY event_type
-)
-SELECT event_type, n,
-       {round6_sql('sqrt(sc * sc + ss * ss) / n')} AS resultant_r,
-       {round6_sql('1.0 - sqrt(sc * sc + ss * ss) / n')} AS circ_variance_r,
-       {round6_sql('(atan2(ss, sc) + 2 * pi()) % (2 * pi()) * 24 / (2 * pi())')}
-         AS mean_hour_r
-FROM s
-"""
-
-
-@register("ts_circular_hour_stats", sql=_CIRC_SQL)
-def ts_circular_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Circular statistics of the time-of-day distribution per event
-    type: mean direction (as an hour) and resultant length R̄ — the
-    correct way to average clock times (23:00 and 01:00 average to
-    midnight, not noon). R̄ near 0 = activity uniform around the clock;
-    near 1 = concentrated at one hour. Circular variance = 1 − R̄.
-
-    Scale: one scan, one groupBy(type) of cos/sin partial sums
-    (map-side combine); the angle arithmetic is identical expression
-    text in both engines and round6 absorbs the trig-sum ordering."""
-    ev = load_table(spark, sf_dir, "events")
-    theta = (
-        2
-        * math.pi
-        * (F.unix_micros("ts") % 86_400_000_000).cast("double")
-        / 86_400_000_000.0
-    )
-    s = ev.select("event_type", theta.alias("theta")).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.cos("theta")).alias("sc"),
-        F.sum(F.sin("theta")).alias("ss"),
-    )
-    rlen = F.sqrt(F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss")) / F.col("n")
-    mean_hour = (
-        (F.atan2(F.col("ss"), F.col("sc")) + 2 * math.pi) % (2 * math.pi)
-    ) * 24 / (2 * math.pi)
-    return s.select(
-        "event_type",
-        "n",
-        round6(rlen).alias("resultant_r"),
-        round6(1.0 - rlen).alias("circ_variance_r"),
-        round6(mean_hour).alias("mean_hour_r"),
     )

@@ -1,11 +1,7 @@
-"""Round-4 batch 26: two-round stump boosting and binary segmentation.
+"""Round-4 batch 26: two-round stump boosting.
 
-Two recursive-partitioning operator families: gradient boosting with
-depth-1 trees (fit a stump, fit a second stump on the residuals — the
-additive-model loop behind GBDT), and binary segmentation of the
-hourly series (find the best changepoint, then the best changepoint
-within each half — the classic multiple-changepoint search built on
-the same prefix-sum split machinery as the CART root).
+Gradient boosting with depth-1 trees (fit a stump, fit a second stump
+on the residuals — the additive-model loop behind GBDT).
 """
 
 from __future__ import annotations
@@ -14,10 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import (
-    _SLOTS_CTE_SQL,
-    hourly_slots,
-)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
@@ -217,102 +209,3 @@ def ml_boosting_two_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         round6(F.col("rmse1")).alias("rmse_after1_r"),
         round6(F.col("rmse2")).alias("rmse_after2_r"),
     )
-
-
-# ---------------------------------------------------------------------------
-# binary segmentation of the hourly series
-# ---------------------------------------------------------------------------
-
-
-def _binseg_sql() -> str:
-    def seg(src: str, out: str, lo: str, hi: str) -> str:
-        # best split point of s[lo, hi) minimizing two-piece SSE
-        return f"""
-{out}_w AS (
-  SELECT slot, n,
-         sum(n) OVER w AS cy, sum(n * n) OVER w AS cyy,
-         row_number() OVER w AS i,
-         count(*) OVER () AS m,
-         sum(n) OVER () AS ty, sum(n * n) OVER () AS tyy
-  FROM {src} WHERE slot >= {lo} AND slot < {hi}
-  WINDOW w AS (ORDER BY slot ROWS UNBOUNDED PRECEDING)
-),
-{out} AS (
-  SELECT slot AS cut,
-         (cyy - CAST(cy AS DOUBLE) * cy / i)
-           + ((tyy - cyy) - CAST(ty - cy AS DOUBLE) * (ty - cy) / (m - i)) AS sse
-  FROM {out}_w WHERE i < m
-  ORDER BY floor(((cyy - CAST(cy AS DOUBLE) * cy / i)
-           + ((tyy - cyy) - CAST(ty - cy AS DOUBLE) * (ty - cy) / (m - i)))
-           * 1e6 + 0.5) ASC, slot ASC
-  LIMIT 1
-)"""
-
-    return f"""
-WITH {_SLOTS_CTE_SQL},
-{seg('s', 'c1', '0', '512')},
-{seg('s', 'c2l', '0', '(SELECT cut + 1 FROM c1)')},
-{seg('s', 'c2r', '(SELECT cut + 1 FROM c1)', '512')}
-SELECT 1 AS seg_round, c1.cut AS cut_slot, {round6_sql('c1.sse')} AS sse_r FROM c1
-UNION ALL SELECT 2, c2l.cut, {round6_sql('c2l.sse')} FROM c2l
-UNION ALL SELECT 3, c2r.cut, {round6_sql('c2r.sse')} FROM c2r
-"""
-
-
-@register("ts_binary_segmentation", sql=_binseg_sql())
-def ts_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary segmentation changepoint search on the 512-slot hourly
-    series: find the split minimizing two-piece SSE, then recurse once
-    into each half — the standard multiple-changepoint detector
-    (Scott-Knott / binseg) built from the same prefix-sum split search
-    as the CART/stump family, on the TIME axis instead of a feature.
-    Counts are exact integers; the argmin compares micro-rounded SSE.
-
-    Scale: each segment search is one ordered prefix pass over the
-    (support-sized) slot frame + a TakeOrdered top-1; recursion depth
-    is the changepoint budget, a constant."""
-    s = hourly_slots(spark, sf_dir).localCheckpoint(eager=True)
-
-    def best_cut(lo: int, hi: int):
-        w = Window.orderBy("slot").rowsBetween(Window.unboundedPreceding, 0)
-        wall = Window.partitionBy()
-        seg = s.filter((F.col("slot") >= lo) & (F.col("slot") < hi))
-        ordd = seg.select(
-            "slot",
-            F.sum("n").over(w).alias("cy"),
-            F.sum(F.col("n") * F.col("n")).over(w).alias("cyy"),
-            F.row_number().over(Window.orderBy("slot")).alias("i"),
-            F.count(F.lit(1)).over(wall).alias("m"),
-            F.sum("n").over(wall).alias("ty"),
-            F.sum(F.col("n") * F.col("n")).over(wall).alias("tyy"),
-        )
-        sse = (
-            F.col("cyy") - F.col("cy").cast("double") * F.col("cy") / F.col("i")
-        ) + (
-            (F.col("tyy") - F.col("cyy"))
-            - (F.col("ty") - F.col("cy")).cast("double")
-            * (F.col("ty") - F.col("cy"))
-            / (F.col("m") - F.col("i"))
-        )
-        rows = (
-            ordd.filter(F.col("i") < F.col("m"))
-            .select("slot", sse.alias("sse"))
-            .orderBy(F.asc(F.floor(F.col("sse") * 1e6 + 0.5)), F.asc("slot"))
-            .limit(1)
-            .collect()
-        )
-        return (rows[0].slot, rows[0].sse) if rows else None
-
-    out = []
-    c1 = best_cut(0, 512)
-    out.append((1, c1[0], c1[1]))
-    # a boundary cut leaves a half with < 2 slots — no split exists
-    # there, and the oracle's LIMIT 1 over the empty branch emits no
-    # row; mirror that
-    for rnd, rng in ((2, (0, c1[0] + 1)), (3, (c1[0] + 1, 512))):
-        c = best_cut(*rng)
-        if c is not None:
-            out.append((rnd, c[0], c[1]))
-    return spark.createDataFrame(
-        out, "seg_round INT, cut_slot BIGINT, sse DOUBLE"
-    ).select("seg_round", "cut_slot", round6(F.col("sse")).alias("sse_r"))

@@ -1,17 +1,14 @@
 """Lakehouse / advanced-temporal operator family.
 
-Eight operators a 100 TB lakehouse runs daily that no earlier family
-covers: time-weighted averaging over irregular series, sequential EWMA
-smoothing (a fold, not a frame), trailing-window distinct counting,
+Six operators a 100 TB lakehouse runs daily that no earlier family
+covers: trailing-window distinct counting,
 hierarchical percent-of-parent rollups, replica checksum
 reconciliation, Z-order (Morton) layout clustering, incremental
 materialized-view maintenance via partial-aggregate merge, and a
 distributed Pareto-frontier (skyline) operator.
 
 Determinism rules (SCALE.md §7): money goes through integer cents
-before any sum; sequential float folds fix their operand order (sorted
-list) and use binary-exact coefficients (0.25/0.75) so both engines
-execute the identical IEEE op sequence.
+before any sum.
 """
 
 from __future__ import annotations
@@ -27,114 +24,6 @@ from matt3r_data_ingestion_serverless_spark.functions.rounding import (
 )
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# time-weighted average (step-function / LOCF weighting)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "ts_time_weighted_avg",
-    sql=f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, {CENTS_SQL} AS v_cents,
-         lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_us
-  FROM events
-)
-SELECT user_id, count(*) AS n_segments,
-       {round6_sql("sum(v_cents * (next_us - ts_us))"
-                   " / (100.0 * sum(next_us - ts_us))")} AS twa_value
-FROM e WHERE next_us IS NOT NULL
-GROUP BY user_id
-""",
-)
-def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average over an irregular series: each reading
-    holds (LOCF step function) until the next one, so its weight is the
-    interval length, not 1. The plain AVG the reference computes
-    (infer_stationary_states.py's per-file means) is biased whenever
-    sampling is irregular — TWA is the physically meaningful mean.
-
-    Scale: one shuffle on user_id for the lead() window; weights are
-    integer µs × integer cents, so partial sums are exact bigints and
-    the single final division is the only float op."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = (
-        ev.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            cents().alias("v_cents"),
-        )
-        .withColumn("next_us", F.lead("ts_us").over(w))
-        .filter(F.col("next_us").isNotNull())
-    )
-    dt = F.col("next_us") - F.col("ts_us")
-    return seg.groupBy("user_id").agg(
-        F.count("*").alias("n_segments"),
-        round6(
-            F.sum(F.col("v_cents") * dt).cast("double") / (100.0 * F.sum(dt))
-        ).alias("twa_value"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# EWMA — a sequential fold, not a window frame
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "ts_ewma_smoothing",
-    sql=f"""
-WITH folded AS (
-  SELECT user_id, count(*) AS n_events,
-         list_reduce(list(value ORDER BY ts, event_id),
-                     (acc, x) -> acc * 0.75 + 0.25 * x) AS raw
-  FROM events GROUP BY user_id
-)
-SELECT user_id, n_events, {round6_sql("raw")} AS ewma_value FROM folded
-""",
-)
-def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key EWMA (alpha = 0.25): the recursive smoother no window
-    frame can express — each state depends on the previous state, so it
-    is a FOLD over the time-ordered sequence. Implemented with the
-    aggregate() higher-order function over a sorted collect_list: the
-    fold runs inside codegen on the executor that owns the key, state
-    never crosses the wire.
-
-    Determinism: operand order is pinned by array_sort on (ts_us,
-    event_id, value) structs, and 0.25/0.75 are binary-exact, so both
-    engines run the identical IEEE sequence → bit-equal before the
-    final round. Scale: one shuffle (groupBy user_id); per-key state is
-    one double. A key with millions of rows would make collect_list the
-    memory ceiling — that shape moves to applyInPandasWithState
-    (streaming/pipeline.py), which folds incrementally."""
-    ev = load_table(spark, sf_dir, "events")
-    vals = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("value").alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
-    ewma = F.aggregate(
-        F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
-        F.element_at(vals, 1),
-        lambda acc, x: acc * F.lit(0.75) + F.lit(0.25) * x,
-    )
-    return ev.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        round6(ewma).alias("ewma_value"),
-    )
 
 
 # ---------------------------------------------------------------------------

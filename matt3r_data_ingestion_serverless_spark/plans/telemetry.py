@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.operators.autopilot import ap_transitions
 from matt3r_data_ingestion_serverless_spark.operators.stationary import stationary_intervals
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import _BOLL_SQL
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import _has_nanos_timestamp, load_table
 from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_stream
@@ -913,111 +912,3 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("next_type"),
     ).filter(F.col("prev_type").isNotNull())
     return s.groupBy("prev_type", "next_type").agg(F.count("*").alias("n"))
-
-
-def _bollinger_state_fn(key, pdfs, state):
-    """applyInPandasWithState body for streamed Bollinger monitoring:
-    state is the ring buffer of the last N purchase amounts (integer
-    cents) plus the last-seen (ts_us, event_id) re-delivery guard —
-    bounded state per key regardless of stream length, the property
-    SCALE.md §6 sizes state stores around. The breach decision uses the
-    same cross-multiplied bigint comparison as the batch operator, and
-    band edges round with the shared sign·floor formula, so streamed
-    output is row-identical to the batch window query."""
-    import math
-
-    import pandas as pd
-
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import _BOLL_N
-
-    def r6(x: float) -> float:
-        return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-    if state.exists:
-        st = state.get
-        win, last_ts, last_eid = list(st[0]), st[1], st[2]
-    else:
-        win, last_ts, last_eid = [], None, None
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts_us", "event_id"])
-    out = []
-    for ts_us, eid, cents in zip(rows["ts_us"], rows["event_id"], rows["cents"]):
-        ts_us, eid, cents = int(ts_us), int(eid), int(cents)
-        if last_ts is not None and (ts_us, eid) <= (last_ts, last_eid):
-            continue  # at-least-once re-delivery
-        if len(win) >= _BOLL_N:
-            w = win[-_BOLL_N:]
-            n, s1 = len(w), sum(w)
-            s2 = sum(v * v for v in w)
-            dev = n * cents - s1
-            out.append(
-                (
-                    key[0],
-                    ts_us,
-                    cents,
-                    r6(s1 / n / 100.0),
-                    r6(math.sqrt((n * s2 - s1 * s1) / (n * (n - 1))) / 100.0),
-                    dev * dev * (n - 1) > 4 * n * (n * s2 - s1 * s1),
-                )
-            )
-        win.append(cents)
-        win = win[-_BOLL_N:]
-        last_ts, last_eid = ts_us, eid
-    state.update((win, last_ts, last_eid))
-    yield pd.DataFrame(
-        out,
-        columns=["device_id", "ts_us", "cents", "band_mean", "band_sigma", "breach"],
-    )
-
-
-@register("ts_streamed_bollinger", sql=_BOLL_SQL)
-def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ts_bollinger_breach through the STREAMING engine, graded against
-    the IDENTICAL batch oracle: the trailing-window monitor is the
-    canonical bounded-state streaming operator (state = last N values
-    per key — fixed bytes however long the stream runs), and every
-    emitted row must equal the batch window query's row because the
-    trailing frame never looks forward — no end-of-input asymmetry.
-    Seventh streamed gate entry; same applyInPandasWithState machinery
-    as the W1/W2 scans."""
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    coded = ev.select(
-        F.col("user_id").cast("string").alias("device_id"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.col("event_id").alias("event_id"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("device_id", T.StringType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("cents", T.LongType()),
-            T.StructField("band_mean", T.DoubleType()),
-            T.StructField("band_sigma", T.DoubleType()),
-            T.StructField("breach", T.BooleanType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("win", T.ArrayType(T.LongType())),
-            T.StructField("last_ts_us", T.LongType()),
-            T.StructField("last_event_id", T.LongType()),
-        ]
-    )
-    out = coded.groupBy("device_id").applyInPandasWithState(
-        _bollinger_state_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return collect_stream(out).select(
-        F.col("device_id").cast("long").alias("user_id"),
-        "ts_us",
-        "cents",
-        "band_mean",
-        "band_sigma",
-        "breach",
-    )

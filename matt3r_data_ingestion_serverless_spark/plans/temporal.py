@@ -146,64 +146,6 @@ def j2_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ts_gap_fill_locf",
-    sql="""
-WITH v AS (SELECT user_id, ts, max(value) AS value
-           FROM events WHERE event_type = 'view' GROUP BY user_id, ts),
-b AS (SELECT user_id, date_trunc('hour', min(ts)) AS lo,
-             date_trunc('hour', max(ts)) AS hi
-      FROM v GROUP BY user_id),
-g AS (SELECT user_id, unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS gts
-      FROM b)
-SELECT g.user_id, epoch_us(g.gts) AS grid_ts_us,
-       epoch_us(v.ts) AS obs_ts_us, round(v.value, 6) AS locf_value
-FROM g ASOF LEFT JOIN v ON g.user_id = v.user_id AND v.ts <= g.gts
-""",
-)
-def ts_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-fill / resample: regularize each user's irregular view-value
-    series onto an hourly grid with last-observation-carried-forward —
-    the standard telemetry prep step before joining sensors sampled at
-    different rates (the reference's channel series are exactly such
-    irregular streams, parse_canserver_filtered_log.py:313-325).
-
-    Spark-first: the grid is generated distributed (sequence + explode
-    from each user's min/max bounds — no driver-side date loop), and
-    the LOCF fill reuses operators/temporal.py:asof_join, so the whole
-    plan is one shuffle on user_id shared by the bounds aggregate, the
-    grid explode, and the fill window. Observations are pre-deduped to
-    unique (user_id, ts) so both engines resolve ties identically. At
-    100 TB grid density is the knob: hourly grid ≈ 720 rows/user/month
-    regardless of raw event volume."""
-    events = load_table(spark, sf_dir, "events")
-    v = (
-        events.filter(F.col("event_type") == "view")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("value"))
-    )
-    grid = (
-        v.groupBy("user_id")
-        .agg(
-            F.date_trunc("hour", F.min("ts")).alias("lo"),
-            F.date_trunc("hour", F.max("ts")).alias("hi"),
-        )
-        .select(
-            "user_id",
-            F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("gts"),
-        )
-    )
-    filled = asof_join(
-        grid, v, key="user_id", left_ts="gts", right_ts="ts", right_cols=["value"]
-    )
-    return filled.select(
-        "user_id",
-        F.unix_micros("gts").alias("grid_ts_us"),
-        F.unix_micros("asof_ts").alias("obs_ts_us"),
-        F.round("value", 6).alias("locf_value"),
-    )
-
-
-@register(
     "trailing_range_window",
     sql="""
 SELECT event_id, user_id, epoch_us(ts) AS ts_us,
@@ -244,134 +186,6 @@ def trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ts_anomaly_zscore",
-    sql="""
-WITH w AS (
-  SELECT user_id, epoch_us(ts) AS ts_us, value,
-         avg(value) OVER tw AS mu,
-         stddev_samp(value) OVER tw AS sd,
-         count(*) OVER tw AS n_win
-  FROM events
-  WINDOW tw AS (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
-)
-SELECT user_id, ts_us, round(value, 6) AS value,
-       round((value - mu) / sd, 4) AS zscore
-FROM w
-WHERE n_win >= 10 AND sd > 0 AND abs((value - mu) / sd) > 3
-""",
-)
-def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly detection: each sample scored against the
-    trailing 20 samples' mean/std (exclusive of itself); emit points
-    beyond 3σ once the window has ≥10 samples — the channel-health
-    monitor a telemetry fleet runs on every signal.
-
-    Scale: one window partition per device (the same user_id hash every
-    telemetry query shuffles on); trailing ROWS frames stream in one
-    sort — state is the 20-row frame, not the series. The z-score
-    rounds at 4 dp: the quotient amplifies ulp-level stddev
-    differences between engines, and anomalies are magnitudes, not
-    micro-precision values."""
-    e = load_table(spark, sf_dir, "events")
-    tw = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-20, -1)
-    )
-    w = e.select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "value",
-        F.avg("value").over(tw).alias("mu"),
-        F.stddev_samp("value").over(tw).alias("sd"),
-        F.count("*").over(tw).alias("n_win"),
-    )
-    z = (F.col("value") - F.col("mu")) / F.col("sd")
-    return (
-        w.filter((F.col("n_win") >= 10) & (F.col("sd") > 0) & (F.abs(z) > 3))
-        .select(
-            "user_id",
-            "ts_us",
-            F.round("value", 6).alias("value"),
-            F.round(z, 4).alias("zscore"),
-        )
-    )
-
-
-@register(
-    "ts_seasonal_baseline",
-    # determinism: the 2-decimal `value` column aggregates as EXACT
-    # integer cents (associative — immune to engine summation order and
-    # partitioning), and each mean is ONE correctly-rounded IEEE
-    # division of two exact integers — identical doubles on every
-    # engine. Unrounded double sums differ by final-ulp between engines
-    # (DuckDB's avg is numerically stabilized) and money-grained means
-    # land on .5 boundaries at the 6th digit constantly.
-    sql="""
-WITH c AS (
-  SELECT user_id, CAST(hour(ts) AS INT) AS hod,
-         CAST(round(value * 100, 0) AS BIGINT) AS cents
-  FROM events
-),
-base AS (
-  SELECT user_id, hod,
-         CAST(sum(cents) AS DOUBLE) / (100.0 * count(*)) AS hm,
-         count(*) AS n_obs
-  FROM c GROUP BY user_id, hod
-),
-g AS (
-  SELECT user_id, CAST(sum(cents) AS DOUBLE) / (100.0 * count(*)) AS ov
-  FROM c GROUP BY user_id
-),
-j AS (
-  SELECT b.user_id, b.hod, b.n_obs,
-         round(b.hm, 6) AS hm6, round(g.ov, 6) AS ov6
-  FROM base b JOIN g ON b.user_id = g.user_id
-)
-SELECT user_id, hod, hm6 AS hod_mean, n_obs, ov6 AS overall_mean,
-       round(hm6 - ov6, 6) AS seasonal_offset
-FROM j
-""",
-)
-def ts_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day seasonal baseline per device: the diurnal profile
-    (mean per hour-of-day) and its offset from the device's overall
-    mean — the decomposition step before anomaly thresholds
-    (ts_anomaly_zscore) so a midnight lull isn't flagged as a fault.
-
-    Determinism: means aggregate the 2-decimal values as EXACT integer
-    cents (associative — immune to summation order, partitioning, and
-    engine-internal compensated summation), then divide once — a
-    correctly-rounded IEEE op that lands on the identical double
-    everywhere. This is the repo's money rule (SCALE.md §7) applied to
-    a mean.
-
-    Scale: two hash aggs on the same user_id key — AQE reuses the
-    exchange for the join; output is |users|×24 rows regardless of
-    history length."""
-    e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    c = e.select("user_id", F.hour("ts").cast("int").alias("hod"), cents.alias("cents"))
-    base = c.groupBy("user_id", "hod").agg(
-        (F.sum("cents").cast("double") / (100.0 * F.count("*"))).alias("hm"),
-        F.count("*").alias("n_obs"),
-    )
-    overall = c.groupBy("user_id").agg(
-        (F.sum("cents").cast("double") / (100.0 * F.count("*"))).alias("ov")
-    )
-    hm6, ov6 = F.round("hm", 6), F.round("ov", 6)
-    return base.join(overall, "user_id").select(
-        "user_id",
-        "hod",
-        hm6.alias("hod_mean"),
-        "n_obs",
-        ov6.alias("overall_mean"),
-        F.round(hm6 - ov6, 6).alias("seasonal_offset"),
-    )
-
-
-@register(
     "median_mad_by_type",
     sql="""
 WITH med AS (
@@ -407,68 +221,6 @@ def median_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.max("med"), 6).alias("median_value"),
         F.round(F.median("ad"), 6).alias("mad"),
         F.count("*").alias("n"),
-    )
-
-
-_SEN_MAX_USER = 300  # bound the pairwise oracle at correctness SF
-
-
-@register(
-    "ts_theilsen_trend",
-    sql=f"""
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS t, value AS v
-  FROM events WHERE user_id < {_SEN_MAX_USER}
-),
-p AS (
-  SELECT a.user_id, (b.v - a.v) / ((b.t - a.t) / 3.6e9) AS s
-  FROM e a JOIN e b ON a.user_id = b.user_id AND b.t > a.t
-)
-SELECT p.user_id,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       round(median(p.s), 6) AS sen_slope_per_hour
-FROM p GROUP BY p.user_id
-""",
-)
-def ts_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil–Sen robust trend per device: the median of all pairwise
-    slopes — the outlier-proof alternative to OLS (regr_slope in
-    regression_aggregates) for drifting sensors, and the engine's one
-    BATCH `applyInPandas` operator (U2's grouped-map form): the
-    pairwise slope matrix is genuinely vectorized-pandas-shaped work.
-
-    Cross-engine exactness: every slope is ONE IEEE division of
-    identical doubles, and median picks/averages actual elements — no
-    accumulation order anywhere, so the pandas path and the oracle's
-    pairwise-join path agree bit-for-bit before rounding.
-
-    Scale: per-group O(n²) pairs — correct tool for per-device series
-    (thousands of samples), not for one giant series; groups hash
-    across executors, Arrow moves each group once, nothing collects."""
-    import numpy as np
-    import pandas as pd
-
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < _SEN_MAX_USER)
-    src = e.select("user_id", F.unix_micros("ts").alias("t"), F.col("value").alias("v"))
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        t = pdf["t"].to_numpy(dtype=np.float64)
-        v = pdf["v"].to_numpy(dtype=np.float64)
-        dt = (t[None, :] - t[:, None]) / 3.6e9  # hours
-        dv = v[None, :] - v[:, None]
-        mask = dt > 0
-        slopes = dv[mask] / dt[mask]
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])],
-                "n_pairs": [int(mask.sum())],
-                "sen_slope_per_hour": [round(float(np.median(slopes)), 6)],
-            }
-        )
-
-    return src.groupBy("user_id").applyInPandas(
-        fit, "user_id long, n_pairs long, sen_slope_per_hour double"
     )
 
 

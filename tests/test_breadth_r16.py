@@ -7,56 +7,9 @@ import math
 import re
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r16 import (
-    _XC_MAX_LAG,
-    ts_cross_correlation_lagged,
-    udf_arrow_normalize,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r16 import udf_arrow_normalize
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _round6(x: float) -> float:
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def test_cross_correlation_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    hours = defaultdict(lambda: [0, 0])
-    for r in ev:
-        hi = int(r.ts.timestamp() * 1_000_000) // 3_600_000_000
-        # truncate to hour first, as the plan does
-        hi = int(
-            r.ts.replace(minute=0, second=0, microsecond=0).timestamp() * 1_000_000
-        ) // 3_600_000_000
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        if r.event_type == "view":
-            hours[hi][0] += v
-        elif r.event_type == "click":
-            hours[hi][1] += v
-        else:
-            hours[hi]  # ensure hour exists even with neither channel
-    got = {r.lag: r for r in ts_cross_correlation_lagged(spark, SF_SMOKE).collect()}
-    for lag in range(-_XC_MAX_LAG, _XC_MAX_LAG + 1):
-        pairs = [
-            (hours[hi][0], hours[hi + lag][1])
-            for hi in hours
-            if hi + lag in hours
-        ]
-        n = len(pairs)
-        sx = sum(x for x, _ in pairs)
-        sy = sum(y for _, y in pairs)
-        sxy = sum(x * y for x, y in pairs)
-        sxx = sum(x * x for x, _ in pairs)
-        syy = sum(y * y for _, y in pairs)
-        vx, vy = n * sxx - sx * sx, n * syy - sy * sy
-        r = got[lag]
-        assert r.n == n, lag
-        if vx > 0 and vy > 0:
-            expect = _round6((n * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy)))
-            assert abs(r.xcorr - expect) < 1e-9, lag
-        else:
-            assert r.xcorr is None
 
 
 def test_arrow_udf_matches_python_normalization(spark):

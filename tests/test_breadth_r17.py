@@ -5,13 +5,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-import numpy as np
-
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r17 import (
-    _MP_M,
-    binary_auc_rank,
-    ts_matrix_profile,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r17 import binary_auc_rank
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -42,55 +36,6 @@ def test_auc_matches_pairwise_definition(spark):
     r = binary_auc_rank(spark, SF_SMOKE).collect()[0]
     assert (r.n_pos, r.n_neg) == (len(pos), len(neg))
     assert abs(r.auc - _round6(auc)) < 1e-9
-
-
-def test_matrix_profile_matches_numpy(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        di = (r.ts.date() - __import__("datetime").date(2024, 1, 1)).days
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        daily[r.event_type][di] += v
-    got = {
-        (r.event_type, r.win_start): r
-        for r in ts_matrix_profile(spark, SF_SMOKE).collect()
-    }
-    m = _MP_M
-    for et, by_di in daily.items():
-        dis = sorted(by_di)
-        # windows valid only where all m consecutive day-indices exist
-        starts = [
-            i for i in dis if all(i + k in by_di for k in range(m))
-        ]
-        prof = {}
-        for i in starts:
-            wi = np.array([by_di[i + k] for k in range(m)], dtype=np.int64)
-            si, ssi = int(wi.sum()), int((wi * wi).sum())
-            if m * ssi - si * si <= 0:
-                continue
-            best = None
-            for j in starts:
-                if j == i:
-                    continue
-                wj = np.array([by_di[j + k] for k in range(m)], dtype=np.int64)
-                sj, ssj = int(wj.sum()), int((wj * wj).sum())
-                if m * ssj - sj * sj <= 0:
-                    continue
-                d = int((wi * wj).sum())
-                num = float(m * d - si * sj)
-                dist = 2.0 * m * (
-                    1.0 - num / (math.sqrt(m * ssi - si * si) * math.sqrt(m * ssj - sj * sj))
-                )
-                dm = int(math.floor(dist * 1e6 + 0.5))
-                key = dm * 1000 + j
-                if best is None or key < best[0]:
-                    best = (key, j, dm)
-            if best:
-                prof[i] = (best[1], best[2])
-        for i, (j, dm) in prof.items():
-            r = got[(et, i)]
-            assert (r.nn_start, r.dist_micro) == (j, dm), (et, i)
-        assert {k[1] for k in got if k[0] == et} == set(prof)
 
 
 def test_source_diversity_matches_python(spark):

@@ -5,16 +5,9 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r24 import (
-    ts_fano_factor,
-    weighted_median_price,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r24 import weighted_median_price
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _round6(x: float) -> float:
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
 
 
 def test_weighted_median_matches_python(spark):
@@ -45,20 +38,3 @@ def test_weighted_median_matches_python(spark):
         below = sum(w for c, w in items if c < med)
         at_or_below = sum(w for c, w in items if c <= med)
         assert below * 2 < tw <= at_or_below * 2
-
-
-def test_fano_factor_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    counts = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        counts[r.event_type][r.ts.replace(minute=0, second=0, microsecond=0)] += 1
-    got = {r.event_type: r for r in ts_fano_factor(spark, SF_SMOKE).collect()}
-    for et, by_hr in counts.items():
-        cs = list(by_hr.values())
-        n, s = len(cs), sum(cs)
-        s2 = sum(c * c for c in cs)
-        var = (n * s2 - s * s) / n / (n - 1)
-        mean = s / n
-        r = got[et]
-        assert (r.n_hours, r.n_events) == (n, s), et
-        assert abs(r.fano_factor - _round6(var / mean)) < 1e-9, et

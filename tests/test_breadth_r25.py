@@ -3,20 +3,12 @@
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r25 import (
-    ns_dedup_normalized,
-    ts_runs_test,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r25 import ns_dedup_normalized
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _round6(x: float) -> float:
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
 
 
 def test_normalized_dedup_matches_python(spark):
@@ -40,33 +32,3 @@ def test_normalized_dedup_matches_python(spark):
         for r in ns_dedup_normalized(spark, SF_SMOKE).collect()
     }
     assert got == expected
-
-
-def test_runs_test_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        daily[r.event_type][r.ts.strftime("%Y-%m-%d")] += v
-    got = {r.event_type: r for r in ts_runs_test(spark, SF_SMOKE).collect()}
-    for et, by_day in daily.items():
-        vals = sorted(by_day.values())
-        m = vals[math.ceil(len(vals) / 2) - 1]  # 2*cum >= n threshold
-        seq = [
-            1 if by_day[d] > m else 0
-            for d in sorted(by_day)
-            if by_day[d] != m
-        ]
-        n1, n2 = sum(seq), len(seq) - sum(seq)
-        if n1 == 0 or n2 == 0:
-            assert et not in got
-            continue
-        runs = 1 + sum(1 for a, b in zip(seq, seq[1:]) if a != b)
-        mean_r = 2.0 * n1 * n2 / (n1 + n2) + 1
-        var_r = (
-            2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)
-            / (float(n1 + n2) * (n1 + n2) * (n1 + n2 - 1))
-        )
-        r = got[et]
-        assert (r.n_runs, r.n_above, r.n_below) == (runs, n1, n2), et
-        assert abs(r.z_stat - _round6((runs - mean_r) / math.sqrt(var_r))) < 1e-9

@@ -16,7 +16,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r26 import (
     ns_bloom_filter_audit,
     ns_countmin_heavy_hitters,
     spearman_rank_corr,
-    ts_max_drawdown,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -86,29 +85,6 @@ def test_distinct_on_latest_matches_python(spark):
         b = best[uid]
         assert r.last_ts_us == int(b.ts.timestamp() * 1e6)
         assert (r.event_type, r.value) == (b.event_type, b.value)
-
-
-def test_max_drawdown_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    series = defaultdict(list)
-    for r in ev:
-        series[r.user_id].append((r.ts, r.event_id, r.value))
-    got = {r.user_id: r for r in ts_max_drawdown(spark, SF_SMOKE).collect()}
-    assert set(got) == set(series)
-    for uid, rows in series.items():
-        equity = peak = dd = 0
-        for _, _, v in sorted(rows, key=lambda x: (x[0], x[1])):
-            cents = int(math.floor(v * 100 + 0.5))
-            equity += cents
-            peak = max(peak, equity)
-            dd = max(dd, peak - equity)
-        r = got[uid]
-        assert (r.n_events, r.max_drawdown_cents, r.final_cents) == (
-            len(rows),
-            dd,
-            equity,
-        )
-        assert r.peak_cents == peak
 
 
 def _avg_ranks2(vals):

@@ -15,8 +15,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r27 import (
     ml_calibration_bins,
     retrieval_ndcg_at_k,
     sorted_neighborhood_pairs,
-    ts_kendall_tau_daily,
-    ts_var_cvar_daily,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -24,59 +22,6 @@ from tests.conftest import SF_SMOKE
 
 def _round6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def _daily(ev, with_count=False):
-    out = defaultdict(lambda: defaultdict(lambda: [0, 0]))
-    for r in ev:
-        cell = out[r.event_type][r.ts.strftime("%Y-%m-%d")]
-        cell[0] += 1
-        cell[1] += int(math.floor(r.value * 100 + 0.5))
-    return out
-
-
-def test_kendall_tau_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = _daily(ev)
-    got = {r.event_type: r for r in ts_kendall_tau_daily(spark, SF_SMOKE).collect()}
-    assert set(got) == set(daily)
-    for et, by_day in daily.items():
-        series = [by_day[d] for d in sorted(by_day)]
-        conc = disc = tx = ty = n0 = 0
-        for i in range(len(series)):
-            for j in range(i + 1, len(series)):
-                (c1, v1), (c2, v2) = series[i], series[j]
-                n0 += 1
-                tx += c1 == c2
-                ty += v1 == v2
-                conc += (c1 < c2 and v1 < v2) or (c1 > c2 and v1 > v2)
-                disc += (c1 < c2 and v1 > v2) or (c1 > c2 and v1 < v2)
-        r = got[et]
-        assert (r.n_pairs, r.concordant, r.discordant, r.ties_x, r.ties_y) == (
-            n0,
-            conc,
-            disc,
-            tx,
-            ty,
-        )
-        tau = (conc - disc) / math.sqrt((n0 - tx) * (n0 - ty))
-        assert abs(r.tau_b - _round6(tau)) <= 1e-6
-
-
-def test_var_cvar_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = _daily(ev)
-    got = {r.event_type: r for r in ts_var_cvar_daily(spark, SF_SMOKE).collect()}
-    for et, by_day in daily.items():
-        cents = [by_day[d][1] for d in sorted(by_day)]
-        deltas = sorted(b - a for a, b in zip(cents, cents[1:]))
-        n = len(deltas)
-        k = math.ceil(0.05 * n)
-        r = got[et]
-        assert r.n_days == n
-        assert r.var5_cents == deltas[k - 1]
-        assert abs(r.cvar5_cents - _round6(sum(deltas[:k]) / k)) <= 1e-6
-        assert r.worst_cents == deltas[0]
 
 
 def _lev(a: str, b: str) -> int:

@@ -18,8 +18,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r3 import (
     ns_unigram_surprisal,
     set_ops_multiset,
     sql_pivot_monthly_flag,
-    ts_autocorr_hourly,
-    ts_cusum_changepoint,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -101,36 +99,6 @@ def test_lsh_eval_internal_consistency(spark):
     assert 0.0 <= r.recall_ <= 1.0
 
 
-def test_cusum_changepoint_matches_python(spark):
-    ev = (
-        load_table(spark, SF_SMOKE, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", "ts", "event_id", "value")
-        .collect()
-    )
-    by_user = defaultdict(list)
-    for r in ev:
-        by_user[r.user_id].append(r)
-    out = {r.user_id: r for r in ts_cusum_changepoint(spark, SF_SMOKE).collect()}
-    for uid, rows in by_user.items():
-        rows.sort(key=lambda r: (r.ts, r.event_id))
-        n = len(rows)
-        if n < 20:
-            assert uid not in out
-            continue
-        cents = [round(r.value * 100) for r in rows]
-        total = sum(cents)
-        best = None
-        prefix = 0
-        for k, c in enumerate(cents, start=1):
-            prefix += c
-            d = abs(n * prefix - k * total)
-            if best is None or d > best[0]:
-                best = (d, k)
-        r = out[uid]
-        assert (r.max_abs_d, r.cp_index, r.n_txns) == (best[0], best[1], n)
-
-
 def test_lateral_topk_matches_python(spark):
     sups = load_table(spark, SF_SMOKE, "supplier").collect()
     nations = {r.n_nationkey: r.n_name for r in load_table(spark, SF_SMOKE, "nation").collect()}
@@ -152,21 +120,6 @@ def test_grid_density_totals(spark):
     assert sum(r.n_events for r in rows) == e.count()
     assert len(rows) <= 100
     assert all(0 <= r.cell_x <= 9 and 0 <= r.cell_y <= 9 for r in rows)
-
-
-def test_autocorr_shape_and_bounds(spark):
-    rows = {r.lag_hours: r for r in ts_autocorr_hourly(spark, SF_SMOKE).collect()}
-    n_hours = (
-        load_table(spark, SF_SMOKE, "events")
-        .select(F.date_trunc("hour", "ts"))
-        .distinct()
-        .count()
-    )
-    assert rows[1].n_pairs == n_hours - 1
-    assert rows[24].n_pairs == max(n_hours - 24, 0)
-    for r in rows.values():
-        if r.autocorr is not None:
-            assert -1.0 <= r.autocorr <= 1.0
 
 
 def test_set_ops_multiset_matches_python(spark):
@@ -383,32 +336,3 @@ def test_dp_noisy_counts_deterministic_and_unbiasedish(spark):
     # Laplace(b=2): residuals centered near 0, rarely beyond ~8b
     assert all(abs(x) < 30 for x in resid)
     assert abs(sum(resid) / len(resid)) < 2.0
-
-
-def test_holt_linear_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r3 import ts_holt_linear
-
-    ev = (
-        load_table(spark, SF_SMOKE, "events")
-        .select("user_id", "ts", "event_id", "value")
-        .collect()
-    )
-    by_user = defaultdict(list)
-    for r in ev:
-        by_user[r.user_id].append(r)
-    out = {r.user_id: r for r in ts_holt_linear(spark, SF_SMOKE).collect()}
-    for uid, rows in by_user.items():
-        rows.sort(key=lambda r: (r.ts, r.event_id))
-        xs = [r.value for r in rows]
-        if len(xs) < 3:
-            assert uid not in out
-            continue
-        l, b = xs[1], xs[1] - xs[0]
-        for x in xs[2:]:
-            nl = 0.5 * x + 0.5 * (l + b)
-            nb = 0.25 * (nl - l) + 0.75 * b
-            l, b = nl, nb
-        r = out[uid]
-        assert r.n_events == len(xs)
-        assert abs(r.holt_level - l) < 1e-5
-        assert abs(r.holt_trend - b) < 1e-5

@@ -168,42 +168,6 @@ def test_rank_shift_matches_python(spark):
             assert r.shift == r.prev_rnk - r.rnk
 
 
-def test_bollinger_breach_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import (
-        _BOLL_N,
-        ts_bollinger_breach,
-    )
-
-    ev = (
-        load_table(spark, SF_SMOKE, "events")
-        .filter(F.col("event_type") == "purchase")
-        .collect()
-    )
-    by_user = defaultdict(list)
-    for r in ev:
-        by_user[r.user_id].append(r)
-    out = {(r.user_id, r.ts_us): r for r in ts_bollinger_breach(spark, SF_SMOKE).collect()}
-    n_checked = 0
-    for uid, rows in by_user.items():
-        rows.sort(key=lambda r: (r.ts, r.event_id))
-        cents = [round(r.value * 100) for r in rows]
-        for i in range(len(rows)):
-            w = cents[max(0, i - _BOLL_N):i]
-            key = (uid, int(rows[i].ts.timestamp() * 1_000_000))
-            if len(w) < _BOLL_N:
-                assert key not in out
-                continue
-            n, s1, s2 = len(w), sum(w), sum(v * v for v in w)
-            mu = s1 / n
-            var = (n * s2 - s1 * s1) / (n * (n - 1))
-            exp_breach = abs(cents[i] - mu) > 2 * var**0.5
-            r = out[key]
-            assert r.breach == exp_breach
-            assert abs(r.band_mean - mu / 100) < 1e-6
-            n_checked += 1
-    assert n_checked == len(out)
-
-
 def test_colbert_maxsim_matches_numpy(spark):
     from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import (
         ns_colbert_maxsim,
@@ -277,38 +241,6 @@ def test_activity_streaks_matches_python(spark):
         assert r.longest_streak_days == best[1]
         assert r.streak_start == best[0].strftime("%Y-%m-%d")
         assert r.n_streaks == len(streaks)
-
-
-def test_kalman_matches_python(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import (
-        _KAL_Q,
-        _KAL_R,
-        ts_kalman_1d,
-    )
-
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    by_user = defaultdict(list)
-    for r in ev:
-        by_user[r.user_id].append(r)
-    out = {r.user_id: r for r in ts_kalman_1d(spark, SF_SMOKE).collect()}
-    for uid, rows in by_user.items():
-        rows.sort(key=lambda r: (r.ts, r.event_id))
-        zs = [r.value for r in rows]
-        if len(zs) < 2:
-            assert uid not in out
-            continue
-        x, p = zs[0], 1.0
-        for z in zs[1:]:
-            pp = p + _KAL_Q
-            k = pp / (pp + _KAL_R)
-            x = x + k * (z - x)
-            p = (1.0 - k) * pp
-        r = out[uid]
-        assert r.n_obs == len(zs)
-        assert abs(r.kalman_estimate - x) < 1e-5
-        assert abs(r.kalman_variance - p) < 1e-6
-        # variance must have contracted toward steady state from 1.0
-        assert 0 < r.kalman_variance < 1.0
 
 
 def test_interval_complement_matches_python(spark):

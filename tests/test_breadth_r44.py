@@ -4,62 +4,14 @@ from __future__ import annotations
 
 import math
 import re
-from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r44 import (
-    ns_code_like_filter,
-    ts_local_peaks,
-    ts_max_subarray_window,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r44 import ns_code_like_filter
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 
 def _round6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def _daily_cents(ev):
-    out = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        out[r.event_type][r.ts.strftime("%Y-%m-%d")] += int(math.floor(r.value * 100 + 0.5))
-    return out
-
-
-def test_max_subarray_matches_kadane(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = _daily_cents(ev)
-    got = {r.event_type: r for r in ts_max_subarray_window(spark, SF_SMOKE).collect()}
-    assert set(got) == set(daily)
-    for et, by_day in daily.items():
-        days = sorted(by_day)
-        cents = [by_day[d] for d in days]
-        deltas = [(days[i + 1], cents[i + 1] - cents[i]) for i in range(len(cents) - 1)]
-        # classic Kadane over non-empty subarrays
-        best = None
-        cur = 0
-        best_ends = []
-        for day, d in deltas:
-            cur = max(d, cur + d)
-            if best is None or cur > best:
-                best = cur
-        # recompute best end days (all j achieving the max)
-        prefix = 0
-        minp = 0
-        pref_hist = []
-        for day, d in deltas:
-            prefix += d
-            pref_hist.append((day, prefix))
-        best_end = None
-        for i, (day, pj) in enumerate(pref_hist):
-            mn = min([0] + [p for _, p in pref_hist[:i]])
-            run = pj - min(mn, 0)
-            if run == best and (best_end is None or day > best_end):
-                best_end = day
-        r = got[et]
-        assert r.n_days == len(deltas)
-        assert r.best_run_cents == best
-        assert r.best_end_day == best_end
 
 
 def test_code_filter_matches_python(spark):
@@ -78,27 +30,3 @@ def test_code_filter_matches_python(spark):
         assert (r.n_code_chars, r.n_keywords) == (nc, nk)
         assert abs(r.code_char_ratio - _round6(nc / len(d.text))) <= 1e-6
         assert r.looks_like_code == (nc * 20 >= len(d.text) or nk >= 3)
-
-
-def test_local_peaks_match_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        daily[r.event_type][r.ts.strftime("%Y-%m-%d")] += 1
-    expected = {}
-    for et, by_day in daily.items():
-        days = sorted(by_day)
-        cnts = [by_day[d] for d in days]
-        for i in range(1, len(days) - 1):
-            lo, hi = max(0, i - 3), min(len(days), i + 4)
-            if (
-                cnts[i] > cnts[i - 1]
-                and cnts[i] > cnts[i + 1]
-                and cnts[i] == max(cnts[lo:hi])
-            ):
-                expected[(et, days[i])] = (cnts[i], cnts[i - 1], cnts[i + 1])
-    got = {
-        (r.event_type, r.day): (r.cnt, r.prev_cnt, r.next_cnt)
-        for r in ts_local_peaks(spark, SF_SMOKE).collect()
-    }
-    assert got == expected

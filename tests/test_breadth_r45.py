@@ -2,45 +2,11 @@
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r45 import (
-    _ACF_MAX_LAG,
-    growth_accounting_monthly,
-    ts_acf_table,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r45 import growth_accounting_monthly
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _round6(x: float) -> float:
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def test_acf_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily = defaultdict(int)
-    for r in ev:
-        daily[r.ts.strftime("%Y-%m-%d")] += int(math.floor(r.value * 100 + 0.5))
-    xs = [daily[d] for d in sorted(daily)]
-    got = {r.lag: r for r in ts_acf_table(spark, SF_SMOKE).collect()}
-    assert set(got) == set(range(1, _ACF_MAX_LAG + 1))
-    for k in range(1, _ACF_MAX_LAG + 1):
-        pairs = list(zip(xs, xs[k:]))
-        n = len(pairs)
-        sa = sum(a for a, _ in pairs)
-        sb = sum(b for _, b in pairs)
-        sab = sum(a * b for a, b in pairs)
-        saa = sum(a * a for a, _ in pairs)
-        sbb = sum(b * b for _, b in pairs)
-        acf = (n * sab - sa * sb) / (
-            math.sqrt(n * saa - sa * sa) * math.sqrt(n * sbb - sb * sb)
-        )
-        r = got[k]
-        assert r.n_pairs == n
-        assert abs(r.acf - _round6(acf)) <= 1e-6
-        assert -1.0 - 1e-9 <= r.acf <= 1.0 + 1e-9
 
 
 def _next_month(m: str) -> str:

@@ -4,42 +4,9 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r51 import (
-    _HYST_HI_NUM,
-    _HYST_LO_NUM,
-    _WF_GAP_US,
-    ts_hysteresis_bursts,
-    window_funnel_depth,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r51 import _WF_GAP_US, window_funnel_depth
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_hysteresis_matches_sequential_automaton(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    hourly = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        hourly[r.event_type][r.ts.replace(minute=0, second=0, microsecond=0)] += 1
-    got = {r.event_type: r for r in ts_hysteresis_bursts(spark, SF_SMOKE).collect()}
-    assert set(got) == set(hourly)
-    for et, by_hr in hourly.items():
-        cnts = [by_hr[h] for h in sorted(by_hr)]
-        n_hours = len(cnts)
-        mean_milli = (sum(cnts) * 1000) // n_hours
-        # run the automaton SEQUENTIALLY (the ground truth the
-        # declarative LOCF identity must reproduce)
-        state = 0
-        burst_hours = bursts = 0
-        for c in cnts:
-            if c * 10000 > _HYST_HI_NUM * mean_milli:
-                if state == 0:
-                    bursts += 1
-                state = 1
-            elif c * 10000 < _HYST_LO_NUM * mean_milli:
-                state = 0
-            burst_hours += state
-        r = got[et]
-        assert (r.n_hours, r.burst_hours, r.n_bursts) == (n_hours, burst_hours, bursts)
 
 
 def test_window_funnel_matches_python(spark):

@@ -8,7 +8,6 @@ import random
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans import breadth_r6
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r6 import (
@@ -20,7 +19,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r6 import (
     cdc_streamed_apply,
     heavy_hitters_mg_exact,
     ns_feature_hashing,
-    ts_rolling_corr,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -133,45 +131,6 @@ def test_apportionment_invariants(spark):
     for r in rows:
         assert r.seats in (r.floor_seats, r.floor_seats + 1)
         assert r.floor_seats == r.cents * 10_000 // total
-
-
-# ---------------------------------------------------------------------------
-# rolling correlation vs numpy on the collected hourly series
-# ---------------------------------------------------------------------------
-
-
-def test_rolling_corr_matches_numpy(spark):
-    import numpy as np
-
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    hours: dict[str, list[int]] = {}
-    for r in ev:
-        hr = r.ts.strftime("%Y-%m-%d %H")
-        xy = hours.setdefault(hr, [0, 0])
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        if r.event_type == "view":
-            xy[0] += v
-        elif r.event_type == "click":
-            xy[1] += v
-    hrs = sorted(hours)
-    xs = np.array([hours[h][0] for h in hrs], dtype=np.int64)
-    ys = np.array([hours[h][1] for h in hrs], dtype=np.int64)
-    got = {r.hr: r.corr24 for r in ts_rolling_corr(spark, SF_SMOKE).collect()}
-    assert set(got) == set(hrs)
-    for i, h in enumerate(hrs):
-        if i < 23:
-            assert got[h] is None
-            continue
-        x, y = xs[i - 23 : i + 1], ys[i - 23 : i + 1]
-        n = 24
-        num = n * int((x * y).sum()) - int(x.sum()) * int(y.sum())
-        vx = n * int((x * x).sum()) - int(x.sum()) ** 2
-        vy = n * int((y * y).sum()) - int(y.sum()) ** 2
-        if vx <= 0 or vy <= 0:
-            assert got[h] is None
-        else:
-            expect = _round6(num / (math.sqrt(vx) * math.sqrt(vy)))
-            assert abs(got[h] - expect) < 1e-12, h
 
 
 # ---------------------------------------------------------------------------

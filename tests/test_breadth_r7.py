@@ -2,88 +2,14 @@
 
 from __future__ import annotations
 
-import math
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r7 import (
     ns_dedup_incremental,
     ns_quantile_normalize,
-    ts_downsample_lttb,
-    ts_mann_kendall,
-    ts_sax_symbols,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _round6(x: float) -> float:
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def _daily(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    dly: dict[tuple, int] = defaultdict(int)
-    for r in ev:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        dly[(r.event_type, r.ts.strftime("%Y-%m-%d"))] += v
-    return dly
-
-
-def test_mann_kendall_matches_python(spark):
-    dly = _daily(spark)
-    series: dict[str, list[int]] = defaultdict(list)
-    for (et, day), v in sorted(dly.items()):
-        series[et].append(v)
-    got = {r.event_type: r for r in ts_mann_kendall(spark, SF_SMOKE).collect()}
-    assert set(got) == set(series)
-    for et, xs in series.items():
-        n = len(xs)
-        s = sum(
-            (1 if xs[j] > xs[i] else -1 if xs[j] < xs[i] else 0)
-            for i in range(n)
-            for j in range(i + 1, n)
-        )
-        ties = Counter(xs)
-        tie_term = sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
-        var18 = n * (n - 1) * (2 * n + 5) - tie_term
-        r = got[et]
-        assert (r.n_days, r.s_stat, r.var18) == (n, s, var18), et
-        if var18 == 0:
-            assert r.z_stat is None
-        elif s == 0:
-            assert r.z_stat == 0.0
-        else:
-            exp = _round6((s - (1 if s > 0 else -1)) / math.sqrt(var18 / 18.0))
-            assert abs(r.z_stat - exp) < 1e-12, et
-
-
-def test_sax_word_matches_python(spark):
-    dly = _daily(spark)
-    base = {}
-    for (et, day), v in dly.items():
-        from datetime import date
-
-        y, m, d = map(int, day.split("-"))
-        di = (date(y, m, d) - date(2024, 1, 1)).days
-        base.setdefault(et, {})[di] = v
-    got = {r.event_type: r for r in ts_sax_symbols(spark, SF_SMOKE).collect()}
-    for et, by_day in base.items():
-        vs = list(by_day.values())
-        n, s = len(vs), sum(vs)
-        k = n * sum(v * v for v in vs) - s * s
-        if k <= 0:
-            assert et not in got
-            continue
-        segs: dict[int, list[int]] = defaultdict(list)
-        for di, v in by_day.items():
-            segs[di // 4].append(v)
-        word = ""
-        for seg in sorted(segs):
-            s_seg, n_seg = sum(segs[seg]), len(segs[seg])
-            z = (s_seg * n - s * n_seg) / (n_seg * math.sqrt(k))
-            word += "a" if z < -0.6745 else "b" if z < 0 else "c" if z < 0.6745 else "d"
-        assert got[et].sax_word == word, et
-        assert got[et].n_segments == len(segs)
 
 
 def test_incremental_dedup_consistent_with_lsh_pairs(spark):
@@ -125,36 +51,3 @@ def test_quantile_normalize_aligns_sources(spark):
         rs.sort(key=lambda r: r.bucket)
         means = [r.raw_mean for r in rs]
         assert means == sorted(means), src  # quantile buckets are monotone
-
-
-def test_lttb_picks_max_deviation_point(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    pts = defaultdict(list)
-    bkt: dict[tuple, list[int]] = defaultdict(lambda: [0, 0])
-    for r in ev:
-        day = r.ts.strftime("%Y-%m-%d")
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        pts[(r.event_type, day)].append((r.event_id, v))
-        b = bkt[(r.event_type, day)]
-        b[0] += v
-        b[1] += 1
-    got = {(r.event_type, r.day): r for r in ts_downsample_lttb(spark, SF_SMOKE).collect()}
-    days_by_type = defaultdict(list)
-    for et, day in bkt:
-        days_by_type[et].append(day)
-    expected_keys = set()
-    for et, days in days_by_type.items():
-        days.sort()
-        for i, day in enumerate(days):
-            if 0 < i < len(days) - 1:
-                expected_keys.add((et, day))
-                sp, np_ = bkt[(et, days[i - 1])]
-                sn, nn = bkt[(et, days[i + 1])]
-                best = max(
-                    pts[(et, day)],
-                    key=lambda p: (abs(2 * p[1] * np_ * nn - sp * nn - sn * np_), -p[0]),
-                )
-                r = got[(et, day)]
-                assert (r.event_id, r.v) == best, (et, day)
-                assert r.score == abs(2 * best[1] * np_ * nn - sp * nn - sn * np_)
-    assert set(got) == expected_keys

@@ -128,41 +128,6 @@ def test_preference_pairs_are_group_extremes(spark):
         )
 
 
-def test_rolling_iqr_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    hours = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
-        hours[r.event_type][r.ts.strftime("%Y-%m-%d %H")] += v
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r8 import (
-        ts_rolling_iqr_outliers,
-    )
-
-    got = {
-        (r.event_type, r.hr): r
-        for r in ts_rolling_iqr_outliers(spark, SF_SMOKE).collect()
-    }
-
-    def interp(sorted_vals, q):
-        idx = (len(sorted_vals) - 1) * q
-        lo, hi = int(math.floor(idx)), int(math.ceil(idx))
-        return sorted_vals[lo] + (idx - lo) * (sorted_vals[hi] - sorted_vals[lo])
-
-    for et, by_hr in hours.items():
-        hrs = sorted(by_hr)
-        for i, hr in enumerate(hrs):
-            r = got[(et, hr)]
-            if i < 23:
-                assert r.q25 is None and r.is_outlier is None
-                continue
-            frame = sorted(by_hr[h] for h in hrs[i - 23 : i + 1])
-            q25, q75 = interp(frame, 0.25), interp(frame, 0.75)
-            v = by_hr[hr]
-            expect = v < q25 - 1.5 * (q75 - q25) or v > q75 + 1.5 * (q75 - q25)
-            assert r.is_outlier == expect, (et, hr)
-            assert abs(r.q25 - _round6f(q25)) < 1e-9 and abs(r.q75 - _round6f(q75)) < 1e-9
-
-
 def _round6f(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
 

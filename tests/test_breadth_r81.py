@@ -2,18 +2,11 @@
 
 from __future__ import annotations
 
-import datetime as dt
 import math
 
 import numpy as np
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import (
-    _HAAR_LEVELS,
-    _HAAR_SLOTS,
-    _KNN_K,
-    ns_knn_outlier_scores,
-    ts_haar_coefficients,
-)
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r81 import _KNN_K, ns_knn_outlier_scores
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -36,33 +29,3 @@ def test_knn_outlier_matches_numpy_bruteforce(spark):
     }
     assert set(got) == set(want)
     assert all(math.isclose(got[i], want[i], abs_tol=1e-12) for i in got)
-
-
-def test_haar_details_match_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    # collect() returns naive datetimes in the UTC session tz; pin the
-    # tzinfo so .timestamp() doesn't re-interpret them as local time
-    hours = [
-        int(r.ts.replace(tzinfo=dt.timezone.utc).timestamp() // 3600) for r in ev
-    ]
-    h0 = min(hours)
-    counts = [0] * _HAAR_SLOTS
-    for h in hours:
-        s = h - h0
-        if s < _HAAR_SLOTS:
-            counts[s] += 1
-    want = {}
-    for level in range(1, _HAAR_LEVELS + 1):
-        b = 1 << level
-        for pos in range(_HAAR_SLOTS // b):
-            blk = counts[pos * b : (pos + 1) * b]
-            want[(level, pos)] = (
-                sum(blk),
-                sum(blk[: b // 2]) - sum(blk[b // 2 :]),
-            )
-    got = {
-        (r.level, r.pos): (r.n_events, r.detail)
-        for r in ts_haar_coefficients(spark, SF_SMOKE).collect()
-    }
-    assert got == want
-    assert sum(n for n, _ in want.values()) > 0

@@ -8,12 +8,10 @@ from collections import defaultdict
 from matt3r_data_ingestion_serverless_spark.plans.breadth import session_window_gaps
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r82 import (
     _NN_RADIUS,
-    _RS_WINDOWS,
     _SEQ_CAP,
     geo_radius_nn_join,
     seq_edit_distance_drift,
     streamed_session_windows,
-    ts_hurst_rs,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -50,50 +48,6 @@ def test_edit_drift_matches_bruteforce(spark):
     }
     assert got == want
     assert any(d > 0 for _, _, d in want.values())
-
-
-def test_hurst_matches_python_rs(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    import datetime as dt
-
-    hours = [
-        int(r.ts.replace(tzinfo=dt.timezone.utc).timestamp() // 3600) for r in ev
-    ]
-    h0 = min(hours)
-    counts = [0] * 512
-    for h in hours:
-        if h - h0 < 512:
-            counts[h - h0] += 1
-    rows = {r.w: r for r in ts_hurst_rs(spark, SF_SMOKE).collect()}
-    assert set(rows) == set(_RS_WINDOWS)
-    pts = []
-    for w in _RS_WINDOWS:
-        rss = []
-        for c0 in range(0, 512, w):
-            blk = counts[c0 : c0 + w]
-            s1, s2 = sum(blk), sum(x * x for x in blk)
-            if s2 * w <= s1 * s1:
-                continue
-            mean = s1 / w
-            cum, devs = 0, []
-            for i, x in enumerate(blk):
-                cum += x
-                devs.append(cum - (i + 1) * mean)
-            r_rng = max(devs) - min(devs)
-            rss.append(r_rng / math.sqrt(s2 / w - mean * mean))
-        rs_avg = sum(rss) / len(rss)
-        assert math.isclose(rows[w].rs_avg_r, rs_avg, abs_tol=1e-6)
-        assert rows[w].n_chunks == len(rss)
-        pts.append((math.log(w), math.log(rows[w].rs_avg_r)))
-    n = len(pts)
-    sx = sum(x for x, _ in pts)
-    sy = sum(y for _, y in pts)
-    sxy = sum(x * y for x, y in pts)
-    sxx = sum(x * x for x, _ in pts)
-    h = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    for w in _RS_WINDOWS:
-        assert math.isclose(rows[w].hurst_r, h, abs_tol=1e-6)
-    assert 0.0 < h < 1.0, "R/S Hurst estimate must be a sane exponent"
 
 
 def test_radius_nn_matches_bruteforce(spark):

@@ -9,10 +9,8 @@ from itertools import combinations
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r88 import (
     _APRIORI_MINSUP,
-    _POLISH_SWEEPS,
     basket_triples_apriori,
     streamed_scd2_pit_enrichment,
-    ts_median_polish_residuals,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -36,41 +34,6 @@ def test_apriori_triples_match_bruteforce(spark):
     }
     assert got == want
     assert want, "smoke corpus must contain at least one frequent triple"
-
-
-def _median(xs):
-    xs = sorted(xs)
-    n = len(xs)
-    mid = n // 2
-    return xs[mid] if n % 2 else (xs[mid - 1] + xs[mid]) / 2
-
-
-def test_median_polish_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    grid = Counter()
-    for r in ev:
-        iso = r.ts.isoweekday()
-        grid[(iso, r.ts.hour)] += 1
-    cells = {k: float(v) for k, v in grid.items()}
-    for _ in range(_POLISH_SWEEPS):
-        for d in {d for d, _ in cells}:
-            med = _median([v for (dd, _), v in cells.items() if dd == d])
-            for k in [k for k in cells if k[0] == d]:
-                cells[k] -= med
-        for h in {h for _, h in cells}:
-            med = _median([v for (_, hh), v in cells.items() if hh == h])
-            for k in [k for k in cells if k[1] == h]:
-                cells[k] -= med
-    got = {
-        (r.dow, r.hr): r.resid_r
-        for r in ts_median_polish_residuals(spark, SF_SMOKE).collect()
-    }
-    assert set(got) == set(cells)
-    for k in cells:
-        assert math.isclose(got[k], cells[k], abs_tol=1e-6), (k, got[k], cells[k])
-    # robustness sanity: post-polish rows and columns are median-centred
-    for d in {d for d, _ in cells}:
-        assert abs(_median([v for (dd, _), v in cells.items() if dd == d])) < 1e-9
 
 
 def test_streamed_pit_matches_batch_join(spark):

@@ -8,10 +8,8 @@ from collections import Counter, defaultdict
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r89 import (
     _ALS_LAMBDA,
     _ALS_V,
-    _HAAR_SLOTS,
     ml_als_user_solve,
     ns_naive_bayes_langid,
-    ts_ar2_yule_walker,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -86,35 +84,3 @@ def test_naive_bayes_matches_python(spark):
     # the classifier must beat chance on the diagonal
     diag = sum(v for (t, p), v in conf.items() if t == p)
     assert diag > sum(conf.values()) / 5
-
-
-def test_ar2_matches_python_yule_walker(spark):
-    import datetime as dt
-
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    hours = [
-        int(r.ts.replace(tzinfo=dt.timezone.utc).timestamp() // 3600) for r in ev
-    ]
-    h0 = min(hours)
-    x = [0] * _HAAR_SLOTS
-    for h in hours:
-        if h - h0 < _HAAR_SLOTS:
-            x[h - h0] += 1
-    n = len(x)
-    mu = sum(x) / n
-
-    def acov(k):
-        return sum((x[t] - mu) * (x[t + k] - mu) for t in range(n - k)) / n
-
-    c0, c1, c2 = acov(0), acov(1), acov(2)
-    r1, r2 = c1 / c0, c2 / c0
-    phi1 = r1 * (1 - r2) / (1 - r1 * r1)
-    phi2 = (r2 - r1 * r1) / (1 - r1 * r1)
-    fc = mu + phi1 * (x[-1] - mu) + phi2 * (x[-2] - mu)
-    row = ts_ar2_yule_walker(spark, SF_SMOKE).collect()[0]
-    assert math.isclose(row.r1_r, r1, abs_tol=1e-6)
-    assert math.isclose(row.r2_r, r2, abs_tol=1e-6)
-    assert math.isclose(row.phi1_r, phi1, abs_tol=1e-6)
-    assert math.isclose(row.phi2_r, phi2, abs_tol=1e-6)
-    assert math.isclose(row.forecast_r, fc, abs_tol=1e-5)
-    assert abs(r1) <= 1 and abs(r2) <= 1

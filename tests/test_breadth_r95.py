@@ -12,7 +12,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r95 import (
     _IRLS_XSCALE,
     exact_median_bisection,
     ml_logreg_irls_2steps,
-    ts_circular_hour_stats,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -69,31 +68,3 @@ def test_irls_matches_python_newton(spark):
         return tot
 
     assert ll(b0, b1) > ll(0.0, 0.0)
-
-
-def test_circular_stats_match_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    acc = defaultdict(lambda: [0, 0.0, 0.0])
-    for r in ev:
-        us = int(r.ts.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-        theta = 2 * math.pi * (us % 86_400_000_000) / 86_400_000_000.0
-        a = acc[r.event_type]
-        a[0] += 1
-        a[1] += math.cos(theta)
-        a[2] += math.sin(theta)
-    got = {
-        r.event_type: r for r in ts_circular_hour_stats(spark, SF_SMOKE).collect()
-    }
-    assert set(got) == set(acc)
-    for t, (n, sc, ss) in acc.items():
-        r = got[t]
-        rlen = math.sqrt(sc * sc + ss * ss) / n
-        hour = ((math.atan2(ss, sc) + 2 * math.pi) % (2 * math.pi)) * 24 / (
-            2 * math.pi
-        )
-        assert r.n == n
-        assert math.isclose(r.resultant_r, rlen, abs_tol=1e-6)
-        assert math.isclose(r.circ_variance_r, 1 - rlen, abs_tol=1e-6)
-        assert math.isclose(r.mean_hour_r, hour, abs_tol=1e-5)
-        assert 0.0 <= r.resultant_r <= 1.0
-        assert 0.0 <= r.mean_hour_r < 24.0

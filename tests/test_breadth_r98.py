@@ -10,7 +10,6 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r98 import (
     _BOOST_NU,
     _SPLIT,
     ml_boosting_two_stumps,
-    ts_binary_segmentation,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -62,48 +61,3 @@ def test_boosting_matches_python_and_rmse_decreases(spark):
     assert math.isclose(row.rmse_after1_r, rmses[1], abs_tol=1e-5)
     assert math.isclose(row.rmse_after2_r, rmses[2], abs_tol=1e-5)
     assert rmses[0] >= rmses[1] >= rmses[2]
-
-
-def test_binseg_matches_python(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    hours = [
-        int(r.ts.replace(tzinfo=dt.timezone.utc).timestamp() // 3600) for r in ev
-    ]
-    h0 = min(hours)
-    xs = [0] * 512
-    for h in hours:
-        if h - h0 < 512:
-            xs[h - h0] += 1
-
-    def best(lo, hi):
-        seg = xs[lo:hi]
-        m = len(seg)
-        if m < 2:
-            return None
-        ty = sum(seg)
-        tyy = sum(v * v for v in seg)
-        bestk = None
-        cy = cyy = 0
-        for i in range(1, m):
-            cy += seg[i - 1]
-            cyy += seg[i - 1] ** 2
-            sse = (cyy - cy * cy / i) + ((tyy - cyy) - (ty - cy) ** 2 / (m - i))
-            key = (math.floor(sse * 1e6 + 0.5), lo + i - 1)
-            if bestk is None or key < bestk[0]:
-                bestk = (key, lo + i - 1, sse)
-        return bestk[1], bestk[2]
-
-    c1 = best(0, 512)
-    want = {1: c1}
-    for rnd, rng in ((2, (0, c1[0] + 1)), (3, (c1[0] + 1, 512))):
-        c = best(*rng)
-        if c:
-            want[rnd] = c
-    got = {
-        r.seg_round: (r.cut_slot, r.sse_r)
-        for r in ts_binary_segmentation(spark, SF_SMOKE).collect()
-    }
-    assert set(got) == set(want)
-    for rnd, (cut, sse) in want.items():
-        assert got[rnd][0] == cut
-        assert math.isclose(got[rnd][1], sse, abs_tol=1e-4)

@@ -13,6 +13,8 @@ def _domain(name: str) -> str | None:
         return "graph"
     if name.startswith(("mm_", "ns_multimodal_")) or name == "ns_image_patch_grid":
         return "multimodal"
+    if name.startswith("ts_"):
+        return "timeseries"
     return None
 
 
@@ -25,3 +27,4 @@ def test_domain_queries_live_in_their_domain_module():
     assert misplaced == {}
     assert sum(_domain(n) == "graph" for n in all_queries()) == 16
     assert sum(_domain(n) == "multimodal" for n in all_queries()) == 12
+    assert sum(_domain(n) == "timeseries" for n in all_queries()) == 41

@@ -13,7 +13,6 @@ from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
     skyline_pareto_frontier,
     ns_mv_incremental_agg,
     rolling_7d_distinct_users,
-    ts_ewma_smoothing,
 )
 from tests.conftest import SF_SMOKE
 
@@ -60,25 +59,6 @@ def test_skyline_frontier_is_exactly_the_undominated_set(spark):
     srt = sorted(got)
     for (p1, s1), (p2, s2) in zip(srt, srt[1:]):
         assert p1 < p2 and s1 < s2
-
-
-def test_ewma_fold_matches_sequential_python(spark):
-    out = {r.user_id: r for r in ts_ewma_smoothing(spark, SF_SMOKE).collect()}
-    ev = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("user_id", "ts", "event_id", "value")
-        .collect()
-    )
-    by_user: dict[int, list] = {}
-    for r in ev:
-        by_user.setdefault(r.user_id, []).append(r)
-    for uid, rows in by_user.items():
-        rows.sort(key=lambda r: (r.ts, r.event_id))
-        acc = rows[0].value
-        for r in rows[1:]:
-            acc = acc * 0.75 + 0.25 * r.value
-        assert out[uid].n_events == len(rows)
-        assert abs(out[uid].ewma_value - round(acc, 6)) < 1e-9, uid
 
 
 def test_rolling_7d_distinct_brute_force(spark):

@@ -897,8 +897,8 @@ def test_streamed_bollinger_matches_batch_across_batches(spark, tmp_path):
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql import types as T
 
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r4 import _BOLL_N
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
+    from matt3r_data_ingestion_serverless_spark.plans.timeseries import (
+        _BOLL_N,
         _bollinger_state_fn,
     )
 

@@ -27,6 +27,142 @@ from matt3r_data_ingestion_serverless_spark.streaming.pipeline import collect_st
 
 
 # ---------------------------------------------------------------------------
+# the shared series: each is built once here and read by every query
+# that needs it. Catalyst prunes the aggregates a query does not read,
+# so a wide frame costs its narrow consumers nothing.
+# ---------------------------------------------------------------------------
+
+
+def event_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(event_type, day, di, n, units, cents)``: each channel's daily
+    series. ``di`` is the day number of ``to_date(ts)`` since 2024-01-01
+    and ``day`` the same date as ``yyyy-MM-dd``; ``n`` is the event
+    count, ``units`` the sum of round(value, 0) and ``cents`` the sum of
+    floor(value * 100 + 0.5). The frame is grouped on ``di``, so a
+    consumer that groups or joins on (event_type, di) reuses the
+    aggregate's partitioning."""
+    epoch = F.lit("2024-01-01").cast("date")
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.datediff(F.to_date("ts"), epoch).cast("long").alias("di"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.round(F.col("value"), 0).cast("long")).alias("units"),
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"),
+        )
+        .select(
+            "event_type",
+            F.date_format(F.date_add(epoch, F.col("di").cast("int")), "yyyy-MM-dd").alias("day"),
+            "di",
+            "n",
+            "units",
+            "cents",
+        )
+    )
+
+
+def event_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(event_type, hr, n, units)``: each channel's hourly series.
+    ``hr`` is the hour's start timestamp, ``n`` the event count and
+    ``units`` the sum of round(value, 0)."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.round(F.col("value"), 0).cast("long")).alias("units"),
+        )
+    )
+
+
+def view_click_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(hi, x, y)``: per hour number ``hi`` (epoch hours), the view
+    (``x``) and click (``y``) sums of round(value, 0), 0 when the hour
+    has none of that channel."""
+    as_int = F.round(F.col("value"), 0).cast("long")
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.expr("unix_micros(date_trunc('hour', ts)) div 3600000000").alias("hi"))
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("event_type") == "view", as_int)), F.lit(0)
+            ).alias("x"),
+            F.coalesce(
+                F.sum(F.when(F.col("event_type") == "click", as_int)), F.lit(0)
+            ).alias("y"),
+        )
+    )
+
+
+_DFT_FREQS = 10  # frequencies k = 1..10 cycles per span
+_PI = 3.141592653589793
+
+# the quantized DFT terms of a daily count series daily(day, cnt), shared
+# by the periodogram and spectral-entropy oracles
+_DFT_TERMS_SQL = f"""r AS (
+  SELECT cnt, row_number() OVER (ORDER BY day) - 1 AS t,
+         count(*) OVER () AS n
+  FROM daily
+),
+terms AS (
+  SELECT k.k, r.n,
+         r.cnt * CAST(floor(cos(2 * {_PI} * k.k * r.t / r.n) * 1e6 + 0.5) AS BIGINT)
+           AS c_micro,
+         r.cnt * CAST(floor(sin(2 * {_PI} * k.k * r.t / r.n) * 1e6 + 0.5) AS BIGINT)
+           AS s_micro
+  FROM r CROSS JOIN (SELECT unnest(range(1, {_DFT_FREQS + 1})) AS k) k
+)"""
+
+
+def daily_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(k, n, cs, ss)``: the Fourier sums of the daily event-count
+    series over its ``n`` days at k = 1.._DFT_FREQS cycles per span.
+    Each trig factor cos/sin(2πkt/n) is quantized to micro-units per
+    term (the π literal is shared with the oracles), so ``cs``/``ss``
+    are exact int64 sums. The DFT runs on the day rows, never on raw
+    events."""
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
+        .agg(F.count("*").alias("cnt"))
+    )
+    r = daily.select(
+        "cnt",
+        (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
+        F.count("*").over(Window.partitionBy()).alias("n"),
+    )
+    ks = F.explode(F.sequence(F.lit(1), F.lit(_DFT_FREQS))).alias("k")
+    theta = 2 * _PI * F.col("k") * F.col("t") / F.col("n")
+    terms = r.select("cnt", "t", "n", ks).select(
+        "k",
+        "n",
+        (F.col("cnt") * F.floor(F.cos(theta) * 1e6 + 0.5).cast("long")).alias("c_micro"),
+        (F.col("cnt") * F.floor(F.sin(theta) * 1e6 + 0.5).cast("long")).alias("s_micro"),
+    )
+    return terms.groupBy("k").agg(
+        F.max("n").alias("n"), F.sum("c_micro").alias("cs"), F.sum("s_micro").alias("ss")
+    )
+
+
+def sorted_user_values():
+    """A user's values in (ts, event_id) order, as an array aggregate for
+    ``groupBy("user_id").agg(...)``: the operand order of the per-user
+    folds (EWMA, Holt, Kalman)."""
+    return F.transform(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.unix_micros("ts").alias("ts_us"),
+                    F.col("event_id").alias("event_id"),
+                    F.col("value").alias("v"),
+                )
+            )
+        ),
+        lambda s: s["v"],
+    )
+
+
+# ---------------------------------------------------------------------------
 # sequential statistics over the events stream
 # ---------------------------------------------------------------------------
 
@@ -216,18 +352,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle; per-key state is two doubles. Million-row keys
     move to the incremental applyInPandasWithState fold, same as EWMA."""
     ev = load_table(spark, sf_dir, "events")
-    vals = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("value").alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
+    vals = sorted_user_values()
     x1, x2 = F.element_at(vals, 1), F.element_at(vals, 2)
     init = F.struct(x2.alias("l"), (x2 - x1).alias("b"))
     tail = F.slice(vals, 3, F.greatest(F.size(vals) - 2, F.lit(0)))
@@ -382,18 +507,7 @@ def ts_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     two doubles; unbounded keys move to the incremental stateful-stream
     fold like EWMA/Holt."""
     ev = load_table(spark, sf_dir, "events")
-    vals = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("value").alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
+    vals = sorted_user_values()
     init = F.struct(
         F.element_at(vals, 1).alias("x"), F.lit(1.0).alias("p")
     )
@@ -660,17 +774,10 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     device-month, not events. A global ORDER BY window is fine for one
     pair; per-device it partitions by device_id and parallelizes.
     """
-    ev = load_table(spark, sf_dir, "events")
-    as_int = F.round(F.col("value"), 0).cast("long")
-    h = ev.groupBy(
-        F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH").alias("hr")
-    ).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "view", as_int)), F.lit(0)
-        ).alias("x"),
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "click", as_int)), F.lit(0)
-        ).alias("y"),
+    h = view_click_hours(spark, sf_dir).select(
+        F.date_format(F.timestamp_seconds(F.col("hi") * 3600), "yyyy-MM-dd HH").alias("hr"),
+        "x",
+        "y",
     )
     f = Window.orderBy("hr").rowsBetween(-23, 0)
     x, y = F.col("x"), F.col("y")
@@ -750,11 +857,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs per channel; a year is ~66k pairs, trivial. S and the tie
     term stay exact int64; Z is one fixed double formula at the end.
     """
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
+    dly = event_days(spark, sf_dir).select("event_type", "day", F.col("units").alias("v"))
     a, b = dly.alias("a"), dly.alias("b")
     pairs = (
         a.join(
@@ -863,15 +966,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment agg; everything after the first shuffle is
     channel-count sized.
     """
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.datediff(
-            F.date_trunc("day", F.col("ts")), F.lit("2024-01-01").cast("date")
-        )
-        .cast("long")
-        .alias("di"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
+    dly = event_days(spark, sf_dir).select("event_type", "di", F.col("units").alias("v"))
     g = dly.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("v").alias("s"),
@@ -981,9 +1076,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value"), 0).cast("long").alias("v"),
         F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
     )
-    bkt = pts.groupBy("event_type", "day").agg(
-        F.sum("v").alias("s"), F.count("*").alias("n")
-    )
+    bkt = event_days(spark, sf_dir).select("event_type", "day", F.col("units").alias("s"), "n")
     w = Window.partitionBy("event_type").orderBy("day")
     nb = bkt.select(
         "event_type",
@@ -1065,11 +1158,11 @@ def ts_rolling_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the window runs over hours (25 rows/channel-day), not
     events; per-frame interpolation cost is O(frame log frame)."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
+    h = event_hours(spark, sf_dir).select(
         "event_type",
-        F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH").alias("hr"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
+        F.date_format("hr", "yyyy-MM-dd HH").alias("hr"),
+        F.col("units").alias("v"),
+    )
     f = (
         Window.partitionBy("event_type")
         .orderBy("hr")
@@ -1298,11 +1391,7 @@ def ts_spc_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas; the out-of-control comparison runs on UNROUNDED limits
     (rounding only reported columns). One day-grain agg, one lag
     window, one tiny per-channel limit table broadcast back."""
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
+    d = event_days(spark, sf_dir).select("event_type", "day", F.col("units").alias("v"))
     mr = d.select(
         "event_type",
         "day",
@@ -1383,18 +1472,7 @@ def ts_cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours first — the expensive shuffle happens once, the 7-lag
     explosion touches only the hourly table), Pearson r as one fixed
     double formula, NULL on degenerate variance."""
-    ev = load_table(spark, sf_dir, "events")
-    as_int = F.round(F.col("value"), 0).cast("long")
-    h = ev.groupBy(
-        (F.expr("unix_micros(date_trunc('hour', ts)) div 3600000000")).alias("hi")
-    ).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "view", as_int)), F.lit(0)
-        ).alias("x"),
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "click", as_int)), F.lit(0)
-        ).alias("y"),
-    )
+    h = view_click_hours(spark, sf_dir)
     lags = spark.range(-_XC_MAX_LAG, _XC_MAX_LAG + 1).select(
         F.col("id").cast("long").alias("lag")
     )
@@ -1513,13 +1591,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_iv_j + v_{{i+m}}v_{{j+m}}), which is a window fold on this exact
     layout."""
     m = _MP_M
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.datediff(F.date_trunc("day", F.col("ts")), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("di"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
+    dly = event_days(spark, sf_dir).select("event_type", "di", F.col("units").alias("v"))
     a, b = dly.alias("a"), dly.alias("b")
     win = (
         a.join(
@@ -1627,10 +1699,7 @@ def ts_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fixed double formula — the welch_ttest_events discipline. NOTE
     the missing-hour caveat: absent cells are not zero-filled here (the
     grid join in ts_gap_fill_locf adds them when that matters)."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy("event_type", F.date_trunc("hour", F.col("ts")).alias("hr")).agg(
-        F.count("*").alias("c")
-    )
+    h = event_hours(spark, sf_dir).select("event_type", "hr", F.col("n").alias("c"))
     agg = h.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("c").alias("s"),
@@ -1714,11 +1783,7 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ints end to end (runs counted by exact lag comparisons; the median
     from the ⌈n/2⌉ histogram rule); Z is one fixed double formula on a
     channels-sized table."""
-    ev = load_table(spark, sf_dir, "events")
-    dly = ev.groupBy(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
-    ).agg(F.sum(F.round(F.col("value"), 0).cast("long")).alias("v"))
+    dly = event_days(spark, sf_dir).select("event_type", "day", F.col("units").alias("v"))
     vc = dly.groupBy("event_type", "v").agg(F.count("*").alias("c"))
     wcum = (
         Window.partitionBy("event_type")
@@ -1891,13 +1956,7 @@ def ts_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 and tau-b is one final double. Complements
     ts_mann_kendall (trend vs time) by measuring cross-series
     association."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"),
-    )
+    daily = event_days(spark, sf_dir).select("event_type", "day", F.col("n").alias("cnt"), "cents")
     r = daily.select(
         "event_type",
         "cnt",
@@ -1981,10 +2040,7 @@ def ts_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-stable. Aggregate-first (day grain) then one window per type; at
     100 TB the quantile runs on ~365 rows per key, never the raw
     stream."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
+    daily = event_days(spark, sf_dir).select("event_type", "day", "cents")
     wday = Window.partitionBy("event_type").orderBy("day")
     delta = daily.select(
         "event_type", (F.col("cents") - F.lag("cents").over(wday)).alias("d")
@@ -2019,29 +2075,13 @@ def ts_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # periodogram of the daily event-count series
 # ---------------------------------------------------------------------------
 
-_PGRAM_FREQS = 10
-_PI = 3.141592653589793
-
-
 def _pgram_sql() -> str:
     return f"""
 WITH daily AS (
   SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS cnt FROM events
   GROUP BY strftime(ts, '%Y-%m-%d')
 ),
-r AS (
-  SELECT cnt, row_number() OVER (ORDER BY day) - 1 AS t,
-         count(*) OVER () AS n
-  FROM daily
-),
-terms AS (
-  SELECT k.k, r.n,
-         r.cnt * CAST(floor(cos(2 * {_PI} * k.k * r.t / r.n) * 1e6 + 0.5) AS BIGINT)
-           AS c_micro,
-         r.cnt * CAST(floor(sin(2 * {_PI} * k.k * r.t / r.n) * 1e6 + 0.5) AS BIGINT)
-           AS s_micro
-  FROM r CROSS JOIN (SELECT unnest(range(1, {_PGRAM_FREQS + 1})) AS k) k
-),
+{_DFT_TERMS_SQL},
 s AS (
   SELECT k, max(n) AS n, sum(c_micro) AS cs, sum(s_micro) AS ss
   FROM terms GROUP BY k
@@ -2068,26 +2108,7 @@ def ts_periodogram_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     form. Aggregate-first: the DFT runs on ~365 day rows × 10
     frequencies, never raw events — the only sound way to take a
     spectrum at 100 TB."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
-        F.count("*").alias("cnt")
-    )
-    r = daily.select(
-        "cnt",
-        (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
-        F.count("*").over(Window.partitionBy()).alias("n"),
-    )
-    ks = F.explode(F.sequence(F.lit(1), F.lit(_PGRAM_FREQS))).alias("k")
-    theta = 2 * _PI * F.col("k") * F.col("t") / F.col("n")
-    terms = r.select("cnt", "t", "n", ks).select(
-        "k",
-        "n",
-        (F.col("cnt") * F.floor(F.cos(theta) * 1e6 + 0.5).cast("long")).alias("c_micro"),
-        (F.col("cnt") * F.floor(F.sin(theta) * 1e6 + 0.5).cast("long")).alias("s_micro"),
-    )
-    s = terms.groupBy("k").agg(
-        F.max("n").alias("n"), F.sum("c_micro").alias("cs"), F.sum("s_micro").alias("ss")
-    )
+    s = daily_dft(spark, sf_dir)
     power = (
         F.col("cs").cast("double") * F.col("cs") + F.col("ss").cast("double") * F.col("ss")
     ) / 1e12 / F.col("n")
@@ -2151,10 +2172,7 @@ def ts_max_subarray_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity that keeps an inherently sequential-looking DP fully
     parallel at 100 TB. Everything is exact integer cents; the best
     end-day tie-breaks by max(day)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
+    daily = event_days(spark, sf_dir).select("event_type", "day", "cents")
     wd = Window.partitionBy("event_type").orderBy("day")
     delta = daily.select(
         "event_type", "day", (F.col("cents") - F.lag("cents").over(wd)).alias("d")
@@ -2224,10 +2242,7 @@ def ts_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistical gate). One window partition serves the lag, lead, and
     neighborhood-max frames (named WINDOW in the oracle, shared sort
     in Spark); all comparisons are exact integers."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(F.count("*").alias("cnt"))
+    daily = event_days(spark, sf_dir).select("event_type", "day", F.col("n").alias("cnt"))
     win = Window.partitionBy("event_type").orderBy("day")
     w = daily.select(
         "event_type",
@@ -2394,10 +2409,7 @@ def ts_hysteresis_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel (same family as ts_gap_fill_locf). Thresholds compare
     cross-multiplied integers against the milli-quantized mean; burst
     episodes count 0→1 transitions."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr")).agg(
-        F.count("*").alias("cnt")
-    )
+    hourly = event_hours(spark, sf_dir).select("event_type", "hr", F.col("n").alias("cnt"))
     m = hourly.groupBy("event_type").agg(
         F.count("*").alias("n_hours"), F.sum("cnt").alias("s")
     )
@@ -3034,8 +3046,6 @@ def ts_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         out, "seg_round INT, cut_slot BIGINT, sse DOUBLE"
     ).select("seg_round", "cut_slot", round6(F.col("sse")).alias("sse_r"))
 
-_SE_FREQS = 10
-
 # ---------------------------------------------------------------------------
 # spectral entropy of the daily periodogram
 # ---------------------------------------------------------------------------
@@ -3045,19 +3055,7 @@ WITH daily AS (
   SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS cnt
   FROM events GROUP BY 1
 ),
-r AS (
-  SELECT cnt, row_number() OVER (ORDER BY day) - 1 AS t,
-         count(*) OVER () AS n
-  FROM daily
-),
-terms AS (
-  SELECT k.k, r.n,
-         r.cnt * CAST(floor(cos(2 * {_PI} * k.k * r.t / r.n) * 1e6 + 0.5) AS BIGINT)
-           AS c_micro,
-         r.cnt * CAST(floor(sin(2 * {_PI} * k.k * r.t / r.n) * 1e6 + 0.5) AS BIGINT)
-           AS s_micro
-  FROM r CROSS JOIN (SELECT unnest(range(1, {_SE_FREQS + 1})) AS k) k
-),
+{_DFT_TERMS_SQL},
 s AS (
   SELECT k, sum(c_micro) AS cs, sum(s_micro) AS ss
   FROM terms GROUP BY k
@@ -3072,7 +3070,7 @@ p AS (
 SELECT count(*) AS n_freqs,
        {round6_sql(
            '-sum(CASE WHEN pw > 0 THEN (pw / tot) * ln(pw / tot) END)'
-           f' / ln({_SE_FREQS})'
+           f' / ln({_DFT_FREQS})'
        )} AS spectral_entropy_r,
        CAST(min(CASE WHEN pw = mx THEN k END) AS BIGINT) AS dominant_k
 FROM p
@@ -3091,29 +3089,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     periodogram (exact int64 Fourier sums from identically-rounded trig
     factors); powers are identical products of identical ints, so the
     argmax and the entropy ratios are deterministic."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
-        F.count("*").alias("cnt")
-    )
-    r = daily.select(
-        "cnt",
-        (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
-        F.count("*").over(Window.partitionBy()).alias("n"),
-    )
-    ks = F.explode(F.sequence(F.lit(1), F.lit(_SE_FREQS))).alias("k")
-    theta = 2 * math.pi * F.col("k") * F.col("t") / F.col("n")
-    terms = r.select("cnt", "t", "n", ks).select(
-        "k",
-        (F.col("cnt") * F.floor(F.cos(theta) * 1e6 + 0.5).cast("long")).alias(
-            "c_micro"
-        ),
-        (F.col("cnt") * F.floor(F.sin(theta) * 1e6 + 0.5).cast("long")).alias(
-            "s_micro"
-        ),
-    )
-    s = terms.groupBy("k").agg(
-        F.sum("c_micro").alias("cs"), F.sum("s_micro").alias("ss")
-    )
+    s = daily_dft(spark, sf_dir)
     pw = F.col("cs").cast("double") * F.col("cs") + F.col("ss").cast("double") * F.col(
         "ss"
     )
@@ -3131,7 +3107,7 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * F.log(F.col("pw") / F.col("tot")),
                 )
             )
-            / math.log(_SE_FREQS)
+            / math.log(_DFT_FREQS)
         ).alias("spectral_entropy_r"),
         F.min(F.when(F.col("pw") == F.col("mx"), F.col("k")))
         .cast("long")
@@ -3225,18 +3201,7 @@ def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory ceiling — that shape moves to applyInPandasWithState
     (streaming/pipeline.py), which folds incrementally."""
     ev = load_table(spark, sf_dir, "events")
-    vals = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros("ts").alias("ts_us"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("value").alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
+    vals = sorted_user_values()
     ewma = F.aggregate(
         F.slice(vals, 2, F.greatest(F.size(vals) - 1, F.lit(0))),
         F.element_at(vals, 1),

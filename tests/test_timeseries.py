@@ -20,12 +20,14 @@ from matt3r_data_ingestion_serverless_spark.plans.timeseries import (
     _KAL_Q,
     _KAL_R,
     _MP_M,
-    _PGRAM_FREQS,
+    _DFT_FREQS,
     _PI,
     _POLISH_SWEEPS,
     _RS_WINDOWS,
-    _SE_FREQS,
     _XC_MAX_LAG,
+    daily_dft,
+    event_days,
+    event_hours,
     ts_acf_table,
     ts_ar2_yule_walker,
     ts_autocorr_hourly,
@@ -72,6 +74,35 @@ def _round6(x: float) -> float:
 def events(spark):
     """The sf0.001 events table, collected once for the module."""
     return load_table(spark, SF_SMOKE, "events").collect()
+
+
+def _units(x: float) -> int:
+    return int(math.floor(abs(x) + 0.5)) * (1 if x >= 0 else -1)
+
+
+def test_event_days_match_python_group_by(spark, events):
+    want = defaultdict(lambda: [0, 0, 0])
+    for r in events:
+        di = (r.ts.date() - dt.date(2024, 1, 1)).days
+        cell = want[(r.event_type, r.ts.strftime("%Y-%m-%d"), di)]
+        cell[0] += 1
+        cell[1] += _units(r.value)
+        cell[2] += int(math.floor(r.value * 100 + 0.5))
+    got = {
+        (r.event_type, r.day, r.di): [r.n, r.units, r.cents]
+        for r in event_days(spark, SF_SMOKE).collect()
+    }
+    assert got == dict(want)
+
+
+def test_event_hours_match_python_group_by(spark, events):
+    want = defaultdict(lambda: [0, 0])
+    for r in events:
+        cell = want[(r.event_type, r.ts.replace(minute=0, second=0, microsecond=0))]
+        cell[0] += 1
+        cell[1] += _units(r.value)
+    got = {(r.event_type, r.hr): [r.n, r.units] for r in event_hours(spark, SF_SMOKE).collect()}
+    assert got == dict(want)
 
 
 def test_cusum_changepoint_matches_python(spark, events):
@@ -188,7 +219,7 @@ def test_rolling_corr_matches_numpy(spark, events):
     for r in events:
         hr = r.ts.strftime("%Y-%m-%d %H")
         xy = hours.setdefault(hr, [0, 0])
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         if r.event_type == "view":
             xy[0] += v
         elif r.event_type == "click":
@@ -217,7 +248,7 @@ def test_rolling_corr_matches_numpy(spark, events):
 def _daily_units(ev):
     dly: dict[tuple, int] = defaultdict(int)
     for r in ev:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         dly[(r.event_type, r.ts.strftime("%Y-%m-%d"))] += v
     return dly
 
@@ -282,7 +313,7 @@ def test_lttb_picks_max_deviation_point(spark, events):
     bkt: dict[tuple, list[int]] = defaultdict(lambda: [0, 0])
     for r in events:
         day = r.ts.strftime("%Y-%m-%d")
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         pts[(r.event_type, day)].append((r.event_id, v))
         b = bkt[(r.event_type, day)]
         b[0] += v
@@ -312,7 +343,7 @@ def test_lttb_picks_max_deviation_point(spark, events):
 def test_rolling_iqr_matches_python(spark, events):
     hours = defaultdict(lambda: defaultdict(int))
     for r in events:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         hours[r.event_type][r.ts.strftime("%Y-%m-%d %H")] += v
     got = {
         (r.event_type, r.hr): r
@@ -395,7 +426,7 @@ def test_pot_tail_matches_python(spark, events):
 def test_spc_limits_match_python(spark, events):
     daily = defaultdict(lambda: defaultdict(int))
     for r in events:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         daily[r.event_type][r.ts.strftime("%Y-%m-%d")] += v
     got = {
         (r.event_type, r.day): r for r in ts_spc_control_chart(spark, SF_SMOKE).collect()
@@ -422,7 +453,7 @@ def test_cross_correlation_matches_python(spark, events):
         hi = int(
             r.ts.replace(minute=0, second=0, microsecond=0).timestamp() * 1_000_000
         ) // 3_600_000_000
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         if r.event_type == "view":
             hours[hi][0] += v
         elif r.event_type == "click":
@@ -456,7 +487,7 @@ def test_matrix_profile_matches_numpy(spark, events):
     daily = defaultdict(lambda: defaultdict(int))
     for r in events:
         di = (r.ts.date() - dt.date(2024, 1, 1)).days
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         daily[r.event_type][di] += v
     got = {
         (r.event_type, r.win_start): r
@@ -519,7 +550,7 @@ def test_fano_factor_matches_python(spark, events):
 def test_runs_test_matches_python(spark, events):
     daily = defaultdict(lambda: defaultdict(int))
     for r in events:
-        v = int(math.floor(abs(r.value) + 0.5)) * (1 if r.value >= 0 else -1)
+        v = _units(r.value)
         daily[r.event_type][r.ts.strftime("%Y-%m-%d")] += v
     got = {r.event_type: r for r in ts_runs_test(spark, SF_SMOKE).collect()}
     for et, by_day in daily.items():
@@ -618,15 +649,16 @@ def test_var_cvar_matches_python(spark, events):
         assert r.worst_cents == deltas[0]
 
 
-def test_periodogram_matches_python(spark, events):
+def _dft_sums(events) -> tuple[int, dict[int, tuple[int, int]]]:
+    """``(n_days, {k: (cos_sum_micro, sin_sum_micro)})`` of the daily
+    event-count series, each trig factor quantized per term."""
     daily = defaultdict(int)
     for r in events:
         daily[r.ts.strftime("%Y-%m-%d")] += 1
     cnts = [daily[d] for d in sorted(daily)]
     n = len(cnts)
-    got = {r.freq_k: r for r in ts_periodogram_daily(spark, SF_SMOKE).collect()}
-    assert set(got) == set(range(1, _PGRAM_FREQS + 1))
-    for k in range(1, _PGRAM_FREQS + 1):
+    sums = {}
+    for k in range(1, _DFT_FREQS + 1):
         cs = sum(
             c * int(math.floor(math.cos(2 * _PI * k * t / n) * 1e6 + 0.5))
             for t, c in enumerate(cnts)
@@ -635,6 +667,21 @@ def test_periodogram_matches_python(spark, events):
             c * int(math.floor(math.sin(2 * _PI * k * t / n) * 1e6 + 0.5))
             for t, c in enumerate(cnts)
         )
+        sums[k] = (cs, ss)
+    return n, sums
+
+
+def test_daily_dft_matches_python_fourier_sums(spark, events):
+    n, sums = _dft_sums(events)
+    got = {r.k: (r.n, r.cs, r.ss) for r in daily_dft(spark, SF_SMOKE).collect()}
+    assert got == {k: (n, cs, ss) for k, (cs, ss) in sums.items()}
+
+
+def test_periodogram_matches_python(spark, events):
+    n, sums = _dft_sums(events)
+    got = {r.freq_k: r for r in ts_periodogram_daily(spark, SF_SMOKE).collect()}
+    assert set(got) == set(range(1, _DFT_FREQS + 1))
+    for k, (cs, ss) in sums.items():
         r = got[k]
         assert r.n_days == n
         assert (r.cos_sum_micro, r.sin_sum_micro) == (cs, ss)
@@ -967,7 +1014,7 @@ def test_spectral_entropy_matches_python(spark, events):
     cnts = [daily[d] for d in sorted(daily)]
     n = len(cnts)
     powers = []
-    for k in range(1, _SE_FREQS + 1):
+    for k in range(1, _DFT_FREQS + 1):
         cs = sum(
             c * math.floor(math.cos(2 * math.pi * k * t / n) * 1e6 + 0.5)
             for t, c in enumerate(cnts)
@@ -979,11 +1026,11 @@ def test_spectral_entropy_matches_python(spark, events):
         powers.append(float(cs) * cs + float(ss) * ss)
     tot = sum(powers)
     h = -sum((p / tot) * math.log(p / tot) for p in powers if p > 0) / math.log(
-        _SE_FREQS
+        _DFT_FREQS
     )
     dom = 1 + powers.index(max(powers))
     row = ts_spectral_entropy(spark, SF_SMOKE).collect()[0]
-    assert row.n_freqs == _SE_FREQS
+    assert row.n_freqs == _DFT_FREQS
     assert math.isclose(row.spectral_entropy_r, h, abs_tol=1e-6)
     assert row.dominant_k == dom
     assert 0.0 <= row.spectral_entropy_r <= 1.0

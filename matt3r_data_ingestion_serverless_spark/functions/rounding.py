@@ -37,8 +37,9 @@ def round6_sql(expr: str) -> str:
 
 # Integer cents of a 2-decimal value, rounded half away from zero by
 # both engines. Other queries use floor(value * 100 + 0.5), which
-# rounds half up: the two rules differ at .5 boundaries (-0.005 is -1
-# cent here, 0 there), so each oracle names its own rule.
+# rounds half up: the two rules differ on a value that lands on a .5
+# boundary (-0.5 cent is -1 here, 0 there), so each oracle names its
+# own rule.
 CENTS_SQL = "CAST(round(value * 100, 0) AS BIGINT)"
 
 

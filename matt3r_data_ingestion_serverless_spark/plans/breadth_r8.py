@@ -1,7 +1,7 @@
 """Round-4 batch 4: exact global quantiles over a value histogram,
 bitmap-index distinct counting, length-bucketed batch packing,
-stratified k-fold assignment, BOM explosion rollup, preference-pair
-mining and kNN classification — more of the relational + ML-prep surface, each exact-integer
+stratified k-fold assignment, BOM explosion rollup, and preference-pair
+mining — more of the relational + ML-prep surface, each exact-integer
 deterministic with a DuckDB oracle.
 """
 

@@ -169,15 +169,15 @@ def sorted_user_values():
 
 @register(
     "ts_cusum_changepoint",
-    sql="""
+    sql=f"""
 WITH txn AS (
-  SELECT user_id, ts, event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents,
+  SELECT user_id, ts, event_id, {CENTS_SQL} AS cents,
          row_number() OVER w AS k,
-         sum(CAST(round(value * 100, 0) AS BIGINT)) OVER
+         sum({CENTS_SQL}) OVER
            (PARTITION BY user_id ORDER BY ts, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prefix_cents,
          count(*) OVER (PARTITION BY user_id) AS n,
-         sum(CAST(round(value * 100, 0) AS BIGINT))
+         sum({CENTS_SQL})
            OVER (PARTITION BY user_id) AS total_cents
   FROM events WHERE event_type = 'purchase'
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -208,7 +208,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT arithmetic end to end. Users with < 20 purchases are noise
     and dropped."""
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
+    c = cents()
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wu = Window.partitionBy("user_id")
     txn = e.select(
@@ -216,11 +216,11 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         F.row_number().over(w).alias("k"),
-        F.sum(cents).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
+        F.sum(c).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
             "prefix_cents"
         ),
         F.count("*").over(wu).alias("n"),
-        F.sum(cents).over(wu).alias("total_cents"),
+        F.sum(c).over(wu).alias("total_cents"),
     )
     absd = F.abs(F.col("n") * F.col("prefix_cents") - F.col("k") * F.col("total_cents"))
     ranked = txn.select(
@@ -388,7 +388,7 @@ _BOLL_N = 20  # trailing window length
 
 _BOLL_SQL = f"""
 WITH c AS (
-  SELECT user_id, ts, event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents
+  SELECT user_id, ts, event_id, {CENTS_SQL} AS cents
   FROM events WHERE event_type = 'purchase'
 ),
 w AS (
@@ -425,13 +425,12 @@ def ts_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per key is {n} rows regardless of history length, the same
     bound the streaming variant would keep in its state store."""
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
     win = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(-(_BOLL_N - 1) - 1, -1)
     )
-    c = e.select("user_id", "ts", "event_id", cents.alias("cents"))
+    c = e.select("user_id", "ts", "event_id", cents().alias("cents"))
     w = c.select(
         "user_id",
         "ts",
@@ -539,7 +538,7 @@ def ts_kalman_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # OHLC bars — min_by/max_by with a total (ts, event_id) key
 # ---------------------------------------------------------------------------
 
-_OHLC_SQL = """
+_OHLC_SQL = f"""
 SELECT event_type,
        strftime(date_trunc('day', ts), '%Y-%m-%d') AS bar_date,
        -- composite key in HUGEINT: epoch µs ≈ 1.7e15, ×1e5 + id needs int128
@@ -548,7 +547,7 @@ SELECT event_type,
        min(value) AS low,
        arg_max(value, epoch_us(ts)::HUGEINT * 100000 + event_id) AS close,
        count(*) AS n_ticks,
-       CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS volume_cents
+       CAST(sum({CENTS_SQL}) AS BIGINT) AS volume_cents
 FROM events
 GROUP BY 1, 2
 """
@@ -582,7 +581,7 @@ def ts_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low"),
         F.max_by("value", key).alias("close"),
         F.count("*").alias("n_ticks"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("volume_cents"),
+        F.sum(cents()).alias("volume_cents"),
     )
 
 
@@ -1199,7 +1198,7 @@ def ts_rolling_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DERIV_SQL = f"""
 WITH s AS (
   SELECT user_id, event_id, epoch_us(ts) AS t_us,
-         CAST(round(value * 100, 0) AS BIGINT) AS cents
+         {CENTS_SQL} AS cents
   FROM events WHERE event_type = 'view'
 ),
 w AS (
@@ -1238,7 +1237,7 @@ def ts_numerical_derivative(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.unix_micros("ts").alias("t_us"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     win = Window.partitionBy("user_id").orderBy("t_us", "event_id")
     w = s.select(
@@ -1313,7 +1312,7 @@ def ts_pot_tail_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold table broadcasts back onto the scan."""
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
-        "event_type", F.round(F.col("value") * 100, 0).cast("long").alias("cents")
+        "event_type", cents().alias("cents")
     )
     vc = v.groupBy("event_type", "cents").agg(F.count("*").alias("c"))
     wcum = (
@@ -3336,10 +3335,10 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine. Unrounded double sums differ by final-ulp between engines
     # (DuckDB's avg is numerically stabilized) and money-grained means
     # land on .5 boundaries at the 6th digit constantly.
-    sql="""
+    sql=f"""
 WITH c AS (
   SELECT user_id, CAST(hour(ts) AS INT) AS hod,
-         CAST(round(value * 100, 0) AS BIGINT) AS cents
+         {CENTS_SQL} AS cents
   FROM events
 ),
 base AS (
@@ -3379,8 +3378,7 @@ def ts_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange for the join; output is |users|×24 rows regardless of
     history length."""
     e = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    c = e.select("user_id", F.hour("ts").cast("int").alias("hod"), cents.alias("cents"))
+    c = e.select("user_id", F.hour("ts").cast("int").alias("hod"), cents().alias("cents"))
     base = c.groupBy("user_id", "hod").agg(
         (F.sum("cents").cast("double") / (100.0 * F.count("*"))).alias("hm"),
         F.count("*").alias("n_obs"),
@@ -3528,7 +3526,7 @@ def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("device_id"),
         F.unix_micros("ts").alias("ts_us"),
         F.col("event_id").alias("event_id"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     out_schema = T.StructType(
         [

@@ -1,5 +1,5 @@
-"""Round-4 batch 19: data-completeness auditing, named-window SQL
-surface parity, and LSH bucket-skew diagnostics.
+"""Round-4 batch 19: data-completeness auditing and named-window SQL
+surface parity.
 """
 
 from __future__ import annotations
@@ -125,69 +125,3 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cents with custkey tie-break, so the cutoff is total-ordered."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_nw")
     return spark.sql(_NAMED_WINDOW_SPARK.format(table="orders_nw"))
-
-
-# ---------------------------------------------------------------------------
-# LSH bucket-skew diagnostics
-# ---------------------------------------------------------------------------
-
-
-def _lsh_bucket_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.functions import hashing
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _hashed_shingles_cte,
-        _minhash_band_structs_sql,
-    )
-
-    sig = hashing.minhash_from_hashes_sql("sh")
-    return f"""
-WITH {_hashed_shingles_cte()},
-s AS (SELECT doc_id, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({_minhash_band_structs_sql()}, recursive := true) FROM s),
-buckets AS (
-  SELECT band, key, count(*) AS sz FROM bk GROUP BY band, key
-)
-SELECT CAST(band AS INT) AS band,
-       count(*) AS n_buckets,
-       CAST(max(sz) AS BIGINT) AS max_bucket,
-       CAST(sum(CASE WHEN sz > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS colliding_buckets,
-       CAST(sum(sz * (sz - 1) / 2) AS BIGINT) AS candidate_pairs,
-       {round6_sql("CAST(sum(sz) AS DOUBLE) / count(*)")} AS avg_bucket
-FROM buckets GROUP BY band
-"""
-
-
-@register("ns_lsh_bucket_stats", sql=_lsh_bucket_sql())
-def ns_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH bucket-skew diagnostics: per band, the bucket count, max and
-    mean bucket size, colliding buckets, and the CANDIDATE-PAIR MASS
-    Σ s(s−1)/2 — the number that IS the LSH self-join's cost. This is
-    the audit run before ns_dedup_minhash_lsh at a new scale: a single
-    hot bucket (empty-doc signatures, boilerplate) turns the linear
-    band join quadratic, and this table says which band and how bad —
-    the input to the salting decision SCALE.md §3 prescribes.
-
-    One banding pass (shared with the dedup pipeline) and one two-level
-    agg; everything exact-integer except the rounded mean."""
-    from matt3r_data_ingestion_serverless_spark.functions import hashing
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _minhash_band_structs_expr,
-        _with_hashed_shingles,
-    )
-    from matt3r_data_ingestion_serverless_spark.sources.tables import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = _with_hashed_shingles(docs).select("doc_id", "sh")
-    s = d.select("doc_id", hashing.minhash_from_hashes_expr("sh").alias("sig"))
-    bk = s.select(
-        "doc_id", F.explode(_minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    buckets = bk.groupBy("band", "key").agg(F.count("*").alias("sz"))
-    return buckets.groupBy(F.col("band").cast("int").alias("band")).agg(
-        F.count("*").alias("n_buckets"),
-        F.max("sz").cast("long").alias("max_bucket"),
-        F.sum((F.col("sz") > 1).cast("int")).cast("long").alias("colliding_buckets"),
-        F.sum(F.expr("sz * (sz - 1) div 2")).cast("long").alias("candidate_pairs"),
-        round6(F.sum("sz").cast("double") / F.count("*")).alias("avg_bucket"),
-    )

@@ -517,14 +517,14 @@ _WINNOW_W = 4  # winnowing window: guarantee = W + K - 1 tokens
 
 def _winnow_grams_sql() -> str:
     from matt3r_data_ingestion_serverless_spark.functions import hashing, text
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import TOKEN_B
 
     P = hashing.P31
     th = (
         f"list_transform({text.tokens_sql('text')}, "
         f"t -> ({hashing.md5_hash64_sql('t')}) % {P})"
     )
-    comb = f"(((th[i] * {TOKEN_B} + th[i+1]) % {P}) * {TOKEN_B} + th[i+2]) % {P}"
+    B = hashing.TOKEN_B
+    comb = f"(((th[i] * {B} + th[i+1]) % {P}) * {B} + th[i+2]) % {P}"
     return (
         f"th AS (SELECT doc_id, {th} AS th FROM documents),\n"
         f"g AS (SELECT doc_id, list_transform("
@@ -571,7 +571,6 @@ def ns_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses), distinct, then a per-doc summary agg. Integer arithmetic end
     to end (md5-derived 31-bit hashes), so the oracle is bit-exact."""
     from matt3r_data_ingestion_serverless_spark.functions import hashing, text
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import TOKEN_B
 
     P = hashing.P31
     docs = spread(load_table(spark, sf_dir, "documents"))
@@ -583,7 +582,8 @@ def ns_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def comb(i):
         th = lambda off: F.element_at(F.col("_th"), i + F.lit(off))  # noqa: E731
-        return ((th(0) * TOKEN_B + th(1)) % P * TOKEN_B + th(2)) % P
+        B = hashing.TOKEN_B
+        return ((th(0) * B + th(1)) % P * B + th(2)) % P
 
     grams = F.when(k >= 1, F.transform(F.sequence(F.lit(1), k), comb)).otherwise(
         F.array().cast("array<long>")

@@ -1,71 +1,15 @@
-"""Round-2 batch 40 (this run): the dedup operating curve (pair
-Jaccard histogram) and an embedding-norm hygiene audit.
+"""Round-2 batch 40 (this run): an embedding-norm hygiene audit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# histogram of verified near-dup pair Jaccards (the threshold curve)
-# ---------------------------------------------------------------------------
-
-
-def _jhist_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-b AS (
-  SELECT least(CAST(floor(jaccard * 20) AS BIGINT), 19) AS bin FROM pairs
-),
-h AS (SELECT bin, count(*) AS n FROM b GROUP BY bin)
-SELECT bin,
-       {round6_sql("bin * 0.05")} AS bin_lo,
-       CAST(n AS BIGINT) AS n_pairs,
-       CAST(sum(n) OVER (ORDER BY bin DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS n_pairs_at_or_above
-FROM h
-"""
-
-
-@register("ns_pair_jaccard_histogram", _jhist_sql())
-def ns_pair_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup operating curve: verified near-dup pairs histogrammed
-    by exact Jaccard in 0.05 bins, with the cumulative
-    pairs-at-or-above count read DESCENDING — exactly the table a
-    curator consults to pick the dedup threshold (raise it and this
-    many pairs survive). Bins derive from the already-rounded pair
-    Jaccards by integer floor; the reverse-cumulative window runs on
-    ≤20 rows. Reuses the MinHash-LSH verified pair set — no second
-    similarity pass."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir)
-    b = pairs.select(
-        F.least(F.floor(F.col("jaccard") * 20).cast("long"), F.lit(19)).alias("bin")
-    )
-    h = b.groupBy("bin").agg(F.count("*").alias("n"))
-    cum = F.sum("n").over(
-        Window.orderBy(F.desc("bin")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return h.select(
-        "bin",
-        round6(F.col("bin") * 0.05).alias("bin_lo"),
-        F.col("n").cast("long").alias("n_pairs"),
-        cum.cast("long").alias("n_pairs_at_or_above"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # embedding norm hygiene audit per label

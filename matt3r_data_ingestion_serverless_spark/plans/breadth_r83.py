@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from matt3r_data_ingestion_serverless_spark.functions import hashing
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
@@ -25,12 +26,8 @@ from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, sp
 
 
 def _novelty_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _hashed_shingles_cte,
-    )
-
     return f"""
-WITH {_hashed_shingles_cte()},
+WITH {hashing.hashed_shingles_cte()},
 x AS (SELECT doc_id, unnest(sh) AS g FROM d),
 cnt AS (SELECT g, count(*) AS nd FROM x GROUP BY g),
 per AS (
@@ -59,10 +56,6 @@ def ns_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-join, and a final per-doc aggregate. No pairwise anything — the
     novelty statistic needs only shingle document-frequency, the same
     reusable profile TF-IDF builds."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _with_hashed_shingles,
-    )
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     # materialize the shingle arrays BEFORE exploding: explode over the
     # raw higher-order-function expression re-evaluates the md5
@@ -70,7 +63,7 @@ def ns_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned cost), and AQE coalesces the tiny byte volume to one
     # partition, serializing it too
     d = (
-        _with_hashed_shingles(docs)
+        hashing.with_hashed_shingles(docs)
         .select("doc_id", "sh")
         .localCheckpoint(eager=True)
     )
@@ -187,12 +180,8 @@ _COVER_ROUNDS = 3
 
 
 def _greedy_cover_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _hashed_shingles_cte,
-    )
-
     return f"""
-WITH {_hashed_shingles_cte()},
+WITH {hashing.hashed_shingles_cte()},
 w1 AS (
   SELECT doc_id, sh, len(sh) AS gain FROM d
   ORDER BY gain DESC, doc_id LIMIT 1
@@ -235,10 +224,6 @@ def ns_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold variants cut rescans; the per-round plan (scan + top-1)
     is already the distributed shape they optimize. The oracle unrolls
     the same 3 rounds as chained CTEs."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _with_hashed_shingles,
-    )
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     # LAZY checkpoints throughout the greedy loop (r09's fusion pattern):
     # each checkpoint still truncates the plan (round r scans rem_{r-1},
@@ -247,7 +232,7 @@ def ns_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join read the same cache), but no per-round materialization JOB is
     # launched — the final union drives the whole 3-round cascade.
     rem = (
-        _with_hashed_shingles(docs)
+        hashing.with_hashed_shingles(docs)
         .select("doc_id", F.col("sh").alias("rem"))
         .localCheckpoint(eager=False)
     )

@@ -1,14 +1,12 @@
 """Round-4 batch 14: streamed Wasserstein drift, Markov absorption
-probabilities, ROUGE-2 pair evaluation, and IPW causal estimation.
+probabilities, and IPW causal estimation.
 
-Four operator families: the 12th streamed gate (drift monitoring as an
+Three operator families: the 12th streamed gate (drift monitoring as an
 incrementally-maintained support histogram + a batch CDF sweep),
 bounded-horizon absorption probabilities over the event Markov chain
-(the data-driven conversion-propensity read), clipped-count ROUGE-2
-precision/recall/F1 on the near-dup pairs (the summarization-eval
-metric applied to dedup audit), and inverse-propensity-weighted ATE
-with stratified propensities (the observational-causal estimator that
-adjusts for self-selection).
+(the data-driven conversion-propensity read), and
+inverse-propensity-weighted ATE with stratified propensities (the
+observational-causal estimator that adjusts for self-selection).
 """
 
 from __future__ import annotations
@@ -185,138 +183,6 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return pk.filter(F.col("t") != _ABS_STATE).select(
         F.col("t").alias("state"), round6(F.col("p")).alias("p_convert_r")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ROUGE-2 over near-dup pairs
-# ---------------------------------------------------------------------------
-
-
-def _rouge2_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    return f"""
-WITH pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({_minhash_lsh_sql().strip()})),
-w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-bgx AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, greatest(len(ws) - 1, 0) + 1),
-                               i -> ws[i] || ' ' || ws[i + 1])) AS g
-  FROM w
-),
-bg AS MATERIALIZED (SELECT doc_id, g, count(*) AS n FROM bgx GROUP BY 1, 2),
-tots AS (SELECT doc_id, sum(n) AS total FROM bg GROUP BY 1),
-clip AS (
-  SELECT p.doc_a, p.doc_b, sum(least(ga.n, gb.n)) AS clipped
-  FROM pairs p
-  JOIN bg ga ON ga.doc_id = p.doc_a
-  JOIN bg gb ON gb.doc_id = p.doc_b AND gb.g = ga.g
-  GROUP BY 1, 2
-),
-m AS (
-  SELECT c.doc_a, c.doc_b, c.clipped,
-         ta.total AS total_a, tb.total AS total_b,
-         CAST(c.clipped AS DOUBLE) / tb.total AS prec,
-         CAST(c.clipped AS DOUBLE) / ta.total AS rec
-  FROM clip c
-  JOIN tots ta ON ta.doc_id = c.doc_a
-  JOIN tots tb ON tb.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, clipped,
-       {round6_sql('prec')} AS rouge2_p_r,
-       {round6_sql('rec')} AS rouge2_r_r,
-       {round6_sql('2 * prec * rec / (prec + rec)')} AS rouge2_f1_r
-FROM m
-"""
-
-
-@register("ns_rouge2_neardup_pairs", sql=_rouge2_sql())
-def ns_rouge2_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROUGE-2 with clipped counts over the near-dup candidate pairs
-    (doc_a as reference): precision/recall/F1 on bigram MULTISETS —
-    Σ min(count_a(g), count_b(g)) — which is what separates ROUGE from
-    the set-Jaccard the dedup path already computes (repeated boilerplate
-    bigrams only count up to their reference multiplicity). The standard
-    summarization-eval metric, applied here to audit how much of each
-    near-dup is verbatim n-gram overlap.
-
-    Scale: the bigram stage is computed ONLY for pair-member docs — a
-    broadcast semi-join of the corpus against the (tiny) distinct pair
-    ids — because every downstream join is inner on a pair side; the
-    whole-corpus bigram table the oracle nominally builds is never
-    needed. The clip join then fans out only (pair × shared-gram) rows —
-    pairs come from the LSH band join, never all-pairs. Pairs with zero
-    shared bigrams drop out (inner join), which cannot happen for true
-    near-dups."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    members = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    w = (
-        load_table(spark, sf_dir, "documents")
-        .join(F.broadcast(members), "doc_id", "left_semi")
-        .select("doc_id", F.split("text", " ").alias("ws"))
-    )
-    bg = (
-        w.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, greatest(size(ws) - 1, 0)),"
-                    " i -> concat(ws[i - 1], ' ', ws[i]))"
-                )
-            ).alias("g"),
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    tots = bg.groupBy("doc_id").agg(F.sum("n").alias("total"))
-    ga = bg.select(
-        F.col("doc_id").alias("doc_a"), "g", F.col("n").alias("na")
-    )
-    gb = bg.select(
-        F.col("doc_id").alias("b_id"), F.col("g").alias("gb"), F.col("n").alias("nb")
-    )
-    clip = (
-        pairs.join(ga, "doc_a")
-        .join(gb, (F.col("doc_b") == F.col("b_id")) & (F.col("g") == F.col("gb")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum(F.least("na", "nb")).alias("clipped"))
-    )
-    ta = tots.select(F.col("doc_id").alias("doc_a"), F.col("total").alias("total_a"))
-    tb = tots.select(F.col("doc_id").alias("doc_b"), F.col("total").alias("total_b"))
-    m = (
-        clip.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "clipped",
-            (F.col("clipped").cast("double") / F.col("total_b")).alias("prec"),
-            (F.col("clipped").cast("double") / F.col("total_a")).alias("rec"),
-        )
-    )
-    return m.select(
-        "doc_a",
-        "doc_b",
-        "clipped",
-        round6(F.col("prec")).alias("rouge2_p_r"),
-        round6(F.col("rec")).alias("rouge2_r_r"),
-        round6(
-            2 * F.col("prec") * F.col("rec") / (F.col("prec") + F.col("rec"))
-        ).alias("rouge2_f1_r"),
     )
 
 

@@ -1,8 +1,4 @@
-"""Round-4 batch 18: dup-cluster medoids and Dirichlet query-likelihood
-ranking.
-
-Two operator families: per-cluster medoid election over the near-dup
-components (which copy a dedup pipeline should KEEP) and the classical
+"""Round-4 batch 18: Dirichlet query-likelihood ranking, the classical
 language-model retrieval ranker with Dirichlet smoothing (the third
 lexical ranker beside TF-IDF and BM25).
 """
@@ -15,88 +11,6 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# dup-cluster medoids
-# ---------------------------------------------------------------------------
-
-
-def _medoids_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.curation import (
-        _dup_clusters_ctes,
-    )
-
-    return f"""
-{_dup_clusters_ctes()},
-inc AS (
-  SELECT node, sum(jaccard) AS s FROM (
-    SELECT doc_a AS node, jaccard FROM pairs
-    UNION ALL SELECT doc_b, jaccard FROM pairs
-  ) GROUP BY node
-),
-m AS (
-  SELECT l.cluster_id, l.node, coalesce(inc.s, 0) AS s,
-         count(*) OVER (PARTITION BY l.cluster_id) AS cluster_size,
-         row_number() OVER (
-           PARTITION BY l.cluster_id
-           ORDER BY floor(coalesce(inc.s, 0) * 1e6 + 0.5) DESC, l.node
-         ) AS rk
-  FROM lbl l LEFT JOIN inc ON inc.node = l.node
-)
-SELECT cluster_id, node AS medoid_doc_id, cluster_size,
-       {round6_sql('s')} AS medoid_score_r
-FROM m WHERE rk = 1
-"""
-
-
-@register("ns_dup_cluster_medoids", sql=_medoids_sql())
-def ns_dup_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Medoid election per duplicate cluster: the member with the
-    highest total Jaccard to its verified neighbours (ties → lowest id)
-    — the representative a dedup pipeline KEEPS, chosen as "most
-    central copy" rather than ns_dedup_keep_one's arbitrary-min-id rule.
-    The ranking compares micro-rounded incident sums so a float
-    summation-order ulp can never flip the election.
-
-    Scale: cluster labels come from the iterative min-label components,
-    fed the SAME checkpointed pair table (_dup_clusters_from_pairs) so
-    the MinHash detector runs once, not twice; incident sums are one
-    groupBy over the mirrored edge list; the election is one window
-    over cluster-sized partitions. Nothing rescans the corpus."""
-    from matt3r_data_ingestion_serverless_spark.plans.curation import (
-        _dup_clusters_from_pairs,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
-    lbl = _dup_clusters_from_pairs(pairs.select("doc_a", "doc_b")).select(
-        F.col("doc_id").alias("node"), "cluster_id", "cluster_size"
-    )
-    inc = (
-        pairs.select(F.col("doc_a").alias("node"), "jaccard")
-        .union(pairs.select(F.col("doc_b").alias("node"), "jaccard"))
-        .groupBy("node")
-        .agg(F.sum("jaccard").alias("s"))
-    )
-    m = lbl.join(inc, "node", "left").withColumn(
-        "s", F.coalesce("s", F.lit(0.0))
-    )
-    wr = Window.partitionBy("cluster_id").orderBy(
-        F.desc(F.floor(F.col("s") * 1e6 + 0.5)), F.asc("node")
-    )
-    return (
-        m.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") == 1)
-        .select(
-            "cluster_id",
-            F.col("node").alias("medoid_doc_id"),
-            "cluster_size",
-            round6(F.col("s")).alias("medoid_score_r"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # Dirichlet-smoothed query likelihood

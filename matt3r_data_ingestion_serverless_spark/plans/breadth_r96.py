@@ -1,13 +1,11 @@
-"""Round-4 batch 24: dedup-method agreement, business-day lead times,
-and functional-dependency discovery.
+"""Round-4 batch 24: business-day lead times and functional-dependency
+discovery.
 
-Three operator families: the pairwise agreement matrix between the
-engine's three near-dup detectors (method-comparison eval — which
-pairs do MinHash, SimHash, and exact-prefix matching agree on), lead
-times measured in BUSINESS days (the calendar arithmetic every SLA
-report needs and every engine makes painful), and restricted
-functional-dependency discovery (the Metanome-style A→B violation
-profile that finds broken key assumptions before they break joins).
+Two operator families: lead times measured in BUSINESS days (the
+calendar arithmetic every SLA report needs and every engine makes
+painful), and restricted functional-dependency discovery (the
+Metanome-style A→B violation profile that finds broken key
+assumptions before they break joins).
 """
 
 from __future__ import annotations
@@ -18,81 +16,6 @@ from pyspark.sql import functions as F
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# dedup method agreement
-# ---------------------------------------------------------------------------
-
-
-def _agreement_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _minhash_lsh_sql,
-        _simhash_sql,
-    )
-
-    return f"""
-WITH mh AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM ({_minhash_lsh_sql().strip()})
-),
-sh AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM ({_simhash_sql().strip()})
-),
-mh_n AS (SELECT count(*) AS n FROM mh),
-sh_n AS (SELECT count(*) AS n FROM sh),
-bothp AS (SELECT count(*) AS n FROM mh JOIN sh USING (doc_a, doc_b))
-SELECT mh_n.n AS minhash_pairs, sh_n.n AS simhash_pairs, bothp.n AS agreed_pairs,
-       {round6_sql(
-           'CAST(bothp.n AS DOUBLE) / (mh_n.n + sh_n.n - bothp.n)'
-       )} AS jaccard_agreement_r
-FROM mh_n, sh_n, bothp
-"""
-
-
-@register("ns_dedup_method_agreement", sql=_agreement_sql())
-def ns_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Method-comparison eval: how much do the MinHash-LSH and SimHash
-    near-dup detectors AGREE at the pair level (intersection and
-    Jaccard of their pair sets)? The audit a curation team runs before
-    trusting any single detector — low agreement means the threshold
-    regimes differ (MinHash verifies exact Jaccard ≥ 0.6; SimHash's
-    Hamming ≤ 4 is a looser cosine-ish proxy), so the union/intersection
-    choice changes what gets deduped.
-
-    Scale: both detectors are the existing linear-shuffle band-join
-    plans; the agreement join runs on the PAIR tables (result-sized,
-    tiny)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-        ns_dedup_simhash,
-    )
-
-    mh = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(
-        eager=True
-    )
-    sh = ns_dedup_simhash(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(
-        eager=True
-    )
-    # all three counts in ONE action over the outer-joined pair sets
-    # (pair-table-sized) — not three separate count jobs
-    j = mh.withColumn("_m", F.lit(1)).join(
-        sh.withColumn("_s", F.lit(1)), ["doc_a", "doc_b"], "full_outer"
-    )
-    return j.agg(
-        F.count("_m").alias("minhash_pairs"),
-        F.count("_s").alias("simhash_pairs"),
-        F.count(F.when(F.col("_m").isNotNull() & F.col("_s").isNotNull(), 1)).alias(
-            "agreed_pairs"
-        ),
-    ).select(
-        "minhash_pairs",
-        "simhash_pairs",
-        "agreed_pairs",
-        round6(
-            F.col("agreed_pairs").cast("double")
-            / (F.col("minhash_pairs") + F.col("simhash_pairs") - F.col("agreed_pairs"))
-        ).alias("jaccard_agreement_r"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # business-day lead times

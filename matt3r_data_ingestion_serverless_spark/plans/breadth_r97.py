@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from matt3r_data_ingestion_serverless_spark.functions import hashing
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
@@ -25,13 +26,9 @@ _HEAPS_CPS = (50, 100, 200, 300, 400, 500)
 
 
 def _heaps_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _hashed_shingles_cte,
-    )
-
     cps = ", ".join(str(c) for c in _HEAPS_CPS)
     return f"""
-WITH {_hashed_shingles_cte()},
+WITH {hashing.hashed_shingles_cte()},
 x AS (SELECT doc_id, unnest(sh) AS g FROM d),
 first_seen AS (SELECT g, min(doc_id) AS fd FROM x GROUP BY g),
 tot AS (SELECT doc_id, count(*) AS n_sh FROM x GROUP BY doc_id),
@@ -70,16 +67,12 @@ def ns_shingle_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint curve and the β regression run on the constant
     checkpoint list. The log-log slope folds as sums, identical in
     both engines over exact integer curve points."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _with_hashed_shingles,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     # pin the arrays BEFORE the explode — exploding the raw
     # higher-order expression re-evaluates the md5 transform per
     # output row (the ns_ngram_novelty 89 s pathology)
     d = (
-        _with_hashed_shingles(docs)
+        hashing.with_hashed_shingles(docs)
         .select("doc_id", "sh")
         .localCheckpoint(eager=True)
     )

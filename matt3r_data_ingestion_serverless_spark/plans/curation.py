@@ -1,12 +1,14 @@
 """Corpus-curation queries a large-scale training-data pipeline needs
 beyond per-doc scoring: TF-IDF term weighting, vocabulary statistics,
-train/eval contamination detection, and duplicate-cluster resolution
-(connected components). All operate on the `documents` table and pair
-with exact DuckDB oracles (the CC oracle is a recursive CTE).
+train/eval contamination detection, sketch rollups, embedding
+quantization, heavy hitters and PMI. All operate on the `documents`
+(or `embeddings`) table and pair with exact DuckDB oracles; duplicate
+clusters are in plans/dedup.py.
 
 These extend the north-star set (plans/northstar.py) — same shingle /
-hashing fragments, same cross-engine determinism rules (md5-derived
-hashes, round(…, 6) on every float that reaches the result).
+hashing fragments (functions/hashing.py), same cross-engine
+determinism rules (md5-derived hashes, round(…, 6) on every float that
+reaches the result).
 """
 
 from __future__ import annotations
@@ -14,14 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions import text
-from matt3r_data_ingestion_serverless_spark.operators.iterate import connected_components, mirror
-from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-    JACCARD_DUP,
-    _hashed_shingles_cte,
-    _with_hashed_shingles,
-    _pin,
-)
+from matt3r_data_ingestion_serverless_spark.functions import hashing, text
+from matt3r_data_ingestion_serverless_spark.plans.northstar import _pin
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
@@ -141,7 +137,7 @@ def ns_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ns_contamination_overlap",
     sql=f"""
-WITH {_hashed_shingles_cte()},
+WITH {hashing.hashed_shingles_cte()},
 ev AS (SELECT doc_id, unnest(sh) AS s FROM d WHERE doc_id % {EVAL_MOD} = 0),
 tr AS (SELECT doc_id, unnest(sh) AS s FROM d WHERE doc_id % {EVAL_MOD} != 0),
 hits AS (
@@ -168,7 +164,7 @@ def ns_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     join as ns_ngram_jaccard_topk with stop-shingle (high-df) removal
     to cap posting-list skew."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    d = _pin(_with_hashed_shingles(docs).select("doc_id", "sh"))
+    d = _pin(hashing.with_hashed_shingles(docs).select("doc_id", "sh"))
     ev = (
         d.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select(F.col("doc_id").alias("eval_doc_id"), F.explode("sh").alias("s"))
@@ -186,179 +182,8 @@ def ns_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# duplicate-cluster resolution: connected components over near-dup pairs
-# ---------------------------------------------------------------------------
-
-
-def _dup_clusters_ctes() -> str:
-    """Shared recursive-CTE prefix: near-dup pairs → undirected edges →
-    transitive closure → min-reachable-id labels (`lbl(node,
-    cluster_id)`). Callers append their own final SELECT (and any extra
-    CTEs, prefixed with a comma)."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import _minhash_lsh_sql
-
-    pairs = _minhash_lsh_sql().strip()
-    return f"""
-WITH RECURSIVE pairs AS ({pairs}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.node
-),
-lbl AS (
-  SELECT node, least(min(r), node) AS cluster_id
-  FROM reach GROUP BY node
-)"""
-
-
-def _dup_clusters_sql() -> str:
-    # undirected transitive closure by recursive CTE, then min reachable
-    # id per node = cluster id (DuckDB explores the closure; fine at
-    # oracle scale — the Spark side is the one that must scale)
-    return f"""
-{_dup_clusters_ctes()}
-SELECT node AS doc_id, cluster_id,
-       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM lbl
-"""
-
-
-@register("ns_dup_clusters", sql=_dup_clusters_sql())
-def ns_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resolve near-dup PAIRS (MinHash-LSH verified, Jaccard ≥ {j}) into
-    duplicate CLUSTERS: each document labeled with the min doc_id
-    reachable through the dup graph (connected components), plus the
-    cluster size — the unit a dedup pipeline keeps one representative
-    from.
-
-    Scale: iterative min-label propagation with pointer jumping
-    (operators/iterate.py:connected_components) — per round one shuffle
-    join on the edge list + one hash agg; dup clusters are shallow
-    (pairwise-similar groups → diameter ≤ ~2), so 2–4 rounds suffice."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        ns_dedup_minhash_lsh,
-    )
-
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    return _dup_clusters_from_pairs(pairs)
-
-
-def _dup_clusters_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Connected-components labeling from an explicit verified-pair
-    table — the reusable tail of ns_dup_clusters. Callers that ALSO
-    need the pair set (modularity Q, medoid election) pass their
-    already-checkpointed pairs here instead of re-running the whole
-    MinHash detector a second time inside ns_dup_clusters."""
-    # eager checkpoint (not lazy persist): every propagation round joins
-    # edges; materializing once up front keeps the LSH pipeline out of
-    # round-1's plan and feeds AQE real edge stats (same rationale as
-    # graph_pagerank, measured 1.9 s → ~1.7 s at sf0.1; keep_one's
-    # composite drops 2.0 s → 1.6 s). `mirror` plans `pairs` once, so an
-    # unpinned detector output runs once inside the checkpoint.
-    edges = mirror(pairs.toDF("src", "dst")).localCheckpoint(eager=True)
-    labels = connected_components(
-        edges.select(F.col("src").alias("node")).distinct(), edges
-    )
-    w = Window.partitionBy("cluster_id")
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        "cluster_id",
-        F.count("*").over(w).alias("cluster_size"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # sketch-based estimation
 # ---------------------------------------------------------------------------
-
-
-def _minhash_est_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.functions import hashing
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _jaccard_sql,
-        _minhash_band_structs_sql,
-    )
-
-    sig = hashing.minhash_from_hashes_sql("sh")
-    n = hashing.N_MINHASHES
-    return f"""
-WITH {_hashed_shingles_cte()},
-s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({_minhash_band_structs_sql()}, recursive := true) FROM s),
-cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
-                           AND a.doc_id < b.doc_id)
-SELECT doc_a, doc_b,
-       round(len(list_filter(range(1, {n} + 1),
-             i -> sa.sig[i] = sb.sig[i]))::DOUBLE / {n}, 6) AS est_jaccard,
-       round({_jaccard_sql('sa.sh', 'sb.sh')}, 6) AS exact_jaccard
-FROM cand JOIN s sa ON doc_a = sa.doc_id
-          JOIN s sb ON doc_b = sb.doc_id
-"""
-
-
-@register("ns_minhash_jaccard_est", sql=_minhash_est_sql())
-def ns_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based similarity ESTIMATION: for every LSH candidate pair,
-    the MinHash estimate of Jaccard (fraction of agreeing signature
-    components) side by side with the exact value — the measured
-    sketch-accuracy contract a pipeline relies on when it skips exact
-    verification at scale.
-
-    Scale: signatures are {n}×8 bytes per doc regardless of doc length,
-    so the estimate join moves sketch bytes, not shingle sets — at
-    100 TB the exact column here is the audit; production reads only
-    `est_jaccard`. Candidate generation shares the banded-LSH shape of
-    ns_dedup_minhash_lsh (linear shuffle, bounded buckets)."""
-    from matt3r_data_ingestion_serverless_spark.functions import hashing
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _jaccard,
-        _minhash_band_structs_expr,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = _with_hashed_shingles(docs).select("doc_id", "sh")
-    s = _pin(
-        d.select(
-            "doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig")
-        )
-    )
-    bk = s.select(
-        "doc_id", F.explode(_minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("sig").alias("sig_a"))
-    sb = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"), F.col("sig").alias("sig_b"))
-    n_eq = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(n_eq / hashing.N_MINHASHES, 6).alias("est_jaccard"),
-            F.round(_jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("exact_jaccard"),
-        )
-    )
 
 
 @register(
@@ -669,35 +494,4 @@ def ns_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cab").cast("long").alias("n_docs_both"),
             F.round(pmi, 6).alias("pmi"),
         )
-    )
-
-
-def _cluster_hist_sql() -> str:
-    return f"""
-{_dup_clusters_ctes()},
-cl AS (
-  SELECT cluster_id, count(*) AS cluster_size
-  FROM lbl GROUP BY cluster_id
-)
-SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
-       count(*) AS n_clusters
-FROM cl GROUP BY cluster_size
-"""
-
-
-@register("cluster_size_histogram", sql=_cluster_hist_sql())
-def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution of duplicate-cluster sizes — the dedup-health
-    metric: a heavy tail here means boilerplate/template contamination
-    (huge clusters), a flat 2-spike means true near-dup pairs. Pure
-    counts over the connected-components labels.
-
-    Scale: two tiny aggs on the pairs-sized label table; the corpus
-    never re-enters."""
-    from matt3r_data_ingestion_serverless_spark.plans.curation import ns_dup_clusters
-
-    labels = ns_dup_clusters(spark, sf_dir)
-    cl = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return cl.groupBy(F.col("cluster_size").cast("long").alias("cluster_size")).agg(
-        F.count("*").alias("n_clusters")
     )

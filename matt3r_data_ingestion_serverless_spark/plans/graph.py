@@ -1,6 +1,6 @@
 """The graph query domain: traversal, centrality, triangle structure,
 peeling, matching and link prediction over the near-dup graph (the
-verified MinHash-LSH pairs of plans/northstar.py), each graded against
+verified MinHash-LSH pairs of plans/dedup.py), each graded against
 a DuckDB oracle that derives the same graph from the documents.
 graph_link_prediction runs on the lineitem part co-purchase graph
 instead.
@@ -21,9 +21,9 @@ from matt3r_data_ingestion_serverless_spark.operators.iterate import (
     frontier_loop,
     mirror,
 )
-from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
-from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-    _minhash_lsh_sql,
+from matt3r_data_ingestion_serverless_spark.plans.dedup import (
+    dup_clusters_ctes,
+    minhash_lsh_sql,
     ns_dedup_minhash_lsh,
 )
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
@@ -78,7 +78,7 @@ _BFS_MAX_HOPS = 4
 
 
 def _bfs_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     return f"""
 WITH RECURSIVE pairs AS ({pairs}),
 edges AS (
@@ -151,7 +151,7 @@ def _weighted_edges(spark: SparkSession, sf_dir: str, *, mirrored: bool) -> Data
 
 def _sssp_sql() -> str:
     return f"""
-WITH RECURSIVE pairs AS ({_minhash_lsh_sql().strip()}),
+WITH RECURSIVE pairs AS ({minhash_lsh_sql().strip()}),
 e0 AS (SELECT doc_a AS src, doc_b AS dst, {_W_SQL} AS w FROM pairs),
 edges AS (SELECT src, dst, w FROM e0 UNION ALL SELECT dst, src, w FROM e0),
 seed AS (SELECT min(src) AS s FROM edges),
@@ -210,7 +210,7 @@ def graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _topo_sql() -> str:
     return f"""
-WITH RECURSIVE pairs AS ({_minhash_lsh_sql().strip()}),
+WITH RECURSIVE pairs AS ({minhash_lsh_sql().strip()}),
 edges AS (SELECT doc_a AS src, doc_b AS dst, {_W_SQL} AS w FROM pairs),
 nodes AS (SELECT doc_a AS n FROM pairs UNION SELECT doc_b FROM pairs),
 walk(node, dist, lvl) AS (
@@ -273,7 +273,7 @@ _BIP_HOPS = 6
 
 def _bipartite_sql() -> str:
     return f"""
-WITH RECURSIVE pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()}),
+WITH RECURSIVE pairs AS MATERIALIZED ({minhash_lsh_sql().strip()}),
 edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION SELECT doc_b, doc_a FROM pairs
@@ -338,7 +338,7 @@ _PR_ITERS = 3
 
 
 def _pagerank_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     it = """
 r{k} AS (
   SELECT e.t AS node,
@@ -411,7 +411,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangles_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
 e AS (SELECT doc_a AS s, doc_b AS t FROM pairs)
@@ -437,7 +437,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hits_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
 edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs),
@@ -534,7 +534,7 @@ def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _clustering_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
 e AS (SELECT doc_a AS s, doc_b AS t FROM pairs),
@@ -596,7 +596,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triads_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
 und AS (
@@ -658,7 +658,7 @@ _TRUSS_K = 3  # keep edges in ≥ k-2 = 1 triangle
 def _ktruss_sql() -> str:
     return f"""
 WITH e AS MATERIALIZED (
-  SELECT doc_a AS a, doc_b AS b FROM ({_minhash_lsh_sql().strip()})
+  SELECT doc_a AS a, doc_b AS b FROM ({minhash_lsh_sql().strip()})
 ),
 tri AS (
   -- oriented wedge (a<b<c) closed by (a,c): each triangle found once
@@ -719,7 +719,7 @@ _PEEL_ROUNDS = 4
 
 
 def _kcore_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     # every CTE is MATERIALIZED: each round names the previous alive set
     # four times, and DuckDB would otherwise re-expand the whole LSH
     # pipeline at every reference (exponential in the rounds; it ran out
@@ -804,7 +804,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assortativity_sql() -> str:
-    pairs = _minhash_lsh_sql().strip()
+    pairs = minhash_lsh_sql().strip()
     return f"""
 WITH pairs AS ({pairs}),
 edges AS (
@@ -888,7 +888,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _powerlaw_sql() -> str:
     return f"""
-WITH pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()}),
+WITH pairs AS MATERIALIZED ({minhash_lsh_sql().strip()}),
 deg AS (
   SELECT node, count(*) AS d FROM (
     SELECT doc_a AS node FROM pairs UNION ALL SELECT doc_b FROM pairs
@@ -930,7 +930,7 @@ def graph_powerlaw_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _modularity_sql() -> str:
     return f"""
-{_dup_clusters_ctes()},
+{dup_clusters_ctes()},
 deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src),
 m AS (SELECT count(*) // 2 AS m FROM edges),
 dc AS (
@@ -1001,7 +1001,7 @@ def _matching_sql() -> str:
     # inlining planner would otherwise re-evaluate the whole minhash
     # pipeline 3^rounds times
     ctes = [
-        f"pairs AS MATERIALIZED ({_minhash_lsh_sql().strip()})",
+        f"pairs AS MATERIALIZED ({minhash_lsh_sql().strip()})",
         f"e0 AS MATERIALIZED (SELECT doc_a, doc_b, {_ORD_SQL} AS ord FROM pairs)",
     ]
     sel = []

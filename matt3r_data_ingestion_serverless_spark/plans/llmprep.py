@@ -1,12 +1,12 @@
-"""LLM training-data preparation breadth: PII masking, cluster-dedup
-corpus compaction, SCD2 dimension history, and document chunking —
-both pure-Catalyst and Python-UDTF implementations of the chunker.
+"""LLM training-data preparation breadth: PII masking, SCD2 dimension
+history, and document chunking — both pure-Catalyst and Python-UDTF
+implementations of the chunker.
 
 These extend the north-star curation set (plans/curation.py) with the
 remaining pipeline stages a 100 TB pretraining-data build runs between
-raw crawl and tokenizer: redact identifiers, drop near-duplicate
-documents keeping one representative per cluster, and split long
-documents into fixed-token training chunks.
+raw crawl and tokenizer: redact identifiers and split long documents
+into fixed-token training chunks (keep-one near-dup compaction is
+ns_dedup_keep_one in plans/dedup.py).
 """
 
 from __future__ import annotations
@@ -61,55 +61,6 @@ def ns_pii_mask_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace(F.col("props"), num, "#").alias("props_redacted"),
             F.regexp_count(F.col("props"), F.lit(num)).cast("long").alias("n_redactions"),
             F.sha2(F.col("c_name"), 256).alias("owner_digest"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# cluster-dedup corpus compaction: keep one representative per dup
-# cluster, preserving the merge count for provenance
-# ---------------------------------------------------------------------------
-
-
-def _keep_one_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
-
-    return f"""
-{_dup_clusters_ctes()},
-cl AS (
-  SELECT node AS doc_id, cluster_id,
-         count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-  FROM lbl
-)
-SELECT d.doc_id, d.source,
-       CAST(coalesce(cl.cluster_size, 1) AS BIGINT) AS n_merged
-FROM documents d
-LEFT JOIN cl ON d.doc_id = cl.doc_id
-WHERE cl.doc_id IS NULL OR cl.doc_id = cl.cluster_id
-"""
-
-
-@register("ns_dedup_keep_one", sql=_keep_one_sql())
-def ns_dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus compaction after duplicate-cluster resolution: every
-    document outside a dup cluster survives; inside a cluster only the
-    min-id representative survives, annotated with how many documents
-    it absorbed (`n_merged`) — the provenance a dedup pipeline keeps.
-
-    Scale: the cluster table is pairs-sized (≪ corpus — only docs that
-    collided in LSH), so both the representative filter and the
-    corpus join broadcast; the full corpus is scanned exactly once."""
-    from matt3r_data_ingestion_serverless_spark.plans.curation import ns_dup_clusters
-
-    clusters = ns_dup_clusters(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.join(F.broadcast(clusters), "doc_id", "left")
-        .filter(F.col("cluster_id").isNull() | (F.col("doc_id") == F.col("cluster_id")))
-        .select(
-            "doc_id",
-            "source",
-            F.coalesce(F.col("cluster_size"), F.lit(1)).cast("long").alias("n_merged"),
         )
     )
 

@@ -1,6 +1,7 @@
-"""North-star extension queries (SURVEY §7.2 M5): deduplication,
-similarity search and text analysis over the ``documents`` /
-``embeddings`` tables (the multimodal queries are in plans/multimodal.py).
+"""North-star extension queries (SURVEY §7.2 M5): similarity search
+and text analysis over the ``documents`` / ``embeddings`` tables (the
+deduplication queries are in plans/dedup.py, the multimodal queries in
+plans/multimodal.py).
 
 These have no counterpart in the reference (it is a telemetry ETL —
 parse_canserver_filtered_log.py decodes CAN frames, nothing touches
@@ -8,17 +9,15 @@ text or vectors); they are the training-data-pipeline surface a 100 TB
 engine needs. Every query is pure DataFrame/Catalyst code.
 
 Scale design, per query family:
-- exact dedup: one hash-groupBy shuffle on a 16-byte key; map-side
-  partial aggregation applies. At 100 TB this is the cheapest possible
-  full-corpus pass.
-- MinHash-LSH / SimHash / SRP near-dup: the candidate join is on
-  (band, key) — cardinality ~n_bands × n_docs, bucket sizes are small
-  by construction, so the shuffle is narrow and the quadratic work is
-  confined to within-bucket pairs. Exact verification (Jaccard /
-  cosine / Hamming) runs only on candidates. No O(n²) stage anywhere.
-- brute-force similarity baselines: the query set is a small filtered
-  subset that Catalyst broadcast-joins against the corpus — the corpus
-  is scanned once, never shuffled.
+- shingle Jaccard top-k and containment: an inverted-index or LSH band
+  join, so only documents sharing a shingle or a band key are scored.
+- embedding near-dup (SRP-LSH): the candidate join is on (band, key) —
+  cardinality ~n_bands × n_docs, bucket sizes are small by
+  construction, so the shuffle is narrow and exact cosine runs only on
+  candidates. No O(n²) stage anywhere.
+- brute-force similarity baselines and ANN (IVF, PQ): the query set is
+  a small filtered subset that Catalyst broadcast-joins against the
+  corpus — the corpus is scanned once, never shuffled.
 - text analysis: per-row column expressions only (no shuffle at all
   until the final small aggregate, if any).
 """
@@ -33,100 +32,7 @@ from matt3r_data_ingestion_serverless_spark.functions import hashing, text, vect
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 
-# ---------------------------------------------------------------------------
-# shared shingle/signature fragments (Spark + DuckDB twins)
-# ---------------------------------------------------------------------------
-
-SHINGLE_N = 3  # word n-gram width for near-dup shingling
-JACCARD_DUP = 0.8  # verified near-duplicate threshold (planted pairs ≥ 0.9)
 COSINE_DUP = 0.4  # embedding near-dup threshold (top pairs ≈ 0.4–0.51)
-SIMHASH_MAX_HAM = 4  # max Hamming distance for simhash near-dups
-MINHASH_BANDS, MINHASH_ROWS = 4, 4  # 16 minhashes → 4 bands of 4
-
-
-# rolling-combine base for integer shingle hashing; intermediates stay
-# under 2^63: (h % P31)·B ≈ 2³¹·10⁶ ≈ 2·10¹⁵
-TOKEN_B = 1_000_003
-
-
-def _with_hashed_shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach ``sh``: distinct integer 3-gram shingle hashes.
-
-    Each TOKEN is md5'd once (mod P31); a shingle hash is the rolling
-    combine of its 3 token hashes — no n-gram strings are ever built and
-    md5 runs once per token instead of once per (longer) shingle. All
-    downstream set ops (Jaccard), the minhash fold, and the simhash
-    accumulators consume these 8-byte ints. Collisions at 2³¹ over ~10²
-    shingles/doc are negligible and, being md5-derived, identical in
-    the oracle."""
-    # Built as TWO SQL strings parsed JVM-side: the Column-builder
-    # version of this function cost ~0.42 s of py4j round-trips per plan
-    # construction (measured) — pure driver overhead billed to every
-    # timed sample of every shingle-based query. Expressions identical.
-    P = hashing.P31
-    th = (
-        f"transform(split(lower({text_col}), ' '), "
-        f"t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) % {P}L)"
-    )
-    comb = (
-        f"((element_at(_th, i) * {TOKEN_B}L + element_at(_th, i + 1)) % {P}L"
-        f" * {TOKEN_B}L + element_at(_th, i + 2)) % {P}L"
-    )
-    sh = (
-        f"array_distinct(CASE WHEN size(_th) - {SHINGLE_N - 1} >= 1 "
-        f"THEN transform(sequence(1, size(_th) - {SHINGLE_N - 1}), i -> {comb}) "
-        f"ELSE CAST(array() AS ARRAY<BIGINT>) END)"
-    )
-    return df.withColumn("_th", F.expr(th)).withColumn("sh", F.expr(sh)).drop("_th")
-
-
-def _hashed_shingles_cte(table: str = "documents") -> str:
-    """CTE pair `th, d` producing d(doc_id, sh) — the oracle twin of
-    _with_hashed_shingles."""
-    P = hashing.P31
-    th = (
-        f"list_transform({text.tokens_sql('text')}, "
-        f"t -> ({hashing.md5_hash64_sql('t')}) % {P})"
-    )
-    comb = f"(((th[i] * {TOKEN_B} + th[i+1]) % {P}) * {TOKEN_B} + th[i+2]) % {P}"
-    return (
-        f"th AS (SELECT doc_id, {th} AS th FROM {table}),\n"
-        f"d AS (SELECT doc_id, list_distinct(list_transform("
-        f"range(1, greatest(len(th) - {SHINGLE_N - 1}, 0) + 1), i -> {comb})) AS sh FROM th)"
-    )
-
-
-def _jaccard(a, b):
-    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
-
-
-def _jaccard_sql(a: str, b: str) -> str:
-    return (
-        f"len(list_intersect({a}, {b}))::DOUBLE"
-        f" / len(list_distinct(list_concat({a}, {b})))"
-    )
-
-
-def _minhash_band_structs(sig):
-    """(band, key) structs: key = '-'-joined minhash values of the band."""
-    bands = []
-    for b in range(MINHASH_BANDS):
-        band = F.slice(sig, b * MINHASH_ROWS + 1, MINHASH_ROWS)
-        key = F.concat_ws("-", F.transform(band, lambda x: x.cast("string")))
-        bands.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return F.array(*bands)
-
-
-def _minhash_band_structs_expr(sig_expr: str):
-    """SQL-string twin of :func:`_minhash_band_structs` (~2 ms to build
-    instead of ~0.22 s of py4j round-trips; identical expression)."""
-    parts = ", ".join(
-        f"named_struct('band', {b}, 'key', concat_ws('-', "
-        f"transform(slice({sig_expr}, {b * MINHASH_ROWS + 1}, {MINHASH_ROWS}), "
-        f"x -> CAST(x AS STRING))))"
-        for b in range(MINHASH_BANDS)
-    )
-    return F.expr(f"array({parts})")
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -138,172 +44,12 @@ def _pin(df: DataFrame) -> DataFrame:
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def _minhash_band_structs_sql() -> str:
-    parts = [
-        f"{{'band': {b}, 'key': array_to_string("
-        f"list_slice(sig, {b * MINHASH_ROWS + 1}, {(b + 1) * MINHASH_ROWS}), '-')}}"
-        for b in range(MINHASH_BANDS)
-    ]
-    return "[" + ", ".join(parts) + "]"
-
-
-# ---------------------------------------------------------------------------
-# deduplication
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "ns_dedup_exact",
-    sql="""
-SELECT md5(text) AS content_hash,
-       min(doc_id) AS keep_doc_id,
-       count(*) AS n_copies
-FROM documents
-GROUP BY md5(text)
-""",
-)
-def ns_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on md5(text), keep the min doc_id per
-    content hash. One narrow shuffle on a 16-byte key; at 100 TB the
-    map-side partial agg collapses each partition's dups first."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return (
-        docs.groupBy(F.md5("text").alias("content_hash"))
-        .agg(F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies"))
-    )
-
-
-def _minhash_lsh_sql() -> str:
-    sig = hashing.minhash_from_hashes_sql("sh")
-    return f"""
-WITH {_hashed_shingles_cte()},
-s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({_minhash_band_structs_sql()}, recursive := true) FROM s),
-cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
-                           AND a.doc_id < b.doc_id),
-v AS (SELECT doc_a, doc_b,
-             round({_jaccard_sql('da.sh', 'db.sh')}, 6) AS jaccard
-      FROM cand JOIN d da ON doc_a = da.doc_id
-                JOIN d db ON doc_b = db.doc_id)
-SELECT doc_a, doc_b, jaccard FROM v WHERE jaccard >= {JACCARD_DUP}
-"""
-
-
-@register("ns_dedup_minhash_lsh", sql=_minhash_lsh_sql())
-def ns_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup: 3-gram shingles → 16 minhashes → 4 bands of
-    4 → bucket self-join → exact-Jaccard verification of candidates.
-
-    Scale: the self-join key (band, band_key) has ~4n rows with tiny
-    buckets, so the shuffle is linear and within-bucket pair expansion
-    is bounded; exact Jaccard touches only candidates. Signature
-    computation is pure higher-order functions (no UDF, no shuffle)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = _with_hashed_shingles(docs).select("doc_id", "sh")
-    # pin shingles+signature together: band explode AND the verify
-    # join-back both read this one cached stage
-    s = _pin(d.select("doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig")))
-    bk = s.select(
-        "doc_id", F.explode(_minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    da = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    db = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(_jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_DUP)
-    )
-
-
-def _simhash_sql() -> str:
-    fp = hashing.simhash_fingerprint_sql("sh")
-    # 4 byte-wide bands over the 32-bit fingerprint for candidate blocking
-    bands = ", ".join(
-        f"{{'band': {b}, 'key': (fp >> {b * 8}) & 255}}" for b in range(4)
-    )
-    return f"""
-WITH {_hashed_shingles_cte()},
-f AS (SELECT doc_id, {fp} AS fp FROM d),
-bk AS (SELECT doc_id, fp, unnest([{bands}], recursive := true) FROM f),
-cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                a.fp AS fp_a, b.fp AS fp_b
-         FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
-                           AND a.doc_id < b.doc_id)
-SELECT doc_a, doc_b, bit_count(xor(fp_a, fp_b)) AS hamming
-FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= {SIMHASH_MAX_HAM}
-"""
-
-
-@register("ns_dedup_simhash", sql=_simhash_sql())
-def ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: 32-bit fingerprint over shingle hashes, blocked
-    on the 4 fingerprint bytes, Hamming ≤ 4 verification. Same
-    linear-shuffle/bounded-bucket shape as the MinHash path — standard
-    simhash byte-block trick (any pair within Hamming 3 shares a byte;
-    at 4 the extreme 1-bit-per-band spread is missed — documented LSH
-    recall trade-off, identical in the oracle)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = _with_hashed_shingles(docs).select("doc_id", "sh")
-    f_ = _pin(
-        d.select("doc_id", hashing.simhash_fingerprint_expr("sh").alias("fp"))
-    )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("fp", b * 8).bitwiseAND(F.lit(255)).alias("key"),
-            )
-            for b in range(4)
-        ]
-    )
-    bk = f_.select("doc_id", "fp", F.explode(bands).alias("bk")).select(
-        "doc_id", "fp", "bk.band", "bk.key"
-    )
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return cand.select("doc_a", "doc_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= SIMHASH_MAX_HAM
-    )
-
-
 def _ngram_topk_sql() -> str:
     return f"""
-WITH {_hashed_shingles_cte()},
+WITH {hashing.hashed_shingles_cte()},
 q AS (SELECT doc_id AS query_id, sh AS qsh FROM d WHERE doc_id % 100 = 0),
 scored AS (SELECT query_id, d.doc_id AS match_id,
-                  round({_jaccard_sql('qsh', 'd.sh')}, 6) AS jaccard
+                  round({hashing.jaccard_sql('qsh', 'd.sh')}, 6) AS jaccard
            FROM q JOIN d ON d.doc_id != query_id),
 ranked AS (SELECT *, row_number() OVER
              (PARTITION BY query_id ORDER BY jaccard DESC, match_id) AS rank
@@ -321,7 +67,7 @@ def ns_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup path."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     d = _pin(
-        _with_hashed_shingles(docs)
+        hashing.with_hashed_shingles(docs)
         .select("doc_id", "sh")
         .withColumn("n_sh", F.size("sh"))
     )
@@ -898,9 +644,9 @@ def _containment_sql() -> str:
     sig = hashing.minhash_from_hashes_sql("sh")
     inter = "len(list_intersect(da.sh, db.sh))::DOUBLE"
     return f"""
-WITH {_hashed_shingles_cte()},
+WITH {hashing.hashed_shingles_cte()},
 s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({_minhash_band_structs_sql()}, recursive := true) FROM s),
+bk AS (SELECT doc_id, unnest({hashing.minhash_band_structs_sql()}, recursive := true) FROM s),
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
                            AND a.doc_id < b.doc_id),
@@ -926,12 +672,12 @@ def ns_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band shuffle); only the verification formula differs, computed on
     the same pinned shingle relation."""
     docs = spread(load_table(spark, sf_dir, "documents"))
-    d = _with_hashed_shingles(docs).select("doc_id", "sh")
+    d = hashing.with_hashed_shingles(docs).select("doc_id", "sh")
     s = _pin(
         d.select("doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig"))
     )
     bk = s.select(
-        "doc_id", F.explode(_minhash_band_structs_expr("sig")).alias("bk")
+        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
     ).select("doc_id", "bk.band", "bk.key")
     a, b = bk.alias("a"), bk.alias("b")
     cand = (

@@ -1,14 +1,14 @@
-"""Modern Spark-SQL surface parity: recursive CTEs, the VARIANT type,
-and ordered string aggregation — features a user migrating FROM a
+"""Modern Spark-SQL surface parity: the VARIANT type and ordered
+string aggregation — features a user migrating FROM a
 hand-rolled pipeline TO this engine gets for free from the SQL layer,
 each pinned against a DuckDB oracle.
 
 The reference parses its JSON payloads with json.loads in Python
 (infer_stationary_states.py:63, infer_autopilot_states.py:52); the
 VARIANT query shows the engine-native replacement (binary-encoded JSON,
-typed extraction, no Python). The recursive CTE runs the SAME
-transitive-closure the iterative DataFrame loop in plans/curation.py
-runs — two engine paths, one semantics, one oracle.
+typed extraction, no Python). The recursive-CTE connected components
+(sql_recursive_components) live with the dedup domain in
+plans/dedup.py.
 """
 
 from __future__ import annotations
@@ -18,73 +18,6 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-
-def _components_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.curation import _dup_clusters_ctes
-
-    return f"""
-{_dup_clusters_ctes()}
-SELECT node AS doc_id, cluster_id,
-       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM lbl
-"""
-
-
-@register("sql_recursive_components", sql=_components_sql())
-def sql_recursive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via Spark's native WITH RECURSIVE (4.0+) —
-    the declarative twin of ns_dup_clusters' iterative min-label loop.
-    The LSH near-dup pairs are computed by the DataFrame plan, exposed
-    as a temp view, and the closure + min-reachable-label runs entirely
-    in SQL, matching the DuckDB oracle's recursive CTE shape.
-
-    Scale: each recursion step is one shuffle join (frontier × edges),
-    exactly what the manual loop issues. Spark (4.1) only supports
-    UNION ALL recursion — no cross-step dedup — so an undirected
-    closure must be DEPTH-BOUNDED to terminate: dup-cluster graphs are
-    near-cliques (every surviving pair passed a Jaccard check), so
-    diameter ≤ {cap} hops reaches the whole component; the per-step
-    DISTINCT bounds the frontier and the final GROUP BY collapses the
-    multi-path duplicates. For deep/chain-shaped graphs use the
-    iterative min-label loop (ns_dup_clusters), which converges by
-    fixed point instead of depth."""
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _pin,
-        ns_dedup_minhash_lsh,
-    )
-
-    # Pin the pair list before recursing: the recursive plan references
-    # `edges` once per iteration, and without materialization each
-    # iteration would re-run the whole MinHash-LSH pipeline upstream
-    # (measured 2.9 s → 2.4 s at sf0.1; the remainder is the per-step
-    # shuffle cost of the recursion itself). At scale this is the
-    # materialized edge-list table any CC job starts from.
-    pairs = _pin(ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"))
-    pairs.createOrReplaceTempView("dup_pairs_v")
-    return spark.sql(
-        """
-WITH RECURSIVE
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs_v
-  UNION SELECT doc_b, doc_a FROM dup_pairs_v
-),
-reach AS (
-  SELECT src AS node, dst AS r, 1 AS depth FROM edges
-  UNION ALL
-  SELECT DISTINCT e.src, reach.r, reach.depth + 1
-  FROM edges e JOIN reach ON e.dst = reach.node
-  WHERE reach.depth < 4
-),
-lbl AS (
-  SELECT node, least(min(r), node) AS cluster_id
-  FROM reach GROUP BY node
-)
-SELECT node AS doc_id, cluster_id,
-       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM lbl
-"""
-    )
 
 
 @register(

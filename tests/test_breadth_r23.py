@@ -7,7 +7,6 @@ from collections import defaultdict
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r23 import (
     data_completeness_grid,
-    ns_lsh_bucket_stats,
     sql_named_window,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
@@ -62,44 +61,3 @@ def test_named_window_top100_matches_python(spark):
         assert r.spend_rank == i + 1
         assert r.next_lower_cents == prev_cents, ck  # lag in DESC order
         prev_cents = cents
-
-
-def test_lsh_bucket_stats_consistent_with_banding(spark):
-    from matt3r_data_ingestion_serverless_spark.functions import hashing
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _minhash_band_structs,
-        _with_hashed_shingles,
-    )
-    from matt3r_data_ingestion_serverless_spark.sources.tables import spread
-    from pyspark.sql import functions as F
-
-    docs = spread(load_table(spark, SF_SMOKE, "documents"))
-    d = _with_hashed_shingles(docs).select("doc_id", "sh")
-    s = d.select("doc_id", hashing.minhash_from_hashes(F.col("sh")).alias("sig"))
-    bk = (
-        s.select("doc_id", F.explode(_minhash_band_structs(F.col("sig"))).alias("bk"))
-        .select("doc_id", "bk.band", "bk.key")
-        .collect()
-    )
-    buckets = defaultdict(int)
-    for r in bk:
-        buckets[(r.band, r.key)] += 1
-    per_band = defaultdict(lambda: [0, 0, 0, 0, 0])  # n, max, colliding, pairs, mass
-    for (band, _), sz in buckets.items():
-        c = per_band[band]
-        c[0] += 1
-        c[1] = max(c[1], sz)
-        c[2] += 1 if sz > 1 else 0
-        c[3] += sz * (sz - 1) // 2
-        c[4] += sz
-    got = {r.band: r for r in ns_lsh_bucket_stats(spark, SF_SMOKE).collect()}
-    assert set(got) == set(per_band)
-    for band, (n, mx, coll, pairs, mass) in per_band.items():
-        r = got[band]
-        assert (r.n_buckets, r.max_bucket, r.colliding_buckets, r.candidate_pairs) == (
-            n,
-            mx,
-            coll,
-            pairs,
-        ), band
-        assert abs(r.avg_bucket - _round6(mass / n)) < 1e-12

@@ -152,7 +152,7 @@ def test_winnow_fingerprints_matches_python(spark):
         _WINNOW_W,
         ns_winnow_fingerprints,
     )
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import TOKEN_B
+    from matt3r_data_ingestion_serverless_spark.functions.hashing import TOKEN_B
     import hashlib
 
     def h64(t: str) -> int:
@@ -187,7 +187,7 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
         _WINNOW_K,
         _WINNOW_W,
     )
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import TOKEN_B
+    from matt3r_data_ingestion_serverless_spark.functions.hashing import TOKEN_B
     import hashlib
 
     def fps_of(txt: str) -> set:

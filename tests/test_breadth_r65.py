@@ -3,35 +3,15 @@
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import defaultdict
 
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r65 import (
-    ns_embedding_norm_audit,
-    ns_pair_jaccard_histogram,
-)
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
+from matt3r_data_ingestion_serverless_spark.plans.breadth_r65 import ns_embedding_norm_audit
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 
 def _round6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
-def test_jaccard_histogram_matches_pairs(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    bins = Counter(min(int(math.floor(p.jaccard * 20)), 19) for p in pairs)
-    got = {r.bin: r for r in ns_pair_jaccard_histogram(spark, SF_SMOKE).collect()}
-    assert set(got) == set(bins)
-    cum = 0
-    for b in sorted(bins, reverse=True):
-        cum += bins[b]
-        r = got[b]
-        assert r.n_pairs == bins[b]
-        assert r.n_pairs_at_or_above == cum
-        assert abs(r.bin_lo - _round6(b * 0.05)) <= 1e-6
-    # the lowest bin's cumulative equals the total pair count
-    assert max(r.n_pairs_at_or_above for r in got.values()) == len(pairs)
 
 
 def test_norm_audit_matches_python(spark):

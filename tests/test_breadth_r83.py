@@ -14,9 +14,7 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r83 import (
     ns_ngram_novelty,
     ns_prefix_cache_lcp,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-    _with_hashed_shingles,
-)
+from matt3r_data_ingestion_serverless_spark.functions.hashing import with_hashed_shingles
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 from tests.conftest import SF_SMOKE
 
@@ -25,7 +23,7 @@ def _doc_shingles(spark):
     docs = spread(load_table(spark, SF_SMOKE, "documents"))
     return {
         r.doc_id: set(r.sh)
-        for r in _with_hashed_shingles(docs).select("doc_id", "sh").collect()
+        for r in with_hashed_shingles(docs).select("doc_id", "sh").collect()
     }
 
 

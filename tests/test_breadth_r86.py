@@ -17,10 +17,8 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r86 import (
     _IPW_SPLIT,
     causal_ipw_ate,
     markov_absorption_conversion,
-    ns_rouge2_neardup_pairs,
     streamed_drift_wasserstein,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -66,39 +64,6 @@ def test_absorption_matches_python_fixed_point(spark):
     for s in want:
         assert math.isclose(got[s], want[s], abs_tol=1e-6), (s, got[s], want[s])
     assert all(0.0 <= v <= 1.0 for v in got.values())
-
-
-def test_rouge2_matches_python_clipped_counts(spark):
-    docs = {
-        r.doc_id: r.text.split(" ")
-        for r in load_table(spark, SF_SMOKE, "documents").collect()
-    }
-    grams = {
-        d: Counter(zip(ws, ws[1:])) for d, ws in docs.items()
-    }
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    ]
-    got = {
-        (r.doc_a, r.doc_b): (r.clipped, r.rouge2_p_r, r.rouge2_r_r, r.rouge2_f1_r)
-        for r in ns_rouge2_neardup_pairs(spark, SF_SMOKE).collect()
-    }
-    assert pairs and set(got) <= set(pairs)
-    for a, b in pairs:
-        ga, gb = grams[a], grams[b]
-        clip = sum(min(n, gb[g]) for g, n in ga.items())
-        if clip == 0:
-            assert (a, b) not in got
-            continue
-        prec = clip / sum(gb.values())
-        rec = clip / sum(ga.values())
-        f1 = 2 * prec * rec / (prec + rec)
-        c, p_, r_, f_ = got[(a, b)]
-        assert c == clip
-        assert math.isclose(p_, prec, abs_tol=1e-6)
-        assert math.isclose(r_, rec, abs_tol=1e-6)
-        assert math.isclose(f_, f1, abs_tol=1e-6)
 
 
 def test_ipw_matches_python(spark):

@@ -3,61 +3,16 @@
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import Counter
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r90 import (
     _QL_MU,
     _QL_TERMS,
     _QL_TOP_K,
-    ns_dup_cluster_medoids,
     search_query_likelihood_dirichlet,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_medoids_match_python_election(spark):
-    pairs = ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()
-    adj = defaultdict(set)
-    inc = defaultdict(float)
-    for r in pairs:
-        adj[r.doc_a].add(r.doc_b)
-        adj[r.doc_b].add(r.doc_a)
-        inc[r.doc_a] += r.jaccard
-        inc[r.doc_b] += r.jaccard
-    # connected components by BFS
-    seen, comp = set(), {}
-    for start in sorted(adj):
-        if start in seen:
-            continue
-        stack, members = [start], []
-        seen.add(start)
-        while stack:
-            u = stack.pop()
-            members.append(u)
-            for v in adj[u]:
-                if v not in seen:
-                    seen.add(v)
-                    stack.append(v)
-        cid = min(members)
-        for m in members:
-            comp[m] = cid
-    clusters = defaultdict(list)
-    for node, cid in comp.items():
-        clusters[cid].append(node)
-    want = {}
-    for cid, members in clusters.items():
-        medoid = min(
-            members, key=lambda n: (-math.floor(inc[n] * 1e6 + 0.5), n)
-        )
-        want[cid] = (medoid, len(members))
-    got = {
-        r.cluster_id: (r.medoid_doc_id, r.cluster_size)
-        for r in ns_dup_cluster_medoids(spark, SF_SMOKE).collect()
-    }
-    assert got == want
-    assert any(sz > 2 for _, sz in want.values()), "need a non-pair cluster"
 
 
 def test_query_likelihood_matches_python(spark):

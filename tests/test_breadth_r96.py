@@ -9,26 +9,10 @@ from collections import defaultdict
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r96 import (
     _FD_CANDIDATES,
     dq_functional_dependencies,
-    ns_dedup_method_agreement,
     ops_business_days_leadtime,
-)
-from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-    ns_dedup_minhash_lsh,
-    ns_dedup_simhash,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_method_agreement_matches_pair_sets(spark):
-    mh = {(r.doc_a, r.doc_b) for r in ns_dedup_minhash_lsh(spark, SF_SMOKE).collect()}
-    sh = {(r.doc_a, r.doc_b) for r in ns_dedup_simhash(spark, SF_SMOKE).collect()}
-    row = ns_dedup_method_agreement(spark, SF_SMOKE).collect()[0]
-    assert (row.minhash_pairs, row.simhash_pairs) == (len(mh), len(sh))
-    assert row.agreed_pairs == len(mh & sh)
-    want = len(mh & sh) / len(mh | sh)
-    assert math.isclose(row.jaccard_agreement_r, want, abs_tol=1e-6)
-    assert 0 <= row.jaccard_agreement_r <= 1
 
 
 def _bdays_brute(d1: dt.date, d2: dt.date) -> int:

@@ -9,7 +9,7 @@ from matt3r_data_ingestion_serverless_spark.plans.breadth_r97 import (
     ns_shingle_heaps_fit,
     storage_rle_estimate,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import _with_hashed_shingles
+from matt3r_data_ingestion_serverless_spark.functions.hashing import with_hashed_shingles
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 from tests.conftest import SF_SMOKE
 
@@ -18,7 +18,7 @@ def test_heaps_fit_matches_python(spark):
     docs = spread(load_table(spark, SF_SMOKE, "documents"))
     sh = {
         r.doc_id: list(r.sh)
-        for r in _with_hashed_shingles(docs).select("doc_id", "sh").collect()
+        for r in with_hashed_shingles(docs).select("doc_id", "sh").collect()
     }
     pts = []
     for cp in _HEAPS_CPS:

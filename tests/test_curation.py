@@ -1,17 +1,13 @@
 """Unit tests for the curation-pipeline queries beyond the registry
 parity sweep: HLL sketch-rollup accuracy (no oracle — engine-specific
-binary) and duplicate-cluster structural invariants.
+binary).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.plans.curation import (
-    ns_dup_clusters,
-    sketch_hll_rollup,
-)
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
+from matt3r_data_ingestion_serverless_spark.plans.curation import sketch_hll_rollup
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from matt3r_data_ingestion_serverless_spark.functions import text
 from tests.conftest import SF_CORRECTNESS
@@ -35,24 +31,3 @@ def test_hll_rollup_within_tolerance(spark):
     assert set(got) == set(exact)
     for src, n in exact.items():
         assert got[src] == (n, True), (src, got[src], n)
-
-
-def test_dup_clusters_consistent_with_pairs(spark):
-    """Every LSH-verified pair must land in the same cluster; cluster_id
-    is the min doc_id of the cluster; sizes are consistent."""
-    pairs = ns_dedup_minhash_lsh(spark, SF_CORRECTNESS).select("doc_a", "doc_b").collect()
-    rows = ns_dup_clusters(spark, SF_CORRECTNESS).collect()
-    label = {r["doc_id"]: r["cluster_id"] for r in rows}
-    for p in pairs:
-        assert label[p["doc_a"]] == label[p["doc_b"]], p
-    # cluster_id = min member; size matches the member count
-    from collections import Counter
-
-    members: dict[int, list[int]] = {}
-    for d, c in label.items():
-        members.setdefault(c, []).append(d)
-    for c, ds in members.items():
-        assert c == min(ds)
-    sizes = Counter(label.values())
-    for r in rows:
-        assert r["cluster_size"] == sizes[r["cluster_id"]]

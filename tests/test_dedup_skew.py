@@ -25,9 +25,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-    ns_dedup_minhash_lsh,
-)
+from matt3r_data_ingestion_serverless_spark.plans.dedup import ns_dedup_minhash_lsh
 
 HOT = 200  # near-dup cluster size (20 % of corpus)
 TOTAL = 1000

@@ -9,7 +9,7 @@ from types import SimpleNamespace
 import pytest
 
 from matt3r_data_ingestion_serverless_spark.operators.iterate import mirror
-from matt3r_data_ingestion_serverless_spark.plans.curation import ns_dup_clusters
+from matt3r_data_ingestion_serverless_spark.plans.dedup import ns_dedup_minhash_lsh, ns_dup_clusters
 from matt3r_data_ingestion_serverless_spark.plans.graph import (
     _BIP_HOPS,
     _LP_MIN_COOCCUR,
@@ -37,7 +37,6 @@ from matt3r_data_ingestion_serverless_spark.plans.graph import (
     graph_triangles,
     near_dup_edges,
 )
-from matt3r_data_ingestion_serverless_spark.plans.northstar import ns_dedup_minhash_lsh
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 

@@ -31,13 +31,7 @@ def spark():
 
 
 def test_minhash_and_simhash_expr_twins_bit_equal(spark):
-    from matt3r_data_ingestion_serverless_spark.plans.northstar import (
-        _minhash_band_structs,
-        _minhash_band_structs_expr,
-        _with_hashed_shingles,
-    )
-
-    d = _with_hashed_shingles(load_table(spark, SF, "documents")).select("doc_id", "sh")
+    d = hashing.with_hashed_shingles(load_table(spark, SF, "documents")).select("doc_id", "sh")
     old = d.select(
         "doc_id",
         hashing.minhash_from_hashes(F.col("sh")).alias("sig"),
@@ -49,8 +43,8 @@ def test_minhash_and_simhash_expr_twins_bit_equal(spark):
         hashing.simhash_fingerprint_expr("sh").alias("fp"),
     )
     assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
-    bo = old.select("doc_id", F.explode(_minhash_band_structs(F.col("sig"))).alias("b"))
-    bn = old.select("doc_id", F.explode(_minhash_band_structs_expr("sig")).alias("b"))
+    bo = old.select("doc_id", F.explode(hashing.minhash_band_structs(F.col("sig"))).alias("b"))
+    bn = old.select("doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("b"))
     assert sorted(map(str, bo.collect())) == sorted(map(str, bn.collect()))
 
 

@@ -192,6 +192,17 @@ def minhash_band_structs_sql() -> str:
     return "[" + ", ".join(parts) + "]"
 
 
+def band_keys_cte() -> str:
+    """CTEs `th, d, s, bk` producing s(doc_id, sh, sig) and bk(doc_id,
+    band, key) over ``documents`` — the oracle twin of shingles →
+    signature → band explode."""
+    return (
+        f"{hashed_shingles_cte()},\n"
+        f"s AS (SELECT doc_id, sh, {minhash_from_hashes_sql('sh')} AS sig FROM d),\n"
+        f"bk AS (SELECT doc_id, unnest({minhash_band_structs_sql()}, recursive := true) FROM s)"
+    )
+
+
 def token_hashes(tokens: Column) -> Column:
     """Hash each token ONCE; the simhash bit accumulators fold over this
     integer array (md5 is the expensive step — never re-hash per bit)."""

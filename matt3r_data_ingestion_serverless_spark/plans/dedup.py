@@ -7,7 +7,12 @@ curve, detector agreement, ROUGE-2). Each query is graded against a
 DuckDB oracle that derives the same pairs from the documents.
 
 The hashing rules (shingles, MinHash signatures, band keys, Jaccard)
-are Spark/DuckDB twins in functions/hashing.py.
+are Spark/DuckDB twins in functions/hashing.py. The plan pieces every
+MinHash query starts from are built once, below: the signatures
+(minhash_signatures), their band keys (band_keys), the LSH candidate
+pairs (lsh_pairs) and the pinned verified pair list (near_dup_pairs);
+the oracles read the matching `th, d, s, bk` CTEs
+(hashing.band_keys_cte).
 
 Scale: the candidate join is on (band, key) — cardinality ~n_bands ×
 n_docs, bucket sizes are small by construction, so the shuffle is
@@ -114,14 +119,44 @@ def ns_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, sh, sig)``: each document's distinct shingle hashes and
+    its MinHash signature. Unpinned: a caller that reads it twice (band
+    explode and verify join-back) pins it."""
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    return hashing.with_hashed_shingles(docs).select(
+        "doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig")
+    )
+
+
+def band_keys(sigs: DataFrame) -> DataFrame:
+    """``(doc_id, band, key)``: one row per document and LSH band."""
+    return sigs.select(
+        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
+    ).select("doc_id", "bk.band", "bk.key")
+
+
+def lsh_pairs(bk: DataFrame) -> DataFrame:
+    """Distinct candidate pairs ``(doc_a, doc_b)``, doc_a < doc_b, that
+    share a band key: the LSH self-join on (band, key)."""
+    a, b = bk.alias("a"), bk.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 def minhash_lsh_sql() -> str:
     """The oracle of ns_dedup_minhash_lsh: verified (doc_a, doc_b,
     jaccard) pairs. Other oracles embed it as their pair list."""
-    sig = hashing.minhash_from_hashes_sql("sh")
     return f"""
-WITH {hashing.hashed_shingles_cte()},
-s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({hashing.minhash_band_structs_sql()}, recursive := true) FROM s),
+WITH {hashing.band_keys_cte()},
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
                            AND a.doc_id < b.doc_id),
@@ -142,25 +177,10 @@ def ns_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, so the shuffle is linear and within-bucket pair expansion
     is bounded; exact Jaccard touches only candidates. Signature
     computation is pure higher-order functions (no UDF, no shuffle)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = hashing.with_hashed_shingles(docs).select("doc_id", "sh")
     # pin shingles+signature together: band explode AND the verify
     # join-back both read this one cached stage
-    s = _pin(d.select("doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig")))
-    bk = s.select(
-        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    s = _pin(minhash_signatures(spark, sf_dir))
+    cand = lsh_pairs(band_keys(s))
     da = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     db = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     return (
@@ -173,6 +193,15 @@ def ns_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= JACCARD_DUP)
     )
+
+
+def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The verified pair list ``(doc_a, doc_b, jaccard)`` of
+    ns_dedup_minhash_lsh, checkpointed eagerly: the MinHash detector
+    runs once, and every join, loop round and recursion step after it
+    reads the materialized list. The one pin of the pair list; the
+    dup clusters, the graph queries and the pair audits start here."""
+    return ns_dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _simhash_sql() -> str:
@@ -247,11 +276,8 @@ def ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_dedup_sql() -> str:
-    sig = hashing.minhash_from_hashes_sql("sh")
     return f"""
-WITH {hashing.hashed_shingles_cte()},
-s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({hashing.minhash_band_structs_sql()}, recursive := true) FROM s),
+WITH {hashing.band_keys_cte()},
 cand AS (SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
          FROM bk b JOIN bk c ON b.band = c.band AND b.key = c.key
          WHERE b.doc_id % 2 = 1 AND c.doc_id % 2 = 0),
@@ -288,14 +314,8 @@ def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the full ingest flow: intra-batch dedup → corpus dedup →
     append to corpus + index.
     """
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = hashing.with_hashed_shingles(docs).select("doc_id", "sh")
-    s = _pin(
-        d.select("doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig"))
-    )
-    bk = s.select(
-        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
+    s = _pin(minhash_signatures(spark, sf_dir))
+    bk = band_keys(s)
     batch_bk = bk.filter(F.col("doc_id") % 2 == 1)
     corpus_bk = bk.filter(F.col("doc_id") % 2 == 0)
     cand = (
@@ -316,7 +336,7 @@ def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("j") >= JACCARD_DUP)
     )
     m = v.groupBy("bid").agg(F.count("*").alias("n"), F.max("j").alias("bj"))
-    batch = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id")
+    batch = s.filter(F.col("doc_id") % 2 == 1).select("doc_id")
     return batch.join(m, batch.doc_id == m.bid, "left").select(
         "doc_id",
         F.when(F.col("n").isNotNull(), "drop").otherwise("keep").alias("decision"),
@@ -331,11 +351,8 @@ def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_bucket_sql() -> str:
-    sig = hashing.minhash_from_hashes_sql("sh")
     return f"""
-WITH {hashing.hashed_shingles_cte()},
-s AS (SELECT doc_id, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({hashing.minhash_band_structs_sql()}, recursive := true) FROM s),
+WITH {hashing.band_keys_cte()},
 buckets AS (
   SELECT band, key, count(*) AS sz FROM bk GROUP BY band, key
 )
@@ -362,12 +379,7 @@ def ns_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One banding pass (shared with the dedup pipeline) and one two-level
     agg; everything exact-integer except the rounded mean."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = hashing.with_hashed_shingles(docs).select("doc_id", "sh")
-    s = d.select("doc_id", hashing.minhash_from_hashes_expr("sh").alias("sig"))
-    bk = s.select(
-        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
+    bk = band_keys(minhash_signatures(spark, sf_dir))
     buckets = bk.groupBy("band", "key").agg(F.count("*").alias("sz"))
     return buckets.groupBy(F.col("band").cast("int").alias("band")).agg(
         F.count("*").alias("n_buckets"),
@@ -379,12 +391,9 @@ def ns_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_est_sql() -> str:
-    sig = hashing.minhash_from_hashes_sql("sh")
     n = hashing.N_MINHASHES
     return f"""
-WITH {hashing.hashed_shingles_cte()},
-s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({hashing.minhash_band_structs_sql()}, recursive := true) FROM s),
+WITH {hashing.band_keys_cte()},
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
                            AND a.doc_id < b.doc_id)
@@ -405,32 +414,13 @@ def ns_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-accuracy contract a pipeline relies on when it skips exact
     verification at scale.
 
-    Scale: signatures are {n}×8 bytes per doc regardless of doc length,
+    Scale: signatures are 16×8 bytes per doc regardless of doc length,
     so the estimate join moves sketch bytes, not shingle sets — at
     100 TB the exact column here is the audit; production reads only
     `est_jaccard`. Candidate generation shares the banded-LSH shape of
     ns_dedup_minhash_lsh (linear shuffle, bounded buckets)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = hashing.with_hashed_shingles(docs).select("doc_id", "sh")
-    s = _pin(
-        d.select(
-            "doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig")
-        )
-    )
-    bk = s.select(
-        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    s = _pin(minhash_signatures(spark, sf_dir))
+    cand = lsh_pairs(band_keys(s))
     sa = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("sig").alias("sig_a"))
     sb = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"), F.col("sig").alias("sig_b"))
     n_eq = F.size(
@@ -525,16 +515,14 @@ def ns_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup detectors AGREE at the pair level (intersection and
     Jaccard of their pair sets)? The audit a curation team runs before
     trusting any single detector — low agreement means the threshold
-    regimes differ (MinHash verifies exact Jaccard ≥ 0.6; SimHash's
+    regimes differ (MinHash verifies exact Jaccard ≥ 0.8; SimHash's
     Hamming ≤ 4 is a looser cosine-ish proxy), so the union/intersection
     choice changes what gets deduped.
 
     Scale: both detectors are the existing linear-shuffle band-join
     plans; the agreement join runs on the PAIR tables (result-sized,
     tiny)."""
-    mh = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(
-        eager=True
-    )
+    mh = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     sh = ns_dedup_simhash(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint(
         eager=True
     )
@@ -614,11 +602,7 @@ def ns_rouge2_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs come from the LSH band join, never all-pairs. Pairs with zero
     shared bigrams drop out (inner join), which cannot happen for true
     near-dups."""
-    pairs = (
-        ns_dedup_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     members = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .union(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -723,7 +707,7 @@ FROM lbl
 
 @register("ns_dup_clusters", sql=_dup_clusters_sql())
 def ns_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resolve near-dup PAIRS (MinHash-LSH verified, Jaccard ≥ {j}) into
+    """Resolve near-dup PAIRS (MinHash-LSH verified, Jaccard ≥ 0.8) into
     duplicate CLUSTERS: each document labeled with the min doc_id
     reachable through the dup graph (connected components), plus the
     cluster size — the unit a dedup pipeline keeps one representative
@@ -733,23 +717,16 @@ def ns_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/iterate.py:connected_components) — per round one shuffle
     join on the edge list + one hash agg; dup clusters are shallow
     (pairwise-similar groups → diameter ≤ ~2), so 2–4 rounds suffice."""
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    return _dup_clusters_from_pairs(pairs)
+    return _dup_clusters_from_pairs(near_dup_pairs(spark, sf_dir))
 
 
 def _dup_clusters_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Connected-components labeling from an explicit verified-pair
-    table — the reusable tail of ns_dup_clusters. Callers that ALSO
-    need the pair set (modularity Q, medoid election) pass their
-    already-checkpointed pairs here instead of re-running the whole
-    MinHash detector a second time inside ns_dup_clusters."""
-    # eager checkpoint (not lazy persist): every propagation round joins
-    # edges; materializing once up front keeps the LSH pipeline out of
-    # round-1's plan and feeds AQE real edge stats (same rationale as
-    # graph_pagerank, measured 1.9 s → ~1.7 s at sf0.1; keep_one's
-    # composite drops 2.0 s → 1.6 s). `mirror` plans `pairs` once, so an
-    # unpinned detector output runs once inside the checkpoint.
-    edges = mirror(pairs.toDF("src", "dst")).localCheckpoint(eager=True)
+    """Connected-components labels ``(doc_id, cluster_id,
+    cluster_size)`` over the pinned pair list (near_dup_pairs), which a
+    caller that also reads the pairs (medoid election) shares. The
+    mirrored edge list is an explode over that checkpoint, so it needs
+    no pin of its own: a second checkpoint cost each caller a job."""
+    edges = mirror(pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")))
     labels = connected_components(
         edges.select(F.col("src").alias("node")).distinct(), edges
     )
@@ -803,34 +780,31 @@ FROM lbl
 def sql_recursive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via Spark's native WITH RECURSIVE (4.0+) —
     the declarative twin of ns_dup_clusters' iterative min-label loop.
-    The LSH near-dup pairs are computed by the DataFrame plan, exposed
-    as a temp view, and the closure + min-reachable-label runs entirely
-    in SQL, matching the DuckDB oracle's recursive CTE shape.
+    The pinned near-dup pairs (near_dup_pairs) are passed to spark.sql
+    as a DataFrame argument — PySpark drops the view it registers for
+    them once the query is analysed — and the closure +
+    min-reachable-label runs entirely in SQL, matching the DuckDB
+    oracle's recursive CTE shape.
 
     Scale: each recursion step is one shuffle join (frontier × edges),
     exactly what the manual loop issues. Spark (4.1) only supports
     UNION ALL recursion — no cross-step dedup — so an undirected
     closure must be DEPTH-BOUNDED to terminate: dup-cluster graphs are
     near-cliques (every surviving pair passed a Jaccard check), so
-    diameter ≤ {cap} hops reaches the whole component; the per-step
+    diameter ≤ 4 hops reaches the whole component; the per-step
     DISTINCT bounds the frontier and the final GROUP BY collapses the
     multi-path duplicates. For deep/chain-shaped graphs use the
     iterative min-label loop (ns_dup_clusters), which converges by
     fixed point instead of depth."""
-    # Pin the pair list before recursing: the recursive plan references
-    # `edges` once per iteration, and without materialization each
-    # iteration would re-run the whole MinHash-LSH pipeline upstream
-    # (measured 2.9 s → 2.4 s at sf0.1; the remainder is the per-step
-    # shuffle cost of the recursion itself). At scale this is the
-    # materialized edge-list table any CC job starts from.
-    pairs = _pin(ns_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"))
-    pairs.createOrReplaceTempView("dup_pairs_v")
+    # The recursive plan references `edges` once per iteration: reading
+    # the pinned pair list keeps the MinHash-LSH pipeline out of every
+    # step.
     return spark.sql(
         """
 WITH RECURSIVE
 edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM dup_pairs_v
-  UNION SELECT doc_b, doc_a FROM dup_pairs_v
+  SELECT doc_a AS src, doc_b AS dst FROM {pairs}
+  UNION SELECT doc_b, doc_a FROM {pairs}
 ),
 reach AS (
   SELECT src AS node, dst AS r, 1 AS depth FROM edges
@@ -846,7 +820,8 @@ lbl AS (
 SELECT node AS doc_id, cluster_id,
        count(*) OVER (PARTITION BY cluster_id) AS cluster_size
 FROM lbl
-"""
+""",
+        pairs=near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b"),
     )
 
 
@@ -928,12 +903,12 @@ def ns_dup_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order ulp can never flip the election.
 
     Scale: cluster labels come from the iterative min-label components,
-    fed the SAME checkpointed pair table (_dup_clusters_from_pairs) so
-    the MinHash detector runs once, not twice; incident sums are one
-    groupBy over the mirrored edge list; the election is one window
-    over cluster-sized partitions. Nothing rescans the corpus."""
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).localCheckpoint(eager=True)
-    lbl = _dup_clusters_from_pairs(pairs.select("doc_a", "doc_b")).select(
+    fed the SAME pinned pair list (near_dup_pairs) the incident sums
+    read, so the MinHash detector runs once, not twice; incident sums
+    are one groupBy over both pair directions; the election is one
+    window over cluster-sized partitions. Nothing rescans the corpus."""
+    pairs = near_dup_pairs(spark, sf_dir)
+    lbl = _dup_clusters_from_pairs(pairs).select(
         F.col("doc_id").alias("node"), "cluster_id", "cluster_size"
     )
     inc = (

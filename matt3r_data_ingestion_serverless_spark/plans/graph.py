@@ -24,7 +24,7 @@ from matt3r_data_ingestion_serverless_spark.operators.iterate import (
 from matt3r_data_ingestion_serverless_spark.plans.dedup import (
     dup_clusters_ctes,
     minhash_lsh_sql,
-    ns_dedup_minhash_lsh,
+    near_dup_pairs,
 )
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
@@ -36,14 +36,13 @@ from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
 
 def near_dup_edges(spark: SparkSession, sf_dir: str, *, mirrored: bool = False) -> DataFrame:
-    """The near-dup graph as a pinned edge list ``(src, dst, jaccard)``:
-    each verified pair once with src < dst, or in both directions when
-    ``mirrored``. The eager checkpoint runs the MinHash detector once;
-    every join and loop round after it reads the materialized list."""
-    pairs = ns_dedup_minhash_lsh(spark, sf_dir).select(
+    """The near-dup graph as an edge list ``(src, dst, jaccard)`` over
+    the pinned pair list (near_dup_pairs): each verified pair once with
+    src < dst, or in both directions when ``mirrored``."""
+    pairs = near_dup_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"), "jaccard"
     )
-    return (mirror(pairs) if mirrored else pairs).localCheckpoint(eager=True)
+    return mirror(pairs) if mirrored else pairs
 
 
 def degrees(edges: DataFrame) -> DataFrame:

@@ -641,12 +641,9 @@ CONTAINMENT_T = 0.5  # flag when either-direction containment ≥ this
 
 
 def _containment_sql() -> str:
-    sig = hashing.minhash_from_hashes_sql("sh")
     inter = "len(list_intersect(da.sh, db.sh))::DOUBLE"
     return f"""
-WITH {hashing.hashed_shingles_cte()},
-s AS (SELECT doc_id, sh, {sig} AS sig FROM d),
-bk AS (SELECT doc_id, unnest({hashing.minhash_band_structs_sql()}, recursive := true) FROM s),
+WITH {hashing.band_keys_cte()},
 cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
                            AND a.doc_id < b.doc_id),
@@ -671,25 +668,14 @@ def ns_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical candidate generation to the LSH dedup (linear
     band shuffle); only the verification formula differs, computed on
     the same pinned shingle relation."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    d = hashing.with_hashed_shingles(docs).select("doc_id", "sh")
-    s = _pin(
-        d.select("doc_id", "sh", hashing.minhash_from_hashes_expr("sh").alias("sig"))
+    from matt3r_data_ingestion_serverless_spark.plans.dedup import (
+        band_keys,
+        lsh_pairs,
+        minhash_signatures,
     )
-    bk = s.select(
-        "doc_id", F.explode(hashing.minhash_band_structs_expr("sig")).alias("bk")
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+
+    s = _pin(minhash_signatures(spark, sf_dir))
+    cand = lsh_pairs(band_keys(s))
     da = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     db = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")

@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import hashing
 from matt3r_data_ingestion_serverless_spark.plans.dedup import (
+    band_keys,
+    minhash_signatures,
+    near_dup_pairs,
     ns_dedup_cost_savings,
     ns_dedup_incremental,
     ns_dedup_method_agreement,
@@ -23,6 +26,7 @@ from matt3r_data_ingestion_serverless_spark.plans.dedup import (
     ns_lsh_bucket_stats,
     ns_pair_jaccard_histogram,
     ns_rouge2_neardup_pairs,
+    sql_recursive_components,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
 from tests.conftest import SF_CORRECTNESS, SF_SMOKE
@@ -245,3 +249,29 @@ def test_dedup_savings_match_cluster_labels(spark):
     assert (row.chars_total, row.chars_saved) == (total, saved)
     assert math.isclose(row.save_ratio_r, saved / total, abs_tol=1e-6)
     assert 0 < row.n_dropped < row.n_docs
+
+
+def test_near_dup_pairs_are_the_pinned_lsh_pairs(spark, pairs):
+    df = near_dup_pairs(spark, SF_SMOKE)
+    assert sorted(df.collect()) == sorted(pairs)
+    assert "FileScan" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_band_keys_match_column_twin(spark):
+    sigs = minhash_signatures(spark, SF_SMOKE)
+    rows = band_keys(sigs).collect()
+    n_docs = load_table(spark, SF_SMOKE, "documents").count()
+    assert Counter(Counter(r.doc_id for r in rows).values()) == {hashing.MINHASH_BANDS: n_docs}
+    ref = sigs.select(
+        "doc_id", F.explode(hashing.minhash_band_structs(F.col("sig"))).alias("bk")
+    ).select("doc_id", "bk.band", "bk.key")
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, ref.collect()))
+
+
+def test_recursive_components_leaves_no_temp_view(spark):
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    assert sql_recursive_components(spark, SF_SMOKE).count() > 0
+    assert temp_views() == before

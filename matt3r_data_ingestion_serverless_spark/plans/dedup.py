@@ -767,16 +767,7 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _components_sql() -> str:
-    return f"""
-{dup_clusters_ctes()}
-SELECT node AS doc_id, cluster_id,
-       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM lbl
-"""
-
-
-@register("sql_recursive_components", sql=_components_sql())
+@register("sql_recursive_components", sql=_dup_clusters_sql())
 def sql_recursive_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via Spark's native WITH RECURSIVE (4.0+) —
     the declarative twin of ns_dup_clusters' iterative min-label loop.

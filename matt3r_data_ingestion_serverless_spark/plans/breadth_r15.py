@@ -358,61 +358,3 @@ def ar_aging_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_value"
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# lakehouse file-stats audit (distributed parquet footer scan)
-# ---------------------------------------------------------------------------
-
-_FS_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-_FS_SQL = "\nUNION ALL\n".join(
-    f"""SELECT '{t}' AS table_name, count(*) AS n_rows,
-       (SELECT CAST(count(*) AS INT) FROM information_schema.columns
-        WHERE table_name = '{t}') AS n_columns
-FROM {t}"""
-    for t in _FS_TABLES
-)
-
-
-@register("lakehouse_file_stats", _FS_SQL)
-def lakehouse_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed parquet FOOTER audit — the compaction planner's
-    input: every table file's row count and column count read from the
-    parquet metadata alone (no data pages decoded), via
-    `binaryFile` scan → per-file pyarrow footer parse in mapInPandas.
-    This is how a table-maintenance job inventories millions of files
-    (row-group sizing, small-file detection — sources/tables.py's
-    _maybe_compact makes exactly this decision per file) without
-    scanning a byte of column data.
-
-    The oracle cannot see file paths (it runs on registered views), so
-    it cross-checks the footer numbers against full-scan counts — the
-    footer MUST agree with the data. At scale the binaryFile listing
-    parallelizes per file and each task reads only its footer bytes."""
-    import io
-
-    import pandas as pd
-
-    paths = ",".join(f"{sf_dir}/{t}.parquet" for t in _FS_TABLES)
-
-    def parse_footers(batches):
-        for pdf in batches:
-            import pyarrow.parquet as pq
-
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                meta = pq.ParquetFile(io.BytesIO(content)).metadata
-                name = path.rsplit("/", 1)[-1].replace(".parquet", "")
-                out.append((name, meta.num_rows, meta.num_columns))
-            yield pd.DataFrame(out, columns=["table_name", "n_rows", "n_columns"])
-
-    files = spark.read.format("binaryFile").load(
-        [f"{sf_dir}/{t}.parquet" for t in _FS_TABLES]
-    )
-    return files.select("path", "content").mapInPandas(
-        parse_footers, "table_name string, n_rows long, n_columns int"
-    )

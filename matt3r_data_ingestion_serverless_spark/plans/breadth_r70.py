@@ -1,11 +1,8 @@
-"""Round-3 batch 2: lakehouse lifecycle (schema evolution, compaction,
-streamed merge) + LLM-curation additions (exact window dedup spans,
+"""Round-3 batch 2: LLM-curation additions (exact window dedup spans,
 char-trigram LM frequency scoring, leakage-safe splits).
 
-Reference parity: the lakehouse rows extend the reference's
-skip-on-overlap S3 merge (parse_canserver_filtered_log.py:327-344) with
-the lifecycle operations a real table needs; the curation rows extend
-the training-data surface the reference feeds (SURVEY.md §7.2 M5).
+Reference parity: the curation rows extend the training-data surface
+the reference feeds (SURVEY.md §7.2 M5).
 """
 
 from __future__ import annotations
@@ -14,130 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
-    _MERGED_SQL,
-    _batch_df,
-    _build_table,
-    _final_select,
-)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
-from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# lakehouse lifecycle
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "j9_lakehouse_schema_evolution",
-    sql="""
-WITH cut AS (
-  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
-), t AS (
-  SELECT o_orderkey AS k, o_custkey, o_orderstatus
-  FROM orders WHERE o_orderkey % 4 <> 3
-), s AS (
-  SELECT o_orderkey AS k, o_custkey,
-         'U' AS o_orderstatus,
-         't' || CAST(o_orderkey AS VARCHAR) AS tag
-  FROM orders, cut WHERE o_orderkey <= cut.c
-)
-SELECT coalesce(t.k, s.k) AS k,
-       coalesce(t.o_custkey, s.o_custkey) AS o_custkey,
-       CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
-       s.tag AS tag
-FROM t FULL JOIN s ON t.k = s.k
-""",
-)
-def j9_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution without rewriting history: the merge batch
-    carries a column the table has never seen (``tag``); with
-    ``evolve_schema=True`` the column joins the snapshot schema, rows in
-    data files the merge did NOT touch project it as null via the
-    manifest schema on read (operators/lakehouse.py:read) — no old file
-    is rewritten, no mergeSchema footer sweep. The oracle is the plain
-    full-outer join where target-only rows carry tag NULL."""
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import _key_minmax
-
-    tbl, _root, cut = _build_table(spark, sf_dir)
-    batch = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") <= cut)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            "o_custkey",
-            F.lit("U").alias("o_orderstatus"),
-            F.concat(F.lit("t"), F.col("o_orderkey").cast("string")).alias("tag"),
-        )
-    )
-    tbl.merge(
-        batch,
-        keys=["k"],
-        update_cols=["o_orderstatus", "tag"],
-        evolve_schema=True,
-        # batch keys are BY CONSTRUCTION in [min_key, cut] — a complete
-        # cover known without a Spark job (see _standard_merge)
-        source_intervals=[(_key_minmax(sf_dir)[0], cut)],
-    )
-    return tbl.read().select("k", "o_custkey", "o_orderstatus", "tag")
-
-
-@register("j10_lakehouse_compaction", sql=_MERGED_SQL)
-def j10_lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPTIMIZE after MERGE: compaction bin-packs the post-merge
-    snapshot (untouched-by-reference files + fresh merge output) into 4
-    files and commits a new snapshot — the graded rows prove compaction
-    is content-neutral (same oracle as j6), while `history()` records
-    create → merge → compact. At 100 TB this is the periodic pass that
-    keeps streaming-ingest file counts bounded so manifest pruning and
-    scan planning stay cheap."""
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
-        _standard_merge,
-    )
-
-    tbl, _root, cut = _build_table(spark, sf_dir)
-    _standard_merge(tbl, spark, sf_dir, cut)
-    tbl.compact(target_files=4)
-    assert [m["operation"] for m in tbl.history()] == ["create", "merge", "compact"]
-    return _final_select(tbl.read())
-
-
-@register("j11_streamed_lakehouse_merge", sql=_MERGED_SQL)
-def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lakehouse as a STREAMING sink: the merge batch lands as two
-    key-disjoint files, a foreachBatch stream applies each micro-batch
-    through LakehouseTable.merge (touched-file pruning per batch), and
-    the final snapshot must equal the one-shot MERGE oracle — the
-    at-least-once + idempotent-upsert contract (T3) carried onto the
-    table format. Key-disjoint batches commute, so arrival order cannot
-    perturb the graded rows."""
-    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
-
-    tbl, _root, cut = _build_table(spark, sf_dir)
-    stage = scratch_dir("lh_stream_")
-    batch = _batch_df(spark, sf_dir, cut)
-    land = f"{stage}/land"
-    for m in range(2):
-        batch.filter(F.col("k") % 2 == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(land)
-
-    def apply_batch(bdf: DataFrame, _bid: int) -> None:
-        tbl.merge(
-            bdf,
-            keys=["k"],
-            update_cols=["o_totalprice", "o_orderstatus"],
-            delete_condition=F.col("o_custkey") % 7 == 0,
-        )
-
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    run_once(src, apply_batch)
-    return _final_select(tbl.read())
 
 
 # ---------------------------------------------------------------------------

@@ -1,71 +1,17 @@
-"""Round-4 batch 15: merge-on-read deletes and k-center coreset
-selection.
-
-Two operator families: equality-delete tombstones on the
-manifest-tracked lakehouse table (j16 — DELETE without rewriting a
-single data file), farthest-first k-center selection over embeddings
-(the diversity-coreset primitive active learning and exemplar
-selection use).
+"""Round-4 batch 15: k-center coreset selection — farthest-first
+k-center selection over embeddings (the diversity-coreset primitive
+active learning and exemplar selection use).
 """
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions import vectors
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
-    _build_table,
-    _final_select,
-)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table, spread
-
-# ---------------------------------------------------------------------------
-# j16: merge-on-read equality delete
-# ---------------------------------------------------------------------------
-
-_J16_SQL = f"""
-WITH t AS (
-  SELECT o_orderkey AS k, o_custkey, o_totalprice, o_orderstatus
-  FROM orders WHERE o_orderkey % 4 <> 3
-)
-SELECT k, o_custkey, {round6_sql('o_totalprice')} AS total_r, o_orderstatus,
-       0 AS files_rewritten
-FROM t WHERE o_custkey % 5 <> 0
-"""
-
-
-@register("j16_lakehouse_merge_on_read_delete", sql=_J16_SQL)
-def j16_lakehouse_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read DELETE: ``delete_where`` commits a key-tombstone
-    file and the new snapshot's DATA file list is byte-identical to the
-    parent's — the graded ``files_rewritten`` column is computed from
-    the two manifests and must hash as 0, proving no data bytes were
-    rewritten (Iceberg equality deletes / Delta deletion vectors,
-    key-level form). ``read()`` anti-joins the broadcast-sized
-    tombstones; compaction (graded separately in j10) is what
-    eventually folds them in.
-
-    Scale: the delete costs one column-pruned scan + O(matching keys)
-    written; read amplification is one broadcast anti-join until the
-    next compaction — the standard merge-on-read trade, measured here
-    instead of asserted."""
-    tbl, root, _cut = _build_table(spark, sf_dir)
-    try:
-        before = [f["path"] for f in tbl.manifest()["file_list"]]
-        tbl.delete_where(F.col("o_custkey") % 5 == 0, keys=["k"])
-        after = [f["path"] for f in tbl.manifest()["file_list"]]
-        rewritten = len(set(before) ^ set(after))
-        out = _final_select(tbl.read()).withColumn(
-            "files_rewritten", F.lit(rewritten)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -1,77 +1,19 @@
-"""Round-4 batch 20: lakehouse write-audit-publish, pass@k estimation,
-and UTF-8 byte fertility.
+"""Round-4 batch 20: pass@k estimation and UTF-8 byte fertility.
 
-Three operator families: the Iceberg WAP pattern on the manifest
-table (j17 — staged data invisible to main until a metadata-only
-publish), the unbiased pass@k estimator over per-task success counts
-(the LLM-eval statistic, computed exactly from integer combinatorics),
-and bytes-per-character fertility by language (the tokenizer-budget
-statistic that separates multi-byte scripts from ASCII)."""
+Two operator families: the unbiased pass@k estimator over per-task
+success counts (the LLM-eval statistic, computed exactly from integer
+combinatorics), and bytes-per-character fertility by language (the
+tokenizer-budget statistic that separates multi-byte scripts from
+ASCII)."""
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
-from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import (
-    _build_table,
-    _final_select,
-)
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# j17: write-audit-publish
-# ---------------------------------------------------------------------------
-
-_J17_SQL = f"""
-SELECT o_orderkey AS k, o_custkey, {round6_sql('o_totalprice')} AS total_r,
-       o_orderstatus, 1 AS main_was_unchanged
-FROM orders
-"""
-
-
-@register("j17_lakehouse_write_audit_publish", sql=_J17_SQL)
-def j17_lakehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write-audit-publish on the manifest table: the missing quarter
-    of orders lands as a STAGED append (data files written, no commit),
-    an audit confirms the main snapshot is byte-identical to before
-    (the graded ``main_was_unchanged`` flag hashes as 1) while
-    ``read_staged`` already sees the union, then ``publish`` adds the
-    staged files with a metadata-only optimistic commit — Iceberg's WAP
-    pattern, the safe-ingestion topology where bad batches are caught
-    before any reader can observe them.
-
-    Scale: staging cost = the append's write; the audit reads whatever
-    the validation query needs; publish moves ZERO data bytes (one
-    manifest link)."""
-    tbl, root, _cut = _build_table(spark, sf_dir)
-    try:
-        base_rows = tbl.read().count()
-        staged_batch = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") % 4 == 3)
-            .select(
-                F.col("o_orderkey").alias("k"),
-                "o_custkey",
-                "o_totalprice",
-                "o_orderstatus",
-            )
-        )
-        token = tbl.stage_append(staged_batch)
-        unchanged = int(tbl.read().count() == base_rows)
-        staged_total = tbl.read_staged(token).count()
-        tbl.publish(token)
-        out = _final_select(tbl.read()).withColumn(
-            "main_was_unchanged",
-            F.lit(unchanged * int(tbl.read().count() == staged_total)),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -1,200 +1,1258 @@
-"""Lakehouse / advanced-temporal operator family.
+"""The lakehouse query domain: the manifest-tracked parquet table of
+operators/lakehouse.py driven through MERGE INTO with key-range file
+pruning, time travel, schema evolution, compaction, a streamed merge,
+optimistic concurrency, vacuum, change-data feed, merge-on-read
+deletes, write-audit-publish, z-order clustering and metadata-only
+aggregation, plus the parquet-footer audit and the Morton layout
+rollup. Each query builds a real table under a scratch dir, drives its
+commits through it and returns the read-back snapshot, graded against
+a DuckDB oracle over the raw tables.
 
-Six operators a 100 TB lakehouse runs daily that no earlier family
-covers: trailing-window distinct counting,
-hierarchical percent-of-parent rollups, replica checksum
-reconciliation, Z-order (Morton) layout clustering, incremental
-materialized-view maintenance via partial-aggregate merge, and a
-distributed Pareto-frontier (skyline) operator.
-
-Determinism rules (SCALE.md §7): money goes through integer cents
-before any sum.
+The reference's closest analogue is the S3 existence-check +
+skip-on-overlap merge (parse_canserver_filtered_log.py:327-344): its
+"manifest" is the S3 key listing, its "file stats" the hour encoded in
+the key name.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+import shutil
+import types
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matt3r_data_ingestion_serverless_spark.functions.rounding import (
-    CENTS_SQL,
-    cents,
-    round6,
-    round6_sql,
-)
+from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.operators.lakehouse import LakehouseTable
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 
 
 # ---------------------------------------------------------------------------
-# trailing 7-day distinct users (windowed COUNT DISTINCT via day-grid)
+# shared fixtures: base table + merge batch over orders
+# ---------------------------------------------------------------------------
+#
+# base   = orders with o_orderkey % 4 <> 3  (so the batch has INSERT rows)
+# batch  = the lowest decile of the keyspace (o_orderkey <= max/10), price
+#          bumped by 1000.0 and status 'U'; rows with o_custkey % 7 = 0
+#          are DELETEs. The batch is a contiguous key slice on purpose:
+#          the base is written as 16 key-range-clustered files, so the manifest
+#          prunes ~14/16 data files from the merge — the property that
+#          makes a 100 TB merge cost O(batch), not O(table).
+
+
+def _base_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            F.col("o_orderkey").alias("k"),
+            "o_custkey",
+            "o_totalprice",
+            "o_orderstatus",
+        )
+        .filter(F.col("k") % 4 != 3)
+    )
+
+
+def _key_range(sf_dir: str, col: str) -> tuple[int, int]:
+    """Exact int64 [min, max] of an orders column straight from the
+    parquet FOOTER — zero Spark jobs (the same stats discipline the
+    lakehouse manifests use)."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, "orders.parquet")
+    if not os.path.isfile(path):
+        raise ValueError(
+            f"{path} is not a single parquet file: footer key extents (the "
+            "merges' source_intervals, which must COMPLETELY cover the batch "
+            "keys) are read from one file's footer"
+        )
+    meta = pq.ParquetFile(path).metadata
+    idx = next(i for i in range(meta.num_columns) if meta.schema.column(i).name == col)
+    stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
+    return int(min(s.min for s in stats)), int(max(s.max for s in stats))
+
+
+def _key_minmax(sf_dir: str) -> tuple[int, int]:
+    return _key_range(sf_dir, "o_orderkey")
+
+
+def _batch_df(spark: SparkSession, sf_dir: str, cut: int) -> DataFrame:
+    return (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") <= cut)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            "o_custkey",
+            (F.col("o_totalprice") + F.lit(1000.0)).alias("o_totalprice"),
+            F.lit("U").alias("o_orderstatus"),
+        )
+    )
+
+
+def _build_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, str, int]:
+    """v1 = 16 key-range-clustered files. The split points come from the
+    orders parquet FOOTER's exact int64 [min, max] (equi-width over a
+    near-uniform keyspace ≈ the old repartitionByRange(16) equi-depth
+    layout), so the create is ONE job — create_bucketed's observe()-
+    stats write — instead of three (range-boundary sampling job + write
+    + per-file stats harvest job). Same manifest contract: 16 files
+    with disjoint k ranges and exact per-file stats; merge pruning
+    behaves identically (the batch decile still touches ~2/16 files)."""
+    root = scratch_dir("lakehouse_")
+    lo, hi = _key_minmax(sf_dir)
+    boundaries = sorted({lo + (hi - lo) * i // 16 for i in range(1, 16)})
+    boundaries = [b for b in boundaries if lo < b <= hi]
+    tbl = LakehouseTable.create_bucketed(
+        _base_df(spark, sf_dir),
+        root,
+        key="k",
+        boundaries=boundaries,
+        stats_cols=["k"],
+    )
+    return tbl, root, hi // 10
+
+
+def _standard_merge(tbl: LakehouseTable, spark: SparkSession, sf_dir: str, cut: int):
+    # source_intervals: the batch is BY CONSTRUCTION the keys in
+    # [min_key, cut] (a filter on the key column), so the caller knows a
+    # complete interval cover without a Spark job — the same contract
+    # cdc_streamed_apply's footer-derived covers use. o_orderkey is a
+    # non-null primary key, so the null-key hazard does not apply.
+    tbl.merge(
+        _batch_df(spark, sf_dir, cut),
+        keys=["k"],
+        update_cols=["o_totalprice", "o_orderstatus"],
+        delete_condition=F.col("o_custkey") % 7 == 0,
+        source_intervals=[(_key_minmax(sf_dir)[0], cut)],
+    )
+
+
+_SHARED_MERGED: dict[str, tuple[LakehouseTable, str, int]] = {}
+
+
+def _shared_merged_table(
+    spark: SparkSession, sf_dir: str
+) -> tuple[LakehouseTable, str, int]:
+    """Process-shared READ-ONLY fixture (VERDICT r06 next-step 7):
+    v1 = the 16-file range-clustered base, v2 = the standard merge.
+    Queries that only READ committed snapshots (time travel j7, file
+    skipping j8, snapshot diff j15) share one build instead of each
+    paying create + merge + rm-rf per run; mutation queries
+    (j6, j9-j14, j16, j17) keep private builds. The dir lives until
+    process exit, so the returned DataFrames stay lazy — no
+    localCheckpoint materialization either."""
+    got = _SHARED_MERGED.get(sf_dir)
+    if got is not None and os.path.isdir(got[1]):
+        return got
+    tbl, root, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, spark, sf_dir, cut)
+    _SHARED_MERGED[sf_dir] = (tbl, root, cut)
+    return tbl, root, cut
+
+
+def _final_select(df: DataFrame) -> DataFrame:
+    return df.select(
+        "k",
+        "o_custkey",
+        round6(F.col("o_totalprice")).alias("total_r"),
+        "o_orderstatus",
+    )
+
+
+_MERGED_SQL = f"""
+WITH cut AS (
+  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
+), t AS (
+  SELECT o_orderkey AS k, o_custkey, o_totalprice, o_orderstatus
+  FROM orders WHERE o_orderkey % 4 <> 3
+), s AS (
+  SELECT o_orderkey AS k, o_custkey,
+         o_totalprice + 1000.0 AS o_totalprice,
+         'U' AS o_orderstatus,
+         (o_custkey % 7 = 0) AS del
+  FROM orders, cut WHERE o_orderkey <= cut.c
+), m AS (
+  SELECT coalesce(t.k, s.k) AS k,
+         coalesce(t.o_custkey, s.o_custkey) AS o_custkey,
+         CASE WHEN s.k IS NULL THEN t.o_totalprice ELSE s.o_totalprice END AS o_totalprice,
+         CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
+         s.k IS NOT NULL AND s.del AS del
+  FROM t FULL JOIN s ON t.k = s.k
+  WHERE s.k IS NULL OR NOT s.del
+)
+SELECT k, o_custkey, {round6_sql('o_totalprice')} AS total_r, o_orderstatus
+FROM m
+"""
+
+
+@register("j6_lakehouse_merge", sql=_MERGED_SQL)
+def j6_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE INTO a manifest-tracked parquet table with key-range file
+    pruning (operators/lakehouse.py): UPDATE price/status on match,
+    DELETE matched rows where o_custkey % 7 = 0, INSERT the rest. The
+    graded rows are the post-commit snapshot read back through the new
+    manifest, so pruning, commit, and read-path all sit on the graded
+    path; the oracle is the plain full-outer-join MERGE semantics.
+
+    Scale: the batch is a contiguous key decile, the base is written
+    range-clustered on the key, so only ~2/16 data files are read back
+    and rewritten — every other file carries into the new snapshot by
+    reference (manifest metadata only). That is the Iceberg/Delta
+    merge-cost contract without the package dependency."""
+    tbl, _root, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, spark, sf_dir, cut)
+    # lazy read over the committed snapshot; the scratch dir lives until
+    # process exit (few MB) instead of paying a localCheckpoint
+    # materialization pass just to rmtree early
+    return _final_select(tbl.read())
+
+
+@register(
+    "j7_lakehouse_time_travel",
+    sql=f"""
+SELECT o_orderkey AS k, o_custkey,
+       {round6_sql('o_totalprice')} AS total_r, o_orderstatus
+FROM orders WHERE o_orderkey % 4 <> 3
+""",
+)
+def j7_lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot isolation: after the merge commits v2, ``read(version=1)``
+    still returns the exact pre-merge table — commits never mutate or
+    delete prior snapshots' files, only publish a new manifest
+    (operators/lakehouse.py:_commit, atomic rename). The oracle is the
+    base table itself: time travel must be byte-faithful, not
+    approximate."""
+    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    return _final_select(tbl.read(version=1))
+
+
+@register(
+    "j8_lakehouse_file_skipping",
+    sql=f"""
+WITH cut AS (
+  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
+)
+SELECT o_orderstatus,
+       count(*) AS n,
+       {round6_sql('sum(CAST(o_totalprice AS DECIMAL(18,2)))::DOUBLE')} AS total_r
+FROM orders, cut
+WHERE o_orderkey % 4 <> 3 AND o_orderkey BETWEEN 1 AND cut.c
+GROUP BY o_orderstatus
+""",
+)
+def j8_lakehouse_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stats-based file skipping: a bounded scan consults the manifest's
+    per-file min/max and opens only overlapping files (here ~2/16 — the
+    table is range-clustered on k), then applies the exact row predicate
+    on top, exactly like Iceberg manifest pruning feeding parquet
+    row-group pushdown. The aggregate proves the pruned scan loses no
+    rows vs the oracle's full-table filter."""
+    tbl, _root, cut = _shared_merged_table(spark, sf_dir)
+    pruned = tbl.scan({"k": (1, cut)}, version=1).filter(F.col("k").between(1, cut))
+    return pruned.groupBy("o_orderstatus").agg(
+        F.count("*").alias("n"),
+        round6(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double")
+        ).alias("total_r"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# lakehouse lifecycle
 # ---------------------------------------------------------------------------
 
 
 @register(
-    "rolling_7d_distinct_users",
+    "j9_lakehouse_schema_evolution",
     sql="""
-WITH pairs AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-days AS (SELECT DISTINCT day FROM pairs)
-SELECT strftime(d.day, '%Y-%m-%d') AS day,
-       count(DISTINCT p.user_id) AS users_7d
-FROM days d JOIN pairs p ON p.day BETWEEN d.day - 6 AND d.day
-GROUP BY d.day
+WITH cut AS (
+  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
+), t AS (
+  SELECT o_orderkey AS k, o_custkey, o_orderstatus
+  FROM orders WHERE o_orderkey % 4 <> 3
+), s AS (
+  SELECT o_orderkey AS k, o_custkey,
+         'U' AS o_orderstatus,
+         't' || CAST(o_orderkey AS VARCHAR) AS tag
+  FROM orders, cut WHERE o_orderkey <= cut.c
+)
+SELECT coalesce(t.k, s.k) AS k,
+       coalesce(t.o_custkey, s.o_custkey) AS o_custkey,
+       CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
+       s.tag AS tag
+FROM t FULL JOIN s ON t.k = s.k
 """,
 )
-def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-day distinct active users per day — the retention /
-    WAU metric. COUNT(DISTINCT) is not algebraic, so no window frame
-    can compute it incrementally; the scalable rewrite is the day-grid
-    expansion: dedupe to (day, user) pairs FIRST (the big shrink —
-    events per user-day collapse to 1), then each pair votes for the ≤7
-    trailing grid days it is visible in, then one exact distinct-agg
-    per grid day. Fan-out is bounded (×7) and happens after the dedupe,
-    so raw events never replicate. A range self-join (day BETWEEN d-6
-    AND d) — what the oracle runs — would be O(days × pairs) at scale."""
-    ev = load_table(spark, sf_dir, "events")
-    pairs = ev.select(F.to_date("ts").alias("day"), "user_id").distinct()
-    days = pairs.select("day").distinct()
-    grid = pairs.withColumn(
-        "grid_day", F.explode(F.sequence(F.col("day"), F.date_add(F.col("day"), 6)))
+def j9_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Schema evolution without rewriting history: the merge batch
+    carries a column the table has never seen (``tag``); with
+    ``evolve_schema=True`` the column joins the snapshot schema, rows in
+    data files the merge did NOT touch project it as null via the
+    manifest schema on read (operators/lakehouse.py:read) — no old file
+    is rewritten, no mergeSchema footer sweep. The oracle is the plain
+    full-outer join where target-only rows carry tag NULL."""
+    tbl, _root, cut = _build_table(spark, sf_dir)
+    batch = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") <= cut)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            "o_custkey",
+            F.lit("U").alias("o_orderstatus"),
+            F.concat(F.lit("t"), F.col("o_orderkey").cast("string")).alias("tag"),
+        )
     )
-    counts = grid.groupBy("grid_day").agg(
-        F.count_distinct("user_id").alias("users_7d")
+    tbl.merge(
+        batch,
+        keys=["k"],
+        update_cols=["o_orderstatus", "tag"],
+        evolve_schema=True,
+        # batch keys are BY CONSTRUCTION in [min_key, cut] — a complete
+        # cover known without a Spark job (see _standard_merge)
+        source_intervals=[(_key_minmax(sf_dir)[0], cut)],
     )
-    return days.join(counts, days.day == counts.grid_day).select(
-        F.date_format(days.day, "yyyy-MM-dd").alias("day"), "users_7d"
+    return tbl.read().select("k", "o_custkey", "o_orderstatus", "tag")
+
+
+@register("j10_lakehouse_compaction", sql=_MERGED_SQL)
+def j10_lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OPTIMIZE after MERGE: compaction bin-packs the post-merge
+    snapshot (untouched-by-reference files + fresh merge output) into 4
+    files and commits a new snapshot — the graded rows prove compaction
+    is content-neutral (same oracle as j6), while `history()` records
+    create → merge → compact. At 100 TB this is the periodic pass that
+    keeps streaming-ingest file counts bounded so manifest pruning and
+    scan planning stay cheap."""
+    tbl, _root, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, spark, sf_dir, cut)
+    tbl.compact(target_files=4)
+    assert [m["operation"] for m in tbl.history()] == ["create", "merge", "compact"]
+    return _final_select(tbl.read())
+
+
+@register("j11_streamed_lakehouse_merge", sql=_MERGED_SQL)
+def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lakehouse as a STREAMING sink: the merge batch lands as two
+    key-disjoint files, a foreachBatch stream applies each micro-batch
+    through LakehouseTable.merge (touched-file pruning per batch), and
+    the final snapshot must equal the one-shot MERGE oracle — the
+    at-least-once + idempotent-upsert contract (T3) carried onto the
+    table format. Key-disjoint batches commute, so arrival order cannot
+    perturb the graded rows."""
+    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
+
+    tbl, _root, cut = _build_table(spark, sf_dir)
+    stage = scratch_dir("lh_stream_")
+    batch = _batch_df(spark, sf_dir, cut)
+    land = f"{stage}/land"
+    for m in range(2):
+        batch.filter(F.col("k") % 2 == m).coalesce(1).write.mode(
+            "append"
+        ).parquet(land)
+
+    def apply_batch(bdf: DataFrame, _bid: int) -> None:
+        tbl.merge(
+            bdf,
+            keys=["k"],
+            update_cols=["o_totalprice", "o_orderstatus"],
+            delete_condition=F.col("o_custkey") % 7 == 0,
+        )
+
+    src = (
+        spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(land)
     )
+    run_once(src, apply_batch)
+    return _final_select(tbl.read())
 
 
 # ---------------------------------------------------------------------------
-# hierarchical percent-of-parent rollup
+# j12: two concurrent writers — both commits must survive
+# ---------------------------------------------------------------------------
+
+_J12_SQL = f"""
+WITH cut AS (
+  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
+), t AS (
+  SELECT o_orderkey AS k, o_custkey, o_totalprice, o_orderstatus
+  FROM orders WHERE o_orderkey % 4 <> 3
+), s AS (
+  SELECT o_orderkey AS k, o_custkey,
+         o_totalprice + 1000.0 AS o_totalprice,
+         'U' AS o_orderstatus,
+         (o_custkey % 7 = 0) AS del
+  FROM orders, cut WHERE o_orderkey <= cut.c
+), m AS (
+  SELECT coalesce(t.k, s.k) AS k,
+         coalesce(t.o_custkey, s.o_custkey) AS o_custkey,
+         CASE WHEN s.k IS NULL THEN t.o_totalprice ELSE s.o_totalprice END AS o_totalprice,
+         CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
+         s.k IS NOT NULL AND s.del AS del
+  FROM t FULL JOIN s ON t.k = s.k
+  WHERE s.k IS NULL OR NOT s.del
+), b AS (
+  SELECT o_orderkey AS k, o_custkey, o_totalprice, 'N' AS o_orderstatus
+  FROM orders, cut WHERE o_orderkey % 4 = 3 AND o_orderkey > cut.c * 8
+)
+SELECT k, o_custkey, {round6_sql('o_totalprice')} AS total_r, o_orderstatus FROM m
+UNION ALL
+SELECT k, o_custkey, {round6_sql('o_totalprice')} AS total_r, o_orderstatus FROM b
+"""
+
+
+def _writer_b_batch(spark: SparkSession, sf_dir: str, cut: int) -> DataFrame:
+    """Pure inserts, key-disjoint from writer A's decile batch: the
+    high-key tail of the keys the base table excludes."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .filter((F.col("o_orderkey") % 4 == 3) & (F.col("o_orderkey") > cut * 8))
+        .select(
+            F.col("o_orderkey").alias("k"),
+            "o_custkey",
+            "o_totalprice",
+            F.lit("N").alias("o_orderstatus"),
+        )
+    )
+
+
+@register("j12_lakehouse_concurrent_merge", sql=_J12_SQL)
+def j12_lakehouse_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Optimistic concurrency on the graded path: writer A's merge is
+    interrupted at the instant before it publishes by writer B's whole
+    merge (a second handle on the same table) committing first. A's
+    put-if-absent ``os.link`` fails with :class:`CommitConflictError`,
+    A reclaims its orphaned attempt, re-reads the FRESH snapshot,
+    recomputes the touched-file set, and retries — so the final table
+    contains BOTH writers' changes as versions 2 and 3 (the Delta/
+    Iceberg commit-conflict contract; the pre-fix ``os.rename`` would
+    have silently erased B's commit). The batches are key-disjoint, so
+    the outcome is order-independent and the oracle is the one-shot
+    composition of both merges over the base.
+
+    Scale: conflict resolution costs one manifest re-read plus a replay
+    of the LOSER's batch-sized work — never a table rewrite; winners
+    pay nothing."""
+    tbl_a, root, cut = _build_table(spark, sf_dir)
+    tbl_b = LakehouseTable(spark, root)
+    try:
+        batch_b = _writer_b_batch(spark, sf_dir, cut)
+        fired = {"done": False}
+        orig_commit = tbl_a._commit
+
+        def racing_commit(self, version, operation, files, schema_json=None):
+            if operation == "merge" and not fired["done"]:
+                fired["done"] = True
+                tbl_b.merge(batch_b, keys=["k"])
+            return orig_commit(version, operation, files, schema_json=schema_json)
+
+        tbl_a._commit = types.MethodType(racing_commit, tbl_a)
+        tbl_a.merge(
+            _batch_df(spark, sf_dir, cut),
+            keys=["k"],
+            update_cols=["o_totalprice", "o_orderstatus"],
+            delete_condition=F.col("o_custkey") % 7 == 0,
+        )
+        assert fired["done"] and tbl_a.current_version() == 3
+        assert [m["operation"] for m in tbl_a.history()] == ["create", "merge", "merge"]
+        return _final_select(tbl_a.read()).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# j13: vacuum retention — current snapshot intact, horizon enforced
+# ---------------------------------------------------------------------------
+
+
+@register("j13_lakehouse_vacuum", sql=_MERGED_SQL)
+def j13_lakehouse_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """VACUUM on the graded path: merge → compact → vacuum(retain 1)
+    reclaims every data file referenced only by the create/merge
+    snapshots, then the graded rows are the post-vacuum CURRENT read —
+    same oracle as the merge itself, proving vacuum never touches live
+    files. Time travel past the horizon raises a clear 'vacuumed'
+    error (asserted here) and history() starts at the horizon instead
+    of crashing — the retention contract every lakehouse documents.
+
+    Scale: vacuum is manifest-diff + file deletes — O(files reclaimed)
+    metadata ops, no data read."""
+    tbl, root, cut = _build_table(spark, sf_dir)
+    try:
+        tbl.merge(
+            _batch_df(spark, sf_dir, cut),
+            keys=["k"],
+            update_cols=["o_totalprice", "o_orderstatus"],
+            delete_condition=F.col("o_custkey") % 7 == 0,
+        )
+        tbl.compact(target_files=4)
+        dropped = tbl.vacuum(retain_versions=1)
+        assert dropped, "superseded create/merge files must be reclaimed"
+        assert [m["version"] for m in tbl.history()] == [3]
+        try:
+            tbl.read(version=1)
+            raise AssertionError("time travel past the vacuum horizon must raise")
+        except ValueError as e:
+            assert "vacuumed" in str(e)
+        return _final_select(tbl.read()).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# j14: WHEN-MATCHED-only merge (insert=False) with full pruning
 # ---------------------------------------------------------------------------
 
 
 @register(
-    "pct_of_parent_rollup",
+    "j14_lakehouse_matched_only_merge",
     sql=f"""
-WITH rev AS (
-  SELECT r.r_name AS region, n.n_name AS nation,
-         sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,4)))
-           AS nrev
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  GROUP BY r.r_name, n.n_name
-)
-SELECT region, nation, CAST(nrev AS DOUBLE) AS revenue,
-       {round6_sql("CAST(nrev AS DOUBLE)"
-                   " / CAST(sum(nrev) OVER (PARTITION BY region) AS DOUBLE)")}
-         AS pct_of_region,
-       {round6_sql("CAST(nrev AS DOUBLE) / CAST(sum(nrev) OVER () AS DOUBLE)")}
-         AS pct_of_total
-FROM rev
+SELECT o_orderkey AS k, o_custkey,
+       {round6_sql('o_totalprice')} AS total_r, o_orderstatus
+FROM orders WHERE o_orderkey % 4 <> 3
 """,
 )
-def pct_of_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percent-of-parent at two hierarchy levels (nation→region→total)
-    — the drill-down share metric every BI rollup needs. The heavy
-    lifting is one fact-side aggregation down to |nations| rows;
-    the share windows then run over 25 rows, so partitioning the
-    windows is irrelevant — the design point is aggregating BEFORE
-    windowing, never windowing the fact table. Dimension joins
-    broadcast; lineitem⋈orders is the one key shuffle, and the
-    revenue sums ride DECIMAL so shares are order-exact."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    rev = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
-            ).alias("nrev")
+def j14_lakehouse_matched_only_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE with insert=False whose batch is key-disjoint from the
+    whole table: manifest pruning eliminates every target file, and the
+    WHEN-MATCHED-only contract means NO source row may appear — the
+    committed snapshot is byte-identical to the base (the ADVICE r03
+    fast-path fix: pre-fix, the no-hit branch inserted the whole batch
+    regardless of ``insert``). The batch also carries a column the
+    table lacks, proving the committed schema stays the TABLE's instead
+    of narrowing/widening to the source's. The oracle is the untouched
+    base table."""
+    tbl, root, cut = _build_table(spark, sf_dir)
+    try:
+        mx = cut * 10
+        disjoint = (
+            load_table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderkey") <= cut)
+            .select(
+                (F.col("o_orderkey") + 10 * mx).alias("k"),  # beyond every stat range
+                "o_custkey",
+                F.lit(0.0).alias("o_totalprice"),
+                F.lit("Z").alias("o_orderstatus"),
+                F.lit("extra").alias("not_a_table_column"),
+            )
         )
-    )
-    w_region = Window.partitionBy("region")
-    w_all = Window.partitionBy()
-    nd = F.col("nrev").cast("double")
-    return rev.select(
-        "region",
-        "nation",
-        nd.alias("revenue"),
-        round6(nd / F.sum("nrev").over(w_region).cast("double")).alias(
-            "pct_of_region"
-        ),
-        round6(nd / F.sum("nrev").over(w_all).cast("double")).alias(
-            "pct_of_total"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# replica checksum reconciliation
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "table_checksum_reconciliation",
-    sql=f"""
-WITH fp AS (
-  SELECT CAST(ts AS DATE) AS day,
-         md5(concat_ws('|', event_id, epoch_us(ts), user_id, event_type,
-                       {CENTS_SQL}, props)) AS fp
-  FROM events
-)
-SELECT strftime(day, '%Y-%m-%d') AS day, count(*) AS n_rows,
-       count(DISTINCT fp) AS n_distinct, min(fp) AS min_fp, max(fp) AS max_fp
-FROM fp GROUP BY day
-""",
-)
-def table_checksum_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-addressed partition checksums — the anti-entropy audit
-    for verifying two replicas (or a migration source/target) hold the
-    same rows without shipping data: compare per-day (count, distinct,
-    min, max) row-fingerprint summaries and re-sync only days that
-    differ. Fingerprints are md5 over a canonical '|'-joined encoding
-    (ints as decimal strings, timestamps as epoch-µs, money as cents)
-    so ANY engine reproduces them byte-for-byte — which is exactly what
-    the oracle proves. Scale: embarrassingly parallel scan + one
-    day-keyed agg; min/max/count are algebraic so partials combine."""
-    ev = load_table(spark, sf_dir, "events")
-    fp = F.md5(
-        F.concat_ws(
-            "|",
-            F.col("event_id"),
-            F.unix_micros("ts"),
-            F.col("user_id"),
-            F.col("event_type"),
-            cents(),
-            F.col("props"),
+        tbl.merge(
+            disjoint,
+            keys=["k"],
+            update_cols=["o_totalprice", "o_orderstatus"],
+            insert=False,
         )
+        assert tbl.current_version() == 2
+        pruned, total = tbl.last_merge_pruned
+        assert pruned == total, "disjoint batch must prune every file"
+        return _final_select(tbl.read()).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+_J15_SQL = f"""
+WITH cut AS (
+  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
+), t AS (
+  SELECT o_orderkey AS k, o_totalprice, o_orderstatus
+  FROM orders WHERE o_orderkey % 4 <> 3
+), s AS (
+  SELECT o_orderkey AS k, o_custkey,
+         o_totalprice + 1000.0 AS o_totalprice,
+         'U' AS o_orderstatus,
+         (o_custkey % 7 = 0) AS del
+  FROM orders, cut WHERE o_orderkey <= cut.c
+), m AS (
+  SELECT coalesce(t.k, s.k) AS k,
+         CASE WHEN s.k IS NULL THEN t.o_totalprice ELSE s.o_totalprice END AS o_totalprice,
+         CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
+         s.k IS NOT NULL AND s.del AS del
+  FROM t FULL JOIN s ON t.k = s.k
+  WHERE s.k IS NULL OR NOT s.del
+)
+SELECT coalesce(t.k, m.k) AS k,
+       CASE WHEN t.k IS NULL THEN 'insert'
+            WHEN m.k IS NULL THEN 'delete'
+            ELSE 'update' END AS change_type,
+       {round6_sql('t.o_totalprice')} AS old_total_r,
+       {round6_sql('m.o_totalprice')} AS new_total_r,
+       t.o_orderstatus AS old_status,
+       m.o_orderstatus AS new_status
+FROM t FULL JOIN m ON t.k = m.k
+WHERE t.k IS NULL OR m.k IS NULL
+   OR t.o_totalprice <> m.o_totalprice
+   OR t.o_orderstatus <> m.o_orderstatus
+"""
+
+
+@register("j15_lakehouse_snapshot_diff", sql=_J15_SQL)
+def j15_lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Change-data-feed read: the row-level diff between two committed
+    snapshots of the lakehouse table (v1 = create, v2 = the pruned
+    MERGE), classified insert / update / delete with old and new
+    values — Delta's table_changes / Iceberg's changelog scan derived
+    from time travel alone, so ANY two retained versions can be
+    diffed after the fact (no CDC capture at write time required).
+    The oracle recomputes both states from orders and diffs them.
+
+    Scale: one full-outer join of the two snapshot reads, keyed on the
+    primary key. With the manifest at hand this prunes to the files
+    that CHANGED between the versions (identical carried-by-reference
+    files cannot contribute diff rows — same file ⇒ same rows on both
+    sides); here both snapshots are read in full because the graded
+    contract is the row-level result, and the join is the one
+    irreducible shuffle either way."""
+    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    old = tbl.read(version=1).select(
+        F.col("k").alias("k_old"),
+        F.col("o_totalprice").alias("p_old"),
+        F.col("o_orderstatus").alias("s_old"),
+    )
+    new = tbl.read(version=2).select(
+        F.col("k").alias("k_new"),
+        F.col("o_totalprice").alias("p_new"),
+        F.col("o_orderstatus").alias("s_new"),
     )
     return (
-        ev.select(F.to_date("ts").alias("day"), fp.alias("fp"))
-        .groupBy("day")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.count_distinct("fp").alias("n_distinct"),
-            F.min("fp").alias("min_fp"),
-            F.max("fp").alias("max_fp"),
+        old.join(new, old.k_old == new.k_new, "full_outer")
+        .filter(
+            F.col("k_old").isNull()
+            | F.col("k_new").isNull()
+            | (F.col("p_old") != F.col("p_new"))
+            | (F.col("s_old") != F.col("s_new"))
         )
         .select(
-            F.date_format("day", "yyyy-MM-dd").alias("day"),
-            "n_rows",
-            "n_distinct",
-            "min_fp",
-            "max_fp",
+            F.coalesce("k_old", "k_new").alias("k"),
+            F.when(F.col("k_old").isNull(), "insert")
+            .when(F.col("k_new").isNull(), "delete")
+            .otherwise("update")
+            .alias("change_type"),
+            round6(F.col("p_old")).alias("old_total_r"),
+            round6(F.col("p_new")).alias("new_total_r"),
+            F.col("s_old").alias("old_status"),
+            F.col("s_new").alias("new_status"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# j16: merge-on-read equality delete
+# ---------------------------------------------------------------------------
+
+_J16_SQL = f"""
+WITH t AS (
+  SELECT o_orderkey AS k, o_custkey, o_totalprice, o_orderstatus
+  FROM orders WHERE o_orderkey % 4 <> 3
+)
+SELECT k, o_custkey, {round6_sql('o_totalprice')} AS total_r, o_orderstatus,
+       0 AS files_rewritten
+FROM t WHERE o_custkey % 5 <> 0
+"""
+
+
+@register("j16_lakehouse_merge_on_read_delete", sql=_J16_SQL)
+def j16_lakehouse_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Merge-on-read DELETE: ``delete_where`` commits a key-tombstone
+    file and the new snapshot's DATA file list is byte-identical to the
+    parent's — the graded ``files_rewritten`` column is computed from
+    the two manifests and must hash as 0, proving no data bytes were
+    rewritten (Iceberg equality deletes / Delta deletion vectors,
+    key-level form). ``read()`` anti-joins the broadcast-sized
+    tombstones; compaction (graded separately in j10) is what
+    eventually folds them in.
+
+    Scale: the delete costs one column-pruned scan + O(matching keys)
+    written; read amplification is one broadcast anti-join until the
+    next compaction — the standard merge-on-read trade, measured here
+    instead of asserted."""
+    tbl, root, _cut = _build_table(spark, sf_dir)
+    try:
+        before = [f["path"] for f in tbl.manifest()["file_list"]]
+        tbl.delete_where(F.col("o_custkey") % 5 == 0, keys=["k"])
+        after = [f["path"] for f in tbl.manifest()["file_list"]]
+        rewritten = len(set(before) ^ set(after))
+        out = _final_select(tbl.read()).withColumn(
+            "files_rewritten", F.lit(rewritten)
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# j17: write-audit-publish
+# ---------------------------------------------------------------------------
+
+_J17_SQL = f"""
+SELECT o_orderkey AS k, o_custkey, {round6_sql('o_totalprice')} AS total_r,
+       o_orderstatus, 1 AS main_was_unchanged
+FROM orders
+"""
+
+
+@register("j17_lakehouse_write_audit_publish", sql=_J17_SQL)
+def j17_lakehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write-audit-publish on the manifest table: the missing quarter
+    of orders lands as a STAGED append (data files written, no commit),
+    an audit confirms the main snapshot is byte-identical to before
+    (the graded ``main_was_unchanged`` flag hashes as 1) while
+    ``read_staged`` already sees the union, then ``publish`` adds the
+    staged files with a metadata-only optimistic commit — Iceberg's WAP
+    pattern, the safe-ingestion topology where bad batches are caught
+    before any reader can observe them.
+
+    Scale: staging cost = the append's write; the audit reads whatever
+    the validation query needs; publish moves ZERO data bytes (one
+    manifest link)."""
+    tbl, root, _cut = _build_table(spark, sf_dir)
+    try:
+        base_rows = tbl.read().count()
+        staged_batch = (
+            load_table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderkey") % 4 == 3)
+            .select(
+                F.col("o_orderkey").alias("k"),
+                "o_custkey",
+                "o_totalprice",
+                "o_orderstatus",
+            )
+        )
+        token = tbl.stage_append(staged_batch)
+        unchanged = int(tbl.read().count() == base_rows)
+        staged_total = tbl.read_staged(token).count()
+        tbl.publish(token)
+        out = _final_select(tbl.read()).withColumn(
+            "main_was_unchanged",
+            F.lit(unchanged * int(tbl.read().count() == staged_total)),
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# Z-order clustering: multi-dimensional file skipping from 1-D stats
+# ---------------------------------------------------------------------------
+
+_ZORDER_BITS = 8  # 256x256 z-grid; z in [0, 65536)
+_ZORDER_FILES = 16
+
+_J18_SQL = """
+WITH r AS (
+  SELECT min(o_orderkey) AS lo1, max(o_orderkey) AS hi1,
+         min(o_custkey)  AS lo2, max(o_custkey)  AS hi2
+  FROM orders
+)
+SELECT o_orderstatus,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(o_orderkey) AS BIGINT) AS sum_k1,
+       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust
+FROM orders, r
+WHERE o_orderkey <= r.lo1 + (r.hi1 - r.lo1) // 8
+  AND o_custkey  <= r.lo2 + (r.hi2 - r.lo2) // 8
+GROUP BY o_orderstatus
+"""
+
+_ZORDER_TABLES: dict[str, tuple] = {}
+
+
+def _zorder_table(spark: SparkSession, sf_dir: str):
+    """Process-shared z-clustered orders table: files are key-range
+    buckets of z = morton(o_orderkey, o_custkey), so every file's
+    manifest stats bound BOTH keys to a rectangle."""
+    got = _ZORDER_TABLES.get(sf_dir)
+    if got is not None:
+        import os
+
+        if os.path.isdir(got[1]):
+            return got
+    from pyspark.sql import functions as F
+
+    from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2_scaled
+    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
+        LakehouseTable,
+    )
+
+    lo1, hi1 = _key_range(sf_dir, "o_orderkey")
+    lo2, hi2 = _key_range(sf_dir, "o_custkey")
+    df = (
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_orderstatus")
+        .withColumn(
+            "z",
+            zorder2_scaled(
+                F.col("o_orderkey"), lo1, hi1,
+                F.col("o_custkey"), lo2, hi2,
+                _ZORDER_BITS,
+            ),
+        )
+    )
+    zmax = 1 << (2 * _ZORDER_BITS)
+    boundaries = [zmax * i // _ZORDER_FILES for i in range(1, _ZORDER_FILES)]
+    root = scratch_dir("zorder_")
+    tbl = LakehouseTable.create_bucketed(
+        df,
+        root,
+        key="z",
+        boundaries=boundaries,
+        stats_cols=["z", "o_orderkey", "o_custkey"],
+    )
+    box = (
+        (lo1, lo1 + (hi1 - lo1) // 8),
+        (lo2, lo2 + (hi2 - lo2) // 8),
+    )
+    _ZORDER_TABLES[sf_dir] = (tbl, root, box)
+    return _ZORDER_TABLES[sf_dir]
+
+
+@register("j18_lakehouse_zorder_skipping", _J18_SQL)
+def j18_lakehouse_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-dimensional file skipping via Z-ORDER clustering
+    (functions/zorder.py + operators/lakehouse.py — Delta's OPTIMIZE
+    ZORDER BY in manifest-table form): orders is written as key-range
+    buckets of the Morton code of (o_orderkey, o_custkey), so each
+    file's plain per-column min/max stats bound a RECTANGLE in key
+    space, and a 2-D box predicate prunes files on BOTH columns —
+    range-clustering on one key alone would scan every file for any
+    second-key predicate. The graded rows are the bounded scan + exact
+    row filter, matched against the oracle's full-table filter; the
+    pruning ratio itself is pinned in tests/test_breadth_r100.py
+    (box of 1/64 of the key plane → a strict minority of the 16 files
+    opened).
+
+    Scale: the z-value is five shift-or-mask ops per key inside
+    whole-stage codegen (no UDF); the write is the one-job exact-slot
+    bucketed writer; the scan is manifest-stat pruning — at 100 TB the
+    2-D box reads O(box-overlapping z-tiles), not O(table)."""
+    from pyspark.sql import functions as F
+
+    tbl, _root, box = _zorder_table(spark, sf_dir)
+    (k1lo, k1hi), (k2lo, k2hi) = box
+    pruned = tbl.scan({"o_orderkey": (k1lo, k1hi), "o_custkey": (k2lo, k2hi)})
+    return (
+        pruned.filter(
+            F.col("o_orderkey").between(k1lo, k1hi)
+            & F.col("o_custkey").between(k2lo, k2hi)
+        )
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("o_orderkey").cast("long").alias("sum_k1"),
+            F.count_distinct("o_custkey").cast("long").alias("n_cust"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# metadata-only aggregation: count/min/max answered from the manifest
+# ---------------------------------------------------------------------------
+
+_J19_SQL = """
+SELECT CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(min(o_orderkey) AS BIGINT) AS min_k,
+       CAST(max(o_orderkey) AS BIGINT) AS max_k
+FROM orders
+WHERE o_orderkey % 4 <> 3
+"""
+
+
+@register("j19_metadata_only_agg", _J19_SQL)
+def j19_metadata_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Metadata-only aggregation (Iceberg's scan-less COUNT/MIN/MAX,
+    Delta's stats-backed ANSWER FROM METADATA): count(*), min(key),
+    max(key) over the lakehouse snapshot are read from the MANIFEST —
+    per-file row counts summed, per-file [lo, hi] stats folded — with
+    ZERO data files opened and zero Spark jobs. At 100 TB this is the
+    difference between a millisecond catalog lookup and a full-table
+    scan; correctness holds because the same commit protocol that
+    publishes the files publishes their exact stats (the collision
+    guard in _write_bucketed_files falls back to the per-file harvest
+    precisely so manifest stats NEVER disagree with the bytes on disk).
+    The oracle recomputes the aggregates by scanning the raw table."""
+    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    man = tbl.manifest(1)  # v1 = the base snapshot (orders, %4 <> 3)
+    entries = man["file_list"]
+    n_rows = sum(e["rows"] for e in entries)
+    lo = min(e["stats"]["k"][0] for e in entries)
+    hi = max(e["stats"]["k"][1] for e in entries)
+    return spark.createDataFrame(
+        [(n_rows, int(lo), int(hi))], "n_rows long, min_k long, max_k long"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Z-order on the TELEMETRY domain: (device, time) silver-signal layout
+# ---------------------------------------------------------------------------
+#
+# j18 proves the z-order mechanism on TPC-H keys; the reference's actual
+# 100 TB pain point is the (device_id, ts) signal scan (SURVEY §1.3):
+# "give me channel X for device set D over time range T". A layout
+# clustered on time alone scans every device's files for any device
+# predicate, and vice versa. Clustering files by the Morton code of
+# (device_hash, ts_sec) bounds every file's extent in BOTH dimensions,
+# so a (device-set x time-range) read prunes with plain 1-D min/max
+# manifest stats on each.
+
+_ZSIG_BITS = 8
+_ZSIG_FILES = 16
+_ZSIG_HASH_MOD = 1 << 16
+# the graded cohort + window: 3 devices (present at every SF — user ids
+# are dense from 0), one week of the ~30-day span
+_ZSIG_DEVICES = (7, 23, 101)
+_ZSIG_T0 = "2024-01-08 00:00:00"
+_ZSIG_T1 = "2024-01-15 00:00:00"
+
+_J20_SQL = f"""
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents,
+       CAST(count(DISTINCT user_id) AS BIGINT) AS n_devices
+FROM events
+WHERE user_id IN {_ZSIG_DEVICES}
+  AND ts >= TIMESTAMP '{_ZSIG_T0}' AND ts < TIMESTAMP '{_ZSIG_T1}'
+GROUP BY event_type
+"""
+
+_ZSIG_TABLES: dict[str, tuple] = {}
+
+
+def _footer_ts_extent_utc(sf_dir: str) -> tuple[int, int]:
+    """[t_lo, t_hi) whole-second extent of events.ts from the parquet
+    footer row-group stats (zero Spark jobs, same stats discipline as
+    j18's _key_range). Footer stat datetimes are naive UTC; calling
+    .timestamp() on them naive applies the MACHINE timezone and shifts
+    the extent off the UTC-epoch ts_sec domain on non-UTC hosts
+    (ADVICE r08) — pin tzinfo=UTC explicitly, matching _zsig_window."""
+    import os as _os
+    from datetime import timezone as _tz
+
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(_os.path.join(sf_dir, "events.parquet")).metadata
+    idx = next(i for i in range(meta.num_columns) if meta.schema.column(i).name == "ts")
+    stats = [
+        meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)
+    ]
+    t_lo = int(min(s.min for s in stats).replace(tzinfo=_tz.utc).timestamp())
+    t_hi = int(max(s.max for s in stats).replace(tzinfo=_tz.utc).timestamp()) + 1
+    return t_lo, t_hi
+
+
+def _zsignals_table(spark: SparkSession, sf_dir: str):
+    """Process-shared z-clustered telemetry table: files are key-range
+    buckets of z = morton(device_hash, ts_sec), so each file's manifest
+    stats bound a (device-hash x time) rectangle."""
+    got = _ZSIG_TABLES.get(sf_dir)
+    if got is not None:
+        import os
+
+        if os.path.isdir(got[1]):
+            return got
+    from pyspark.sql import functions as F
+
+    from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2_scaled
+    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
+        LakehouseTable,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    dev_hash = F.pmod(F.xxhash64("user_id"), F.lit(_ZSIG_HASH_MOD)).cast("long")
+    ts_sec = F.floor(F.unix_micros("ts") / F.lit(1_000_000)).cast("long")
+    base = ev.select(
+        "user_id",
+        dev_hash.alias("device_hash"),
+        ts_sec.alias("ts_sec"),
+        # exact event time survives into the silver layout so temporal
+        # operators (j22's W2 sessionization) reproduce the flat-layout
+        # result bit-for-bit; clustering/stats still use ts_sec
+        F.unix_micros("ts").alias("ts_us"),
+        "event_type",
+        "value",
+    )
+    t_lo, t_hi = _footer_ts_extent_utc(sf_dir)
+    df = base.withColumn(
+        "z",
+        zorder2_scaled(
+            F.col("device_hash"), 0, _ZSIG_HASH_MOD - 1,
+            F.col("ts_sec"), t_lo, t_hi,
+            _ZSIG_BITS,
+        ),
+    )
+    zmax = 1 << (2 * _ZSIG_BITS)
+    boundaries = [zmax * i // _ZSIG_FILES for i in range(1, _ZSIG_FILES)]
+    root = scratch_dir("zsignals_")
+    tbl = LakehouseTable.create_bucketed(
+        df,
+        root,
+        key="z",
+        boundaries=boundaries,
+        stats_cols=["z", "device_hash", "ts_sec"],
+    )
+    # the cohort's hash points, from one bounded 3-row job (the hash is
+    # a JVM expression; nothing data-sized is collected)
+    hashes = {
+        r.user_id: r.h
+        for r in spark.createDataFrame(
+            [(d,) for d in _ZSIG_DEVICES], "user_id long"
+        )
+        .select("user_id", F.pmod(F.xxhash64("user_id"), F.lit(_ZSIG_HASH_MOD)).cast("long").alias("h"))
+        .collect()
+    }
+    _ZSIG_TABLES[sf_dir] = (tbl, root, hashes, (t_lo, t_hi))
+    return _ZSIG_TABLES[sf_dir]
+
+
+def _zsig_window() -> tuple[int, int]:
+    from datetime import datetime, timezone
+
+    to_s = lambda s: int(
+        datetime.strptime(s, "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc).timestamp()
+    )
+    return to_s(_ZSIG_T0), to_s(_ZSIG_T1)
+
+
+@register("j20_telemetry_zorder_scan", _J20_SQL)
+def j20_telemetry_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(device-set x time-range) signal read over the z-clustered
+    telemetry layout: the cohort's per-device (device_hash point x
+    week) bounds prune files as a DISJUNCTION — scan_any opens the
+    deduped union of overlapping files in ONE reader (k point-lookups
+    cost one scan job, not k scans + a union) — then the exact row
+    filter and one aggregate. The oracle runs the same predicate over
+    the raw events table — identical rows prove the pruned read lost
+    nothing; tests/test_breadth_r100.py pins the pruning ratio (each
+    point-scan opens a strict minority of the 16 files) and that the
+    cohort union covers exactly.
+
+    Scale: this is the reference's hot path at 100 TB — the z layout
+    answers a device-cohort week from O(cohort x overlapping z-tiles)
+    files, where a pure time layout reads the whole fleet's week and a
+    pure device layout reads each device's full history."""
+    from pyspark.sql import functions as F
+
+    tbl, _root, hashes, _ext = _zsignals_table(spark, sf_dir)
+    w0, w1 = _zsig_window()
+    cohort = tbl.scan_any(
+        [
+            {"device_hash": (h, h), "ts_sec": (w0, w1 - 1)}
+            for h in hashes.values()
+        ]
+    ).filter(
+        F.col("user_id").isin(*_ZSIG_DEVICES)
+        & (F.col("ts_sec") >= w0)
+        & (F.col("ts_sec") < w1)
+    )
+    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
+    return cohort.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(cents).cast("long").alias("sum_cents"),
+        F.count_distinct("user_id").cast("long").alias("n_devices"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# metadata count WITH RESIDUAL: predicate-bearing count from stats
+# ---------------------------------------------------------------------------
+
+_J21_SQL = """
+SELECT CAST(count(*) AS BIGINT) AS n_rows
+FROM orders
+WHERE o_orderkey % 4 <> 3
+  AND o_orderkey <= (SELECT max(o_orderkey) // 2 FROM orders)
+"""
+
+
+@register("j21_metadata_count_residual", _J21_SQL)
+def j21_metadata_count_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Predicate-bearing metadata count (Iceberg's count-with-residual,
+    VERDICT r07 next-step 6): count rows with o_orderkey in the lower
+    HALF of the key space over the range-clustered lakehouse snapshot.
+    Files fully inside the range are counted from manifest row counts
+    (zero bytes read); only the boundary file(s) straddling the cut get
+    an exact residual scan — tests/test_breadth_r100.py pins <= 2 data
+    files opened and boobytraps the full-table read. The oracle
+    recomputes the count by scanning raw orders.
+
+    Scale: a half-keyspace count at 100 TB is O(boundary files) = ~1
+    file per range endpoint for a range-clustered layout, vs half the
+    table for a scan — the same stats-fold as j19 but composable with
+    arbitrary key-range predicates."""
+    from pyspark.sql import functions as F
+
+    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    man = tbl.manifest(1)
+    # the midpoint mirrors the oracle's subquery over RAW orders (the
+    # table filters k % 4 <> 3, whose max may differ), so it comes from
+    # the raw parquet footer — exact int64 stats, zero Spark jobs
+    _, k_hi = _key_range(sf_dir, "o_orderkey")
+    k_lo = min(e["stats"]["k"][0] for e in man["file_list"])
+    mid = k_hi // 2
+    full_rows, residual, _n_boundary = tbl.count_where_range("k", k_lo, mid, version=1)
+    res = residual.filter(F.col("k") <= mid).agg(
+        (F.count(F.lit(1)) + F.lit(full_rows)).cast("long").alias("n_rows")
+    )
+    return res
+
+
+# ---------------------------------------------------------------------------
+# z-ordered SILVER layout under a temporal operator (VERDICT r08 #7)
+# ---------------------------------------------------------------------------
+
+def _j22_sql() -> str:
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
+        STATIONARY_MIN_DUR_S,
+        STATIONARY_THRESHOLD,
+        STATIONARY_TRIM_S,
+    )
+
+    trim_us = int(STATIONARY_TRIM_S * 1e6)
+    min_us = int(STATIONARY_MIN_DUR_S * 1e6)
+    return f"""
+WITH f AS (
+  SELECT user_id, ts, value FROM events
+  WHERE user_id IN {_ZSIG_DEVICES}
+    AND ts >= TIMESTAMP '{_ZSIG_T0}' AND ts < TIMESTAMP '{_ZSIG_T1}'
+),
+z AS (
+  SELECT user_id, ts,
+         CASE WHEN value <= {STATIONARY_THRESHOLD} THEN 1 ELSE 0 END AS zz
+  FROM f
+), c AS (
+  SELECT user_id, ts, zz,
+         CASE WHEN zz <> lag(zz, 1, -1) OVER (PARTITION BY user_id ORDER BY ts)
+              THEN 1 ELSE 0 END AS chg
+  FROM z
+), r AS (
+  SELECT user_id, ts, zz,
+         sum(chg) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS run_id
+  FROM c
+), g AS (
+  SELECT user_id, min(epoch_us(ts)) AS s_us, max(epoch_us(ts)) AS e_us
+  FROM r WHERE zz = 1 GROUP BY user_id, run_id
+)
+SELECT user_id,
+       s_us + {trim_us} AS start_us,
+       e_us - {trim_us} AS end_us,
+       round((e_us - s_us) / 1e6, 6) AS duration_s
+FROM g
+WHERE e_us - s_us >= {min_us}
+"""
+
+
+def j22_zorder_silver_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W2 zero-run sessionization for a device cohort, read from the
+    z-clustered SILVER telemetry table instead of the flat events scan
+    (SURVEY §7.2 M6: the silver signals(device, ts) zone ships
+    z-ordered with the scan_any read path under the W1/W2-shaped
+    queries). The cohort's (device-hash point x week) bounds prune the
+    morton-bucketed files as a disjunction; the exact row filter and
+    the SAME stationary_intervals operator as w2_stationary_intervals
+    run on the survivors — the silver layout carries exact ts_us, so
+    the intervals are bit-identical to the flat-layout plan
+    (tests/test_breadth_r100.py pins equality AND the pruning ratio).
+    The oracle sessionizes the raw events table under the identical
+    cohort/window predicate.
+
+    Scale: this is the reference's W2 inference shaped for 100 TB —
+    per-device weekly sessionization should open O(cohort x z-tiles)
+    files, not the fleet's week (time layout) or each device's full
+    history (device layout); the sessionization work after the prune
+    is proportional to the cohort's rows only."""
+    from pyspark.sql import functions as F
+
+    from matt3r_data_ingestion_serverless_spark.operators.stationary import (
+        stationary_intervals,
+    )
+    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
+        STATIONARY_MIN_DUR_S,
+        STATIONARY_THRESHOLD,
+        STATIONARY_TRIM_S,
+    )
+
+    tbl, _root, hashes, _ext = _zsignals_table(spark, sf_dir)
+    w0, w1 = _zsig_window()
+    cohort = tbl.scan_any(
+        [{"device_hash": (h, h), "ts_sec": (w0, w1 - 1)} for h in hashes.values()]
+    ).filter(
+        F.col("user_id").isin(*_ZSIG_DEVICES)
+        & (F.col("ts_us") >= w0 * 1_000_000)
+        & (F.col("ts_us") < w1 * 1_000_000)
+    )
+    sig = cohort.select(
+        "user_id", F.timestamp_micros("ts_us").alias("ts"), "value"
+    )
+    return stationary_intervals(
+        sig,
+        key="user_id",
+        ts="ts",
+        speed="value",
+        zero_threshold=STATIONARY_THRESHOLD,
+        min_duration_s=STATIONARY_MIN_DUR_S,
+        trim_s=STATIONARY_TRIM_S,
+    )
+
+
+register("j22_zorder_silver_stationary", _j22_sql())(j22_zorder_silver_stationary)
+
+
+# ---------------------------------------------------------------------------
+# lakehouse file-stats audit (distributed parquet footer scan)
+# ---------------------------------------------------------------------------
+
+_FS_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+_FS_SQL = "\nUNION ALL\n".join(
+    f"""SELECT '{t}' AS table_name, count(*) AS n_rows,
+       (SELECT CAST(count(*) AS INT) FROM information_schema.columns
+        WHERE table_name = '{t}') AS n_columns
+FROM {t}"""
+    for t in _FS_TABLES
+)
+
+
+@register("lakehouse_file_stats", _FS_SQL)
+def lakehouse_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed parquet FOOTER audit — the compaction planner's
+    input: every table file's row count and column count read from the
+    parquet metadata alone (no data pages decoded), via
+    `binaryFile` scan → per-file pyarrow footer parse in mapInPandas.
+    This is how a table-maintenance job inventories millions of files
+    (row-group sizing, small-file detection — sources/tables.py's
+    _maybe_compact makes exactly this decision per file) without
+    scanning a byte of column data.
+
+    The oracle cannot see file paths (it runs on registered views), so
+    it cross-checks the footer numbers against full-scan counts — the
+    footer MUST agree with the data. At scale the binaryFile listing
+    parallelizes per file and each task reads only its footer bytes."""
+    import io
+
+    import pandas as pd
+
+    paths = ",".join(f"{sf_dir}/{t}.parquet" for t in _FS_TABLES)
+
+    def parse_footers(batches):
+        for pdf in batches:
+            import pyarrow.parquet as pq
+
+            out = []
+            for path, content in zip(pdf["path"], pdf["content"]):
+                meta = pq.ParquetFile(io.BytesIO(content)).metadata
+                name = path.rsplit("/", 1)[-1].replace(".parquet", "")
+                out.append((name, meta.num_rows, meta.num_columns))
+            yield pd.DataFrame(out, columns=["table_name", "n_rows", "n_columns"])
+
+    files = spark.read.format("binaryFile").load(
+        [f"{sf_dir}/{t}.parquet" for t in _FS_TABLES]
+    )
+    return files.select("path", "content").mapInPandas(
+        parse_footers, "table_name string, n_rows long, n_columns int"
     )
 
 
@@ -263,130 +1321,4 @@ def morton_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("y").alias("min_y"),
         F.max("y").alias("max_y"),
         span.alias("minmax_span"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# incremental materialized-view maintenance (partial-aggregate merge)
-# ---------------------------------------------------------------------------
-
-_MV_CUTOFF = "2024-01-16"
-
-
-@register(
-    "ns_mv_incremental_agg",
-    sql=f"""
-SELECT user_id, count(*) AS n_events,
-       round(CAST(sum({CENTS_SQL}) AS DOUBLE) / 100.0, 6) AS total_value,
-       {round6_sql(f"CAST(sum({CENTS_SQL}) AS DOUBLE) / (100.0 * count(*))")}
-         AS avg_value,
-       min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
-FROM events GROUP BY user_id
-""",
-)
-def ns_mv_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized-view maintenance: the base segment
-    (ts before the cutoff date, i.e. "the MV as of yesterday") and the delta
-    segment are aggregated to PARTIAL states independently, then merged
-    by re-aggregating the algebraic states (count→sum, sum→sum,
-    min→min, max→max); avg is derived from merged states, never stored.
-    The oracle recomputes from all raw events — merged == recomputed is
-    the exactness proof that lets a 100 TB pipeline maintain user-level
-    aggregates by touching only each day's delta partition instead of
-    re-scanning history. Money rides integer cents, so the merge is
-    order-exact."""
-    ev = load_table(spark, sf_dir, "events")
-    seg = ev.select(
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        cents().alias("v_cents"),
-        (F.col("ts") < F.lit(_MV_CUTOFF).cast("timestamp")).alias("is_base"),
-    )
-    partial = seg.groupBy("user_id", "is_base").agg(
-        F.count("*").alias("p_n"),
-        F.sum("v_cents").alias("p_sum"),
-        F.min("ts_us").alias("p_min"),
-        F.max("ts_us").alias("p_max"),
-    )
-    merged = partial.groupBy("user_id").agg(
-        F.sum("p_n").alias("n_events"),
-        F.sum("p_sum").alias("sum_cents"),
-        F.min("p_min").alias("first_us"),
-        F.max("p_max").alias("last_us"),
-    )
-    return merged.select(
-        "user_id",
-        "n_events",
-        F.round(F.col("sum_cents").cast("double") / 100.0, 6).alias("total_value"),
-        round6(
-            F.col("sum_cents").cast("double") / (100.0 * F.col("n_events"))
-        ).alias("avg_value"),
-        "first_us",
-        "last_us",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Pareto frontier (skyline) — local-frontier-then-global composition
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "skyline_pareto_frontier",
-    sql="""
-WITH pairs AS (
-  SELECT CAST(round(p_retailprice * 100, 0) AS BIGINT) AS price_c, p_size,
-         count(*) AS n_parts
-  FROM part GROUP BY 1, 2
-)
-SELECT round(price_c / 100.0, 2) AS price, p_size AS size, n_parts
-FROM pairs p
-WHERE NOT EXISTS (
-  SELECT 1 FROM pairs q
-  WHERE q.price_c <= p.price_c AND q.p_size >= p.p_size
-    AND (q.price_c < p.price_c OR q.p_size > p.p_size))
-""",
-)
-def skyline_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto frontier (skyline): the (price, size) pairs not dominated
-    by any cheaper-and-at-least-as-large alternative — the classic
-    multi-objective shortlist. The oracle is the textbook NOT EXISTS
-    dominance test, which is O(n²); the Spark plan is the distributed
-    skyline: (1) collapse to distinct pairs, (2) LOCAL frontier per
-    hash bucket — sort (price asc, size desc) and keep rows whose size
-    exceeds the running max of all earlier rows (a dominated row is
-    always preceded by its dominator in this order), (3) GLOBAL pass of
-    the same running-max scan over the few local survivors. Dominance
-    is transitive, so local pruning never discards a global-frontier
-    point, and the global input is tiny — the only single-partition
-    stage touches ~buckets × frontier-size rows."""
-    part = load_table(spark, sf_dir, "part")
-    pairs = (
-        part.select(
-            F.round(F.col("p_retailprice") * 100, 0).cast("long").alias("price_c"),
-            F.col("p_size"),
-        )
-        .groupBy("price_c", "p_size")
-        .agg(F.count("*").alias("n_parts"))
-    )
-
-    def frontier(df: DataFrame, w: Window) -> DataFrame:
-        prev_max = F.max("p_size").over(
-            w.orderBy(F.asc("price_c"), F.desc("p_size")).rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-        )
-        return df.withColumn("pm", prev_max).filter(
-            F.col("pm").isNull() | (F.col("p_size") > F.col("pm"))
-        ).drop("pm")
-
-    bucketed = pairs.withColumn(
-        "b", F.pmod(F.xxhash64("price_c", "p_size"), F.lit(32))
-    )
-    local = frontier(bucketed, Window.partitionBy("b")).drop("b")
-    glob = frontier(local, Window.partitionBy())
-    return glob.select(
-        F.round(F.col("price_c") / 100.0, 2).alias("price"),
-        F.col("p_size").alias("size"),
-        "n_parts",
     )

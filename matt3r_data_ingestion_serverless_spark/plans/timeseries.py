@@ -3560,3 +3560,43 @@ def ts_streamed_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_sigma",
         "breach",
     )
+
+
+# ---------------------------------------------------------------------------
+# trailing 7-day distinct users (windowed COUNT DISTINCT via day-grid)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "rolling_7d_distinct_users",
+    sql="""
+WITH pairs AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
+days AS (SELECT DISTINCT day FROM pairs)
+SELECT strftime(d.day, '%Y-%m-%d') AS day,
+       count(DISTINCT p.user_id) AS users_7d
+FROM days d JOIN pairs p ON p.day BETWEEN d.day - 6 AND d.day
+GROUP BY d.day
+""",
+)
+def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-7-day distinct active users per day — the retention /
+    WAU metric. COUNT(DISTINCT) is not algebraic, so no window frame
+    can compute it incrementally; the scalable rewrite is the day-grid
+    expansion: dedupe to (day, user) pairs FIRST (the big shrink —
+    events per user-day collapse to 1), then each pair votes for the ≤7
+    trailing grid days it is visible in, then one exact distinct-agg
+    per grid day. Fan-out is bounded (×7) and happens after the dedupe,
+    so raw events never replicate. A range self-join (day BETWEEN d-6
+    AND d) — what the oracle runs — would be O(days × pairs) at scale."""
+    ev = load_table(spark, sf_dir, "events")
+    pairs = ev.select(F.to_date("ts").alias("day"), "user_id").distinct()
+    days = pairs.select("day").distinct()
+    grid = pairs.withColumn(
+        "grid_day", F.explode(F.sequence(F.col("day"), F.date_add(F.col("day"), 6)))
+    )
+    counts = grid.groupBy("grid_day").agg(
+        F.count_distinct("user_id").alias("users_7d")
+    )
+    return days.join(counts, days.day == counts.grid_day).select(
+        F.date_format(days.day, "yyyy-MM-dd").alias("day"), "users_7d"
+    )

@@ -6,7 +6,6 @@
 - count_where_range must not credit manifest row counts for files
   holding NULL key rows (min/max stats exclude NULLs, BETWEEN rejects
   them), so the manifest now carries per-stat-column null counts;
-- the z-signals footer time extent must be UTC on any host timezone;
 - the JPEG marker walk must skip spec-legal 0xFF fill bytes and raise
   ValueError (never IndexError/struct.error) on truncated streams.
 """
@@ -14,12 +13,10 @@
 from __future__ import annotations
 
 import os
-import time
 
 import numpy as np
 import pytest
 
-from tests.conftest import SF_SMOKE
 from tools.sf1_merge_extra import error_line, resume_filter
 
 
@@ -105,45 +102,6 @@ def test_count_where_range_null_keys_routed_to_residual(spark, tmp_path):
         json.dump(mdoc, f)
     full3, _res3, n_boundary3 = tbl.count_where_range("k", 90, 200)
     assert full3 == 0 and n_boundary3 == 1
-
-
-# ---------------------------------------------------------------------------
-# z-signals footer extent is UTC on any host timezone (ADVICE r08 low)
-# ---------------------------------------------------------------------------
-
-
-def test_zsignals_footer_extent_is_utc():
-    from datetime import timezone
-
-    import pyarrow.parquet as pq
-
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r100 import (
-        _footer_ts_extent_utc,
-    )
-
-    meta = pq.ParquetFile(os.path.join(SF_SMOKE, "events.parquet")).metadata
-    idx = next(
-        i for i in range(meta.num_columns) if meta.schema.column(i).name == "ts"
-    )
-    stats = [
-        meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)
-    ]
-    want_lo = int(min(s.min for s in stats).replace(tzinfo=timezone.utc).timestamp())
-    want_hi = (
-        int(max(s.max for s in stats).replace(tzinfo=timezone.utc).timestamp()) + 1
-    )
-
-    old_tz = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"  # UTC-5/-4: naive .timestamp() shifts
-    time.tzset()
-    try:
-        assert _footer_ts_extent_utc(SF_SMOKE) == (want_lo, want_hi)
-    finally:
-        if old_tz is None:
-            os.environ.pop("TZ", None)
-        else:
-            os.environ["TZ"] = old_tz
-        time.tzset()
 
 
 # ---------------------------------------------------------------------------

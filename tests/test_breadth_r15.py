@@ -139,18 +139,3 @@ def test_ar_aging_buckets_match_python(spark):
             len(custs),
             cents,
         ), b
-
-
-def test_file_stats_match_pyarrow_direct(spark):
-    import pyarrow.parquet as pq
-
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r15 import (
-        _FS_TABLES,
-        lakehouse_file_stats,
-    )
-
-    got = {r.table_name: r for r in lakehouse_file_stats(spark, SF_SMOKE).collect()}
-    assert set(got) == set(_FS_TABLES)
-    for t in _FS_TABLES:
-        m = pq.ParquetFile(f"{SF_SMOKE}/{t}.parquet").metadata
-        assert (got[t].n_rows, got[t].n_columns) == (m.num_rows, m.num_columns), t

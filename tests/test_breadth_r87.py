@@ -8,24 +8,10 @@ import numpy as np
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r87 import (
     _KCENTER_ROUNDS,
-    j16_lakehouse_merge_on_read_delete,
     ns_kcenter_coreset,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_j16_no_rewrite_and_rows(spark):
-    rows = j16_lakehouse_merge_on_read_delete(spark, SF_SMOKE).collect()
-    base = load_table(spark, SF_SMOKE, "orders").collect()
-    want = {
-        r.o_orderkey
-        for r in base
-        if r.o_orderkey % 4 != 3 and r.o_custkey % 5 != 0
-    }
-    assert {r.k for r in rows} == want
-    assert all(r.files_rewritten == 0 for r in rows)
-    assert all(r.o_custkey % 5 != 0 for r in rows)
 
 
 def _round6(x):

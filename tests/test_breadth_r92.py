@@ -7,19 +7,11 @@ from collections import Counter
 
 from matt3r_data_ingestion_serverless_spark.plans.breadth_r92 import (
     _PASS_KS,
-    j17_lakehouse_write_audit_publish,
     ml_pass_at_k,
     ns_utf8_fertility,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_j17_full_orders_and_audit_flag(spark):
-    rows = j17_lakehouse_write_audit_publish(spark, SF_SMOKE).collect()
-    orders = load_table(spark, SF_SMOKE, "orders").collect()
-    assert {r.k for r in rows} == {r.o_orderkey for r in orders}
-    assert all(r.main_was_unchanged == 1 for r in rows)
 
 
 def test_pass_at_k_matches_python(spark):

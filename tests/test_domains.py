@@ -3,6 +3,8 @@ module, so a new domain query cannot land in a round-named module."""
 
 from __future__ import annotations
 
+import re
+
 from matt3r_data_ingestion_serverless_spark.plans import all_queries
 
 _PLANS = "matt3r_data_ingestion_serverless_spark.plans"
@@ -17,6 +19,8 @@ _DEDUP = {
     "sql_recursive_components",
 }
 
+_LAKEHOUSE = {"lakehouse_file_stats", "morton_zorder_layout"}
+
 
 def _domain(name: str) -> str | None:
     if name.startswith(("ns_dedup_", "ns_dup_")) or name in _DEDUP:
@@ -27,6 +31,8 @@ def _domain(name: str) -> str | None:
         return "multimodal"
     if name.startswith("ts_"):
         return "timeseries"
+    if re.match(r"j([6-9]|1\d|2[0-2])_", name) or name in _LAKEHOUSE:
+        return "lakehouse"
     return None
 
 
@@ -41,3 +47,4 @@ def test_domain_queries_live_in_their_domain_module():
     assert sum(_domain(n) == "graph" for n in all_queries()) == 16
     assert sum(_domain(n) == "multimodal" for n in all_queries()) == 12
     assert sum(_domain(n) == "timeseries" for n in all_queries()) == 41
+    assert sum(_domain(n) == "lakehouse" for n in all_queries()) == 19

@@ -16,7 +16,6 @@ import pytest
 
 from matt3r_data_ingestion_serverless_spark.operators import lakehouse as lh
 from matt3r_data_ingestion_serverless_spark.operators.lakehouse import LakehouseTable
-from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture
@@ -198,62 +197,3 @@ def test_scan_accepts_version(spark, tmp_path):
     assert t.scan({"id": (1, 10)}, version=1).filter("id = 5").first().v == 5.0
     # the bounded historical scan still prunes: high-key files unopened
     assert t.scan({"id": (1, 10)}, version=1).count() <= 25
-
-
-def test_lakehouse_readonly_queries_share_one_fixture(spark):
-    """j7/j8/j15 never mutate past v2, so they read ONE process-shared
-    seeded table (VERDICT r06 next-step 7) instead of each paying
-    create + merge + rm-rf per run."""
-    from matt3r_data_ingestion_serverless_spark.plans import breadth_r69 as r69
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r80 import (
-        j15_lakehouse_snapshot_diff,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    r69._SHARED_MERGED.pop(sf, None)
-    a = r69.j7_lakehouse_time_travel(spark, sf)
-    root1 = r69._SHARED_MERGED[sf][1]
-    b = r69.j8_lakehouse_file_skipping(spark, sf)
-    c = j15_lakehouse_snapshot_diff(spark, sf)
-    assert r69._SHARED_MERGED[sf][1] == root1  # no rebuild
-    # all three still produce rows through the one fixture
-    assert a.count() > 0 and b.count() > 0 and c.count() > 0
-    # and the fixture survives the reads (read-only contract)
-    import os
-
-    assert os.path.isdir(root1)
-
-
-
-
-def test_j6_scratch_dir_registered_before_the_merge_fails(spark, monkeypatch):
-    """The lakehouse_ scratch dir is registered for removal when it is
-    made, so a merge that raises still leaves nothing behind at exit."""
-    import atexit
-    import os
-    import shutil
-
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import j6_lakehouse_merge
-
-    registered = []
-    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.extend(a[:1]))
-    monkeypatch.setattr(LakehouseTable, "merge", lambda *a, **kw: 1 / 0)
-    with pytest.raises(ZeroDivisionError):
-        j6_lakehouse_merge(spark, SF_SMOKE)
-    roots = [p for p in registered if os.path.basename(str(p)).startswith("lakehouse_")]
-    assert len(roots) == 1 and os.path.isdir(roots[0])
-    shutil.rmtree(roots[0])
-
-
-def test_key_minmax_refuses_a_directory_layout(tmp_path):
-    """One footer gives the merges' complete source_intervals cover; an
-    orders.parquet directory must fail loudly instead."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from matt3r_data_ingestion_serverless_spark.plans.breadth_r69 import _key_minmax
-
-    (tmp_path / "orders.parquet").mkdir()
-    pq.write_table(pa.table({"o_orderkey": [1]}), tmp_path / "orders.parquet" / "part-0.parquet")
-    with pytest.raises(ValueError, match="source_intervals"):
-        _key_minmax(str(tmp_path))

@@ -9,6 +9,7 @@ from collections import Counter, defaultdict
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.plans.timeseries import (
     _ACF_MAX_LAG,
@@ -28,6 +29,7 @@ from matt3r_data_ingestion_serverless_spark.plans.timeseries import (
     daily_dft,
     event_days,
     event_hours,
+    rolling_7d_distinct_users,
     ts_acf_table,
     ts_ar2_yule_walker,
     ts_autocorr_hourly,
@@ -1048,3 +1050,17 @@ def test_ewma_fold_matches_sequential_python(spark, events):
             acc = acc * 0.75 + 0.25 * r.value
         assert out[uid].n_events == len(rows)
         assert abs(out[uid].ewma_value - round(acc, 6)) < 1e-9, uid
+
+
+def test_rolling_7d_distinct_brute_force(spark):
+    got = {r.day: r.users_7d for r in rolling_7d_distinct_users(spark, SF_SMOKE).collect()}
+    ev = (
+        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        .select(F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("d"), "user_id")
+        .collect()
+    )
+    pairs = {(dt.date.fromisoformat(r.d), r.user_id) for r in ev}
+    days = sorted({d for d, _ in pairs})
+    for d in days:
+        users = {u for (pd, u) in pairs if d - dt.timedelta(days=6) <= pd <= d}
+        assert got[d.isoformat()] == len(users), d

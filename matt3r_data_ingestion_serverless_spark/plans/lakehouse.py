@@ -8,6 +8,10 @@ rollup. Each query builds a real table under a scratch dir, drives its
 commits through it and returns the read-back snapshot, graded against
 a DuckDB oracle over the raw tables.
 
+Every table lives in a ``session.scratch_dir``, removed at process
+exit, so each query returns a lazy read of its snapshot: nothing is
+checkpointed and nothing is removed early.
+
 The reference's closest analogue is the S3 existence-check +
 skip-on-overlap merge (parse_canserver_filtered_log.py:327-344): its
 "manifest" is the S3 key listing, its "file stats" the hour encoded in
@@ -16,18 +20,29 @@ the key name.
 
 from __future__ import annotations
 
+import io
 import os
-import shutil
 import types
+from datetime import datetime, timezone
 
+import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matt3r_data_ingestion_serverless_spark.functions.rounding import round6, round6_sql
+from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2, zorder2_scaled
 from matt3r_data_ingestion_serverless_spark.operators.lakehouse import LakehouseTable
+from matt3r_data_ingestion_serverless_spark.operators.stationary import stationary_intervals
 from matt3r_data_ingestion_serverless_spark.plans.registry import register
+from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
+    STATIONARY_MIN_DUR_S,
+    STATIONARY_THRESHOLD,
+    STATIONARY_TRIM_S,
+)
 from matt3r_data_ingestion_serverless_spark.session import scratch_dir
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
+from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
 
 
 # ---------------------------------------------------------------------------
@@ -43,6 +58,24 @@ from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 #          makes a 100 TB merge cost O(batch), not O(table).
 
 
+def _key_range(sf_dir: str, table: str, col: str) -> tuple:
+    """Exact [min, max] of a column of ``<table>.parquet`` straight from
+    the parquet FOOTER's row-group stats — zero Spark jobs (the same
+    stats discipline the lakehouse manifests use). Ints for the orders
+    keys, naive UTC datetimes for events.ts."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if not os.path.isfile(path):
+        raise ValueError(
+            f"{path} is not a single parquet file: footer key extents (the "
+            "merges' source_intervals, which must COMPLETELY cover the batch "
+            "keys) are read from one file's footer"
+        )
+    meta = pq.ParquetFile(path).metadata
+    idx = next(i for i in range(meta.num_columns) if meta.schema.column(i).name == col)
+    stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
+    return min(s.min for s in stats), max(s.max for s in stats)
+
+
 def _base_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "orders")
@@ -54,29 +87,6 @@ def _base_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("k") % 4 != 3)
     )
-
-
-def _key_range(sf_dir: str, col: str) -> tuple[int, int]:
-    """Exact int64 [min, max] of an orders column straight from the
-    parquet FOOTER — zero Spark jobs (the same stats discipline the
-    lakehouse manifests use)."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, "orders.parquet")
-    if not os.path.isfile(path):
-        raise ValueError(
-            f"{path} is not a single parquet file: footer key extents (the "
-            "merges' source_intervals, which must COMPLETELY cover the batch "
-            "keys) are read from one file's footer"
-        )
-    meta = pq.ParquetFile(path).metadata
-    idx = next(i for i in range(meta.num_columns) if meta.schema.column(i).name == col)
-    stats = [meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)]
-    return int(min(s.min for s in stats)), int(max(s.max for s in stats))
-
-
-def _key_minmax(sf_dir: str) -> tuple[int, int]:
-    return _key_range(sf_dir, "o_orderkey")
 
 
 def _batch_df(spark: SparkSession, sf_dir: str, cut: int) -> DataFrame:
@@ -92,65 +102,74 @@ def _batch_df(spark: SparkSession, sf_dir: str, cut: int) -> DataFrame:
     )
 
 
-def _build_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, str, int]:
-    """v1 = 16 key-range-clustered files. The split points come from the
-    orders parquet FOOTER's exact int64 [min, max] (equi-width over a
-    near-uniform keyspace ≈ the old repartitionByRange(16) equi-depth
-    layout), so the create is ONE job — create_bucketed's observe()-
-    stats write — instead of three (range-boundary sampling job + write
-    + per-file stats harvest job). Same manifest contract: 16 files
-    with disjoint k ranges and exact per-file stats; merge pruning
-    behaves identically (the batch decile still touches ~2/16 files)."""
-    root = scratch_dir("lakehouse_")
-    lo, hi = _key_minmax(sf_dir)
+def _build_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, int, int]:
+    """``(table, lo, cut)``: v1 = 16 key-range-clustered files, ``lo``
+    the lowest order key and ``cut`` = max key // 10, the batch's top
+    key. The split points come from the orders parquet FOOTER's exact
+    int64 [min, max] (equi-width over a near-uniform keyspace ≈ the old
+    repartitionByRange(16) equi-depth layout), so the create is ONE job
+    — create_bucketed's observe()-stats write — instead of three
+    (range-boundary sampling job + write + per-file stats harvest job).
+    Same manifest contract: 16 files with disjoint k ranges and exact
+    per-file stats; merge pruning behaves identically (the batch decile
+    still touches ~2/16 files)."""
+    lo, hi = _key_range(sf_dir, "orders", "o_orderkey")
     boundaries = sorted({lo + (hi - lo) * i // 16 for i in range(1, 16)})
     boundaries = [b for b in boundaries if lo < b <= hi]
     tbl = LakehouseTable.create_bucketed(
         _base_df(spark, sf_dir),
-        root,
+        scratch_dir("lakehouse_"),
         key="k",
         boundaries=boundaries,
         stats_cols=["k"],
     )
-    return tbl, root, hi // 10
+    return tbl, lo, hi // 10
 
 
-def _standard_merge(tbl: LakehouseTable, spark: SparkSession, sf_dir: str, cut: int):
-    # source_intervals: the batch is BY CONSTRUCTION the keys in
-    # [min_key, cut] (a filter on the key column), so the caller knows a
-    # complete interval cover without a Spark job — the same contract
-    # cdc_streamed_apply's footer-derived covers use. o_orderkey is a
-    # non-null primary key, so the null-key hazard does not apply.
+def _standard_merge(tbl: LakehouseTable, batch: DataFrame, lo: int, cut: int) -> None:
+    """UPDATE price/status on match, DELETE matched rows with
+    o_custkey % 7 = 0, INSERT the rest. source_intervals: the batch is
+    BY CONSTRUCTION keys in [lo, cut] (a filter on the key column; any
+    part of it, like a streamed micro-batch, too), so the caller knows a
+    complete interval cover without a Spark job — the same contract
+    cdc_streamed_apply's footer-derived covers use. o_orderkey is a
+    non-null primary key, so the null-key hazard does not apply."""
     tbl.merge(
-        _batch_df(spark, sf_dir, cut),
+        batch,
         keys=["k"],
         update_cols=["o_totalprice", "o_orderstatus"],
         delete_condition=F.col("o_custkey") % 7 == 0,
-        source_intervals=[(_key_minmax(sf_dir)[0], cut)],
+        source_intervals=[(lo, cut)],
     )
 
 
-_SHARED_MERGED: dict[str, tuple[LakehouseTable, str, int]] = {}
+def _memo(build):
+    """Process-shared READ-ONLY fixture: ``build(spark, sf_dir)`` returns
+    a tuple whose first item is the table; it runs once per sf_dir and
+    again only if the table's dir is gone. Queries that only read
+    committed snapshots share one build instead of each paying its
+    create (+ merge) per run. The dir lives until process exit, so the
+    returned DataFrames stay lazy."""
+    memo: dict[str, tuple] = {}
 
-
-def _shared_merged_table(
-    spark: SparkSession, sf_dir: str
-) -> tuple[LakehouseTable, str, int]:
-    """Process-shared READ-ONLY fixture (VERDICT r06 next-step 7):
-    v1 = the 16-file range-clustered base, v2 = the standard merge.
-    Queries that only READ committed snapshots (time travel j7, file
-    skipping j8, snapshot diff j15) share one build instead of each
-    paying create + merge + rm-rf per run; mutation queries
-    (j6, j9-j14, j16, j17) keep private builds. The dir lives until
-    process exit, so the returned DataFrames stay lazy — no
-    localCheckpoint materialization either."""
-    got = _SHARED_MERGED.get(sf_dir)
-    if got is not None and os.path.isdir(got[1]):
+    def get(spark: SparkSession, sf_dir: str) -> tuple:
+        got = memo.get(sf_dir)
+        if got is None or not os.path.isdir(got[0].path):
+            got = memo[sf_dir] = build(spark, sf_dir)
         return got
-    tbl, root, cut = _build_table(spark, sf_dir)
-    _standard_merge(tbl, spark, sf_dir, cut)
-    _SHARED_MERGED[sf_dir] = (tbl, root, cut)
-    return tbl, root, cut
+
+    get.memo = memo
+    return get
+
+
+@_memo
+def _shared_merged_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, int, int]:
+    """v1 = the 16-file range-clustered base, v2 = the standard merge;
+    read by time travel (j7), file skipping (j8), snapshot diff (j15)
+    and the metadata aggregates (j19, j21)."""
+    tbl, lo, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, _batch_df(spark, sf_dir, cut), lo, cut)
+    return tbl, lo, cut
 
 
 def _final_select(df: DataFrame) -> DataFrame:
@@ -162,7 +181,9 @@ def _final_select(df: DataFrame) -> DataFrame:
     )
 
 
-_MERGED_SQL = f"""
+# the oracle's one-shot MERGE of the batch into the base: target t,
+# source s, merged snapshot m
+_MERGE_CTE = """
 WITH cut AS (
   SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
 ), t AS (
@@ -182,7 +203,9 @@ WITH cut AS (
          s.k IS NOT NULL AND s.del AS del
   FROM t FULL JOIN s ON t.k = s.k
   WHERE s.k IS NULL OR NOT s.del
-)
+)"""
+
+_MERGED_SQL = f"""{_MERGE_CTE}
 SELECT k, o_custkey, {round6_sql('o_totalprice')} AS total_r, o_orderstatus
 FROM m
 """
@@ -202,11 +225,8 @@ def j6_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rewritten — every other file carries into the new snapshot by
     reference (manifest metadata only). That is the Iceberg/Delta
     merge-cost contract without the package dependency."""
-    tbl, _root, cut = _build_table(spark, sf_dir)
-    _standard_merge(tbl, spark, sf_dir, cut)
-    # lazy read over the committed snapshot; the scratch dir lives until
-    # process exit (few MB) instead of paying a localCheckpoint
-    # materialization pass just to rmtree early
+    tbl, lo, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, _batch_df(spark, sf_dir, cut), lo, cut)
     return _final_select(tbl.read())
 
 
@@ -225,7 +245,7 @@ def j7_lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/lakehouse.py:_commit, atomic rename). The oracle is the
     base table itself: time travel must be byte-faithful, not
     approximate."""
-    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    tbl, _lo, _cut = _shared_merged_table(spark, sf_dir)
     return _final_select(tbl.read(version=1))
 
 
@@ -250,7 +270,7 @@ def j8_lakehouse_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     on top, exactly like Iceberg manifest pruning feeding parquet
     row-group pushdown. The aggregate proves the pruned scan loses no
     rows vs the oracle's full-table filter."""
-    tbl, _root, cut = _shared_merged_table(spark, sf_dir)
+    tbl, _lo, cut = _shared_merged_table(spark, sf_dir)
     pruned = tbl.scan({"k": (1, cut)}, version=1).filter(F.col("k").between(1, cut))
     return pruned.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
@@ -294,7 +314,7 @@ def j9_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     manifest schema on read (operators/lakehouse.py:read) — no old file
     is rewritten, no mergeSchema footer sweep. The oracle is the plain
     full-outer join where target-only rows carry tag NULL."""
-    tbl, _root, cut = _build_table(spark, sf_dir)
+    tbl, lo, cut = _build_table(spark, sf_dir)
     batch = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") <= cut)
@@ -310,9 +330,9 @@ def j9_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         keys=["k"],
         update_cols=["o_orderstatus", "tag"],
         evolve_schema=True,
-        # batch keys are BY CONSTRUCTION in [min_key, cut] — a complete
+        # batch keys are BY CONSTRUCTION in [lo, cut] — a complete
         # cover known without a Spark job (see _standard_merge)
-        source_intervals=[(_key_minmax(sf_dir)[0], cut)],
+        source_intervals=[(lo, cut)],
     )
     return tbl.read().select("k", "o_custkey", "o_orderstatus", "tag")
 
@@ -326,8 +346,8 @@ def j10_lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     create → merge → compact. At 100 TB this is the periodic pass that
     keeps streaming-ingest file counts bounded so manifest pruning and
     scan planning stay cheap."""
-    tbl, _root, cut = _build_table(spark, sf_dir)
-    _standard_merge(tbl, spark, sf_dir, cut)
+    tbl, lo, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, _batch_df(spark, sf_dir, cut), lo, cut)
     tbl.compact(target_files=4)
     assert [m["operation"] for m in tbl.history()] == ["create", "merge", "compact"]
     return _final_select(tbl.read())
@@ -342,9 +362,7 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once + idempotent-upsert contract (T3) carried onto the
     table format. Key-disjoint batches commute, so arrival order cannot
     perturb the graded rows."""
-    from matt3r_data_ingestion_serverless_spark.streaming.pipeline import run_once
-
-    tbl, _root, cut = _build_table(spark, sf_dir)
+    tbl, lo, cut = _build_table(spark, sf_dir)
     stage = scratch_dir("lh_stream_")
     batch = _batch_df(spark, sf_dir, cut)
     land = f"{stage}/land"
@@ -354,12 +372,7 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(land)
 
     def apply_batch(bdf: DataFrame, _bid: int) -> None:
-        tbl.merge(
-            bdf,
-            keys=["k"],
-            update_cols=["o_totalprice", "o_orderstatus"],
-            delete_condition=F.col("o_custkey") % 7 == 0,
-        )
+        _standard_merge(tbl, bdf, lo, cut)
 
     src = (
         spark.readStream.schema(batch.schema)
@@ -374,27 +387,7 @@ def j11_streamed_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # j12: two concurrent writers — both commits must survive
 # ---------------------------------------------------------------------------
 
-_J12_SQL = f"""
-WITH cut AS (
-  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
-), t AS (
-  SELECT o_orderkey AS k, o_custkey, o_totalprice, o_orderstatus
-  FROM orders WHERE o_orderkey % 4 <> 3
-), s AS (
-  SELECT o_orderkey AS k, o_custkey,
-         o_totalprice + 1000.0 AS o_totalprice,
-         'U' AS o_orderstatus,
-         (o_custkey % 7 = 0) AS del
-  FROM orders, cut WHERE o_orderkey <= cut.c
-), m AS (
-  SELECT coalesce(t.k, s.k) AS k,
-         coalesce(t.o_custkey, s.o_custkey) AS o_custkey,
-         CASE WHEN s.k IS NULL THEN t.o_totalprice ELSE s.o_totalprice END AS o_totalprice,
-         CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
-         s.k IS NOT NULL AND s.del AS del
-  FROM t FULL JOIN s ON t.k = s.k
-  WHERE s.k IS NULL OR NOT s.del
-), b AS (
+_J12_SQL = f"""{_MERGE_CTE}, b AS (
   SELECT o_orderkey AS k, o_custkey, o_totalprice, 'N' AS o_orderstatus
   FROM orders, cut WHERE o_orderkey % 4 = 3 AND o_orderkey > cut.c * 8
 )
@@ -436,31 +429,23 @@ def j12_lakehouse_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: conflict resolution costs one manifest re-read plus a replay
     of the LOSER's batch-sized work — never a table rewrite; winners
     pay nothing."""
-    tbl_a, root, cut = _build_table(spark, sf_dir)
-    tbl_b = LakehouseTable(spark, root)
-    try:
-        batch_b = _writer_b_batch(spark, sf_dir, cut)
-        fired = {"done": False}
-        orig_commit = tbl_a._commit
+    tbl_a, lo, cut = _build_table(spark, sf_dir)
+    tbl_b = LakehouseTable(spark, tbl_a.path)
+    batch_b = _writer_b_batch(spark, sf_dir, cut)
+    fired = {"done": False}
+    orig_commit = tbl_a._commit
 
-        def racing_commit(self, version, operation, files, schema_json=None):
-            if operation == "merge" and not fired["done"]:
-                fired["done"] = True
-                tbl_b.merge(batch_b, keys=["k"])
-            return orig_commit(version, operation, files, schema_json=schema_json)
+    def racing_commit(self, version, operation, files, schema_json=None):
+        if operation == "merge" and not fired["done"]:
+            fired["done"] = True
+            tbl_b.merge(batch_b, keys=["k"])
+        return orig_commit(version, operation, files, schema_json=schema_json)
 
-        tbl_a._commit = types.MethodType(racing_commit, tbl_a)
-        tbl_a.merge(
-            _batch_df(spark, sf_dir, cut),
-            keys=["k"],
-            update_cols=["o_totalprice", "o_orderstatus"],
-            delete_condition=F.col("o_custkey") % 7 == 0,
-        )
-        assert fired["done"] and tbl_a.current_version() == 3
-        assert [m["operation"] for m in tbl_a.history()] == ["create", "merge", "merge"]
-        return _final_select(tbl_a.read()).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    tbl_a._commit = types.MethodType(racing_commit, tbl_a)
+    _standard_merge(tbl_a, _batch_df(spark, sf_dir, cut), lo, cut)
+    assert fired["done"] and tbl_a.current_version() == 3
+    assert [m["operation"] for m in tbl_a.history()] == ["create", "merge", "merge"]
+    return _final_select(tbl_a.read())
 
 
 # ---------------------------------------------------------------------------
@@ -480,26 +465,18 @@ def j13_lakehouse_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: vacuum is manifest-diff + file deletes — O(files reclaimed)
     metadata ops, no data read."""
-    tbl, root, cut = _build_table(spark, sf_dir)
+    tbl, lo, cut = _build_table(spark, sf_dir)
+    _standard_merge(tbl, _batch_df(spark, sf_dir, cut), lo, cut)
+    tbl.compact(target_files=4)
+    dropped = tbl.vacuum(retain_versions=1)
+    assert dropped, "superseded create/merge files must be reclaimed"
+    assert [m["version"] for m in tbl.history()] == [3]
     try:
-        tbl.merge(
-            _batch_df(spark, sf_dir, cut),
-            keys=["k"],
-            update_cols=["o_totalprice", "o_orderstatus"],
-            delete_condition=F.col("o_custkey") % 7 == 0,
-        )
-        tbl.compact(target_files=4)
-        dropped = tbl.vacuum(retain_versions=1)
-        assert dropped, "superseded create/merge files must be reclaimed"
-        assert [m["version"] for m in tbl.history()] == [3]
-        try:
-            tbl.read(version=1)
-            raise AssertionError("time travel past the vacuum horizon must raise")
-        except ValueError as e:
-            assert "vacuumed" in str(e)
-        return _final_select(tbl.read()).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        tbl.read(version=1)
+        raise AssertionError("time travel past the vacuum horizon must raise")
+    except ValueError as e:
+        assert "vacuumed" in str(e)
+    return _final_select(tbl.read())
 
 
 # ---------------------------------------------------------------------------
@@ -525,54 +502,37 @@ def j14_lakehouse_matched_only_merge(spark: SparkSession, sf_dir: str) -> DataFr
     table lacks, proving the committed schema stays the TABLE's instead
     of narrowing/widening to the source's. The oracle is the untouched
     base table."""
-    tbl, root, cut = _build_table(spark, sf_dir)
-    try:
-        mx = cut * 10
-        disjoint = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") <= cut)
-            .select(
-                (F.col("o_orderkey") + 10 * mx).alias("k"),  # beyond every stat range
-                "o_custkey",
-                F.lit(0.0).alias("o_totalprice"),
-                F.lit("Z").alias("o_orderstatus"),
-                F.lit("extra").alias("not_a_table_column"),
-            )
+    tbl, _lo, cut = _build_table(spark, sf_dir)
+    mx = cut * 10
+    disjoint = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") <= cut)
+        .select(
+            (F.col("o_orderkey") + 10 * mx).alias("k"),  # beyond every stat range
+            "o_custkey",
+            F.lit(0.0).alias("o_totalprice"),
+            F.lit("Z").alias("o_orderstatus"),
+            F.lit("extra").alias("not_a_table_column"),
         )
-        tbl.merge(
-            disjoint,
-            keys=["k"],
-            update_cols=["o_totalprice", "o_orderstatus"],
-            insert=False,
-        )
-        assert tbl.current_version() == 2
-        pruned, total = tbl.last_merge_pruned
-        assert pruned == total, "disjoint batch must prune every file"
-        return _final_select(tbl.read()).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    tbl.merge(
+        disjoint,
+        keys=["k"],
+        update_cols=["o_totalprice", "o_orderstatus"],
+        insert=False,
+    )
+    assert tbl.current_version() == 2
+    pruned, total = tbl.last_merge_pruned
+    assert pruned == total, "disjoint batch must prune every file"
+    return _final_select(tbl.read())
 
 
-_J15_SQL = f"""
-WITH cut AS (
-  SELECT CAST(floor(max(o_orderkey) / 10) AS BIGINT) AS c FROM orders
-), t AS (
-  SELECT o_orderkey AS k, o_totalprice, o_orderstatus
-  FROM orders WHERE o_orderkey % 4 <> 3
-), s AS (
-  SELECT o_orderkey AS k, o_custkey,
-         o_totalprice + 1000.0 AS o_totalprice,
-         'U' AS o_orderstatus,
-         (o_custkey % 7 = 0) AS del
-  FROM orders, cut WHERE o_orderkey <= cut.c
-), m AS (
-  SELECT coalesce(t.k, s.k) AS k,
-         CASE WHEN s.k IS NULL THEN t.o_totalprice ELSE s.o_totalprice END AS o_totalprice,
-         CASE WHEN s.k IS NULL THEN t.o_orderstatus ELSE s.o_orderstatus END AS o_orderstatus,
-         s.k IS NOT NULL AND s.del AS del
-  FROM t FULL JOIN s ON t.k = s.k
-  WHERE s.k IS NULL OR NOT s.del
-)
+# ---------------------------------------------------------------------------
+# j15: snapshot diff — the change-data-feed read (Delta CDF / Iceberg
+# changelog) derived from two committed snapshots
+# ---------------------------------------------------------------------------
+
+_J15_SQL = f"""{_MERGE_CTE}
 SELECT coalesce(t.k, m.k) AS k,
        CASE WHEN t.k IS NULL THEN 'insert'
             WHEN m.k IS NULL THEN 'delete'
@@ -605,7 +565,7 @@ def j15_lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides); here both snapshots are read in full because the graded
     contract is the row-level result, and the join is the one
     irreducible shuffle either way."""
-    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    tbl, _lo, _cut = _shared_merged_table(spark, sf_dir)
     old = tbl.read(version=1).select(
         F.col("k").alias("k_old"),
         F.col("o_totalprice").alias("p_old"),
@@ -668,18 +628,12 @@ def j16_lakehouse_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> Data
     written; read amplification is one broadcast anti-join until the
     next compaction — the standard merge-on-read trade, measured here
     instead of asserted."""
-    tbl, root, _cut = _build_table(spark, sf_dir)
-    try:
-        before = [f["path"] for f in tbl.manifest()["file_list"]]
-        tbl.delete_where(F.col("o_custkey") % 5 == 0, keys=["k"])
-        after = [f["path"] for f in tbl.manifest()["file_list"]]
-        rewritten = len(set(before) ^ set(after))
-        out = _final_select(tbl.read()).withColumn(
-            "files_rewritten", F.lit(rewritten)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    tbl, _lo, _cut = _build_table(spark, sf_dir)
+    before = [f["path"] for f in tbl.manifest()["file_list"]]
+    tbl.delete_where(F.col("o_custkey") % 5 == 0, keys=["k"])
+    after = [f["path"] for f in tbl.manifest()["file_list"]]
+    rewritten = len(set(before) ^ set(after))
+    return _final_select(tbl.read()).withColumn("files_rewritten", F.lit(rewritten))
 
 
 # ---------------------------------------------------------------------------
@@ -707,38 +661,53 @@ def j17_lakehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataF
     Scale: staging cost = the append's write; the audit reads whatever
     the validation query needs; publish moves ZERO data bytes (one
     manifest link)."""
-    tbl, root, _cut = _build_table(spark, sf_dir)
-    try:
-        base_rows = tbl.read().count()
-        staged_batch = (
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") % 4 == 3)
-            .select(
-                F.col("o_orderkey").alias("k"),
-                "o_custkey",
-                "o_totalprice",
-                "o_orderstatus",
-            )
+    tbl, _lo, _cut = _build_table(spark, sf_dir)
+    base_rows = tbl.read().count()
+    staged_batch = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 4 == 3)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            "o_custkey",
+            "o_totalprice",
+            "o_orderstatus",
         )
-        token = tbl.stage_append(staged_batch)
-        unchanged = int(tbl.read().count() == base_rows)
-        staged_total = tbl.read_staged(token).count()
-        tbl.publish(token)
-        out = _final_select(tbl.read()).withColumn(
-            "main_was_unchanged",
-            F.lit(unchanged * int(tbl.read().count() == staged_total)),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    token = tbl.stage_append(staged_batch)
+    unchanged = int(tbl.read().count() == base_rows)
+    staged_total = tbl.read_staged(token).count()
+    tbl.publish(token)
+    return _final_select(tbl.read()).withColumn(
+        "main_was_unchanged",
+        F.lit(unchanged * int(tbl.read().count() == staged_total)),
+    )
 
 
 # ---------------------------------------------------------------------------
 # Z-order clustering: multi-dimensional file skipping from 1-D stats
 # ---------------------------------------------------------------------------
 
-_ZORDER_BITS = 8  # 256x256 z-grid; z in [0, 65536)
-_ZORDER_FILES = 16
+_Z_BITS = 8  # bits per dimension: a 256x256 z-grid, z in [0, 65536)
+_Z_FILES = 16
+
+
+def _zorder_layout(
+    df: DataFrame, a: str, a_range: tuple, b: str, b_range: tuple, prefix: str
+) -> LakehouseTable:
+    """``df`` written as ``_Z_FILES`` key-range buckets of
+    z = morton(a, b), each key scaled over its [lo, hi] range, so every
+    file's manifest stats bound an (a, b) RECTANGLE."""
+    zmax = 1 << (2 * _Z_BITS)
+    return LakehouseTable.create_bucketed(
+        df.withColumn(
+            "z", zorder2_scaled(F.col(a), *a_range, F.col(b), *b_range, _Z_BITS)
+        ),
+        scratch_dir(prefix),
+        key="z",
+        boundaries=[zmax * i // _Z_FILES for i in range(1, _Z_FILES)],
+        stats_cols=["z", a, b],
+    )
+
 
 _J18_SQL = """
 WITH r AS (
@@ -756,56 +725,16 @@ WHERE o_orderkey <= r.lo1 + (r.hi1 - r.lo1) // 8
 GROUP BY o_orderstatus
 """
 
-_ZORDER_TABLES: dict[str, tuple] = {}
 
-
-def _zorder_table(spark: SparkSession, sf_dir: str):
-    """Process-shared z-clustered orders table: files are key-range
-    buckets of z = morton(o_orderkey, o_custkey), so every file's
-    manifest stats bound BOTH keys to a rectangle."""
-    got = _ZORDER_TABLES.get(sf_dir)
-    if got is not None:
-        import os
-
-        if os.path.isdir(got[1]):
-            return got
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2_scaled
-    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
-        LakehouseTable,
-    )
-
-    lo1, hi1 = _key_range(sf_dir, "o_orderkey")
-    lo2, hi2 = _key_range(sf_dir, "o_custkey")
-    df = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus")
-        .withColumn(
-            "z",
-            zorder2_scaled(
-                F.col("o_orderkey"), lo1, hi1,
-                F.col("o_custkey"), lo2, hi2,
-                _ZORDER_BITS,
-            ),
-        )
-    )
-    zmax = 1 << (2 * _ZORDER_BITS)
-    boundaries = [zmax * i // _ZORDER_FILES for i in range(1, _ZORDER_FILES)]
-    root = scratch_dir("zorder_")
-    tbl = LakehouseTable.create_bucketed(
-        df,
-        root,
-        key="z",
-        boundaries=boundaries,
-        stats_cols=["z", "o_orderkey", "o_custkey"],
-    )
-    box = (
-        (lo1, lo1 + (hi1 - lo1) // 8),
-        (lo2, lo2 + (hi2 - lo2) // 8),
-    )
-    _ZORDER_TABLES[sf_dir] = (tbl, root, box)
-    return _ZORDER_TABLES[sf_dir]
+@_memo
+def _zorder_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, tuple]:
+    """``(table, box)``: orders clustered on z = morton(o_orderkey,
+    o_custkey), and the graded 2-D box, 1/64 of the key plane."""
+    r1 = _key_range(sf_dir, "orders", "o_orderkey")
+    r2 = _key_range(sf_dir, "orders", "o_custkey")
+    df = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderstatus")
+    tbl = _zorder_layout(df, "o_orderkey", r1, "o_custkey", r2, "zorder_")
+    return tbl, tuple((lo, lo + (hi - lo) // 8) for lo, hi in (r1, r2))
 
 
 @register("j18_lakehouse_zorder_skipping", _J18_SQL)
@@ -819,7 +748,7 @@ def j18_lakehouse_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame
     range-clustering on one key alone would scan every file for any
     second-key predicate. The graded rows are the bounded scan + exact
     row filter, matched against the oracle's full-table filter; the
-    pruning ratio itself is pinned in tests/test_breadth_r100.py
+    pruning ratio itself is pinned in tests/test_lakehouse.py
     (box of 1/64 of the key plane → a strict minority of the 16 files
     opened).
 
@@ -827,9 +756,7 @@ def j18_lakehouse_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame
     whole-stage codegen (no UDF); the write is the one-job exact-slot
     bucketed writer; the scan is manifest-stat pruning — at 100 TB the
     2-D box reads O(box-overlapping z-tiles), not O(table)."""
-    from pyspark.sql import functions as F
-
-    tbl, _root, box = _zorder_table(spark, sf_dir)
+    tbl, box = _zorder_table(spark, sf_dir)
     (k1lo, k1hi), (k2lo, k2hi) = box
     pruned = tbl.scan({"o_orderkey": (k1lo, k1hi), "o_custkey": (k2lo, k2hi)})
     return (
@@ -872,7 +799,7 @@ def j19_metadata_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard in _write_bucketed_files falls back to the per-file harvest
     precisely so manifest stats NEVER disagree with the bytes on disk).
     The oracle recomputes the aggregates by scanning the raw table."""
-    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    tbl, _lo, _cut = _shared_merged_table(spark, sf_dir)
     man = tbl.manifest(1)  # v1 = the base snapshot (orders, %4 <> 3)
     entries = man["file_list"]
     n_rows = sum(e["rows"] for e in entries)
@@ -896,8 +823,6 @@ def j19_metadata_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so a (device-set x time-range) read prunes with plain 1-D min/max
 # manifest stats on each.
 
-_ZSIG_BITS = 8
-_ZSIG_FILES = 16
 _ZSIG_HASH_MOD = 1 << 16
 # the graded cohort + window: 3 devices (present at every SF — user ids
 # are dense from 0), one week of the ~30-day span
@@ -916,48 +841,25 @@ WHERE user_id IN {_ZSIG_DEVICES}
 GROUP BY event_type
 """
 
-_ZSIG_TABLES: dict[str, tuple] = {}
-
 
 def _footer_ts_extent_utc(sf_dir: str) -> tuple[int, int]:
     """[t_lo, t_hi) whole-second extent of events.ts from the parquet
-    footer row-group stats (zero Spark jobs, same stats discipline as
-    j18's _key_range). Footer stat datetimes are naive UTC; calling
-    .timestamp() on them naive applies the MACHINE timezone and shifts
-    the extent off the UTC-epoch ts_sec domain on non-UTC hosts
-    (ADVICE r08) — pin tzinfo=UTC explicitly, matching _zsig_window."""
-    import os as _os
-    from datetime import timezone as _tz
-
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(_os.path.join(sf_dir, "events.parquet")).metadata
-    idx = next(i for i in range(meta.num_columns) if meta.schema.column(i).name == "ts")
-    stats = [
-        meta.row_group(rg).column(idx).statistics for rg in range(meta.num_row_groups)
-    ]
-    t_lo = int(min(s.min for s in stats).replace(tzinfo=_tz.utc).timestamp())
-    t_hi = int(max(s.max for s in stats).replace(tzinfo=_tz.utc).timestamp()) + 1
+    footer (``_key_range``, zero Spark jobs). Footer stat datetimes are
+    naive UTC; calling .timestamp() on them naive applies the MACHINE
+    timezone and shifts the extent off the UTC-epoch ts_sec domain on
+    non-UTC hosts (ADVICE r08) — pin tzinfo=UTC explicitly, matching
+    _zsig_window."""
+    lo, hi = _key_range(sf_dir, "events", "ts")
+    t_lo = int(lo.replace(tzinfo=timezone.utc).timestamp())
+    t_hi = int(hi.replace(tzinfo=timezone.utc).timestamp()) + 1
     return t_lo, t_hi
 
 
-def _zsignals_table(spark: SparkSession, sf_dir: str):
-    """Process-shared z-clustered telemetry table: files are key-range
-    buckets of z = morton(device_hash, ts_sec), so each file's manifest
-    stats bound a (device-hash x time) rectangle."""
-    got = _ZSIG_TABLES.get(sf_dir)
-    if got is not None:
-        import os
-
-        if os.path.isdir(got[1]):
-            return got
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2_scaled
-    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
-        LakehouseTable,
-    )
-
+@_memo
+def _zsignals_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, dict, tuple]:
+    """``(table, hashes, (t_lo, t_hi))``: events clustered on
+    z = morton(device_hash, ts_sec), the cohort's device-hash points
+    and the footer time extent."""
     ev = load_table(spark, sf_dir, "events")
     dev_hash = F.pmod(F.xxhash64("user_id"), F.lit(_ZSIG_HASH_MOD)).cast("long")
     ts_sec = F.floor(F.unix_micros("ts") / F.lit(1_000_000)).cast("long")
@@ -972,24 +874,9 @@ def _zsignals_table(spark: SparkSession, sf_dir: str):
         "event_type",
         "value",
     )
-    t_lo, t_hi = _footer_ts_extent_utc(sf_dir)
-    df = base.withColumn(
-        "z",
-        zorder2_scaled(
-            F.col("device_hash"), 0, _ZSIG_HASH_MOD - 1,
-            F.col("ts_sec"), t_lo, t_hi,
-            _ZSIG_BITS,
-        ),
-    )
-    zmax = 1 << (2 * _ZSIG_BITS)
-    boundaries = [zmax * i // _ZSIG_FILES for i in range(1, _ZSIG_FILES)]
-    root = scratch_dir("zsignals_")
-    tbl = LakehouseTable.create_bucketed(
-        df,
-        root,
-        key="z",
-        boundaries=boundaries,
-        stats_cols=["z", "device_hash", "ts_sec"],
+    extent = _footer_ts_extent_utc(sf_dir)
+    tbl = _zorder_layout(
+        base, "device_hash", (0, _ZSIG_HASH_MOD - 1), "ts_sec", extent, "zsignals_"
     )
     # the cohort's hash points, from one bounded 3-row job (the hash is
     # a JVM expression; nothing data-sized is collected)
@@ -1001,52 +888,51 @@ def _zsignals_table(spark: SparkSession, sf_dir: str):
         .select("user_id", F.pmod(F.xxhash64("user_id"), F.lit(_ZSIG_HASH_MOD)).cast("long").alias("h"))
         .collect()
     }
-    _ZSIG_TABLES[sf_dir] = (tbl, root, hashes, (t_lo, t_hi))
-    return _ZSIG_TABLES[sf_dir]
+    return tbl, hashes, extent
 
 
 def _zsig_window() -> tuple[int, int]:
-    from datetime import datetime, timezone
-
     to_s = lambda s: int(
         datetime.strptime(s, "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc).timestamp()
     )
     return to_s(_ZSIG_T0), to_s(_ZSIG_T1)
 
 
-@register("j20_telemetry_zorder_scan", _J20_SQL)
-def j20_telemetry_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(device-set x time-range) signal read over the z-clustered
-    telemetry layout: the cohort's per-device (device_hash point x
-    week) bounds prune files as a DISJUNCTION — scan_any opens the
-    deduped union of overlapping files in ONE reader (k point-lookups
-    cost one scan job, not k scans + a union) — then the exact row
-    filter and one aggregate. The oracle runs the same predicate over
-    the raw events table — identical rows prove the pruned read lost
-    nothing; tests/test_breadth_r100.py pins the pruning ratio (each
-    point-scan opens a strict minority of the 16 files) and that the
-    cohort union covers exactly.
-
-    Scale: this is the reference's hot path at 100 TB — the z layout
-    answers a device-cohort week from O(cohort x overlapping z-tiles)
-    files, where a pure time layout reads the whole fleet's week and a
-    pure device layout reads each device's full history."""
-    from pyspark.sql import functions as F
-
-    tbl, _root, hashes, _ext = _zsignals_table(spark, sf_dir)
+def _cohort_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cohort's week from the z-clustered silver table: the
+    per-device (device_hash point x week) bounds prune files as a
+    DISJUNCTION — scan_any opens the deduped union of overlapping files
+    in ONE reader (k point-lookups cost one scan job, not k scans + a
+    union) — then the exact row filter. ``w0`` and ``w1`` are whole
+    seconds, so the ts_sec bounds keep exactly the rows of
+    [w0, w1) in ts_us."""
+    tbl, hashes, _ext = _zsignals_table(spark, sf_dir)
     w0, w1 = _zsig_window()
-    cohort = tbl.scan_any(
-        [
-            {"device_hash": (h, h), "ts_sec": (w0, w1 - 1)}
-            for h in hashes.values()
-        ]
+    return tbl.scan_any(
+        [{"device_hash": (h, h), "ts_sec": (w0, w1 - 1)} for h in hashes.values()]
     ).filter(
         F.col("user_id").isin(*_ZSIG_DEVICES)
         & (F.col("ts_sec") >= w0)
         & (F.col("ts_sec") < w1)
     )
+
+
+@register("j20_telemetry_zorder_scan", _J20_SQL)
+def j20_telemetry_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(device-set x time-range) signal read over the z-clustered
+    telemetry layout: the cohort scan (``_cohort_scan``) and one
+    aggregate. The oracle runs the same predicate over the raw events
+    table — identical rows prove the pruned read lost nothing;
+    tests/test_lakehouse.py pins the pruning ratio (each point-scan
+    opens a strict minority of the 16 files) and that the cohort union
+    covers exactly.
+
+    Scale: this is the reference's hot path at 100 TB — the z layout
+    answers a device-cohort week from O(cohort x overlapping z-tiles)
+    files, where a pure time layout reads the whole fleet's week and a
+    pure device layout reads each device's full history."""
     cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
-    return cohort.groupBy("event_type").agg(
+    return _cohort_scan(spark, sf_dir).groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(cents).cast("long").alias("sum_cents"),
         F.count_distinct("user_id").cast("long").alias("n_devices"),
@@ -1072,7 +958,7 @@ def j21_metadata_count_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     HALF of the key space over the range-clustered lakehouse snapshot.
     Files fully inside the range are counted from manifest row counts
     (zero bytes read); only the boundary file(s) straddling the cut get
-    an exact residual scan — tests/test_breadth_r100.py pins <= 2 data
+    an exact residual scan — tests/test_lakehouse.py pins <= 2 data
     files opened and boobytraps the full-table read. The oracle
     recomputes the count by scanning raw orders.
 
@@ -1080,21 +966,18 @@ def j21_metadata_count_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     file per range endpoint for a range-clustered layout, vs half the
     table for a scan — the same stats-fold as j19 but composable with
     arbitrary key-range predicates."""
-    from pyspark.sql import functions as F
-
-    tbl, _root, _cut = _shared_merged_table(spark, sf_dir)
+    tbl, _lo, _cut = _shared_merged_table(spark, sf_dir)
     man = tbl.manifest(1)
     # the midpoint mirrors the oracle's subquery over RAW orders (the
     # table filters k % 4 <> 3, whose max may differ), so it comes from
     # the raw parquet footer — exact int64 stats, zero Spark jobs
-    _, k_hi = _key_range(sf_dir, "o_orderkey")
+    _, k_hi = _key_range(sf_dir, "orders", "o_orderkey")
     k_lo = min(e["stats"]["k"][0] for e in man["file_list"])
     mid = k_hi // 2
     full_rows, residual, _n_boundary = tbl.count_where_range("k", k_lo, mid, version=1)
-    res = residual.filter(F.col("k") <= mid).agg(
+    return residual.filter(F.col("k") <= mid).agg(
         (F.count(F.lit(1)) + F.lit(full_rows)).cast("long").alias("n_rows")
     )
-    return res
 
 
 # ---------------------------------------------------------------------------
@@ -1102,12 +985,6 @@ def j21_metadata_count_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _j22_sql() -> str:
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        STATIONARY_MIN_DUR_S,
-        STATIONARY_THRESHOLD,
-        STATIONARY_TRIM_S,
-    )
-
     trim_us = int(STATIONARY_TRIM_S * 1e6)
     min_us = int(STATIONARY_MIN_DUR_S * 1e6)
     return f"""
@@ -1142,46 +1019,26 @@ WHERE e_us - s_us >= {min_us}
 """
 
 
+@register("j22_zorder_silver_stationary", _j22_sql())
 def j22_zorder_silver_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 zero-run sessionization for a device cohort, read from the
     z-clustered SILVER telemetry table instead of the flat events scan
     (SURVEY §7.2 M6: the silver signals(device, ts) zone ships
     z-ordered with the scan_any read path under the W1/W2-shaped
-    queries). The cohort's (device-hash point x week) bounds prune the
-    morton-bucketed files as a disjunction; the exact row filter and
-    the SAME stationary_intervals operator as w2_stationary_intervals
-    run on the survivors — the silver layout carries exact ts_us, so
-    the intervals are bit-identical to the flat-layout plan
-    (tests/test_breadth_r100.py pins equality AND the pruning ratio).
-    The oracle sessionizes the raw events table under the identical
-    cohort/window predicate.
+    queries). The cohort scan (``_cohort_scan``) prunes the
+    morton-bucketed files as a disjunction; the SAME
+    stationary_intervals operator as w2_stationary_intervals runs on the
+    survivors — the silver layout carries exact ts_us, so the intervals
+    are bit-identical to the flat-layout plan (tests/test_lakehouse.py
+    pins equality AND the pruning ratio). The oracle sessionizes the
+    raw events table under the identical cohort/window predicate.
 
     Scale: this is the reference's W2 inference shaped for 100 TB —
     per-device weekly sessionization should open O(cohort x z-tiles)
     files, not the fleet's week (time layout) or each device's full
     history (device layout); the sessionization work after the prune
     is proportional to the cohort's rows only."""
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.operators.stationary import (
-        stationary_intervals,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        STATIONARY_MIN_DUR_S,
-        STATIONARY_THRESHOLD,
-        STATIONARY_TRIM_S,
-    )
-
-    tbl, _root, hashes, _ext = _zsignals_table(spark, sf_dir)
-    w0, w1 = _zsig_window()
-    cohort = tbl.scan_any(
-        [{"device_hash": (h, h), "ts_sec": (w0, w1 - 1)} for h in hashes.values()]
-    ).filter(
-        F.col("user_id").isin(*_ZSIG_DEVICES)
-        & (F.col("ts_us") >= w0 * 1_000_000)
-        & (F.col("ts_us") < w1 * 1_000_000)
-    )
-    sig = cohort.select(
+    sig = _cohort_scan(spark, sf_dir).select(
         "user_id", F.timestamp_micros("ts_us").alias("ts"), "value"
     )
     return stationary_intervals(
@@ -1193,9 +1050,6 @@ def j22_zorder_silver_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_duration_s=STATIONARY_MIN_DUR_S,
         trim_s=STATIONARY_TRIM_S,
     )
-
-
-register("j22_zorder_silver_stationary", _j22_sql())(j22_zorder_silver_stationary)
 
 
 # ---------------------------------------------------------------------------
@@ -1231,16 +1085,9 @@ def lakehouse_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     it cross-checks the footer numbers against full-scan counts — the
     footer MUST agree with the data. At scale the binaryFile listing
     parallelizes per file and each task reads only its footer bytes."""
-    import io
-
-    import pandas as pd
-
-    paths = ",".join(f"{sf_dir}/{t}.parquet" for t in _FS_TABLES)
 
     def parse_footers(batches):
         for pdf in batches:
-            import pyarrow.parquet as pq
-
             out = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 meta = pq.ParquetFile(io.BytesIO(content)).metadata
@@ -1260,23 +1107,13 @@ def lakehouse_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Z-order (Morton) layout clustering
 # ---------------------------------------------------------------------------
 
-_ZBITS = 8  # 8 bits per dimension → 16-bit Morton code
-
 
 def _morton_sql(x: str, y: str) -> str:
     terms = []
-    for i in range(_ZBITS):
+    for i in range(_Z_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i + 1})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i})")
     return " + ".join(terms)
-
-
-def _morton_col(x, y):
-    acc = F.lit(0)
-    for i in range(_ZBITS):
-        acc = acc + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        acc = acc + F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i)
-    return acc
 
 
 @register(
@@ -1302,16 +1139,16 @@ def morton_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     on BOTH columns. The per-bucket min/max extents this query emits
     ARE the skipping index: each 256th-prefix bucket covers a ≤16-wide
     slab in x AND y (verified by minmax_span), whereas ingestion-order
-    files cover the full 0-255 range and prune nothing. The bit
-    interleave is pure integer Catalyst ops generated by the same
-    Python loop that emits the oracle SQL — one definition, two
-    dialects. At scale the zbucket becomes repartitionByRange key +
+    files cover the full 0-255 range and prune nothing. The Spark side
+    is functions/zorder.zorder2 (x's bits on the odd positions), the
+    oracle the per-bit shift-and-mask sum ``_morton_sql`` spells out.
+    At scale the zbucket becomes repartitionByRange key +
     sortWithinPartitions before the parquet write."""
     li = load_table(spark, sf_dir, "lineitem")
     x = (F.col("l_partkey") % 256).cast("long")
     y = (F.col("l_suppkey") % 256).cast("long")
     coded = li.select(
-        x.alias("x"), y.alias("y"), F.shiftright(_morton_col(x, y), 8).alias("zbucket")
+        x.alias("x"), y.alias("y"), F.shiftright(zorder2(x, y, _Z_BITS), 8).alias("zbucket")
     )
     span = (F.max("x") - F.min("x")) + (F.max("y") - F.min("y"))
     return coded.groupBy("zbucket").agg(

@@ -1,63 +1,89 @@
-"""Checks of the lakehouse queries (plans/lakehouse.py): pruning
-ratios, row equality against brute-force filters over the raw tables,
-fixture sharing, scratch cleanup and footer reads — semantics the
-DuckDB oracle cannot see."""
+"""Checks of the lakehouse queries (plans/lakehouse.py) the DuckDB
+oracle cannot see: pruning ratios, row equality against brute-force
+filters over the raw tables, fixture sharing, scratch cleanup, cached
+RDDs and footer reads."""
 
 from __future__ import annotations
 
+import atexit
 import os
+import random
+import shutil
 import time
+from datetime import timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from matt3r_data_ingestion_serverless_spark.functions.zorder import zorder2, zorder2_py
 from matt3r_data_ingestion_serverless_spark.operators.lakehouse import LakehouseTable
+from matt3r_data_ingestion_serverless_spark.operators.stationary import stationary_intervals
+from matt3r_data_ingestion_serverless_spark.plans import lakehouse
 from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-    _morton_col,
+    _FS_TABLES,
+    _J18_SQL,
+    _J19_SQL,
+    _Z_FILES,
+    _ZSIG_DEVICES,
+    _footer_ts_extent_utc,
+    _key_range,
+    _shared_merged_table,
+    _zorder_table,
+    _zsig_window,
+    _zsignals_table,
+    j6_lakehouse_merge,
+    j7_lakehouse_time_travel,
+    j8_lakehouse_file_skipping,
+    j12_lakehouse_concurrent_merge,
+    j13_lakehouse_vacuum,
+    j14_lakehouse_matched_only_merge,
+    j15_lakehouse_snapshot_diff,
     j16_lakehouse_merge_on_read_delete,
     j17_lakehouse_write_audit_publish,
+    j18_lakehouse_zorder_skipping,
+    j19_metadata_only_agg,
+    j20_telemetry_zorder_scan,
+    j21_metadata_count_residual,
+    j22_zorder_silver_stationary,
+    lakehouse_file_stats,
+)
+from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
+    STATIONARY_MIN_DUR_S,
+    STATIONARY_THRESHOLD,
+    STATIONARY_TRIM_S,
 )
 from matt3r_data_ingestion_serverless_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
-
+from tests.oracle_harness import compare, duckdb_con
 
 
 # -- z-order clustering -------------------------------------------------------
 
 
 def test_zorder2_matches_python_twin(spark):
-    import random
-
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.functions.zorder import (
-        zorder2,
-        zorder2_py,
-    )
-
     rng = random.Random(7)
     rows = [(rng.randrange(1 << 16), rng.randrange(1 << 16)) for _ in range(200)]
     rows += [(0, 0), (65535, 65535), (65535, 0), (0, 65535), (1, 2)]
-    df = spark.createDataFrame(rows, "a long, b long").withColumn(
-        "z", zorder2(F.col("a"), F.col("b"))
-    )
-    for r in df.collect():
-        assert r.z == zorder2_py(r.a, r.b), (r.a, r.b)
+    # bits=8 is morton_zorder_layout's code
+    points8 = [(0, 0), (255, 255), (1, 0), (0, 1), (170, 85), (200, 13)]
+    for bits, pts in ((16, rows), (8, points8)):
+        df = spark.createDataFrame(pts, "a long, b long").withColumn(
+            "z", zorder2(F.col("a"), F.col("b"), bits)
+        )
+        for r in df.collect():
+            assert r.z == zorder2_py(r.a, r.b, bits), (r.a, r.b, bits)
 
 
 def test_zorder_scan_prunes_both_dimensions(spark):
     """The point of z-clustering: a predicate on EITHER key prunes
     files from the same one-column manifest stats — a 1-D range layout
     prunes only its own key."""
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _ZORDER_FILES,
-        _zorder_table,
-    )
-
-    tbl, _root, box = _zorder_table(spark, SF_SMOKE)
+    tbl, box = _zorder_table(spark, SF_SMOKE)
     (k1lo, k1hi), (k2lo, k2hi) = box
     total = len(tbl.manifest()["file_list"])
-    assert total == _ZORDER_FILES
+    assert total == _Z_FILES
     # 2-D box of 1/64 of the plane: strict minority of files opened
     read_2d, _ = tbl.files_scanned({"o_orderkey": (k1lo, k1hi), "o_custkey": (k2lo, k2hi)})
     assert read_2d < total / 2, (read_2d, total)
@@ -70,14 +96,7 @@ def test_zorder_scan_prunes_both_dimensions(spark):
 
 
 def test_zorder_scan_loses_no_rows(spark):
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _zorder_table,
-        j18_lakehouse_zorder_skipping,
-    )
-
-    tbl, _root, box = _zorder_table(spark, SF_SMOKE)
+    tbl, box = _zorder_table(spark, SF_SMOKE)
     (k1lo, k1hi), (k2lo, k2hi) = box
     expect = (
         load_table(spark, SF_SMOKE, "orders")
@@ -92,13 +111,6 @@ def test_zorder_scan_loses_no_rows(spark):
 
 
 def test_zorder_oracle_parity(spark):
-    from tests.oracle_harness import compare, duckdb_con
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _J18_SQL,
-        j18_lakehouse_zorder_skipping,
-    )
-
     con = duckdb_con(SF_SMOKE)
     problems = compare(j18_lakehouse_zorder_skipping(spark, SF_SMOKE), con, _J18_SQL)
     assert problems == []
@@ -110,13 +122,6 @@ def test_zorder_oracle_parity(spark):
 def test_metadata_only_agg_opens_no_data_files(spark):
     """The whole point: the aggregate is answered from the manifest.
     Boobytrap the snapshot read — the query must never call it."""
-    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
-        LakehouseTable,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        j19_metadata_only_agg,
-    )
-
     orig = LakehouseTable.read
     LakehouseTable.read = None  # any data read -> TypeError
     try:
@@ -127,13 +132,6 @@ def test_metadata_only_agg_opens_no_data_files(spark):
 
 
 def test_metadata_only_agg_oracle_parity(spark):
-    from tests.oracle_harness import compare, duckdb_con
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _J19_SQL,
-        j19_metadata_only_agg,
-    )
-
     con = duckdb_con(SF_SMOKE)
     assert compare(j19_metadata_only_agg(spark, SF_SMOKE), con, _J19_SQL) == []
 
@@ -146,15 +144,9 @@ def test_zsignals_scan_prunes_both_dimensions(spark):
     prunes files, a time RANGE prunes files, and their conjunction
     opens a strict minority of the layout — from the same one-column
     min/max manifest stats."""
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _ZSIG_FILES,
-        _zsig_window,
-        _zsignals_table,
-    )
-
-    tbl, _root, hashes, (t_lo, t_hi) = _zsignals_table(spark, SF_SMOKE)
+    tbl, hashes, (t_lo, t_hi) = _zsignals_table(spark, SF_SMOKE)
     total = tbl.files_scanned({"device_hash": (0, 1 << 16)})[1]
-    assert total == _ZSIG_FILES
+    assert total == _Z_FILES
     w0, w1 = _zsig_window()
     for h in hashes.values():
         # device dimension alone prunes
@@ -174,14 +166,6 @@ def test_zsignals_scan_loses_no_rows(spark):
     """Manifest pruning is a superset guarantee: the pruned scan plus
     the exact filter must equal the brute-force filter over the raw
     table, row for row."""
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _ZSIG_DEVICES,
-        _zsig_window,
-        j20_telemetry_zorder_scan,
-    )
-
     w0, w1 = _zsig_window()
     got = {
         (r.event_type, r.n, r.sum_cents, r.n_devices)
@@ -209,21 +193,10 @@ def test_count_residual_opens_at_most_boundary_files(spark):
     """Half-keyspace count: every fully-covered file is counted from
     manifest stats; at most the file(s) straddling the cut are read.
     The full-table read is boobytrapped to prove it is never called."""
-    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
-        LakehouseTable,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _key_range,
-        j21_metadata_count_residual,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _shared_merged_table,
-    )
-
-    tbl, _root, _cut = _shared_merged_table(spark, SF_SMOKE)
+    tbl, _lo, _cut = _shared_merged_table(spark, SF_SMOKE)
     man = tbl.manifest(1)
     k_lo = min(e["stats"]["k"][0] for e in man["file_list"])
-    _, k_hi = _key_range(SF_SMOKE, "o_orderkey")
+    _, k_hi = _key_range(SF_SMOKE, "orders", "o_orderkey")
     full, _residual, n_boundary = tbl.count_where_range("k", k_lo, k_hi // 2, version=1)
     assert n_boundary <= 2, n_boundary
     assert full > 0
@@ -237,14 +210,7 @@ def test_count_residual_opens_at_most_boundary_files(spark):
 
 
 def test_count_residual_equals_brute_force(spark):
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _key_range,
-        j21_metadata_count_residual,
-    )
-
-    _, k_hi = _key_range(SF_SMOKE, "o_orderkey")
+    _, k_hi = _key_range(SF_SMOKE, "orders", "o_orderkey")
     brute = (
         load_table(spark, SF_SMOKE, "orders")
         .filter((F.col("o_orderkey") % 4 != 3) & (F.col("o_orderkey") <= k_hi // 2))
@@ -256,13 +222,6 @@ def test_count_residual_equals_brute_force(spark):
 def test_count_residual_refuses_tombstoned_snapshots(spark, tmp_path):
     """Merge-on-read deletes make manifest row counts overcount — the
     stats fold must refuse loudly, not return a stale number."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.operators.lakehouse import (
-        LakehouseTable,
-    )
-
     root = str(tmp_path / "tomb")
     tbl = LakehouseTable.create(
         spark.range(0, 100).withColumnRenamed("id", "k"), root, stats_cols=["k"]
@@ -276,12 +235,7 @@ def test_scan_any_opens_exact_union_of_per_bounds_sets(spark):
     """scan_any's disjunctive prune must open exactly the union of the
     per-bounds file sets — never more (no pruning lost to the union)
     and never fewer (no rows lost) — in one reader."""
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _zsig_window,
-        _zsignals_table,
-    )
-
-    tbl, _root, hashes, _ext = _zsignals_table(spark, SF_SMOKE)
+    tbl, hashes, _ext = _zsignals_table(spark, SF_SMOKE)
     w0, w1 = _zsig_window()
     bounds_list = [
         {"device_hash": (h, h), "ts_sec": (w0, w1 - 1)} for h in hashes.values()
@@ -308,22 +262,6 @@ def test_j22_silver_stationary_equals_flat_layout(spark):
     """The z-clustered silver read must reproduce the flat-layout W2
     sessionization BIT-FOR-BIT on the cohort/window (the silver table
     carries exact ts_us, so there is no resolution loss)."""
-    from pyspark.sql import functions as F
-
-    from matt3r_data_ingestion_serverless_spark.operators.stationary import (
-        stationary_intervals,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _ZSIG_DEVICES,
-        _zsig_window,
-        j22_zorder_silver_stationary,
-    )
-    from matt3r_data_ingestion_serverless_spark.plans.telemetry import (
-        STATIONARY_MIN_DUR_S,
-        STATIONARY_THRESHOLD,
-        STATIONARY_TRIM_S,
-    )
-
     got = sorted(
         (r.user_id, r.start_us, r.end_us, r.duration_s)
         for r in j22_zorder_silver_stationary(spark, SF_SMOKE).collect()
@@ -353,18 +291,12 @@ def test_j22_silver_read_prunes_files(spark):
     """The cohort W2 read opens a strict minority of the silver
     layout's files (the whole point of shipping the silver zone
     z-clustered)."""
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _ZSIG_FILES,
-        _zsig_window,
-        _zsignals_table,
-    )
-
-    tbl, _root, hashes, _ext = _zsignals_table(spark, SF_SMOKE)
+    tbl, hashes, _ext = _zsignals_table(spark, SF_SMOKE)
     w0, w1 = _zsig_window()
     n_opened, total = tbl.files_scanned_any(
         [{"device_hash": (h, h), "ts_sec": (w0, w1 - 1)} for h in hashes.values()]
     )
-    assert total == _ZSIG_FILES
+    assert total == _Z_FILES
     assert n_opened <= total // 2, (n_opened, total)
 
 
@@ -395,13 +327,6 @@ def test_j17_full_orders_and_audit_flag(spark):
 
 
 def test_file_stats_match_pyarrow_direct(spark):
-    import pyarrow.parquet as pq
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _FS_TABLES,
-        lakehouse_file_stats,
-    )
-
     got = {r.table_name: r for r in lakehouse_file_stats(spark, SF_SMOKE).collect()}
     assert set(got) == set(_FS_TABLES)
     for t in _FS_TABLES:
@@ -410,14 +335,6 @@ def test_file_stats_match_pyarrow_direct(spark):
 
 
 def test_zsignals_footer_extent_is_utc():
-    from datetime import timezone
-
-    import pyarrow.parquet as pq
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        _footer_ts_extent_utc,
-    )
-
     meta = pq.ParquetFile(os.path.join(SF_SMOKE, "events.parquet")).metadata
     idx = next(
         i for i in range(meta.num_columns) if meta.schema.column(i).name == "ts"
@@ -443,42 +360,39 @@ def test_zsignals_footer_extent_is_utc():
         time.tzset()
 
 
-# -- shared fixtures and scratch cleanup ----------------------------------------
+def test_key_range_refuses_a_directory_layout(tmp_path):
+    """One footer gives the merges' complete source_intervals cover; an
+    orders.parquet directory must fail loudly instead."""
+    (tmp_path / "orders.parquet").mkdir()
+    pq.write_table(pa.table({"o_orderkey": [1]}), tmp_path / "orders.parquet" / "part-0.parquet")
+    with pytest.raises(ValueError, match="source_intervals"):
+        _key_range(str(tmp_path), "orders", "o_orderkey")
+
+
+# -- shared fixtures, scratch cleanup and cached RDDs ---------------------------
 
 
 def test_lakehouse_readonly_queries_share_one_fixture(spark):
     """j7/j8/j15 never mutate past v2, so they read ONE process-shared
     seeded table (VERDICT r06 next-step 7) instead of each paying
     create + merge + rm-rf per run."""
-    from matt3r_data_ingestion_serverless_spark.plans import lakehouse as r69
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import (
-        j15_lakehouse_snapshot_diff,
-    )
-
+    memo = lakehouse._shared_merged_table.memo
     sf = "/root/testdata/sf0.001"
-    r69._SHARED_MERGED.pop(sf, None)
-    a = r69.j7_lakehouse_time_travel(spark, sf)
-    root1 = r69._SHARED_MERGED[sf][1]
-    b = r69.j8_lakehouse_file_skipping(spark, sf)
+    memo.pop(sf, None)
+    a = j7_lakehouse_time_travel(spark, sf)
+    root1 = memo[sf][0].path
+    b = j8_lakehouse_file_skipping(spark, sf)
     c = j15_lakehouse_snapshot_diff(spark, sf)
-    assert r69._SHARED_MERGED[sf][1] == root1  # no rebuild
+    assert memo[sf][0].path == root1  # no rebuild
     # all three still produce rows through the one fixture
     assert a.count() > 0 and b.count() > 0 and c.count() > 0
     # and the fixture survives the reads (read-only contract)
-    import os
-
     assert os.path.isdir(root1)
 
 
 def test_j6_scratch_dir_registered_before_the_merge_fails(spark, monkeypatch):
     """The lakehouse_ scratch dir is registered for removal when it is
     made, so a merge that raises still leaves nothing behind at exit."""
-    import atexit
-    import os
-    import shutil
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import j6_lakehouse_merge
-
     registered = []
     monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.extend(a[:1]))
     monkeypatch.setattr(LakehouseTable, "merge", lambda *a, **kw: 1 / 0)
@@ -489,35 +403,21 @@ def test_j6_scratch_dir_registered_before_the_merge_fails(spark, monkeypatch):
     shutil.rmtree(roots[0])
 
 
-def test_key_minmax_refuses_a_directory_layout(tmp_path):
-    """One footer gives the merges' complete source_intervals cover; an
-    orders.parquet directory must fail loudly instead."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from matt3r_data_ingestion_serverless_spark.plans.lakehouse import _key_minmax
-
-    (tmp_path / "orders.parquet").mkdir()
-    pq.write_table(pa.table({"o_orderkey": [1]}), tmp_path / "orders.parquet" / "part-0.parquet")
-    with pytest.raises(ValueError, match="source_intervals"):
-        _key_minmax(str(tmp_path))
-
-
-# -- Morton layout (morton_zorder_layout) ---------------------------------------
-
-
-def _morton_ref(x: int, y: int) -> int:
-    acc = 0
-    for i in range(8):
-        acc |= ((x >> i) & 1) << (2 * i + 1)
-        acc |= ((y >> i) & 1) << (2 * i)
-    return acc
-
-
-def test_morton_interleave_matches_python_reference(spark):
-    pts = [(0, 0), (255, 255), (1, 0), (0, 1), (170, 85), (200, 13)]
-    df = spark.createDataFrame(pts, "x long, y long").select(
-        "x", "y", _morton_col(F.col("x"), F.col("y")).alias("m")
-    )
-    for x, y, m in df.collect():
-        assert m == _morton_ref(x, y), (x, y)
+def test_mutation_queries_cache_no_rdd(spark):
+    """The mutation queries return a lazy read of their snapshot (the
+    table dir lives until process exit) instead of pinning it with an
+    eager checkpoint that nothing ever unpersists."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    kept = [
+        q(spark, SF_SMOKE)
+        for q in (
+            j12_lakehouse_concurrent_merge,
+            j13_lakehouse_vacuum,
+            j14_lakehouse_matched_only_merge,
+            j16_lakehouse_merge_on_read_delete,
+            j17_lakehouse_write_audit_publish,
+        )
+    ]
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+    assert all(df.count() > 0 for df in kept)

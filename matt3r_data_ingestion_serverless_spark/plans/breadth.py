@@ -764,8 +764,8 @@ GROUP BY d.label
 def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigated join: 80% of events hash to ONE hot key (the
     planted worst case). The fact side adds a deterministic salt, the
-    dimension replicates ×{s} salts, and the join runs on (key, salt) —
-    splitting the hot key across {s} tasks instead of one straggler.
+    dimension replicates ×16 salts, and the join runs on (key, salt) —
+    splitting the hot key across 16 tasks instead of one straggler.
     The oracle is the UNSALTED join: salting must be semantically
     invisible.
 

@@ -120,7 +120,7 @@ WHERE EXISTS (SELECT 1 FROM totals WHERE doc_id <= checkpoint)
 @register("ns_vocab_growth_curve", sql=_vocab_growth_sql())
 def ns_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The measured vocabulary growth curve: distinct terms observed
-    after the first N documents (N ∈ {{50…2000}}, doc_id order), with
+    after the first N documents (N ∈ {50…2000}, doc_id order), with
     the token mass seen — the EMPIRICAL Heaps' law V(n) ≈ K·nᵝ that
     ns_vocab_stats summarizes with point statistics. Flattening growth
     = saturating corpus (more data adds few new types); linear growth

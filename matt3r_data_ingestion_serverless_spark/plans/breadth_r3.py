@@ -879,7 +879,7 @@ FROM qi
 """,
 )
 def ns_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit (k = {k}) over the quasi-identifier tuple
+    """k-anonymity audit (k = 5) over the quasi-identifier tuple
     (event_type, hour-of-day, coarse region): how many equivalence
     classes are smaller than k and what fraction of rows they expose —
     the release gate run before publishing any per-group rollup, and
@@ -887,7 +887,7 @@ def ns_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one hash agg on the QI tuple, then a single-row summary —
     group cardinality is bounded by the QI domain product, never the
-    row count.""".replace("{k}", str(_KANON_K))
+    row count."""
     e = load_table(spark, sf_dir, "events")
     qi = e.groupBy(
         "event_type",

@@ -230,7 +230,7 @@ FROM ranked WHERE rnk <= {_ZIPF_TOP}
 """,
 )
 def ns_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law fit over the top-{n} vocabulary: the OLS slope of
+    """Zipf-law fit over the top-200 vocabulary: the OLS slope of
     ln(frequency) on ln(rank) — natural language sits near −1, while
     generated/templated corpora flatten toward 0, making the slope a
     one-number corpus-health check on any new data source.
@@ -238,7 +238,7 @@ def ns_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the vocabulary agg is the only wide stage; ranking the top
     slice is a window over an already-aggregated, Heaps-law-bounded
     table; the regression is one tiny agg. Ranks tie-break on the
-    token so both engines rank identically.""".replace("{n}", str(_ZIPF_TOP))
+    token so both engines rank identically."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     vocab = (
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
@@ -403,7 +403,7 @@ FROM per
 
 @register("ns_shard_balance_audit", sql=_shard_balance_sql())
 def ns_shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-shard balance audit: documents hash into {n} shards by
+    """Training-shard balance audit: documents hash into 16 shards by
     md5(doc_id) and each shard reports doc count, token mass, and its
     load factor vs the ideal equal split — the pre-flight check before
     a distributed training run, where one hot shard stalls every data-
@@ -411,11 +411,9 @@ def ns_shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor near 1; the audit catches both hash-function accidents and
     pathological length skew.
 
-    Scale: one scan + one {n}-row hash agg; the window over 16 rows is
+    Scale: one scan + one 16-row hash agg; the window over 16 rows is
     free. The same md5 keying makes the shard assignment reproducible
-    across engines and runs (no repartition() nondeterminism).""".replace(
-        "{n}", str(_N_SHARDS)
-    )
+    across engines and runs (no repartition() nondeterminism)."""
     from matt3r_data_ingestion_serverless_spark.functions import hashing
 
     docs = load_table(spark, sf_dir, "documents")

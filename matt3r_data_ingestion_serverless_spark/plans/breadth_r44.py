@@ -37,7 +37,7 @@ FROM c
 @register("ns_code_like_filter", _CODE_SQL)
 def ns_code_like_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Code-likeness screen for pretraining text — symbol-character
-    density ({{}};()=<>[]) and programming-keyword hits, with the
+    density ({};()=<>[]) and programming-keyword hits, with the
     boolean gate stated in CROSS-MULTIPLIED integer form
     (n_code·20 ≥ n_chars, i.e. ratio ≥ 5%) so the classification never
     touches a float — the router that sends documents to a code

@@ -48,7 +48,7 @@ def ml_proper_scoring_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking; these measure the probabilities themselves). The squared
     error is PURE int64 ((p_micro − y·10⁶)² ≤ 10¹²); the negative
     log-likelihood quantizes per row to micro-nats (rows at exactly
-    p∈{{0,1}} are excluded in both dialects — none exist with this
+    p∈{0,1} are excluded in both dialects — none exist with this
     scorer, asserted in tests). One conditional scan, one 1-row agg."""
     ev = load_table(spark, sf_dir, "events")
     p = F.floor(1.0 / (1.0 + F.exp(-(F.col("value") - 50.0) / 25.0)) * 1e6 + 0.5).cast(

@@ -219,7 +219,7 @@ def ns_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-first: each round is one scan computing array_except(sh,
     covered) sizes + a TakeOrdered top-1; the covered set (≤ rounds ×
     max-doc-shingles ints) rides a 1-row broadcast cross join. Each
-    round's remainder is checkpointed so round r scans rem_{{r-1}}, not
+    round's remainder is checkpointed so round r scans rem_{r-1}, not
     a growing expression. At corpus scale the classic lazy-greedy /
     threshold variants cut rescans; the per-round plan (scan + top-1)
     is already the distributed shape they optimize. The oracle unrolls

@@ -54,7 +54,7 @@ SELECT doc_id, term, rnk, tfidf FROM ranked WHERE rnk <= {TFIDF_TOP_K}
 """,
 )
 def ns_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF: top-{k} most characteristic terms per document.
+    """TF-IDF: top-3 most characteristic terms per document.
 
     Scale: token explode → two chained hash aggs, both with map-side
     partials. The document-frequency table is vocabulary-sized (≪
@@ -152,8 +152,8 @@ FROM hits WHERE n_shared >= {CONTAM_MIN_SHARED}
 )
 def ns_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval contamination check: flag training documents sharing ≥
-    {t} distinct 3-gram shingles with any held-out eval document
-    (deterministic split: doc_id % {m} == 0 → eval).
+    5 distinct 3-gram shingles with any held-out eval document
+    (deterministic split: doc_id % 97 == 0 → eval).
 
     Scale: the eval split is a small fraction of the corpus, so its
     exploded shingle index BROADCASTS; the train side streams through a
@@ -445,7 +445,7 @@ WHERE cab >= {PMI_MIN_PAIR}
 )
 def ns_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information over document-level term
-    co-occurrence, restricted to the top-{k}-df vocabulary — the
+    co-occurrence, restricted to the top-30-df vocabulary — the
     collocation/topic-signal statistic that token-level TF-IDF can't
     see (PMI > 0 ⇒ terms travel together more than independence
     predicts).

@@ -95,7 +95,7 @@ FROM upd
 )
 def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 apply: delinquent customers (negative balance) move to
-    a new market segment effective {eff}; the old version is closed out,
+    a new market segment effective 1998-01-01; the old version is closed out,
     the new version opens, untouched customers stay open — full
     dimension history with validity intervals (operators/scd2.py).
 
@@ -248,8 +248,8 @@ FROM p GROUP BY pack_id
 )
 def ns_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing: documents are laid end-to-end in a
-    deterministic order and cut into ~{n}-token training sequences
-    (pack_id = floor(preceding-token-mass / {n})) — the concat-and-
+    deterministic order and cut into ~512-token training sequences
+    (pack_id = floor(preceding-token-mass / 512)) — the concat-and-
     chunk batching step between tokenization and the training loader.
 
     Scale: one global running sum. A single-ordering cumulative window

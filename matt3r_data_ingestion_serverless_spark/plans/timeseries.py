@@ -413,7 +413,7 @@ FROM w WHERE n >= {_BOLL_N}
 @register("ts_bollinger_breach", sql=_BOLL_SQL)
 def ts_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger-band monitoring over each user's purchase stream: the
-    trailing-{n} mean ± 2σ envelope, with the breach decision made in
+    trailing-20 mean ± 2σ envelope, with the breach decision made in
     EXACT INTEGER arithmetic — |x−μ| > 2σ cross-multiplies to
     (n·x−s1)²·(n−1) > 4·n·(n·s2−s1²) over bigint power sums, so the
     boolean can never flip on an engine's last-ulp sqrt difference
@@ -422,7 +422,7 @@ def ts_bollinger_breach(spark: SparkSession, sf_dir: str) -> DataFrame:
     a spike can't mask itself.
 
     Scale: one shuffle on user_id; the frame is a bounded ROWS window —
-    state per key is {n} rows regardless of history length, the same
+    state per key is 20 rows regardless of history length, the same
     bound the streaming variant would keep in its state store."""
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     win = (
@@ -846,7 +846,7 @@ FROM n JOIN pairs USING (event_type) JOIN ties USING (event_type)
 @register("ts_mann_kendall", _MK_SQL)
 def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Kendall monotonic-trend test per channel over the daily
-    series: S = Σ_{{i<j}} sign(x_j − x_i), tie-corrected variance
+    series: S = Σ_{i<j} sign(x_j − x_i), tie-corrected variance
     (n(n−1)(2n+5) − Σ t(t−1)(2t+5))/18, continuity-corrected Z — the
     nonparametric "is this drifting?" monitor paired with
     ts_theilsen_trend's slope estimate (MK tests, Theil–Sen sizes).
@@ -1586,8 +1586,8 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: cross-dots are the O(w²m) part — at daily granularity w is
     tiny; for long series the same plan runs per segment with the STOMP
-    recurrence replacing brute dots (D_{{i+1,j+1}} = D_{{ij}} −
-    v_iv_j + v_{{i+m}}v_{{j+m}}), which is a window fold on this exact
+    recurrence replacing brute dots (D_{i+1,j+1} = D_ij −
+    v_iv_j + v_{i+m}v_{j+m}), which is a window fold on this exact
     layout."""
     m = _MP_M
     dly = event_days(spark, sf_dir).select("event_type", "di", F.col("units").alias("v"))

@@ -48,3 +48,18 @@ def test_domain_queries_live_in_their_domain_module():
     assert sum(_domain(n) == "multimodal" for n in all_queries()) == 12
     assert sum(_domain(n) == "timeseries" for n in all_queries()) == 41
     assert sum(_domain(n) == "lakehouse" for n in all_queries()) == 19
+
+
+def test_every_query_has_a_filled_docstring():
+    """A docstring built by .replace() or copied from an f-string is not
+    stored or prints a literal placeholder; every registered function
+    must carry a docstring with the real values written in."""
+    placeholder = re.compile(r"\{[A-Za-z_]\w*\}")
+    bad = {
+        name: fn.__module__
+        for name, (fn, _) in all_queries().items()
+        if not (fn.__doc__ or "").strip()
+        or placeholder.search(fn.__doc__)
+        or "{{" in fn.__doc__
+    }
+    assert bad == {}

@@ -1,9 +1,9 @@
 """sf1 scale-sensitivity sweep, round-7 extension (VERDICT r06
 next-step 5): beyond the 36 threshold-calibrated queries, grade the
 families most likely to carry scale-dependent behavior at 10x rows —
-every streamed gate entry, the whole lakehouse family (j6-j17),
-the reference-parity telemetry heads, and the top-40 most expensive
-bench queries.
+every streamed gate entry, the whole lakehouse domain (every query in
+plans/lakehouse.py), the reference-parity telemetry heads, and the
+top-40 most expensive bench queries.
 
 Runs on a `get_spark` session (the machine's cores and driver heap, 32
 shuffle partitions), compares each query against its DuckDB oracle on
@@ -51,15 +51,8 @@ STREAMED = [
     "streamed_scd2_pit_enrichment",
 ]
 
-LAKEHOUSE = [
-    "j6_lakehouse_merge", "j7_lakehouse_time_travel", "j8_lakehouse_file_skipping",
-    "j9_lakehouse_schema_evolution", "j10_lakehouse_compaction",
-    "j12_lakehouse_concurrent_merge", "j13_lakehouse_vacuum",
-    "j14_lakehouse_matched_only_merge", "j15_lakehouse_snapshot_diff",
-    "j16_lakehouse_merge_on_read_delete", "j17_lakehouse_write_audit_publish",
-    "j18_lakehouse_zorder_skipping", "j19_metadata_only_agg",
-    "j20_telemetry_zorder_scan", "j21_metadata_count_residual",
-]
+# the lakehouse domain: the queries registered by this module
+LAKEHOUSE_MODULE = "matt3r_data_ingestion_serverless_spark.plans.lakehouse"
 
 # the reference-parity telemetry heads: the queries a user of the
 # reference actually runs, graded at 10x as well
@@ -89,6 +82,12 @@ def main() -> None:
     queries = entry.queries()
     oracles = entry.oracle_sql()
 
+    from matt3r_data_ingestion_serverless_spark.plans import all_queries
+
+    lakehouse = [
+        n for n, (fn, _) in all_queries().items() if fn.__module__ == LAKEHOUSE_MODULE
+    ]
+
     bench = json.load(
         open(os.path.join(os.path.dirname(SF1), "BENCH_FULL.json"))
     )["queries"]
@@ -113,7 +112,7 @@ def main() -> None:
     families_r8 = [n for n in sorted(queries) if _OVERFLOW_PRONE.search(n)]
 
     names = []
-    for n in THRESHOLD_QUERIES + STREAMED + LAKEHOUSE + TELEMETRY + top_exp + families_r8:
+    for n in THRESHOLD_QUERIES + STREAMED + lakehouse + TELEMETRY + top_exp + families_r8:
         if n in queries and n not in names:
             names.append(n)
 
@@ -163,7 +162,7 @@ def main() -> None:
         "families": {
             "threshold_calibrated": len([n for n in THRESHOLD_QUERIES if n in results]),
             "streamed": len([n for n in STREAMED if n in results]),
-            "lakehouse": len([n for n in LAKEHOUSE if n in results]),
+            "lakehouse": len([n for n in lakehouse if n in results]),
             "telemetry": len([n for n in TELEMETRY if n in results]),
             "bench_top40": len([n for n in top_exp if n in results]),
             "overflow_prone_r8": len([n for n in families_r8 if n in results]),

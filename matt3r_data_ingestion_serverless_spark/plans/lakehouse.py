@@ -885,7 +885,7 @@ def _zsignals_table(spark: SparkSession, sf_dir: str) -> tuple[LakehouseTable, d
         for r in spark.createDataFrame(
             [(d,) for d in _ZSIG_DEVICES], "user_id long"
         )
-        .select("user_id", F.pmod(F.xxhash64("user_id"), F.lit(_ZSIG_HASH_MOD)).cast("long").alias("h"))
+        .select("user_id", dev_hash.alias("h"))
         .collect()
     }
     return tbl, hashes, extent

@@ -66,14 +66,29 @@ def test_zorder2_matches_python_twin(spark):
     rng = random.Random(7)
     rows = [(rng.randrange(1 << 16), rng.randrange(1 << 16)) for _ in range(200)]
     rows += [(0, 0), (65535, 65535), (65535, 0), (0, 65535), (1, 2)]
-    # bits=8 is morton_zorder_layout's code
-    points8 = [(0, 0), (255, 255), (1, 0), (0, 1), (170, 85), (200, 13)]
-    for bits, pts in ((16, rows), (8, points8)):
-        df = spark.createDataFrame(pts, "a long, b long").withColumn(
-            "z", zorder2(F.col("a"), F.col("b"), bits)
-        )
-        for r in df.collect():
-            assert r.z == zorder2_py(r.a, r.b, bits), (r.a, r.b, bits)
+    df = spark.createDataFrame(rows, "a long, b long").withColumn(
+        "z", zorder2(F.col("a"), F.col("b"), 16)
+    )
+    for r in df.collect():
+        assert r.z == zorder2_py(r.a, r.b, 16), (r.a, r.b)
+
+
+def _morton_ref(x: int, y: int) -> int:
+    acc = 0
+    for i in range(8):
+        acc |= ((x >> i) & 1) << (2 * i + 1)
+        acc |= ((y >> i) & 1) << (2 * i)
+    return acc
+
+
+def test_morton_interleave_matches_python_reference(spark):
+    """morton_zorder_layout's 8-bit code is zorder2 at bits=8."""
+    pts = [(0, 0), (255, 255), (1, 0), (0, 1), (170, 85), (200, 13)]
+    df = spark.createDataFrame(pts, "x long, y long").select(
+        "x", "y", zorder2(F.col("x"), F.col("y"), 8).alias("m")
+    )
+    for x, y, m in df.collect():
+        assert m == _morton_ref(x, y), (x, y)
 
 
 def test_zorder_scan_prunes_both_dimensions(spark):
